@@ -7,11 +7,14 @@
 
 Runs the sliced, resumable parse→enrich pipeline (checkpoint manifests per
 slice), then the aggregate reports over the routed output. The default sink
-is the snapshot-log table format (one atomic idempotent commit per slice
-into {output}/table, partitioned by sink keys, conv_id stats + blooms —
-the north rule's per-sink Iceberg tables; resume rides the commit-marker
-ledger as well as the slice manifests). --table-format parquet keeps the
-plain per-slice directory fallback. On a cluster the same file is
+is the snapshot-log table format: one atomic idempotent commit per slice
+into {output}/table, written as a few files sorted by the sink keys then
+conv_id. Each file's manifest entry records the sink tuples it holds with
+row counts (per-sink reads open only those files) plus conv_id stats and
+blooms for conversation lookups — the north rule's per-sink Iceberg
+tables. Resume rides the commit-marker ledger as well as the slice
+manifests, and each slice manifest carries its commit's summary.
+--table-format parquet keeps the plain per-slice directory fallback. On a cluster the same file is
 submitted unchanged; local runs honor SPARK_GRAFT_CPUS.
 """
 

@@ -54,6 +54,9 @@ class SliceManifest:
     output_path: str
     table_version: int | None = None  # tablelog sink: this slice's commit
     table_format: str = "parquet"  # sink the slice was written to
+    # tablelog sink: the commit's summary (tablelog.commit_summary) —
+    # files/records/bytes added, write/manifest/commit seconds, retries
+    commit_summary: dict | None = None
 
 
 def _manifest_path(base: str, slice_id: int) -> str:
@@ -187,9 +190,12 @@ def run_sliced(
     Sinks: table_format="tablelog" (the job default) routes every slice
     into ONE snapshot-log table at {output_base}/table as an atomic
     idempotent commit per slice (route.route_commit_tablelog — the north
-    rule's per-sink Iceberg tables), partitioned by the sink keys with
-    conv_id footer stats + blooms for point lookups. "parquet" keeps the
-    plain per-slice directory layout.
+    rule's per-sink Iceberg tables): a few files per slice sorted by the
+    sink keys then conv_id, each recording its sink tuples with row
+    counts (per-sink reads open only the files holding the sink) and
+    conv_id footer stats + blooms for point lookups. The slice manifest
+    carries the commit's summary. "parquet" keeps the plain per-slice
+    directory layout.
 
     Resume safety: a completed slice is skipped if its manifest's
     input_snapshot matches the CURRENT input snapshot — after the input
@@ -271,6 +277,7 @@ def run_sliced(
         ]
         out = out.observe(obs_out, F.count(F.lit(1)).alias("rows"), *status_aggs)
         table_version: int | None = None
+        summary: dict | None = None
         if table_format == "tablelog":
             from blogparser_spark.operators import tablelog as tl
             from blogparser_spark.operators.route import route_commit_tablelog
@@ -297,6 +304,7 @@ def run_sliced(
                 stats_cols=("conv_id",),
                 bloom_cols=("conv_id",),
             )
+            summary = tl.commit_summary(table, table_version)
             out_path = table
         else:
             out_path = os.path.join(output_base, f"slice={s}")
@@ -325,6 +333,7 @@ def run_sliced(
             output_path=out_path,
             table_version=table_version,
             table_format=table_format,
+            commit_summary=summary,
         )
         write_manifest(output_base, m)
         manifests.append(m)

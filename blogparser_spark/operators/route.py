@@ -3,14 +3,18 @@
 The reference's sink is a printf per record in a CLI loop
 (sample/main.go:38-46) with per-file error isolation (:35-37). Here the
 error-isolation contract is the parse_status column (rows never fail the
-job), and the fan-out is a SINGLE-PASS partitioned write keyed on
-(channel, tool_category, parse_status) — one shuffle-free scan feeding a
-partitionBy writer, instead of S filtered re-scans. Per-sink readers then
-get partition pruning for free.
+job), and the fan-out is keyed on (channel, tool_category, parse_status).
 
-Storage adapter: Iceberg when a catalog is configured, Parquet partitionBy
-fallback otherwise (SURVEY.md §7.4 risk 4 — the sandbox has no Iceberg jars;
-the write path is format-agnostic).
+Two sinks:
+- `route_commit_tablelog` (the job's sink) commits a batch to ONE
+  snapshot-log table as a few files sorted by the sink keys; each file's
+  manifest entry records the sink tuples it holds with row counts, so a
+  per-sink read (`read_routed_tablelog`) opens only the files holding that
+  sink, and a commit costs one small write however many sinks it touches.
+- `write_routed` is the plain-directory fan-out: a single-pass
+  partitionBy write, one hive directory per sink, so per-sink readers get
+  directory pruning. Iceberg when a catalog is configured, parquet
+  otherwise (SURVEY.md §7.4 risk 4 — the sandbox has no Iceberg jars).
 """
 
 from __future__ import annotations
@@ -277,39 +281,37 @@ def route_commit_tablelog(
     df: DataFrame,
     table: str,
     marker: str,
-    files_per_sink: int = 1,
     stats_cols: tuple[str, ...] = (),
     bloom_cols: tuple[str, ...] = (),
     manifest_chunk_files: int | None = None,
 ) -> tuple[int | None, bool]:
-    """Fan routed rows into ONE snapshot-log table partitioned by the sink
-    keys, as a single atomic idempotent commit — the north rule's "per-sink
-    Iceberg tables, resumable from checkpoint" contract without the runtime
-    jar. One commit covers every sink, so readers never observe a partially
-    routed batch; the marker (slice id / batch id) makes a restarted job's
-    re-submission a no-op (tablelog.append_idempotent); per-sink reads
-    prune to the sink's files via the manifest partition values
-    (read_routed_tablelog). Same bounded-salt repartition as write_routed,
-    so file counts stay `files_per_sink` per touched sink regardless of
-    upstream parallelism. `stats_cols`/`bloom_cols` forward to the
-    manifest writer so sink files carry min/max footer stats and
-    per-file blooms (a bloom on conv_id lets a conversation point
-    lookup skip sink files that definitely lack the conv — the
-    serving path for "fetch this conversation" against the routed
-    lakehouse). A wide batch touching many sinks (files_per_sink × live
-    sink combinations) inherits the two-level manifest layer through
-    `manifest_chunk_files` (None = tablelog.MANIFEST_CHUNK_FILES), so
-    per-sink point reads plan by chunk summary. Returns (version,
-    committed)."""
+    """Fan routed rows into ONE snapshot-log table keyed by the sink keys,
+    as a single atomic idempotent commit — the north rule's "per-sink
+    Iceberg tables, resumable from checkpoint" contract without the
+    runtime jar. One commit covers every sink, so readers never observe a
+    partially routed batch; the marker (slice id / batch id) makes a
+    restarted job's re-submission a no-op (tablelog.append_idempotent).
+
+    Layout: a few files per commit, sorted by the sink keys and then
+    `stats_cols` (tablelog.append partition_by): a rebalance on the sink
+    keys gives each sink one writer task and AQE's advisory partition size
+    sets the file count, so a commit costs one small write however many
+    sinks it touches. Each file's manifest entry records the sink tuples
+    it holds with their row counts, and per-sink reads
+    (read_routed_tablelog) open only the files holding the sink.
+    `stats_cols`/`bloom_cols` forward to the manifest writer so files
+    carry min/max footer stats and per-file blooms (a bloom on conv_id
+    lets a conversation point lookup skip files that definitely lack the
+    conv — the serving path for "fetch this conversation"). Commits adding
+    many files inherit the two-level manifest layer through
+    `manifest_chunk_files` (None = tablelog.MANIFEST_CHUNK_FILES).
+    Returns (version, committed)."""
     from blogparser_spark.operators import tablelog as tl
 
-    out = df.drop("images")
-    salt = _sink_salt(files_per_sink)
-    out = out.repartition(*[F.col(k) for k in SINK_KEYS], salt)
     return tl.append_idempotent(
         df.sparkSession,
         table,
-        out,
+        df.drop("images"),
         marker=marker,
         partition_by=tuple(SINK_KEYS),
         stats_cols=stats_cols,
@@ -326,9 +328,9 @@ def read_routed_tablelog(
     parse_status: str | None = None,
     version: int | None = None,
 ) -> DataFrame:
-    """Per-sink read of a tablelog-routed table: manifest partition values
-    prune non-matching sinks' files before any are opened; supports time
-    travel via `version`."""
+    """Per-sink read of a tablelog-routed table: the manifest's per-file
+    sink tuples prune files holding none of the sink's rows before any
+    are opened; supports time travel via `version`."""
     from blogparser_spark.operators import tablelog as tl
 
     filters = {

@@ -154,20 +154,83 @@ def _json_safe(v):
     return v if isinstance(v, (int, float, str, bool)) or v is None else str(v)
 
 
-def _partition_of(dirpath: str, path: str) -> dict[str, str]:
+_HIVE_NULL = "__HIVE_DEFAULT_PARTITION__"
+
+
+def _partition_of(dirpath: str, path: str) -> dict[str, str | None]:
     """Partition values parsed from hive-style `_p_<k>=<v>` path segments
-    (the write path partitions on `_p_`-prefixed DUPLICATE columns so the
-    data files keep the real columns — Iceberg keeps partition values in
-    metadata for the same reason)."""
+    (hidden-partition writes partition on `_p_`-prefixed DUPLICATE columns
+    so the data files keep the real columns — Iceberg keeps partition
+    values in metadata for the same reason). Hive's null marker reads back
+    as None."""
     from urllib.parse import unquote
 
     rel = os.path.relpath(os.path.dirname(path), dirpath)
-    out = {}
+    out: dict[str, str | None] = {}
     for seg in rel.split(os.sep):
         if "=" in seg and seg.startswith("_p_"):
             k, v = seg.split("=", 1)
-            out[k[3:]] = unquote(v)
+            v = unquote(v)
+            out[k[3:]] = None if v == _HIVE_NULL else v
     return out
+
+
+# ---------------------------------------------------------------------------
+# partition tuples (the one manifest form for partition values)
+# ---------------------------------------------------------------------------
+#
+# Every file entry that carries partition values records them as
+#   "partitions": {"keys": [k1, k2, ...], "tuples": [[[v1, v2, ...], rows], ...]}
+# — the set of distinct key tuples the file holds, each with its exact row
+# count. A hive-path file (hidden partition spec, add_files) holds one
+# tuple; a sink-sorted file written by append(partition_by=...) holds one
+# per sink it covers. Values are strings (None for null). The set is
+# bounded: a file (or chunk summary) covering more than PART_TUPLES_MAX
+# tuples records "tuples": None, which never prunes.
+
+PART_TUPLES_MAX = 64
+
+
+def _bounded_partitions(keys, counts: dict[tuple, int]) -> dict:
+    """The manifest form for `counts` ({value tuple: rows}); past
+    PART_TUPLES_MAX tuples the set is dropped (None = unknown)."""
+    if len(counts) > PART_TUPLES_MAX:
+        return {"keys": list(keys), "tuples": None}
+
+    def order(item):
+        return [(v is not None, v or "") for v in item[0]]
+
+    return {
+        "keys": list(keys),
+        "tuples": [[list(t), n] for t, n in sorted(counts.items(), key=order)],
+    }
+
+
+def _data_partitions(pf, keys: tuple[str, ...]) -> dict:
+    """Distinct `keys` tuples of one parquet file with their row counts,
+    grouped with Arrow one record batch at a time over the key columns
+    only. Stops reading once the bound is passed: the result is then the
+    unknown set."""
+    import pyarrow as pa
+
+    counts: dict[tuple, int] = {}
+    for batch in pf.iter_batches(columns=list(keys)):
+        grouped = pa.Table.from_batches([batch]).group_by(list(keys))
+        for row in grouped.aggregate([([], "count_all")]).to_pylist():
+            t = tuple(None if row[k] is None else str(row[k]) for k in keys)
+            counts[t] = counts.get(t, 0) + row["count_all"]
+        if len(counts) > PART_TUPLES_MAX:
+            break
+    return _bounded_partitions(keys, counts)
+
+
+def _tuple_rows(e: dict) -> list[tuple[dict, int]]:
+    """An entry's partition tuples as ({key: value}, rows) pairs; [] when
+    the entry has no partition values or its set was not recorded."""
+    parts = e.get("partitions")
+    if not parts or parts.get("tuples") is None:
+        return []
+    return [(dict(zip(parts["keys"], vals)), n) for vals, n in parts["tuples"]]
 
 
 # ---------------------------------------------------------------------------
@@ -272,13 +335,16 @@ def _numeric(v):
         return None
 
 
-def _part_match(field: dict, part_value: str, pred: tuple) -> bool:
+def _part_match(field: dict, part_value: str | None, pred: tuple) -> bool:
     """Can a file whose partition value for `field` is `part_value`
     contain rows matching `pred` on the SOURCE column? False only when
     the transform projection PROVES it cannot (Iceberg's inclusive
     projection): equality projects through every transform; ranges
     project through order-preserving transforms (identity, truncate,
-    temporal) but never through bucket."""
+    temporal) but never through bucket. A null value is indeterminate
+    (a null transform output says nothing about the source): keep."""
+    if part_value is None:
+        return True
     op = pred[0]
     if op == "=":
         return part_value == _twin_transform(field, pred[1])
@@ -291,11 +357,24 @@ def _part_match(field: dict, part_value: str, pred: tuple) -> bool:
     return lo <= part_value <= hi
 
 
-BLOOM_M = 2048  # bits per per-file bloom (256 bytes in the manifest)
+BLOOM_M = 2048  # smallest per-file bloom, in bits (256 bytes in the manifest)
+BLOOM_M_MAX = 1 << 16  # largest (8 KiB)
 BLOOM_K = 3     # hash probes per value
 
 
-def _bloom_positions(value) -> list[int]:
+def _bloom_bits_for(rows: int) -> int:
+    """Bloom size for a file of `rows` rows: the power of two at or above
+    the row count (an upper bound on its distinct values), clamped to
+    [BLOOM_M, BLOOM_M_MAX] — a few sink-sorted files per commit hold many
+    keys each, and a fixed 2048-bit filter saturates past a few hundred.
+    Power-of-two sizes fold exactly onto smaller ones (_bloom_or)."""
+    m = BLOOM_M
+    while m < min(rows, BLOOM_M_MAX):
+        m *= 2
+    return m
+
+
+def _bloom_positions(value, m: int = BLOOM_M) -> list[int]:
     """Deterministic md5-derived bit positions for one key value — the
     same expression on write and probe, engine-neutral (str(value) keys:
     ints and strings round-trip identically through JSON). Only int and
@@ -307,20 +386,20 @@ def _bloom_positions(value) -> list[int]:
 
     s = str(value)
     return [
-        int(hashlib.md5(f"{i}:{s}".encode()).hexdigest()[:8], 16) % BLOOM_M
+        int(hashlib.md5(f"{i}:{s}".encode()).hexdigest()[:8], 16) % m
         for i in range(BLOOM_K)
     ]
 
 
-def _bloom_build(values) -> str:
-    """Hex-encoded BLOOM_M-bit array with every value's probes set."""
-    bits = bytearray(BLOOM_M // 8)
+def _bloom_build(values, m: int = BLOOM_M) -> str:
+    """Hex-encoded m-bit array with every value's probes set."""
+    bits = bytearray(m // 8)
     for v in values:
         if v is None:
             continue  # NULL never matches an '=' predicate: safe to omit
         if isinstance(v, bool) or not isinstance(v, (int, str)):
             return ""  # unbloomable column type: record no filter at all
-        for pos in _bloom_positions(v):
+        for pos in _bloom_positions(v, m):
             bits[pos // 8] |= 1 << (pos % 8)
     return bits.hex()
 
@@ -339,7 +418,8 @@ def _bloom_match(hexbits: str | None, pred: tuple) -> bool:
         return True  # membership unknown: never prune blind
     bits = bytes.fromhex(hexbits)
     return all(
-        bits[pos // 8] & (1 << (pos % 8)) for pos in _bloom_positions(pred[1])
+        bits[pos // 8] & (1 << (pos % 8))
+        for pos in _bloom_positions(pred[1], len(bits) * 8)
     )
 
 
@@ -378,23 +458,30 @@ def _col_sketches(
     """Writer-side bloom + KMV for one column in ONE streaming pass over
     the file's record batches (pyarrow iter_batches) — the same work an
     Iceberg writer does to emit puffin/parquet stats, but with driver
-    memory bounded at O(batch + BLOOM_M/8 + k), never O(rows in file):
+    memory bounded at O(batch + bloom + k), never O(rows in file):
     the bloom folds bits in place and the KMV running set is pruned back
     to its k smallest after every batch, which is exact because any hash
     among the file's k smallest is among every running prefix's k
     smallest. Same int/str-only key discipline as _bloom_build/_kmv_mins:
     an unbloomable/unsketchable value type records no filter at all for
-    the whole file ('' / [])."""
-    bits = bytearray(BLOOM_M // 8) if want_bloom else None
+    the whole file ('' / []). Each batch is deduplicated first (pyarrow
+    unique), so a value repeated across a conversation's turns is hashed
+    once per batch; bloom bits and KMV hashes are idempotent, so the
+    result is identical to hashing every value. The bloom is sized from
+    the footer's row count (_bloom_bits_for)."""
+    import pyarrow.compute as pc
+
+    m = _bloom_bits_for(pf.metadata.num_rows)
+    bits = bytearray(m // 8) if want_bloom else None
     hs: set[int] | None = set() if want_ndv else None
     for batch in pf.iter_batches(columns=[col]):
-        for v in batch.column(0).to_pylist():
+        for v in pc.unique(batch.column(0)).to_pylist():
             if v is None:
                 continue  # NULL never matches '=' and never counts distinct
             if isinstance(v, bool) or not isinstance(v, (int, str)):
                 return "", []
             if bits is not None:
-                for pos in _bloom_positions(v):
+                for pos in _bloom_positions(v, m):
                     bits[pos // 8] |= 1 << (pos % 8)
             if hs is not None:
                 hs.add(_kmv_hash(v))
@@ -527,37 +614,47 @@ def _stats_match(st: list | None, pred: tuple) -> bool:
 # _state_at's default expand=True and behave exactly as before.
 
 MANIFEST_CHUNK_FILES = 512  # commits adding more files than this chunk them
-_CHUNK_SUMMARY_VALUES = 64  # max distinct partition values per summary field
 
 
 def _bloom_or(hexes: list[str]) -> str:
-    bits = bytearray(BLOOM_M // 8)
+    """Union of blooms at the smallest size among them. A probe position
+    is a hash mod a power of two, so bit p of a larger filter lands on bit
+    p mod m of an m-bit one: folding byte i onto byte i mod (m/8) is
+    exact."""
+    bits = bytearray(min(len(h) for h in hexes) // 2)
     for h in hexes:
         for i, b in enumerate(bytes.fromhex(h)):
-            bits[i] |= b
+            bits[i % len(bits)] |= b
     return bits.hex()
 
 
 def _chunk_summary(entries: list[dict]) -> dict:
     """Inline summary for one chunk of file entries: tallies + the merged
-    pruning metadata (partition value sets, min/max stats, OR'd blooms).
-    A field/column is summarized only when EVERY entry carries it — a
-    partial summary could prune a file the summary never saw."""
+    pruning metadata (the union of the partition tuples, min/max stats,
+    OR'd blooms). A field/column is summarized only when EVERY entry
+    carries it — a partial summary could prune a file the summary never
+    saw — and partition tuples only when every entry shares one spec and
+    key list, so the summary's tuples mean the same thing as each file's."""
     ref: dict = {
         "n_files": len(entries),
         "rows": sum(e["rows"] for e in entries),
         "bytes": sum(e.get("bytes", 0) for e in entries),
     }
     spec = entries[0].get("spec")
-    if spec and all(e.get("spec") == spec for e in entries):
+    same_spec = all(e.get("spec") == spec for e in entries)
+    if spec and same_spec:
         ref["spec"] = spec
-    parts: dict[str, list] = {}
-    for fname in {k for e in entries for k in e.get("partition", {})}:
-        vals = {e.get("partition", {}).get(fname) for e in entries}
-        if None not in vals and len(vals) <= _CHUNK_SUMMARY_VALUES:
-            parts[fname] = sorted(vals)
-    if parts:
-        ref["partitions"] = parts
+    keys = (entries[0].get("partitions") or {}).get("keys")
+    if same_spec and keys and all(
+        (e.get("partitions") or {}).get("keys") == keys
+        and e["partitions"]["tuples"] is not None
+        for e in entries
+    ):
+        counts: dict[tuple, int] = {}
+        for e in entries:
+            for vals, n in e["partitions"]["tuples"]:
+                counts[tuple(vals)] = counts.get(tuple(vals), 0) + n
+        ref["partitions"] = _bounded_partitions(keys, counts)
     stats: dict[str, list] = {}
     for col in {c for e in entries for c in e.get("stats", {})}:
         sts = [e.get("stats", {}).get(col) for e in entries]
@@ -584,13 +681,13 @@ def _chunk_summary(entries: list[dict]) -> dict:
 def _write_manifest_chunks(
     table: str, entries: list[dict], chunk_files: int
 ) -> list[dict]:
-    """Group `entries` (sorted by partition values then path, so each chunk
+    """Group `entries` (sorted by partition tuples then path, so each chunk
     covers a coherent partition range) into chunk manifest files under
     log/, returning the summary refs to inline into the commit. Chunk
     paths are relative to the table root so the table stays relocatable."""
     entries = sorted(
         entries,
-        key=lambda e: (json.dumps(e.get("partition", {}), sort_keys=True), e["path"]),
+        key=lambda e: (json.dumps(e.get("partitions", {}), sort_keys=True), e["path"]),
     )
     log = _log_dir(table)
     os.makedirs(log, exist_ok=True)
@@ -662,45 +759,44 @@ def _entry_matches(
     predicates: dict[str, tuple],
     byname: dict[str, int],
     evolved: bool,
-    any_part_value: bool = False,
 ) -> bool:
     """True iff the entry (file, or chunk summary) may contain matching
-    rows. `any_part_value=True` treats the entry's partition values as
-    SETS (chunk summaries): the entry may match if ANY recorded value
-    passes, where a file entry's single value must pass."""
-    by_source: dict[str, list[tuple[dict, object]]] = {}
-    for f in e.get("spec", []):
-        if any_part_value:
-            pvs = e.get("partitions", {}).get(f["name"])
-            # a null/default value among the set means some file in the
-            # chunk has no value for this field: indeterminate, never prune
-            if pvs and all(
-                pv is not None and pv != "__HIVE_DEFAULT_PARTITION__"
-                for pv in pvs
-            ):
-                by_source.setdefault(f["source"], []).append((f, pvs))
-        else:
-            pv = e.get("partition", {}).get(f["name"])
-            if pv is not None and pv != "__HIVE_DEFAULT_PARTITION__":
-                by_source.setdefault(f["source"], []).append((f, [pv]))
+    rows: some recorded partition tuple passes every predicate projected
+    through the entry's spec (identity on the partition keys when the
+    entry has no spec), and the min/max stats and blooms do not rule the
+    predicates out. An entry without a recorded tuple set is kept."""
+    parts = e.get("partitions") or {}
+    tuples = parts.get("tuples")
+    fields = e.get("spec") or [
+        {"name": k, "source": k, "transform": "identity", "param": None}
+        for k in parts.get("keys", [])
+    ]
+    pos = {k: i for i, k in enumerate(parts.get("keys", []))}
     # specs and stats are keyed by the file's WRITE-TIME names; after a
     # rename the predicate's current name resolves through the field id
     wname = {}
     if evolved:
         inv = {fid: n for n, fid in _entry_cols(e, state).items()}
         wname = {c: inv.get(byname.get(c)) for c in predicates}
+    checks: list[tuple[int, dict, tuple]] = []
     for col, pred in predicates.items():
         w = wname.get(col, col) if evolved else col
         if w is None:
             continue  # column younger than this file: keep, never prune blind
-        for f, pvs in by_source.get(w, []):
-            if not any(_part_match(f, pv, pred) for pv in pvs):
-                return False
+        if tuples is not None:
+            checks += [
+                (pos[f["name"]], f, pred)
+                for f in fields
+                if f["source"] == w and f["name"] in pos
+            ]
         if not _stats_match(e.get("stats", {}).get(w), pred):
             return False
         if not _bloom_match(e.get("bloom", {}).get(w), pred):
             return False
-    return True
+    return not checks or any(
+        all(_part_match(f, vals[i], pred) for i, f, pred in checks)
+        for vals, _n in tuples
+    )
 
 
 def plan_scan(
@@ -739,7 +835,7 @@ def plan_scan(
     for mpath in sorted(chunks):
         ref = chunks[mpath]
         if not removed and not _entry_matches(
-            ref, state, predicates, byname, evolved, any_part_value=True
+            ref, state, predicates, byname, evolved
         ):
             chunks_skipped += 1
             skipped += ref["n_files"]
@@ -814,12 +910,15 @@ def _file_entries(
     seq: int,
     bloom_cols: tuple[str, ...] = (),
     ndv_cols: tuple[str, ...] = (),
+    partition_by: tuple[str, ...] = (),
 ) -> list[dict]:
     """Manifest entries for every parquet file under dirpath: row count,
-    byte size, partition values, and min/max per requested stats column —
-    all read from parquet FOOTERS and path segments (the same numbers
-    Iceberg persists in its manifests), so building the manifest costs
-    metadata IO only."""
+    byte size, partition tuples, and min/max per requested stats column —
+    read from parquet FOOTERS and path segments (the same numbers Iceberg
+    persists in its manifests). Blooms/KMV sketches scan their column,
+    and `partition_by` groups the key columns of each file into its
+    tuple set (_data_partitions); without it, hive `_p_` path segments
+    give the file its one tuple."""
     import pyarrow.parquet as pq
 
     entries = []
@@ -868,9 +967,14 @@ def _file_entries(
                 entry["bloom"] = bloom
             if ndv:
                 entry["ndv"] = ndv
-            part = _partition_of(dirpath, path)
-            if part:
-                entry["partition"] = part
+            if partition_by:
+                entry["partitions"] = _data_partitions(pf, partition_by)
+            else:
+                part = _partition_of(dirpath, path)
+                if part:
+                    entry["partitions"] = _bounded_partitions(
+                        part, {tuple(part.values()): md.num_rows}
+                    )
             entries.append(entry)
     return entries
 
@@ -1515,8 +1619,9 @@ def table_files(
     spark: SparkSession, table: str, version: int | None = None
 ) -> DataFrame:
     """One row per LIVE file (data and delete) at a snapshot: sequence
-    number, manifest row/byte tallies, partition values, footer stats, and
-    the delete kind. This is the small-file / delete-debt health view —
+    number, manifest row/byte tallies, partition tuples (the manifest's
+    {"keys", "tuples"} form as JSON), footer stats, and the delete kind.
+    This is the small-file / delete-debt health view —
     `table_files(...).where("kind = 'data'").groupBy(...).agg(...)` plans
     maintenance (compact_binpack targets, delete-file backlog) without
     opening a single data file."""
@@ -1531,7 +1636,7 @@ def table_files(
                     int(e["seq"]),
                     int(e.get("rows", 0)),
                     int(e.get("bytes", 0)),
-                    json.dumps(e.get("partition") or {}, sort_keys=True),
+                    json.dumps(e.get("partitions") or {}, sort_keys=True),
                     json.dumps(e.get("stats") or {}, sort_keys=True, default=str),
                     bool(e.get("positional")),
                 )
@@ -1547,25 +1652,38 @@ def table_partitions(
     spark: SparkSession, table: str, version: int | None = None
 ) -> DataFrame:
     """One row per partition tuple of the LIVE data files at a snapshot
-    (Iceberg's `partitions` metadata table): file count, manifest row and
-    byte totals, and the sequence-number range — per-sink/per-day size
-    skew and compaction debt read straight off the manifests, no data file
-    opened. Unpartitioned files aggregate under the empty partition `{}`;
-    partition keys are the file's WRITE-TIME spec names (per-file specs =
-    partition evolution, so two generations show as distinct tuples)."""
+    (Iceberg's `partitions` metadata table): file count, exact row total
+    (each file records its rows per tuple), byte total, and the
+    sequence-number range — per-sink/per-day size skew and compaction debt
+    read straight off the manifests, no data file opened. A file holding
+    several tuples counts once under each, and its bytes are split across
+    them in proportion to rows. Unpartitioned files aggregate under the
+    empty partition `{}`; files whose tuple set passed the bound
+    (PART_TUPLES_MAX) aggregate under a NULL partition. Partition keys are
+    the file's WRITE-TIME spec names (per-file specs = partition
+    evolution, so two generations show as distinct tuples)."""
     _, state = _state_at(table, version)
-    agg: dict[str, list] = {}
+    agg: dict[str | None, list] = {}
     for _p, e in sorted(state["data"].items()):
-        key = json.dumps(e.get("partition") or {}, sort_keys=True)
-        s = agg.setdefault(key, [0, 0, 0, None, None])
-        s[0] += 1
-        s[1] += int(e.get("rows", 0))
-        s[2] += int(e.get("bytes", 0))
+        rows_total = int(e.get("rows", 0))
+        if not e.get("partitions"):
+            tuples = [("{}", rows_total)]
+        elif e["partitions"]["tuples"] is None:
+            tuples = [(None, rows_total)]
+        else:
+            tuples = [
+                (json.dumps(part, sort_keys=True), n) for part, n in _tuple_rows(e)
+            ]
         seq = int(e["seq"])
-        s[3] = seq if s[3] is None else min(s[3], seq)
-        s[4] = seq if s[4] is None else max(s[4], seq)
+        for key, n in tuples:
+            s = agg.setdefault(key, [0, 0, 0, seq, seq])
+            s[0] += 1
+            s[1] += n
+            s[2] += int(e.get("bytes", 0)) * n // max(rows_total, 1)
+            s[3] = min(s[3], seq)
+            s[4] = max(s[4], seq)
     rows = [
-        (k, v[0], v[1], v[2], v[3], v[4]) for k, v in sorted(agg.items())
+        (k, *v) for k, v in sorted(agg.items(), key=lambda kv: (kv[0] is None, kv[0] or ""))
     ]
     return spark.createDataFrame(
         rows,
@@ -1622,10 +1740,24 @@ def _write_data_files(
     spec_fields: list[dict] | None = None,
     bloom_cols: tuple[str, ...] = (),
     ndv_cols: tuple[str, ...] = (),
+    timings: dict | None = None,
 ) -> list[dict]:
+    """Write df as parquet under a fresh commit directory and build its
+    manifest entries; `timings` (when given) receives write_s and
+    manifest_s.
+
+    `partition_by` writes a FEW sink-sorted files, not one hive directory
+    per key tuple: a rebalance on the keys puts each tuple's rows in one
+    writer task (AQE's advisory partition size sets how many, and splits
+    a skewed tuple), and a local sort on (keys, stats_cols) keeps each
+    tuple's rows contiguous with tight per-row-group stats. The manifest
+    records each file's tuple set with row counts. A global orderBy would
+    cost a range-sampling pass, which re-runs the whole upstream plan (for
+    the job, the parse UDF)."""
     outdir = os.path.join(table, kind, f"c{version:06d}-{uuid.uuid4().hex[:8]}")
     if partition_by and spec_fields:
         raise ValueError("pass partition_by OR partition_spec, not both")
+    t0 = time.perf_counter()
     if spec_fields:
         # hidden partitioning: the partition columns are TRANSFORMS of
         # source columns, written as duplicate `_p_` columns so data files
@@ -1640,25 +1772,28 @@ def _write_data_files(
             *[f"_p_{f['name']}" for f in spec_fields]
         ).parquet(outdir)
     elif partition_by:
-        # partition on DUPLICATE `_p_` columns so the data files keep the
-        # real columns; the partition values live in the manifest (and the
-        # path), exactly where Iceberg keeps them.
-        out = df
-        for k in partition_by:
-            out = out.withColumn(f"_p_{k}", F.col(k))
-        out.write.mode("error").partitionBy(
-            *[f"_p_{k}" for k in partition_by]
-        ).parquet(outdir)
+        df.hint("rebalance", *partition_by).sortWithinPartitions(
+            *partition_by, *[c for c in stats_cols if c not in partition_by]
+        ).write.mode("error").parquet(outdir)
     else:
         df.write.mode("error").parquet(outdir)
+    t1 = time.perf_counter()
     entries = _file_entries(
-        outdir, stats_cols, seq=version, bloom_cols=bloom_cols, ndv_cols=ndv_cols
+        outdir,
+        stats_cols,
+        seq=version,
+        bloom_cols=bloom_cols,
+        ndv_cols=ndv_cols,
+        partition_by=partition_by,
     )
     if spec_fields:
         # every file records the spec it was written under — partition
         # evolution is per-file, exactly Iceberg's manifest spec_id.
         for e in entries:
             e["spec"] = spec_fields
+    if timings is not None:
+        timings["write_s"] = t1 - t0
+        timings["manifest_s"] = time.perf_counter() - t1
     return entries
 
 
@@ -1680,13 +1815,15 @@ def append(
     """Append df as a new snapshot; returns the committed version. Appends
     conflict with nothing (they only add files), so a lost commit race is
     retried against the refreshed log — Iceberg's fast-append semantics.
-    `partition_by` writes hive-partitioned files whose partition values are
-    recorded per file in the manifest (read back via read_partition).
+    `partition_by` writes a few files sorted by those keys, each
+    recording its key tuples with row counts in the manifest (read back,
+    pruned, via read_partition).
     `partition_spec` is the hidden-partitioning alternative — transform
     fields like ("days(ts)", "bucket(8, conv_id)") pruned via scan_where.
     `marker` stamps the commit for idempotent resume (append_idempotent).
-    `bloom_cols` records a per-file BLOOM_M-bit membership filter per named
-    column in the manifest (Iceberg's parquet/puffin bloom analog): point
+    `bloom_cols` records a per-file membership filter per named column in
+    the manifest, sized from the file's row count (_bloom_bits_for;
+    Iceberg's parquet/puffin bloom analog): point
     ('=') predicates in prune_files_where then skip files with certainty of
     absence even when every file's min/max RANGE overlaps — the skipping
     lever for high-cardinality scattered keys, where clustering is not
@@ -1697,10 +1834,13 @@ def append(
     Commits adding more than `manifest_chunk_files` files (default
     MANIFEST_CHUNK_FILES) record two-level manifests: file entries go to
     chunk files and the commit inlines only per-chunk summaries, so
-    planning (plan_scan/scan_where) skips whole chunks by summary."""
+    planning (plan_scan/scan_where) skips whole chunks by summary.
+    The commit records a `summary` (commit_summary) of what it added and
+    where its time went."""
     if branch != "main":
         _head(table, branch)  # validates the ref exists and is a branch
     version = (current_version(table) or 0) + 1
+    timings: dict = {}
     entries = _write_data_files(
         df,
         table,
@@ -1711,10 +1851,19 @@ def append(
         parse_partition_spec(partition_spec) if partition_spec else None,
         bloom_cols,
         ndv_cols,
+        timings=timings,
     )
+    summary = {
+        "added_data_files": len(entries),
+        "added_records": sum(e["rows"] for e in entries),
+        "added_files_size": sum(e["bytes"] for e in entries),
+    }
+    t0 = time.perf_counter()
     entries = _maybe_chunk(table, entries, manifest_chunk_files)
+    timings["manifest_s"] += time.perf_counter() - t0
     schema_new = _schema_of(df)
-    for _ in range(max_retries):
+    t0 = time.perf_counter()
+    for attempt in range(max_retries):
         parent = _head(table, branch)
         version_try = (current_version(table) or 0) + 1
         pstate = _state_at(table, parent)[1] if parent is not None else None
@@ -1732,6 +1881,12 @@ def append(
             "fields": fields,
             "last_field_id": last_id,
             "added_data": _stamp_cols(entries, fields),
+            "summary": dict(
+                summary,
+                **{k: round(v, 4) for k, v in timings.items()},
+                commit_s=round(time.perf_counter() - t0, 4),
+                commit_retries=attempt,
+            ),
         }
         if branch != "main":
             commit["branch"] = branch
@@ -1759,7 +1914,11 @@ def add_files(
     enforcement/evolution rule as append). A hive-layout source whose
     partition values exist ONLY in directory names is refused — the
     snapshot-log reads files individually, so path-only columns would
-    silently read back as null. Imported files become TABLE-OWNED:
+    silently read back as null. `_p_<k>=<v>` directories whose files also
+    hold column `<k>` (the table format's own hidden-partition layout) are
+    accepted: each file's path values become its one-tuple partition set
+    in the manifest, so read_partition/scan_where prune the import like
+    native files. Imported files become TABLE-OWNED:
     snapshot expiry deletes them once no retained snapshot references
     them, exactly as Iceberg warns for add_files. No reference analog
     (the Go CLI rereads raw files per run, sample/main.go:32-47)."""
@@ -1768,7 +1927,12 @@ def add_files(
         raise LookupError(f"no parquet files under {source_dir}")
     schema_new = _schema_of(spark.read.parquet(probe[0]["path"]))
     inferred = _schema_of(spark.read.parquet(source_dir))
-    path_only = [n for n, _t in inferred if n not in {c for c, _ in schema_new}]
+    file_cols = {c for c, _ in schema_new}
+    path_only = [
+        n
+        for n, _t in inferred
+        if n not in file_cols and not (n.startswith("_p_") and n[3:] in file_cols)
+    ]
     if path_only:
         raise ValueError(
             f"source {source_dir} is hive-partitioned on path-only "
@@ -1813,6 +1977,17 @@ def committed_markers(table: str) -> set[str]:
         if m is not None:
             out.add(m)
     return out
+
+
+def commit_summary(table: str, version: int) -> dict | None:
+    """What an append commit added and where its time went (Iceberg's
+    snapshot summary): added_data_files, added_records and
+    added_files_size from the manifest entries; write_s (the Spark
+    write), manifest_s (footer reads, sketches and partition tuples) and
+    commit_s (log replay, schema check and any lost races, up to the
+    winning commit-if-absent write); commit_retries. None for commits
+    that record no summary (non-append operations)."""
+    return _read_commit(table, version).get("summary")
 
 
 def append_idempotent(
@@ -2354,7 +2529,7 @@ def compact_binpack(
     sized packed files; files already at size are untouched — the rewrite
     cost is bounded by the small-file backlog, never the table size. This
     is the maintenance loop a streaming sink needs: each micro-batch
-    commit lands one file per touched sink, and the backlog is folded
+    commit lands a few small files, and the backlog is folded
     periodically without rewriting the accumulated history. Delete files
     are RETAINED (they still scope to the untouched older files); the
     packed files' sequence number exceeds every prior delete's, so
@@ -2919,37 +3094,16 @@ def read_partition(
     filters: dict[str, str],
     version: int | None = None,
 ) -> DataFrame:
-    """Partition-pruned read: open only the live files whose manifest
-    partition values match `filters` (files without partition metadata are
-    kept — never prune blind), then apply the exact filter and any delete
-    files. This is the per-sink read path of a routed table: planning cost
-    is the log replay, and non-matching sinks' files are never opened."""
-    _, state = _state_at(table, version)
-    byname = {n: i for i, n, _t in _fields_of(state)}
-    paths = []
-    for path in sorted(state["data"]):
-        e = state["data"][path]
-        part = e.get("partition")
-        if part is None:
-            paths.append(path)
-            continue
-        # manifest partition values are keyed by WRITE-TIME names; resolve
-        # the filter's current name through the field id (missing → keep)
-        inv = {fid: n for n, fid in _entry_cols(e, state).items()}
-        ok = True
-        for k, v in filters.items():
-            w = inv.get(byname.get(k))
-            if w is not None and w in part and part[w] != str(v):
-                ok = False
-        if ok:
-            paths.append(path)
-    if not paths:
-        return _empty_df(spark, _field_pairs(_fields_of(state)))
-    df = _read_projected(spark, [state["data"][p] for p in paths], state)
-    for k, v in filters.items():
-        df = df.filter(F.col(k) == F.lit(v))
-    pruned_state = dict(state, data={p: state["data"][p] for p in paths})
-    return _apply_deletes(spark, df, pruned_state)
+    """Partition-pruned read: open only the live files whose recorded
+    partition tuples hold a tuple matching `filters` (files without a
+    recorded tuple set are kept — never prune blind), then apply the exact
+    filter and any delete files. This is the per-sink read path of a
+    routed table: it is scan_where with an equality predicate per filter,
+    so planning is the two-level manifest walk and files that hold none
+    of the sink's rows are never opened."""
+    return scan_where(
+        spark, table, {k: ("=", v) for k, v in filters.items()}, version
+    )
 
 
 def incremental_append_scan(

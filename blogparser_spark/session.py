@@ -15,13 +15,35 @@ import os
 from pyspark.sql import SparkSession
 
 
+def usable_cores() -> int:
+    """CPUs this process may run on (its affinity mask, not the host's
+    core count)."""
+    return len(os.sched_getaffinity(0))
+
+
+def default_master() -> str:
+    """local[SPARK_GRAFT_CPUS] when set, else local[<usable cores>]."""
+    return f"local[{os.environ.get('SPARK_GRAFT_CPUS') or usable_cores()}]"
+
+
+def default_driver_memory() -> str:
+    """SPARK_DRIVER_MEM when set, else a quarter of physical RAM. Local
+    mode runs every task in the driver JVM, so its heap must leave room
+    for the Python workers and the page cache on the same host."""
+    env = os.environ.get("SPARK_DRIVER_MEM")
+    if env:
+        return env
+    total_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") >> 20
+    return f"{max(total_mb // 4, 512)}m"
+
+
 def get_spark(
     master: str | None = None,
     app_name: str = "blogparser_spark",
     shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
-    master = master or f"local[{os.environ.get('SPARK_GRAFT_CPUS', '32')}]"
+    master = master or default_master()
     # the parse UDF deserializes on executor python workers, which need the
     # package importable; local mode inherits the driver env, a cluster
     # deployment ships the package via spark-submit --py-files instead
@@ -34,8 +56,8 @@ def get_spark(
     if shuffle_partitions is None:
         # match parallelism: one shuffle partition per core locally; a real
         # cluster deployment would size this to ~2-3x total cores via submit conf
-        n = master[master.find("[") + 1 : master.find("]")] if "[" in master else "32"
-        shuffle_partitions = 32 if n == "*" else int(n)
+        n = master[master.find("[") + 1 : master.find("]")] if "[" in master else "*"
+        shuffle_partitions = usable_cores() if n == "*" else int(n)
 
     builder = (
         SparkSession.builder.master(master)
@@ -51,12 +73,13 @@ def get_spark(
         # parse stage is regex-heavy python; keep executor→python worker reuse
         .config("spark.python.worker.reuse", "true")
         .config("spark.ui.enabled", "false")
-        # local mode = the driver JVM IS the executor: size its heap for the
-        # pipeline's string churn (parse output ≈ 4× payload per run). An 8g
-        # heap measured 22k turns/s on the 500k-turn pipeline purely from GC
-        # debt; 32g measures ~150k on the same plan. Real clusters size
+        # local mode = the driver JVM IS the executor: its heap absorbs the
+        # pipeline's string churn (parse output ≈ 4× payload per run), but
+        # a heap sized past physical RAM gets the JVM OOM-killed, so the
+        # default is a quarter of RAM (default_driver_memory); set
+        # SPARK_DRIVER_MEM to raise it on a large host. Real clusters size
         # executor memory instead (spark-submit --executor-memory).
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "32g"))
+        .config("spark.driver.memory", default_driver_memory())
         # ParallelGC over G1 for this allocation-heavy batch workload:
         # measured 148k vs 112k turns/s at local[16] on the 5M-turn
         # pipeline, and without G1's occasional concurrent-mark stalls

@@ -270,6 +270,28 @@ def test_job_tablelog_sink_matches_parquet_and_resumes(spark, tmp_path, capsys):
     assert r3["slices_run"] == [] and tl.current_version(table) == v1
 
 
+def test_slice_manifest_carries_commit_summary(spark, tmp_path):
+    """Each tablelog slice manifest carries its commit's summary: the
+    files, records and bytes the commit added match the table's manifest
+    entries for that version, and the phase timings are recorded."""
+    from blogparser_spark.job import transform
+    from blogparser_spark.operators import tablelog as tl
+    from blogparser_spark.operators.checkpoint import read_manifest, run_sliced
+
+    inp = _write_input(spark, tmp_path)
+    out = str(tmp_path / "out_sum")
+    ms = run_sliced(spark, inp, out, transform, n_slices=2, table_format="tablelog")
+    for m in ms:
+        entries = tl._added_entries(out + "/table", tl._read_commit(out + "/table", m.table_version))
+        s = m.commit_summary
+        assert s["added_records"] == m.rows_in == sum(e["rows"] for e in entries)
+        assert s["added_data_files"] == len(entries)
+        assert s["added_files_size"] == sum(e["bytes"] for e in entries)
+        assert s["commit_retries"] == 0
+        assert all(s[k] >= 0 for k in ("write_s", "manifest_s", "commit_s"))
+        assert read_manifest(out, m.slice_id)["commit_summary"] == s
+
+
 def test_tablelog_generation_replace_on_input_change_and_reslice(
     spark, tmp_path
 ):

@@ -4,10 +4,13 @@ incremental append scans, snapshot expiry, and stats pruning."""
 
 from __future__ import annotations
 
+import contextlib
 import json
 import os
 
 import pytest
+from hypothesis import given, settings
+from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from blogparser_spark.operators import tablelog as tl
@@ -200,25 +203,59 @@ def test_commit_file_is_valid_json_with_manifest_stats(spark, tmp_path):
     assert entry["seq"] == 1
 
 
+@contextlib.contextmanager
+def _advisory_bytes(spark, size: str):
+    """Run with a tiny AQE advisory partition size, so a partition_by
+    write splits into several files."""
+    key = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
+    old = spark.conf.get(key)
+    spark.conf.set(key, size)
+    try:
+        yield
+    finally:
+        spark.conf.set(key, old)
+
+
+def _opened(df) -> set[str]:
+    """Absolute paths of the data files a DataFrame scans."""
+    from urllib.parse import unquote, urlparse
+
+    return {unquote(urlparse(u).path) for u in df.inputFiles()}
+
+
+def _holding(state: dict, part: dict) -> set[str]:
+    """Live files whose recorded tuples hold `part`."""
+    return {
+        os.path.abspath(p)
+        for p, e in state["data"].items()
+        if any(t == part for t, _n in tl._tuple_rows(e))
+    }
+
+
 def test_partitioned_append_manifest_and_pruned_read(spark, tmp_path):
+    """partition_by writes key-sorted files, each recording the key tuples
+    it holds with exact row counts; read_partition opens only the files
+    whose tuples hold the requested value."""
     t = str(tmp_path / "t")
-    df = _batch(spark, 0, 30)
-    tl.append(spark, t, df, partition_by=("event_type",))
+    df = spark.range(0, 600).selectExpr(
+        "id AS event_id", "concat('type_', id % 12) AS event_type"
+    )
+    with _advisory_bytes(spark, "1k"):
+        tl.append(spark, t, df, partition_by=("event_type",))
     _, state = tl._state_at(t)
-    parts = {e["partition"]["event_type"] for e in state["data"].values()}
-    assert parts == {"type_0", "type_1", "type_2"}
+    counts: dict[str, int] = {}
+    for e in state["data"].values():
+        for part, n in tl._tuple_rows(e):
+            counts[part["event_type"]] = counts.get(part["event_type"], 0) + n
+    assert counts == {f"type_{i}": 50 for i in range(12)}
     # data files keep the real column (no hive-stripping)
     one = tl.read_partition(spark, t, {"event_type": "type_1"})
     assert "event_type" in one.columns
-    assert _ids(one) == list(range(1, 30, 3))
-    # pruning: every file NOT in the target partition is skippable — the
-    # manifest carries enough to never open type_0/type_2 files
-    matching = [
-        p
-        for p, e in state["data"].items()
-        if e["partition"]["event_type"] == "type_1"
-    ]
+    assert _ids(one) == list(range(1, 600, 12))
+    # pruning: files holding no type_1 row are never opened
+    matching = _holding(state, {"event_type": "type_1"})
     assert 0 < len(matching) < len(state["data"])
+    assert _opened(one) == matching
 
 
 def test_partition_read_composes_with_deletes(spark, tmp_path):
@@ -267,6 +304,219 @@ def test_route_commit_tablelog_matches_write_routed(spark, parsed, tmp_path):
     assert a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0
     # whole-table row parity too
     assert tl.read_snapshot(spark, t).count() == enriched.count()
+
+
+def _sinks_df(spark, n: int = 3000):
+    """30 sink tuples (id mod 5, 3, 2 are independent), ~100 rows each."""
+    return spark.range(0, n).selectExpr(
+        "concat('conv', id % 97) AS conv_id",
+        "id AS turn_idx",
+        "concat('ch', id % 5) AS channel",
+        "concat('tc', id % 3) AS tool_category",
+        "IF(id % 2 = 0, 'ok', 'failed') AS parse_status",
+    )
+
+
+def _sink_counts(df) -> dict[tuple, int]:
+    return {
+        (r.channel, r.tool_category, r.parse_status): r["count"]
+        for r in df.groupBy("channel", "tool_category", "parse_status").count().collect()
+    }
+
+
+def test_route_commit_writes_fewer_files_than_sinks(spark, tmp_path):
+    """A commit touching 30 sinks writes a few sink-sorted files, not one
+    hive directory per sink, and the tuples recorded across its files are
+    exactly the sinks with their row counts."""
+    from blogparser_spark.operators.route import SINK_KEYS, route_commit_tablelog
+
+    df = _sinks_df(spark)
+    want = _sink_counts(df)
+    assert len(want) >= 20
+    t = str(tmp_path / "t")
+    route_commit_tablelog(df, t, marker="m", stats_cols=("conv_id",))
+    _, state = tl._state_at(t)
+    assert len(state["data"]) < len(want)
+    got: dict[tuple, int] = {}
+    for e in state["data"].values():
+        assert e["partitions"]["keys"] == SINK_KEYS
+        for part, n in tl._tuple_rows(e):
+            key = tuple(part[k] for k in SINK_KEYS)
+            got[key] = got.get(key, 0) + n
+    assert got == want
+    assert not any(
+        d.startswith("_p_") for _r, dirs, _f in os.walk(t) for d in dirs
+    )
+
+
+def test_routed_sink_read_opens_only_files_holding_the_sink(spark, tmp_path):
+    """With a tiny advisory partition size forcing several files, a
+    per-sink read opens exactly the files whose recorded tuples hold the
+    sink and returns exactly that sink's rows."""
+    from blogparser_spark.operators.route import (
+        read_routed_tablelog,
+        route_commit_tablelog,
+    )
+
+    df = _sinks_df(spark)
+    want = _sink_counts(df)
+    t = str(tmp_path / "t")
+    with _advisory_bytes(spark, "2k"):
+        route_commit_tablelog(df, t, marker="m")
+    _, state = tl._state_at(t)
+    assert len(state["data"]) > 1
+    for ch, tc, ps in sorted(want)[:4]:
+        got = read_routed_tablelog(
+            spark, t, channel=ch, tool_category=tc, parse_status=ps
+        )
+        part = {"channel": ch, "tool_category": tc, "parse_status": ps}
+        holding = _holding(state, part)
+        assert 0 < len(holding) < len(state["data"])
+        assert _opened(got) == holding
+        assert got.count() == want[(ch, tc, ps)]
+        assert {
+            (r.channel, r.tool_category, r.parse_status) for r in got.collect()
+        } == {(ch, tc, ps)}
+
+
+def test_partitions_table_exact_across_multi_sink_files(spark, tmp_path):
+    """table_partitions gives each tuple's exact row total when files
+    hold many tuples, and counts a tuple's files rather than directories."""
+    df = _sinks_df(spark)
+    want = _sink_counts(df)
+    t = str(tmp_path / "t")
+    tl.append(
+        spark, t, df, partition_by=("channel", "tool_category", "parse_status")
+    )
+    n_files = len(tl._state_at(t)[1]["data"])
+    assert n_files < len(want)
+    rows = tl.table_partitions(spark, t).collect()
+    got = {}
+    for r in rows:
+        part = json.loads(r.partition)
+        got[(part["channel"], part["tool_category"], part["parse_status"])] = r.rows
+        assert 1 <= r.n_files <= n_files and (r.min_seq, r.max_seq) == (1, 1)
+    assert got == want
+    total_bytes = tl.table_files(spark, t).agg(F.sum("bytes")).first()[0]
+    assert 0 < sum(r.bytes for r in rows) <= total_bytes
+
+
+def test_add_files_hive_source_still_prunes(spark, tmp_path):
+    """add_files normalises path-parsed `_p_<k>=<v>` values (files that
+    also hold `<k>`) into one-tuple partition sets, so per-value reads
+    open only that value's files."""
+    src = str(tmp_path / "hive")
+    d = spark.range(0, 60).selectExpr("id AS k", "concat('s', id % 3) AS sink")
+    d.withColumn("_p_sink", F.col("sink")).write.partitionBy("_p_sink").parquet(src)
+    t = str(tmp_path / "t")
+    tl.add_files(spark, t, src, stats_cols=("k",))
+    _, state = tl._state_at(t)
+    for e in state["data"].values():
+        ((part, n),) = tl._tuple_rows(e)
+        assert n == e["rows"] and e["path"].endswith(".parquet")
+        assert f"_p_sink={part['sink']}" in e["path"]
+    got = tl.read_partition(spark, t, {"sink": "s1"})
+    assert _opened(got) == _holding(state, {"sink": "s1"})
+    assert len(_opened(got)) < len(state["data"])
+    assert sorted(r.k for r in got.collect()) == list(range(1, 60, 3))
+    parts = {r.partition: r.rows for r in tl.table_partitions(spark, t).collect()}
+    assert parts == {json.dumps({"sink": f"s{i}"}): 20 for i in range(3)}
+
+
+def test_file_past_tuple_bound_is_kept(spark, tmp_path):
+    """A file holding more than PART_TUPLES_MAX tuples records no tuple
+    set; it is never pruned, reads stay exact, and the partitions table
+    files it under a NULL partition."""
+    n_keys = tl.PART_TUPLES_MAX + 6
+    t = str(tmp_path / "t")
+    df = spark.range(0, n_keys * 3).selectExpr(
+        "id AS v", f"concat('k', id % {n_keys}) AS key"
+    )
+    tl.append(spark, t, df.coalesce(1), partition_by=("key",))
+    _, state = tl._state_at(t)
+    (e,) = state["data"].values()
+    assert e["partitions"] == {"keys": ["key"], "tuples": None}
+    got = tl.read_partition(spark, t, {"key": "k7"})
+    assert _opened(got) == {os.path.abspath(e["path"])}
+    assert sorted(r.v for r in got.collect()) == [7, 7 + n_keys, 7 + 2 * n_keys]
+    rows = [(r.partition, r.rows) for r in tl.table_partitions(spark, t).collect()]
+    assert rows == [(None, n_keys * 3)]
+
+
+def test_append_commit_summary_exact(spark, tmp_path, monkeypatch):
+    """Each append records what it added (files, records, bytes), where
+    its time went, and how many commit races it lost."""
+    t = str(tmp_path / "t")
+    v = tl.append(spark, t, spark.range(0, 30).repartition(3), stats_cols=("id",))
+    s = tl.commit_summary(t, v)
+    on_disk = [
+        os.path.join(r, f)
+        for r, _d, fs in os.walk(os.path.join(t, "data"))
+        for f in fs
+        if f.endswith(".parquet")
+    ]
+    assert (s["added_data_files"], s["added_records"]) == (3, 30)
+    assert s["added_files_size"] == sum(os.path.getsize(p) for p in on_disk)
+    assert s["commit_retries"] == 0
+    assert all(s[k] >= 0 for k in ("write_s", "manifest_s", "commit_s"))
+    lost = []
+    real = tl._try_commit
+
+    def lose_once(table, commit):
+        if not lost:
+            lost.append(commit["version"])
+            return False
+        return real(table, commit)
+
+    monkeypatch.setattr(tl, "_try_commit", lose_once)
+    v2 = tl.append(spark, t, spark.range(30, 35).coalesce(1))
+    s2 = tl.commit_summary(t, v2)
+    assert (s2["added_data_files"], s2["added_records"], s2["commit_retries"]) == (1, 5, 1)
+    assert tl.commit_summary(t, tl.delete_where(spark, t, F.col("id") < 3, ["id"])) is None
+
+
+@settings(max_examples=40, deadline=None)
+@given(
+    values=st.one_of(
+        st.lists(st.one_of(st.none(), st.integers(-5, 40)), max_size=120),
+        st.lists(
+            st.one_of(st.none(), st.text("abcd", min_size=0, max_size=3)),
+            max_size=120,
+        ),
+    )
+)
+def test_col_sketches_match_whole_column_builders(values, tmp_path_factory):
+    """Deduplicating each batch before hashing leaves the bloom and the
+    KMV sketch bit-identical to hashing every value."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    typ = pa.int64() if any(isinstance(v, int) for v in values) else pa.string()
+    path = str(tmp_path_factory.mktemp("sk") / "f.parquet")
+    pq.write_table(pa.table({"c": pa.array(values, type=typ)}), path, row_group_size=7)
+    bits, mins = tl._col_sketches(pq.ParquetFile(path), "c", True, True)
+    assert bits == tl._bloom_build(values, tl._bloom_bits_for(len(values)))
+    assert mins == tl._kmv_mins(values)
+
+
+def test_bloom_sized_by_rows_and_folds_exactly(tmp_path):
+    """A file's bloom grows with its row count (a few sink-sorted files
+    per commit hold many conversations each), and a larger filter folds
+    exactly onto a smaller one, so chunk summaries can OR mixed sizes."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    values = [f"conv{i % 700}" for i in range(5000)]
+    path = str(tmp_path / "f.parquet")
+    pq.write_table(pa.table({"c": values}), path)
+    bits, _ = tl._col_sketches(pq.ParquetFile(path), "c", True, False)
+    assert len(bits) * 4 == tl._bloom_bits_for(5000) == 8192
+    assert bits == tl._bloom_build(values, 8192)
+    assert tl._bloom_or([bits, tl._bloom_build([])]) == tl._bloom_build(values)
+    absent = [("=", f"other{i}") for i in range(1000)]
+    fp_sized = sum(tl._bloom_match(bits, p) for p in absent)
+    fp_fixed = sum(tl._bloom_match(tl._bloom_build(values), p) for p in absent)
+    assert fp_sized < 50 < fp_fixed
 
 
 def _vbatch(spark, lo: int, hi: int, bump: float = 0.0):
@@ -1761,7 +2011,7 @@ def test_plan_scan_scales_by_chunks_not_files(tmp_path):
                 "rows": 10,
                 "bytes": 1000,
                 "stats": {"k": [c * per_chunk + i, c * per_chunk + i]},
-                "partition": {"day": f"{c:03d}"},
+                "partitions": {"keys": ["day"], "tuples": [[[f"{c:03d}"], 10]]},
                 "spec": spec,
             }
             for i in range(per_chunk)
@@ -1775,7 +2025,10 @@ def test_plan_scan_scales_by_chunks_not_files(tmp_path):
                 "n_files": per_chunk,
                 "rows": per_chunk * 10,
                 "bytes": per_chunk * 1000,
-                "partitions": {"day": [f"{c:03d}"]},
+                "partitions": {
+                    "keys": ["day"],
+                    "tuples": [[[f"{c:03d}"], per_chunk * 10]],
+                },
                 "stats": {"k": [c * per_chunk, (c + 1) * per_chunk - 1]},
                 "spec": spec,
                 "seq": 1,
