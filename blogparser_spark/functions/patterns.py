@@ -1,9 +1,10 @@
 """The shared regex bank: compiled once at module import.
 
-This module is the single source of truth for every extraction pattern; both
-the pure-Python oracle layer (blogparser_spark.oracle.pyref) and the
-Arrow-vectorized parse UDF (blogparser_spark.operators.parse) import from
-here, so parity between the two is structural, not incidental.
+This module is the single source of truth for every extraction pattern. The
+row-at-a-time extractors in blogparser_spark.oracle.pyref apply it, and the
+parse UDF (blogparser_spark.operators.parse) calls those same extractors
+behind literal needle gates, so parity between the two is structural, not
+incidental.
 
 The banks re-express the reference's CSS-selector + regex extraction chains
 (which are DOM queries in Go, parser/title.go:18-73, parser/content.go:16-113,
@@ -127,11 +128,8 @@ class ElementPattern:
     end of body). Exposes findall/sub with re.Pattern-compatible shapes so
     extractors treat both interchangeably."""
 
-    def __init__(self, open_re: str, probe_re: str | None = None):
+    def __init__(self, open_re: str):
         self.open = re.compile(open_re)
-        # capture-free twin for vectorized presence probes (pandas
-        # str.contains warns on and wastes work tracking match groups)
-        self.probe = re.compile(probe_re) if probe_re else self.open
         self._close: dict[str, re.Pattern[str]] = {}
 
     def _tokens(self, tag: str) -> re.Pattern[str]:
@@ -198,8 +196,7 @@ def _el_re(attr: str | None = None, tag: str | None = None) -> ElementPattern:
     """<tag ...attr...>inner</tag> with balanced same-tag inner matching."""
     t = "(?i:" + (tag or _TAGNAME) + ")"
     mid = (r"[^>]*" + attr) if attr else ""
-    tail = r"\b" + mid + r"[^>]*>"
-    return ElementPattern("<(" + t + ")" + tail, "<" + t + tail)
+    return ElementPattern("<(" + t + r")\b" + mid + r"[^>]*>")
 
 
 def _texts(pat: ElementPattern):
@@ -249,63 +246,23 @@ def _sel_in(
 
 # --------------------------------------------------------------------------
 # Content (parser/content.go:16-113) — selector priority list. Each entry
-# is (needle, lazy regex, balanced pattern): the lowercase literal needle is
-# a C-speed contains() prefilter; the LAZY regex is the vectorized fast
-# path, valid exactly when its captured inner holds no markup (then the
-# first close IS the balanced close); the ElementPattern is the
-# authoritative balanced matcher for everything else. The candidate is kept
-# if its normalized form is ≥ 100 **bytes** (content.go:139-151, Go len()).
+# is (needle, balanced pattern): the lowercase literal needle is a cheap
+# containment prefilter (necessary, not sufficient) for the ElementPattern,
+# the authoritative balanced matcher. The candidate is kept if its
+# normalized form is ≥ 100 **bytes** (content.go:139-151, Go len()).
 # --------------------------------------------------------------------------
 
 
-def _content_entry(
-    needle: str, attr: str | None, tag: str | None
-) -> tuple[str, re.Pattern[str], ElementPattern, re.Pattern[str], bool]:
-    """(needle, lazy, balanced, selfclose, multi). For multi-tag selectors
-    (alternations like div|main|section, and the wildcard itemprop entry)
-    the lazy fast path captures (open tag, inner, close tag) so the
-    vectorized caller can verify the close tag actually matches the open —
-    the first close token the lazy regex accepts may belong to a DIFFERENT
-    element, which the balanced matcher would not close on; fixed-tag
-    selectors keep the cheap single-capture form (their open and close
-    necessarily name the same element). `selfclose` probes for a
-    self-closed open of this selector (<div …/>): such an element is
-    EMPTY under tree construction, so any row containing one defers to
-    the balanced matcher rather than letting the lazy regex read through
-    it."""
-    mid = (r"[^>]*" + attr) if attr else ""
-    close = tag if tag is not None else _TAGNAME
-    tagpat = tag or _TAGNAME
-    multi = tag is None or "|" in tag
-    if multi:
-        # capture open+close tag names so the caller can verify identity
-        lazy = re.compile(
-            "<((?i:" + tagpat + r"))\b" + mid
-            + r"[^>]*>([\s\S]*?)</((?i:" + close + r"))\s*>"
-        )
-    else:
-        # fixed tag: open and close necessarily name the same element —
-        # single capture keeps the vectorized extract on the cheap path
-        lazy = re.compile(
-            "<(?i:" + tagpat + r")\b" + mid
-            + r"[^>]*>([\s\S]*?)</(?i:" + close + r")\s*>"
-        )
-    selfclose = re.compile("<(?i:" + tagpat + r")\b" + mid + r"[^>]*/\s*>")
-    return needle, lazy, _el_re(attr, tag), selfclose, multi
+def _div_class(needle: str, cls: str) -> tuple[str, ElementPattern]:
+    return needle, _el_re(_class_attr(cls), "div")
 
 
-def _div_class(needle: str, cls: str):
-    return _content_entry(needle, _class_attr(cls), "div")
-
-
-def _any_id(needle: str, el_id: str):
-    return _content_entry(needle, _attr_eq("id", el_id), "div|main|section")
+def _any_id(needle: str, el_id: str) -> tuple[str, ElementPattern]:
+    return needle, _el_re(_attr_eq("id", el_id), "div|main|section")
 
 
 # mirrors contentSelectors order, parser/content.go:24-40, then main, body
-CONTENT_PATTERNS: list[
-    tuple[str, re.Pattern[str], ElementPattern, re.Pattern[str], bool]
-] = [
+CONTENT_PATTERNS: list[tuple[str, ElementPattern]] = [
     _div_class("article-body-inner", "article-body-inner"),
     _div_class("skin-entrybody", "skin-entryBody"),
     _div_class("articletext", "articleText"),
@@ -313,15 +270,15 @@ CONTENT_PATTERNS: list[
     _div_class("post-body", "post-body"),
     _div_class("entry-content", "entry-content"),
     _div_class("post_body", "POST_BODY"),
-    _content_entry("<article", None, "article"),
-    _content_entry("itemprop", _attr_eq("itemprop", "articleBody"), None),
+    ("<article", _el_re(None, "article")),
+    ("itemprop", _el_re(_attr_eq("itemprop", "articleBody"))),
     _div_class("post-content", "post-content"),
     _div_class("article-content", "article-content"),
     _any_id("content", "content"),
     _any_id("main-content", "main-content"),
     _div_class("content", "content"),
-    _content_entry("<main", None, "main"),
-    _content_entry("<body", None, "body"),
+    ("<main", _el_re(None, "main")),
+    ("<body", _el_re(None, "body")),
 ]
 
 MIN_CONTENT_BYTES = 100  # content.go:146 — bytes, not runes
@@ -341,7 +298,7 @@ RANK_MARKER = re.compile(r"[１-９一二三四五六七八九十]位：")
 # tree construction drops — STRAY_BLOCK_CLOSE reproduces that.
 BLOCK_TAGS = re.compile(r"<(script|style|iframe)\b[^>]*>[\s\S]*?</\1\s*>", re.I)
 STRAY_BLOCK_CLOSE = re.compile(r"</(?:script|style|iframe)\s*>", re.I)
-# (needle, pattern): the lowercase literal gates the vectorized path;
+# (needle, pattern): the lowercase literal names what each pattern removes;
 # ElementPattern entries remove balanced element spans, plain regexes the
 # void/self-closing forms.
 GLOBAL_REMOVE_PATTERNS: tuple[tuple[str, object], ...] = (
@@ -521,12 +478,11 @@ CATEGORY_CLASS_TEXT = _sel(cls="category")
 # cleanCategory prefixes (category.go:114-141)
 CATEGORY_PREFIXES = ("テーマ：", "テーマ:", "Theme：", "Theme:")
 
-# vectorized prefilter: a row can only yield categories if one of these
+# parse-kernel prefilter: a row can only yield categories if one of these
 # literals appears in its lowercase text (necessary, not sufficient)
 CATEGORY_NEEDLES = tuple(
     sorted({n for n, _ in CATEGORY_SELECTOR_BANKS} | {"ld_blog_vars", "article:section"})
 )
-CATEGORY_ANY_RE = "|".join(re.escape(n) for n in CATEGORY_NEEDLES)
 
 # --------------------------------------------------------------------------
 # Tags (parser/tag.go:17-110) — ALL banks accumulate (union), dedup preserves
@@ -590,7 +546,6 @@ TAG_NEEDLES = tuple(
         | {"ld_blog_vars", "keywords"}
     )
 )
-TAG_ANY_RE = "|".join(re.escape(n) for n in TAG_NEEDLES)
 
 
 def _minimal_cover(needles: tuple[str, ...]) -> tuple[str, ...]:
@@ -598,9 +553,8 @@ def _minimal_cover(needles: tuple[str, ...]) -> tuple[str, ...]:
     containing another needle as a substring is redundant for the GATE
     (any text containing the longer one contains the shorter one). The
     per-bank extractors still check their own full needles; only the
-    batch prefilter uses this. 22 category needles reduce to 13, 27 tag
-    needles to 4 — and N literal scans beat one N-way regex alternation
-    ~3× in pandas (re has no Aho-Corasick)."""
+    per-row prefilter uses this. 22 category needles reduce to 13, 27 tag
+    needles to 4."""
     out: list[str] = []
     for n in sorted(needles, key=len):
         if not any(m in n for m in out):

@@ -16,6 +16,10 @@ tables. Resume rides the commit-marker ledger as well as the slice
 manifests, and each slice manifest carries its commit's summary.
 --table-format parquet keeps the plain per-slice directory fallback. On a cluster the same file is
 submitted unchanged; local runs honor SPARK_GRAFT_CPUS.
+
+Output: one JSON line per slice run (slice_id, rows_in, rows_ok,
+wall_seconds, table_version, commit_summary — read from the slice
+manifests), then one JSON report line for the whole run.
 """
 
 from __future__ import annotations
@@ -89,6 +93,19 @@ def main(argv: list[str] | None = None) -> int:
         resume=args.resume,
         table_format=args.table_format,
     )
+    for m in manifests:  # one line per slice, from its manifest
+        print(
+            json.dumps(
+                {
+                    "slice_id": m.slice_id,
+                    "rows_in": m.rows_in,
+                    "rows_ok": m.rows_ok,
+                    "wall_seconds": round(m.wall_seconds, 3),
+                    "table_version": m.table_version,
+                    "commit_summary": m.commit_summary,
+                }
+            )
+        )
     report = {
         "slices_run": [m.slice_id for m in manifests],
         "rows_in": sum(m.rows_in for m in manifests),

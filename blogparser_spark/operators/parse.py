@@ -1,15 +1,20 @@
-"""The parse stage: one Arrow-vectorized extraction UDF + native post-stages.
+"""The parse stage: one extraction UDF + native post-stages.
 
 The reference rebuilds a DOM three times per document and recompiles its
 regexes per call (parser/parser.go:68, clean_content.go:61, summary.go:102,
 title.go:28); here the text column crosses the JVM↔Python boundary exactly
-once, through a single pandas UDF that applies the module-level compiled
-regex bank from blogparser_spark.functions.patterns. Everything downstream —
-validity gates, status derivation, date parsing, summary truncation, slug,
-first-image selection — is native Column code (whole-stage codegen).
+once, through a single pandas UDF that maps one per-row function over each
+Arrow batch. That function calls the oracle's own extractors
+(blogparser_spark.oracle.pyref, over the module-level compiled regex bank
+in blogparser_spark.functions.patterns) behind per-row literal needle
+gates, so the kernel and the oracle share one implementation of every
+extraction rule. Everything downstream — validity gates, status derivation,
+date parsing, summary truncation, slug, first-image selection — is native
+Column code (whole-stage codegen).
 
-Output contract mirrors the oracle layer (blogparser_spark.oracle.pyref) and
-is asserted equal to it row-by-row in tests/test_parse_stage.py.
+The output is asserted equal to pyref row-by-row in
+tests/test_parse_stage.py, which also checks every needle gate against
+the ungated oracle extractors.
 """
 
 from __future__ import annotations
@@ -56,239 +61,23 @@ EXTRACT_TYPE = StructType(
 )
 
 
-def _unescape_amp_rows(x: pd.Series) -> pd.Series:
-    """Entity-decode only rows that can contain an entity ('&' present) —
-    DOM-sourced values are parser-decoded in the reference (pyref twin uses
-    html.unescape unconditionally; rows without '&' are fixed points)."""
-    import html as _html
-
-    mask = x.notna() & x.str.contains("&", regex=False)
-    if not mask.any():
-        return x
-    return x.where(~mask).combine_first(
-        x.where(mask).map(_html.unescape, na_action="ignore")
-    )
-
-
-def _extract_title_vec(s: pd.Series) -> pd.Series:
-    """Vectorized 5-level priority chain (parser/title.go:18-73). Meta
-    attribute values and element text are entity-decoded (goquery reads
-    them post-parse); the ld_blog_vars capture is <script> raw text, which
-    HTML parsing does not decode."""
-    empty = pd.Series(pd.NA, index=s.index, dtype="object")
-
-    def nz(x: pd.Series) -> pd.Series:
-        # treat whitespace-only captures as missing so the chain falls through
-        stripped = x.str.strip()
-        return x.where(stripped.notna() & (stripped != ""))
-
-    ld = nz(s.str.extract(P.TITLE_LD_BLOG_VARS, expand=False).where(
-        s.str.contains(P.LD_BLOG_VARS_MARKER, regex=False)
-    ))
-    og = _unescape_amp_rows(
-        nz(s.str.extract(P.TITLE_OG_A, expand=False)).combine_first(
-            nz(s.str.extract(P.TITLE_OG_B, expand=False))
-        )
-    )
-    h1 = nz(
-        _unescape_amp_rows(
-            s.str.extract(P.TITLE_H1, expand=False).str.replace(
-                P.STRIP_TAGS, "", regex=True
-            )
-        ).str.strip()
-    )
-    title_tag = nz(
-        _unescape_amp_rows(
-            s.str.extract(P.TITLE_TAG, expand=False).str.replace(
-                P.STRIP_TAGS, "", regex=True
-            )
-        ).str.strip()
-    )
-    meta = _unescape_amp_rows(
-        nz(s.str.extract(P.TITLE_META_NAME_A, expand=False)).combine_first(
-            nz(s.str.extract(P.TITLE_META_NAME_B, expand=False))
-        )
-    )
-    return empty.combine_first(ld).combine_first(og).combine_first(h1).combine_first(
-        title_tag
-    ).combine_first(meta)
-
-
-def _clean_title_vec(s: pd.Series) -> pd.Series:
-    """Vectorized cleanTitle (parser/title.go:76-87)."""
-    c = s.str.replace("\n", " ", regex=False)
-    c = c.str.replace(P.WS_RUN, " ", regex=True).str.strip()
-    c = c.str.replace('"', '\\"', regex=False)
-    c = c.str.replace(P.SITE_NAME_SUFFIX, "", regex=False)
-    return c.str.strip()
-
-
-# a line-edge blank mid-string is adjacent to a \n; string-edge blanks are
-# equivalently removed by the final strip, so literal probes cover the
-# (?m)^[ \t\f\v]+|[ \t\f\v]+$ pass exactly
-_EDGE_BLANK_LITERALS = tuple(
-    b + "\n" for b in " \t\f\v"
-) + tuple("\n" + b for b in " \t\f\v")
-
-
-def _gated_replace(c: pd.Series, mask: pd.Series, pat: str, repl: str) -> pd.Series:
-    if not mask.any():
-        return c
-    return c.where(mask).str.replace(pat, repl, regex=True).combine_first(c)
-
-
-def _normalize_html_vec(s: pd.Series) -> pd.Series:
-    """Vectorized normalizeHTML (parser/content.go:116-136).
-
-    Each regex pass is gated on a literal-contains probe (memchr speed;
-    the full-series regex subs cost ~25x more than the probes and trip on
-    ~0% of real candidate rows). Gates test the CURRENT value in sequence,
-    so a pass that introduces the next pass's trigger (\\r\\r -> \\n\\n,
-    \\r + blank -> line-edge blank) still cascades correctly."""
-    c = s
-    m = c.str.contains("\r", regex=False).eq(True)
-    if m.any():
-        c = c.where(m).str.replace(r"\r\n?", "\n", regex=True).combine_first(c)
-    m = pd.Series(False, index=c.index)
-    for lit in _EDGE_BLANK_LITERALS:
-        m = m | c.str.contains(lit, regex=False).eq(True)
-    c = _gated_replace(c, m, r"(?m)^[ \t\f\v]+|[ \t\f\v]+$", "")
-    m = c.str.contains("\n\n", regex=False).eq(True)
-    c = _gated_replace(c, m, r"\n{2,}", "\n")
-    return c.str.strip()
-
-
-def _extract_content_vec(s: pd.Series, lower: pd.Series | None = None) -> pd.Series:
-    """Vectorized selector-priority content extraction with the per-candidate
-    normalize + ≥100-**byte** gate (parser/content.go:16-113).
-
-    Each pattern runs only on rows whose lowercase text contains its literal
-    needle (C-speed scan) — at ~10× the speed of letting the backtracking
-    regex discover the absence itself. The lazy regex is the vectorized
-    fast path, valid exactly when its captured inner holds no markup, the
-    close tag it stopped at names the SAME element the open tag opened,
-    and the row holds no self-closed open of the selector (such an element
-    is empty; the lazy regex would read through it). Any other row — inner
-    with markup (nested same-name tag could truncate), open/close tag
-    mismatch (alternation and wildcard selectors), self-closed opens, or
-    an open with no close at all (unclosed container: the DOM auto-closes
-    at end of body) — recomputes through the BALANCED ElementPattern.
-    Priority order is unchanged: a row is settled by the first pattern
-    that yields a valid candidate."""
-    if lower is None:
-        lower = s.str.lower()
-    out = pd.Series(pd.NA, index=s.index, dtype="object")
-    has_markup = lower.str.contains("<", regex=False)
-    # one cheap pregate for the per-pattern self-close probes: a row
-    # without "/ >" anywhere cannot contain a self-closed open of ANY
-    # selector, so the pattern-specific regex only runs on rows that might
-    has_slashgt = lower.str.contains(r"/\s*>", regex=True)
-    for needle, lazy, ep, selfclose, multi in P.CONTENT_PATTERNS:
-        need = out.isna() & has_markup & lower.str.contains(needle, regex=False)
-        if not need.any():
-            continue
-        sub = s.where(need)
-        if multi:
-            # alternation/wildcard tags capture (open, inner, close): the
-            # lazy close token must CLOSE the lazy open — the first
-            # acceptable close may belong to another element entirely
-            # (<div id=…>…</main>) — balanced semantics defer
-            ext = sub.str.extract(lazy)
-            raw = ext[1]
-            suspect = raw.str.contains("<", regex=False).eq(True) | (
-                ext[0].str.lower().ne(ext[2].str.lower()) & raw.notna()
-            )
-        else:
-            raw = sub.str.extract(lazy, expand=False)
-            suspect = raw.str.contains("<", regex=False).eq(True)
-        # a self-closed open of this selector is an EMPTY element; the lazy
-        # regex would read through it to an unrelated close tag
-        sc = need & has_slashgt
-        if sc.any():
-            suspect = suspect | (sc & sub.str.contains(selfclose).eq(True))
-        na = raw.isna() & need
-        if na.any():  # unclosed-container probe only when a row needs it
-            suspect = suspect | (na & sub.str.contains(ep.probe).eq(True))
-        if suspect.any():
-            fixed = sub.where(suspect).map(ep.search_inner, na_action="ignore")
-            raw = raw.where(~suspect).combine_first(fixed)
-        cand = _normalize_html_vec(raw)
-        ok = cand.notna() & (cand.str.encode("utf-8").str.len() >= P.MIN_CONTENT_BYTES)
-        out = out.combine_first(cand.where(ok))
-    # plain-text fallback: payloads with no markup at all are their own body
-    need = out.isna() & ~has_markup
-    if need.any():
-        cand = _normalize_html_vec(s.where(need))
-        ok = cand.notna() & (cand.str.encode("utf-8").str.len() >= P.MIN_CONTENT_BYTES)
-        out = out.combine_first(cand.where(ok))
-    return out
-
-
-def _clean_content_vec(s: pd.Series) -> pd.Series:
-    """Vectorized CleanContent bank (parser/clean_content.go:13-48,82-129):
-    regex deletions, the global removeTags bank (needle-gated; balanced
-    element removals run row-level only on rows containing the class
-    literal), the ameblo-scoped child removals (only inside .skin-entryBody
-    containers, on only the rows that have one), and the Go-renderer entity
-    re-encoding of text nodes. Rows without markup, rank markers, or
-    entity-relevant characters (most tool-output payloads) skip every
-    pass — the bank can only be a no-op there."""
-    dirty = s.str.contains(r"[<>&'\"]", regex=True) | s.str.contains(
-        "位：", regex=False
-    )
-    sub = s.where(dirty)
-    # tag/comment/rank deletions can only act on rows with markup or a rank
-    # marker; quote/ampersand-only rows (most tool-output payloads) take
-    # ONLY the entity re-encode pass below, not four no-op regex scans
-    markupish = sub.str.contains("<", regex=False).eq(True) | sub.str.contains(
-        "位：", regex=False
-    ).eq(True)
-    m = sub.where(markupish)
-    c = m.str.replace(P.HTML_COMMENT, "", regex=True)
-    c = c.str.replace(P.RANK_MARKER, "", regex=True)
-    c = c.str.replace(P.BLOCK_TAGS, "", regex=True)
-    c = c.str.replace(P.STRAY_BLOCK_CLOSE, "", regex=True)
-    c = c.combine_first(sub)  # dirty-but-markup-free rows pass through
-    # needle gates from the CURRENT text, not the original: a deletion can
-    # splice a needle into existence ('goo<!-- x -->gle-auto-placed' becomes
-    # 'google-auto-placed' after comment removal), and the oracle applies
-    # the bank to the post-removal text — so gate on `c` and refresh the
-    # lowercase view of only the rows each pattern touched
-    low = c.str.lower()
-    for needle, pat in P.GLOBAL_REMOVE_PATTERNS:
-        mask = low.str.contains(needle, regex=False).eq(True)
-        if not mask.any():
-            continue
-        if isinstance(pat, P.ElementPattern):
-            c = c.where(~mask).combine_first(
-                c.where(mask).map(lambda x, p=pat: p.sub("", x), na_action="ignore")
-            )
-        else:
-            c = c.where(~mask).combine_first(
-                c.where(mask).str.replace(pat, "", regex=True)
-            )
-        low = low.where(~mask).combine_first(c.where(mask).str.lower())
-    # .eq(True): NA-body rows (non-dirty) → False without dtype downcasting
-    # (`low` tracks c row-for-row through the loop above, so no re-lowercase)
-    scoped = low.str.contains("skin-entrybody", regex=False).eq(True)
-    if scoped.any():
-        c = c.where(~scoped).combine_first(
-            c.where(scoped).map(P.scrub_ameblo, na_action="ignore")
-        )
-    # renderer re-serialization: auto-close unclosed tags (rows with
-    # markup), then entity re-encode / attr-quote normalize (rows holding
-    # an entity-relevant character — the dirty gate admits exactly those)
-    tagged = c.str.contains("<", regex=False).eq(True)
-    if tagged.any():
-        c = c.where(~tagged).combine_first(
-            c.where(tagged).map(P.close_unclosed_tags, na_action="ignore")
-        )
-    reenc = c.str.contains(r"[&'\"<>]", regex=True).eq(True)
-    if reenc.any():
-        c = c.where(~reenc).combine_first(
-            c.where(reenc).map(P.reencode_entities, na_action="ignore")
-        )
-    return _normalize_html_vec(c).combine_first(_normalize_html_vec(s.where(~dirty)))
+def _extract_content(text: str, lower: str) -> str | None:
+    """pyref.extract_content behind literal needle gates: a selector's
+    balanced matcher runs only on text whose lowercase form contains its
+    needle (necessary, not sufficient), and no selector can match text
+    without '<', which takes the plain-text fallback instead. The oracle
+    stays ungated, so the parity tests check every gate."""
+    if "<" not in text:
+        candidate = pyref.normalize_html(text)
+        return candidate if pyref.is_valid_content(candidate) else None
+    for needle, ep in P.CONTENT_PATTERNS:
+        if needle in lower:
+            inner = ep.search_inner(text)
+            if inner is not None:
+                candidate = pyref.normalize_html(inner)
+                if pyref.is_valid_content(candidate):
+                    return candidate
+    return None
 
 
 def _date_candidates(text: str) -> list[str]:
@@ -330,58 +119,48 @@ def _images_rows(text: str) -> list[dict]:
     ]
 
 
+# per-row literal prefilters for the list-valued extractors. The
+# category/tag gates are the union of every selector bank's needle
+# (patterns.CATEGORY_GATE_NEEDLES / TAG_GATE_NEEDLES); the extractors
+# re-check per-bank needles so only the banks that can fire pay their
+# regex. "date" covers pubdate/datePublished/DATE_META_NAME; the OGP meta
+# key article:published_time contains neither literal, so it needs its own
+# needle or its rows never reach _date_candidates.
+_DATE_NEEDLES = ("date", "<time", "published_time")
+_IMAGE_NEEDLES = ("og:image", "twitter:image", "<img")
+
+
+def _extract_row(text: str) -> tuple:
+    """One payload → one EXTRACT_TYPE row, through the oracle's own
+    extractors (field order follows EXTRACT_TYPE)."""
+    lower = text.lower()
+    title = pyref.extract_title(text)
+    content = _extract_content(text, lower)
+    return (
+        None if title is None else pyref.clean_title(title),
+        title is not None,
+        content is not None,
+        None if content is None else pyref.clean_content(content),
+        pyref.extract_categories(text)
+        if any(n in lower for n in P.CATEGORY_GATE_NEEDLES)
+        else [],
+        pyref.extract_tags(text) if any(n in lower for n in P.TAG_GATE_NEEDLES) else [],
+        _date_candidates(text) if any(n in lower for n in _DATE_NEEDLES) else [],
+        _images_rows(text) if any(n in lower for n in _IMAGE_NEEDLES) else [],
+    )
+
+
 @F.pandas_udf(EXTRACT_TYPE)
 def extract_udf(texts: pd.Series) -> pd.DataFrame:
-    """The single JVM↔Python boundary of the parse stage."""
+    """The single JVM↔Python boundary of the parse stage: one per-row
+    function mapped over the Arrow batch. A per-row substring test skips
+    each extractor a row cannot feed, where whole-batch pandas passes
+    would scan every row for patterns that fire on few."""
     # per-record error isolation (parser.go's per-file loop never aborts the
-    # run): a NULL text must ROUTE (no_title) rather than poison the Arrow
-    # batch — None propagates NA through the boolean gates below and
-    # `~NA` raises, killing the whole task for one bad row
+    # run): a NULL text must ROUTE (no_title) rather than fail the batch
     texts = texts.fillna("")
-    lower = texts.str.lower()
-    title_raw = _extract_title_vec(texts)
-    title = _clean_title_vec(title_raw)
-    body_raw = _extract_content_vec(texts, lower)
-    body = _clean_content_vec(body_raw)
-
-    # list-valued extractions: batch python over the Arrow batch; literal
-    # prefilters skip rows that can't match. The category/tag gates are the
-    # union of every selector bank's needle (patterns.CATEGORY_NEEDLES /
-    # TAG_NEEDLES); the extractors re-check per-bank needles so only the
-    # banks that can fire pay their regex.
-
-    def any_of(*needles: str) -> pd.Series:
-        m = lower.str.contains(needles[0], regex=False)
-        for n in needles[1:]:
-            m = m | lower.str.contains(n, regex=False)
-        return m
-
-    has_cat = any_of(*P.CATEGORY_GATE_NEEDLES)
-    has_tag = any_of(*P.TAG_GATE_NEEDLES)
-    # "date" covers pubdate/datePublished/DATE_META_NAME; the OGP meta key
-    # article:published_time contains neither literal, so it needs its own
-    # needle or its rows never reach _date_candidates
-    has_date = any_of("date", "<time", "published_time")
-    has_img = any_of("og:image", "twitter:image", "<img")
-
-    categories = [
-        pyref.extract_categories(t) if h else [] for t, h in zip(texts, has_cat)
-    ]
-    tags = [pyref.extract_tags(t) if h else [] for t, h in zip(texts, has_tag)]
-    dates = [_date_candidates(t) if h else [] for t, h in zip(texts, has_date)]
-    images = [_images_rows(t) if h else [] for t, h in zip(texts, has_img)]
-
-    return pd.DataFrame(
-        {
-            "title": title,
-            "title_found": title_raw.notna(),
-            "content_found": body_raw.notna(),
-            "body": body,
-            "categories": categories,
-            "tags": tags,
-            "date_candidates": dates,
-            "images": images,
-        }
+    return pd.DataFrame.from_records(
+        [_extract_row(t) for t in texts], columns=EXTRACT_TYPE.names
     )
 
 

@@ -3396,6 +3396,14 @@ def expire_snapshots(
     keep_files: set[str] = set()
     for st in states.values():
         keep_files |= set(st["data"]) | set(st["deletes"])
+    # a fast_forward commit re-adds a branch commit's chunk refs verbatim,
+    # so a chunk manifest can outlive the commit that wrote it
+    keep_manifests = {
+        r["manifest"]
+        for v in retained
+        for r in _read_commit(table, v).get("added_data", [])
+        if "manifest" in r
+    }
 
     removed = 0
     for v in expired:
@@ -3405,9 +3413,9 @@ def expire_snapshots(
                 os.unlink(e["path"])
                 removed += 1
         for r in c.get("added_data", []):
-            # chunk manifests are per-commit: expired commit → dead chunk
-            # (its still-live files were flattened into the rebase base)
-            if "manifest" in r:
+            # a chunk no retained commit references is dead (its
+            # still-live files were flattened into the rebase base)
+            if "manifest" in r and r["manifest"] not in keep_manifests:
                 mp = os.path.join(table, r["manifest"])
                 if os.path.exists(mp):
                     os.unlink(mp)

@@ -1,8 +1,10 @@
 """Pure-Python oracle: row-at-a-time ports of the reference's semantics.
 
 Each function mirrors one operator from SURVEY.md §2 (Go source cited per
-function). These are the ground truth the vectorized Spark pipeline is
-asserted against in tests — they are never used inside Spark jobs.
+function). They are the ground truth the Spark pipeline is asserted against
+in tests, and the parse UDF (blogparser_spark.operators.parse) calls the
+extractors directly on each row, behind literal needle gates of its own.
+The functions here stay ungated, so the parity tests check every gate.
 
 Timezone convention: aware datetimes are normalized to naive UTC so they
 compare exactly against Spark TimestampType values under
@@ -88,7 +90,7 @@ def extract_content(text: str) -> str | None:
     same-name tag inside the container no longer truncates the candidate,
     parser/content.go:42-66); per-candidate normalize + byte-length gate
     (parser/content.go:16-113)."""
-    for _needle, _lazy, ep, _selfclose, _multi in P.CONTENT_PATTERNS:
+    for _needle, ep in P.CONTENT_PATTERNS:
         inner = ep.search_inner(text)
         if inner is not None:
             candidate = normalize_html(inner)

@@ -2424,7 +2424,7 @@ def pipeline_sink_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     route to no_title; v0/v1 extract the document text as body, so the
     status reduces to the ≥100-byte gate on the normalized text (the
     documents corpus contains no markup, so CleanContent is the identity
-    there); role/tool dims are the enrich broadcast lookups."""
+    there); role/tool dims are the enrich literal-map lookups."""
     from blogparser_spark.operators.enrich import enrich
     from blogparser_spark.operators.parse import parse_stage
 

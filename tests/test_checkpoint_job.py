@@ -270,6 +270,30 @@ def test_job_tablelog_sink_matches_parquet_and_resumes(spark, tmp_path, capsys):
     assert r3["slices_run"] == [] and tl.current_version(table) == v1
 
 
+def test_job_prints_one_line_per_slice(spark, tmp_path, capsys):
+    """The job prints one JSON line per slice (from its manifest) before
+    the run report: rows in and ok, wall time, and the slice's tablelog
+    commit with its summary."""
+    from blogparser_spark import job
+    from blogparser_spark.operators import tablelog as tl
+
+    inp = _write_input(spark, tmp_path)
+    out = str(tmp_path / "out_lines")
+    assert job.main(["--input", inp, "--output", out, "--slices", "2"]) == 0
+    *lines, report = [json.loads(x) for x in capsys.readouterr().out.strip().splitlines()]
+    assert [x["slice_id"] for x in lines] == [0, 1]
+    assert {k for x in lines for k in x} == {
+        "slice_id", "rows_in", "rows_ok", "wall_seconds", "table_version", "commit_summary",
+    }
+    assert sum(x["rows_in"] for x in lines) == report["rows_in"] == spark.read.parquet(inp).count()
+    table = tl.read_snapshot(spark, out + "/table")
+    assert sum(x["rows_ok"] for x in lines) == table.filter(F.col("parse_status") == "ok").count()
+    assert sorted(x["table_version"] for x in lines) == [1, 2]
+    assert all(x["wall_seconds"] > 0 for x in lines)
+    for x in lines:
+        assert x["commit_summary"]["added_records"] == x["rows_in"]
+
+
 def test_slice_manifest_carries_commit_summary(spark, tmp_path):
     """Each tablelog slice manifest carries its commit's summary: the
     files, records and bytes the commit added match the table's manifest

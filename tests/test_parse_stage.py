@@ -1,8 +1,13 @@
-"""Parity: the vectorized Spark parse stage vs the pure-Python oracle,
-row by row under stable (conv_id, turn_idx) ordering (the BASELINE.json
-per-turn text-equality invariant)."""
+"""Parity: the Spark parse stage vs the pure-Python oracle, row by row
+under stable (conv_id, turn_idx) ordering (the BASELINE.json per-turn
+text-equality invariant), and the parse kernel's needle gates vs the
+ungated oracle extractors, in process."""
 
 from __future__ import annotations
+
+from hypothesis import given, settings
+from hypothesis import strategies as st
+from test_fuzz_parity import CONTAINERS, FRAGMENTS
 
 from blogparser_spark.oracle.pyref import parse_record
 
@@ -70,13 +75,13 @@ def test_stable_turn_ordering(parsed, transcripts):
 
 
 def test_content_fast_path_defers_to_balanced_semantics():
-    """The vectorized lazy fast path must agree with the balanced oracle on
-    its three blind spots: an alternation selector closed by a DIFFERENT
-    tag, the wildcard itemprop selector closed by a different tag, and a
-    self-closed open followed by a later real close."""
+    """The parse kernel must agree with the balanced oracle on the payloads
+    a lazy regex reads wrongly: an alternation selector closed by a
+    DIFFERENT tag, the wildcard itemprop selector closed by a different
+    tag, and a self-closed open followed by a later real close."""
     import pandas as pd
 
-    from blogparser_spark.operators.parse import _extract_content_vec
+    from blogparser_spark.operators.parse import extract_udf
     from blogparser_spark.oracle import pyref
 
     pad = "word " * 40  # ≥100 bytes of plain body
@@ -86,11 +91,12 @@ def test_content_fast_path_defers_to_balanced_semantics():
         f'<div class="entry-content"/>{pad}</div>extra {pad}',
         f"<DIV id='content'>{pad}</SECTION>cased mismatch {pad}",
     ]
-    got = _extract_content_vec(pd.Series(payloads))
+    got = extract_udf.func(pd.Series(payloads))
     for i, p in enumerate(payloads):
         want = pyref.extract_content(p)
-        g = got.iloc[i]
-        assert (pd.isna(g) and want is None) or g == want, (i, g, want)
+        g = got["body"].iloc[i]
+        assert got["content_found"].iloc[i] == (want is not None), (i, want)
+        assert (pd.isna(g) and want is None) or g == pyref.clean_content(want), (i, g, want)
 
 
 def test_null_text_routes_per_record(spark):
@@ -136,11 +142,11 @@ def test_published_time_only_date_reaches_extractor(spark):
 def test_clean_content_needle_spliced_by_comment_removal():
     """Comment removal can splice a remove-bank needle into existence
     ('goo<!-- x -->gle-auto-placed' → 'google-auto-placed'); the oracle
-    applies the bank AFTER comment removal, so the vectorized gate must
-    too — gating on the original text skips the removal."""
+    applies the bank AFTER comment removal, so the kernel must too —
+    gating on the original text skips the removal."""
     import pandas as pd
 
-    from blogparser_spark.operators.parse import _clean_content_vec
+    from blogparser_spark.operators.parse import extract_udf
     from blogparser_spark.oracle import pyref
 
     pad = "keep " * 30
@@ -149,8 +155,111 @@ def test_clean_content_needle_spliced_by_comment_removal():
         f'<div class="google-auto-placed">AD</div>{pad}',  # plain needle
         pad,  # bank-free row
     ]
-    got = _clean_content_vec(pd.Series(payloads))
+    # each payload is the whole inner of an <article> container, so the
+    # kernel's content extraction hands it to the cleaning bank as is
+    got = extract_udf.func(pd.Series([f"<article>{p}</article>" for p in payloads]))["body"]
     for i, p in enumerate(payloads):
         want = pyref.clean_content(p)
         assert got.iloc[i] == want, (i, got.iloc[i], want)
     assert "AD" not in got.iloc[0]
+
+
+# fragments and containers that reach the needle gates the fuzz bank
+# leaves uncovered, so that dropping any needle from a kernel gate changes
+# the kernel's output on some one-fragment payload. Four gate needles
+# cannot be isolated: their banks match only attribute values that hold
+# another needle of the same gate (rel='category…', the two ='theme'
+# attributes; an ld_blog_vars tag block always holds "tags").
+GATE_FRAGMENTS = [
+    '<a rel="category">{w}rel</a>',
+    '<div class="cat-links"><a>{w}cl</a></div>',
+    '<div class="post-categories"><a>{w}pc</a></div>',
+    '<div class="entry-categories"><a>{w}ec</a></div>',
+    '<div data-analytics-index-name="theme"><span>{w}an</span></div>',
+    '<span data-uranus-component="theme">{w}ur</span>',
+    '<div class="label"><a>{w}lb</a></div>',
+    '<meta property="article:published_time" content="2023-05-01T10:00:00Z">',
+    '<meta name="twitter:image" content="https://e.com/t{n}.png">',
+    "<script>ld_blog_vars = {{ categories : [ {{ name : '{w}ldc' }} ] }};</script>",
+    "<time>2023-07-01</time>",
+]
+GATE_CONTAINERS = [
+    '<div class="skin-entryBody">{body}</div>',
+    '<div class="articleText">{body}</div>',
+    '<div class="post-main">{body}</div>',
+    '<div class="post-body">{body}</div>',
+    '<div class="POST_BODY">{body}</div>',
+    '<div class="post-content">{body}</div>',
+    '<div class="article-content">{body}</div>',
+    '<section id="main-content">{body}</section>',
+    '<div class="content">{body}</div>',
+    "<body>{body}</body>",
+]
+
+
+def _fragment(bank: list[str]):
+    return st.builds(
+        lambda f, w, n, upper: f.format(w=w, n=n).upper() if upper else f.format(w=w, n=n),
+        st.sampled_from(bank),
+        st.sampled_from("alpha beta gamma delta".split()),
+        st.integers(0, 99),
+        st.booleans(),
+    )
+
+
+_FRAGMENT = _fragment(FRAGMENTS + GATE_FRAGMENTS)
+_PAYLOAD = st.one_of(
+    st.builds(
+        lambda head, container, body: "".join(head) + container.format(body="".join(body)),
+        st.lists(_FRAGMENT, max_size=5),
+        st.sampled_from(CONTAINERS + GATE_CONTAINERS),
+        st.lists(_FRAGMENT, max_size=5),
+    ),
+    # markup-free payloads take the kernel's plain-text branch
+    st.lists(_fragment([f for f in FRAGMENTS if "<" not in f]), min_size=1).map("".join),
+)
+
+
+def _assert_kernel_matches_ungated_oracle(payloads: list[str]) -> None:
+    import pandas as pd
+
+    from blogparser_spark.operators.parse import _date_candidates, extract_udf
+    from blogparser_spark.oracle import pyref
+
+    got = extract_udf.func(pd.Series(payloads)).to_dict("records")
+    for text, g in zip(payloads, got):
+        title = pyref.extract_title(text)
+        content = pyref.extract_content(text)
+        want = {
+            "title": None if title is None else pyref.clean_title(title),
+            "title_found": title is not None,
+            "content_found": content is not None,
+            "body": None if content is None else pyref.clean_content(content),
+            "categories": pyref.extract_categories(text),
+            "tags": pyref.extract_tags(text),
+            "date_candidates": _date_candidates(text),
+            "images": [vars(im) for im in pyref.extract_images(text)],
+        }
+        assert g == want, text
+
+
+def test_kernel_gates_match_ungated_oracle_one_fragment():
+    """Every field of the parse kernel equals the UNGATED oracle
+    extractors on every single fragment, alone and inside every content
+    container (each payload has one way into each gate, so a needle the
+    kernel dropped shows here): each per-row needle gate is a necessary
+    condition, never a filter that drops a match."""
+    pad = " alpha" * 20
+    frags = [f.format(w="beta", n=7) for f in FRAGMENTS + GATE_FRAGMENTS]
+    payloads = [
+        c.format(body=f + pad) for f in frags for c in CONTAINERS + GATE_CONTAINERS
+    ] + frags
+    _assert_kernel_matches_ungated_oracle(payloads + [p.upper() for p in payloads])
+
+
+@settings(max_examples=150, deadline=None)
+@given(st.lists(_PAYLOAD, min_size=1, max_size=6))
+def test_kernel_gates_match_ungated_oracle(payloads):
+    """The same equality on random mixes of fuzz fragments, containers and
+    markup-free text."""
+    _assert_kernel_matches_ungated_oracle(payloads)

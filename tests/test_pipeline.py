@@ -70,6 +70,26 @@ def test_null_bucket(enriched):
     assert enriched.filter(F.col("tool_category") == "unknown").count() > 0
 
 
+@pytest.mark.parametrize("ansi", ["true", "false"])
+def test_enrich_equals_dict_lookup(spark, ansi):
+    """Known, unknown, NULL and case-mismatched keys read exactly like a
+    dict lookup with an 'unknown' default, with ANSI mode on and off."""
+    tools = [k for k, _ in TOOL_CATEGORY] + ["mystery-tool", "Python", "", None]
+    roles = [k for k, _ in ROLE_CHANNEL] + ["robot", "USER", None]
+    rows = [(i, t, r) for i, (t, r) in enumerate((t, r) for t in tools for r in roles)]
+    prev = spark.conf.get("spark.sql.ansi.enabled")
+    spark.conf.set("spark.sql.ansi.enabled", ansi)
+    try:
+        df = spark.createDataFrame(rows, "i int, tool string, role string")
+        got = {r["i"]: (r["tool_category"], r["channel"]) for r in enrich(df).collect()}
+    finally:
+        spark.conf.set("spark.sql.ansi.enabled", prev)
+    tool_map, role_map = dict(TOOL_CATEGORY), dict(ROLE_CHANNEL)
+    assert got == {
+        i: (tool_map.get(t, "unknown"), role_map.get(r, "unknown")) for i, t, r in rows
+    }
+
+
 def test_routed_row_set_equality(enriched, transcripts, tmp_path, spark):
     """Write the fan-out, read every sink back, assert the union equals the
     input row set exactly (exceptAll both directions empty)."""

@@ -1,6 +1,7 @@
 """Physical-plan assertions — the scale contract, checked in CI:
 partition pruning on sink reads, ONE Python boundary in the parse stage,
-broadcast (not shuffle) joins for dims, parquet filter pushdown."""
+no join or exchange for the transcript dims, broadcast (not shuffle) joins
+for table dims, parquet filter pushdown."""
 
 from __future__ import annotations
 
@@ -19,13 +20,16 @@ def test_single_python_boundary_in_pipeline(spark, transcripts):
     )
 
 
-def test_dims_broadcast_not_shuffled(spark, transcripts):
+def test_enrich_adds_no_join_or_exchange(spark, transcripts):
+    """The transcript dims are literal-map projections: the parse→enrich
+    plan holds no join of any kind and no Exchange, so the fact side never
+    moves (not even a broadcast of the dim side)."""
     from blogparser_spark.operators.enrich import enrich
     from blogparser_spark.operators.parse import parse_stage
 
     plan = _plan(enrich(parse_stage(transcripts)))
-    assert plan.count("BroadcastHashJoin") == 2
-    assert "SortMergeJoin" not in plan
+    assert "Join" not in plan
+    assert "Exchange" not in plan
 
 
 def test_sink_read_partition_pruning(spark, transcripts, tmp_path):

@@ -2144,3 +2144,29 @@ def test_expiry_flattens_expired_chunked_commits(spark, tmp_path):
     plan = tl.plan_scan(t, {"k": ("between", 0, 10)})
     assert plan["n_chunks_total"] == 0 and len(plan["paths"]) >= 1
     assert tl.scan_between(spark, t, "k", 0, 10).count() == 11
+
+
+def test_expire_keeps_chunk_manifests_a_fast_forward_still_uses(spark, tmp_path):
+    """fast_forward publishes a chunked branch commit's chunk refs as they
+    are, so once the branch is dropped and its commit expires, the
+    retained fast-forward commit still references those mchunk files:
+    expiry must keep them, and the table must still read."""
+    t = str(tmp_path / "ff_chunks")
+    tl.append(spark, t, _batch(spark, 0, 10))  # v1
+    tl.create_tag(t, "v1")
+    tl.create_branch(t, "b")
+    tl.append(
+        spark, t, _batch(spark, 100, 140).repartition(4), branch="b",
+        manifest_chunk_files=2,
+    )  # v2, chunked
+    tl.fast_forward(t, "b")  # v3 carries v2's chunk refs
+    tl.drop_ref(t, "b")
+    tl.append(spark, t, _batch(spark, 10, 20))  # v4
+    res = tl.expire_snapshots(t, keep_last=2)  # retains {3, 4} + tag v1
+    assert res["versions_removed"] == 1  # only v2
+    want = list(range(20)) + list(range(100, 140))
+    assert _ids(tl.read_snapshot(spark, t)) == want
+    assert _ids(tl.read_snapshot(spark, t, version=3)) == list(range(10)) + list(
+        range(100, 140)
+    )
+    assert tl.plan_scan(t, {"event_id": ("=", 120)})["paths"]
