@@ -2,7 +2,7 @@
 
 entry(spark)  — flagship parse→enrich→route→aggregate over sf0.001.
 queries()     — one callable per implemented operator family
-                (SURVEY.md §2 + dataops), (spark, sf_dir) -> DataFrame.
+                (see blogparser_spark/queries.py), (spark, sf_dir) -> DataFrame.
 oracle_sql()  — exact DuckDB SQL twin for each query (same column names,
                 floats rounded both sides, arrays joined to strings).
 """

@@ -2435,40 +2435,8 @@ def pipeline_sink_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ===========================================================================
-# Temporal join + repetition quality (round-3 additions)
+# Repetition quality (round-3 additions)
 # ===========================================================================
-
-
-@_q(
-    "events_asof_enrich",
-    """
-    WITH cfg0 AS (
-      SELECT user_id, ts, round(value, 6) AS cfg_value,
-             row_number() OVER (PARTITION BY user_id, ts ORDER BY event_id DESC) AS rn
-      FROM events WHERE event_id % 13 = 0
-    ), cfg AS (SELECT user_id, ts, cfg_value FROM cfg0 WHERE rn = 1)
-    SELECT e.event_id, e.user_id, e.ts, c.ts AS asof_ts, c.cfg_value
-    FROM events e ASOF LEFT JOIN cfg c
-      ON e.user_id = c.user_id AND e.ts >= c.ts
-    """,
-)
-def events_asof_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """As-of temporal join: every event picks up the most recent "config"
-    row (a deterministic sub-stream of events) at or before its timestamp,
-    per user. The union+window form costs ONE shuffle on user_id — no
-    (event × config) pair materialization — and its tie semantics
-    (right row at exactly left.ts is visible) are DuckDB's ASOF JOIN
-    semantics, which is the oracle."""
-    from blogparser_spark.operators.asof import asof_join, latest_per_key_ts
-
-    e = _events(spark, sf_dir)
-    cfg = e.filter(F.col("event_id") % 13 == 0).select(
-        "user_id", "ts", F.round("value", 6).alias("cfg_value"), "event_id"
-    )
-    cfg = latest_per_key_ts(cfg, ["user_id"], "ts", "event_id").drop("event_id")
-    return asof_join(
-        e.select("event_id", "user_id", "ts"), cfg, ["user_id"], "ts"
-    ).select("event_id", "user_id", "ts", "asof_ts", "cfg_value")
 
 
 @_q(
@@ -3411,54 +3379,6 @@ def dd_quantile_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = _docs(spark, sf_dir)
     hist = sketches.dd_histogram(d, F.col("n_chars"), ("lang",))
     return sketches.dd_quantiles(hist, (0.5, 0.9, 0.99), ("lang",))
-
-
-@_q(
-    "campaign_attribution",
-    """
-    WITH c AS (
-      SELECT i AS campaign_id,
-        TIMESTAMP '2024-01-01' + i * INTERVAL 3 DAY AS start_ts,
-        TIMESTAMP '2024-01-01' + i * INTERVAL 3 DAY + INTERVAL 4 DAY AS end_ts
-      FROM (SELECT unnest(range(10)) AS i)
-    )
-    SELECT campaign_id, count(*)::BIGINT AS n_events,
-      CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS total_value
-    FROM events e JOIN c ON e.ts BETWEEN c.start_ts AND c.end_ts
-    GROUP BY campaign_id
-    """,
-)
-def campaign_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Point-in-interval range join (asof.range_join_points_in_intervals):
-    10 deterministic OVERLAPPING campaign windows (3-day stride, 4-day
-    length — boundary events attribute to two campaigns) joined to events
-    via the bucketed interval join — intervals explode into day buckets,
-    each event equi-joins on its ONE bucket, the exact BETWEEN filters —
-    never the nested-loop inequality join. Decimal value sums for exact
-    cross-engine equality."""
-    from blogparser_spark.operators.asof import range_join_points_in_intervals
-
-    e = _events(spark, sf_dir)
-    ts_type = e.schema["ts"].dataType
-    base = 1704067200  # 2024-01-01 00:00:00 UTC
-    camps = spark.range(10).select(
-        F.col("id").alias("campaign_id"),
-        F.timestamp_seconds(F.lit(base) + F.col("id") * 3 * 86400)
-        .cast(ts_type)
-        .alias("start_ts"),
-        F.timestamp_seconds(F.lit(base) + F.col("id") * 3 * 86400 + 4 * 86400)
-        .cast(ts_type)
-        .alias("end_ts"),
-    )
-    joined = range_join_points_in_intervals(
-        e.select("event_id", "ts", "value"), camps
-    )
-    return joined.groupBy("campaign_id").agg(
-        F.count("*").alias("n_events"),
-        F.sum(F.col("value").cast("decimal(18,2)"))
-        .cast("double")
-        .alias("total_value"),
-    )
 
 
 @_q(
@@ -4598,45 +4518,6 @@ def user_event_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @_q(
-    "cdc_latest_state",
-    """
-    WITH ranked AS (
-      SELECT user_id, event_id, event_type, ts, value,
-        row_number() OVER (PARTITION BY user_id
-                           ORDER BY ts DESC, event_id DESC) AS rn,
-        count(*) OVER (PARTITION BY user_id) AS n_changes
-      FROM events
-    )
-    SELECT user_id, epoch_us(ts) AS last_ts_us, event_id AS last_event_id,
-      event_type AS last_event_type, round(value, 6) AS last_value,
-      n_changes::BIGINT AS n_changes
-    FROM ranked WHERE rn = 1
-    """,
-)
-def cdc_latest_state(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Changelog -> current state per user: max(struct(ts, event_id,
-    payload)) in a plain groupBy (partial-aggregatable; no row_number
-    window sort). The oracle is the window formulation — same answer,
-    the groupBy is the 100-TB plan (operators/cdc.py)."""
-    from blogparser_spark.operators.cdc import latest_state
-
-    st = latest_state(
-        _events(spark, sf_dir),
-        ["user_id"],
-        ["ts", "event_id"],
-        ["event_type", "value"],
-    )
-    return st.select(
-        "user_id",
-        F.unix_micros(F.col("ts").cast("timestamp")).alias("last_ts_us"),
-        F.col("event_id").alias("last_event_id"),
-        F.col("event_type").alias("last_event_type"),
-        F.round("value", 6).alias("last_value"),
-        "n_changes",
-    )
-
-
-@_q(
     "audience_overlap_jaccard",
     """
     WITH m AS (SELECT DISTINCT event_type AS s, user_id AS member FROM events),
@@ -5357,56 +5238,6 @@ def psi_value_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.orderBy("event_type")
 
 
-_SCD2_SQL = r"""
-    WITH snap AS (
-      SELECT user_id, ts, arg_max(event_type, event_id) AS state
-      FROM events GROUP BY 1, 2
-    ), runs AS (
-      SELECT user_id, ts, state,
-             CASE WHEN lag(ts) OVER w IS NULL THEN TRUE
-                  ELSE state IS DISTINCT FROM lag(state) OVER w END AS new_run
-      FROM snap WINDOW w AS (PARTITION BY user_id ORDER BY ts)
-    ), kept AS (
-      SELECT user_id, ts, state FROM runs WHERE new_run
-    )
-    SELECT user_id, state,
-           row_number() OVER w AS version,
-           epoch_us(ts) AS valid_from_us,
-           epoch_us(lead(ts) OVER w) AS valid_to_us,
-           (lead(ts) OVER w IS NULL) AS is_current
-    FROM kept WINDOW w AS (PARTITION BY user_id ORDER BY ts)
-    ORDER BY user_id, version
-"""
-
-
-@_q("scd2_user_state", _SCD2_SQL)
-def scd2_user_state(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SCD type-2 history of each user's event-type state from the events
-    changelog (cdc.scd2_intervals): same-timestamp ties collapse via the
-    partial-aggregatable max-struct (event_id decides), re-assertions of
-    the same state extend the open interval instead of versioning, and
-    valid_from/valid_to tile per user with a NULL-ended current row. The
-    interval build shares one partitionBy(user) sort across its lag /
-    lead / row_number windows — one shuffle total. Timestamps exported as
-    integer microseconds (the cross-engine convention)."""
-    from blogparser_spark.operators.cdc import scd2_intervals
-
-    ev = _events(spark, sf_dir)
-    iv = scd2_intervals(ev, ["user_id"], "ts", ["event_type"], ["event_id"])
-    return iv.select(
-        "user_id",
-        F.col("event_type").alias("state"),
-        "version",
-        F.expr("unix_micros(cast(valid_from as timestamp))").alias(
-            "valid_from_us"
-        ),
-        F.expr("unix_micros(cast(valid_to as timestamp))").alias(
-            "valid_to_us"
-        ),
-        "is_current",
-    ).orderBy("user_id", "version")
-
-
 _ATTRIBUTION_SQL = r"""
     WITH base AS (
       SELECT user_id, ts, event_id, event_type,
@@ -5590,53 +5421,6 @@ def equi_depth_value_bounds(spark: SparkSession, sf_dir: str) -> DataFrame:
     return equi_depth_bounds(
         _events(spark, sf_dir), ["event_type"], "value", n_buckets=10
     ).orderBy("event_type", "bucket")
-
-
-_SCD2_ASOF_SQL = r"""
-    WITH cut AS (
-      SELECT (min(epoch_us(ts)) + max(epoch_us(ts))) // 2 AS cut_us
-      FROM events
-    ), snap AS (
-      SELECT user_id, ts, arg_max(event_type, event_id) AS state
-      FROM events GROUP BY 1, 2
-    )
-    SELECT user_id, arg_max(state, ts) AS state
-    FROM snap, cut WHERE epoch_us(ts) <= cut_us
-    GROUP BY user_id ORDER BY user_id
-"""
-
-
-@_q("scd2_state_asof", _SCD2_ASOF_SQL)
-def scd2_state_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Point-in-time reconstruction: every user's state at the corpus
-    midpoint timestamp, read from the SCD2 interval table via a pure
-    covering-interval filter (cdc.scd2_asof) — time travel without
-    rescanning the changelog. The oracle is an INDEPENDENT formulation
-    (arg_max over events at-or-before the cutoff), so interval tiling and
-    run collapsing are cross-checked, not replayed."""
-    from blogparser_spark.operators.cdc import scd2_asof, scd2_intervals
-
-    ev = _events(spark, sf_dir)
-    iv = scd2_intervals(ev, ["user_id"], "ts", ["event_type"], ["event_id"])
-    iv_us = iv.select(
-        "user_id",
-        F.col("event_type").alias("state"),
-        F.expr("unix_micros(cast(valid_from as timestamp))").alias(
-            "valid_from"
-        ),
-        F.expr("unix_micros(cast(valid_to as timestamp))").alias("valid_to"),
-    )
-    cut = ev.agg(
-        F.expr(
-            "(min(unix_micros(cast(ts as timestamp)))"
-            " + max(unix_micros(cast(ts as timestamp)))) div 2"
-        ).alias("cut_us")
-    )
-    return (
-        scd2_asof(iv_us.crossJoin(F.broadcast(cut)), F.col("cut_us"))
-        .select("user_id", "state")
-        .orderBy("user_id")
-    )
 
 
 _FIXED_K_SQL = r"""
@@ -7451,210 +7235,6 @@ def sft_loss_mask_stats_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     from blogparser_spark.dataops import curation
 
     return curation.sft_loss_mask_stats(_mixed_role_transcripts(spark, sf_dir))
-
-
-from blogparser_spark.functions.grok import compile_grok as _compile_grok
-
-_GROK_LINE_PATTERN = (
-    "[%{TIMESTAMP_ISO8601:ts}] %{LOGLEVEL:level} "
-    "user=%{NOTSPACE:user} evt=%{WORD:evt} id=%{INT:id:int} "
-    "dur=%{NUMBER:dur_ms:float}"
-)
-_GROK_RX, _GROK_FIELDS = _compile_grok(_GROK_LINE_PATTERN)
-
-# Deterministic line builder shared by the grok queries: event_id % 11 == 0
-# lines carry a level token outside the LOGLEVEL alphabet ('BOGUS'), so the
-# compiled pattern does not match them anywhere — the dead-letter subset.
-_GROK_LINES_SQL = """
-    lines AS (
-      SELECT '[' || strftime(ts::TIMESTAMP, '%Y-%m-%d %H:%M:%S') || '] '
-        || CASE WHEN event_id % 11 = 0 THEN 'BOGUS'
-                ELSE ['INFO','WARN','ERROR'][(event_id % 3)::INT + 1] END
-        || ' user=' || user_id || ' evt=' || event_type
-        || ' id=' || event_id::VARCHAR
-        || ' dur=' || (event_id % 97)::VARCHAR || '.'
-        || (event_id % 10)::VARCHAR AS line
-      FROM events
-    )
-"""
-
-_GROK_TYPED_SQL = f"""
-    WITH {_GROK_LINES_SQL}
-    SELECT regexp_extract(line, '{_GROK_RX}', 1) AS ts,
-           regexp_extract(line, '{_GROK_RX}', 2) AS level,
-           regexp_extract(line, '{_GROK_RX}', 3) AS user,
-           regexp_extract(line, '{_GROK_RX}', 4) AS evt,
-           TRY_CAST(regexp_extract(line, '{_GROK_RX}', 5) AS BIGINT) AS id,
-           TRY_CAST(regexp_extract(line, '{_GROK_RX}', 6) AS DOUBLE) AS dur_ms,
-           regexp_matches(line, '{_GROK_RX}') AS grok_matched
-    FROM lines
-"""
-
-
-def _grok_lines(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = _events(spark, sf_dir)
-    levels = F.array(F.lit("INFO"), F.lit("WARN"), F.lit("ERROR"))
-    line = F.concat(
-        F.lit("["),
-        F.date_format(F.col("ts").cast("timestamp"), "yyyy-MM-dd HH:mm:ss"),
-        F.lit("] "),
-        F.when(F.col("event_id") % 11 == 0, F.lit("BOGUS")).otherwise(
-            F.element_at(levels, (F.col("event_id") % 3 + 1).cast("int"))
-        ),
-        F.lit(" user="),
-        F.col("user_id"),
-        F.lit(" evt="),
-        F.col("event_type"),
-        F.lit(" id="),
-        F.col("event_id"),
-        F.lit(" dur="),
-        F.col("event_id") % 97,
-        F.lit("."),
-        F.col("event_id") % 10,
-    )
-    return e.select(line.alias("line"))
-
-
-@_q("grok_parse_log_lines", _GROK_TYPED_SQL)
-def grok_parse_log_lines(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Grok-DSL log parsing with Logstash `:type` coercion and dead-letter
-    flagging (functions/grok.py): telemetry lines built deterministically
-    from the events table — a BOGUS-level subset included — are parsed
-    back through one compiled `%{NAME:field[:type]}` pattern: N
-    regexp_extract columns + typed casts + one rlike, all in a single
-    codegen pass, no UDF; the oracle runs the IDENTICAL compiled regex
-    (Java ∩ RE2 subset) with TRY_CAST (the non-ANSI-cast twin). id/dur_ms
-    are NULL and grok_matched false on the dead-letter lines — typed
-    fields and routing key, not all-empty-string ambiguity."""
-    from blogparser_spark.functions.grok import grok_extract
-
-    return grok_extract(
-        _grok_lines(spark, sf_dir), _GROK_LINE_PATTERN, "line",
-        with_matched=True,
-    )
-
-
-@_q(
-    "grok_mismatch_route_counts",
-    f"""
-    WITH {_GROK_LINES_SQL}, parsed AS (
-      SELECT TRY_CAST(regexp_extract(line, '{_GROK_RX}', 5) AS BIGINT) AS id,
-             regexp_matches(line, '{_GROK_RX}') AS grok_matched
-      FROM lines
-    )
-    SELECT grok_matched, count(*)::BIGINT AS n,
-           count(id)::BIGINT AS n_typed_ok
-    FROM parsed GROUP BY grok_matched
-    """,
-)
-def grok_mismatch_route_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Dead-letter routing readout for the grok stage: per grok_matched
-    bucket, the line count and how many produced a typed id — the audit a
-    pipeline keeps next to its quarantine sink (the PERMISSIVE-JSONL
-    convention applied to grok). One partial hash agg over the parse
-    projection; the matched predicate is the same compiled regex."""
-    from blogparser_spark.functions.grok import grok_extract
-
-    parsed = grok_extract(
-        _grok_lines(spark, sf_dir), _GROK_LINE_PATTERN, "line",
-        with_matched=True,
-    )
-    return parsed.groupBy("grok_matched").agg(
-        F.count("*").alias("n"), F.count("id").alias("n_typed_ok")
-    )
-
-
-_GROK_ALT_PATTERN = "evt:%{WORD:evt} uid:%{NOTSPACE:user} seq:%{INT:id:int}"
-_GROK_ALT_RX, _ = _compile_grok(_GROK_ALT_PATTERN)
-
-# two wire formats + a garbage subset: even event_ids emit the bracketed
-# format (pattern 0), odd ones the key:value format (pattern 1), every
-# 11th a line matching neither — the Logstash `match` array fixture.
-_GROK_MIXED_LINES_SQL = """
-    mlines AS (
-      SELECT CASE
-        WHEN event_id % 11 = 0 THEN 'garbage ' || event_id::VARCHAR
-        WHEN event_id % 2 = 0 THEN
-          '[' || strftime(ts::TIMESTAMP, '%Y-%m-%d %H:%M:%S') || '] '
-          || ['INFO','WARN','ERROR'][(event_id % 3)::INT + 1]
-          || ' user=' || user_id || ' evt=' || event_type
-          || ' id=' || event_id::VARCHAR
-          || ' dur=' || (event_id % 97)::VARCHAR || '.'
-          || (event_id % 10)::VARCHAR
-        ELSE 'evt:' || event_type || ' uid:' || user_id
-          || ' seq:' || event_id::VARCHAR
-      END AS line
-      FROM events
-    )
-"""
-
-
-@_q(
-    "grok_multi_pattern_route",
-    f"""
-    WITH {_GROK_MIXED_LINES_SQL}, p AS (
-      SELECT line,
-        CASE WHEN regexp_matches(line, '{_GROK_RX}') THEN 0
-             WHEN regexp_matches(line, '{_GROK_ALT_RX}') THEN 1 END AS gidx
-      FROM mlines
-    )
-    SELECT
-      CASE WHEN gidx = 0 THEN regexp_extract(line, '{_GROK_RX}', 1) END AS ts,
-      CASE WHEN gidx = 0 THEN regexp_extract(line, '{_GROK_RX}', 2) END AS level,
-      CASE WHEN gidx = 0 THEN regexp_extract(line, '{_GROK_RX}', 3)
-           WHEN gidx = 1 THEN regexp_extract(line, '{_GROK_ALT_RX}', 2)
-      END AS user,
-      CASE WHEN gidx = 0 THEN regexp_extract(line, '{_GROK_RX}', 4)
-           WHEN gidx = 1 THEN regexp_extract(line, '{_GROK_ALT_RX}', 1)
-      END AS evt,
-      TRY_CAST(CASE WHEN gidx = 0 THEN regexp_extract(line, '{_GROK_RX}', 5)
-                    WHEN gidx = 1 THEN regexp_extract(line, '{_GROK_ALT_RX}', 3)
-               END AS BIGINT) AS id,
-      TRY_CAST(CASE WHEN gidx = 0 THEN regexp_extract(line, '{_GROK_RX}', 6)
-               END AS DOUBLE) AS dur_ms,
-      gidx::INT AS grok_pattern_idx
-    FROM p
-    """,
-)
-def grok_multi_pattern_route(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Logstash `match`-array semantics (grok.grok_extract_multi): two
-    wire formats tried in order, first matching pattern wins; the output
-    is the union of both patterns' fields (NULL where the winner doesn't
-    define one) plus grok_pattern_idx — 0/1 routing key, NULL for the
-    garbage subset (dead-letter). Still ONE codegen pass: the N rlike
-    predicates fold into a CASE per field, no UDF; the oracle runs the
-    identical compiled regexes."""
-    from blogparser_spark.functions.grok import grok_extract_multi
-
-    e = _events(spark, sf_dir)
-    levels = F.array(F.lit("INFO"), F.lit("WARN"), F.lit("ERROR"))
-    fmt_a = F.concat(
-        F.lit("["),
-        F.date_format(F.col("ts").cast("timestamp"), "yyyy-MM-dd HH:mm:ss"),
-        F.lit("] "),
-        F.element_at(levels, (F.col("event_id") % 3 + 1).cast("int")),
-        F.lit(" user="), F.col("user_id"),
-        F.lit(" evt="), F.col("event_type"),
-        F.lit(" id="), F.col("event_id"),
-        F.lit(" dur="), F.col("event_id") % 97, F.lit("."),
-        F.col("event_id") % 10,
-    )
-    fmt_b = F.concat(
-        F.lit("evt:"), F.col("event_type"),
-        F.lit(" uid:"), F.col("user_id"),
-        F.lit(" seq:"), F.col("event_id"),
-    )
-    line = (
-        F.when(F.col("event_id") % 11 == 0,
-               F.concat(F.lit("garbage "), F.col("event_id")))
-        .when(F.col("event_id") % 2 == 0, fmt_a)
-        .otherwise(fmt_b)
-    )
-    return grok_extract_multi(
-        e.select(line.alias("line")),
-        [_GROK_LINE_PATTERN, _GROK_ALT_PATTERN],
-        "line",
-    )
 
 
 @_q(

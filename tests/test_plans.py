@@ -223,32 +223,6 @@ def test_ivfpq_partitioned_probe_is_pruned_and_codegen_only(spark, tmp_path):
     assert got == want
 
 
-def test_range_join_is_equi_join_not_nested_loop(spark):
-    """The bucketed interval join must plan as a hash EQUI-join on the
-    bucket key (broadcastable small side) — never the nested-loop join a
-    raw BETWEEN predicate forces."""
-    import datetime as dt
-
-    from pyspark.sql import functions as F
-    from blogparser_spark.operators.asof import range_join_points_in_intervals
-
-    t0 = dt.datetime(2024, 1, 1)
-    points = spark.createDataFrame(
-        [(i, t0 + dt.timedelta(hours=i)) for i in range(48)],
-        "event_id long, ts timestamp",
-    )
-    intervals = spark.createDataFrame(
-        [(j, t0 + dt.timedelta(days=j), t0 + dt.timedelta(days=j + 2)) for j in range(3)],
-        "iv_id long, start_ts timestamp, end_ts timestamp",
-    )
-    plan = _plan(
-        range_join_points_in_intervals(points, F.broadcast(intervals))
-    )
-    assert "BroadcastHashJoin" in plan
-    assert "BroadcastNestedLoopJoin" not in plan
-    assert "CartesianProduct" not in plan
-
-
 def test_shipping_priority_join_strategy(spark):
     """The Q3-shaped chain must broadcast the filtered dim, hash-join the
     fact-fact edge, and push both date filters into the parquet scans."""
@@ -273,21 +247,6 @@ def test_global_topk_uses_take_ordered_not_full_sort(spark):
     plan = _plan(events.orderBy(F.desc("value"), "event_id").limit(10))
     assert "TakeOrderedAndProject" in plan
     assert "Exchange rangepartitioning" not in plan
-
-
-def test_cdc_latest_state_is_partial_agg_not_window(spark):
-    """latest_state must plan as a hash aggregate with a partial max
-    (map-side combine) and NO Window node — the property that keeps
-    changelog folding one-shuffle at 10^12 rows."""
-    from blogparser_spark.operators.cdc import latest_state
-
-    ev = spark.read.parquet("/root/testdata/sf0.001/events.parquet")
-    plan = _plan(
-        latest_state(ev, ["user_id"], ["ts", "event_id"], ["event_type", "value"])
-    )
-    assert "Window" not in plan
-    assert "partial_max" in plan and "partial_count" in plan
-    assert plan.count("Exchange") == 1
 
 
 def test_salted_exact_distinct_two_stage(spark):

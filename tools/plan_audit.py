@@ -14,10 +14,11 @@ Exit 1 if any un-whitelisted hit is found.
 
 from __future__ import annotations
 
+import os
 import re
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 # Global windows allowed on frames that are bounded by construction (size
 # documented at the implementation site).
