@@ -2,19 +2,17 @@
 
     spark-submit --py-files blogparser_spark.zip blogparser_spark/job.py \
         --input /path/transcripts --output /path/out [--resume] \
-        [--slices 64] [--key-col conv_id] [--salt-parts 0] \
-        [--table-format tablelog|parquet]
+        [--slices 64] [--key-col conv_id] [--salt-parts 0]
 
-Runs the sliced, resumable parse→enrich pipeline (checkpoint manifests per
-slice), then the aggregate reports over the routed output. The default sink
-is the snapshot-log table format: one atomic idempotent commit per slice
+Runs the sliced, resumable parse→enrich pipeline (a lineage manifest per
+slice), then the aggregate reports over the routed output. The sink is
+the snapshot-log table format: one atomic idempotent commit per slice
 into {output}/table, written as a few files sorted by the sink keys then
 conv_id. Each file's manifest entry records the sink tuples it holds with
 row counts (per-sink reads open only those files) plus conv_id stats and
 blooms for conversation lookups — the north rule's per-sink Iceberg
-tables. Resume rides the commit-marker ledger as well as the slice
-manifests, and each slice manifest carries its commit's summary.
---table-format parquet keeps the plain per-slice directory fallback. On a cluster the same file is
+tables. Resume rides the commit-marker ledger alone; each slice manifest
+records lineage and its commit's summary. On a cluster the same file is
 submitted unchanged; local runs honor SPARK_GRAFT_CPUS.
 
 Output: one JSON line per slice run (slice_id, rows_in, rows_ok,
@@ -69,16 +67,10 @@ def main(argv: list[str] | None = None) -> int:
         help="salted repartition width before parse (0 = off; use when the "
         "input layout clusters hot conv_ids)",
     )
-    ap.add_argument(
-        "--table-format",
-        choices=("tablelog", "parquet"),
-        default="tablelog",
-        help="routed sink: snapshot-log table (atomic idempotent commit "
-        "per slice; default) or plain per-slice parquet dirs",
-    )
     args = ap.parse_args(argv)
 
     from blogparser_spark.operators import aggregate as agg
+    from blogparser_spark.operators import tablelog as tl
     from blogparser_spark.operators.checkpoint import run_sliced
     from blogparser_spark.session import get_spark
 
@@ -91,7 +83,6 @@ def main(argv: list[str] | None = None) -> int:
         n_slices=args.slices,
         key_col=args.key_col,
         resume=args.resume,
-        table_format=args.table_format,
     )
     for m in manifests:  # one line per slice, from its manifest
         print(
@@ -106,35 +97,21 @@ def main(argv: list[str] | None = None) -> int:
                 }
             )
         )
+    table = f"{args.output}/table"
+    # the snapshot IS the run's routed row set: slice commits are atomic
+    # and other generations were replaced during the run
+    routed = tl.read_snapshot(spark, table)
     report = {
         "slices_run": [m.slice_id for m in manifests],
         "rows_in": sum(m.rows_in for m in manifests),
         "wall_seconds": round(sum(m.wall_seconds for m in manifests), 3),
+        "table_version": tl.current_version(table),
+        "sink_counts": {
+            f"{r['channel']}/{r['tool_category']}/{r['parse_status']}": r["n"]
+            for r in agg.sink_counts(routed).collect()
+        },
+        "n_convs": agg.conv_stats(routed).count(),
     }
-    if args.table_format == "tablelog":
-        from blogparser_spark.operators import tablelog as tl
-
-        table = f"{args.output}/table"
-        # the snapshot IS the run's routed row set: slice commits are
-        # atomic and stale generations were replaced during the run
-        routed = tl.read_snapshot(spark, table)
-        report["table_version"] = tl.current_version(table)
-    else:
-        # read exactly THIS run's slice set — a bare slice=* glob would
-        # also pick up stale slice dirs left by an earlier run with a
-        # larger --slices value, double-counting every row they hold
-        routed = spark.read.parquet(
-            *[f"{args.output}/slice={s}" for s in range(args.slices)]
-        )
-    report.update(
-        {
-            "sink_counts": {
-                f"{r['channel']}/{r['tool_category']}/{r['parse_status']}": r["n"]
-                for r in agg.sink_counts(routed).collect()
-            },
-            "n_convs": agg.conv_stats(routed).count(),
-        }
-    )
     print(json.dumps(report))
     return 0
 

@@ -1,4 +1,4 @@
-"""Resumable checkpointing: per-partition completion manifests + lineage.
+"""Resumable checkpointing: per-slice commits, a marker ledger, lineage.
 
 The north-star contract (SURVEY.md §4.3): a 10^12-turn run must survive
 restarts without reprocessing finished work. There is no reference analog —
@@ -9,13 +9,16 @@ Mechanism
 ---------
 The input keyspace is split into RANGES of a stable partition key (hash of
 conv_id mod n_slices — deterministic, data-independent). Each slice runs as
-its own Spark job over a partition-pruned slice of the input; on success a
-JSON manifest is written ATOMICALLY (temp file + rename) recording lineage:
-slice id, predicate, input snapshot identifier, row counts in/out, per-sink
-counts from df.observe() metrics, wall time. A resumed run lists manifests
-and skips completed slices — idempotent because each slice overwrites only
-its own output subdirectory (dynamic partition overwrite in real Iceberg;
-per-slice parquet dirs in the sandbox fallback).
+its own Spark job over a partition-pruned slice of the input and lands as
+ONE atomic idempotent commit to the tablelog table at {output}/table. The
+commit's marker encodes the slice, input snapshot and slicing config, so
+the table's commit-marker ledger is the one resume guard: a resumed run
+skips exactly the slices whose current marker is committed. After each
+commit a JSON manifest is written ATOMICALLY (temp file + rename) recording
+lineage — slice id, predicate, input snapshot identifier, row counts
+in/out, per-sink counts from df.observe() metrics, wall time, the commit's
+summary. Manifests are never read to decide what to skip: a lost manifest
+or a wiped table cannot make a resume disagree with the table.
 
 Why slice-level (not task-level): Spark already retries tasks; what Spark
 does NOT give you is job-level resume after a driver loss. Slices bound the
@@ -28,12 +31,15 @@ import json
 import os
 import time
 import uuid
+from contextlib import contextmanager
 from dataclasses import asdict, dataclass
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
+from blogparser_spark.operators import tablelog as tl
 from blogparser_spark.operators.parse import STATUSES as _OBSERVED_STATUSES
+from blogparser_spark.operators.route import route_commit_tablelog
 
 MANIFEST_DIR = "_manifests"
 
@@ -52,10 +58,9 @@ class SliceManifest:
     started_at: float
     wall_seconds: float
     output_path: str
-    table_version: int | None = None  # tablelog sink: this slice's commit
-    table_format: str = "parquet"  # sink the slice was written to
-    # tablelog sink: the commit's summary (tablelog.commit_summary) —
-    # files/records/bytes added, write/manifest/commit seconds, retries
+    table_version: int | None = None  # this slice's tablelog commit
+    # the commit's summary (tablelog.commit_summary) — files/records/bytes
+    # added, write/manifest/commit seconds, retries
     commit_summary: dict | None = None
 
 
@@ -72,17 +77,6 @@ def write_manifest(base: str, m: SliceManifest) -> None:
     with open(tmp, "w") as f:
         json.dump(asdict(m), f, indent=1)
     os.replace(tmp, path)
-
-
-def completed_slices(base: str) -> set[int]:
-    d = os.path.join(base, MANIFEST_DIR)
-    if not os.path.isdir(d):
-        return set()
-    out = set()
-    for name in os.listdir(d):
-        if name.startswith("slice-") and name.endswith(".json"):
-            out.add(int(name[len("slice-") : -len(".json")]))
-    return out
 
 
 SLICE_COL = "slice_bucket"
@@ -148,6 +142,7 @@ def input_snapshot_id(spark: SparkSession, path: str) -> str:
 
 
 def read_manifest(base: str, slice_id: int) -> dict | None:
+    """A slice's lineage manifest, or None if absent/unreadable."""
     try:
         with open(_manifest_path(base, slice_id)) as f:
             return json.load(f)
@@ -167,6 +162,37 @@ def slice_marker(
     return f"{base}|run={nonce}" if nonce else base
 
 
+def _marker_base(marker: str) -> str:
+    """`marker` without its `|run=<nonce>` suffix."""
+    base, sep, _ = marker.rpartition("|run=")
+    return base if sep else marker
+
+
+_EMPTY_RELATION_RULE = (
+    "org.apache.spark.sql.execution.adaptive.AQEPropagateEmptyRelation"
+)
+
+
+@contextmanager
+def _observed_metrics_survive_empty_slices(spark: SparkSession):
+    """Keep AQE's empty-relation propagation off while slices commit. When
+    a slice holds no rows, the rule swaps the plan above its empty shuffle
+    stage for an empty relation, which drops the observe() nodes with it:
+    the slice's Observation never receives metrics and `.get` fails. The
+    rule only fires on empty stages, so non-empty slices plan the same."""
+    key = "spark.sql.adaptive.optimizer.excludedRules"
+    prev = spark.conf.get(key, None)
+    rules = [r for r in (prev or "").split(",") if r]
+    spark.conf.set(key, ",".join(rules + [_EMPTY_RELATION_RULE]))
+    try:
+        yield
+    finally:
+        if prev is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, prev)
+
+
 def run_sliced(
     spark: SparkSession,
     input_path: str,
@@ -175,11 +201,12 @@ def run_sliced(
     n_slices: int = 8,
     key_col: str = "conv_id",
     resume: bool = True,
-    table_format: str = "parquet",
+    table_format: str = "tablelog",
 ) -> list[SliceManifest]:
     """Run transform(df_slice) -> DataFrame for each incomplete slice,
-    writing per-slice output + manifest. `transform` must return a frame
-    with a parse_status column (for the observed sink metrics).
+    committing each to the table + writing its manifest. `transform` must
+    return a frame with a parse_status column (for the observed sink
+    metrics). `table_format` accepts only "tablelog", the one sink.
 
     Input layouts: if input_path was written by write_sliced_input with a
     compatible slice count, each slice filters on the PARTITION column and
@@ -187,154 +214,113 @@ def run_sliced(
     hash predicate over a full scan (correct, but reads the corpus once
     per slice — fine in tests, wrong at 100 TB; ingest sliced there).
 
-    Sinks: table_format="tablelog" (the job default) routes every slice
-    into ONE snapshot-log table at {output_base}/table as an atomic
-    idempotent commit per slice (route.route_commit_tablelog — the north
-    rule's per-sink Iceberg tables): a few files per slice sorted by the
-    sink keys then conv_id, each recording its sink tuples with row
-    counts (per-sink reads open only the files holding the sink) and
-    conv_id footer stats + blooms for point lookups. The slice manifest
-    carries the commit's summary. "parquet" keeps the plain per-slice
-    directory layout.
+    Sink: every slice routes into ONE snapshot-log table at
+    {output_base}/table as an atomic idempotent commit
+    (route.route_commit_tablelog — the north rule's per-sink Iceberg
+    tables): a few files per slice sorted by the sink keys then conv_id,
+    each recording its sink tuples with row counts (per-sink reads open
+    only the files holding the sink) and conv_id footer stats + blooms for
+    point lookups. The slice manifest carries the commit's summary.
 
-    Resume safety: a completed slice is skipped if its manifest's
-    input_snapshot matches the CURRENT input snapshot — after the input
-    changes, every slice re-runs rather than silently mixing lineages —
-    AND the manifest's (n_slices, key_col) match this run's: resuming a
-    4-slice output with n_slices=8 would keep pmod-4 slice outputs next
-    to pmod-8 ones, duplicating every row whose pmod8 ∈ {4..7}. Under
-    tablelog the COMMIT MARKER LEDGER is a second, storage-level resume
-    guard: slice markers encode (snapshot, n_slices, key_col), so a slice
-    whose marker is already committed is skipped even if its manifest
-    file was lost, and a crashed run's re-submission is a commit no-op
-    (tablelog.append_idempotent). When the table holds commits from a
-    DIFFERENT generation (changed input or re-slicing), each re-run slice
-    first equality-deletes the old-generation rows of ITS OWN keyspace —
-    under the CURRENT hash predicate, so coverage over all current slices
-    is complete even when n_slices changed — then appends; the table
-    converges to exactly the current generation. Mid-migration readers
-    may see mixed generations between slice commits; a run needing
+    Resume is ledger-only: a slice is done iff the table's commit-marker
+    ledger holds its CURRENT marker — slice_marker(s, snapshot, n_slices,
+    key_col), with or without a resume=False run's `|run=<nonce>` suffix.
+    The marker encodes the input snapshot and (n_slices, key_col), so
+    after the input changes or the slicing changes every slice re-runs
+    rather than mixing lineages; a crashed run's re-submission is a commit
+    no-op (tablelog.append_idempotent). Manifests are lineage only and
+    never read here: a wiped table re-runs every slice, lost manifests
+    re-run none. resume=False skips nothing and commits a fresh generation.
+    When the table holds rows of another generation (a marker whose
+    un-nonced base is not current, or any rows under resume=False), each
+    re-run slice first equality-deletes the other-generation rows of ITS
+    OWN keyspace — under the CURRENT hash predicate, so coverage over all
+    current slices is complete even when n_slices changed — then appends;
+    the table converges to exactly the current generation. Mid-migration
+    readers may see mixed generations between slice commits; a run needing
     all-or-nothing publication should stage on a branch and fast_forward
     (tablelog WAP) instead."""
+    if table_format != "tablelog":
+        raise ValueError(f"unknown table_format {table_format!r}: the sink is tablelog")
     snapshot = input_snapshot_id(spark, input_path)
     table = os.path.join(output_base, "table")
     nonce = "" if resume else uuid.uuid4().hex[:8]
-    committed: set[str] = set()
-    stale_gens = False
-    if table_format == "tablelog":
-        from blogparser_spark.operators import tablelog as tl
-
-        committed = tl.committed_markers(table)
-        current = {
-            slice_marker(s, snapshot, n_slices, key_col, nonce)
-            for s in range(n_slices)
-        }
-        stale_gens = bool(committed - current)
-    done: set[int] = set()
-    if resume:
-        for s in completed_slices(output_base):
-            m = read_manifest(output_base, s)
-            if (
-                m
-                and m.get("input_snapshot") == snapshot
-                and m.get("n_slices") == n_slices
-                and m.get("key_col") == key_col
-                # a manifest written against the OTHER sink format proves
-                # nothing about this run's sink: trusting a parquet-era
-                # manifest under tablelog would skip every slice and
-                # leave the table uncreated (and vice versa)
-                and m.get("table_format", "parquet") == table_format
-            ):
-                done.add(s)
-        if table_format == "tablelog":
-            for s in range(n_slices):
-                if slice_marker(s, snapshot, n_slices, key_col) in committed:
-                    done.add(s)
+    committed = {_marker_base(m) for m in tl.committed_markers(table)}
+    current = [slice_marker(s, snapshot, n_slices, key_col) for s in range(n_slices)]
+    stale_gens = bool(committed - set(current))
+    replace = stale_gens or (not resume and bool(committed))
+    done = {s for s, m in enumerate(current) if m in committed} if resume else set()
     sliced = _sliced_layout(input_path, n_slices, key_col)
     manifests: list[SliceManifest] = []
-    for s in range(n_slices):
-        if s in done:
-            continue
-        t0 = time.time()
-        if sliced:
-            # partition-column filter → directory-level pruning at the scan
-            src = spark.read.parquet(input_path).filter(F.col(SLICE_COL) == s)
-            predicate = f"{SLICE_COL} = {s} (partition-pruned)"
-        else:
-            src = spark.read.parquet(input_path).filter(
-                slice_predicate(s, n_slices, key_col)
-            )
-            predicate = f"pmod(hash({key_col}), {n_slices}) = {s}"
-        obs_in = Observation(f"in-{s}")
-        obs_out = Observation(f"out-{s}")
-        src = src.observe(obs_in, F.count(F.lit(1)).alias("rows_in"))
-        out = transform(src)
-        # per-sink counts ride the SAME write job via observe() — no
-        # re-read of the slice output just to recount
-        status_aggs = [
-            F.sum(F.when(F.col("parse_status") == st, 1).otherwise(0)).alias(st)
-            for st in _OBSERVED_STATUSES
-        ]
-        out = out.observe(obs_out, F.count(F.lit(1)).alias("rows"), *status_aggs)
-        table_version: int | None = None
-        summary: dict | None = None
-        if table_format == "tablelog":
-            from blogparser_spark.operators import tablelog as tl
-            from blogparser_spark.operators.route import route_commit_tablelog
-
+    with _observed_metrics_survive_empty_slices(spark):
+        for s in range(n_slices):
+            if s in done:
+                continue
+            t0 = time.time()
+            if sliced:
+                # partition-column filter → directory-level pruning at the scan
+                src = spark.read.parquet(input_path).filter(F.col(SLICE_COL) == s)
+                predicate = f"{SLICE_COL} = {s} (partition-pruned)"
+            else:
+                src = spark.read.parquet(input_path).filter(
+                    slice_predicate(s, n_slices, key_col)
+                )
+                predicate = f"pmod(hash({key_col}), {n_slices}) = {s}"
+            obs_in = Observation(f"in-{s}")
+            obs_out = Observation(f"out-{s}")
+            src = src.observe(obs_in, F.count(F.lit(1)).alias("rows_in"))
+            out = transform(src)
+            # per-sink counts ride the SAME write job via observe() — no
+            # re-read of the slice output just to recount
+            status_aggs = [
+                F.sum(F.when(F.col("parse_status") == st, 1).otherwise(0)).alias(st)
+                for st in _OBSERVED_STATUSES
+            ]
+            out = out.observe(obs_out, F.count(F.lit(1)).alias("rows"), *status_aggs)
             marker = slice_marker(s, snapshot, n_slices, key_col, nonce)
-            if stale_gens and tl.current_version(table) is not None:
-                # replace THIS slice's keyspace from older generations:
-                # the current hash predicate scopes the delete, so the
-                # union over all current slices covers every stale row
-                # even when n_slices changed between generations
+            if replace and tl.current_version(table) is not None:
+                # replace THIS slice's keyspace from other generations: the
+                # current hash predicate scopes the delete, so the union over
+                # all current slices covers every stale row even when
+                # n_slices changed between generations
                 tl.delete_where(
                     spark,
                     table,
-                    slice_predicate(s, n_slices, key_col)
-                    & (F.col("_gen") != marker),
+                    slice_predicate(s, n_slices, key_col) & (F.col("_gen") != marker),
                     [key_col, "_gen"],
                 )
             table_version, _ = route_commit_tablelog(
-                out.withColumn("_slice", F.lit(s)).withColumn(
-                    "_gen", F.lit(marker)
-                ),
+                out.withColumn("_slice", F.lit(s)).withColumn("_gen", F.lit(marker)),
                 table,
                 marker=marker,
                 stats_cols=("conv_id",),
                 bloom_cols=("conv_id",),
             )
-            summary = tl.commit_summary(table, table_version)
-            out_path = table
-        else:
-            out_path = os.path.join(output_base, f"slice={s}")
-            out.write.mode("overwrite").parquet(out_path)
-        metrics = obs_out.get
-        sink_counts = {
-            st: int(metrics[st]) for st in _OBSERVED_STATUSES if metrics[st]
-        }
-        # statuses outside the known list must not vanish from the manifest:
-        # record the residue so sink_counts always sums to the row count
-        other = int(metrics["rows"]) - sum(sink_counts.values())
-        if other:
-            sink_counts["other"] = other
-        m = SliceManifest(
-            slice_id=s,
-            n_slices=n_slices,
-            key_col=key_col,
-            predicate=predicate,
-            input_path=input_path,
-            input_snapshot=snapshot,
-            rows_in=int(obs_in.get["rows_in"]),
-            rows_ok=sink_counts.get("ok", 0),
-            sink_counts=sink_counts,
-            started_at=t0,
-            wall_seconds=round(time.time() - t0, 3),
-            output_path=out_path,
-            table_version=table_version,
-            table_format=table_format,
-            commit_summary=summary,
-        )
-        write_manifest(output_base, m)
-        manifests.append(m)
+            metrics = obs_out.get
+            sink_counts = {
+                st: int(metrics[st]) for st in _OBSERVED_STATUSES if metrics[st]
+            }
+            # statuses outside the known list must not vanish from the manifest:
+            # record the residue so sink_counts always sums to the row count
+            other = int(metrics["rows"]) - sum(sink_counts.values())
+            if other:
+                sink_counts["other"] = other
+            m = SliceManifest(
+                slice_id=s,
+                n_slices=n_slices,
+                key_col=key_col,
+                predicate=predicate,
+                input_path=input_path,
+                input_snapshot=snapshot,
+                rows_in=int(obs_in.get["rows_in"]),
+                rows_ok=sink_counts.get("ok", 0),
+                sink_counts=sink_counts,
+                started_at=t0,
+                wall_seconds=round(time.time() - t0, 3),
+                output_path=table,
+                table_version=table_version,
+                commit_summary=tl.commit_summary(table, table_version),
+            )
+            write_manifest(output_base, m)
+            manifests.append(m)
     return manifests

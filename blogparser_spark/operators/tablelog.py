@@ -284,8 +284,8 @@ def _transform_expr(field: dict, dtype: str) -> Column:
     pruning can project predicate literals through the same function:
 
     - bucket(n): md5-hex-prefix mod n (the repo's engine-portable stand-in
-      for Iceberg's murmur3 bucket — same convention as
-      route.consistent_shard_assign and the curation sampling keys).
+      for Iceberg's murmur3 bucket — same convention as the curation
+      sampling keys).
     - truncate(w): substring for strings, w*floor(v/w) for integers
       (pmod keeps negatives on the Iceberg floor semantics).
     - days/hours/months/years: LEXICAL truncation of the ISO-rendered
@@ -3027,13 +3027,9 @@ def _apply_deletes(
         if entries[0].get("positional"):
             # position delete: row identity join, seq <= scope, no schema
             # translation (file+pos reference nothing evolution can move)
-            affected = data.filter(F.col("_seq") <= F.lit(dseq))
-            rest = data.filter(F.col("_seq") > F.lit(dseq))
-            data = affected.join(
-                F.broadcast(keys) if small else keys,
-                ["_file", "_pos"],
-                "left_anti",
-            ).unionByName(rest)
+            data = _anti_join_scoped(
+                data, keys, ["_file", "_pos"], F.col("_seq") <= F.lit(dseq), small
+            )
             continue
         join_cols = list(key_cols)
         if evolved:
@@ -3055,12 +3051,27 @@ def _apply_deletes(
                 sel.append(F.col(k).cast(typ).alias(name))
                 join_cols.append(name)
             keys = keys.select(*sel).distinct()
-        affected = data.filter(F.col("_seq") < F.lit(dseq))
-        rest = data.filter(F.col("_seq") >= F.lit(dseq))
-        data = affected.join(
-            F.broadcast(keys) if small else keys, join_cols, "left_anti"
-        ).unionByName(rest)
+        data = _anti_join_scoped(
+            data, keys, join_cols, F.col("_seq") < F.lit(dseq), small
+        )
     return data.select(*out_cols)
+
+
+def _anti_join_scoped(
+    data: DataFrame, keys: DataFrame, cols: list[str], in_scope, small: bool
+) -> DataFrame:
+    """Drop the `data` rows that match a `keys` row on `cols` AND satisfy
+    `in_scope` (the delete's sequence-number scope). The scope rides the
+    join condition: splitting `data` into in-scope and out-of-scope halves
+    and unioning them back would reference the whole plan twice per
+    delete, doubling the scans of every later read with each delete."""
+    renamed = keys.select(*[F.col(c).alias(f"_del_{c}") for c in cols])
+    cond = in_scope
+    for c in cols:
+        cond = cond & (data[c] == F.col(f"_del_{c}"))
+    return data.join(
+        F.broadcast(renamed) if small else renamed, cond, "left_anti"
+    )
 
 
 def _empty_df(spark: SparkSession, schema: list[list[str]] | None) -> DataFrame:

@@ -3426,11 +3426,10 @@ def event_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def retention_scrub_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Right-to-be-forgotten shape: a deterministic tombstone key set
-    (user_id ≡ 3 mod 7) removed via LEFT ANTI broadcast join — the
-    one-scan deletion rewrite of route.apply_retention_deletes — then
-    per-type survivor counts. The oracle states the same semantics as a
-    predicate; the Spark side deliberately runs the anti-join plan the
-    physical delete uses."""
+    (user_id ≡ 3 mod 7) removed via LEFT ANTI broadcast join — one scan,
+    the corpus never shuffles — then per-type survivor counts. The oracle
+    states the same semantics as a predicate; the Spark side deliberately
+    runs the anti-join plan."""
     e = _events(spark, sf_dir)
     tomb = (
         e.select("user_id").distinct().filter(F.col("user_id") % 7 == 3)
@@ -6307,50 +6306,6 @@ def dataset_card(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("median_chars").cast("bigint").alias("median_chars"),
         "n_exact_dups",
         "exact_dup_rate",
-    )
-
-
-_SHARD_SQL = r"""
-    WITH keys AS (
-      SELECT DISTINCT user_id AS k,
-        ('0x' || substr(md5('ring#' || user_id::VARCHAR), 1, 13))::BIGINT
-          AS kh
-      FROM events
-    ), ring AS (
-      SELECT s.shard,
-        ('0x' || substr(md5('ring:' || s.shard::VARCHAR || ':'
-                            || v.v::VARCHAR), 1, 13))::BIGINT AS pt
-      FROM (SELECT unnest(range(8))::INT AS shard) s,
-           (SELECT unnest(range(32)) AS v) v
-    ), own AS (
-      SELECT k, coalesce(
-        (SELECT r.shard FROM ring r WHERE r.pt >= keys.kh
-         ORDER BY r.pt LIMIT 1),
-        (SELECT r.shard FROM ring r ORDER BY r.pt LIMIT 1)) AS shard
-      FROM keys
-    )
-    SELECT shard, count(*)::BIGINT AS n_keys
-    FROM own GROUP BY 1 ORDER BY 1
-"""
-
-
-@_q("consistent_shard_counts", _SHARD_SQL)
-def consistent_shard_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Consistent-hash routing audit (route.consistent_shard_assign):
-    distinct users placed on an 8-shard / 32-vnode md5 ring, counted per
-    shard — the layout whose elasticity property (growing to n+1 shards
-    remaps ~1/(n+1) of keys, test-pinned) is what lets a routed corpus
-    reshard by moving one shard's worth of data. The oracle re-derives
-    ring ownership relationally (first point at or after the key hash,
-    wrapping)."""
-    from blogparser_spark.operators.route import consistent_shard_assign
-
-    users = _events(spark, sf_dir).select("user_id").distinct()
-    assigned = consistent_shard_assign(users, "user_id", n_shards=8)
-    return (
-        assigned.groupBy("shard")
-        .agg(F.count("*").alias("n_keys"))
-        .orderBy("shard")
     )
 
 

@@ -1,10 +1,13 @@
-"""Resumable sliced execution: manifests, resume skip, output parity."""
+"""Resumable sliced execution: tablelog commits, marker-ledger resume,
+lineage manifests, output parity."""
 
 from __future__ import annotations
 
 import json
 import os
+import shutil
 
+import pytest
 from pyspark.sql import functions as F
 
 
@@ -20,31 +23,37 @@ def _write_input(spark, tmp_path):
 
 def test_sliced_run_and_resume(spark, tmp_path):
     from blogparser_spark.job import transform
-    from blogparser_spark.operators.checkpoint import completed_slices, run_sliced
+    from blogparser_spark.operators import tablelog as tl
+    from blogparser_spark.operators.checkpoint import read_manifest, run_sliced
 
     inp = _write_input(spark, tmp_path)
     out = str(tmp_path / "out")
+    table = out + "/table"
 
     n_input = spark.read.parquet(inp).count()  # hot-conv skew ⇒ not 30×4
     ms = run_sliced(spark, inp, out, transform, n_slices=4)
     assert [m.slice_id for m in ms] == [0, 1, 2, 3]
-    assert completed_slices(out) == {0, 1, 2, 3}
+    assert all(read_manifest(out, s) for s in range(4))
     assert sum(m.rows_in for m in ms) == n_input
-    assert spark.read.parquet(out + "/slice=*").count() == n_input
+    assert tl.read_snapshot(spark, table).count() == n_input
 
     # resume: nothing left to do
     again = run_sliced(spark, inp, out, transform, n_slices=4, resume=True)
     assert again == []
 
-    # drop one manifest → only that slice reruns, output stays complete
+    # drop one manifest → manifests are lineage only: the ledger still
+    # holds the slice's marker, so nothing re-runs and the table stays
+    # complete
+    v = tl.current_version(table)
     os.remove(out + "/_manifests/slice-00002.json")
-    rerun = run_sliced(spark, inp, out, transform, n_slices=4, resume=True)
-    assert [m.slice_id for m in rerun] == [2]
-    assert spark.read.parquet(out + "/slice=*").count() == n_input
+    assert run_sliced(spark, inp, out, transform, n_slices=4, resume=True) == []
+    assert tl.current_version(table) == v
+    assert tl.read_snapshot(spark, table).count() == n_input
 
 
 def test_manifest_lineage_fields(spark, tmp_path):
     from blogparser_spark.job import transform
+    from blogparser_spark.operators import tablelog as tl
     from blogparser_spark.operators.checkpoint import run_sliced
 
     inp = _write_input(spark, tmp_path)
@@ -55,10 +64,10 @@ def test_manifest_lineage_fields(spark, tmp_path):
     assert m["predicate"].startswith("pmod(hash(conv_id), 2)")
     assert m["input_snapshot"].startswith("mtime:")
     assert m["rows_in"] > 0 and m["sink_counts"]
-    # observed ok-count matches a recount from the written output
+    # observed ok-count matches a recount of the slice's committed rows
     ok = (
-        spark.read.parquet(m["output_path"])
-        .filter(F.col("parse_status") == "ok")
+        tl.read_snapshot(spark, m["output_path"])
+        .filter((F.col("_slice") == 0) & (F.col("parse_status") == "ok"))
         .count()
     )
     assert m["rows_ok"] == ok
@@ -101,6 +110,7 @@ def test_sliced_input_scan_prunes_to_own_files(spark, tmp_path):
 
 def test_sliced_run_uses_pruned_predicate_and_matches_flat(spark, tmp_path):
     from blogparser_spark.job import transform
+    from blogparser_spark.operators import tablelog as tl
     from blogparser_spark.operators.checkpoint import run_sliced, write_sliced_input
     from blogparser_spark.sources.synthetic import transcripts_df
 
@@ -111,14 +121,14 @@ def test_sliced_run_uses_pruned_predicate_and_matches_flat(spark, tmp_path):
     ms = run_sliced(spark, p, out, transform, n_slices=2)
     assert all("partition-pruned" in m.predicate for m in ms)
     assert sum(m.rows_in for m in ms) == df.count()
-    got = spark.read.parquet(out + "/slice=*").count()
+    got = tl.read_snapshot(spark, out + "/table").count()
     assert got == df.count()
 
 
 def test_resume_reruns_when_input_snapshot_changes(spark, tmp_path):
-    """ADVICE: a manifest from an OLDER input snapshot must not be trusted —
-    resuming after the input changed re-runs the slice instead of silently
-    mixing lineages."""
+    """A committed marker from an OLDER input snapshot must not be trusted
+    — resuming after the input changed re-runs the slice instead of
+    silently mixing lineages."""
     import time as _time
 
     from blogparser_spark.job import transform
@@ -164,13 +174,14 @@ def test_unknown_status_lands_in_other_bucket(spark, tmp_path):
     so the manifest counts always sum to rows."""
     from pyspark.sql import functions as F
 
+    from blogparser_spark.job import transform
     from blogparser_spark.operators.checkpoint import run_sliced
 
     inp = _write_input(spark, tmp_path)
     out = str(tmp_path / "other_out")
 
     def odd_transform(df):
-        return df.withColumn(
+        return transform(df).withColumn(
             "parse_status",
             F.when(F.col("turn_idx") == 0, F.lit("weird_status")).otherwise("ok"),
         )
@@ -184,7 +195,7 @@ def test_unknown_status_lands_in_other_bucket(spark, tmp_path):
 
 def test_resume_reruns_when_slice_params_change(spark, tmp_path):
     """Resuming with a different n_slices (or key_col) must NOT trust old
-    manifests: mixing pmod-4 slice outputs with pmod-8 predicates would
+    markers: mixing pmod-4 slice outputs with pmod-8 predicates would
     duplicate every row whose pmod8 lands in {4..7}."""
     from blogparser_spark.job import transform
     from blogparser_spark.operators.checkpoint import run_sliced
@@ -202,9 +213,10 @@ def test_resume_reruns_when_slice_params_change(spark, tmp_path):
 
 
 def test_job_report_ignores_stale_slice_dirs(spark, tmp_path, capsys):
-    """Re-running the job with a SMALLER --slices must not double-count rows
-    from the stale slice dirs the wider run left behind: the report reads
-    exactly this run's slice set, not a slice=* glob."""
+    """Re-running the job with a SMALLER --slices into the same table must
+    not double-count rows the wider run committed: each 2-slice commit
+    replaces the 4-slice generation's rows of its keyspace, so the report
+    over the snapshot equals the first run's."""
     from blogparser_spark import job
 
     inp = _write_input(spark, tmp_path)
@@ -213,33 +225,35 @@ def test_job_report_ignores_stale_slice_dirs(spark, tmp_path, capsys):
     r1 = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
     assert job.main(["--input", inp, "--output", out, "--slices", "2"]) == 0
     r2 = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    assert r2["slices_run"] == [0, 1]
     assert r1["rows_in"] == r2["rows_in"]
     assert r1["sink_counts"] == r2["sink_counts"]
+    assert r1["n_convs"] == r2["n_convs"]
 
 
 def test_job_tablelog_sink_matches_parquet_and_resumes(spark, tmp_path, capsys):
-    """The default tablelog sink routes every slice into one snapshot-log
-    table as atomic idempotent commits: sink counts match the parquet
-    fallback exactly, per-sink reads prune via manifests, and a --resume
+    """The tablelog sink routes every slice into one snapshot-log table as
+    atomic idempotent commits: sink counts match the unsliced transform of
+    the input exactly, per-sink reads prune via manifests, and a --resume
     re-run is a commit no-op (marker ledger), leaving the version pinned."""
     from blogparser_spark import job
+    from blogparser_spark.operators import aggregate as agg
     from blogparser_spark.operators import tablelog as tl
     from blogparser_spark.operators.route import read_routed_tablelog
 
     inp = _write_input(spark, tmp_path)
     out_t = str(tmp_path / "out_tl")
-    out_p = str(tmp_path / "out_pq")
     assert job.main(
         ["--input", inp, "--output", out_t, "--slices", "4", "--resume"]
     ) == 0
     rt = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
-    assert job.main(
-        ["--input", inp, "--output", out_p, "--slices", "4",
-         "--table-format", "parquet"]
-    ) == 0
-    rp = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
-    assert rt["sink_counts"] == rp["sink_counts"]
-    assert rt["rows_in"] == rp["rows_in"] and rt["n_convs"] == rp["n_convs"]
+    flat = job.transform(spark.read.parquet(inp))
+    assert rt["sink_counts"] == {
+        f"{r['channel']}/{r['tool_category']}/{r['parse_status']}": r["n"]
+        for r in agg.sink_counts(flat).collect()
+    }
+    assert rt["rows_in"] == flat.count()
+    assert rt["n_convs"] == agg.conv_stats(flat).count()
     table = out_t + "/table"
     v1 = tl.current_version(table)
     assert rt["table_version"] == v1 and v1 == 4  # one commit per slice
@@ -258,10 +272,8 @@ def test_job_tablelog_sink_matches_parquet_and_resumes(spark, tmp_path, capsys):
     assert tl.current_version(table) == v1
     assert r2["sink_counts"] == rt["sink_counts"]  # served from the table
 
-    # marker ledger is a storage-level guard: lose ALL slice manifests and
+    # marker ledger is the one resume guard: lose ALL slice manifests and
     # resume still skips every slice (no duplicate commits)
-    import shutil
-
     shutil.rmtree(out_t + "/_manifests")
     assert job.main(
         ["--input", inp, "--output", out_t, "--slices", "4", "--resume"]
@@ -304,7 +316,7 @@ def test_slice_manifest_carries_commit_summary(spark, tmp_path):
 
     inp = _write_input(spark, tmp_path)
     out = str(tmp_path / "out_sum")
-    ms = run_sliced(spark, inp, out, transform, n_slices=2, table_format="tablelog")
+    ms = run_sliced(spark, inp, out, transform, n_slices=2)
     for m in ms:
         entries = tl._added_entries(out + "/table", tl._read_commit(out + "/table", m.table_version))
         s = m.commit_summary
@@ -332,9 +344,7 @@ def test_tablelog_generation_replace_on_input_change_and_reslice(
     inp = _write_input(spark, tmp_path)
     out = str(tmp_path / "out_gen")
     table = out + "/table"
-    first = run_sliced(
-        spark, inp, out, transform, n_slices=4, table_format="tablelog"
-    )
+    first = run_sliced(spark, inp, out, transform, n_slices=4)
     n1 = spark.read.parquet(inp).count()
     assert sum(m.rows_in for m in first) == n1
     assert tl.read_snapshot(spark, table).count() == n1
@@ -344,18 +354,14 @@ def test_tablelog_generation_replace_on_input_change_and_reslice(
     _time.sleep(1.1)
     _write_input(spark, tmp_path)
     n2 = spark.read.parquet(inp).count()
-    rerun = run_sliced(
-        spark, inp, out, transform, n_slices=2, table_format="tablelog"
-    )
+    rerun = run_sliced(spark, inp, out, transform, n_slices=2)
     assert [m.slice_id for m in rerun] == [0, 1]
     snap = tl.read_snapshot(spark, table)
     assert snap.count() == n2  # no old-generation residue
     gens = [r["_gen"] for r in snap.select("_gen").distinct().collect()]
     assert len(gens) == 2 and all("|n=2|" in g for g in gens)
     # and a resume of the new generation is a pure no-op
-    assert run_sliced(
-        spark, inp, out, transform, n_slices=2, table_format="tablelog"
-    ) == []
+    assert run_sliced(spark, inp, out, transform, n_slices=2) == []
 
 
 def test_tablelog_replace_converges_after_crash_between_delete_and_append(
@@ -379,7 +385,7 @@ def test_tablelog_replace_converges_after_crash_between_delete_and_append(
     inp = _write_input(spark, tmp_path)
     out = str(tmp_path / "out_crash")
     table = out + "/table"
-    run_sliced(spark, inp, out, transform, n_slices=2, table_format="tablelog")
+    run_sliced(spark, inp, out, transform, n_slices=2)
     n1 = spark.read.parquet(inp).count()
 
     _time.sleep(1.1)
@@ -398,14 +404,10 @@ def test_tablelog_replace_converges_after_crash_between_delete_and_append(
         slice_predicate(0, 2, "conv_id") & (F.col("_gen") != marker0),
         ["conv_id", "_gen"],
     )
-    import shutil
-
     shutil.rmtree(out + "/_manifests")  # crash also lost the manifests
     assert tl.read_snapshot(spark, table).count() < n1  # mid-crash state
 
-    rerun = run_sliced(
-        spark, inp, out, transform, n_slices=2, table_format="tablelog"
-    )
+    rerun = run_sliced(spark, inp, out, transform, n_slices=2)
     assert [m.slice_id for m in rerun] == [0, 1]
     snap = tl.read_snapshot(spark, table)
     assert snap.count() == n2
@@ -413,35 +415,82 @@ def test_tablelog_replace_converges_after_crash_between_delete_and_append(
     assert len(gens) == 2 and all("|n=2|" in g for g in gens)
 
 
-def test_resume_never_trusts_other_sink_formats_manifests(spark, tmp_path):
-    """A parquet-era slice manifest must not satisfy a tablelog resume (it
-    would skip every slice and leave the table uncreated) — and vice
-    versa: switching --table-format re-runs all slices against the new
-    sink."""
-    from blogparser_spark.job import transform
+def test_resume_after_wiped_table_rebuilds_it(spark, tmp_path, capsys):
+    """Slice manifests never mark a slice done: with the table wiped and
+    the manifests kept, a --resume run re-commits every slice and the
+    table again holds exactly the input's rows."""
+    from blogparser_spark import job
     from blogparser_spark.operators import tablelog as tl
-    from blogparser_spark.operators.checkpoint import run_sliced
 
     inp = _write_input(spark, tmp_path)
-    out = str(tmp_path / "out_fmt")
-    first = run_sliced(
-        spark, inp, out, transform, n_slices=2, table_format="parquet"
-    )
-    assert [m.slice_id for m in first] == [0, 1]
-    n = spark.read.parquet(inp).count()
+    out = str(tmp_path / "out_wiped")
+    assert job.main(["--input", inp, "--output", out, "--slices", "2"]) == 0
+    r1 = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    shutil.rmtree(out + "/table")
+    assert os.listdir(out + "/_manifests")
+    assert job.main(
+        ["--input", inp, "--output", out, "--slices", "2", "--resume"]
+    ) == 0
+    r2 = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    assert r2["slices_run"] == [0, 1] and r2["table_version"] == 2
+    assert r2["sink_counts"] == r1["sink_counts"]
+    cols = ["conv_id", "turn_idx"]
+    got = tl.read_snapshot(spark, out + "/table").select(cols)
+    want = spark.read.parquet(inp).select(cols)
+    assert got.count() == want.count()
+    assert got.exceptAll(want).count() == 0 and want.exceptAll(got).count() == 0
 
-    # switch to tablelog with resume: the parquet manifests must NOT
-    # mark slices done — the table gets created and fully populated
-    rerun = run_sliced(
-        spark, inp, out, transform, n_slices=2, table_format="tablelog"
-    )
-    assert [m.slice_id for m in rerun] == [0, 1]
-    assert all(m.table_format == "tablelog" for m in rerun)
-    assert tl.read_snapshot(spark, out + "/table").count() == n
 
-    # and back: tablelog manifests don't satisfy a parquet resume
-    rerun2 = run_sliced(
-        spark, inp, out, transform, n_slices=2, table_format="parquet"
-    )
-    assert [m.slice_id for m in rerun2] == [0, 1]
-    assert spark.read.parquet(out + "/slice=*").count() == n
+def test_resume_after_fresh_run_and_lost_manifests_reruns_nothing(
+    spark, tmp_path, capsys
+):
+    """A resume=False run commits nonce-suffixed markers of the current
+    generation; after its manifests are lost, a --resume run must still
+    find every slice committed: zero re-runs, the version unchanged."""
+    from blogparser_spark import job
+    from blogparser_spark.operators import tablelog as tl
+
+    inp = _write_input(spark, tmp_path)
+    out = str(tmp_path / "out_nonce")
+    table = out + "/table"
+    assert job.main(["--input", inp, "--output", out, "--slices", "2"]) == 0
+    r1 = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    assert all("|run=" in m for m in tl.committed_markers(table))
+    v = tl.current_version(table)
+    shutil.rmtree(out + "/_manifests")
+    assert job.main(
+        ["--input", inp, "--output", out, "--slices", "2", "--resume"]
+    ) == 0
+    r2 = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    assert r2["slices_run"] == []
+    assert tl.current_version(table) == v
+    assert r2["sink_counts"] == r1["sink_counts"]
+
+
+def test_run_sliced_accepts_only_the_tablelog_sink(spark, tmp_path):
+    from blogparser_spark.job import transform
+    from blogparser_spark.operators.checkpoint import run_sliced
+
+    with pytest.raises(ValueError, match="table_format"):
+        run_sliced(spark, "unused", str(tmp_path / "o"), transform, table_format="parquet")
+    assert not os.path.exists(tmp_path / "o")
+
+
+def test_job_commits_empty_slices(spark, tmp_path, capsys):
+    """More slices than conversations leaves slices empty; each still
+    commits its marker with zero rows, and the report counts every row."""
+    from blogparser_spark import job
+    from blogparser_spark.operators import tablelog as tl
+    from blogparser_spark.sources.synthetic import transcripts_df
+
+    inp = str(tmp_path / "three_convs")
+    transcripts_df(spark, n_convs=3, turns_per_conv=3, hot_convs=0).write.parquet(inp)
+    out = str(tmp_path / "out_empty")
+    assert job.main(["--input", inp, "--output", out, "--slices", "8"]) == 0
+    *lines, report = [json.loads(x) for x in capsys.readouterr().out.strip().splitlines()]
+    assert [x["slice_id"] for x in lines] == list(range(8))
+    assert sum(x["rows_in"] == 0 for x in lines) >= 5
+    assert report["rows_in"] == 9
+    assert report["table_version"] == 8 and report["n_convs"] == 3
+    assert sum(report["sink_counts"].values()) == 9
+    assert len(tl.committed_markers(out + "/table")) == 8

@@ -21,7 +21,11 @@ from blogparser_spark.operators.aggregate import (
     turn_features,
 )
 from blogparser_spark.operators.enrich import ROLE_CHANNEL, TOOL_CATEGORY, enrich
-from blogparser_spark.operators.route import with_sink_id, write_routed
+from blogparser_spark.operators.route import (
+    read_routed_tablelog,
+    route_commit_tablelog,
+    with_sink_id,
+)
 from blogparser_spark.oracle.pyref import parse_record
 
 
@@ -91,24 +95,27 @@ def test_enrich_equals_dict_lookup(spark, ansi):
 
 
 def test_routed_row_set_equality(enriched, transcripts, tmp_path, spark):
-    """Write the fan-out, read every sink back, assert the union equals the
-    input row set exactly (exceptAll both directions empty)."""
-    out = str(tmp_path / "routed")
-    write_routed(with_sink_id(enriched), out, fmt="parquet")
-    back = spark.read.parquet(out)
+    """Commit the fan-out to the table, read every sink back, assert the
+    union equals the input row set exactly (exceptAll both directions
+    empty) and a single-sink read holds exactly that sink's rows."""
+    table = str(tmp_path / "routed")
+    route_commit_tablelog(with_sink_id(enriched), table, marker="batch-0")
+    back = read_routed_tablelog(spark, table)
     assert back.count() == transcripts.count()
     a = back.select("conv_id", "turn_idx", "text")
     b = transcripts.select("conv_id", "turn_idx", "text")
     assert a.exceptAll(b).count() == 0
     assert b.exceptAll(a).count() == 0
-    # partition pruning works: single-sink read sees only its rows
-    one = spark.read.parquet(out).filter(
-        (F.col("channel") == "inbound") & (F.col("parse_status") == "ok")
-    )
+    # per-sink read: exactly the enriched frame's rows of that sink
+    cols = ["conv_id", "turn_idx", "channel", "parse_status"]
+    one = read_routed_tablelog(
+        spark, table, channel="inbound", parse_status="ok"
+    ).select(cols)
     want = enriched.filter(
         (F.col("channel") == "inbound") & (F.col("parse_status") == "ok")
-    ).count()
-    assert one.count() == want
+    ).select(cols)
+    assert one.count() == want.count() > 0
+    assert one.exceptAll(want).count() == 0 and want.exceptAll(one).count() == 0
 
 
 def test_conv_stats(enriched, transcripts):
@@ -181,78 +188,6 @@ def test_funnel_strict_ordering(spark):
     assert (2, "click") not in steps and (3, "purchase") not in steps
 
 
-def test_compact_routed_sink(spark, tmp_path):
-    """Compaction collapses a fragmented sink to files_per_sink files per
-    partition, keeps every row, and preserves the pruning layout."""
-    import os
-
-    from blogparser_spark.operators.enrich import enrich
-    from blogparser_spark.operators.parse import parse_stage
-    from blogparser_spark.operators.route import (
-        compact_routed_sink,
-        read_sink,
-        with_sink_id,
-        write_routed,
-    )
-    from blogparser_spark.sources.synthetic import transcripts_df
-
-    df = with_sink_id(enrich(parse_stage(transcripts_df(spark, n_convs=30, turns_per_conv=4))))
-    n_rows = df.count()
-    src = str(tmp_path / "frag")
-    # three micro-batch-style appends fragment every touched sink
-    third = F.pmod(F.hash("conv_id"), F.lit(3))
-    write_routed(df.filter(third == 0), src)
-    write_routed(df.filter(third == 1), src, mode="append")
-    write_routed(df.filter(third == 2), src, mode="append")
-    dest = str(tmp_path / "compact")
-    stats = compact_routed_sink(spark, src, dest, files_per_sink=1)
-
-    assert stats["rows"] == n_rows
-    assert stats["files_after"] < stats["files_before"]
-    # exactly one file per leaf partition dir
-    for root, dirs, names in os.walk(dest):
-        if not dirs:
-            assert sum(1 for n in names if n.endswith(".parquet")) == 1, root
-    # row-set equality and intact partition pruning
-    a = spark.read.parquet(src).select("conv_id", "turn_idx", "parse_status")
-    b = spark.read.parquet(dest).select("conv_id", "turn_idx", "parse_status")
-    assert a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0
-    pruned = read_sink(spark, dest, parse_status="ok")
-    plan = pruned._jdf.queryExecution().executedPlan().toString()
-    assert "parse_status" in plan.split("PartitionFilters")[1].split("]")[0]
-
-
-def test_apply_retention_deletes(spark, tmp_path):
-    """Tombstoned conversations vanish entirely; everything else survives
-    byte-identical; the rewrite keeps the partition layout."""
-    from blogparser_spark.operators.enrich import enrich
-    from blogparser_spark.operators.parse import parse_stage
-    from blogparser_spark.operators.route import (
-        apply_retention_deletes,
-        with_sink_id,
-        write_routed,
-    )
-    from blogparser_spark.sources.synthetic import transcripts_df
-
-    df = with_sink_id(enrich(parse_stage(transcripts_df(spark, n_convs=20, turns_per_conv=4))))
-    src = str(tmp_path / "sink")
-    write_routed(df, src)
-    gone = spark.read.parquet(src).select("conv_id").distinct().limit(3)
-    gone_ids = {r["conv_id"] for r in gone.collect()}
-
-    dest = str(tmp_path / "scrubbed")
-    stats = apply_retention_deletes(spark, src, dest, gone)
-
-    out = spark.read.parquet(dest)
-    assert stats["rows_before"] == stats["rows_deleted"] + stats["rows_after"]
-    assert stats["rows_deleted"] > 0
-    assert out.filter(F.col("conv_id").isin(gone_ids)).count() == 0
-    kept_src = spark.read.parquet(src).filter(~F.col("conv_id").isin(gone_ids))
-    cols = ["conv_id", "turn_idx", "parse_status", "sink_id"]
-    assert kept_src.select(cols).exceptAll(out.select(cols)).count() == 0
-    assert out.select(cols).exceptAll(kept_src.select(cols)).count() == 0
-
-
 def test_diff_datasets_and_sample_keys(spark):
     """Null-safe diffing: value→NULL counts as changed; added/removed keys
     split into only_right/only_left; sample keys name the culprits."""
@@ -312,40 +247,3 @@ def test_additive_state_merge_equals_from_scratch(spark):
         want[r.k] = (c + 1, s + Decimal(str(round(r.v, 2))))
     for r in scratch.collect():
         assert (r.cnt, r.vsum) == want[r.k]
-
-
-def test_consistent_shard_minimal_movement(spark):
-    import hashlib
-
-    from pyspark.sql import functions as F
-
-    from blogparser_spark.operators.route import consistent_shard_assign
-
-    df = spark.createDataFrame([(i,) for i in range(2000)], "k long")
-    a = {
-        r.k: (r.key_hash, r.shard)
-        for r in consistent_shard_assign(df, "k", n_shards=8).collect()
-    }
-    b = {
-        r.k: r.shard
-        for r in consistent_shard_assign(df, "k", n_shards=9).collect()
-    }
-    assert len(a) == len(b) == 2000
-    # python ring twin for n=8
-    ring = sorted(
-        (int(hashlib.md5(f"ring:{s}:{v}".encode()).hexdigest()[:13], 16), s)
-        for s in range(8)
-        for v in range(32)
-    )
-    for k, (kh, shard) in a.items():
-        want_kh = int(hashlib.md5(f"ring#{k}".encode()).hexdigest()[:13], 16)
-        assert kh == want_kh
-        nxt = [s for pt, s in ring if pt >= kh]
-        assert shard == (nxt[0] if nxt else ring[0][1]), k
-    # elasticity: growing 8 -> 9 shards moves ~1/9 of keys, never most
-    moved = sum(1 for k in a if a[k][1] != b[k])
-    assert moved / 2000 < 2.5 / 9, moved  # ideal 1/9 with vnode variance
-    assert moved > 0
-    # all 8 / 9 shards receive keys (vnodes balance the ring)
-    assert len({s for _, s in a.values()}) == 8
-    assert len(set(b.values())) == 9

@@ -1,7 +1,7 @@
 """Physical-plan assertions — the scale contract, checked in CI:
-partition pruning on sink reads, ONE Python boundary in the parse stage,
-no join or exchange for the transcript dims, broadcast (not shuffle) joins
-for table dims, parquet filter pushdown."""
+ONE Python boundary in the parse stage, no join or exchange for the
+transcript dims, broadcast (not shuffle) joins for table dims, parquet
+filter pushdown, table reads linear in their delete files."""
 
 from __future__ import annotations
 
@@ -32,21 +32,28 @@ def test_enrich_adds_no_join_or_exchange(spark, transcripts):
     assert "Exchange" not in plan
 
 
-def test_sink_read_partition_pruning(spark, transcripts, tmp_path):
-    from blogparser_spark.operators.enrich import enrich
-    from blogparser_spark.operators.parse import parse_stage
-    from blogparser_spark.operators.route import read_sink, with_sink_id, write_routed
+def test_equality_deletes_keep_the_read_plan_linear(spark, tmp_path):
+    """Each equality delete adds ONE anti-join to a table read: the
+    delete's sequence scope rides the join condition, so k deletes never
+    multiply the table's scans (a split-and-union per delete read the
+    data 2^k times — a re-sliced job's per-slice deletes made the table
+    unreadable). A key re-appended after its delete survives."""
+    from pyspark.sql import functions as F
 
-    out = str(tmp_path / "routed")
-    write_routed(with_sink_id(enrich(parse_stage(transcripts))), out)
-    df = read_sink(spark, out, channel="inbound", parse_status="ok")
-    plan = _plan(df)
-    # equality filters on partition columns must prune at the source, and the
-    # pruned partition columns must not survive as post-scan filters
-    assert "PartitionFilters" in plan
-    assert "channel#" in plan.split("PartitionFilters", 1)[1][:400]
-    rows = df.select("channel", "parse_status").distinct().collect()
-    assert all(r["channel"] == "inbound" and r["parse_status"] == "ok" for r in rows)
+    from blogparser_spark.operators import tablelog as tl
+
+    t = str(tmp_path / "t")
+    tl.append(spark, t, spark.range(0, 40).selectExpr("id", "id % 10 AS k"))
+    for k in range(8):
+        tl.delete_where(spark, t, F.col("k") == k, ["k"])
+        if k == 0:
+            tl.append(spark, t, spark.range(100, 101).selectExpr("id", "0L AS k"))
+    df = tl.read_snapshot(spark, t)
+    plan = df._jdf.queryExecution().optimizedPlan().toString()
+    assert plan.count("Relation") <= 2 * (8 + 2)
+    assert sorted(r.id for r in df.collect()) == [
+        i for i in range(40) if i % 10 >= 8
+    ] + [100]
 
 
 def test_parquet_filter_pushdown(spark, sf_dir):

@@ -277,29 +277,27 @@ def test_append_idempotent_marker(spark, tmp_path):
     assert tl.committed_markers(t) == {"slice-0", "slice-1"}
 
 
-def test_route_commit_tablelog_matches_write_routed(spark, parsed, tmp_path):
-    """The tablelog-routed table must hold exactly the rows the parquet
-    partitionBy fan-out holds, per sink, with idempotent re-commit."""
+def test_route_commit_tablelog_matches_enriched_frame(spark, parsed, tmp_path):
+    """The tablelog-routed table must hold exactly the enriched frame's
+    rows, per sink, with idempotent re-commit."""
     from blogparser_spark.operators.enrich import enrich
     from blogparser_spark.operators.route import (
         read_routed_tablelog,
-        read_sink,
         route_commit_tablelog,
         with_sink_id,
-        write_routed,
     )
 
     enriched = with_sink_id(enrich(parsed))
     t = str(tmp_path / "routed_log")
-    p = str(tmp_path / "routed_pq")
-    write_routed(enriched, p)
     v, did = route_commit_tablelog(enriched, t, marker="batch-0")
     assert did and v == 1
     v2, did2 = route_commit_tablelog(enriched, t, marker="batch-0")
     assert not did2 and v2 == 1  # restart re-submission is a no-op
 
     sink = dict(channel="inbound", tool_category="retrieval", parse_status="ok")
-    a = read_sink(spark, p, **sink).select("conv_id", "turn_idx")
+    a = enriched.filter(
+        " AND ".join(f"{k} = '{v}'" for k, v in sink.items())
+    ).select("conv_id", "turn_idx")
     b = read_routed_tablelog(spark, t, **sink).select("conv_id", "turn_idx")
     assert a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0
     # whole-table row parity too
