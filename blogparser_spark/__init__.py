@@ -11,7 +11,8 @@ The reference's per-document extraction DAG (title/date/categories/tags/body/
 summary/images — see parser/parser.go:64-154) becomes:
 
   parse      one Arrow-vectorized pandas UDF applying the priority-ordered
-             regex banks + native-Column clean/validate/summarize stages
+             regex banks and the clean/validate/summarize rules per row,
+             fail-fast; only the date parse stays native-Column code
   enrich     two literal-map lookups (tool→category, role→channel; the
              analog of posWeights, parser/summary.go:23-30): no join
   route      commit each slice to ONE snapshot-log table as a few files

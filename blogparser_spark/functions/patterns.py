@@ -652,12 +652,11 @@ SUMMARY_ELLIPSIS = "・・・"
 SENTENCE_DELIM = "。"  # splitSentences, summary.go:244-254
 
 # DOM .Text() entity decoding for the summary path: summary.go:102-106
-# re-parses the cleaned HTML and text extraction unescapes entities. The
-# summary is derived NATIVELY from the body column, so the decode must be a
-# Column-expressible replace chain — this basic set covers the renderer's
-# own escape output (reencode_entities) plus the common source spellings;
-# &amp; decodes LAST so double-escaped sequences resolve one level, like a
-# DOM. Shared by text.strip_tags (Spark) and pyref.strip_to_text (oracle).
+# re-parses the cleaned HTML and text extraction unescapes entities. This
+# basic set covers the renderer's own escape output (reencode_entities)
+# plus the common source spellings; &amp; decodes LAST so double-escaped
+# sequences resolve one level, like a DOM. Used by pyref.strip_to_text,
+# which the parse kernel calls for every summary.
 BASIC_ENTITIES: tuple[tuple[str, str], ...] = (
     ("&lt;", "<"),
     ("&gt;", ">"),

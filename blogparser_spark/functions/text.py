@@ -1,9 +1,12 @@
 """Native-Column text functions — the (N) mappings from SURVEY.md §2.
 
 Everything here stays JVM-side (whole-stage codegen): regexp_replace chains,
-higher-order array functions, try_to_timestamp coalesce. These are used both
-inside the transcript pipeline (post-UDF stages) and by the driver-contract
-queries over the testdata `documents` table.
+higher-order array functions, try_to_timestamp coalesce. The transcript
+pipeline uses only the date parse (parse_stage's created_at, from the
+kernel's raw candidates): the parse kernel returns the final title, slug,
+summary and cleaned lists itself, through the pyref functions. The rest
+serve the driver-contract queries over the testdata `documents` table
+(queries.py) and the BM25 summary (operators/summary_bm25.py).
 """
 
 from __future__ import annotations
@@ -22,26 +25,6 @@ def collapse_ws(col: Column) -> Column:
     return F.trim(F.regexp_replace(col, r"\s+", " "))
 
 
-def normalize_lines(col: Column) -> Column:
-    """normalizeHTML (parser/content.go:116-136): CRLF→LF, trim lines, drop
-    empties, join with \\n, trim — as one native chain."""
-    c = F.regexp_replace(col, r"\r\n?", "\n")
-    c = F.regexp_replace(c, r"(?m)^[ \t\f\v]+|[ \t\f\v]+$", "")  # trim each line
-    c = F.regexp_replace(c, r"\n{2,}", "\n")  # drop empty lines
-    return F.trim(c)
-
-
-def strip_tags(col: Column) -> Column:
-    """doc.Text() analog: markup → space, entities decoded (the DOM parser
-    the reference re-parses through decodes text nodes — BASIC_ENTITIES is
-    the Column-expressible chain, shared verbatim with the oracle), collapse
-    (summary.go:102-106)."""
-    c = F.regexp_replace(col, r"<[^>]+>", " ")
-    for ent, ch in P.BASIC_ENTITIES:
-        c = F.replace(c, F.lit(ent), F.lit(ch))
-    return collapse_ws(c)
-
-
 # ----------------------------------------------------------------- title ---
 
 
@@ -53,22 +36,6 @@ def clean_title(col: Column) -> Column:
     c = F.regexp_replace(c, '"', '\\\\"')
     c = F.replace(c, F.lit(P.SITE_NAME_SUFFIX), F.lit(""))
     return F.trim(c)
-
-
-def is_valid_title(col: Column) -> Column:
-    """parser/title.go:90-109: non-empty ∧ no <> ∧ no control chars
-    (\\t\\n\\r allowed)."""
-    return (
-        (col.isNotNull())
-        & (col != "")
-        & ~col.rlike("[<>]")
-        & ~col.rlike("[\\x00-\\x08\\x0b\\x0c\\x0e-\\x1f]")
-    )
-
-
-def is_valid_content(col: Column) -> Column:
-    """parser/content.go:139-151 — **byte** semantics via octet_length."""
-    return col.isNotNull() & (F.octet_length(col) >= P.MIN_CONTENT_BYTES)
 
 
 # --------------------------------------------------------------- summary ---
@@ -83,11 +50,6 @@ def truncate_summary(col: Column) -> Column:
     ).otherwise(col)
 
 
-def summarize_truncation(body_col: Column) -> Column:
-    """strip tags → collapse ws → truncate (A1 fast path + A2)."""
-    return truncate_summary(strip_tags(body_col))
-
-
 def split_sentences(col: Column, delim: str = P.SENTENCE_DELIM) -> Column:
     """splitSentences (summary.go:244-254): split on 。 (or a caller-supplied
     delimiter regex), trim, drop empties."""
@@ -95,16 +57,6 @@ def split_sentences(col: Column, delim: str = P.SENTENCE_DELIM) -> Column:
         F.transform(F.split(col, delim), lambda s: F.trim(s)),
         lambda s: s != "",
     )
-
-
-def is_sentence_end(surface: Column, pos: Column | None = None) -> Column:
-    """A10 isSentenceEnd (summary.go:257-271) as a Column predicate:
-    sentence-final punctuation, or POS 記号-句点 / 記号-終助詞 (the jpos
-    label form of the reference's features[0]+'-'+features[1])."""
-    punct = surface.isin("。", "！", "？", ".", "!", "?")
-    if pos is None:
-        return punct
-    return punct | pos.isin("記号-句点", "記号-終助詞")
 
 
 # ------------------------------------------------------------------ slug ---
@@ -141,33 +93,3 @@ def pick_date(candidates: Column) -> Column:
     # try_element_at: no parseable candidate → NULL, not an ANSI
     # INVALID_ARRAY_INDEX on the empty filtered array
     return F.try_element_at(F.filter(parsed, lambda t: t.isNotNull()), F.lit(1))
-
-
-# ------------------------------------------------------------------ tags ---
-
-
-def clean_tag(col: Column) -> Column:
-    """parser/tag.go:113-134 as a native chain (used via transform()):
-    deletes the BARE site name (tag.go:118) and strips exactly ONE leading
-    '#' (TrimPrefix, tag.go:127)."""
-    c = F.trim(col)
-    c = F.replace(c, F.lit(P.SITE_NAME), F.lit(""))
-    c = F.replace(c, F.lit("ブログ"), F.lit(""))
-    c = F.regexp_replace(c, r"\n", " ")
-    c = F.regexp_replace(c, "^#", "")
-    return collapse_ws(c)
-
-
-def clean_category(col: Column) -> Column:
-    """parser/category.go:114-141 as a native chain."""
-    c = collapse_ws(F.regexp_replace(col, r"\n", " "))
-    pref = "|".join(P.CATEGORY_PREFIXES)
-    return F.trim(F.regexp_replace(c, f"^({pref})", ""))
-
-
-def finalize_string_array(col: Column, cleaner) -> Column:
-    """clean each element, drop empties, order-preserving dedup
-    (array_distinct keeps first occurrence — parser/category.go:166-168)."""
-    return F.array_distinct(
-        F.filter(F.transform(col, cleaner), lambda s: s != "")
-    )

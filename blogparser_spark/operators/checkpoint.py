@@ -168,6 +168,16 @@ def _marker_base(marker: str) -> str:
     return base if sep else marker
 
 
+def _same_keyspace(marker: str, slice_id: int, n_slices: int, key_col: str) -> bool:
+    """True iff `marker` is a slice marker of this slice under this slicing
+    (any input snapshot, any nonce): all its rows lie in the slice's
+    keyspace, so the slice's replace delete removes every one of them."""
+    base = _marker_base(marker)
+    return base.startswith(f"slice={slice_id}|snap=") and base.endswith(
+        f"|n={n_slices}|key={key_col}"
+    )
+
+
 _EMPTY_RELATION_RULE = (
     "org.apache.spark.sql.execution.adaptive.AQEPropagateEmptyRelation"
 )
@@ -236,7 +246,11 @@ def run_sliced(
     re-run slice first equality-deletes the other-generation rows of ITS
     OWN keyspace — under the CURRENT hash predicate, so coverage over all
     current slices is complete even when n_slices changed — then appends;
-    the table converges to exactly the current generation. Mid-migration
+    the table converges to exactly the current generation. The delete
+    retires the ledger markers of that keyspace (this slice under this
+    slicing, any snapshot or nonce), whose rows it removes in full, so a
+    crash between the delete and the append re-runs the slice instead of
+    skipping it on a marker whose rows are gone. Mid-migration
     readers may see mixed generations between slice commits; a run needing
     all-or-nothing publication should stage on a branch and fast_forward
     (tablelog WAP) instead."""
@@ -245,7 +259,8 @@ def run_sliced(
     snapshot = input_snapshot_id(spark, input_path)
     table = os.path.join(output_base, "table")
     nonce = "" if resume else uuid.uuid4().hex[:8]
-    committed = {_marker_base(m) for m in tl.committed_markers(table)}
+    ledger = tl.committed_markers(table)
+    committed = {_marker_base(m) for m in ledger}
     current = [slice_marker(s, snapshot, n_slices, key_col) for s in range(n_slices)]
     stale_gens = bool(committed - set(current))
     replace = stale_gens or (not resume and bool(committed))
@@ -288,6 +303,9 @@ def run_sliced(
                     table,
                     slice_predicate(s, n_slices, key_col) & (F.col("_gen") != marker),
                     [key_col, "_gen"],
+                    retire_markers=tuple(
+                        m for m in ledger if _same_keyspace(m, s, n_slices, key_col)
+                    ),
                 )
             table_version, _ = route_commit_tablelog(
                 out.withColumn("_slice", F.lit(s)).withColumn("_gen", F.lit(marker)),

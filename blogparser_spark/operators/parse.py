@@ -1,30 +1,33 @@
-"""The parse stage: one extraction UDF + native post-stages.
+"""The parse stage: one parse UDF returning the final fields, then a
+native date parse.
 
 The reference rebuilds a DOM three times per document and recompiles its
 regexes per call (parser/parser.go:68, clean_content.go:61, summary.go:102,
 title.go:28); here the text column crosses the JVM↔Python boundary exactly
 once, through a single pandas UDF that maps one per-row function over each
-Arrow batch. That function calls the oracle's own extractors
-(blogparser_spark.oracle.pyref, over the module-level compiled regex bank
-in blogparser_spark.functions.patterns) behind per-row literal needle
-gates, so the kernel and the oracle share one implementation of every
-extraction rule. Everything downstream — validity gates, status derivation,
-date parsing, summary truncation, slug, first-image selection — is native
-Column code (whole-stage codegen).
+Arrow batch. That function follows pyref.parse_record's fail-fast order and
+calls the oracle's own functions (blogparser_spark.oracle.pyref, over the
+module-level compiled regex bank in blogparser_spark.functions.patterns):
+title cleaning and validity, slug, the content extractors behind per-row
+literal needle gates, cleaning, summary, and the category/tag cleanup, so
+the kernel and the oracle share one implementation of every rule. It
+returns the final status, title, slug, body, summary, categories and tags.
+Only the date stays native: the raw candidates cross the boundary and
+parse_stage parses them as Column code, because strptime per candidate
+costs more in CPython than the whole try_to_timestamp chain in Spark.
 
 The output is asserted equal to pyref row-by-row in
 tests/test_parse_stage.py, which also checks every needle gate against
-the ungated oracle extractors.
+the ungated oracle.
 """
 
 from __future__ import annotations
 
 import pandas as pd
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     ArrayType,
-    BooleanType,
     StringType,
     StructField,
     StructType,
@@ -44,18 +47,17 @@ IMAGE_TYPE = StructType(
     ]
 )
 
-EXTRACT_TYPE = StructType(
+PARSED_TYPE = StructType(
     [
-        StructField("title", StringType()),  # cleaned; null if not found
-        StructField("title_found", BooleanType()),
-        # the raw selected candidate (pre-clean body) stays Python-side:
-        # only content_found derives from it, so serializing it to the JVM
-        # would ship a near-duplicate of `body` per row for nothing
-        StructField("content_found", BooleanType()),
-        StructField("body", StringType()),  # after cleaning bank ('' if emptied)
-        StructField("categories", ArrayType(StringType())),  # raw, pre-clean
-        StructField("tags", ArrayType(StringType())),  # raw, pre-clean
-        StructField("date_candidates", ArrayType(StringType())),  # priority order
+        StructField("parse_status", StringType()),
+        StructField("title", StringType()),  # cleaned; null unless valid
+        StructField("slug", StringType()),  # '' unless the title is valid
+        StructField("body", StringType()),  # cleaned; null unless ok/short
+        StructField("summary", StringType()),
+        StructField("categories", ArrayType(StringType())),  # cleaned, deduped
+        StructField("tags", ArrayType(StringType())),  # cleaned, deduped
+        # raw, priority order; parse_stage parses them natively
+        StructField("date_candidates", ArrayType(StringType())),
         StructField("images", ArrayType(IMAGE_TYPE)),
     ]
 )
@@ -130,40 +132,6 @@ _DATE_NEEDLES = ("date", "<time", "published_time")
 _IMAGE_NEEDLES = ("og:image", "twitter:image", "<img")
 
 
-def _extract_row(text: str) -> tuple:
-    """One payload → one EXTRACT_TYPE row, through the oracle's own
-    extractors (field order follows EXTRACT_TYPE)."""
-    lower = text.lower()
-    title = pyref.extract_title(text)
-    content = _extract_content(text, lower)
-    return (
-        None if title is None else pyref.clean_title(title),
-        title is not None,
-        content is not None,
-        None if content is None else pyref.clean_content(content),
-        pyref.extract_categories(text)
-        if any(n in lower for n in P.CATEGORY_GATE_NEEDLES)
-        else [],
-        pyref.extract_tags(text) if any(n in lower for n in P.TAG_GATE_NEEDLES) else [],
-        _date_candidates(text) if any(n in lower for n in _DATE_NEEDLES) else [],
-        _images_rows(text) if any(n in lower for n in _IMAGE_NEEDLES) else [],
-    )
-
-
-@F.pandas_udf(EXTRACT_TYPE)
-def extract_udf(texts: pd.Series) -> pd.DataFrame:
-    """The single JVM↔Python boundary of the parse stage: one per-row
-    function mapped over the Arrow batch. A per-row substring test skips
-    each extractor a row cannot feed, where whole-batch pandas passes
-    would scan every row for patterns that fire on few."""
-    # per-record error isolation (parser.go's per-file loop never aborts the
-    # run): a NULL text must ROUTE (no_title) rather than fail the batch
-    texts = texts.fillna("")
-    return pd.DataFrame.from_records(
-        [_extract_row(t) for t in texts], columns=EXTRACT_TYPE.names
-    )
-
-
 STATUS_OK = "ok"
 STATUSES = (
     STATUS_OK,
@@ -175,72 +143,90 @@ STATUSES = (
 )
 
 
-def _status(e: Column) -> Column:
-    """Fail-fast gate order of parser/parser.go:64-154 as one CASE chain."""
-    valid_title = T.is_valid_title(e["title"])
+def _parse_row(text: str) -> tuple:
+    """One payload → one PARSED_TYPE row (field order follows
+    PARSED_TYPE), in pyref.parse_record's fail-fast order
+    (parser/parser.go:64-154): a row stops at its failing gate, so no
+    extractor runs for a field the row's status would discard. A failed
+    row carries NULL/empty for everything downstream of its gate; the
+    summary is computed before the post-clean validity gate
+    (parser.go:95 vs :100-102), so short_content rows still have one."""
+    raw_title = pyref.extract_title(text)
+    if raw_title is None:
+        return ("no_title", None, "", None, None, [], [], None, None)
+    title = pyref.clean_title(raw_title)
+    if not pyref.is_valid_title(title):
+        return ("invalid_title", None, "", None, None, [], [], None, None)
+    slug = pyref.set_slug(title)
+    lower = text.lower()
+    content = _extract_content(text, lower)
+    if content is None:
+        return ("no_content", title, slug, None, None, [], [], None, None)
+    body = pyref.clean_content(content)
+    if not body:
+        return ("empty_after_clean", title, slug, None, None, [], [], None, None)
+    summary = pyref.summarize_truncation(body)
+    if not pyref.is_valid_content(body):
+        return ("short_content", title, slug, body, summary, [], [], None, None)
     return (
-        F.when(~e["title_found"], "no_title")
-        .when(~valid_title, "invalid_title")
-        .when(~e["content_found"], "no_content")
-        .when(e["body"] == "", "empty_after_clean")
-        .when(F.octet_length(e["body"]) < P.MIN_CONTENT_BYTES, "short_content")
-        .otherwise(STATUS_OK)
+        STATUS_OK,
+        title,
+        slug,
+        body,
+        summary,
+        pyref.finalize_categories(text)
+        if any(n in lower for n in P.CATEGORY_GATE_NEEDLES)
+        else [],
+        pyref.finalize_tags(text)
+        if any(n in lower for n in P.TAG_GATE_NEEDLES)
+        else [],
+        _date_candidates(text) if any(n in lower for n in _DATE_NEEDLES) else [],
+        _images_rows(text) if any(n in lower for n in _IMAGE_NEEDLES) else [],
+    )
+
+
+@F.pandas_udf(PARSED_TYPE)
+def extract_udf(texts: pd.Series) -> pd.DataFrame:
+    """The single JVM↔Python boundary of the parse stage: one per-row
+    function mapped over the Arrow batch. A per-row substring test skips
+    each extractor a row cannot feed, where whole-batch pandas passes
+    would scan every row for patterns that fire on few."""
+    # per-record error isolation (parser.go's per-file loop never aborts the
+    # run): a NULL text must ROUTE (no_title) rather than fail the batch
+    texts = texts.fillna("")
+    return pd.DataFrame.from_records(
+        [_parse_row(t) for t in texts], columns=PARSED_TYPE.names
     )
 
 
 def parse_stage(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """transcripts → parsed: adds title, slug, body, summary, categories,
-    tags, created_at, first_image, images, parse_status.
+    """transcripts → parsed: adds parse_status, title, slug, body, summary,
+    categories, tags, created_at, first_image, images.
 
-    Field availability per status mirrors the reference's fail-fast error
-    returns (parser/parser.go:74-154): failed rows carry NULL/empty for
-    everything downstream of the failing gate; a date that doesn't parse is
-    non-fatal (created_at NULL, parser.go:131-134); summary is computed
-    before the post-clean validity gate (parser.go:95 vs :100-102), so
-    short_content rows still have one.
+    Every field but the date comes out of the kernel final (_parse_row).
+    A date that doesn't parse is non-fatal (created_at NULL,
+    parser.go:131-134); rows that are not ok carry no date candidates and
+    no images, so their created_at and images are NULL and their
+    first_image is ''.
     """
-    e = F.col("_ex")
-    status = F.col("parse_status")
-    title_ok = ~status.isin("no_title", "invalid_title")
-    body_ok = status.isin(STATUS_OK, "short_content")
-    fully_ok = status == STATUS_OK
-
-    out = (
-        df.withColumn("_ex", extract_udf(F.col(text_col)))
-        .withColumn("parse_status", _status(e))
-        .withColumn("title", F.when(title_ok, e["title"]))
-        .withColumn("slug", F.when(title_ok, T.slugify(e["title"])).otherwise(F.lit("")))
-        .withColumn("body", F.when(body_ok, e["body"]))
-        .withColumn("summary", F.when(body_ok, T.summarize_truncation(e["body"])))
-        .withColumn(
-            "categories",
-            F.when(
-                fully_ok,
-                # clean → validity filter (parser/parser.go:110-116) → dedup
-                F.array_distinct(
-                    F.filter(
-                        F.transform(e["categories"], T.clean_category),
-                        lambda s: T.is_valid_title(s),
-                    )
+    p = F.col("_parsed")
+    return (
+        df.withColumn("_parsed", extract_udf(F.col(text_col)))
+        .withColumns(
+            {
+                "parse_status": p["parse_status"],
+                "title": p["title"],
+                "slug": p["slug"],
+                "body": p["body"],
+                "summary": p["summary"],
+                "categories": p["categories"],
+                "tags": p["tags"],
+                "created_at": T.pick_date(p["date_candidates"]),
+                "first_image": F.coalesce(
+                    F.try_element_at(p["images"], F.lit(1))["url"], F.lit("")
                 ),
-            ).otherwise(F.array().cast("array<string>")),
+                "images": p["images"],
+            }
         )
-        .withColumn(
-            "tags",
-            F.when(
-                fully_ok, T.finalize_string_array(e["tags"], T.clean_tag)
-            ).otherwise(F.array().cast("array<string>")),
-        )
-        .withColumn(
-            "created_at", F.when(fully_ok, T.pick_date(e["date_candidates"]))
-        )
-        .withColumn(
-            "first_image",
-            F.when(fully_ok, F.coalesce(e["images"][0]["url"], F.lit(""))).otherwise(
-                F.lit("")
-            ),
-        )
-        .withColumn("images", F.when(fully_ok, e["images"]))
-        .drop("_ex")
+        .drop("_parsed")
     )
-    return out

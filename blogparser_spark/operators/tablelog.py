@@ -1159,7 +1159,8 @@ def _read_projected(
     mapping; each group is one scan projected to (current name, current
     type): renamed columns read their old name, dropped ids are simply not
     selected, missing ids null-fill, widened types cast. Non-evolved states
-    skip all of this and take the single mergeSchema scan. `with_pos`
+    skip all of this and take one scan under the state's schema (a file
+    that lacks a column reads it as NULL). `with_pos`
     (default: auto, on iff the state carries position-delete files) selects
     the parquet `_metadata.row_index` ordinal as a `_pos` column — the row
     identity position deletes anti-join on; it must be captured AT the scan
@@ -1172,7 +1173,8 @@ def _read_projected(
     if not state.get("evolved") and fields is None:
         if not entries:
             return _empty_df(spark, _field_pairs(_fields_of(state)))
-        df = _read_files(spark, sorted(e["path"] for e in entries))
+        paths = sorted(e["path"] for e in entries)
+        df = _read_files(spark, paths, state.get("schema"))
         return df.select("*", *pos_col) if with_pos else df
     fields = fields or _fields_of(state)
     if not entries:
@@ -1969,14 +1971,24 @@ def add_files(
     )
 
 
-def committed_markers(table: str) -> set[str]:
-    """Markers of every retained commit — the resume ledger."""
-    out = set()
+def _marker_ledger(table: str) -> dict[str, int]:
+    """marker → version of the first retained commit carrying it, replayed
+    in commit order: a delete commit's `retired_markers` drop the markers
+    whose rows it removed, so a later append may carry them again."""
+    out: dict[str, int] = {}
     for v in list_versions(table):
-        m = _read_commit(table, v).get("marker")
-        if m is not None:
-            out.add(m)
+        c = _read_commit(table, v)
+        for m in c.get("retired_markers", ()):
+            out.pop(m, None)
+        if c.get("marker") is not None:
+            out.setdefault(c["marker"], v)
     return out
+
+
+def committed_markers(table: str) -> set[str]:
+    """Markers of the retained commits that no later delete retired — the
+    resume ledger."""
+    return set(_marker_ledger(table))
 
 
 def commit_summary(table: str, version: int) -> dict | None:
@@ -2006,9 +2018,9 @@ def append_idempotent(
     in-flight markers is the scheduler's contract (run_sliced runs each
     slice once); the ledger protects RESTARTS, not two concurrent writers
     racing the same marker."""
-    for v in list_versions(table):
-        if _read_commit(table, v).get("marker") == marker:
-            return v, False
+    v = _marker_ledger(table).get(marker)
+    if v is not None:
+        return v, False
     return append(spark, table, df, marker=marker, **kwargs), True
 
 
@@ -2140,12 +2152,19 @@ def discard_staged(table: str, stage_id: str) -> int:
 
 
 def delete_where(
-    spark: SparkSession, table: str, condition, key_cols: list[str]
+    spark: SparkSession,
+    table: str,
+    condition,
+    key_cols: list[str],
+    retire_markers: tuple[str, ...] = (),
 ) -> int:
     """Equality delete: materialize the DISTINCT key tuples matching
     `condition` into a small delete file and commit it — no data file is
     rewritten. Readers anti-join; compaction folds it away. The delete's
-    sequence number scopes it to data files committed strictly before it."""
+    sequence number scopes it to data files committed strictly before it.
+    `retire_markers` names the append markers whose rows the delete
+    removes; the commit records them, so the marker ledger
+    (committed_markers, append_idempotent) no longer counts them."""
     cur = _head(table, "main")
     if cur is None:
         raise LookupError(f"cannot delete from empty table {table}")
@@ -2167,6 +2186,8 @@ def delete_where(
         "ts": time.time(),
         "added_deletes": entries,
     }
+    if retire_markers:
+        commit["retired_markers"] = sorted(retire_markers)
     if not _try_commit(table, commit):
         raise CommitConflict(f"delete conflicted at version {version}: {table}")
     return version
@@ -2947,7 +2968,14 @@ def remove_orphans(table: str, min_age_sec: float = 0.0) -> int:
 # ---------------------------------------------------------------------------
 
 
-def _read_files(spark: SparkSession, paths: list[str]) -> DataFrame:
+def _read_files(
+    spark: SparkSession, paths: list[str], schema: list[list[str]] | None = None
+) -> DataFrame:
+    """Scan parquet files. With `schema` ([[name, type]], a state's
+    schema) the read needs no footer: a mergeSchema read runs one Spark
+    job to infer the schema before any action."""
+    if schema:
+        return spark.read.schema(_ddl(schema)).parquet(*paths)
     return spark.read.option("mergeSchema", "true").parquet(*paths)
 
 
@@ -3074,9 +3102,12 @@ def _anti_join_scoped(
     )
 
 
+def _ddl(schema: list[list[str]]) -> str:
+    return ", ".join(f"`{n}` {t}" for n, t in schema)
+
+
 def _empty_df(spark: SparkSession, schema: list[list[str]] | None) -> DataFrame:
-    ddl = ", ".join(f"{n} {t}" for n, t in (schema or [["dummy", "int"]]))
-    return spark.createDataFrame([], ddl)
+    return spark.createDataFrame([], _ddl(schema or [["dummy", "int"]]))
 
 
 def read_snapshot(

@@ -2,9 +2,10 @@
 
 Each function mirrors one operator from SURVEY.md §2 (Go source cited per
 function). They are the ground truth the Spark pipeline is asserted against
-in tests, and the parse UDF (blogparser_spark.operators.parse) calls the
-extractors directly on each row, behind literal needle gates of its own.
-The functions here stay ungated, so the parity tests check every gate.
+in tests, and the parse UDF (blogparser_spark.operators.parse) calls them
+directly on each row in parse_record's fail-fast order, with literal
+needle gates of its own in front of the extractors. The functions here
+stay ungated, so the parity tests check every gate.
 
 Timezone convention: aware datetimes are normalized to naive UTC so they
 compare exactly against Spark TimestampType values under
@@ -434,9 +435,10 @@ def is_sentence_end(surface: str, features: tuple[str, ...] | None = None) -> bo
 
 def strip_to_text(html: str) -> str:
     """doc.Find('body').Text() analog (summary.go:106) + ws normalization.
-    Entity decode mirrors the Spark replace chain EXACTLY (same constants,
-    same order) — not html.unescape — because the summary is derived
-    natively from the body column and the two engines must agree."""
+    Entities decode through the fixed BASIC_ENTITIES replace chain (same
+    constants, same order), not html.unescape, so the summary's decoding
+    is pinned to the renderer's own escapes. The parse kernel computes
+    every summary through this function; nothing derives it natively."""
     t = P.STRIP_TAGS.sub(" ", html)
     for ent, ch in P.BASIC_ENTITIES:
         t = t.replace(ent, ch)

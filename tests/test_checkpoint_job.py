@@ -415,6 +415,39 @@ def test_tablelog_replace_converges_after_crash_between_delete_and_append(
     assert len(gens) == 2 and all("|n=2|" in g for g in gens)
 
 
+def test_crashed_fresh_run_after_a_delete_resumes_that_slice(
+    spark, tmp_path, monkeypatch
+):
+    """A resume=False run deletes each slice's rows before it appends them
+    again. A crash between the two must take the slice's earlier marker
+    out of the ledger with its rows: the resumed run then re-runs the
+    slice, and the table ends with exactly the input's rows."""
+    from blogparser_spark.job import transform
+    from blogparser_spark.operators import checkpoint
+    from blogparser_spark.operators import tablelog as tl
+
+    inp = _write_input(spark, tmp_path)
+    out = str(tmp_path / "out_fresh_crash")
+    table = out + "/table"
+    checkpoint.run_sliced(spark, inp, out, transform, n_slices=2)
+    n = spark.read.parquet(inp).count()
+
+    def crash(*_args, **_kwargs):
+        raise RuntimeError("crashed before the append")
+
+    with monkeypatch.context() as m:
+        m.setattr(checkpoint, "route_commit_tablelog", crash)
+        with pytest.raises(RuntimeError, match="crashed before the append"):
+            checkpoint.run_sliced(spark, inp, out, transform, n_slices=2, resume=False)
+    assert tl.read_snapshot(spark, table).count() < n  # slice 0 deleted
+
+    rerun = checkpoint.run_sliced(spark, inp, out, transform, n_slices=2)
+    assert [x.slice_id for x in rerun] == [0]
+    snap = tl.read_snapshot(spark, table)
+    assert snap.count() == n
+    assert snap.select("conv_id", "turn_idx").distinct().count() == n
+
+
 def test_resume_after_wiped_table_rebuilds_it(spark, tmp_path, capsys):
     """Slice manifests never mark a slice done: with the table wiped and
     the manifests kept, a --resume run re-commits every slice and the

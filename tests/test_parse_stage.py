@@ -12,6 +12,15 @@ from test_fuzz_parity import CONTAINERS, FRAGMENTS
 from blogparser_spark.oracle.pyref import parse_record
 
 
+# every kernel-test payload opens with a valid title and carries enough
+# body, so its row passes the fail-fast gates and reaches the extractor
+# under test; markup-free payloads get their title from an ld_blog_vars
+# object, the one title source without '<'
+TITLE = "<h1>Gate title</h1>"
+PLAIN_TITLE = "ld_blog_vars = { articles : [ { title : 'plain ld' } ] };"
+PAD = " alpha" * 20
+
+
 def test_parse_stage_matches_oracle(parsed):
     rows = parsed.orderBy("conv_id", "turn_idx").collect()
     assert len(rows) > 500
@@ -86,17 +95,22 @@ def test_content_fast_path_defers_to_balanced_semantics():
 
     pad = "word " * 40  # ≥100 bytes of plain body
     payloads = [
-        f'<div id="content">{pad}</main>tail after mismatched close {pad}',
-        f'<span itemprop="articleBody">{pad}</div>trailing {pad}',
-        f'<div class="entry-content"/>{pad}</div>extra {pad}',
-        f"<DIV id='content'>{pad}</SECTION>cased mismatch {pad}",
+        TITLE + p
+        for p in (
+            f'<div id="content">{pad}</main>tail after mismatched close {pad}',
+            f'<span itemprop="articleBody">{pad}</div>trailing {pad}',
+            f'<div class="entry-content"/>{pad}</div>extra {pad}',
+            f"<DIV id='content'>{pad}</SECTION>cased mismatch {pad}",
+        )
     ]
     got = extract_udf.func(pd.Series(payloads))
     for i, p in enumerate(payloads):
         want = pyref.extract_content(p)
+        rec = pyref.parse_record(p)
+        assert (got["parse_status"].iloc[i] != "no_content") == (want is not None), (i, want)
+        assert got["parse_status"].iloc[i] == rec.parse_status, i
         g = got["body"].iloc[i]
-        assert got["content_found"].iloc[i] == (want is not None), (i, want)
-        assert (pd.isna(g) and want is None) or g == pyref.clean_content(want), (i, g, want)
+        assert (g is None and want is None) or g == pyref.clean_content(want), (i, g, want)
 
 
 def test_null_text_routes_per_record(spark):
@@ -155,9 +169,11 @@ def test_clean_content_needle_spliced_by_comment_removal():
         f'<div class="google-auto-placed">AD</div>{pad}',  # plain needle
         pad,  # bank-free row
     ]
-    # each payload is the whole inner of an <article> container, so the
-    # kernel's content extraction hands it to the cleaning bank as is
-    got = extract_udf.func(pd.Series([f"<article>{p}</article>" for p in payloads]))["body"]
+    # each payload is the whole inner of an <article> container behind a
+    # valid title, so the kernel hands it to the cleaning bank as is
+    got = extract_udf.func(
+        pd.Series([f"{TITLE}<article>{p}</article>" for p in payloads])
+    )["body"]
     for i, p in enumerate(payloads):
         want = pyref.clean_content(p)
         assert got.iloc[i] == want, (i, got.iloc[i], want)
@@ -210,17 +226,23 @@ def _fragment(bank: list[str]):
 _FRAGMENT = _fragment(FRAGMENTS + GATE_FRAGMENTS)
 _PAYLOAD = st.one_of(
     st.builds(
-        lambda head, container, body: "".join(head) + container.format(body="".join(body)),
+        lambda head, container, body: TITLE
+        + "".join(head)
+        + container.format(body="".join(body) + PAD),
         st.lists(_FRAGMENT, max_size=5),
         st.sampled_from(CONTAINERS + GATE_CONTAINERS),
         st.lists(_FRAGMENT, max_size=5),
     ),
     # markup-free payloads take the kernel's plain-text branch
-    st.lists(_fragment([f for f in FRAGMENTS if "<" not in f]), min_size=1).map("".join),
+    st.lists(_fragment([f for f in FRAGMENTS if "<" not in f]), min_size=1).map(
+        lambda frags: PLAIN_TITLE + "".join(frags) + PAD
+    ),
 )
 
 
 def _assert_kernel_matches_ungated_oracle(payloads: list[str]) -> None:
+    """Each kernel row equals the ungated pyref.parse_record, plus the raw
+    date candidates and images that ok rows carry for parse_stage."""
     import pandas as pd
 
     from blogparser_spark.operators.parse import _date_candidates, extract_udf
@@ -228,33 +250,37 @@ def _assert_kernel_matches_ungated_oracle(payloads: list[str]) -> None:
 
     got = extract_udf.func(pd.Series(payloads)).to_dict("records")
     for text, g in zip(payloads, got):
-        title = pyref.extract_title(text)
-        content = pyref.extract_content(text)
+        rec = pyref.parse_record(text)
+        ok = rec.parse_status == "ok"
         want = {
-            "title": None if title is None else pyref.clean_title(title),
-            "title_found": title is not None,
-            "content_found": content is not None,
-            "body": None if content is None else pyref.clean_content(content),
-            "categories": pyref.extract_categories(text),
-            "tags": pyref.extract_tags(text),
-            "date_candidates": _date_candidates(text),
-            "images": [vars(im) for im in pyref.extract_images(text)],
+            "parse_status": rec.parse_status,
+            "title": rec.title,
+            "slug": rec.slug,
+            "body": rec.body,
+            "summary": rec.summary,
+            "categories": rec.categories,
+            "tags": rec.tags,
+            "date_candidates": _date_candidates(text) if ok else None,
+            "images": [vars(im) for im in pyref.extract_images(text)] if ok else None,
         }
         assert g == want, text
 
 
 def test_kernel_gates_match_ungated_oracle_one_fragment():
-    """Every field of the parse kernel equals the UNGATED oracle
-    extractors on every single fragment, alone and inside every content
-    container (each payload has one way into each gate, so a needle the
-    kernel dropped shows here): each per-row needle gate is a necessary
-    condition, never a filter that drops a match."""
-    pad = " alpha" * 20
+    """Every field of the parse kernel equals the UNGATED oracle on every
+    single fragment, inside every content container and in the head before
+    one, and as the whole of a markup-free body (each payload has one way
+    into each gate, so a needle the kernel dropped shows here): each
+    per-row needle gate is a necessary condition, never a filter that
+    drops a match."""
     frags = [f.format(w="beta", n=7) for f in FRAGMENTS + GATE_FRAGMENTS]
-    payloads = [
-        c.format(body=f + pad) for f in frags for c in CONTAINERS + GATE_CONTAINERS
-    ] + frags
-    _assert_kernel_matches_ungated_oracle(payloads + [p.upper() for p in payloads])
+    payloads = (
+        [TITLE + c.format(body=f + PAD) for f in frags for c in CONTAINERS + GATE_CONTAINERS]
+        + [f"{TITLE}{f}<article>{PAD}</article>" for f in frags]
+        + [PLAIN_TITLE + f + PAD for f in frags if "<" not in f]
+    )
+    rows = payloads + [p.upper() for p in payloads]
+    _assert_kernel_matches_ungated_oracle(rows)
 
 
 @settings(max_examples=150, deadline=None)

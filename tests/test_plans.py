@@ -20,6 +20,18 @@ def test_single_python_boundary_in_pipeline(spark, transcripts):
     )
 
 
+def test_parse_stage_plan_is_one_kernel_and_no_strip_tags_chain(spark, transcripts):
+    """parse_stage crosses into Python once and takes the summary, slug,
+    status and cleaned lists from the kernel: no strip-tags regex is left
+    in the JVM plan, where a status CASE nesting it wrote the chain out
+    (and evaluated it) once per reference."""
+    from blogparser_spark.operators.parse import parse_stage
+
+    plan = _plan(parse_stage(transcripts))
+    assert plan.count("ArrowEvalPython") == 1
+    assert "<[^>]+>" not in plan
+
+
 def test_enrich_adds_no_join_or_exchange(spark, transcripts):
     """The transcript dims are literal-map projections: the parse→enrich
     plan holds no join of any kind and no Exchange, so the fact side never

@@ -138,6 +138,31 @@ def test_schema_enforcement_and_evolution(spark, tmp_path):
     assert rows[0] is None and rows[7] == 1.5
 
 
+def test_read_frames_are_built_without_a_spark_job(spark, tmp_path):
+    """read_snapshot and scan_where read under the state's schema, so
+    building their DataFrames runs no schema-inference job (a mergeSchema
+    read runs one per call, before any action). Counted via the status
+    tracker over a dedicated job group; a file written before a column
+    was added still reads it as NULL."""
+    t = str(tmp_path / "t")
+    tl.append(spark, t, _batch(spark, 0, 5), stats_cols=("event_id",))
+    extra = _batch(spark, 5, 10).withColumn("score", F.lit(1.5))
+    tl.append(spark, t, extra, stats_cols=("event_id",), allow_evolution=True)
+    sc = spark.sparkContext
+    sc.setJobGroup("tl-build-frames", "building tablelog read frames")
+    try:
+        snap = tl.read_snapshot(spark, t)
+        hit = tl.scan_where(spark, t, {"event_id": ("between", 3, 7)})
+    finally:
+        sc.setJobGroup("tl-build-frames-done", "")
+    assert sc.statusTracker().getJobIdsForGroup("tl-build-frames") == []
+    assert snap.columns == ["event_id", "user_id", "event_type", "score"]
+    rows = {r.event_id: r.score for r in snap.collect()}
+    assert sorted(rows) == list(range(10))
+    assert rows[0] is None and rows[7] == 1.5
+    assert _ids(hit) == list(range(3, 8))
+
+
 def test_append_retries_on_commit_race(spark, tmp_path):
     t = str(tmp_path / "t")
     tl.append(spark, t, _batch(spark, 0, 5))
