@@ -251,9 +251,7 @@ def run_sliced(
     slicing, any snapshot or nonce), whose rows it removes in full, so a
     crash between the delete and the append re-runs the slice instead of
     skipping it on a marker whose rows are gone. Mid-migration
-    readers may see mixed generations between slice commits; a run needing
-    all-or-nothing publication should stage on a branch and fast_forward
-    (tablelog WAP) instead."""
+    readers may see mixed generations between slice commits."""
     if table_format != "tablelog":
         raise ValueError(f"unknown table_format {table_format!r}: the sink is tablelog")
     snapshot = input_snapshot_id(spark, input_path)

@@ -33,12 +33,6 @@ needs falls out of that one structure:
   only the files whose range overlaps a predicate — partition-pruning
   semantics without a partition column (pairs with the z-order layout in
   operators/storage.write_zordered).
-- **Named refs** (Iceberg branches and tags): tags pin snapshots by name
-  (and against expiry); branches are writable lineages forked off main —
-  commits stamped with the branch chain off its head and are invisible to
-  main readers because state replay follows PARENT POINTERS, not the
-  version sequence. `fast_forward` publishes a branch into main as one
-  atomic diff commit — the branch-WAP pattern for audit-then-publish.
 
 Concurrency is optimistic, exactly like Iceberg's commit-if-absent on the
 metadata pointer: a commit is `os.link(tmp, log/v{N}.json)`, which fails if
@@ -53,7 +47,6 @@ Layout on disk:
   <table>/deletes/c{version:06d}/part-*.parquet  equality-delete key files
   <table>/log/v{version:012d}.json               one commit per version
   <table>/log/_base_v{version:012d}.json         rebase state after expiry
-  <table>/log/ref-{name}.json                    named ref (branch/tag)
 """
 
 from __future__ import annotations
@@ -1084,7 +1077,7 @@ def evolve_schema(
     if set(rename) & set(drop):
         raise ValueError(f"column(s) both renamed and dropped: {set(rename) & set(drop)}")
     for _ in range(max_retries):
-        cur = _head(table, "main")
+        cur = current_version(table)
         if cur is None:
             raise LookupError(f"cannot evolve schema of empty table {table}")
         _, state = _state_at(table, cur)
@@ -1203,208 +1196,6 @@ def _read_projected(
 
 
 # ---------------------------------------------------------------------------
-# named refs (Iceberg branches and tags)
-# ---------------------------------------------------------------------------
-
-_REF_NAME_RE = re.compile(r"[A-Za-z0-9][A-Za-z0-9._\-]*$")
-
-
-def _ref_path(table: str, name: str) -> str:
-    return os.path.join(_log_dir(table), f"ref-{name}.json")
-
-
-def _read_ref(table: str, name: str) -> dict:
-    path = _ref_path(table, name)
-    if not os.path.exists(path):
-        raise LookupError(f"unknown ref {name!r} on table {table}")
-    with open(path) as f:
-        return json.load(f)
-
-
-def list_refs(table: str) -> dict[str, dict]:
-    """Every named ref: {name: {"type": "branch"|"tag", "version": int}}.
-    `version` is a tag's pinned snapshot, or a branch's CREATION point —
-    branch heads are derived from the log (branch_head), never stored, so
-    a ref update needs no second atomic primitive: winning the commit race
-    IS the head advance."""
-    try:
-        names = os.listdir(_log_dir(table))
-    except OSError:
-        return {}
-    out = {}
-    for n in sorted(names):
-        if n.startswith("ref-") and n.endswith(".json"):
-            with open(os.path.join(_log_dir(table), n)) as f:
-                r = json.load(f)
-            out[r["name"]] = r
-    return out
-
-
-def _head(table: str, branch: str = "main") -> int | None:
-    """Head of a branch's commit chain: the newest commit stamped with the
-    branch name (commits carry no stamp on main). For a named branch with
-    no commits yet, the creation-point version. None for an empty main."""
-    created = None
-    if branch != "main":
-        ref = _read_ref(table, branch)
-        if ref["type"] != "branch":
-            raise ValueError(f"ref {branch!r} is a tag, not a branch: {table}")
-        created = ref["version"]
-    head = None
-    for v in list_versions(table):
-        if _read_commit(table, v).get("branch", "main") == branch:
-            head = v
-    return head if head is not None else created
-
-
-def resolve_ref(table: str, ref: str) -> int:
-    """Ref name → snapshot version: a tag's pinned version, a branch's
-    derived head, or the main head. Pass the result as `version=` to any
-    read path (read_snapshot, scan_where, incremental scans)."""
-    if ref == "main":
-        h = _head(table, "main")
-        if h is None:
-            raise LookupError(f"main branch has no commits: {table}")
-        return h
-    r = _read_ref(table, ref)
-    if r["type"] == "tag":
-        return r["version"]
-    h = _head(table, ref)
-    assert h is not None  # branch refs always carry a creation version
-    return h
-
-
-def _create_ref(table: str, name: str, kind: str, version: int | None) -> int:
-    if name == "main" or not _REF_NAME_RE.match(name):
-        raise ValueError(f"invalid ref name {name!r}")
-    versions = list_versions(table)
-    at = (_head(table, "main") if version is None else version)
-    if at is None or at not in versions:
-        raise LookupError(f"cannot create ref at unknown version {at}: {table}")
-    os.makedirs(_log_dir(table), exist_ok=True)
-    tmp = os.path.join(_log_dir(table), f".tmp-{uuid.uuid4().hex}.json")
-    with open(tmp, "w") as f:
-        json.dump({"name": name, "type": kind, "version": at, "ts": time.time()}, f)
-        f.flush()
-        os.fsync(f.fileno())
-    try:
-        os.link(tmp, _ref_path(table, name))
-    except FileExistsError:
-        raise ValueError(f"ref {name!r} already exists on table {table}") from None
-    finally:
-        os.unlink(tmp)
-    return at
-
-
-def create_tag(table: str, name: str, version: int | None = None) -> int:
-    """Immutable named pointer to a snapshot (Iceberg tag): time travel by
-    name, and — exactly like Iceberg's ref retention — expire_snapshots
-    never expires a tagged snapshot while the tag exists. Atomic create
-    via the same link-if-absent primitive as commits; returns the pinned
-    version."""
-    return _create_ref(table, name, "tag", version)
-
-
-def create_branch(table: str, name: str, version: int | None = None) -> int:
-    """Named writable lineage forked at `version` (default: main head).
-    Commits made with `append(..., branch=name)` are stamped with the
-    branch and chain off its head — INVISIBLE to main readers, because
-    state replay follows parent pointers, not the version sequence. The
-    audit-then-publish flow is create_branch → append(branch=...) →
-    read_snapshot(ref=...) → fast_forward (Iceberg's branch-WAP pattern).
-    Returns the fork version."""
-    return _create_ref(table, name, "branch", version)
-
-
-def drop_ref(table: str, name: str) -> None:
-    """Remove a tag or branch pointer. A dropped branch's commits remain
-    in the log (time-travelable by version) until expiry stops pinning
-    them; its data files are swept once no retained commit references
-    them."""
-    path = _ref_path(table, name)
-    if not os.path.exists(path):
-        raise LookupError(f"unknown ref {name!r} on table {table}")
-    os.unlink(path)
-
-
-def fast_forward(table: str, branch: str, max_retries: int = 5) -> int:
-    """Publish a branch into main (Iceberg's fast-forward): ONE atomic
-    commit on main whose net file changes re-point main's live state at
-    the branch head's — no data rewrite, and like rollback_to the
-    re-added entries keep the sequence numbers they had when their rows
-    became visible on the branch, so MoR delete scoping replays exactly.
-    History is preserved: the branch commits stay time-travelable and the
-    fast-forward is itself a commit (auditable in snapshot_lineage).
-    Readers of main see the whole branch or none of it. Chunked branch
-    commits publish AS CHUNK REFS, not re-inlined entries — the WAP flow
-    (stage a huge chunked append on a branch, audit, fast_forward) keeps
-    its two-level manifests on main, so planning stays O(chunks).
-    Returns the new main version."""
-    src = resolve_ref(table, branch)
-    _, target = _state_at(table, src)
-    tgt_chunks = _state_at(table, src, expand=False)[1].get("chunks", {})
-    for _ in range(max_retries):
-        cur = _head(table, "main")
-        now = (
-            _state_at(table, cur)[1]
-            if cur is not None
-            else {"data": {}, "deletes": {}, "schema": None}
-        )
-        now_chunks = (
-            _state_at(table, cur, expand=False)[1].get("chunks", {})
-            if cur is not None
-            else {}
-        )
-        # branch-only chunk refs pass through verbatim (original seq —
-        # MoR scoping replays exactly); their members drop out of the
-        # inline adds, and members the branch later removed ride the
-        # commit's removed_data so replay filters them
-        added_refs = {m: r for m, r in tgt_chunks.items() if m not in now_chunks}
-        ref_members = {
-            e["path"]
-            for r in added_refs.values()
-            for e in _load_chunk_entries(table, r)
-        }
-        commit = {
-            "version": (current_version(table) or 0) + 1,
-            "parent": cur,
-            "operation": "fast_forward",
-            "ts": time.time(),
-            "from_ref": branch,
-            "from_version": src,
-            "schema": target["schema"],
-            "fields": _fields_of(target),
-            "last_field_id": target.get("last_field_id", 0),
-            "evolved": bool(target.get("evolved")),
-            "added_data": [
-                e
-                for p, e in target["data"].items()
-                if p not in now["data"] and p not in ref_members
-            ]
-            + list(added_refs.values()),
-            "removed_data": sorted(
-                [p for p in now["data"] if p not in target["data"]]
-                + [p for p in ref_members if p not in target["data"]]
-            ),
-            "added_deletes": [
-                e for p, e in target["deletes"].items() if p not in now["deletes"]
-            ],
-            "removed_deletes": sorted(
-                p for p in now["deletes"] if p not in target["deletes"]
-            ),
-        }
-        gone = sorted(m for m in now_chunks if m not in tgt_chunks)
-        if gone:
-            commit["removed_manifests"] = gone
-        if _try_commit(table, commit):
-            return commit["version"]
-    raise CommitConflict(
-        f"fast_forward of {branch!r} lost the commit race {max_retries} "
-        f"times: {table}"
-    )
-
-
-# ---------------------------------------------------------------------------
 # snapshot state replay
 # ---------------------------------------------------------------------------
 
@@ -1412,18 +1203,15 @@ def fast_forward(table: str, branch: str, max_retries: int = 5) -> int:
 def _state_at(
     table: str, version: int | None = None, expand: bool = True
 ) -> tuple[int, dict]:
-    """Replay the ANCESTRY CHAIN of `version` (default: the main branch
-    head). Returns (version, state) where state = {"data": {path: entry},
-    "deletes": {path: entry}, "schema": [...]}.
+    """Replay the commits up to `version` (default: the newest). Returns
+    (version, state) where state = {"data": {path: entry}, "deletes":
+    {path: entry}, "schema": [...]}.
 
-    Replay follows `parent` pointers rather than the linear version
-    sequence: with branch refs, commits on other branches share the global
-    version sequence but are NOT ancestors of main, so a main reader must
-    never fold them in. For a branch-free table the parent chain IS the
-    linear sequence, so this is exactly the old behavior. The walk stops
-    early at any version carrying a rebase base file (the persisted state
-    at that version, written by expiry wherever the chain is truncated),
-    keeping replay O(retained chain length).
+    The walk follows `parent` pointers back from `version` (on the linear
+    log each commit's parent is the version before it) and stops early at
+    any version carrying a rebase base file (the persisted state at that
+    version, written by expiry wherever the chain is truncated), keeping
+    replay O(retained commits).
 
     expand=False keeps chunked commits' manifest refs UNRESOLVED in
     state["chunks"] ({manifest relpath: summary ref}) with any
@@ -1434,18 +1222,13 @@ def _state_at(
     versions = list_versions(table)
     if not versions:
         raise LookupError(f"no commits in table log: {table}")
-    if version is None:
-        target = _head(table, "main")
-        if target is None:
-            raise LookupError(f"main branch has no commits: {table}")
-    else:
-        target = version
-        if target not in versions:
-            if target < versions[0]:
-                raise SnapshotExpired(
-                    f"version {version} expired (oldest retained: {versions[0]})"
-                )
-            raise LookupError(f"unknown version {version} for table {table}")
+    target = versions[-1] if version is None else version
+    if target not in versions:
+        if target < versions[0]:
+            raise SnapshotExpired(
+                f"version {version} expired (oldest retained: {versions[0]})"
+            )
+        raise LookupError(f"unknown version {version} for table {table}")
 
     retained = set(versions)
     state: dict = {"data": {}, "deletes": {}, "schema": None}
@@ -1469,7 +1252,7 @@ def _state_at(
             break
         if v not in retained:
             raise SnapshotExpired(
-                f"commit v{v} on the ancestry chain of v{target} expired: {table}"
+                f"commit v{v} on the chain of v{target} expired: {table}"
             )
         c = _read_commit(table, v)
         chain.append(c)
@@ -1519,20 +1302,15 @@ def _state_at(
 def _chain_between(
     table: str, from_version: int, to_version: int | None
 ) -> tuple[int, list[dict]]:
-    """The ancestry-chain commits in (from_version, to_version], oldest
-    first (to_version defaults to the main head). Walking parent pointers
-    — not the linear version sequence — keeps incremental scans correct
-    when branch commits share the version sequence: a main-chain scan
-    never folds in another branch's commits. Raises SnapshotExpired if an
-    in-range chain commit was expired, LookupError if from_version is not
-    an ancestor of to_version (e.g. it belongs to a different branch)."""
+    """The commits in (from_version, to_version], oldest first (to_version
+    defaults to the newest), walked back along parent pointers. Raises
+    SnapshotExpired if an in-range commit was expired, LookupError if
+    from_version is not on the chain of to_version."""
     versions = set(list_versions(table))
     if not versions:
         raise LookupError(f"no commits in table log: {table}")
     if to_version is None:
-        to_version = _head(table, "main")
-        if to_version is None:
-            raise LookupError(f"main branch has no commits: {table}")
+        to_version = max(versions)
     out: list[dict] = []
     v: int | None = to_version
     while v is not None and v > from_version:
@@ -1562,7 +1340,6 @@ def snapshot_lineage(table: str) -> list[dict]:
             {
                 "version": v,
                 "operation": c["operation"],
-                "branch": c.get("branch", "main"),
                 "ts": c.get("ts"),
                 "rows_added": sum(e["rows"] for e in c.get("added_data", [])),
                 "files_added": _added_file_count(c),
@@ -1576,11 +1353,11 @@ def snapshot_lineage(table: str) -> list[dict]:
 
 
 # ---------------------------------------------------------------------------
-# metadata inspection tables (Iceberg's history / files / refs tables)
+# metadata inspection tables (Iceberg's history / files / partitions tables)
 # ---------------------------------------------------------------------------
 #
 # Iceberg exposes table internals as queryable metadata tables
-# (`db.tbl.history`, `.files`, `.snapshots`, `.refs`); these are the
+# (`db.tbl.history`, `.files`, `.snapshots`, `.partitions`); these are the
 # snapshot-log analogs. All three are driver-side LOG scans — cost is
 # O(commits) / O(live files) manifest work, never a data-file read — turned
 # into DataFrames so operators can join, filter, and aggregate table health
@@ -1589,7 +1366,7 @@ def snapshot_lineage(table: str) -> list[dict]:
 
 
 def table_history(spark: SparkSession, table: str) -> DataFrame:
-    """One row per commit on any branch: lineage pointer, operation, and
+    """One row per commit: lineage pointer, operation, and
     added/removed file and row tallies. The DataFrame sibling of
     snapshot_lineage (which returns driver dicts)."""
     rows = []
@@ -1600,7 +1377,6 @@ def table_history(spark: SparkSession, table: str) -> DataFrame:
                 v,
                 c.get("parent"),
                 c["operation"],
-                c.get("branch", "main"),
                 float(c.get("ts") or 0.0),
                 sum(int(e.get("rows", 0)) for e in c.get("added_data", [])),
                 _added_file_count(c),
@@ -1611,7 +1387,7 @@ def table_history(spark: SparkSession, table: str) -> DataFrame:
         )
     return spark.createDataFrame(
         rows,
-        "version int, parent int, operation string, branch string, "
+        "version int, parent int, operation string, "
         "ts double, rows_added bigint, files_added int, files_removed int, "
         "delete_files_added int, delete_files_removed int",
     )
@@ -1692,17 +1468,6 @@ def table_partitions(
         "partition string, n_files int, rows bigint, bytes bigint, "
         "min_seq int, max_seq int",
     )
-
-
-def table_refs(spark: SparkSession, table: str) -> DataFrame:
-    """One row per named ref plus main: kind (branch/tag) and the snapshot
-    version it points at — Iceberg's `refs` metadata table."""
-    rows = [("main", "branch", _head(table, "main"))]
-    for name, ref in sorted(list_refs(table).items()):
-        # a branch row shows its HEAD (derived from the log), not its
-        # creation point; a tag row shows its pinned snapshot
-        rows.append((name, ref["type"], resolve_ref(table, name)))
-    return spark.createDataFrame(rows, "name string, kind string, version int")
 
 
 # ---------------------------------------------------------------------------
@@ -1809,7 +1574,6 @@ def append(
     partition_by: tuple[str, ...] = (),
     marker: str | None = None,
     partition_spec: tuple[str, ...] = (),
-    branch: str = "main",
     bloom_cols: tuple[str, ...] = (),
     ndv_cols: tuple[str, ...] = (),
     manifest_chunk_files: int | None = None,
@@ -1830,17 +1594,12 @@ def append(
     absence even when every file's min/max RANGE overlaps — the skipping
     lever for high-cardinality scattered keys, where clustering is not
     worth a rewrite or another column already owns the sort order.
-    `branch` commits onto a named branch (create_branch) instead of main:
-    the commit takes the global next version number but chains off the
-    BRANCH head, so main readers never see it until fast_forward.
     Commits adding more than `manifest_chunk_files` files (default
     MANIFEST_CHUNK_FILES) record two-level manifests: file entries go to
     chunk files and the commit inlines only per-chunk summaries, so
     planning (plan_scan/scan_where) skips whole chunks by summary.
     The commit records a `summary` (commit_summary) of what it added and
     where its time went."""
-    if branch != "main":
-        _head(table, branch)  # validates the ref exists and is a branch
     version = (current_version(table) or 0) + 1
     timings: dict = {}
     entries = _write_data_files(
@@ -1866,8 +1625,8 @@ def append(
     schema_new = _schema_of(df)
     t0 = time.perf_counter()
     for attempt in range(max_retries):
-        parent = _head(table, branch)
-        version_try = (current_version(table) or 0) + 1
+        parent = current_version(table)
+        version_try = (parent or 0) + 1
         pstate = _state_at(table, parent)[1] if parent is not None else None
         existing = pstate["schema"] if pstate is not None else None
         merged = _check_schema(existing, schema_new, allow_evolution)
@@ -1890,8 +1649,6 @@ def append(
                 commit_retries=attempt,
             ),
         }
-        if branch != "main":
-            commit["branch"] = branch
         if marker is not None:
             commit["marker"] = marker
         if _try_commit(table, commit):
@@ -1946,8 +1703,8 @@ def add_files(
     entries = _file_entries(os.path.abspath(source_dir), stats_cols, 0)
     entries = _maybe_chunk(table, entries, None)
     for _ in range(max_retries):
-        parent = _head(table, "main")
-        version = (current_version(table) or 0) + 1
+        parent = current_version(table)
+        version = (parent or 0) + 1
         pstate = _state_at(table, parent)[1] if parent is not None else None
         existing = pstate["schema"] if pstate is not None else None
         merged = _check_schema(existing, schema_new, allow_evolution)
@@ -2024,133 +1781,6 @@ def append_idempotent(
     return append(spark, table, df, marker=marker, **kwargs), True
 
 
-def _staged_path(table: str, stage_id: str) -> str:
-    return os.path.join(_log_dir(table), f"staged-{stage_id}.json")
-
-
-def staged_ids(table: str) -> list[str]:
-    try:
-        names = os.listdir(_log_dir(table))
-    except OSError:
-        return []
-    return sorted(
-        n[len("staged-") : -len(".json")]
-        for n in names
-        if n.startswith("staged-") and n.endswith(".json")
-    )
-
-
-def stage_append(
-    spark: SparkSession,
-    table: str,
-    df: DataFrame,
-    stats_cols: tuple[str, ...] = (),
-    partition_by: tuple[str, ...] = (),
-    partition_spec: tuple[str, ...] = (),
-) -> str:
-    """Write-audit-publish, stage step (Iceberg's WAP pattern): the data
-    files are written and described by a STAGED manifest that lives
-    outside the version sequence — INVISIBLE to every reader and to time
-    travel. An audit job reads them back (read_staged), runs its quality
-    gates, then either publish_staged turns the manifest into a real
-    atomic append commit or discard_staged removes the files. Bad data
-    never has a snapshot pointing at it. Returns the stage id."""
-    stage_id = uuid.uuid4().hex[:12]
-    entries = _write_data_files(
-        df,
-        table,
-        0,
-        stats_cols,
-        "data",
-        partition_by,
-        parse_partition_spec(partition_spec) if partition_spec else None,
-    )
-    os.makedirs(_log_dir(table), exist_ok=True)
-    staged = {
-        "stage_id": stage_id,
-        "ts": time.time(),
-        "schema": _schema_of(df),
-        "added_data": entries,
-    }
-    tmp = os.path.join(_log_dir(table), f".tmp-{uuid.uuid4().hex}.json")
-    with open(tmp, "w") as f:
-        json.dump(staged, f)
-        f.flush()
-        os.fsync(f.fileno())
-    os.rename(tmp, _staged_path(table, stage_id))
-    return stage_id
-
-
-def _read_staged(table: str, stage_id: str) -> dict:
-    path = _staged_path(table, stage_id)
-    if not os.path.exists(path):
-        raise LookupError(f"unknown or already-resolved stage {stage_id}: {table}")
-    with open(path) as f:
-        return json.load(f)
-
-
-def read_staged(spark: SparkSession, table: str, stage_id: str) -> DataFrame:
-    """The audit surface: exactly the staged files, nothing else."""
-    staged = _read_staged(table, stage_id)
-    paths = [e["path"] for e in staged["added_data"]]
-    if not paths:
-        return _empty_df(spark, staged["schema"])
-    return _read_files(spark, paths)
-
-
-def publish_staged(
-    table: str,
-    stage_id: str,
-    allow_evolution: bool = False,
-    max_retries: int = 5,
-) -> int:
-    """Publish a staged append as a real commit — atomic, no data rewrite
-    (the files are already in place; only their sequence number is stamped
-    with the publish version, so MoR delete scoping counts from PUBLISH
-    time, when the rows became visible). Schema is checked against the
-    table at publish time, not stage time."""
-    staged = _read_staged(table, stage_id)
-    for _ in range(max_retries):
-        cur = _head(table, "main")
-        version = (current_version(table) or 0) + 1
-        pstate = _state_at(table, cur)[1] if cur else None
-        existing = pstate["schema"] if pstate is not None else None
-        merged = _check_schema(existing, staged["schema"], allow_evolution)
-        fields, last_id = _fields_after_write(pstate, merged)
-        entries = [dict(e, seq=version) for e in staged["added_data"]]
-        commit = {
-            "version": version,
-            "parent": cur,
-            "operation": "append",
-            "ts": time.time(),
-            "schema": merged,
-            "fields": fields,
-            "last_field_id": last_id,
-            "added_data": _stamp_cols(entries, fields),
-            "stage_id": stage_id,
-        }
-        if _try_commit(table, commit):
-            os.unlink(_staged_path(table, stage_id))
-            return version
-    raise CommitConflict(
-        f"publish of stage {stage_id} lost the commit race {max_retries} "
-        f"times: {table}"
-    )
-
-
-def discard_staged(table: str, stage_id: str) -> int:
-    """Audit failed: remove the staged files and manifest. Returns the
-    number of data files removed. Readers never saw anything."""
-    staged = _read_staged(table, stage_id)
-    removed = 0
-    for e in staged["added_data"]:
-        if os.path.exists(e["path"]):
-            os.unlink(e["path"])
-            removed += 1
-    os.unlink(_staged_path(table, stage_id))
-    return removed
-
-
 def delete_where(
     spark: SparkSession,
     table: str,
@@ -2165,7 +1795,7 @@ def delete_where(
     `retire_markers` names the append markers whose rows the delete
     removes; the commit records them, so the marker ledger
     (committed_markers, append_idempotent) no longer counts them."""
-    cur = _head(table, "main")
+    cur = current_version(table)
     if cur is None:
         raise LookupError(f"cannot delete from empty table {table}")
     keys = (
@@ -2240,7 +1870,7 @@ def delete_where_positions(spark: SparkSession, table: str, condition) -> int:
     invalidates them, and they compose with equality deletes in the same
     merge-on-read pass. No reference analog (the Go CLI has no storage
     layer, sample/main.go:32-47)."""
-    cur = _head(table, "main")
+    cur = current_version(table)
     if cur is None:
         raise LookupError(f"cannot delete from empty table {table}")
     _, state = _state_at(table, cur)
@@ -2263,7 +1893,7 @@ def dedup_keep_first(
     window is partitioned by the dedup key (bounded per-key state, no
     global sort), and only the redundant rows' (file, pos) pairs are
     written — output is duplicate-sized, not table-sized."""
-    cur = _head(table, "main")
+    cur = current_version(table)
     if cur is None:
         raise LookupError(f"cannot dedup empty table {table}")
     _, state = _state_at(table, cur)
@@ -2288,7 +1918,7 @@ def overwrite(
     """Replace the table's full contents atomically (removes every live
     data and delete file, adds the new files) — readers of older snapshots
     are untouched until expiry."""
-    cur = _head(table, "main")
+    cur = current_version(table)
     _, state = _state_at(table, cur) if cur else (0, {"data": {}, "deletes": {}})
     version = (current_version(table) or 0) + 1
     entries = _write_data_files(df, table, version, stats_cols, "data")
@@ -2330,7 +1960,7 @@ def update_where(
     reads keep-not-prune them — correct, just unpruned until the next
     compact). No reference analog (the Go CLI has no storage layer,
     sample/main.go:32-47)."""
-    cur = _head(table, "main")
+    cur = current_version(table)
     if cur is None:
         raise LookupError(f"cannot update empty table {table}")
     _, state = _state_at(table, cur)
@@ -2398,7 +2028,7 @@ def merge_upsert(
     insert, and a reader sees the whole upsert or none of it. This is
     Iceberg's MERGE INTO with merge-on-read row-level deletes; no data
     file is rewritten."""
-    cur = _head(table, "main")
+    cur = current_version(table)
     version = (current_version(table) or 0) + 1
     pstate = _state_at(table, cur)[1] if cur else None
     existing = pstate["schema"] if pstate is not None else None
@@ -2442,7 +2072,7 @@ def rollback_to(table: str, version: int) -> int:
     itself is one atomic log write. Re-added entries keep their ORIGINAL
     sequence numbers, so merge-on-read delete scoping replays exactly as
     it did at the target version."""
-    cur = _head(table, "main")
+    cur = current_version(table)
     if cur is None:
         raise LookupError(f"cannot roll back empty table {table}")
     _, target = _state_at(table, version)
@@ -2503,7 +2133,7 @@ def compact(
     pre-rewrite manifest entries, so a maintenance rewrite preserves the
     table's filters unless the caller explicitly overrides (pass () to
     drop them)."""
-    cur = _head(table, "main")
+    cur = current_version(table)
     if cur is None:
         raise LookupError(f"cannot compact empty table {table}")
     _, state = _state_at(table, cur)
@@ -2559,7 +2189,7 @@ def compact_binpack(
     bloom_cols/ndv_cols default to the columns sketched in the rewritten
     (small) files' manifest entries — the fold preserves the table's
     filters; pass () explicitly to drop them."""
-    cur = _head(table, "main")
+    cur = current_version(table)
     if cur is None:
         raise LookupError(f"cannot compact empty table {table}")
     _, state = _state_at(table, cur)
@@ -2641,7 +2271,7 @@ def compact_sort(
     bloom_cols/ndv_cols default to the columns sketched in the
     pre-rewrite manifest entries (filters carried forward); pass ()
     explicitly to drop them."""
-    cur = _head(table, "main")
+    cur = current_version(table)
     if cur is None:
         raise LookupError(f"cannot rewrite empty table {table}")
     _, state = _state_at(table, cur)
@@ -2713,7 +2343,7 @@ def rewrite_position_deletes(spark: SparkSession, table: str) -> int | None:
     Returns the commit version, or None with no positional backlog. The
     commit is a row-level no-op: changelog and incremental scans skip it
     like compact."""
-    cur = _head(table, "main")
+    cur = current_version(table)
     if cur is None:
         return None
     _, state = _state_at(table, cur)
@@ -2724,7 +2354,7 @@ def rewrite_position_deletes(spark: SparkSession, table: str) -> int | None:
         [(os.path.abspath(p),) for p in state["data"]], "_file string"
     )
     keys = (
-        _read_files(spark, [e["path"] for e in pos])
+        _read_files(spark, [e["path"] for e in pos], _POS_DELETE_SCHEMA)
         .distinct()
         .join(F.broadcast(live), "_file", "semi")  # drop dangling identities
         .coalesce(1)
@@ -2827,7 +2457,7 @@ def maintenance_plan(
     commits) driver-side metadata — at corpus scale this is the health
     check a table-service cron runs per table, never a data read. An
     empty result means the table is healthy."""
-    cur = _head(table, "main")
+    cur = current_version(table)
     if cur is None:
         return spark.createDataFrame(
             [], "action string, reason string, n int"
@@ -2915,13 +2545,7 @@ def remove_orphans(table: str, min_age_sec: float = 0.0) -> int:
                 referenced.add(e["path"])
         for e in c.get("added_deletes", []):
             referenced.add(e["path"])
-    for sid in staged_ids(table):
-        # staged-but-unpublished WAP files are NOT orphans — an audit may
-        # still be running against them
-        for e in _read_staged(table, sid)["added_data"]:
-            referenced.add(e["path"])
-    # EVERY rebase base still pins its files: branch lineages truncated by
-    # expiry get their own base, not just the oldest retained version's
+    # every rebase base still pins its files
     try:
         base_names = [
             n for n in os.listdir(_log_dir(table)) if n.startswith("_base_v")
@@ -3042,47 +2666,58 @@ def _apply_deletes(
     out_cols = [
         c for c in df.columns if keep_identity or c != "_pos"
     ]
-    evolved = bool(state.get("evolved")) or fields is not None
-    cur = {
-        fid: (n, t) for fid, n, t in (fields or _fields_of(state))
-    } if evolved else {}
-    for (key_cols, dseq), entries in sorted(by_group.items(), key=lambda kv: kv[0][1]):
-        keys = _read_files(spark, [e["path"] for e in entries]).distinct()
+    for (_key_cols, dseq), entries in sorted(by_group.items(), key=lambda kv: kv[0][1]):
+        keys, join_cols = _delete_keys(spark, entries, state, fields)
         small = (
             sum(int(e.get("rows", 0)) for e in entries)
             <= _BROADCAST_DELETE_ROWS
         )
-        if entries[0].get("positional"):
-            # position delete: row identity join, seq <= scope, no schema
-            # translation (file+pos reference nothing evolution can move)
-            data = _anti_join_scoped(
-                data, keys, ["_file", "_pos"], F.col("_seq") <= F.lit(dseq), small
-            )
-            continue
-        join_cols = list(key_cols)
-        if evolved:
-            # delete keys were written under THEIR commit's schema: resolve
-            # each write-time key column by field id to its current name and
-            # type (rename follows, widen casts; a dropped key column means
-            # the delete can no longer be applied — refuse, don't misapply).
-            wcols = _entry_cols(entries[0], state)
-            sel, join_cols = [], []
-            for k in key_cols:
-                fid = wcols.get(k)
-                if fid is None or fid not in cur:
-                    raise ValueError(
-                        f"delete key column {k!r} (seq {dseq}) was dropped "
-                        "by schema evolution; compact before dropping key "
-                        "columns"
-                    )
-                name, typ = cur[fid]
-                sel.append(F.col(k).cast(typ).alias(name))
-                join_cols.append(name)
-            keys = keys.select(*sel).distinct()
-        data = _anti_join_scoped(
-            data, keys, join_cols, F.col("_seq") < F.lit(dseq), small
+        in_scope = (
+            F.col("_seq") <= F.lit(dseq)
+            if entries[0].get("positional")
+            else F.col("_seq") < F.lit(dseq)
         )
+        data = _anti_join_scoped(data, keys, join_cols, in_scope, small)
     return data.select(*out_cols)
+
+
+_POS_DELETE_SCHEMA = [["_file", "string"], ["_pos", "bigint"]]
+
+
+def _delete_keys(
+    spark: SparkSession,
+    entries: list[dict],
+    state: dict,
+    fields: list[list] | None = None,
+) -> tuple[DataFrame, list[str]]:
+    """The distinct keys of one delete group and the columns they join on,
+    read under a known schema so building the frame runs no Spark job.
+    Position deletes read (_file, _pos): file+pos reference nothing
+    evolution can move. Equality-delete keys were written under THEIR
+    commit's schema: each write-time key column resolves by field id to
+    its current name and type in `fields` (default: the state's), so a
+    rename follows and a widen reads the narrower file type widened; a
+    dropped key column means the delete can no longer be applied —
+    refuse, don't misapply."""
+    paths = [e["path"] for e in entries]
+    if entries[0].get("positional"):
+        keys = _read_files(spark, paths, _POS_DELETE_SCHEMA)
+        return keys.distinct(), ["_file", "_pos"]
+    cur = {fid: (n, t) for fid, n, t in (fields or _fields_of(state))}
+    wcols = _entry_cols(entries[0], state)
+    resolved = []
+    for k in entries[0]["key_cols"]:
+        fid = wcols.get(k)
+        if fid is None or fid not in cur:
+            raise ValueError(
+                f"delete key column {k!r} (seq {entries[0]['seq']}) was "
+                "dropped by schema evolution; compact before dropping key "
+                "columns"
+            )
+        resolved.append((k, *cur[fid]))
+    keys = _read_files(spark, paths, [[k, t] for k, _n, t in resolved])
+    keys = keys.select(*[F.col(k).alias(n) for k, n, _t in resolved])
+    return keys.distinct(), [n for _k, n, _t in resolved]
 
 
 def _anti_join_scoped(
@@ -3114,15 +2749,9 @@ def read_snapshot(
     spark: SparkSession,
     table: str,
     version: int | None = None,
-    ref: str | None = None,
 ) -> DataFrame:
-    """Read the table as of `version`, or as of a named `ref` (branch head
-    or tag), defaulting to the main branch head. Planning is a chain
-    replay — no directory listing of the data prefix."""
-    if ref is not None:
-        if version is not None:
-            raise ValueError("pass version OR ref, not both")
-        version = resolve_ref(table, ref)
+    """Read the table as of `version` (default: the newest). Planning is a
+    log replay — no directory listing of the data prefix."""
     _, state = _state_at(table, version)
     if not state["data"]:
         return _empty_df(spark, _field_pairs(_fields_of(state)))
@@ -3154,11 +2783,9 @@ def incremental_append_scan(
     from_version: int,
     to_version: int | None = None,
 ) -> DataFrame:
-    """Exactly the rows appended in (from_version, to_version] on the main
-    chain: the union of the append commits' added files. Compact commits
-    are logical no-ops and are skipped; a fast_forward that only publishes
-    branch appends (no removed files, no deletes) IS an append batch and
-    streams through; overwrite/delete commits cannot be expressed as an
+    """Exactly the rows appended in (from_version, to_version]: the union
+    of the append commits' added files. Compact commits are logical no-ops
+    and are skipped; overwrite/delete commits cannot be expressed as an
     append stream, so they raise — the caller falls back to a full diff
     (operators/diff.diff_datasets), the same contract as Iceberg's
     incremental append scan."""
@@ -3168,12 +2795,7 @@ def incremental_append_scan(
         op = c["operation"]
         if op in ("compact", "evolve_schema", "rewrite_deletes"):
             continue
-        publish_only = (
-            op == "fast_forward"
-            and not c.get("added_deletes")
-            and not c.get("removed_data")
-        )
-        if op != "append" and not publish_only:
+        if op != "append":
             raise ValueError(
                 f"commit v{c['version']} is {op!r}; incremental append scan "
                 "only spans append/compact commits"
@@ -3202,7 +2824,7 @@ def changelog_scan(
     the parent has a sequence number older than the delete, so the
     semi-join is precisely the seq-scoped rule _apply_deletes enforces);
     overwrites emit the full parent as deletes then their files as
-    inserts; compactions are logical no-ops; rollbacks and fast-forwards
+    inserts; compactions are logical no-ops; rollbacks and updates
     emit their net row-level diff vs the parent. The output feeds
     aggregate.apply_retractable_delta so a downstream view refreshes from
     the delta without ever rescanning the base table."""
@@ -3240,7 +2862,8 @@ def changelog_scan(
             _emit(_pre(c.get("parent")), "delete", v)
         elif op in ("delete", "merge") and c.get("added_deletes"):
             dels = c["added_deletes"]
-            keys = _read_files(spark, [e["path"] for e in dels]).distinct()
+            # key files carry write-time names: resolved by field id
+            keys, join_cols = _delete_keys(spark, dels, to_state, tf)
             small = (
                 sum(int(e.get("rows", 0)) for e in dels)
                 <= _BROADCAST_DELETE_ROWS
@@ -3266,28 +2889,15 @@ def changelog_scan(
                     keep_identity=True,
                 )
                 removed = plive.join(
-                    F.broadcast(keys) if small else keys,
-                    ["_file", "_pos"],
-                    "semi",
+                    F.broadcast(keys) if small else keys, join_cols, "semi"
                 ).drop("_file", "_pos")
                 _emit(removed, "delete", v)
                 continue
-            join_cols = list(dels[0]["key_cols"])
-            if tf is not None:
-                # key files carry write-time names: resolve by field id
-                cur = {fid: (n, t) for fid, n, t in tf}
-                wcols = _entry_cols(dels[0], to_state)
-                sel = [
-                    F.col(k).cast(cur[wcols[k]][1]).alias(cur[wcols[k]][0])
-                    for k in join_cols
-                ]
-                keys = keys.select(*sel).distinct()
-                join_cols = [cur[wcols[k]][0] for k in join_cols]
             removed = _pre(c.get("parent")).join(
                 F.broadcast(keys) if small else keys, join_cols, "semi"
             )
             _emit(removed, "delete", v)
-        elif op in ("rollback", "fast_forward", "update"):
+        elif op in ("rollback", "update"):
             # update: the net row diff IS the changed rows — unchanged
             # neighbors carried into rewritten files cancel in exceptAll
             pre, post = _pre(c.get("parent")), _at(v)
@@ -3354,7 +2964,7 @@ def consume_incremental(
         raise ValueError(f"unknown consume mode {mode!r}")
     os.makedirs(checkpoint_path, exist_ok=True)
     from_v = consumer_offset(checkpoint_path)
-    to_v = _head(table, "main")
+    to_v = current_version(table)
     if to_v is None or to_v <= from_v:
         return None, from_v, from_v, lambda: from_v
 
@@ -3406,22 +3016,18 @@ def scan_between(
 def expire_snapshots(
     table: str, keep_last: int = 2, max_age_sec: float | None = None
 ) -> dict:
-    """Expire all but the newest `keep_last` snapshots — except versions
-    pinned by a named ref: a tagged snapshot, a branch head, and every
-    chain ancestor a retained version still needs are never expired while
-    the ref exists (Iceberg's ref-retention rule). `max_age_sec` is the
+    """Expire all but the newest `keep_last` snapshots. `max_age_sec` is the
     Iceberg `expire_snapshots(older_than)` knob: commits younger than the
     cutoff are ALSO retained regardless of keep_last, so the two compose
     exactly like Iceberg's retain-last + older-than (keep_last is the
     floor, age the ceiling). Physically deletes files referenced ONLY by
-    expired versions, drops their log entries, and persists a rebase state
-    at every retained version whose parent was expired, so chain replay
-    stays O(retained commits) on every surviving lineage (main, branches,
-    tags). Time travel to an expired version raises SnapshotExpired.
+    expired versions and the expired commits' chunk manifests, drops their
+    log entries, and persists a rebase state at every retained version
+    whose parent was expired, so replay stays O(retained commits). Time
+    travel to an expired version raises SnapshotExpired.
     Returns {files_removed, versions_removed}."""
     versions = list_versions(table)
-    pinned = {resolve_ref(table, name) for name in list_refs(table)}
-    retained_set = set(versions[-keep_last:]) | pinned
+    retained_set = set(versions[-keep_last:])
     if max_age_sec is not None:
         cutoff = time.time() - max_age_sec
         retained_set |= {
@@ -3433,19 +3039,11 @@ def expire_snapshots(
     if not expired:
         return {"files_removed": 0, "versions_removed": 0}
     retained = sorted(retained_set)
-    # chain states computed while the log is still intact
+    # states computed while the log is still intact
     states = {v: _state_at(table, v)[1] for v in retained}
     keep_files: set[str] = set()
     for st in states.values():
         keep_files |= set(st["data"]) | set(st["deletes"])
-    # a fast_forward commit re-adds a branch commit's chunk refs verbatim,
-    # so a chunk manifest can outlive the commit that wrote it
-    keep_manifests = {
-        r["manifest"]
-        for v in retained
-        for r in _read_commit(table, v).get("added_data", [])
-        if "manifest" in r
-    }
 
     removed = 0
     for v in expired:
@@ -3455,15 +3053,15 @@ def expire_snapshots(
                 os.unlink(e["path"])
                 removed += 1
         for r in c.get("added_data", []):
-            # a chunk no retained commit references is dead (its
-            # still-live files were flattened into the rebase base)
-            if "manifest" in r and r["manifest"] not in keep_manifests:
+            # only the commit that wrote a chunk references it; the chunk's
+            # still-live files are flattened into the rebase base
+            if "manifest" in r:
                 mp = os.path.join(table, r["manifest"])
                 if os.path.exists(mp):
                     os.unlink(mp)
 
-    # every retained version whose parent chain is truncated persists its
-    # state; by induction every retained version then replays within
+    # every retained version whose parent was expired persists its state;
+    # by induction every retained version then replays within
     # retained commits + one base.
     for v in retained:
         parent = _read_commit(table, v).get("parent")

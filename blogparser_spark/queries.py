@@ -8285,54 +8285,6 @@ def tablelog_cdc_view_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @_q(
-    "tablelog_wap_publish_counts",
-    """
-    SELECT event_type, count(*)::BIGINT AS cnt,
-      min(event_id) AS min_id, max(event_id) AS max_id
-    FROM events GROUP BY event_type
-    """,
-)
-def tablelog_wap_publish_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Write-audit-publish on the snapshot-log format (Iceberg's WAP
-    pattern, tablelog.stage_append/publish_staged/discard_staged): the odd
-    half of events is STAGED, audited through a null gate on the staged
-    read surface, and published — an atomic append with no data rewrite;
-    a second staged batch with a nulled-out event_type fails the same gate
-    and is discarded, so no snapshot ever points at it. The oracle is the
-    plain full-table aggregate: agreement proves the published half landed
-    exactly once and the rejected batch left no trace."""
-    from blogparser_spark.operators import tablelog as tl
-
-    t = _tablelog_tmp("tablelog_wap_") + "/t"
-    ev = _events(spark, sf_dir).select("event_id", "event_type")
-    tl.append(spark, t, ev.filter(F.col("event_id") % 2 == 0))
-
-    sid = tl.stage_append(spark, t, ev.filter(F.col("event_id") % 2 == 1))
-    staged = tl.read_staged(spark, t, sid)
-    if staged.filter(F.col("event_type").isNull()).count() == 0:  # the gate
-        tl.publish_staged(t, sid)
-
-    bad = ev.filter(F.col("event_id") % 2 == 1).withColumn(
-        "event_type", F.lit(None).cast("string")
-    )
-    sid_bad = tl.stage_append(spark, t, bad)
-    if tl.read_staged(spark, t, sid_bad).filter(
-        F.col("event_type").isNull()
-    ).count() > 0:
-        tl.discard_staged(t, sid_bad)
-
-    return (
-        tl.read_snapshot(spark, t)
-        .groupBy("event_type")
-        .agg(
-            F.count("*").cast("bigint").alias("cnt"),
-            F.min("event_id").alias("min_id"),
-            F.max("event_id").alias("max_id"),
-        )
-    )
-
-
-@_q(
     "tablelog_hidden_partition_scan",
     """
     SELECT event_type, count(*)::BIGINT AS cnt,
@@ -8393,72 +8345,6 @@ def tablelog_hidden_partition_scan(
         F.min("event_id").alias("min_id"),
         F.max("event_id").alias("max_id"),
         F.sum("user_id").cast("bigint").alias("sum_users"),
-    )
-
-
-@_q(
-    "tablelog_branch_publish_counts",
-    """
-    SELECT 'main_pre' AS phase, event_type, count(*)::BIGINT AS cnt
-    FROM events WHERE event_id % 4 IN (0, 2) GROUP BY event_type
-    UNION ALL
-    SELECT 'branch' AS phase, event_type, count(*)::BIGINT AS cnt
-    FROM events WHERE event_id % 4 IN (0, 1, 3) GROUP BY event_type
-    UNION ALL
-    SELECT 'published' AS phase, event_type, count(*)::BIGINT AS cnt
-    FROM events WHERE event_id % 4 IN (0, 1, 3) GROUP BY event_type
-    """,
-)
-def tablelog_branch_publish_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Named refs on the snapshot-log format (Iceberg branches/tags,
-    tablelog.create_branch/read_snapshot(ref=)/fast_forward): slice 0 of
-    events lands on main, slices 1 and 3 on a 'staging' branch forked at
-    v1, and slice 2 on main AFTER the fork — branch commits share the
-    global version sequence but chain off the branch head, so state replay
-    follows parent pointers, never the version order. Three reads prove
-    the semantics: 'main_pre' (main before publish: slices 0+2 only — the
-    branch is invisible), 'branch' (by ref: slices 0+1+3 — main's
-    post-fork slice 2 is invisible), and 'published' (after fast_forward:
-    ONE atomic commit re-points main at the branch state, so slice 2 is
-    gone and the branch rows are live). The oracle replays the slice
-    arithmetic per phase on the base table. This is Iceberg's branch-WAP
-    audit-then-publish flow; no reference analog (the Go CLI has no
-    storage layer, sample/main.go:32-47)."""
-    from blogparser_spark.operators import tablelog as tl
-
-    t = _tablelog_tmp("tablelog_branch_") + "/t"
-    ev = _events(spark, sf_dir).select("event_id", "event_type")
-    m4 = F.pmod(F.col("event_id"), F.lit(4))
-    tl.append(spark, t, ev.filter(m4 == 0))  # v1 main
-    tl.create_branch(t, "staging")
-    tl.append(spark, t, ev.filter(m4 == 1), branch="staging")  # v2 branch
-    tl.append(spark, t, ev.filter(m4 == 2))  # v3 main, post-fork
-    tl.append(spark, t, ev.filter(m4 == 3), branch="staging")  # v4 branch
-    main_pre = (
-        tl.read_snapshot(spark, t)
-        .groupBy("event_type")
-        .agg(F.count("*").cast("bigint").alias("cnt"))
-        .withColumn("phase", F.lit("main_pre"))
-    )
-    branch = (
-        tl.read_snapshot(spark, t, ref="staging")
-        .groupBy("event_type")
-        .agg(F.count("*").cast("bigint").alias("cnt"))
-        .withColumn("phase", F.lit("branch"))
-    )
-    # the reads above plan from the pre-publish log state eagerly (the
-    # file sets are pinned at plan time), so publishing now is safe
-    tl.fast_forward(t, "staging")
-    published = (
-        tl.read_snapshot(spark, t)
-        .groupBy("event_type")
-        .agg(F.count("*").cast("bigint").alias("cnt"))
-        .withColumn("phase", F.lit("published"))
-    )
-    return (
-        main_pre.unionByName(branch)
-        .unionByName(published)
-        .select("phase", "event_type", "cnt")
     )
 
 

@@ -220,11 +220,15 @@ def gen_transcripts(
     hot_convs: int = 2,
     hot_share: float = 0.2,
 ) -> list[tuple[str, int, str, str, str, datetime]]:
-    """Rows (conv_id, turn_idx, role, text, tool, ts), shuffled."""
+    """Rows (conv_id, turn_idx, role, text, tool, ts), shuffled. The first
+    `hot_convs` conversations are hot: each gets a `hot_share` split of
+    the corpus's nominal turns, never fewer turns than a normal one."""
     rng = random.Random(seed)
     rows: list[tuple[str, int, str, str, str, datetime]] = []
     total_turns = n_convs * turns_per_conv
-    hot_turns = int(total_turns * hot_share / max(hot_convs, 1))
+    hot_turns = max(
+        turns_per_conv, int(total_turns * hot_share / max(hot_convs, 1))
+    )
     i = 0
     for c in range(n_convs):
         conv_id = f"conv-{c:06d}"

@@ -40,3 +40,21 @@ def test_jsonl_per_record_error_isolation(spark, tmp_path):
     ok = parsed.filter(F.col("conv_id") == "c1").orderBy("turn_idx").collect()
     assert ok[0]["turn_idx"] == 0 and ok[1]["turn_idx"] == 1
     assert ok[0]["title"] == "t"  # typed rows flow through the real parser
+
+
+def test_gen_transcripts_keeps_every_turn_on_small_corpora():
+    """A hot conversation never gets fewer turns than a normal one, so a
+    small corpus is not truncated: 2 convs x 3 turns used to yield 0
+    rows and 5 convs x 3 turns 11 rows."""
+    from collections import Counter
+
+    from blogparser_spark.sources.synthetic import gen_transcripts
+
+    assert len(gen_transcripts(n_convs=2, turns_per_conv=3)) == 6
+    rows = gen_transcripts(n_convs=5, turns_per_conv=3)
+    assert len(rows) == 15
+    assert sorted(Counter(r[0] for r in rows).values()) == [3] * 5
+    # a corpus big enough for its hot share still skews to the hot convs
+    big = Counter(r[0] for r in gen_transcripts(n_convs=40, turns_per_conv=5))
+    assert big["conv-000000"] == big["conv-000001"] == 20
+    assert sum(big.values()) == 38 * 5 + 2 * 20

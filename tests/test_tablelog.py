@@ -139,15 +139,19 @@ def test_schema_enforcement_and_evolution(spark, tmp_path):
 
 
 def test_read_frames_are_built_without_a_spark_job(spark, tmp_path):
-    """read_snapshot and scan_where read under the state's schema, so
-    building their DataFrames runs no schema-inference job (a mergeSchema
-    read runs one per call, before any action). Counted via the status
-    tracker over a dedicated job group; a file written before a column
-    was added still reads it as NULL."""
+    """read_snapshot and scan_where read data files under the state's
+    schema and delete files under theirs (equality keys with the key
+    columns' field types, position deletes as (_file, _pos)), so building
+    their DataFrames runs no schema-inference job (a mergeSchema read runs
+    one per call, before any action). Counted via the status tracker over
+    a dedicated job group; a file written before a column was added still
+    reads it as NULL."""
     t = str(tmp_path / "t")
     tl.append(spark, t, _batch(spark, 0, 5), stats_cols=("event_id",))
     extra = _batch(spark, 5, 10).withColumn("score", F.lit(1.5))
     tl.append(spark, t, extra, stats_cols=("event_id",), allow_evolution=True)
+    tl.delete_where(spark, t, F.col("event_id") < 2, ["event_id"])
+    tl.delete_where_positions(spark, t, F.col("event_id") == 5)
     sc = spark.sparkContext
     sc.setJobGroup("tl-build-frames", "building tablelog read frames")
     try:
@@ -158,9 +162,9 @@ def test_read_frames_are_built_without_a_spark_job(spark, tmp_path):
     assert sc.statusTracker().getJobIdsForGroup("tl-build-frames") == []
     assert snap.columns == ["event_id", "user_id", "event_type", "score"]
     rows = {r.event_id: r.score for r in snap.collect()}
-    assert sorted(rows) == list(range(10))
-    assert rows[0] is None and rows[7] == 1.5
-    assert _ids(hit) == list(range(3, 8))
+    assert sorted(rows) == [2, 3, 4, 6, 7, 8, 9]
+    assert rows[2] is None and rows[7] == 1.5
+    assert _ids(hit) == [3, 4, 6, 7]
 
 
 def test_append_retries_on_commit_race(spark, tmp_path):
@@ -693,50 +697,6 @@ def test_remove_orphans_sweeps_uncommitted_files_only(spark, tmp_path):
     assert tl.remove_orphans(t) == 0  # idempotent
 
 
-def test_wap_stage_audit_publish(spark, tmp_path):
-    """Write-audit-publish: staged files are invisible to readers and to
-    the orphan sweep, the audit reads exactly the staged rows, publish is
-    an atomic append stamped with the PUBLISH version's sequence number,
-    and a failed audit discards without any snapshot ever pointing at the
-    bad data."""
-    t = str(tmp_path / "t")
-    tl.append(spark, t, _batch(spark, 0, 10))
-    sid = tl.stage_append(spark, t, _batch(spark, 10, 20))
-    # invisible until published; not swept as an orphan
-    assert _ids(tl.read_snapshot(spark, t)) == list(range(10))
-    assert tl.remove_orphans(t) == 0
-    assert _ids(tl.read_staged(spark, t, sid)) == list(range(10, 20))
-    v = tl.publish_staged(t, sid)
-    assert v == 2
-    assert _ids(tl.read_snapshot(spark, t)) == list(range(20))
-    assert tl.staged_ids(t) == []
-    with pytest.raises(LookupError):
-        tl.publish_staged(t, sid)  # a stage resolves exactly once
-
-    # publish-time sequence stamping: a delete AFTER staging but BEFORE
-    # publish must not remove the staged rows (they became visible later)
-    sid2 = tl.stage_append(spark, t, _batch(spark, 5, 8))  # re-add 5,6,7
-    tl.delete_where(spark, t, F.col("event_id") < 8, ["event_id"])
-    tl.publish_staged(t, sid2)
-    assert _ids(tl.read_snapshot(spark, t)) == [5, 6, 7] + list(range(8, 20))
-
-
-def test_wap_failed_audit_discards(spark, tmp_path):
-    t = str(tmp_path / "t")
-    tl.append(spark, t, _batch(spark, 0, 10))
-    bad = _batch(spark, 50, 60).withColumn(
-        "event_type", F.lit(None).cast("string")
-    )
-    sid = tl.stage_append(spark, t, bad)
-    staged = tl.read_staged(spark, t, sid)
-    nulls = staged.filter(F.col("event_type").isNull()).count()
-    assert nulls > 0  # the gate fires
-    removed = tl.discard_staged(t, sid)
-    assert removed > 0 and tl.staged_ids(t) == []
-    assert _ids(tl.read_snapshot(spark, t)) == list(range(10))
-    assert tl.current_version(t) == 1  # no snapshot ever saw the bad rows
-
-
 # ---------------------------------------------------------------------------
 # hidden partitioning (Iceberg partition-spec transforms)
 # ---------------------------------------------------------------------------
@@ -871,16 +831,15 @@ def test_hidden_partition_scan_composes_with_deletes(spark, tmp_path):
 
 
 def test_hidden_partition_wap_and_merge(spark, tmp_path):
-    """partition_spec flows through stage/publish and merge_upsert; the
-    published and merged files prune like appended ones."""
+    """partition_spec flows through append and merge_upsert; the merged
+    files prune like appended ones."""
     t = str(tmp_path / "t")
-    sid = tl.stage_append(
+    tl.append(
         spark,
         t,
         _hidden_batch(spark, 0, 200),
         partition_spec=("bucket(4, conv_id)",),
     )
-    tl.publish_staged(t, sid)
     upd = _hidden_batch(spark, 100, 300)
     tl.merge_upsert(
         spark,
@@ -899,142 +858,20 @@ def test_hidden_partition_wap_and_merge(spark, tmp_path):
     assert got == exp
 
 
-# ---------------------------------------------------------------------------
-# named refs: branches, tags, fast-forward publish
-# ---------------------------------------------------------------------------
-
-
-def test_branch_commits_invisible_to_main(spark, tmp_path):
-    """Commits on a branch share the global version sequence but chain off
-    the branch head — a main reader must never fold them in."""
-    t = str(tmp_path / "t")
-    tl.append(spark, t, _batch(spark, 0, 10))  # v1 main
-    assert tl.create_branch(t, "audit") == 1
-    tl.append(spark, t, _batch(spark, 100, 110), branch="audit")  # v2 audit
-    tl.append(spark, t, _batch(spark, 10, 20))  # v3 main
-    assert tl.current_version(t) == 3
-    assert _ids(tl.read_snapshot(spark, t)) == list(range(20))
-    assert _ids(tl.read_snapshot(spark, t, ref="audit")) == list(range(10)) + list(
-        range(100, 110)
-    )
-    # branch head chains off v1, untouched by v3
-    assert tl.resolve_ref(t, "audit") == 2
-    assert [
-        (c["version"], c["branch"]) for c in tl.snapshot_lineage(t)
-    ] == [(1, "main"), (2, "audit"), (3, "main")]
-    # main-chain incremental scan skips the branch commit entirely
-    assert _ids(tl.incremental_append_scan(spark, t, from_version=1)) == list(
-        range(10, 20)
-    )
-
-
-def test_tag_pins_snapshot_through_expiry(spark, tmp_path):
-    t = str(tmp_path / "t")
-    tl.append(spark, t, _batch(spark, 0, 10))  # v1
-    tl.create_tag(t, "train-2026-08")
-    tl.overwrite(spark, t, _batch(spark, 100, 110))  # v2
-    tl.append(spark, t, _batch(spark, 110, 120))  # v3
-    assert _ids(tl.read_snapshot(spark, t, ref="train-2026-08")) == list(range(10))
-    # keep_last=2 would expire v1, but the tag pins it (Iceberg ref retention)
-    res = tl.expire_snapshots(t, keep_last=2)
-    assert res["versions_removed"] == 0
-    assert _ids(tl.read_snapshot(spark, t, ref="train-2026-08")) == list(range(10))
-    # drop the tag: the next expiry sweeps v1 and its files
-    tl.drop_ref(t, "train-2026-08")
-    _, s1 = tl._state_at(t, 1)
-    res = tl.expire_snapshots(t, keep_last=2)
-    assert res["versions_removed"] == 1
-    assert all(not os.path.exists(p) for p in s1["data"])
-    with pytest.raises(tl.SnapshotExpired):
-        tl.read_snapshot(spark, t, version=1)
-
-
-def test_branch_wap_fast_forward(spark, tmp_path):
-    """The branch-WAP flow: write to an audit branch, read it back by ref,
-    publish with ONE atomic fast-forward commit; the published rows stream
-    through the incremental append scan like a plain append."""
-    t = str(tmp_path / "t")
-    tl.append(spark, t, _batch(spark, 0, 10))  # v1 main
-    tl.create_branch(t, "staging")
-    tl.append(spark, t, _batch(spark, 10, 20), branch="staging")  # v2
-    tl.append(spark, t, _batch(spark, 20, 30), branch="staging")  # v3
-    # audit: main untouched, branch has everything
-    assert _ids(tl.read_snapshot(spark, t)) == list(range(10))
-    audited = tl.read_snapshot(spark, t, ref="staging")
-    assert _ids(audited) == list(range(30))
-    v = tl.fast_forward(t, "staging")
-    assert v == 4
-    assert _ids(tl.read_snapshot(spark, t)) == list(range(30))
-    # a publish-only fast-forward IS an append batch for incremental scans
-    assert _ids(tl.incremental_append_scan(spark, t, from_version=1)) == list(
-        range(10, 30)
-    )
-    # CDC nets the published rows as inserts
-    cdc = tl.changelog_scan(spark, t, from_version=1)
-    ins = cdc.filter(F.col("_change_type") == "insert")
-    assert _ids(ins) == list(range(10, 30))
-    assert cdc.filter(F.col("_change_type") == "delete").count() == 0
-
-
-def test_fast_forward_stale_branch_replaces_main(spark, tmp_path):
-    """Main advanced after the fork: publishing re-points main at the
-    branch state (removing main's post-fork files), and the incremental
-    append scan refuses the commit — it is not expressible as appends."""
-    t = str(tmp_path / "t")
-    tl.append(spark, t, _batch(spark, 0, 10))  # v1
-    tl.create_branch(t, "exp")
-    tl.append(spark, t, _batch(spark, 500, 505))  # v2 main post-fork
-    tl.append(spark, t, _batch(spark, 10, 20), branch="exp")  # v3
-    tl.fast_forward(t, "exp")  # v4
-    assert _ids(tl.read_snapshot(spark, t)) == list(range(20))
-    with pytest.raises(ValueError, match="fast_forward"):
-        tl.incremental_append_scan(spark, t, from_version=1)
-    # CDC still expresses it: v2's rows insert then delete, net 0..19
-    cdc = tl.changelog_scan(spark, t, from_version=1)
-    assert _ids(cdc.filter(F.col("_change_type") == "delete")) == list(
-        range(500, 505)
-    )
-
-
-def test_ref_validation(spark, tmp_path):
-    t = str(tmp_path / "t")
-    tl.append(spark, t, _batch(spark, 0, 5))
-    tl.create_tag(t, "x")
-    with pytest.raises(ValueError, match="already exists"):
-        tl.create_branch(t, "x")
-    with pytest.raises(ValueError, match="invalid ref name"):
-        tl.create_tag(t, "main")
-    with pytest.raises(ValueError, match="invalid ref name"):
-        tl.create_tag(t, "bad/name")
-    with pytest.raises(LookupError, match="unknown version"):
-        tl.create_tag(t, "y", version=99)
-    with pytest.raises(LookupError, match="unknown ref"):
-        tl.drop_ref(t, "nope")
-    with pytest.raises(ValueError, match="tag, not a branch"):
-        tl.append(spark, t, _batch(spark, 5, 6), branch="x")
-    with pytest.raises(LookupError, match="unknown ref"):
-        tl.append(spark, t, _batch(spark, 5, 6), branch="nope")
-
-
 def test_expiry_writes_base_at_every_chain_break(spark, tmp_path):
-    """Interleaved branch commits: expiry must leave every surviving
-    lineage replayable — a rebase base lands wherever a retained commit's
-    parent was expired, on main AND on the branch."""
+    """Expiry leaves the log replayable: a rebase base lands at the
+    retained commit whose parent was expired, retained versions still
+    time-travel, and the expired one raises SnapshotExpired."""
     t = str(tmp_path / "t")
-    tl.append(spark, t, _batch(spark, 0, 10))  # v1 main
-    tl.create_branch(t, "b")
-    tl.append(spark, t, _batch(spark, 100, 105), branch="b")  # v2
-    tl.append(spark, t, _batch(spark, 10, 20))  # v3 main (parent v1)
-    tl.append(spark, t, _batch(spark, 20, 30))  # v4 main
-    res = tl.expire_snapshots(t, keep_last=2)  # retains {3,4} + branch head 2
+    tl.append(spark, t, _batch(spark, 0, 10))  # v1
+    tl.append(spark, t, _batch(spark, 10, 20))  # v2
+    tl.append(spark, t, _batch(spark, 20, 30))  # v3
+    res = tl.expire_snapshots(t, keep_last=2)  # retains {2, 3}
     assert res["versions_removed"] == 1  # only v1
-    # both lineages still replay: bases at v2 and v3 (parents expired)
-    assert os.path.exists(tl._base_path(t, 2))
-    assert os.path.exists(tl._base_path(t, 3))
+    assert os.path.exists(tl._base_path(t, 2))  # its parent v1 expired
+    assert not os.path.exists(tl._base_path(t, 3))
     assert _ids(tl.read_snapshot(spark, t)) == list(range(30))
-    assert _ids(tl.read_snapshot(spark, t, ref="b")) == list(range(10)) + list(
-        range(100, 105)
-    )
+    assert _ids(tl.read_snapshot(spark, t, version=2)) == list(range(20))
     with pytest.raises(tl.SnapshotExpired):
         tl.read_snapshot(spark, t, version=1)
 
@@ -1196,35 +1033,6 @@ def test_evolve_validation(spark, tmp_path):
         tl.evolve_schema(t, rename={"v": "x"}, drop=("v",))
     with pytest.raises(ValueError, match="every column"):
         tl.evolve_schema(t, drop=("k", "v", "n"))
-
-
-def test_evolve_on_branch_fast_forwards_to_main(spark, tmp_path):
-    """An evolve commit on the main chain is published into a branch
-    reader's view only via its own lineage; fast_forward carries the
-    fields AND the evolved flag so main's projection stays id-based."""
-    t = _evo_base(spark, tmp_path)
-    tl.create_branch(t, "s")
-    tl.append(
-        spark, t,
-        spark.range(5, 8).selectExpr(
-            "cast(id as int) AS k", "concat('a', id) AS v",
-            "cast(id * 10 as int) AS n",
-        ),
-        branch="s",
-    )
-    tl.evolve_schema(t, rename={"v": "label"})  # on main
-    assert tl.read_snapshot(spark, t).columns == ["k", "label", "n"]
-    # branch forked pre-evolve: still the old view
-    assert tl.read_snapshot(spark, t, ref="s").columns == ["k", "v", "n"]
-    tl.fast_forward(t, "s")
-    # main re-pointed at the branch state -> pre-evolve fields restored
-    df = tl.read_snapshot(spark, t)
-    assert df.columns == ["k", "v", "n"] and df.count() == 8
-
-
-# ---------------------------------------------------------------------------
-# position deletes (Iceberg v2 position-delete files)
-# ---------------------------------------------------------------------------
 
 
 def test_position_delete_predicate_and_seq_scope(spark, tmp_path):
@@ -1420,26 +1228,21 @@ def test_update_across_schema_evolution(spark, tmp_path):
 
 
 def test_metadata_tables(spark, tmp_path):
-    """history / files / refs metadata tables (Iceberg's queryable table
+    """history / files metadata tables (Iceberg's queryable table
     internals): one row per commit with lineage + tallies, one row per
-    live file with seq/rows/kind/positional, one row per ref with branch
-    heads DERIVED from the log (not the creation point)."""
+    live file with seq/rows/kind/positional."""
     t = str(tmp_path / "t")
     tl.append(spark, t, _batch(spark, 0, 10))
-    tl.create_branch(t, "b1")
-    tl.create_tag(t, "t1")
     tl.delete_where(spark, t, F.col("event_id") < 3, key_cols=["event_id"])
     tl.delete_where_positions(spark, t, F.col("event_id") == 5)
-    tl.append(spark, t, _batch(spark, 20, 25), branch="b1")
     h = tl.table_history(spark, t)
     assert [
-        (r.version, r.operation, r.branch, r.rows_added)
+        (r.version, r.parent, r.operation, r.rows_added)
         for r in h.orderBy("version").collect()
     ] == [
-        (1, "append", "main", 10),
-        (2, "delete", "main", 0),
-        (3, "delete", "main", 0),
-        (4, "append", "b1", 5),
+        (1, None, "append", 10),
+        (2, 1, "delete", 0),
+        (3, 2, "delete", 0),
     ]
     f = tl.table_files(spark, t)
     assert f.filter("kind = 'data'").agg(F.sum("rows")).first()[0] == 10
@@ -1447,12 +1250,6 @@ def test_metadata_tables(spark, tmp_path):
     assert dele == {False: 3, True: 1}
     # files at a version: pre-delete snapshot has no delete files
     assert tl.table_files(spark, t, version=1).filter("kind='delete'").count() == 0
-    refs = {r.name: (r.kind, r.version) for r in tl.table_refs(spark, t).collect()}
-    assert refs == {
-        "main": ("branch", 3),
-        "b1": ("branch", 4),
-        "t1": ("tag", 1),
-    }
 
 
 # ---------------------------------------------------------------------------
@@ -2113,37 +1910,6 @@ def test_chunk_summaries_translate_renamed_predicates(spark, tmp_path):
     assert tl.scan_where(spark, t, {"d": ("=", "3")}).count() == 50
 
 
-def test_fast_forward_publishes_chunk_refs_not_inlined_entries(spark, tmp_path):
-    """The branch-WAP flow at scale: a chunked append on a branch
-    publishes into main AS CHUNK REFS — main's planning stays two-level
-    (summary skipping) instead of degrading to an inlined O(files)
-    commit. Members the branch removed after its chunked commit stay
-    removed on main."""
-    t = str(tmp_path / "ff_chunks")
-    tl.append(spark, t, spark.range(0, 10).selectExpr(
-        "id AS k", "cast(id % 2 AS string) AS day"))
-    tl.create_branch(t, "audit")
-    df = spark.range(100, 500).selectExpr(
-        "id AS k", "cast(id % 8 AS string) AS day")
-    tl.append(
-        spark, t, df.repartition("day"), branch="audit",
-        partition_spec=("day",), stats_cols=("k",),
-        manifest_chunk_files=2,
-    )
-    tl.delete_where(spark, t, F.col("k") == 107, ["k"])  # main-side noise
-    v = tl.fast_forward(t, "audit")
-    c = tl._read_commit(t, v)
-    refs = [e for e in c["added_data"] if "manifest" in e]
-    inline = [e for e in c["added_data"] if "path" in e]
-    assert refs and not inline  # the chunked branch commit stayed chunked
-    _, lazy = tl._state_at(t, expand=False)
-    assert len(lazy.get("chunks", {})) == len(refs)
-    assert tl.read_snapshot(spark, t).count() == 410
-    plan = tl.plan_scan(t, {"day": ("=", "3")})
-    assert plan["n_chunks_skipped"] > 0  # summary skipping works on main
-    assert tl.scan_where(spark, t, {"day": ("=", "3")}).count() == 50
-
-
 def test_expiry_flattens_expired_chunked_commits(spark, tmp_path):
     """Expiring a chunked commit deletes its chunk manifests and flattens
     its still-live files into the rebase base: reads stay exact, planning
@@ -2167,29 +1933,3 @@ def test_expiry_flattens_expired_chunked_commits(spark, tmp_path):
     plan = tl.plan_scan(t, {"k": ("between", 0, 10)})
     assert plan["n_chunks_total"] == 0 and len(plan["paths"]) >= 1
     assert tl.scan_between(spark, t, "k", 0, 10).count() == 11
-
-
-def test_expire_keeps_chunk_manifests_a_fast_forward_still_uses(spark, tmp_path):
-    """fast_forward publishes a chunked branch commit's chunk refs as they
-    are, so once the branch is dropped and its commit expires, the
-    retained fast-forward commit still references those mchunk files:
-    expiry must keep them, and the table must still read."""
-    t = str(tmp_path / "ff_chunks")
-    tl.append(spark, t, _batch(spark, 0, 10))  # v1
-    tl.create_tag(t, "v1")
-    tl.create_branch(t, "b")
-    tl.append(
-        spark, t, _batch(spark, 100, 140).repartition(4), branch="b",
-        manifest_chunk_files=2,
-    )  # v2, chunked
-    tl.fast_forward(t, "b")  # v3 carries v2's chunk refs
-    tl.drop_ref(t, "b")
-    tl.append(spark, t, _batch(spark, 10, 20))  # v4
-    res = tl.expire_snapshots(t, keep_last=2)  # retains {3, 4} + tag v1
-    assert res["versions_removed"] == 1  # only v2
-    want = list(range(20)) + list(range(100, 140))
-    assert _ids(tl.read_snapshot(spark, t)) == want
-    assert _ids(tl.read_snapshot(spark, t, version=3)) == list(range(10)) + list(
-        range(100, 140)
-    )
-    assert tl.plan_scan(t, {"event_id": ("=", 120)})["paths"]
