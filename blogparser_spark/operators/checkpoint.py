@@ -29,6 +29,7 @@ from __future__ import annotations
 
 import json
 import os
+import re
 import time
 import uuid
 from contextlib import contextmanager
@@ -60,7 +61,8 @@ class SliceManifest:
     output_path: str
     table_version: int | None = None  # this slice's tablelog commit
     # the commit's summary (tablelog.commit_summary) — files/records/bytes
-    # added, write/manifest/commit seconds, retries
+    # added, files/records removed and files rewritten by the replace,
+    # write/manifest/rewrite/commit seconds, retries
     commit_summary: dict | None = None
 
 
@@ -168,14 +170,23 @@ def _marker_base(marker: str) -> str:
     return base if sep else marker
 
 
-def _same_keyspace(marker: str, slice_id: int, n_slices: int, key_col: str) -> bool:
-    """True iff `marker` is a slice marker of this slice under this slicing
-    (any input snapshot, any nonce): all its rows lie in the slice's
-    keyspace, so the slice's replace delete removes every one of them."""
-    base = _marker_base(marker)
-    return base.startswith(f"slice={slice_id}|snap=") and base.endswith(
-        f"|n={n_slices}|key={key_col}"
-    )
+_MARKER_RE = re.compile(r"slice=(\d+)\|snap=.*\|n=(\d+)\|key=(.+)")
+
+
+def _inside_slice(slice_id: int, n_slices: int, key_col: str):
+    """The replace verdict for this slice under this slicing: True for a
+    slice marker of this slice (any input snapshot, any nonce), whose rows
+    all lie in the slice's keyspace; False for one of another slice of the
+    same slicing, whose rows all lie outside it; None for any other marker
+    (another slicing, or not a slice marker), whose rows may straddle it."""
+
+    def inside(marker: str) -> bool | None:
+        m = _MARKER_RE.fullmatch(_marker_base(marker))
+        if m is None or (int(m[2]), m[3]) != (n_slices, key_col):
+            return None
+        return int(m[1]) == slice_id
+
+    return inside
 
 
 _EMPTY_RELATION_RULE = (
@@ -232,36 +243,37 @@ def run_sliced(
     only the files holding the sink) and conv_id footer stats + blooms for
     point lookups. The slice manifest carries the commit's summary.
 
-    Resume is ledger-only: a slice is done iff the table's commit-marker
-    ledger holds its CURRENT marker — slice_marker(s, snapshot, n_slices,
+    Resume is ledger-only: a slice is done iff the table's marker ledger
+    holds its CURRENT marker — slice_marker(s, snapshot, n_slices,
     key_col), with or without a resume=False run's `|run=<nonce>` suffix.
-    The marker encodes the input snapshot and (n_slices, key_col), so
-    after the input changes or the slicing changes every slice re-runs
-    rather than mixing lineages; a crashed run's re-submission is a commit
-    no-op (tablelog.append_idempotent). Manifests are lineage only and
-    never read here: a wiped table re-runs every slice, lost manifests
-    re-run none. resume=False skips nothing and commits a fresh generation.
-    When the table holds rows of another generation (a marker whose
-    un-nonced base is not current, or any rows under resume=False), each
-    re-run slice first equality-deletes the other-generation rows of ITS
-    OWN keyspace — under the CURRENT hash predicate, so coverage over all
-    current slices is complete even when n_slices changed — then appends;
-    the table converges to exactly the current generation. The delete
-    retires the ledger markers of that keyspace (this slice under this
-    slicing, any snapshot or nonce), whose rows it removes in full, so a
-    crash between the delete and the append re-runs the slice instead of
-    skipping it on a marker whose rows are gone. Mid-migration
-    readers may see mixed generations between slice commits."""
+    The ledger is the markers the live files carry, so it survives
+    snapshot expiry and drops a marker once its rows are gone. The marker
+    encodes the input snapshot and (n_slices, key_col), so after the input
+    changes or the slicing changes every slice re-runs rather than mixing
+    lineages; a crashed run's re-submission is a commit no-op
+    (tablelog.append_idempotent). Manifests are lineage only and never
+    read here: a wiped table re-runs every slice, lost manifests re-run
+    none. resume=False skips nothing and commits a fresh generation.
+
+    Each slice lands as ONE copy-on-write commit that replaces its own
+    keyspace under the CURRENT hash predicate (tablelog.append's
+    `replace`): it adds the slice's files and removes the live files of
+    this slice under this slicing (any snapshot or nonce) by metadata
+    alone — no Spark job, no table read. Files that may straddle the
+    keyspace (written under another slicing, or carrying no marker) are
+    rewritten in the same commit keeping the rows of other slices; a
+    rewrite with nothing left writes no file. Over all current slices the
+    table converges to exactly the current generation, also when
+    n_slices changed. A reader sees each slice wholly old or wholly new,
+    never missing; a crash before a slice's commit leaves its old rows
+    live and its new marker absent, so the resumed run re-runs it."""
     if table_format != "tablelog":
         raise ValueError(f"unknown table_format {table_format!r}: the sink is tablelog")
     snapshot = input_snapshot_id(spark, input_path)
     table = os.path.join(output_base, "table")
     nonce = "" if resume else uuid.uuid4().hex[:8]
-    ledger = tl.committed_markers(table)
-    committed = {_marker_base(m) for m in ledger}
+    committed = {_marker_base(m) for m in tl.committed_markers(table)}
     current = [slice_marker(s, snapshot, n_slices, key_col) for s in range(n_slices)]
-    stale_gens = bool(committed - set(current))
-    replace = stale_gens or (not resume and bool(committed))
     done = {s for s, m in enumerate(current) if m in committed} if resume else set()
     sliced = _sliced_layout(input_path, n_slices, key_col)
     manifests: list[SliceManifest] = []
@@ -291,26 +303,16 @@ def run_sliced(
             ]
             out = out.observe(obs_out, F.count(F.lit(1)).alias("rows"), *status_aggs)
             marker = slice_marker(s, snapshot, n_slices, key_col, nonce)
-            if replace and tl.current_version(table) is not None:
-                # replace THIS slice's keyspace from other generations: the
-                # current hash predicate scopes the delete, so the union over
-                # all current slices covers every stale row even when
-                # n_slices changed between generations
-                tl.delete_where(
-                    spark,
-                    table,
-                    slice_predicate(s, n_slices, key_col) & (F.col("_gen") != marker),
-                    [key_col, "_gen"],
-                    retire_markers=tuple(
-                        m for m in ledger if _same_keyspace(m, s, n_slices, key_col)
-                    ),
-                )
             table_version, _ = route_commit_tablelog(
                 out.withColumn("_slice", F.lit(s)).withColumn("_gen", F.lit(marker)),
                 table,
                 marker=marker,
                 stats_cols=("conv_id",),
                 bloom_cols=("conv_id",),
+                replace=(
+                    slice_predicate(s, n_slices, key_col),
+                    _inside_slice(s, n_slices, key_col),
+                ),
             )
             metrics = obs_out.get
             sink_counts = {

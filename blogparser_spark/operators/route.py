@@ -35,6 +35,7 @@ def route_commit_tablelog(
     stats_cols: tuple[str, ...] = (),
     bloom_cols: tuple[str, ...] = (),
     manifest_chunk_files: int | None = None,
+    replace: tuple | None = None,
 ) -> tuple[int | None, bool]:
     """Fan routed rows into ONE snapshot-log table keyed by the sink keys,
     as a single atomic idempotent commit — the north rule's "per-sink
@@ -56,7 +57,8 @@ def route_commit_tablelog(
     conv — the serving path for "fetch this conversation"). Commits adding
     many files inherit the two-level manifest layer through
     `manifest_chunk_files` (None = tablelog.MANIFEST_CHUNK_FILES).
-    Returns (version, committed)."""
+    `replace` makes the commit a copy-on-write replace of the rows it
+    names (tablelog.append). Returns (version, committed)."""
     from blogparser_spark.operators import tablelog as tl
 
     return tl.append_idempotent(
@@ -68,6 +70,7 @@ def route_commit_tablelog(
         stats_cols=stats_cols,
         bloom_cols=bloom_cols,
         manifest_chunk_files=manifest_chunk_files,
+        replace=replace,
     )
 
 

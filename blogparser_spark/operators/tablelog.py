@@ -19,13 +19,14 @@ needs falls out of that one structure:
   exactly the rows appended between two snapshots — the input contract for
   the IVM layer (operators/aggregate.apply_retractable_delta) and the
   incremental dedup probe (dedup.incremental_dedup_probe).
-- **Merge-on-read equality deletes**: deleting keys writes a small delete
-  file instead of rewriting petabytes; readers anti-join it. Sequence
-  numbers (the commit version that added each file) scope every delete file
-  to data files OLDER than the delete, so re-appending a previously deleted
-  key is not suppressed — the Iceberg v2 sequence-number rule.
-- **Compaction** folds small files and outstanding delete files into fresh
-  data files as one atomic commit; logical rows are unchanged.
+- **Copy-on-write row changes**: a delete, update, merge or slice
+  replace rewrites only the live files holding matched rows and removes
+  the originals in the same commit (Iceberg's
+  `write.delete.mode=copy-on-write`, Delta Lake's `remove` actions). A
+  commit only ever adds and removes data files, so a read is one scan of
+  the live files with nothing to anti-join.
+- **Compaction** folds small files into fresh data files as one atomic
+  commit; logical rows are unchanged.
 - **Snapshot expiry** bounds storage: physical files referenced only by
   expired versions are removed, with a rebase ("checkpoint") state so the
   log itself stays O(retained commits).
@@ -44,7 +45,6 @@ files each run, sample/main.go:32-47); this is north-rule scope.
 
 Layout on disk:
   <table>/data/c{version:06d}/part-*.parquet     immutable data files
-  <table>/deletes/c{version:06d}/part-*.parquet  equality-delete key files
   <table>/log/v{version:012d}.json               one commit per version
   <table>/log/_base_v{version:012d}.json         rebase state after expiry
 """
@@ -59,10 +59,10 @@ import re
 import shutil
 import time
 import uuid
+from collections.abc import Callable
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
 
 
 def _q6(x: float) -> float:
@@ -875,8 +875,8 @@ def scan_where(
 ) -> DataFrame:
     """Hidden-partition-pruned scan: plan with prune_files_where (transform
     projection + footer stats, manifests only — no file is opened to
-    decide), then read the surviving files, apply the EXACT predicates,
-    and apply outstanding delete files scoped to the pruned set. At 100 TB
+    decide), then read the surviving files and apply the EXACT predicates.
+    At 100 TB
     this is the difference between a point lookup opening 1/n_buckets of
     one day's files and a full-table scan — and because the spec is
     per-file, the same call stays correct across partition-spec changes.
@@ -893,8 +893,7 @@ def scan_where(
             df = df.filter(F.col(col) == F.lit(pred[1]))
         else:
             df = df.filter(F.col(col).between(pred[1], pred[2]))
-    pruned_state = dict(state, data=plan["entries"])
-    return _apply_deletes(spark, df, pruned_state)
+    return df
 
 
 def _file_entries(
@@ -982,7 +981,7 @@ def _schema_of(df: DataFrame) -> list[list[str]]:
 #
 # Every column owns a permanent FIELD ID (Iceberg spec's schema evolution):
 # commits carry `fields` = [[id, name, type], ...] plus `last_field_id`, and
-# every data/delete file entry is stamped with `cols` = {write-time name: id}.
+# every data file entry is stamped with `cols` = {write-time name: id}.
 # Reads RESOLVE BY ID, never by name — so rename is metadata-only (old files
 # keep their old column name; the projection follows the id), drop never
 # resurrects (a re-added name gets a FRESH id, so old files' data for the
@@ -1136,16 +1135,11 @@ def evolve_schema(
     )
 
 
-def _has_pos_deletes(state: dict) -> bool:
-    return any(e.get("positional") for e in state.get("deletes", {}).values())
-
-
 def _read_projected(
     spark: SparkSession,
     entries: list[dict],
     state: dict,
     fields: list[list] | None = None,
-    with_pos: bool | None = None,
 ) -> DataFrame:
     """Read file entries resolved BY FIELD ID against `fields` (default: the
     state's current fields). Files are grouped by their write-time column
@@ -1153,22 +1147,11 @@ def _read_projected(
     type): renamed columns read their old name, dropped ids are simply not
     selected, missing ids null-fill, widened types cast. Non-evolved states
     skip all of this and take one scan under the state's schema (a file
-    that lacks a column reads it as NULL). `with_pos`
-    (default: auto, on iff the state carries position-delete files) selects
-    the parquet `_metadata.row_index` ordinal as a `_pos` column — the row
-    identity position deletes anti-join on; it must be captured AT the scan
-    (the metadata pseudo-column does not survive a projection)."""
-    if with_pos is None:
-        with_pos = _has_pos_deletes(state)
-    pos_col = (
-        [F.col("_metadata.row_index").alias("_pos")] if with_pos else []
-    )
+    that lacks a column reads it as NULL)."""
     if not state.get("evolved") and fields is None:
         if not entries:
             return _empty_df(spark, _field_pairs(_fields_of(state)))
-        paths = sorted(e["path"] for e in entries)
-        df = _read_files(spark, paths, state.get("schema"))
-        return df.select("*", *pos_col) if with_pos else df
+        return _read_files(spark, sorted(e["path"] for e in entries), state.get("schema"))
     fields = fields or _fields_of(state)
     if not entries:
         return _empty_df(spark, _field_pairs(fields))
@@ -1188,7 +1171,7 @@ def _read_projected(
                 sel.append(F.col(w).cast(dtype).alias(name))
             else:
                 sel.append(F.lit(None).cast(dtype).alias(name))
-        parts.append(df.select(*sel, *pos_col))
+        parts.append(df.select(*sel))
     out = parts[0]
     for p in parts[1:]:
         out = out.unionByName(p)
@@ -1204,8 +1187,7 @@ def _state_at(
     table: str, version: int | None = None, expand: bool = True
 ) -> tuple[int, dict]:
     """Replay the commits up to `version` (default: the newest). Returns
-    (version, state) where state = {"data": {path: entry}, "deletes":
-    {path: entry}, "schema": [...]}.
+    (version, state) where state = {"data": {path: entry}, "schema": [...]}.
 
     The walk follows `parent` pointers back from `version` (on the linear
     log each commit's parent is the version before it) and stops early at
@@ -1231,7 +1213,7 @@ def _state_at(
         raise LookupError(f"unknown version {version} for table {table}")
 
     retained = set(versions)
-    state: dict = {"data": {}, "deletes": {}, "schema": None}
+    state: dict = {"data": {}, "schema": None}
     chain: list[dict] = []
     v: int | None = target
     while v is not None:
@@ -1243,7 +1225,6 @@ def _state_at(
                 snap = json.load(f)
             state = {
                 "data": {e["path"]: e for e in snap["data"]},
-                "deletes": {e["path"]: e for e in snap["deletes"]},
                 "schema": snap["schema"],
             }
             for k in ("fields", "last_field_id", "legacy_cols", "evolved"):
@@ -1274,10 +1255,6 @@ def _state_at(
             # never reopens chunks whose files are all gone
             if state.get("chunks"):
                 state["chunks"].pop(m, None)
-        for e in c.get("added_deletes", []):
-            state["deletes"][e["path"]] = e
-        for p in c.get("removed_deletes", []):
-            state["deletes"].pop(p, None)
         if c.get("schema"):
             state["schema"] = c["schema"]
         if c.get("fields"):
@@ -1344,9 +1321,6 @@ def snapshot_lineage(table: str) -> list[dict]:
                 "rows_added": sum(e["rows"] for e in c.get("added_data", [])),
                 "files_added": _added_file_count(c),
                 "files_removed": len(c.get("removed_data", [])),
-                "delete_rows_added": sum(
-                    e["rows"] for e in c.get("added_deletes", [])
-                ),
             }
         )
     return out
@@ -1361,7 +1335,7 @@ def snapshot_lineage(table: str) -> list[dict]:
 # snapshot-log analogs. All three are driver-side LOG scans — cost is
 # O(commits) / O(live files) manifest work, never a data-file read — turned
 # into DataFrames so operators can join, filter, and aggregate table health
-# (small-file counts, delete-file debt, commit cadence) with the same
+# (small-file counts, commit cadence) with the same
 # relational vocabulary as the data itself.
 
 
@@ -1381,48 +1355,39 @@ def table_history(spark: SparkSession, table: str) -> DataFrame:
                 sum(int(e.get("rows", 0)) for e in c.get("added_data", [])),
                 _added_file_count(c),
                 len(c.get("removed_data", [])),
-                len(c.get("added_deletes", [])),
-                len(c.get("removed_deletes", [])),
             )
         )
     return spark.createDataFrame(
         rows,
         "version int, parent int, operation string, "
-        "ts double, rows_added bigint, files_added int, files_removed int, "
-        "delete_files_added int, delete_files_removed int",
+        "ts double, rows_added bigint, files_added int, files_removed int",
     )
 
 
 def table_files(
     spark: SparkSession, table: str, version: int | None = None
 ) -> DataFrame:
-    """One row per LIVE file (data and delete) at a snapshot: sequence
-    number, manifest row/byte tallies, partition tuples (the manifest's
-    {"keys", "tuples"} form as JSON), footer stats, and the delete kind.
-    This is the small-file / delete-debt health view —
-    `table_files(...).where("kind = 'data'").groupBy(...).agg(...)` plans
-    maintenance (compact_binpack targets, delete-file backlog) without
-    opening a single data file."""
+    """One row per LIVE data file at a snapshot: sequence number, manifest
+    row/byte tallies, partition tuples (the manifest's {"keys", "tuples"}
+    form as JSON) and footer stats. This is the small-file health view —
+    `table_files(...).groupBy(...).agg(...)` plans maintenance
+    (compact_binpack targets) without opening a single data file."""
     _, state = _state_at(table, version)
-    rows = []
-    for kind, files in (("data", state["data"]), ("delete", state["deletes"])):
-        for p, e in sorted(files.items()):
-            rows.append(
-                (
-                    p,
-                    kind,
-                    int(e["seq"]),
-                    int(e.get("rows", 0)),
-                    int(e.get("bytes", 0)),
-                    json.dumps(e.get("partitions") or {}, sort_keys=True),
-                    json.dumps(e.get("stats") or {}, sort_keys=True, default=str),
-                    bool(e.get("positional")),
-                )
-            )
+    rows = [
+        (
+            p,
+            int(e["seq"]),
+            int(e.get("rows", 0)),
+            int(e.get("bytes", 0)),
+            json.dumps(e.get("partitions") or {}, sort_keys=True),
+            json.dumps(e.get("stats") or {}, sort_keys=True, default=str),
+        )
+        for p, e in sorted(state["data"].items())
+    ]
     return spark.createDataFrame(
         rows,
-        "path string, kind string, seq int, rows bigint, bytes bigint, "
-        "partition string, stats string, positional boolean",
+        "path string, seq int, rows bigint, bytes bigint, "
+        "partition string, stats string",
     )
 
 
@@ -1577,6 +1542,7 @@ def append(
     bloom_cols: tuple[str, ...] = (),
     ndv_cols: tuple[str, ...] = (),
     manifest_chunk_files: int | None = None,
+    replace: tuple[Column, Callable[[str], bool | None]] | None = None,
 ) -> int:
     """Append df as a new snapshot; returns the committed version. Appends
     conflict with nothing (they only add files), so a lost commit race is
@@ -1586,7 +1552,9 @@ def append(
     pruned, via read_partition).
     `partition_spec` is the hidden-partitioning alternative — transform
     fields like ("days(ts)", "bucket(8, conv_id)") pruned via scan_where.
-    `marker` stamps the commit for idempotent resume (append_idempotent).
+    `marker` stamps the new files for idempotent resume: the ledger
+    (committed_markers, append_idempotent) holds a marker while a live
+    file carries it.
     `bloom_cols` records a per-file membership filter per named column in
     the manifest, sized from the file's row count (_bloom_bits_for;
     Iceberg's parquet/puffin bloom analog): point
@@ -1598,8 +1566,13 @@ def append(
     MANIFEST_CHUNK_FILES) record two-level manifests: file entries go to
     chunk files and the commit inlines only per-chunk summaries, so
     planning (plan_scan/scan_where) skips whole chunks by summary.
-    The commit records a `summary` (commit_summary) of what it added and
-    where its time went."""
+    `replace=(condition, inside)` makes the commit a copy-on-write replace
+    of the live rows matching `condition` (_replace_files): the new files
+    and the removal of the replaced ones land in this one commit, which
+    then does not retry a lost race (its removals were planned against
+    the parent it read).
+    The commit records a `summary` (commit_summary) of what it added,
+    removed and where its time went."""
     version = (current_version(table) or 0) + 1
     timings: dict = {}
     entries = _write_data_files(
@@ -1614,34 +1587,44 @@ def append(
         ndv_cols,
         timings=timings,
     )
-    summary = {
-        "added_data_files": len(entries),
-        "added_records": sum(e["rows"] for e in entries),
-        "added_files_size": sum(e["bytes"] for e in entries),
-    }
+    if marker is not None:
+        for e in entries:
+            e["markers"] = [marker]
+    cur = current_version(table)
+    added: list[dict] = []
+    removed: list[dict] = []
+    rewritten = 0
+    if replace is not None and cur is not None:
+        t0 = time.perf_counter()
+        added, removed, rewritten = _replace_files(
+            spark, table, version, _state_at(table, cur)[1], *replace
+        )
+        if removed:
+            timings["rewrite_s"] = time.perf_counter() - t0
+    summary = _change_summary(entries + added, removed or None, rewritten)
     t0 = time.perf_counter()
     entries = _maybe_chunk(table, entries, manifest_chunk_files)
     timings["manifest_s"] += time.perf_counter() - t0
     schema_new = _schema_of(df)
     t0 = time.perf_counter()
-    for attempt in range(max_retries):
-        parent = current_version(table)
+    for attempt in range(1 if removed else max_retries):
+        parent = cur if removed else current_version(table)
         version_try = (parent or 0) + 1
         pstate = _state_at(table, parent)[1] if parent is not None else None
         existing = pstate["schema"] if pstate is not None else None
         merged = _check_schema(existing, schema_new, allow_evolution)
         fields, last_id = _fields_after_write(pstate, merged)
-        for e in entries:
+        for e in entries + added:
             e["seq"] = version_try
         commit = {
             "version": version_try,
             "parent": parent,
-            "operation": "append",
+            "operation": "replace" if removed else "append",
             "ts": time.time(),
             "schema": merged,
             "fields": fields,
             "last_field_id": last_id,
-            "added_data": _stamp_cols(entries, fields),
+            "added_data": _stamp_cols(entries + added, fields),
             "summary": dict(
                 summary,
                 **{k: round(v, 4) for k, v in timings.items()},
@@ -1649,11 +1632,13 @@ def append(
                 commit_retries=attempt,
             ),
         }
-        if marker is not None:
-            commit["marker"] = marker
+        if removed:
+            commit["removed_data"] = sorted(e["path"] for e in removed)
         if _try_commit(table, commit):
             return version_try
-    raise CommitConflict(f"append lost the commit race {max_retries} times: {table}")
+    raise CommitConflict(
+        f"{commit['operation']} lost the commit race {attempt + 1} times: {table}"
+    )
 
 
 def add_files(
@@ -1729,34 +1714,59 @@ def add_files(
 
 
 def _marker_ledger(table: str) -> dict[str, int]:
-    """marker → version of the first retained commit carrying it, replayed
-    in commit order: a delete commit's `retired_markers` drop the markers
-    whose rows it removed, so a later append may carry them again."""
+    """marker → the oldest sequence number among the live files carrying
+    it. A marker is in the ledger iff a live data file holds rows
+    committed under it: an append stamps its files with its marker, a
+    rewrite's outputs carry their inputs' markers except those whose rows
+    it may drop, and expiry's rebase base keeps the live entries, so the
+    ledger survives expiry and forgets a marker when its last file goes."""
+    if current_version(table) is None:
+        return {}
     out: dict[str, int] = {}
-    for v in list_versions(table):
-        c = _read_commit(table, v)
-        for m in c.get("retired_markers", ()):
-            out.pop(m, None)
-        if c.get("marker") is not None:
-            out.setdefault(c["marker"], v)
+    for e in _state_at(table)[1]["data"].values():
+        for m in e.get("markers", ()):
+            out[m] = min(out.get(m, e["seq"]), e["seq"])
     return out
 
 
 def committed_markers(table: str) -> set[str]:
-    """Markers of the retained commits that no later delete retired — the
-    resume ledger."""
+    """The markers the live files carry — the resume ledger."""
     return set(_marker_ledger(table))
 
 
 def commit_summary(table: str, version: int) -> dict | None:
-    """What an append commit added and where its time went (Iceberg's
+    """What a commit added and removed and where its time went (Iceberg's
     snapshot summary): added_data_files, added_records and
-    added_files_size from the manifest entries; write_s (the Spark
-    write), manifest_s (footer reads, sketches and partition tuples) and
-    commit_s (log replay, schema check and any lost races, up to the
-    winning commit-if-absent write); commit_retries. None for commits
-    that record no summary (non-append operations)."""
+    added_files_size from the manifest entries; for a commit that removes
+    files (a delete, update, merge or replace), removed_data_files,
+    removed_records and rewritten_files (the removed files whose other
+    rows it rewrote) with rewrite_s (finding and rewriting them). Appends
+    and replaces also record write_s (the Spark write), manifest_s (footer
+    reads, sketches and partition tuples), commit_s (log replay, schema
+    check and any lost races, up to the winning commit-if-absent write)
+    and commit_retries. None for commits that record no summary
+    (compaction, overwrite, rollback, schema evolution)."""
     return _read_commit(table, version).get("summary")
+
+
+def _change_summary(
+    added: list[dict], removed: list[dict] | None = None, rewritten: int = 0
+) -> dict:
+    """Summary fields of a commit adding `added` file entries; with
+    `removed`, also what it removed, `rewritten` of those files having
+    been rewritten."""
+    s = {
+        "added_data_files": len(added),
+        "added_records": sum(e["rows"] for e in added),
+        "added_files_size": sum(e["bytes"] for e in added),
+    }
+    if removed is not None:
+        s.update(
+            removed_data_files=len(removed),
+            removed_records=sum(e["rows"] for e in removed),
+            rewritten_files=rewritten,
+        )
+    return s
 
 
 def append_idempotent(
@@ -1766,19 +1776,179 @@ def append_idempotent(
     marker: str,
     **kwargs,
 ) -> tuple[int | None, bool]:
-    """Exactly-once append under restarts: if a retained commit already
-    carries `marker`, the append is skipped (returns (version_of_that
-    _commit, False)); otherwise the data is committed with the marker and
-    (new_version, True) is returned. The marker plays the role of
-    checkpoint.SliceManifest for sink writes — a restarted job re-submits
-    every slice and the ledger makes re-submission a no-op. Uniqueness of
-    in-flight markers is the scheduler's contract (run_sliced runs each
-    slice once); the ledger protects RESTARTS, not two concurrent writers
-    racing the same marker."""
+    """Exactly-once append under restarts: if a live file already carries
+    `marker`, the append is skipped (returns (the oldest such file's
+    sequence number, False)); otherwise the data is committed with the
+    marker and (new_version, True) is returned. The marker plays the role
+    of checkpoint.SliceManifest for sink writes — a restarted job
+    re-submits every slice and the ledger makes re-submission a no-op.
+    Uniqueness of in-flight markers is the scheduler's contract
+    (run_sliced runs each slice once); the ledger protects RESTARTS, not
+    two concurrent writers racing the same marker. `kwargs` go to append
+    (`replace` among them)."""
     v = _marker_ledger(table).get(marker)
     if v is not None:
         return v, False
     return append(spark, table, df, marker=marker, **kwargs), True
+
+
+def _commit(table: str, parent: int | None, operation: str, **body) -> int:
+    """Commit one non-append operation on top of `parent`. A lost race
+    raises CommitConflict: the operation was planned against `parent`."""
+    version = (parent or 0) + 1
+    commit = {
+        "version": version,
+        "parent": parent,
+        "operation": operation,
+        "ts": time.time(),
+        **body,
+    }
+    if not _try_commit(table, commit):
+        raise CommitConflict(f"{operation} conflicted at version {version}: {table}")
+    return version
+
+
+def _live_rows(spark: SparkSession, state: dict) -> DataFrame:
+    """The live rows of a state with their file identity as `_file`."""
+    return _with_file(_read_projected(spark, list(state["data"].values()), state))
+
+
+def _files_holding(state: dict, rows: DataFrame) -> list[dict]:
+    """The live file entries holding one of `rows` (a frame over
+    _live_rows) — one Spark job."""
+    hit = {r._file for r in rows.select("_file").distinct().collect()}
+    return [e for p, e in state["data"].items() if os.path.abspath(p) in hit]
+
+
+def _layout_of(state: dict, entries) -> dict:
+    """_write_data_files options that keep `entries`' layout in their
+    rewrite: the columns they carry min/max stats, blooms and NDV sketches
+    on, and their sink keys (partition_by files), all by current name."""
+    byid = {i: n for i, n, _t in _fields_of(state)}
+    names = set(byid.values())
+    cols: dict[str, set] = {"stats": set(), "bloom": set(), "ndv": set()}
+    keys = set()
+    for e in entries:
+        ids = e.get("cols") or {}
+        now = {c: byid.get(ids[c]) if c in ids else c for c in {
+            *e.get("stats", {}), *e.get("bloom", {}), *e.get("ndv", {}),
+            *(e.get("partitions") or {}).get("keys", ()),
+        }}
+        for kind, dest in cols.items():
+            dest |= {now[c] for c in e.get(kind, {})} & names
+        parts = e.get("partitions")
+        keys.add(
+            None if not parts or e.get("spec")
+            else tuple(now[k] for k in parts["keys"])
+        )
+    (only,) = keys if len(keys) == 1 else (None,)
+    return {
+        "stats_cols": tuple(sorted(cols["stats"])),
+        "bloom_cols": tuple(sorted(cols["bloom"])),
+        "ndv_cols": tuple(sorted(cols["ndv"])),
+        "partition_by": only if only and set(only) <= names else (),
+    }
+
+
+def _rewrite_files(
+    spark: SparkSession,
+    table: str,
+    version: int,
+    state: dict,
+    entries: list[dict],
+    rows,
+    keep_marker=None,
+    stats_cols: tuple[str, ...] = (),
+    **write,
+) -> list[dict]:
+    """The copy-on-write step: write rows(the live rows of `entries`) as
+    new files of commit `version` and return their entries; the caller's
+    commit removes the originals. The outputs keep the inputs' layout
+    (_layout_of; `write` overrides it), add min/max stats on `stats_cols`
+    and carry the inputs' markers that `keep_marker` accepts (default:
+    all) — none at all when some input carries none, as its rows are then
+    unaccounted for. Outputs without a row are deleted, so a rewrite whose
+    remainder is empty writes no file."""
+    if not entries:
+        return []
+    opts = dict(_layout_of(state, entries), **write)
+    opts["stats_cols"] = tuple(sorted({*opts["stats_cols"], *stats_cols}))
+    out = _write_data_files(
+        rows(_read_projected(spark, entries, state)), table, version, kind="data", **opts
+    )
+    for e in out:
+        if not e["rows"]:
+            os.unlink(e["path"])
+    out = [e for e in out if e["rows"]]
+    markers = sorted({
+        m for e in entries for m in e.get("markers", ())
+        if keep_marker is None or keep_marker(m)
+    })
+    if markers and all(e.get("markers") for e in entries):
+        for e in out:
+            e["markers"] = markers
+    return _stamp_cols(out, _fields_of(state))
+
+
+def _rewrite_commit(
+    spark: SparkSession,
+    table: str,
+    cur: int | None,
+    state: dict | None,
+    operation: str,
+    hit: list[dict],
+    rows,
+    added: list[dict] = (),
+    stats_cols: tuple[str, ...] = (),
+    **body,
+) -> int:
+    """Commit `operation` as the rewrite of the live files `hit` (each
+    replaced by rows(its rows); see _rewrite_files) plus the new files
+    `added`, in one commit that records its summary."""
+    t0 = time.perf_counter()
+    new = list(added) + _rewrite_files(
+        spark, table, (cur or 0) + 1, state, hit, rows, stats_cols=stats_cols
+    )
+    summary = _change_summary(new, hit, len(hit))
+    summary["rewrite_s"] = round(time.perf_counter() - t0, 4)
+    return _commit(
+        table, cur, operation,
+        added_data=new,
+        removed_data=sorted(e["path"] for e in hit),
+        summary=summary,
+        **body,
+    )
+
+
+def _replace_files(
+    spark: SparkSession,
+    table: str,
+    version: int,
+    state: dict,
+    condition: Column,
+    inside,
+) -> tuple[list[dict], list[dict], int]:
+    """Plan and write the copy-on-write replace of the live rows matching
+    `condition`. `inside(marker)` says whether every row committed under
+    the marker matches `condition` (True), none does (False) or it cannot
+    tell (None). A live file whose markers are all inside is removed
+    without being read; one with no marker or an undecided one is
+    rewritten keeping the rows that miss `condition`, its outputs keeping
+    only the markers that are outside; the others stay as they are.
+    Returns (rewrite outputs, removed entries, files rewritten)."""
+    drop, straddle = [], []
+    for e in state["data"].values():
+        verdicts = {inside(m) for m in e.get("markers", ())}
+        if verdicts == {True}:
+            drop.append(e)
+        elif verdicts != {False}:
+            straddle.append(e)
+    keep = ~F.coalesce(condition, F.lit(False))
+    added = _rewrite_files(
+        spark, table, version, state, straddle, lambda df: df.filter(keep),
+        keep_marker=lambda m: inside(m) is False,
+    )
+    return added, drop + straddle, len(straddle)
 
 
 def delete_where(
@@ -1786,127 +1956,27 @@ def delete_where(
     table: str,
     condition,
     key_cols: list[str],
-    retire_markers: tuple[str, ...] = (),
 ) -> int:
-    """Equality delete: materialize the DISTINCT key tuples matching
-    `condition` into a small delete file and commit it — no data file is
-    rewritten. Readers anti-join; compaction folds it away. The delete's
-    sequence number scopes it to data files committed strictly before it.
-    `retire_markers` names the append markers whose rows the delete
-    removes; the commit records them, so the marker ledger
-    (committed_markers, append_idempotent) no longer counts them."""
-    cur = current_version(table)
-    if cur is None:
-        raise LookupError(f"cannot delete from empty table {table}")
-    keys = (
-        read_snapshot(spark, table)
-        .filter(condition)
-        .select(*key_cols)
-        .distinct()
-    )
-    version = (current_version(table) or 0) + 1
-    entries = _write_data_files(keys, table, version, (), "deletes")
-    for e in entries:
-        e["key_cols"] = key_cols
-    _stamp_cols(entries, _fields_of(_state_at(table, cur)[1]))
-    commit = {
-        "version": version,
-        "parent": cur,
-        "operation": "delete",
-        "ts": time.time(),
-        "added_deletes": entries,
-    }
-    if retire_markers:
-        commit["retired_markers"] = sorted(retire_markers)
-    if not _try_commit(table, commit):
-        raise CommitConflict(f"delete conflicted at version {version}: {table}")
-    return version
-
-
-def _read_live_identity(spark: SparkSession, state: dict) -> DataFrame:
-    """The LIVE rows of a state with their (_file, _pos) row identity —
-    the input every position-delete writer works from."""
-    df = _with_file(
-        _read_projected(
-            spark, list(state["data"].values()), state, with_pos=True
-        )
-    )
-    return _apply_deletes(spark, df, state, keep_identity=True)
-
-
-def _commit_position_deletes(
-    spark: SparkSession, table: str, cur: int, keys: DataFrame
-) -> int:
-    """Write a position-delete file from (_file, _pos) rows and commit it."""
-    version = (current_version(table) or 0) + 1
-    entries = _write_data_files(
-        keys.select("_file", "_pos").distinct(), table, version, (), "deletes"
-    )
-    for e in entries:
-        e["key_cols"] = ["_file", "_pos"]
-        e["positional"] = True
-    commit = {
-        "version": version,
-        "parent": cur,
-        "operation": "delete",
-        "ts": time.time(),
-        "added_deletes": entries,
-    }
-    if not _try_commit(table, commit):
-        raise CommitConflict(
-            f"position delete conflicted at version {version}: {table}"
-        )
-    return version
-
-
-def delete_where_positions(spark: SparkSession, table: str, condition) -> int:
-    """Position delete (Iceberg v2 position-delete files): materialize the
-    (file, pos) row identity of every LIVE row matching `condition` into a
-    small delete file and commit it — no key columns required and no data
-    file rewritten. The row ordinal comes from the parquet scan's
-    `_metadata.row_index`, the Spark-native analog of Iceberg's file
-    position. Position deletes are schema-agnostic (they reference the
-    file, not any column), so schema evolution before or after never
-    invalidates them, and they compose with equality deletes in the same
-    merge-on-read pass. No reference analog (the Go CLI has no storage
-    layer, sample/main.go:32-47)."""
+    """Copy-on-write delete: every live row whose `key_cols` tuple equals
+    that of a row matching `condition` goes. The live files holding such
+    rows are rewritten without them and removed, in one commit; every
+    other file stays as it is. Finding them reads the table once; the
+    rewrite reads only the files it rewrites (each matching row lies in
+    one, so their keys are the table's). The rewrites keep their inputs'
+    markers: a deliberate delete is not a lost slice."""
     cur = current_version(table)
     if cur is None:
         raise LookupError(f"cannot delete from empty table {table}")
     _, state = _state_at(table, cur)
-    keys = _read_live_identity(spark, state).filter(condition)
-    return _commit_position_deletes(spark, table, cur, keys)
+    live = _live_rows(spark, state)
+    keys = live.filter(condition).select(*key_cols).distinct()
+    hit = _files_holding(state, live.join(keys, key_cols, "left_semi"))
 
+    def rows(df: DataFrame) -> DataFrame:
+        gone = df.filter(condition).select(*key_cols).distinct()
+        return df.join(gone, key_cols, "left_anti").select(*df.columns)
 
-def dedup_keep_first(
-    spark: SparkSession,
-    table: str,
-    key_cols: list[str],
-    order_cols: list[str] | None = None,
-) -> int:
-    """Exact dedup WITHOUT rewriting data: keep exactly one row per key
-    (the first by `order_cols`, defaulting to the stable (_file, _pos)
-    scan order) and commit a position delete for every other copy. This is
-    the row-level operation equality deletes fundamentally cannot express
-    — identical rows agree on every column, so any key-based delete kills
-    the survivor too; only the positional identity separates copies. The
-    window is partitioned by the dedup key (bounded per-key state, no
-    global sort), and only the redundant rows' (file, pos) pairs are
-    written — output is duplicate-sized, not table-sized."""
-    cur = current_version(table)
-    if cur is None:
-        raise LookupError(f"cannot dedup empty table {table}")
-    _, state = _state_at(table, cur)
-    live = _read_live_identity(spark, state)
-    order = [F.col(c) for c in (order_cols or [])] + [
-        F.col("_file"),
-        F.col("_pos"),
-    ]
-    rn = F.row_number().over(
-        Window.partitionBy(*[F.col(c) for c in key_cols]).orderBy(*order)
-    )
-    dupes = live.withColumn("_rn", rn).filter(F.col("_rn") > 1)
-    return _commit_position_deletes(spark, table, cur, dupes)
+    return _rewrite_commit(spark, table, cur, state, "delete", hit, rows)
 
 
 def overwrite(
@@ -1916,28 +1986,20 @@ def overwrite(
     stats_cols: tuple[str, ...] = (),
 ) -> int:
     """Replace the table's full contents atomically (removes every live
-    data and delete file, adds the new files) — readers of older snapshots
-    are untouched until expiry."""
+    data file, adds the new files) — readers of older snapshots are
+    untouched until expiry."""
     cur = current_version(table)
-    _, state = _state_at(table, cur) if cur else (0, {"data": {}, "deletes": {}})
-    version = (current_version(table) or 0) + 1
-    entries = _write_data_files(df, table, version, stats_cols, "data")
-    fields, last_id = _fields_after_write(state if cur else None, _schema_of(df))
-    commit = {
-        "version": version,
-        "parent": cur,
-        "operation": "overwrite",
-        "ts": time.time(),
-        "schema": _schema_of(df),
-        "fields": fields,
-        "last_field_id": last_id,
-        "added_data": _stamp_cols(entries, fields),
-        "removed_data": sorted(state["data"]),
-        "removed_deletes": sorted(state["deletes"]),
-    }
-    if not _try_commit(table, commit):
-        raise CommitConflict(f"overwrite conflicted at version {version}: {table}")
-    return version
+    state = _state_at(table, cur)[1] if cur else None
+    entries = _write_data_files(df, table, (cur or 0) + 1, stats_cols, "data")
+    fields, last_id = _fields_after_write(state, _schema_of(df))
+    return _commit(
+        table, cur, "overwrite",
+        schema=_schema_of(df),
+        fields=fields,
+        last_field_id=last_id,
+        added_data=_stamp_cols(entries, fields),
+        removed_data=sorted(state["data"]) if state else [],
+    )
 
 
 def update_where(
@@ -1950,64 +2012,32 @@ def update_where(
     """Copy-on-write row-level UPDATE (Iceberg's eager update mode): only
     the files that CONTAIN a matching live row are rewritten — matching
     rows get `assignments` applied, their non-matching neighbors are
-    carried over verbatim (with any pending deletes folded in), and every
-    untouched file stays byte-identical in the new snapshot. ONE atomic
-    commit swaps the rewritten files in, so readers see all-or-nothing and
-    older snapshots time-travel unchanged. Cost scales with the matched
-    FILES, not the table — pair the predicate with stats_cols/partitioning
-    at write time so the match set is narrow. Rewritten files are written
-    unpartitioned (their manifest partition metadata is dropped, so pruned
-    reads keep-not-prune them — correct, just unpruned until the next
-    compact). No reference analog (the Go CLI has no storage layer,
-    sample/main.go:32-47)."""
+    carried over verbatim — and every untouched file stays byte-identical
+    in the new snapshot. ONE atomic commit swaps the rewritten files in,
+    so readers see all-or-nothing and older snapshots time-travel
+    unchanged. Cost scales with the matched FILES, not the table — pair
+    the predicate with stats_cols/partitioning at write time so the match
+    set is narrow. Rewritten files keep their inputs' stats, blooms and
+    sink keys, plus min/max stats on `stats_cols`. No reference analog
+    (the Go CLI has no storage layer, sample/main.go:32-47)."""
     cur = current_version(table)
     if cur is None:
         raise LookupError(f"cannot update empty table {table}")
     _, state = _state_at(table, cur)
-    bad = set(assignments) - {n for _i, n, _t in _fields_of(state)}
+    types = {n: t for _i, n, t in _fields_of(state)}
+    bad = set(assignments) - set(types)
     if bad:
         raise ValueError(f"assignment to unknown column(s): {sorted(bad)}")
-    live = _read_live_identity(spark, state)
-    hit_files = [
-        r._file for r in live.filter(condition).select("_file").distinct().collect()
-    ]
-    version = (current_version(table) or 0) + 1
-    if not hit_files:
-        commit = {
-            "version": version,
-            "parent": cur,
-            "operation": "update",
-            "ts": time.time(),
-        }
-        if not _try_commit(table, commit):
-            raise CommitConflict(f"update conflicted at version {version}: {table}")
-        return version
-    rewrite = live.filter(F.col("_file").isin(hit_files))
-    for col, expr in assignments.items():
-        rewrite = rewrite.withColumn(
-            col, F.when(condition, expr).otherwise(F.col(col))
-        )
-    types = {n: t for _i, n, t in _fields_of(state)}
-    rewrite = rewrite.select(
-        *[F.col(n).cast(types[n]).alias(n) for n in types]
+    hit = _files_holding(state, _live_rows(spark, state).filter(condition))
+
+    def rows(df: DataFrame) -> DataFrame:
+        for col, expr in assignments.items():
+            df = df.withColumn(col, F.when(condition, expr).otherwise(F.col(col)))
+        return df.select(*[F.col(n).cast(t).alias(n) for n, t in types.items()])
+
+    return _rewrite_commit(
+        spark, table, cur, state, "update", hit, rows, stats_cols=stats_cols
     )
-    entries = _write_data_files(rewrite, table, version, stats_cols, "data")
-    commit = {
-        "version": version,
-        "parent": cur,
-        "operation": "update",
-        "ts": time.time(),
-        "added_data": _stamp_cols(entries, _fields_of(state)),
-        # the live _file identity is the abspath; map back to manifest keys
-        "removed_data": sorted(
-            p
-            for p in state["data"]
-            if os.path.abspath(p) in set(hit_files)
-        ),
-    }
-    if not _try_commit(table, commit):
-        raise CommitConflict(f"update conflicted at version {version}: {table}")
-    return version
 
 
 def merge_upsert(
@@ -2019,103 +2049,101 @@ def merge_upsert(
     partition_by: tuple[str, ...] = (),
     partition_spec: tuple[str, ...] = (),
 ) -> int:
-    """Atomic MERGE (upsert): ONE commit carries both an equality-delete
-    file over the source's key tuples and the source data files. The
-    delete's sequence number equals the commit version, so it scopes to
-    data files committed strictly BEFORE the merge (the Iceberg v2
-    sequence rule _apply_deletes enforces) and the merge's own rows
-    survive it — matched keys are replaced merge-on-read, unmatched keys
-    insert, and a reader sees the whole upsert or none of it. This is
-    Iceberg's MERGE INTO with merge-on-read row-level deletes; no data
-    file is rewritten."""
+    """Atomic MERGE (upsert), copy-on-write: ONE commit adds the source's
+    files and rewrites the live files holding one of the source's
+    `key_cols` tuples without those rows — matched keys are replaced,
+    unmatched keys insert, and a reader sees the whole upsert or none of
+    it. This is Iceberg's MERGE INTO under `write.merge.mode =
+    copy-on-write`."""
     cur = current_version(table)
-    version = (current_version(table) or 0) + 1
-    pstate = _state_at(table, cur)[1] if cur else None
-    existing = pstate["schema"] if pstate is not None else None
-    entries = _write_data_files(
+    state = _state_at(table, cur)[1] if cur is not None else None
+    merged = _check_schema(state["schema"] if state else None, _schema_of(df), False)
+    fields, last_id = _fields_after_write(state, merged)
+    source = _write_data_files(
         df,
         table,
-        version,
+        (cur or 0) + 1,
         stats_cols,
         "data",
         partition_by,
         parse_partition_spec(partition_spec) if partition_spec else None,
     )
-    merged = _check_schema(existing, _schema_of(df), False)
-    fields, last_id = _fields_after_write(pstate, merged)
-    commit = {
-        "version": version,
-        "parent": cur,
-        "operation": "merge",
-        "ts": time.time(),
-        "schema": merged,
-        "fields": fields,
-        "last_field_id": last_id,
-        "added_data": _stamp_cols(entries, fields),
-    }
-    if cur is not None:
-        keys = df.select(*key_cols).distinct()
-        del_entries = _write_data_files(keys, table, version, (), "deletes")
-        for e in del_entries:
-            e["key_cols"] = list(key_cols)
-        commit["added_deletes"] = _stamp_cols(del_entries, fields)
-    if not _try_commit(table, commit):
-        raise CommitConflict(f"merge conflicted at version {version}: {table}")
-    return version
+    keys = df.select(*key_cols).distinct()
+    hit = (
+        _files_holding(state, _live_rows(spark, state).join(keys, key_cols, "left_semi"))
+        if state
+        else []
+    )
+    return _rewrite_commit(
+        spark, table, cur, state, "merge", hit,
+        lambda d: d.join(keys, key_cols, "left_anti").select(*d.columns),
+        added=_stamp_cols(source, fields),
+        schema=merged,
+        fields=fields,
+        last_field_id=last_id,
+    )
 
 
 def rollback_to(table: str, version: int) -> int:
     """Roll the table back to an earlier snapshot as a NEW commit —
     history is preserved (Iceberg's rollback semantics): the commit
-    re-points the live data/delete file sets at the target version's, so
-    the bad versions remain time-travelable until expiry and the rollback
-    itself is one atomic log write. Re-added entries keep their ORIGINAL
-    sequence numbers, so merge-on-read delete scoping replays exactly as
-    it did at the target version."""
+    re-points the live file set at the target version's, so the bad
+    versions remain time-travelable until expiry and the rollback itself
+    is one atomic log write. Re-added entries keep their sequence numbers
+    and markers, so the ledger is the target version's."""
     cur = current_version(table)
     if cur is None:
         raise LookupError(f"cannot roll back empty table {table}")
     _, target = _state_at(table, version)
     _, now = _state_at(table, cur)
-    commit = {
-        "version": (current_version(table) or 0) + 1,
-        "parent": cur,
-        "operation": "rollback",
-        "ts": time.time(),
-        "restores": version,
-        "schema": target["schema"],
-        "fields": _fields_of(target),
-        "last_field_id": target.get("last_field_id", 0),
-        "evolved": bool(target.get("evolved")),
-        "added_data": [e for p, e in target["data"].items() if p not in now["data"]],
-        "removed_data": sorted(p for p in now["data"] if p not in target["data"]),
-        "added_deletes": [
-            e for p, e in target["deletes"].items() if p not in now["deletes"]
-        ],
-        "removed_deletes": sorted(
-            p for p in now["deletes"] if p not in target["deletes"]
-        ),
+    return _commit(
+        table, cur, "rollback",
+        restores=version,
+        schema=target["schema"],
+        fields=_fields_of(target),
+        last_field_id=target.get("last_field_id", 0),
+        evolved=bool(target.get("evolved")),
+        added_data=[e for p, e in target["data"].items() if p not in now["data"]],
+        removed_data=sorted(p for p in now["data"] if p not in target["data"]),
+    )
+
+
+def _compact_commit(
+    spark: SparkSession,
+    table: str,
+    cur: int,
+    state: dict,
+    entries: list[dict],
+    rows,
+    stats_cols: tuple[str, ...],
+    bloom_cols: tuple[str, ...] | None,
+    ndv_cols: tuple[str, ...] | None,
+) -> int:
+    """Rewrite the live files `entries` as rows(their rows) and commit it
+    as a "compact": the logical row set is unchanged, so changelog and
+    incremental scans skip it. Outputs carry the inputs' markers and
+    min/max stats, plus stats on `stats_cols`; bloom_cols/ndv_cols default
+    to the columns sketched in the rewritten entries, so a maintenance
+    rewrite preserves the table's filters unless the caller overrides
+    (pass () to drop them)."""
+    sketches = {
+        k: v for k, v in (("bloom_cols", bloom_cols), ("ndv_cols", ndv_cols))
+        if v is not None
     }
-    if not _try_commit(table, commit):
-        raise CommitConflict(
-            f"rollback conflicted at version {commit['version']}: {table}"
-        )
-    return commit["version"]
-
-
-def _sketch_cols_of(state: dict) -> tuple[tuple[str, ...], tuple[str, ...]]:
-    """(bloom_cols, ndv_cols) present in the live pre-rewrite manifest
-    entries, write-time names resolved through field ids to current names
-    — a maintenance rewrite must carry the table's membership filters and
-    NDV sketches forward by default, not silently drop them."""
-    byid = {i: n for i, n, _t in _fields_of(state)}
-    out: dict[str, set] = {"bloom": set(), "ndv": set()}
-    for e in state["data"].values():
-        ids = e.get("cols") or {}
-        for kind, dest in out.items():
-            for c in e.get(kind, {}):
-                dest.add(byid.get(ids[c], c) if c in ids else c)
-    return tuple(sorted(out["bloom"])), tuple(sorted(out["ndv"]))
+    added = _rewrite_files(
+        spark, table, cur + 1, state, entries, rows,
+        stats_cols=stats_cols, partition_by=(), **sketches,
+    )
+    body = {
+        "schema": state["schema"],
+        "added_data": added,
+        "removed_data": sorted(e["path"] for e in entries),
+    }
+    if len(entries) == len(state["data"]):
+        chunks = _state_at(table, cur, expand=False)[1].get("chunks", {})
+        if chunks:
+            body["removed_manifests"] = sorted(chunks)
+    return _commit(table, cur, "compact", **body)
 
 
 def compact(
@@ -2126,45 +2154,17 @@ def compact(
     bloom_cols: tuple[str, ...] | None = None,
     ndv_cols: tuple[str, ...] | None = None,
 ) -> int:
-    """Rewrite the live row set (deletes applied) into n_files fresh files
-    and retire the old data + delete files in one atomic commit. Logical
-    rows are unchanged — incremental_append_scan skips compact commits.
-    bloom_cols/ndv_cols default to the columns sketched in the
-    pre-rewrite manifest entries, so a maintenance rewrite preserves the
-    table's filters unless the caller explicitly overrides (pass () to
-    drop them)."""
+    """Rewrite the live row set into n_files fresh files and retire the
+    old data files in one atomic commit (_compact_commit). Logical rows
+    are unchanged — incremental_append_scan skips compact commits."""
     cur = current_version(table)
     if cur is None:
         raise LookupError(f"cannot compact empty table {table}")
     _, state = _state_at(table, cur)
-    prev_bloom, prev_ndv = _sketch_cols_of(state)
-    df = read_snapshot(spark, table).coalesce(n_files)
-    version = (current_version(table) or 0) + 1
-    entries = _write_data_files(
-        df,
-        table,
-        version,
-        stats_cols,
-        "data",
-        bloom_cols=prev_bloom if bloom_cols is None else bloom_cols,
-        ndv_cols=prev_ndv if ndv_cols is None else ndv_cols,
+    return _compact_commit(
+        spark, table, cur, state, list(state["data"].values()),
+        lambda df: df.coalesce(n_files), stats_cols, bloom_cols, ndv_cols,
     )
-    commit = {
-        "version": version,
-        "parent": cur,
-        "operation": "compact",
-        "ts": time.time(),
-        "schema": state["schema"],
-        "added_data": _stamp_cols(entries, _fields_of(state)),
-        "removed_data": sorted(state["data"]),
-        "removed_deletes": sorted(state["deletes"]),
-    }
-    chunks = _state_at(table, cur, expand=False)[1].get("chunks", {})
-    if chunks:
-        commit["removed_manifests"] = sorted(chunks)
-    if not _try_commit(table, commit):
-        raise CommitConflict(f"compact conflicted at version {version}: {table}")
-    return version
 
 
 def compact_binpack(
@@ -2176,59 +2176,27 @@ def compact_binpack(
     ndv_cols: tuple[str, ...] | None = None,
 ) -> int | None:
     """Iceberg's binpack rewrite strategy: ONLY data files below
-    target_bytes are rewritten (pending deletes applied) into ~target-
-    sized packed files; files already at size are untouched — the rewrite
-    cost is bounded by the small-file backlog, never the table size. This
-    is the maintenance loop a streaming sink needs: each micro-batch
-    commit lands a few small files, and the backlog is folded
-    periodically without rewriting the accumulated history. Delete files
-    are RETAINED (they still scope to the untouched older files); the
-    packed files' sequence number exceeds every prior delete's, so
-    rewritten rows are not re-deleted. Returns the committed version, or
-    None when fewer than two small files exist (nothing to pack).
-    bloom_cols/ndv_cols default to the columns sketched in the rewritten
-    (small) files' manifest entries — the fold preserves the table's
-    filters; pass () explicitly to drop them."""
+    target_bytes are rewritten into ~target-sized packed files; files
+    already at size are untouched — the rewrite cost is bounded by the
+    small-file backlog, never the table size. This is the maintenance
+    loop a streaming sink needs: each micro-batch commit lands a few small
+    files, and the backlog is folded periodically without rewriting the
+    accumulated history. Returns the committed version, or None when
+    fewer than two small files exist (nothing to pack). bloom_cols/
+    ndv_cols default to the columns sketched in the small files
+    (_compact_commit)."""
     cur = current_version(table)
     if cur is None:
         raise LookupError(f"cannot compact empty table {table}")
     _, state = _state_at(table, cur)
-    small = {
-        p: e for p, e in state["data"].items() if e["bytes"] < target_bytes
-    }
+    small = [e for e in state["data"].values() if e["bytes"] < target_bytes]
     if len(small) < 2:
         return None
-    total = sum(e["bytes"] for e in small.values())
-    n_files = max(1, -(-total // target_bytes))
-    small_state = dict(state, data=small)
-    df = _apply_deletes(
-        spark,
-        _read_projected(spark, list(small.values()), small_state),
-        small_state,
-    ).coalesce(n_files)
-    prev_bloom, prev_ndv = _sketch_cols_of(dict(state, data=small))
-    version = (current_version(table) or 0) + 1
-    entries = _write_data_files(
-        df,
-        table,
-        version,
-        stats_cols,
-        "data",
-        bloom_cols=prev_bloom if bloom_cols is None else bloom_cols,
-        ndv_cols=prev_ndv if ndv_cols is None else ndv_cols,
+    n_files = max(1, -(-sum(e["bytes"] for e in small) // target_bytes))
+    return _compact_commit(
+        spark, table, cur, state, small,
+        lambda df: df.coalesce(n_files), stats_cols, bloom_cols, ndv_cols,
     )
-    commit = {
-        "version": version,
-        "parent": cur,
-        "operation": "compact",
-        "ts": time.time(),
-        "schema": state["schema"],
-        "added_data": _stamp_cols(entries, _fields_of(state)),
-        "removed_data": sorted(small),
-    }
-    if not _try_commit(table, commit):
-        raise CommitConflict(f"binpack conflicted at version {version}: {table}")
-    return version
 
 
 def compact_sort(
@@ -2243,13 +2211,13 @@ def compact_sort(
 ) -> int:
     """Iceberg's sort / z-order rewrite strategy (`rewrite_data_files
     strategy => 'sort'` resp. `sort_order => zorder(a, b)`): rewrite ALL
-    live rows — pending deletes applied — clustered on `sort_cols`, so
-    every new data file covers a compact key range and its manifest
-    min/max stats become (near-)disjoint: prune_files_where afterwards
-    answers a point or range predicate on the cluster key by opening ~1
-    file instead of every file. Unlike binpack (small-file fold, cost
-    bounded by the backlog) this is a FULL rewrite, cost O(table): run it
-    when cluster-key read patterns justify it, not on a schedule.
+    live rows clustered on `sort_cols`, so every new data file covers a
+    compact key range and its manifest min/max stats become
+    (near-)disjoint: prune_files_where afterwards answers a point or range
+    predicate on the cluster key by opening ~1 file instead of every
+    file. Unlike binpack (small-file fold, cost bounded by the backlog)
+    this is a FULL rewrite, cost O(table): run it when cluster-key read
+    patterns justify it, not on a schedule.
 
     sort (default): repartitionByRange(n_files, sort_cols) +
     sortWithinPartitions — range boundaries come from Spark's sampler, so
@@ -2263,121 +2231,39 @@ def compact_sort(
     single-column sort only prunes on its leading column. Inputs must fit
     in 16 bits each (pre-bucketize skewed/wide keys).
 
-    Every old data file is removed, so every delete file's scope is
-    consumed by the rewrite — they are removed in the SAME commit (an
-    equality delete's semantic seq scope is moot once nothing it can
-    reference stays live). The commit reuses operation "compact":
-    changelog and incremental scans skip it as a row-level no-op.
-    bloom_cols/ndv_cols default to the columns sketched in the
-    pre-rewrite manifest entries (filters carried forward); pass ()
-    explicitly to drop them."""
+    The commit reuses operation "compact" (_compact_commit): changelog and
+    incremental scans skip it as a row-level no-op."""
     cur = current_version(table)
     if cur is None:
         raise LookupError(f"cannot rewrite empty table {table}")
     _, state = _state_at(table, cur)
     if not state["data"]:
         raise LookupError(f"no live data files to rewrite: {table}")
-    df = _apply_deletes(
-        spark,
-        _read_projected(spark, list(state["data"].values()), state),
-        state,
-    )
-    if zorder:
-        if len(sort_cols) != 2:
-            raise ValueError("zorder takes exactly two sort columns")
+    if zorder and len(sort_cols) != 2:
+        raise ValueError("zorder takes exactly two sort columns")
+
+    def rows(df: DataFrame) -> DataFrame:
+        if not zorder:
+            return df.repartitionByRange(
+                n_files, *[F.col(c) for c in sort_cols]
+            ).sortWithinPartitions(*sort_cols)
         from blogparser_spark.operators.storage import zorder_key
 
         a, b = sort_cols
         # range-partition directly on the interleaved key: contiguous z
         # ranges per file with no bucket hashing (a hash repartition can
         # collide two z buckets into one task and widen that file's box)
-        df = (
+        return (
             df.withColumn("_z", zorder_key(F.col(a), F.col(b)))
             .repartitionByRange(n_files, F.col("_z"))
             .sortWithinPartitions("_z")
             .drop("_z")
         )
-    else:
-        df = df.repartitionByRange(
-            n_files, *[F.col(c) for c in sort_cols]
-        ).sortWithinPartitions(*sort_cols)
-    prev_bloom, prev_ndv = _sketch_cols_of(state)
-    version = (current_version(table) or 0) + 1
-    entries = _write_data_files(
-        df,
-        table,
-        version,
-        tuple(stats_cols or sort_cols),
-        "data",
-        bloom_cols=prev_bloom if bloom_cols is None else bloom_cols,
-        ndv_cols=prev_ndv if ndv_cols is None else ndv_cols,
-    )
-    commit = {
-        "version": version,
-        "parent": cur,
-        "operation": "compact",
-        "ts": time.time(),
-        "schema": state["schema"],
-        "added_data": _stamp_cols(entries, _fields_of(state)),
-        "removed_data": sorted(state["data"]),
-        "removed_deletes": sorted(state["deletes"]),
-    }
-    chunks = _state_at(table, cur, expand=False)[1].get("chunks", {})
-    if chunks:
-        commit["removed_manifests"] = sorted(chunks)
-    if not _try_commit(table, commit):
-        raise CommitConflict(f"sort rewrite conflicted at v{version}: {table}")
-    return version
 
-
-def rewrite_position_deletes(spark: SparkSession, table: str) -> int | None:
-    """Compact the position-delete backlog (Iceberg's
-    rewrite_position_delete_files procedure): every live positional delete
-    file is folded into ONE delete file — dangling identities whose data
-    file is no longer live are dropped — committed atomically with the old
-    delete files removed. Merging to seq = max(originals) is PROVABLY
-    safe: a position delete only references (file, pos) of files live at
-    its own commit, all with seq <= its seq, so raising the seq extends
-    applicability only to files the delete cannot reference. (Equality
-    deletes are NEVER merged this way — their seq scope is semantic.)
-    Returns the commit version, or None with no positional backlog. The
-    commit is a row-level no-op: changelog and incremental scans skip it
-    like compact."""
-    cur = current_version(table)
-    if cur is None:
-        return None
-    _, state = _state_at(table, cur)
-    pos = [e for e in state["deletes"].values() if e.get("positional")]
-    if len(pos) < 1:
-        return None
-    live = spark.createDataFrame(
-        [(os.path.abspath(p),) for p in state["data"]], "_file string"
+    return _compact_commit(
+        spark, table, cur, state, list(state["data"].values()), rows,
+        tuple(stats_cols or sort_cols), bloom_cols, ndv_cols,
     )
-    keys = (
-        _read_files(spark, [e["path"] for e in pos], _POS_DELETE_SCHEMA)
-        .distinct()
-        .join(F.broadcast(live), "_file", "semi")  # drop dangling identities
-        .coalesce(1)
-    )
-    version = (current_version(table) or 0) + 1
-    entries = _write_data_files(keys, table, version, (), "deletes")
-    for e in entries:
-        e["key_cols"] = ["_file", "_pos"]
-        e["positional"] = True
-        e["seq"] = max(int(p["seq"]) for p in pos)
-    commit = {
-        "version": version,
-        "parent": cur,
-        "operation": "rewrite_deletes",
-        "ts": time.time(),
-        "added_deletes": entries,
-        "removed_deletes": sorted(e["path"] for e in pos),
-    }
-    if not _try_commit(table, commit):
-        raise CommitConflict(
-            f"rewrite_position_deletes conflicted at version {version}: {table}"
-        )
-    return version
 
 
 def clustering_depth(table: str, col: str) -> dict:
@@ -2437,8 +2323,6 @@ def maintenance_plan(
     table: str,
     small_file_bytes: int = 32 << 20,
     small_file_backlog: int = 4,
-    pos_delete_backlog: int = 2,
-    eq_delete_backlog: int = 4,
     keep_versions: int = 16,
     cluster_col: str | None = None,
     max_avg_depth: float = 2.0,
@@ -2447,13 +2331,11 @@ def maintenance_plan(
     Iceberg's maintenance procedures): one row per recommended action with
     its reason and the manifest numbers behind it. Emits
     `compact_binpack` when the small-file backlog passes the threshold,
-    `rewrite_position_deletes` when positional delete files pile up,
-    `compact` when EQUALITY delete files pile up (only a full rewrite
-    folds those away), `expire_snapshots` when the retained version
-    chain grows past `keep_versions`, and — when `cluster_col` names the
-    table's read-pattern key — `compact_sort` when clustering_depth's
-    average overlap on that column exceeds `max_avg_depth` (appends have
-    degraded the layout until stats no longer prune). Planning cost is O(live files +
+    `expire_snapshots` when the retained version chain grows past
+    `keep_versions`, and — when `cluster_col` names the table's
+    read-pattern key — `compact_sort` when clustering_depth's average
+    overlap on that column exceeds `max_avg_depth` (appends have degraded
+    the layout until stats no longer prune). Planning cost is O(live files +
     commits) driver-side metadata — at corpus scale this is the health
     check a table-service cron runs per table, never a data read. An
     empty result means the table is healthy."""
@@ -2475,26 +2357,6 @@ def maintenance_plan(
                 "compact_binpack",
                 f"{len(small)} data files under {small_file_bytes} bytes",
                 len(small),
-            )
-        )
-    n_pos = sum(1 for e in state["deletes"].values() if e.get("positional"))
-    if n_pos >= pos_delete_backlog:
-        rows.append(
-            (
-                "rewrite_position_deletes",
-                f"{n_pos} position-delete files to fold into one",
-                n_pos,
-            )
-        )
-    n_eq = sum(
-        1 for e in state["deletes"].values() if not e.get("positional")
-    )
-    if n_eq >= eq_delete_backlog:
-        rows.append(
-            (
-                "compact",
-                f"{n_eq} equality-delete files; only a rewrite folds them",
-                n_eq,
             )
         )
     if cluster_col is not None:
@@ -2523,7 +2385,7 @@ def maintenance_plan(
 
 def remove_orphans(table: str, min_age_sec: float = 0.0) -> int:
     """Iceberg's RemoveOrphanFiles maintenance action: physically delete
-    parquet files under the table's data/delete prefixes that NO retained
+    parquet files under the table's data prefix that NO retained
     commit (nor the expiry rebase base) references — the residue of
     writers that wrote their files but lost the optimistic commit race or
     died before the log write. `min_age_sec` is the same age guard as
@@ -2543,8 +2405,6 @@ def remove_orphans(table: str, min_age_sec: float = 0.0) -> int:
                     referenced.add(ent["path"])
             else:
                 referenced.add(e["path"])
-        for e in c.get("added_deletes", []):
-            referenced.add(e["path"])
     # every rebase base still pins its files
     try:
         base_names = [
@@ -2555,21 +2415,19 @@ def remove_orphans(table: str, min_age_sec: float = 0.0) -> int:
     for n in base_names:
         with open(os.path.join(_log_dir(table), n)) as f:
             snap = json.load(f)
-        for e in snap.get("data", []) + snap.get("deletes", []):
+        for e in snap["data"]:
             referenced.add(e["path"])
     removed = 0
     now = time.time()
-    for kind in ("data", "deletes"):
-        root = os.path.join(table, kind)
-        for dirpath, _dirs, files in os.walk(root):
-            for name in files:
-                if not name.endswith(".parquet"):
-                    continue
-                p = os.path.join(dirpath, name)
-                if p in referenced or now - os.path.getmtime(p) < min_age_sec:
-                    continue
-                os.unlink(p)
-                removed += 1
+    for dirpath, _dirs, files in os.walk(os.path.join(table, "data")):
+        for name in files:
+            if not name.endswith(".parquet"):
+                continue
+            p = os.path.join(dirpath, name)
+            if p in referenced or now - os.path.getmtime(p) < min_age_sec:
+                continue
+            os.unlink(p)
+            removed += 1
     # chunk manifests are written BEFORE the optimistic commit, so a
     # writer that lost every retry (or died) leaves its mchunk files in
     # log/ unreferenced — the same orphan class as its data files, swept
@@ -2603,13 +2461,6 @@ def _read_files(
     return spark.read.option("mergeSchema", "true").parquet(*paths)
 
 
-# Delete-key sets at or below this manifest row tally get a broadcast
-# anti-join; bigger sets (e.g. a table-wide dedup's duplicate list) fall
-# through to AQE's join choice so the keys never have to fit driver/executor
-# memory. ~2M (file,pos) rows ≈ low hundreds of MB broadcast, a safe ceiling.
-_BROADCAST_DELETE_ROWS = 2_000_000
-
-
 def _with_file(df: DataFrame) -> DataFrame:
     """Attach the normalized absolute-path file identity as `_file`.
     input_file_name() returns a URL-encoded file: URI — normalize it to
@@ -2617,123 +2468,6 @@ def _with_file(df: DataFrame) -> DataFrame:
     return df.withColumn(
         "_file",
         F.url_decode(F.regexp_replace(F.input_file_name(), "^file:/+", "/")),
-    )
-
-
-def _apply_deletes(
-    spark: SparkSession, df: DataFrame, state: dict,
-    fields: list[list] | None = None,
-    keep_identity: bool = False,
-) -> DataFrame:
-    """Merge-on-read: anti-join each delete file group against the data
-    rows the delete is scoped to. Equality deletes remove rows from files
-    whose sequence number is STRICTLY OLDER than the delete (Iceberg v2
-    rule — a key re-appended after the delete survives); position deletes
-    apply at seq <= theirs (the spec's position-delete rule) and anti-join
-    on the (_file, _pos) row identity instead of key columns, so they are
-    schema-agnostic — renames and drops never invalidate them. The
-    file→seq map is a tiny manifest dim joined broadcast on the file
-    identity. Delete key sets are usually small (they are the alternative
-    to rewriting data files) and get broadcast anti-joins — but a
-    position-delete set from a table-wide dedup is DUPLICATE-sized, which
-    at corpus scale can exceed executor memory, so each group's manifest
-    row tally gates the hint: past _BROADCAST_DELETE_ROWS the join falls
-    through to AQE's choice (shuffle anti-join on the same keys).
-    `keep_identity` retains the _file/_pos columns for callers that need
-    live-row identities (position-delete writers, CDC pre-images)."""
-    deletes = list(state["deletes"].values())
-    if not deletes:
-        if not keep_identity and "_pos" in df.columns:
-            df = df.drop("_pos")
-        return df
-    # File identity is the FULL absolute path: with multi-level hive
-    # partitioning one task writes the SAME filename into many partition
-    # dirs, so any fixed-suffix identity (e.g. last two path segments)
-    # collides and the manifest join multiplies rows.
-    seq_rows = [
-        (os.path.abspath(e["path"]), int(e["seq"]))
-        for e in state["data"].values()
-    ]
-    manifest = F.broadcast(
-        df.sparkSession.createDataFrame(seq_rows, "_file string, _seq int")
-    )
-    data = (df if "_file" in df.columns else _with_file(df)).join(
-        manifest, "_file"
-    )
-    by_group: dict[tuple, list[dict]] = {}
-    for e in deletes:
-        by_group.setdefault((tuple(e["key_cols"]), int(e["seq"])), []).append(e)
-    out_cols = [
-        c for c in df.columns if keep_identity or c != "_pos"
-    ]
-    for (_key_cols, dseq), entries in sorted(by_group.items(), key=lambda kv: kv[0][1]):
-        keys, join_cols = _delete_keys(spark, entries, state, fields)
-        small = (
-            sum(int(e.get("rows", 0)) for e in entries)
-            <= _BROADCAST_DELETE_ROWS
-        )
-        in_scope = (
-            F.col("_seq") <= F.lit(dseq)
-            if entries[0].get("positional")
-            else F.col("_seq") < F.lit(dseq)
-        )
-        data = _anti_join_scoped(data, keys, join_cols, in_scope, small)
-    return data.select(*out_cols)
-
-
-_POS_DELETE_SCHEMA = [["_file", "string"], ["_pos", "bigint"]]
-
-
-def _delete_keys(
-    spark: SparkSession,
-    entries: list[dict],
-    state: dict,
-    fields: list[list] | None = None,
-) -> tuple[DataFrame, list[str]]:
-    """The distinct keys of one delete group and the columns they join on,
-    read under a known schema so building the frame runs no Spark job.
-    Position deletes read (_file, _pos): file+pos reference nothing
-    evolution can move. Equality-delete keys were written under THEIR
-    commit's schema: each write-time key column resolves by field id to
-    its current name and type in `fields` (default: the state's), so a
-    rename follows and a widen reads the narrower file type widened; a
-    dropped key column means the delete can no longer be applied —
-    refuse, don't misapply."""
-    paths = [e["path"] for e in entries]
-    if entries[0].get("positional"):
-        keys = _read_files(spark, paths, _POS_DELETE_SCHEMA)
-        return keys.distinct(), ["_file", "_pos"]
-    cur = {fid: (n, t) for fid, n, t in (fields or _fields_of(state))}
-    wcols = _entry_cols(entries[0], state)
-    resolved = []
-    for k in entries[0]["key_cols"]:
-        fid = wcols.get(k)
-        if fid is None or fid not in cur:
-            raise ValueError(
-                f"delete key column {k!r} (seq {entries[0]['seq']}) was "
-                "dropped by schema evolution; compact before dropping key "
-                "columns"
-            )
-        resolved.append((k, *cur[fid]))
-    keys = _read_files(spark, paths, [[k, t] for k, _n, t in resolved])
-    keys = keys.select(*[F.col(k).alias(n) for k, n, _t in resolved])
-    return keys.distinct(), [n for _k, n, _t in resolved]
-
-
-def _anti_join_scoped(
-    data: DataFrame, keys: DataFrame, cols: list[str], in_scope, small: bool
-) -> DataFrame:
-    """Drop the `data` rows that match a `keys` row on `cols` AND satisfy
-    `in_scope` (the delete's sequence-number scope). The scope rides the
-    join condition: splitting `data` into in-scope and out-of-scope halves
-    and unioning them back would reference the whole plan twice per
-    delete, doubling the scans of every later read with each delete."""
-    renamed = keys.select(*[F.col(c).alias(f"_del_{c}") for c in cols])
-    cond = in_scope
-    for c in cols:
-        cond = cond & (data[c] == F.col(f"_del_{c}"))
-    return data.join(
-        F.broadcast(renamed) if small else renamed, cond, "left_anti"
     )
 
 
@@ -2755,8 +2489,7 @@ def read_snapshot(
     _, state = _state_at(table, version)
     if not state["data"]:
         return _empty_df(spark, _field_pairs(_fields_of(state)))
-    df = _read_projected(spark, list(state["data"].values()), state)
-    return _apply_deletes(spark, df, state)
+    return _read_projected(spark, list(state["data"].values()), state)
 
 
 def read_partition(
@@ -2768,7 +2501,7 @@ def read_partition(
     """Partition-pruned read: open only the live files whose recorded
     partition tuples hold a tuple matching `filters` (files without a
     recorded tuple set are kept — never prune blind), then apply the exact
-    filter and any delete files. This is the per-sink read path of a
+    filter. This is the per-sink read path of a
     routed table: it is scan_where with an equality predicate per filter,
     so planning is the two-level manifest walk and files that hold none
     of the sink's rows are never opened."""
@@ -2785,15 +2518,16 @@ def incremental_append_scan(
 ) -> DataFrame:
     """Exactly the rows appended in (from_version, to_version]: the union
     of the append commits' added files. Compact commits are logical no-ops
-    and are skipped; overwrite/delete commits cannot be expressed as an
-    append stream, so they raise — the caller falls back to a full diff
+    and are skipped; a commit that removes rows (overwrite, delete,
+    update, merge, replace, rollback) cannot be expressed as an append
+    stream, so it raises — the caller falls back to a full diff
     (operators/diff.diff_datasets), the same contract as Iceberg's
     incremental append scan."""
     to_version, chain = _chain_between(table, from_version, to_version)
     entries: list[dict] = []
     for c in chain:
         op = c["operation"]
-        if op in ("compact", "evolve_schema", "rewrite_deletes"):
+        if op in ("compact", "evolve_schema"):
             continue
         if op != "append":
             raise ValueError(
@@ -2818,104 +2552,42 @@ def changelog_scan(
     """Row-level CDC between two snapshots (Iceberg's changelog scan):
     every row the table gained ('insert') or lost ('delete') in
     (from_version, to_version], stamped `_change_type` / `_commit_version`.
-    Appends and merges read their added files directly; delete and merge
-    commits emit the exact PRE-IMAGE rows they removed — the parent
-    snapshot semi-joined with the commit's delete keys (every file live at
-    the parent has a sequence number older than the delete, so the
-    semi-join is precisely the seq-scoped rule _apply_deletes enforces);
-    overwrites emit the full parent as deletes then their files as
-    inserts; compactions are logical no-ops; rollbacks and updates
-    emit their net row-level diff vs the parent. The output feeds
+    An append's added files are inserts. Any commit that removes files
+    (delete, update, merge, replace, overwrite, rollback) emits its net
+    row diff: its added files' rows exceptAll its removed files' rows are
+    inserts, the reverse are deletes, so rows a rewrite carried over
+    unchanged cancel. Compactions and schema evolution are logical no-ops.
+    Every row is read in the TO-version's field view, so the pieces align
+    by field id across an in-range evolve_schema commit. The output feeds
     aggregate.apply_retractable_delta so a downstream view refreshes from
     the delta without ever rescanning the base table."""
     to_version, chain = _chain_between(table, from_version, to_version)
     to_state = _state_at(table, to_version)[1]
-    # across an in-range evolve_schema commit every emitted row — inserts,
-    # pre-images, snapshot diffs — is projected to the TO-version's field
-    # view, so the unions align by field id, not by historical name
     tf = _fields_of(to_state) if to_state.get("evolved") else None
-
-    def _at(v: int | None) -> DataFrame:
-        if not v:
-            return _empty_df(spark, _field_pairs(_fields_of(to_state)))
-        st = _state_at(table, v)[1]
-        df = _read_projected(spark, list(st["data"].values()), st, fields=tf)
-        return _apply_deletes(spark, df, st, fields=tf)
-
-    _pre = _at
-
     pieces: list[DataFrame] = []
-
-    def _emit(df: DataFrame, change: str, v: int) -> None:
-        pieces.append(
-            df.withColumn("_change_type", F.lit(change)).withColumn(
-                "_commit_version", F.lit(v)
-            )
-        )
-
     for c in chain:
-        v = c["version"]
-        op = c["operation"]
-        if op in ("compact", "evolve_schema", "rewrite_deletes"):
-            continue  # logical no-ops: the row set is unchanged
-        if op == "overwrite":
-            _emit(_pre(c.get("parent")), "delete", v)
-        elif op in ("delete", "merge") and c.get("added_deletes"):
-            dels = c["added_deletes"]
-            # key files carry write-time names: resolved by field id
-            keys, join_cols = _delete_keys(spark, dels, to_state, tf)
-            small = (
-                sum(int(e.get("rows", 0)) for e in dels)
-                <= _BROADCAST_DELETE_ROWS
+        if c["operation"] in ("compact", "evolve_schema"):
+            continue
+        added = _read_projected(spark, _added_entries(table, c), to_state, fields=tf)
+        changes = [(added, "insert")]
+        if c.get("removed_data"):
+            parent = _state_at(table, c["parent"])[1]["data"]
+            removed = _read_projected(
+                spark, [parent[p] for p in c["removed_data"]], to_state, fields=tf
             )
-            if dels[0].get("positional"):
-                # position-delete pre-images: the parent's LIVE rows at the
-                # deleted (_file, _pos) identities — schema-agnostic, so no
-                # field-id translation of the keys is ever needed
-                pst = _state_at(table, c.get("parent"))[1]
-                plive = _apply_deletes(
-                    spark,
-                    _with_file(
-                        _read_projected(
-                            spark,
-                            list(pst["data"].values()),
-                            pst,
-                            fields=tf,
-                            with_pos=True,
-                        )
-                    ),
-                    pst,
-                    fields=tf,
-                    keep_identity=True,
-                )
-                removed = plive.join(
-                    F.broadcast(keys) if small else keys, join_cols, "semi"
-                ).drop("_file", "_pos")
-                _emit(removed, "delete", v)
-                continue
-            removed = _pre(c.get("parent")).join(
-                F.broadcast(keys) if small else keys, join_cols, "semi"
+            changes = [
+                (removed.exceptAll(added), "delete"),
+                (added.exceptAll(removed), "insert"),
+            ]
+        pieces += [
+            df.withColumn("_change_type", F.lit(kind)).withColumn(
+                "_commit_version", F.lit(c["version"])
             )
-            _emit(removed, "delete", v)
-        elif op in ("rollback", "update"):
-            # update: the net row diff IS the changed rows — unchanged
-            # neighbors carried into rewritten files cancel in exceptAll
-            pre, post = _pre(c.get("parent")), _at(v)
-            _emit(post.exceptAll(pre), "insert", v)
-            _emit(pre.exceptAll(post), "delete", v)
-        elif op not in ("append", "merge", "delete"):
-            raise ValueError(f"commit v{v}: unknown operation {op!r}")
-        if op in ("append", "merge", "overwrite") and c.get("added_data"):
-            _emit(
-                _read_projected(
-                    spark, _added_entries(table, c), to_state, fields=tf
-                ),
-                "insert",
-                v,
-            )
+            for df, kind in changes
+        ]
     if not pieces:
         return (
-            _empty_df(spark, _state_at(table, to_version)[1]["schema"])
+            _empty_df(spark, to_state["schema"])
             .withColumn("_change_type", F.lit(""))
             .withColumn("_commit_version", F.lit(0))
         )
@@ -3004,7 +2676,7 @@ def scan_between(
 ) -> DataFrame:
     """Predicate scan that opens only stats-overlapping files (chunk
     summaries first — see plan_scan), then applies the exact filter and
-    any outstanding delete files."""
+    returns the live rows."""
     return scan_where(spark, table, {col: ("between", lo, hi)}, version)
 
 
@@ -3043,12 +2715,12 @@ def expire_snapshots(
     states = {v: _state_at(table, v)[1] for v in retained}
     keep_files: set[str] = set()
     for st in states.values():
-        keep_files |= set(st["data"]) | set(st["deletes"])
+        keep_files |= set(st["data"])
 
     removed = 0
     for v in expired:
         c = _read_commit(table, v)
-        for e in _added_entries(table, c) + c.get("added_deletes", []):
+        for e in _added_entries(table, c):
             if e["path"] not in keep_files and os.path.exists(e["path"]):
                 os.unlink(e["path"])
                 removed += 1
@@ -3074,7 +2746,6 @@ def expire_snapshots(
                 snap = {
                     "version": v,
                     "data": list(states[v]["data"].values()),
-                    "deletes": list(states[v]["deletes"].values()),
                     "schema": states[v]["schema"],
                 }
                 for k in ("fields", "last_field_id", "legacy_cols", "evolved"):
@@ -3089,13 +2760,12 @@ def expire_snapshots(
         os.unlink(_commit_path(table, v))
         n_versions += 1
     # drop now-empty commit data dirs (best-effort tidy, not correctness)
-    for kind in ("data", "deletes"):
-        root = os.path.join(table, kind)
-        if os.path.isdir(root):
-            for d in os.listdir(root):
-                full = os.path.join(root, d)
-                if os.path.isdir(full) and not any(
-                    f.endswith(".parquet") for f in os.listdir(full)
-                ):
-                    shutil.rmtree(full)
+    root = os.path.join(table, "data")
+    if os.path.isdir(root):
+        for d in os.listdir(root):
+            full = os.path.join(root, d)
+            if os.path.isdir(full) and not any(
+                f.endswith(".parquet") for f in os.listdir(full)
+            ):
+                shutil.rmtree(full)
     return {"files_removed": removed, "versions_removed": n_versions}

@@ -8000,7 +8000,7 @@ def linkage_entity_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ===========================================================================
 # Snapshot-log table format (operators/tablelog.py) — time travel,
-# incremental append scans, merge-on-read deletes, stats-pruned scans.
+# incremental append scans, copy-on-write deletes, stats-pruned scans.
 # Each query builds a throwaway table from deterministic event_id slices,
 # so the oracle replays the slice arithmetic over the same base table.
 # ===========================================================================
@@ -8024,11 +8024,11 @@ def _tablelog_tmp(prefix: str) -> str:
 )
 def tablelog_time_travel_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Snapshot-log commit replay: three appends (event_id mod-3 slices) and
-    an equality-delete commit, then per-type counts read at version 2 (time
-    travel: only the first two slices) and at the latest version (all three
-    slices minus the merge-on-read delete of user_id % 7 == 0). The oracle
+    a copy-on-write delete commit, then per-type counts read at version 2
+    (time travel: only the first two slices) and at the latest version
+    (all three slices minus the delete of user_id % 7 == 0). The oracle
     replays the slice arithmetic directly on the base table — agreement
-    proves the log replay, snapshot isolation, and anti-join delete path.
+    proves the log replay, snapshot isolation, and the file rewrite.
     No reference analog (the Go CLI rereads raw files per run,
     sample/main.go:32-47); this is the north rule's Iceberg-table contract
     rebuilt from the public spec on plain parquet."""
@@ -8095,12 +8095,12 @@ def tablelog_incremental_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def tablelog_pruned_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Manifest-stats file pruning composed with merge-on-read: one append
-    written repartitionByRange(5, event_id) so each file carries a tight
-    [min,max] footer stat, an equality-delete of user_id % 5 == 0, then
-    `scan_between(100, 200)` — which opens only the stats-overlapping file
-    (the skip count is pinned in tests/test_tablelog.py) and still applies
-    the delete file. Oracle: the plain filtered aggregate."""
+    """Manifest-stats file pruning composed with copy-on-write deletes:
+    one append written repartitionByRange(5, event_id) so each file
+    carries a tight [min,max] footer stat, a delete of user_id % 5 == 0
+    (its rewrites keep the stats), then `scan_between(100, 200)` — which
+    opens only the stats-overlapping file (the skip count is pinned in
+    tests/test_tablelog.py). Oracle: the plain filtered aggregate."""
     from blogparser_spark.operators import tablelog as tl
 
     t = _tablelog_tmp("tablelog_prune_")
@@ -8200,13 +8200,12 @@ def tablelog_routed_sink_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
 def tablelog_merge_upsert_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Atomic MERGE INTO on the snapshot-log format (tablelog.merge_upsert):
     the even-id slice is the base table; the mod-3 slice (values bumped
-    +500) is the upsert source — ONE commit carries both the equality
-    delete over the source keys and the source files, sequence-scoped so
-    the merge's own rows survive its delete. The oracle replays upsert
-    semantics relationally (base minus matched keys, union source):
-    agreement proves matched keys were replaced, unmatched inserted, and
-    nothing was double-counted — merge-on-read, no data file rewritten.
-    Iceberg MERGE INTO semantics rebuilt from the public spec."""
+    +500) is the upsert source — ONE commit adds the source files and
+    rewrites the base files holding a source key without those rows. The
+    oracle replays upsert semantics relationally (base minus matched keys,
+    union source): agreement proves matched keys were replaced, unmatched
+    inserted, and nothing was double-counted. Iceberg MERGE INTO
+    (copy-on-write) semantics rebuilt from the public spec."""
     from blogparser_spark.operators import tablelog as tl
 
     t = _tablelog_tmp("tablelog_mrg_") + "/t"
@@ -8248,12 +8247,12 @@ def tablelog_merge_upsert_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
 def tablelog_cdc_view_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CDC-driven view maintenance end-to-end: a view materialized at
     snapshot v1 is refreshed ONLY from tablelog.changelog_scan(v1→latest)
-    — an append, a merge-on-read delete, and an atomic merge-upsert whose
-    rows outlive the earlier delete (sequence scoping) — folded through
+    — an append, a copy-on-write delete, and an atomic merge-upsert whose
+    rows outlive the earlier delete — folded through
     aggregate.apply_retractable_delta. The oracle recomputes the view over
     the final live row set directly; agreement proves the changelog emits
     exact pre-image deletes and post-image inserts for every commit kind
-    and that the retractable algebra refreshes without rescanning the
+    (a rewriting commit's net diff) and that the retractable algebra refreshes without rescanning the
     base. At 10^12 rows this is the difference between a per-commit delta
     agg and a full-table recompute per refresh."""
     from blogparser_spark.operators import tablelog as tl
@@ -8304,16 +8303,15 @@ def tablelog_hidden_partition_scan(
     tablelog.scan_where): the even half of events is appended under
     ("days(ts)",), the odd half under the EVOLVED spec ("days(ts)",
     "bucket(4, event_type)") — per-file specs, exactly Iceberg's manifest
-    spec_id — then a merge-on-read delete of user_id % 5 == 0, then a scan
+    spec_id — then a copy-on-write delete of user_id % 5 == 0, then a scan
     with plain predicates on the SOURCE columns (a ts day-range + an
     event_type equality). scan_where plans against manifests only,
     projecting the predicates through each file's own transforms (day
     range prunes both specs; the bucket equality additionally prunes the
     evolved files; old-spec files are never pruned blind on bucket), reads
-    the surviving files, and composes the delete. The oracle is the plain
-    filtered aggregate over the base table: agreement proves pruning keeps
-    every matching file across spec evolution AND the MoR delete scopes to
-    the pruned set. At 100 TB this is a point lookup opening ~2/30 days x
+    the surviving files. The oracle is the plain filtered aggregate over
+    the base table: agreement proves pruning keeps every matching file
+    across spec evolution, rewritten files included. At 100 TB this is a point lookup opening ~2/30 days x
     1/4 buckets of the files instead of a full-table scan, with zero
     user-visible partition columns — the north rule's hidden-partitioning
     contract. Pruning counts are pinned in tests/test_tablelog.py."""
@@ -8368,7 +8366,7 @@ def tablelog_schema_evolution_counts(spark: SparkSession, sf_dir: str) -> DataFr
     """Field-id schema evolution on the snapshot-log format
     (tablelog.evolve_schema — the Iceberg-spec ALTER TABLE contract): the
     even event_id slice is appended as (eid int, user_id, event_type) and
-    an equality delete of user_id % 7 == 0 lands keyed on `eid`; ONE
+    a delete of user_id % 7 == 0 keyed on `eid` rewrites its files; ONE
     metadata-only commit then renames eid->event_key and event_type->etype,
     widens eid int->bigint, and adds a `src` string column — no data file
     is rewritten. The odd slice is appended under the NEW schema
@@ -8377,8 +8375,8 @@ def tablelog_schema_evolution_counts(spark: SparkSession, sf_dir: str) -> DataFr
     proves every evolution rule at once: old files' `eid` column resolves
     by field id to `event_key` (rename is metadata-only), its int values
     widen to bigint at read, `src` null-fills the pre-evolve files (n_src
-    counts only the new slice), and the PRE-evolve delete file keyed on
-    the old name still anti-joins through the id translation. The oracle
+    counts only the new slice), and files rewritten before the evolution
+    resolve through the id translation like any other. The oracle
     replays the slice/delete arithmetic on the base table. No reference
     analog (the Go CLI has no storage layer, sample/main.go:32-47); built
     from the public Iceberg spec's field-id evolution rules."""
@@ -8416,59 +8414,6 @@ def tablelog_schema_evolution_counts(spark: SparkSession, sf_dir: str) -> DataFr
 
 
 @_q(
-    "tablelog_position_dedup_counts",
-    """
-    WITH final_rows AS (
-      SELECT event_id, user_id, event_type FROM events WHERE user_id % 3 <> 0
-      UNION ALL
-      SELECT event_id, user_id, event_type FROM events
-      WHERE user_id % 3 = 0 AND event_id % 5 = 0
-    )
-    SELECT event_type, count(*)::BIGINT AS cnt,
-      count(DISTINCT event_id)::BIGINT AS n_ids,
-      min(event_id) AS min_id, max(event_id) AS max_id
-    FROM final_rows GROUP BY event_type
-    """,
-)
-def tablelog_position_dedup_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Position deletes on the snapshot-log format (Iceberg v2
-    position-delete files via the parquet scan's `_metadata.row_index`):
-    the even event_id slice is appended TWICE (every row an exact
-    duplicate), the odd slice once; `dedup_keep_first` then removes
-    all-but-one copy per event_id with a position-delete commit — the
-    row-level operation equality deletes cannot express, since identical
-    rows agree on every column and any key-based delete would kill the
-    survivor too. A predicate position delete then drops user_id % 3 == 0
-    without naming key columns, and a final append re-adds the
-    event_id % 5 == 0 subset of those rows — which survives because
-    position deletes scope to files with seq <= theirs. The oracle replays
-    the surviving-row arithmetic on the base table; cnt == n_ids proves no
-    duplicate copy leaked through. No reference analog (the Go CLI has no
-    storage layer, sample/main.go:32-47)."""
-    from blogparser_spark.operators import tablelog as tl
-
-    t = _tablelog_tmp("tablelog_pos_") + "/t"
-    ev = _events(spark, sf_dir).select("event_id", "user_id", "event_type")
-    even = ev.filter(F.col("event_id") % 2 == 0)
-    tl.append(spark, t, even)  # v1
-    tl.append(spark, t, even)  # v2: exact duplicates of v1
-    tl.append(spark, t, ev.filter(F.col("event_id") % 2 == 1))  # v3
-    tl.dedup_keep_first(spark, t, ["event_id"])  # v4
-    tl.delete_where_positions(spark, t, F.col("user_id") % 3 == 0)  # v5
-    tl.append(  # v6: re-added subset survives the v5 position delete
-        spark,
-        t,
-        ev.filter((F.col("user_id") % 3 == 0) & (F.col("event_id") % 5 == 0)),
-    )
-    return tl.read_snapshot(spark, t).groupBy("event_type").agg(
-        F.count("*").cast("bigint").alias("cnt"),
-        F.countDistinct("event_id").cast("bigint").alias("n_ids"),
-        F.min("event_id").alias("min_id"),
-        F.max("event_id").alias("max_id"),
-    )
-
-
-@_q(
     "tablelog_update_where_counts",
     """
     SELECT event_type, count(*)::BIGINT AS cnt,
@@ -8484,7 +8429,7 @@ def tablelog_update_where_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     range-partitioned into multiple files with footer stats, ONE atomic
     update commit rewrites only the files containing event_id % 7 == 0
     rows (adding 1,000,000 to their user_id; non-matching neighbors carry
-    over verbatim), and a subsequent equality delete of event_id % 11 == 0
+    over verbatim), and a subsequent delete of event_id % 11 == 0
     applies across both rewritten and untouched files. The oracle replays
     the CASE arithmetic on the base table — agreement proves the partial
     rewrite touched exactly the matched rows, dropped none of their
@@ -8524,7 +8469,12 @@ def tablelog_update_where_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
       (SELECT count(*) FROM events WHERE event_id % 3 = 1)::BIGINT
     UNION ALL SELECT 3, 'append',
       (SELECT count(*) FROM events WHERE event_id % 3 = 2)::BIGINT
-    UNION ALL SELECT 4, 'delete', 0::BIGINT
+    UNION ALL SELECT 4, 'delete', (
+      SELECT coalesce(sum(kept), 0) FROM (
+        SELECT count(*) FILTER (WHERE user_id % 7 <> 0) AS kept,
+          count(*) FILTER (WHERE user_id % 7 = 0) AS hit
+        FROM events GROUP BY event_id % 3
+      ) WHERE hit > 0)::BIGINT
     UNION ALL SELECT 5, 'compact',
       (SELECT count(*) FROM events WHERE user_id % 7 <> 0)::BIGINT
     """,
@@ -8532,20 +8482,21 @@ def tablelog_update_where_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
 def tablelog_history_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Metadata inspection tables on the snapshot-log format
     (tablelog.table_history — Iceberg's `history`/`snapshots` metadata
-    tables): three appends of event_id mod-3 slices, an equality delete,
-    and a compaction, then the commit history READ AS A DATAFRAME — one
-    row per commit with its operation and manifest rows_added tally. The
-    oracle replays each commit's expected tally from the base table (the
-    compact commit's rows_added equals the live row count it folded the
-    delete into), proving the history view is assembled from manifests
-    alone — planning cost is O(commits), no data file is opened. No
-    reference analog (the Go CLI has no storage layer)."""
+    tables): three appends of event_id mod-3 slices (one file each), a
+    copy-on-write delete, and a compaction, then the commit history READ
+    AS A DATAFRAME — one row per commit with its operation and manifest
+    rows_added tally. The oracle replays each commit's expected tally from
+    the base table (the delete's rows_added is the surviving rows of the
+    slices it rewrote, the compact's the live row count), proving the
+    history view is assembled from manifests alone — planning cost is
+    O(commits), no data file is opened. No reference analog (the Go CLI
+    has no storage layer)."""
     from blogparser_spark.operators import tablelog as tl
 
     t = _tablelog_tmp("tablelog_hist_") + "/t"
     ev = _events(spark, sf_dir).select("event_id", "user_id", "event_type")
     for m in (0, 1, 2):
-        tl.append(spark, t, ev.filter(F.col("event_id") % 3 == m))
+        tl.append(spark, t, ev.filter(F.col("event_id") % 3 == m).coalesce(1))
     tl.delete_where(spark, t, F.col("user_id") % 7 == 0, key_cols=["event_id"])
     tl.compact(spark, t)
     return tl.table_history(spark, t).select(
@@ -8567,11 +8518,11 @@ def tablelog_add_files_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     written as plain external parquet and imported in ONE atomic commit
     whose manifests (rows, bytes, min/max footer stats) come from parquet
     footers only — no data read, no byte copied; the odd slice arrives
-    through the normal append path, and an equality delete of
-    user_id % 5 == 0 applies across imported and native files alike. The
-    oracle replays the union + delete on the base table — agreement proves
+    through the normal append path, and a delete of
+    user_id % 5 == 0 rewrites imported and native files alike. The oracle
+    replays the union + delete on the base table — agreement proves
     imported files are first-class citizens of the read path (projection,
-    MoR deletes, stats) with zero rewrite. No reference analog (the Go CLI
+    deletes, stats) with no byte copied on import. No reference analog (the Go CLI
     has no storage layer, sample/main.go:32-47)."""
     from blogparser_spark.operators import tablelog as tl
 
@@ -9066,9 +9017,8 @@ def pq_rerank_topk_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 def tablelog_sort_rewrite_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sort rewrite (tablelog.compact_sort — Iceberg's rewrite_data_files
     strategy=>'sort'): events land hash-scattered (every file's event_id
-    range overlaps, nothing prunes), an equality delete goes pending,
-    then ONE clustering rewrite folds the delete and range-partitions on
-    event_id — after which the ranged scan opens only stats-overlapping
+    range overlaps, nothing prunes), a copy-on-write delete rewrites them,
+    then ONE clustering rewrite range-partitions on event_id — after which the ranged scan opens only stats-overlapping
     files (pruning pinned in tests/test_tablelog.py; cuts vary with the
     range sampler so the pin lives there, not here). Oracle: the plain
     filtered aggregate."""

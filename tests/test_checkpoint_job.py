@@ -309,7 +309,9 @@ def test_job_prints_one_line_per_slice(spark, tmp_path, capsys):
 def test_slice_manifest_carries_commit_summary(spark, tmp_path):
     """Each tablelog slice manifest carries its commit's summary: the
     files, records and bytes the commit added match the table's manifest
-    entries for that version, and the phase timings are recorded."""
+    entries for that version, and the phase timings are recorded. A
+    resume=False re-run's replace commit also records the files and
+    records it removed and that it rewrote none."""
     from blogparser_spark.job import transform
     from blogparser_spark.operators import tablelog as tl
     from blogparser_spark.operators.checkpoint import read_manifest, run_sliced
@@ -326,6 +328,19 @@ def test_slice_manifest_carries_commit_summary(spark, tmp_path):
         assert s["commit_retries"] == 0
         assert all(s[k] >= 0 for k in ("write_s", "manifest_s", "commit_s"))
         assert read_manifest(out, m.slice_id)["commit_summary"] == s
+        assert "removed_data_files" not in s  # a plain append
+    table = out + "/table"
+    prev = {m.slice_id: tl._added_entries(table, tl._read_commit(table, m.table_version)) for m in ms}
+    again = run_sliced(spark, inp, out, transform, n_slices=2, resume=False)
+    assert [m.table_version for m in again] == [3, 4]  # one commit per slice
+    for m in again:
+        s = m.commit_summary
+        assert tl._read_commit(table, m.table_version)["operation"] == "replace"
+        assert s["removed_data_files"] == len(prev[m.slice_id])
+        assert s["removed_records"] == sum(e["rows"] for e in prev[m.slice_id]) == m.rows_in
+        assert s["rewritten_files"] == 0 and s["rewrite_s"] >= 0
+        assert s["added_records"] == m.rows_in
+        assert read_manifest(out, m.slice_id)["commit_summary"] == s
 
 
 def test_tablelog_generation_replace_on_input_change_and_reslice(
@@ -334,7 +349,10 @@ def test_tablelog_generation_replace_on_input_change_and_reslice(
     """A changed input (new snapshot) or a changed slice count re-runs into
     the SAME table without mixing generations: each slice replaces its own
     keyspace under the CURRENT hash predicate, so the table converges to
-    exactly the new generation even when n_slices changed."""
+    exactly the new generation even when n_slices changed. Once a re-slice
+    completes, the ledger holds only the current slicing's markers: going
+    back to an earlier slicing re-runs every slice instead of trusting
+    markers whose rows are gone."""
     import time as _time
 
     from blogparser_spark.job import transform
@@ -360,68 +378,73 @@ def test_tablelog_generation_replace_on_input_change_and_reslice(
     assert snap.count() == n2  # no old-generation residue
     gens = [r["_gen"] for r in snap.select("_gen").distinct().collect()]
     assert len(gens) == 2 and all("|n=2|" in g for g in gens)
+    assert tl.committed_markers(table) == set(gens)
     # and a resume of the new generation is a pure no-op
     assert run_sliced(spark, inp, out, transform, n_slices=2) == []
 
+    # 2 → 4 → 2 → 4 on the same input: the second 4-slice run must not
+    # trust the first one's markers, whose rows the 2-slice run replaced
+    assert len(run_sliced(spark, inp, out, transform, n_slices=4)) == 4
+    assert len(run_sliced(spark, inp, out, transform, n_slices=2)) == 2
+    assert len(tl.committed_markers(table)) == 2
+    back = run_sliced(spark, inp, out, transform, n_slices=4)
+    assert [m.slice_id for m in back] == [0, 1, 2, 3]
+    snap = tl.read_snapshot(spark, table)
+    assert snap.count() == snap.select("conv_id", "turn_idx").distinct().count() == n2
 
-def test_tablelog_replace_converges_after_crash_between_delete_and_append(
-    spark, tmp_path
+
+def test_tablelog_replace_converges_after_crash_between_write_and_commit(
+    spark, tmp_path, monkeypatch
 ):
-    """Generation replace is delete-commit + append-commit per slice; a
-    crash between them leaves the slice's rows deleted but its marker
-    uncommitted. The resumed run must re-run exactly that slice (delete
-    matches nothing, append lands) and converge to the full new
-    generation."""
+    """A slice's replace is one commit: a crash after the slice's files
+    are written but before its commit leaves the old generation live,
+    readable and complete, and the new marker uncommitted. The resumed
+    run re-runs every slice and converges to the full new generation."""
     import time as _time
 
     from blogparser_spark.job import transform
+    from blogparser_spark.operators import checkpoint
     from blogparser_spark.operators import tablelog as tl
-    from blogparser_spark.operators.checkpoint import (
-        run_sliced,
-        slice_marker,
-        slice_predicate,
-    )
 
     inp = _write_input(spark, tmp_path)
     out = str(tmp_path / "out_crash")
     table = out + "/table"
-    run_sliced(spark, inp, out, transform, n_slices=2)
+    checkpoint.run_sliced(spark, inp, out, transform, n_slices=2)
     n1 = spark.read.parquet(inp).count()
+    old_gens = {r["_gen"] for r in tl.read_snapshot(spark, table).select("_gen").distinct().collect()}
 
     _time.sleep(1.1)
     _write_input(spark, tmp_path)
     n2 = spark.read.parquet(inp).count()
-    snapshot = None
-    from blogparser_spark.operators.checkpoint import input_snapshot_id
 
-    snapshot = input_snapshot_id(spark, inp)
-    # simulate the crashed first half of slice 0's replace: the delete
-    # commit landed, the append (and its marker) did not
-    marker0 = slice_marker(0, snapshot, 2, "conv_id")
-    tl.delete_where(
-        spark,
-        table,
-        slice_predicate(0, 2, "conv_id") & (F.col("_gen") != marker0),
-        ["conv_id", "_gen"],
-    )
-    shutil.rmtree(out + "/_manifests")  # crash also lost the manifests
-    assert tl.read_snapshot(spark, table).count() < n1  # mid-crash state
+    def crash(*_args, **_kwargs):
+        raise RuntimeError("crashed before the commit")
 
-    rerun = run_sliced(spark, inp, out, transform, n_slices=2)
+    with monkeypatch.context() as m:
+        m.setattr(tl, "_try_commit", crash)
+        with pytest.raises(RuntimeError, match="crashed before the commit"):
+            checkpoint.run_sliced(spark, inp, out, transform, n_slices=2)
+    shutil.rmtree(out + "/_manifests")  # the crash also lost the manifests
+    snap = tl.read_snapshot(spark, table)  # the old generation, whole
+    assert snap.count() == n1
+    assert {r["_gen"] for r in snap.select("_gen").distinct().collect()} == old_gens
+
+    rerun = checkpoint.run_sliced(spark, inp, out, transform, n_slices=2)
     assert [m.slice_id for m in rerun] == [0, 1]
     snap = tl.read_snapshot(spark, table)
     assert snap.count() == n2
     gens = [r["_gen"] for r in snap.select("_gen").distinct().collect()]
     assert len(gens) == 2 and all("|n=2|" in g for g in gens)
+    assert not set(gens) & old_gens
 
 
-def test_crashed_fresh_run_after_a_delete_resumes_that_slice(
+def test_crashed_fresh_run_before_its_replace_commit_keeps_the_old_generation(
     spark, tmp_path, monkeypatch
 ):
-    """A resume=False run deletes each slice's rows before it appends them
-    again. A crash between the two must take the slice's earlier marker
-    out of the ledger with its rows: the resumed run then re-runs the
-    slice, and the table ends with exactly the input's rows."""
+    """A resume=False run replaces each slice in one commit. A crash
+    between the slice's file write and that commit leaves the earlier
+    generation live and its markers in the ledger: the resumed run has
+    nothing to re-run, and the table holds exactly the input's rows."""
     from blogparser_spark.job import transform
     from blogparser_spark.operators import checkpoint
     from blogparser_spark.operators import tablelog as tl
@@ -431,21 +454,81 @@ def test_crashed_fresh_run_after_a_delete_resumes_that_slice(
     table = out + "/table"
     checkpoint.run_sliced(spark, inp, out, transform, n_slices=2)
     n = spark.read.parquet(inp).count()
+    v = tl.current_version(table)
 
     def crash(*_args, **_kwargs):
-        raise RuntimeError("crashed before the append")
+        raise RuntimeError("crashed before the commit")
 
     with monkeypatch.context() as m:
-        m.setattr(checkpoint, "route_commit_tablelog", crash)
-        with pytest.raises(RuntimeError, match="crashed before the append"):
+        m.setattr(tl, "_try_commit", crash)
+        with pytest.raises(RuntimeError, match="crashed before the commit"):
             checkpoint.run_sliced(spark, inp, out, transform, n_slices=2, resume=False)
-    assert tl.read_snapshot(spark, table).count() < n  # slice 0 deleted
-
-    rerun = checkpoint.run_sliced(spark, inp, out, transform, n_slices=2)
-    assert [x.slice_id for x in rerun] == [0]
+    assert tl.current_version(table) == v
     snap = tl.read_snapshot(spark, table)
-    assert snap.count() == n
-    assert snap.select("conv_id", "turn_idx").distinct().count() == n
+    assert snap.count() == snap.select("conv_id", "turn_idx").distinct().count() == n
+
+    assert checkpoint.run_sliced(spark, inp, out, transform, n_slices=2) == []
+    snap = tl.read_snapshot(spark, table)
+    assert snap.count() == snap.select("conv_id", "turn_idx").distinct().count() == n
+
+
+def test_resume_after_expiry_reruns_nothing(spark, tmp_path):
+    """The marker ledger derives from the live files, not from retained
+    commits: after expiry drops the commits that carried the slices'
+    markers, a resumed run still finds every slice committed, re-runs
+    nothing and leaves exactly the input's rows."""
+    from blogparser_spark.job import transform
+    from blogparser_spark.operators import tablelog as tl
+    from blogparser_spark.operators.checkpoint import run_sliced
+
+    inp = _write_input(spark, tmp_path)
+    out = str(tmp_path / "out_expired")
+    table = out + "/table"
+    run_sliced(spark, inp, out, transform, n_slices=4)
+    n = spark.read.parquet(inp).count()
+    assert tl.expire_snapshots(table, keep_last=2)["versions_removed"] == 2
+    assert len(tl.committed_markers(table)) == 4
+    assert run_sliced(spark, inp, out, transform, n_slices=4) == []
+    snap = tl.read_snapshot(spark, table)
+    assert snap.count() == snap.select("conv_id", "turn_idx").distinct().count() == n
+
+
+def test_fresh_reruns_replace_by_metadata_and_keep_one_generation(
+    spark, tmp_path, monkeypatch
+):
+    """Under an unchanged slicing a resume=False re-run replaces each
+    slice in ONE commit that reads no table file: the slice's earlier
+    files are removed by metadata alone. After three re-runs over 8
+    slices the live state holds only the last generation's files, a read
+    is one scan, and no delete file or deletes/ directory exists."""
+    from blogparser_spark.job import transform
+    from blogparser_spark.operators import tablelog as tl
+    from blogparser_spark.operators.checkpoint import run_sliced
+
+    inp = _write_input(spark, tmp_path)
+    out = str(tmp_path / "out_reruns")
+    table = out + "/table"
+    n = spark.read.parquet(inp).count()
+    run_sliced(spark, inp, out, transform, n_slices=8)
+
+    def no_table_read(*_args, **_kwargs):
+        raise AssertionError("a same-slicing replace read a table file")
+
+    for _ in range(3):
+        v = tl.current_version(table)
+        with monkeypatch.context() as m:
+            m.setattr(tl, "_read_files", no_table_read)
+            ms = run_sliced(spark, inp, out, transform, n_slices=8, resume=False)
+        assert [x.table_version for x in ms] == list(range(v + 1, v + 9))
+    state = tl._state_at(table)[1]
+    last = {x.table_version for x in ms}
+    assert {e["seq"] for e in state["data"].values()} <= last
+    assert {m for e in state["data"].values() for m in e["markers"]} == tl.committed_markers(table)
+    assert len(tl.committed_markers(table)) == 8
+    assert not os.path.exists(os.path.join(table, "deletes"))
+    snap = tl.read_snapshot(spark, table)
+    assert snap._jdf.queryExecution().optimizedPlan().toString().count("Relation") == 1
+    assert snap.count() == snap.select("conv_id", "turn_idx").distinct().count() == n
 
 
 def test_resume_after_wiped_table_rebuilds_it(spark, tmp_path, capsys):

@@ -1,6 +1,6 @@
 """Snapshot-log table format (operators/tablelog.py): commit atomicity,
-time travel, merge-on-read deletes with sequence-number scoping, compaction,
-incremental append scans, snapshot expiry, and stats pruning."""
+time travel, copy-on-write deletes, compaction, incremental append scans,
+snapshot expiry, and stats pruning."""
 
 from __future__ import annotations
 
@@ -49,16 +49,27 @@ def test_time_travel(spark, tmp_path):
     assert _ids(tl.read_snapshot(spark, t, version=2)) == list(range(20))
 
 
-def test_equality_delete_merge_on_read(spark, tmp_path):
+def test_delete_where_rewrites_only_the_files_it_hits(spark, tmp_path):
+    """A delete rewrites the live files holding a matching row without
+    those rows and removes them in one commit; every other file stays
+    live as it was, and no delete file is written."""
     t = str(tmp_path / "t")
-    tl.append(spark, t, _batch(spark, 0, 10))
+    tl.append(
+        spark, t, _batch(spark, 0, 10).repartitionByRange(4, "event_id"),
+        stats_cols=("event_id",),
+    )
+    before = tl._state_at(t)[1]["data"]
+    hit = {p for p, e in before.items() if e["stats"]["event_id"][0] < 5}
     v = tl.delete_where(spark, t, F.col("event_id") < 5, key_cols=["event_id"])
     assert v == 2
     assert _ids(tl.read_snapshot(spark, t)) == list(range(5, 10))
     # the deleted version is still time-travelable
     assert _ids(tl.read_snapshot(spark, t, version=1)) == list(range(10))
-    # no data file was rewritten
-    assert tl.snapshot_lineage(t)[-1]["files_removed"] == 0
+    c = tl._read_commit(t, v)
+    assert set(c["removed_data"]) == hit and len(hit) < len(before)
+    after = tl._state_at(t)[1]
+    assert set(before) - hit <= set(after["data"]) and "deletes" not in after
+    assert sorted(os.listdir(t)) == ["data", "log"]
 
 
 def test_delete_sequence_scoping(spark, tmp_path):
@@ -80,7 +91,6 @@ def test_compact_folds_deletes(spark, tmp_path):
     v = tl.compact(spark, t, n_files=1)
     _, state = tl._state_at(t, v)
     assert len(state["data"]) == 1
-    assert state["deletes"] == {}
     assert _ids(tl.read_snapshot(spark, t)) == before == list(range(1, 20, 2))
 
 
@@ -140,18 +150,16 @@ def test_schema_enforcement_and_evolution(spark, tmp_path):
 
 def test_read_frames_are_built_without_a_spark_job(spark, tmp_path):
     """read_snapshot and scan_where read data files under the state's
-    schema and delete files under theirs (equality keys with the key
-    columns' field types, position deletes as (_file, _pos)), so building
-    their DataFrames runs no schema-inference job (a mergeSchema read runs
-    one per call, before any action). Counted via the status tracker over
-    a dedicated job group; a file written before a column was added still
+    schema, so building their DataFrames runs no schema-inference job (a
+    mergeSchema read runs one per call, before any action), also over a
+    table a delete rewrote. Counted via the status tracker over a
+    dedicated job group; a file written before a column was added still
     reads it as NULL."""
     t = str(tmp_path / "t")
     tl.append(spark, t, _batch(spark, 0, 5), stats_cols=("event_id",))
     extra = _batch(spark, 5, 10).withColumn("score", F.lit(1.5))
     tl.append(spark, t, extra, stats_cols=("event_id",), allow_evolution=True)
     tl.delete_where(spark, t, F.col("event_id") < 2, ["event_id"])
-    tl.delete_where_positions(spark, t, F.col("event_id") == 5)
     sc = spark.sparkContext
     sc.setJobGroup("tl-build-frames", "building tablelog read frames")
     try:
@@ -162,9 +170,9 @@ def test_read_frames_are_built_without_a_spark_job(spark, tmp_path):
     assert sc.statusTracker().getJobIdsForGroup("tl-build-frames") == []
     assert snap.columns == ["event_id", "user_id", "event_type", "score"]
     rows = {r.event_id: r.score for r in snap.collect()}
-    assert sorted(rows) == [2, 3, 4, 6, 7, 8, 9]
+    assert sorted(rows) == [2, 3, 4, 5, 6, 7, 8, 9]
     assert rows[2] is None and rows[7] == 1.5
-    assert _ids(hit) == [3, 4, 6, 7]
+    assert _ids(hit) == [3, 4, 5, 6, 7]
 
 
 def test_append_retries_on_commit_race(spark, tmp_path):
@@ -214,7 +222,7 @@ def test_stats_pruning_scan(spark, tmp_path):
     assert skipped2 == 3 and len(paths2) == 2
     got = tl.scan_between(spark, t, "event_id", 45, 55)
     assert _ids(got) == list(range(45, 56))
-    # pruning must compose with merge-on-read deletes
+    # pruning must compose with deletes: the rewrite keeps the file's stats
     tl.delete_where(spark, t, F.col("event_id") == 50, key_cols=["event_id"])
     assert _ids(tl.scan_between(spark, t, "event_id", 45, 55)) == [
         i for i in range(45, 56) if i != 50
@@ -499,7 +507,15 @@ def test_append_commit_summary_exact(spark, tmp_path, monkeypatch):
     v2 = tl.append(spark, t, spark.range(30, 35).coalesce(1))
     s2 = tl.commit_summary(t, v2)
     assert (s2["added_data_files"], s2["added_records"], s2["commit_retries"]) == (1, 5, 1)
-    assert tl.commit_summary(t, tl.delete_where(spark, t, F.col("id") < 3, ["id"])) is None
+    # a delete records what it removed and what its rewrite added
+    live = tl._state_at(t)[1]["data"]
+    v3 = tl.delete_where(spark, t, F.col("id") < 3, ["id"])
+    s3 = tl.commit_summary(t, v3)
+    c3 = tl._read_commit(t, v3)
+    assert s3["removed_data_files"] == s3["rewritten_files"] == len(c3["removed_data"])
+    assert s3["removed_records"] == sum(live[p]["rows"] for p in c3["removed_data"])
+    assert s3["added_records"] == s3["removed_records"] - 3
+    assert s3["added_data_files"] == len(c3["added_data"]) and s3["rewrite_s"] >= 0
 
 
 @settings(max_examples=40, deadline=None)
@@ -553,16 +569,17 @@ def _vbatch(spark, lo: int, hi: int, bump: float = 0.0):
 
 
 def test_merge_upsert_atomic_commit(spark, tmp_path):
-    """One commit = delete file over source keys + source data files; the
-    delete's seq equals the commit version so the merge's own rows survive
-    it (matched keys replaced, unmatched inserted)."""
+    """One commit adds the source's files and rewrites the files holding a
+    source key without those rows (matched keys replaced, unmatched
+    inserted); no delete file is written."""
     t = str(tmp_path / "t")
     tl.append(spark, t, _vbatch(spark, 0, 12))
     v = tl.merge_upsert(spark, t, _vbatch(spark, 6, 18, bump=1000.0), ["event_id"])
     assert v == 2
     c = tl._read_commit(t, 2)
     assert c["operation"] == "merge"
-    assert c["added_data"] and c["added_deletes"]  # both sides, one commit
+    assert c["added_data"] and c["removed_data"]  # both sides, one commit
+    assert "added_deletes" not in c
     rows = {r.event_id: r.value for r in tl.read_snapshot(spark, t).collect()}
     exp = {k: k * 1.5 for k in range(6)}
     exp.update({k: k * 1.5 + 1000.0 for k in range(6, 18)})
@@ -654,9 +671,8 @@ def test_changelog_refreshes_view_without_base_rescan(spark, tmp_path):
 
 
 def test_compact_binpack_rewrites_only_small_files(spark, tmp_path):
-    """Binpack folds the small-file backlog, leaves big files alone, keeps
-    delete files scoped to the untouched ones, and never changes the
-    logical row set."""
+    """Binpack folds the small-file backlog, leaves big files alone, and
+    never changes the logical row set."""
     t = str(tmp_path / "t")
     big = _batch(spark, 100, 20100).coalesce(1)
     tl.append(spark, t, big)                              # one "big" file
@@ -673,7 +689,6 @@ def test_compact_binpack_rewrites_only_small_files(spark, tmp_path):
     _, post = tl._state_at(t)
     assert big_paths <= set(post["data"])          # big file untouched
     assert len(post["data"]) == len(big_paths) + 1  # backlog → one packed file
-    assert post["deletes"]                          # delete files retained
     expected = [
         e
         for e in list(range(50, 65)) + list(range(100, 20100))
@@ -816,8 +831,8 @@ def test_partition_evolution_per_file_spec(spark, tmp_path):
 
 def test_hidden_partition_scan_composes_with_deletes(spark, tmp_path):
     """Multi-level hive partitioning writes the SAME filename into many
-    partition dirs — the MoR file-identity join must key on the full
-    path, or delete application multiplies rows."""
+    partition dirs — the delete's file identity must be the full path, or
+    it rewrites the wrong files."""
     t = str(tmp_path / "t")
     df = _hidden_batch(spark, 0, 1000)
     tl.append(spark, t, df, partition_spec=("days(ts)", "bucket(4, conv_id)"))
@@ -936,8 +951,8 @@ def test_evolve_drop_then_readd_never_resurrects(spark, tmp_path):
 
 
 def test_evolve_deletes_translate_key_columns(spark, tmp_path):
-    """Equality-delete files written before a rename still apply: the key
-    column resolves through its field id to the current name and type."""
+    """Files a delete rewrote before a rename read through the field id
+    like any other, and a delete after it keys on the current name."""
     t = _evo_base(spark, tmp_path)
     tl.delete_where(spark, t, F.col("k") == 2, ["k"])
     tl.evolve_schema(t, rename={"k": "key"}, widen={"k": "bigint"})
@@ -947,10 +962,10 @@ def test_evolve_deletes_translate_key_columns(spark, tmp_path):
     # post-evolve delete on the new name composes with pre-evolve files
     tl.delete_where(spark, t, F.col("key") == 0, ["key"])
     assert sorted(r.key for r in tl.read_snapshot(spark, t).collect()) == [1, 3, 4]
-    # dropping a key column still referenced by a live delete is refused
+    # no delete file references the key column, so dropping it is safe
     tl.evolve_schema(t, drop=("key",))
-    with pytest.raises(ValueError, match="delete key column"):
-        tl.read_snapshot(spark, t).count()
+    df = tl.read_snapshot(spark, t)
+    assert df.columns == ["v", "n"] and sorted(r.n for r in df.collect()) == [10, 30, 40]
 
 
 def test_evolve_prune_and_scan_translate_stats(spark, tmp_path):
@@ -994,7 +1009,7 @@ def test_evolve_incremental_and_changelog_project_to_target(spark, tmp_path):
     cl = tl.changelog_scan(spark, t, from_version=0)
     assert cl.filter("_change_type = 'insert'").count() == 6
     assert "label" in cl.columns
-    # pre-image deletes across the evolve translate their key columns
+    # pre-image deletes across the evolve read in the target field view
     tl.delete_where(spark, t, F.col("k") == 1, ["k"])
     cl2 = tl.changelog_scan(spark, t, from_version=0)
     gone = cl2.filter("_change_type = 'delete'").collect()
@@ -1035,123 +1050,6 @@ def test_evolve_validation(spark, tmp_path):
         tl.evolve_schema(t, drop=("k", "v", "n"))
 
 
-def test_position_delete_predicate_and_seq_scope(spark, tmp_path):
-    """delete_where_positions removes exactly the matching live rows with
-    no key columns and no rewrite; a row re-appended after the delete
-    survives (position deletes scope to seq <= theirs); time travel still
-    sees the pre-delete rows."""
-    t = str(tmp_path / "t")
-    tl.append(spark, t, spark.range(0, 10).selectExpr("id AS k", "id * 2 AS v"))
-    files_before = sorted(tl._state_at(t)[1]["data"])
-    tl.delete_where_positions(spark, t, F.col("k") % 3 == 0)
-    assert sorted(tl._state_at(t)[1]["data"]) == files_before  # no rewrite
-    assert sorted(r.k for r in tl.read_snapshot(spark, t).collect()) == [
-        1, 2, 4, 5, 7, 8,
-    ]
-    tl.append(spark, t, spark.createDataFrame([(0, 99)], "k long, v long"))
-    assert sorted(r.k for r in tl.read_snapshot(spark, t).collect()) == [
-        0, 1, 2, 4, 5, 7, 8,
-    ]
-    assert tl.read_snapshot(spark, t, version=1).count() == 10
-
-
-def test_position_dedup_keeps_one_copy_of_identical_rows(spark, tmp_path):
-    """dedup_keep_first deletes all-but-one copy of rows identical in
-    EVERY column — the operation equality deletes cannot express (any
-    key-based delete would kill the survivor too)."""
-    t = str(tmp_path / "t")
-    d = spark.range(0, 6).selectExpr("id % 3 AS k", "concat('v', id % 3) AS v")
-    tl.append(spark, t, d)  # each (k, v) twice
-    tl.append(spark, t, d)  # now four copies each
-    tl.dedup_keep_first(spark, t, ["k", "v"])
-    rows = tl.read_snapshot(spark, t).collect()
-    assert sorted((r.k, r.v) for r in rows) == [
-        (0, "v0"), (1, "v1"), (2, "v2"),
-    ]
-    # idempotent: a second pass deletes nothing more
-    tl.dedup_keep_first(spark, t, ["k", "v"])
-    assert tl.read_snapshot(spark, t).count() == 3
-
-
-def test_position_deletes_compose_with_equality_and_evolution(spark, tmp_path):
-    """Position deletes are schema-agnostic: one written BEFORE a
-    rename/widen/add evolution still applies after it (file+pos reference
-    nothing a rename can move), equality deletes compose in the same read,
-    and a positional delete written AFTER the evolution can reference the
-    added column."""
-    t = str(tmp_path / "t")
-    tl.append(
-        spark, t, spark.range(0, 10).selectExpr("cast(id as int) AS k", "id * 2 AS v")
-    )
-    tl.delete_where_positions(spark, t, F.col("k") == 4)
-    tl.evolve_schema(
-        t, rename={"k": "key"}, widen={"k": "bigint"}, add=[("z", "string")]
-    )
-    tl.delete_where(spark, t, F.col("key") == 5, key_cols=["key"])
-    assert sorted(r.key for r in tl.read_snapshot(spark, t).collect()) == [
-        0, 1, 2, 3, 6, 7, 8, 9,
-    ]
-    tl.delete_where_positions(spark, t, F.col("z").isNull() & (F.col("key") == 6))
-    assert sorted(r.key for r in tl.read_snapshot(spark, t).collect()) == [
-        0, 1, 2, 3, 7, 8, 9,
-    ]
-
-
-def test_position_delete_changelog_preimages_and_compact(spark, tmp_path):
-    """The CDC changelog emits the exact pre-image rows of a position
-    delete, and compaction folds position deletes into rewritten files."""
-    t = str(tmp_path / "t")
-    tl.append(spark, t, spark.range(0, 5).selectExpr("id AS k", "concat('x', id) AS v"))
-    tl.delete_where_positions(spark, t, F.col("k").isin(1, 3))
-    cl = tl.changelog_scan(spark, t, from_version=0)
-    assert sorted(
-        (r.k, r.v) for r in cl.filter("_change_type = 'delete'").collect()
-    ) == [(1, "x1"), (3, "x3")]
-    assert cl.filter("_change_type = 'insert'").count() == 5
-    tl.compact(spark, t)
-    assert sorted(r.k for r in tl.read_snapshot(spark, t).collect()) == [0, 2, 4]
-    assert not tl._state_at(t)[1]["deletes"]
-
-
-def test_position_delete_pruned_scans_and_expiry(spark, tmp_path):
-    """Stats-pruned scans apply position deletes over the pruned file set,
-    and expiry's rebase base persists the positional flag so replay after
-    truncation still anti-joins on row identity."""
-    t = str(tmp_path / "t")
-    tl.append(
-        spark,
-        t,
-        spark.range(0, 100).selectExpr("id AS k", "id % 7 AS g").repartitionByRange(
-            5, "k"
-        ),
-        stats_cols=("k",),
-    )
-    tl.delete_where_positions(spark, t, F.col("k") % 10 == 0)
-    got = tl.scan_between(spark, t, "k", 20, 59)
-    assert got.count() == 36 and "_pos" not in got.columns
-    tl.append(spark, t, spark.range(100, 110).selectExpr("id AS k", "id % 7 AS g"))
-    tl.expire_snapshots(t, keep_last=2)
-    df = tl.read_snapshot(spark, t)
-    assert df.count() == 100 and df.filter("k % 10 = 0 AND k < 100").count() == 0
-
-
-def test_position_dedup_order_cols_pick_survivor(spark, tmp_path):
-    """With order_cols, the kept copy is the FIRST by that ordering —
-    deterministic survivor selection across duplicate groups that differ
-    in non-key columns."""
-    t = str(tmp_path / "t")
-    tl.append(
-        spark,
-        t,
-        spark.createDataFrame(
-            [(1, "b", 20), (1, "a", 10), (2, "c", 30)], "k int, tag string, w int"
-        ),
-    )
-    tl.dedup_keep_first(spark, t, ["k"], order_cols=["w"])
-    rows = {r.k: r.tag for r in tl.read_snapshot(spark, t).collect()}
-    assert rows == {1: "a", 2: "c"}
-
-
 # ---------------------------------------------------------------------------
 # copy-on-write UPDATE
 # ---------------------------------------------------------------------------
@@ -1182,13 +1080,13 @@ def test_update_rewrites_only_matched_files(spark, tmp_path):
 
 
 def test_update_folds_pending_deletes_and_cdc_net_diff(spark, tmp_path):
-    """A rewrite folds pending equality AND position deletes into the new
-    files, and the CDC changelog of an update commit is the exact net row
-    diff — carried-over unchanged neighbors cancel in exceptAll."""
+    """An update rewrites files earlier deletes already rewrote, and the
+    CDC changelog of an update commit is the exact net row diff —
+    carried-over unchanged neighbors cancel in exceptAll."""
     t = str(tmp_path / "t")
     tl.append(spark, t, spark.range(0, 20).selectExpr("id AS k", "id * 2 AS v"))
     tl.delete_where(spark, t, F.col("k") == 11, key_cols=["k"])
-    tl.delete_where_positions(spark, t, F.col("k") == 1)
+    tl.delete_where(spark, t, F.col("k") == 1, key_cols=["k"])
     tl.update_where(spark, t, F.col("k") == 13, {"v": F.lit(7)})
     rows = {r.k: r.v for r in tl.read_snapshot(spark, t).collect()}
     assert 11 not in rows and 1 not in rows and rows[13] == 7 and len(rows) == 18
@@ -1230,26 +1128,22 @@ def test_update_across_schema_evolution(spark, tmp_path):
 def test_metadata_tables(spark, tmp_path):
     """history / files metadata tables (Iceberg's queryable table
     internals): one row per commit with lineage + tallies, one row per
-    live file with seq/rows/kind/positional."""
+    live file with seq/rows."""
     t = str(tmp_path / "t")
-    tl.append(spark, t, _batch(spark, 0, 10))
+    tl.append(spark, t, _batch(spark, 0, 10).coalesce(1))
     tl.delete_where(spark, t, F.col("event_id") < 3, key_cols=["event_id"])
-    tl.delete_where_positions(spark, t, F.col("event_id") == 5)
     h = tl.table_history(spark, t)
     assert [
-        (r.version, r.parent, r.operation, r.rows_added)
+        (r.version, r.parent, r.operation, r.rows_added, r.files_removed)
         for r in h.orderBy("version").collect()
     ] == [
-        (1, None, "append", 10),
-        (2, 1, "delete", 0),
-        (3, 2, "delete", 0),
+        (1, None, "append", 10, 0),
+        (2, 1, "delete", 7, 1),
     ]
-    f = tl.table_files(spark, t)
-    assert f.filter("kind = 'data'").agg(F.sum("rows")).first()[0] == 10
-    dele = {r.positional: r.rows for r in f.filter("kind = 'delete'").collect()}
-    assert dele == {False: 3, True: 1}
-    # files at a version: pre-delete snapshot has no delete files
-    assert tl.table_files(spark, t, version=1).filter("kind='delete'").count() == 0
+    f = tl.table_files(spark, t).collect()
+    assert [(r.seq, r.rows) for r in f] == [(2, 7)]
+    # files at a version: the pre-delete snapshot
+    assert [r.rows for r in tl.table_files(spark, t, version=1).collect()] == [10]
 
 
 # ---------------------------------------------------------------------------
@@ -1259,8 +1153,8 @@ def test_metadata_tables(spark, tmp_path):
 
 def test_add_files_by_reference(spark, tmp_path):
     """add_files imports external parquet BY REFERENCE in one atomic
-    commit: manifests come from footers only, stats prune, MoR deletes
-    compose, and no byte is copied (the manifest points at the source)."""
+    commit: manifests come from footers only, stats prune, deletes
+    rewrite imported files like native ones, and no byte is copied (the manifest points at the source)."""
     src = str(tmp_path / "ext")
     spark.range(0, 20).selectExpr("id AS k", "id * 3 AS v").repartitionByRange(
         2, "k"
@@ -1372,58 +1266,20 @@ def test_partitions_metadata_table(spark, tmp_path):
     assert rows[json.dumps({})] == (1, 3, 3)  # unpartitioned commit
 
 
-def test_rewrite_position_deletes_folds_and_drops_dangling(spark, tmp_path):
-    """rewrite_position_deletes folds the positional backlog into ONE
-    delete file at seq=max (provably applicability-preserving), drops
-    identities whose data file is no longer live (a CoW update rewrote
-    it), leaves the row set identical, and is a no-op to changelog and
-    incremental scans. Equality deletes are untouched."""
-    t = str(tmp_path / "t")
-    tl.append(
-        spark,
-        t,
-        spark.range(0, 30).selectExpr("id AS k", "id AS v").repartitionByRange(3, "k"),
-    )
-    tl.delete_where_positions(spark, t, F.col("k") == 1)
-    tl.delete_where_positions(spark, t, F.col("k") == 12)
-    tl.delete_where(spark, t, F.col("k") == 29, key_cols=["k"])
-    tl.update_where(spark, t, F.col("k") == 2, {"v": F.lit(0)})  # dangles k=1's ref
-    before = sorted(r.k for r in tl.read_snapshot(spark, t).collect())
-    v = tl.rewrite_position_deletes(spark, t)
-    st = tl._state_at(t)[1]
-    pos = [e for e in st["deletes"].values() if e.get("positional")]
-    eq = [e for e in st["deletes"].values() if not e.get("positional")]
-    assert len(pos) == 1 and pos[0]["rows"] == 1  # k=12 kept, k=1 dangled
-    assert len(eq) == 1
-    assert sorted(r.k for r in tl.read_snapshot(spark, t).collect()) == before
-    assert tl.changelog_scan(spark, t, from_version=v - 1).count() == 0
-    tl.append(spark, t, spark.range(100, 102).selectExpr("id AS k", "id AS v"))
-    assert tl.incremental_append_scan(spark, t, from_version=v - 1).count() == 2
-    # nothing to fold on a table without positional deletes
-    t2 = str(tmp_path / "t2")
-    tl.append(spark, t2, spark.range(0, 3).selectExpr("id AS k"))
-    assert tl.rewrite_position_deletes(spark, t2) is None
-
-
 def test_maintenance_plan_recommends_then_clears(spark, tmp_path):
     """maintenance_plan reads manifests only: a table with a small-file
-    backlog + position-delete pileup + equality-delete pileup gets all
-    three recommendations; RUNNING them clears the plan (compact folds
-    both delete kinds, so the positional action disappears with it)."""
+    backlog gets the binpack recommendation; RUNNING a compaction clears
+    it. Deletes rewrite files in place, so they leave no backlog."""
     t = str(tmp_path / "t")
     for lo in range(0, 40, 10):  # 4 commits of small files
         tl.append(spark, t, _batch(spark, lo, lo + 10).coalesce(1))
-    for k in (1, 2):
-        tl.delete_where_positions(spark, t, F.col("event_id") == k)
-    for k in (3, 4, 5, 6):
+    for k in (3, 14, 25, 36):
         tl.delete_where(spark, t, F.col("event_id") == k, key_cols=["event_id"])
     plan = {r.action: r.n for r in tl.maintenance_plan(spark, t).collect()}
-    assert plan.get("compact_binpack") == 4
-    assert plan.get("rewrite_position_deletes") == 2
-    assert plan.get("compact") == 4
-    tl.compact(spark, t)  # folds every delete and the small files
+    assert plan == {"compact_binpack": 4}
+    tl.compact(spark, t)  # folds the small files
     plan2 = [r.action for r in tl.maintenance_plan(spark, t).collect()]
-    assert "rewrite_position_deletes" not in plan2 and "compact" not in plan2
+    assert "compact_binpack" not in plan2
     # a healthy table gives an empty plan (backlog thresholds not reached;
     # at pytest scale every file is "small", so raise that threshold)
     t2 = str(tmp_path / "t2")
@@ -1437,21 +1293,19 @@ def test_maintenance_plan_recommends_then_clears(spark, tmp_path):
 def test_compact_sort_clusters_and_prunes(spark, tmp_path):
     """Sort rewrite: hash-scattered files become range-clustered ones with
     disjoint min/max stats — a point predicate then keeps exactly one
-    file; pending deletes are folded in and their files removed."""
+    file, and rows an earlier delete removed stay gone."""
     t = str(tmp_path / "cs")
     tl.append(
         spark,
         t,
         spark.range(0, 100).selectExpr("id AS k", "id % 7 AS v").repartition(4),
     )
-    tl.delete_where_positions(spark, t, F.col("k") == 50)
+    tl.delete_where(spark, t, F.col("k") == 50, key_cols=["k"])
     keep0, skip0 = tl.prune_files_where(t, {"k": ("=", 10)})
     assert len(keep0) == 4 and skip0 == 0  # hash layout: every file overlaps
     tl.compact_sort(spark, t, ("k",), n_files=4)
     keep1, skip1 = tl.prune_files_where(t, {"k": ("=", 10)})
     assert len(keep1) == 1 and skip1 == 3
-    _, state = tl._state_at(t)
-    assert not state["deletes"]  # consumed by the rewrite, removed in-commit
     assert tl.read_snapshot(spark, t).count() == 99
     got = sorted(r.k for r in tl.scan_where(spark, t, {"k": ("between", 45, 55)}).collect())
     assert got == [45, 46, 47, 48, 49, 51, 52, 53, 54, 55]
