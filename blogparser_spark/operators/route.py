@@ -34,7 +34,6 @@ def route_commit_tablelog(
     marker: str,
     stats_cols: tuple[str, ...] = (),
     bloom_cols: tuple[str, ...] = (),
-    manifest_chunk_files: int | None = None,
     replace: tuple | None = None,
 ) -> tuple[int | None, bool]:
     """Fan routed rows into ONE snapshot-log table keyed by the sink keys,
@@ -54,9 +53,7 @@ def route_commit_tablelog(
     `stats_cols`/`bloom_cols` forward to the manifest writer so files
     carry min/max footer stats and per-file blooms (a bloom on conv_id
     lets a conversation point lookup skip files that definitely lack the
-    conv — the serving path for "fetch this conversation"). Commits adding
-    many files inherit the two-level manifest layer through
-    `manifest_chunk_files` (None = tablelog.MANIFEST_CHUNK_FILES).
+    conv — the serving path for "fetch this conversation").
     `replace` makes the commit a copy-on-write replace of the rows it
     names (tablelog.append). Returns (version, committed)."""
     from blogparser_spark.operators import tablelog as tl
@@ -69,7 +66,6 @@ def route_commit_tablelog(
         partition_by=tuple(SINK_KEYS),
         stats_cols=stats_cols,
         bloom_cols=bloom_cols,
-        manifest_chunk_files=manifest_chunk_files,
         replace=replace,
     )
 

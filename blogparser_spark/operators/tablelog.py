@@ -53,7 +53,6 @@ from __future__ import annotations
 
 import hashlib
 import json
-import math
 import os
 import re
 import shutil
@@ -63,14 +62,6 @@ from collections.abc import Callable
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
-
-
-def _q6(x: float) -> float:
-    """Tie-free 6-decimal quantizer (repo cross-engine rule): floor(x*1e6
-    + 0.5)/1e6. Python round() is half-even, DuckDB round() half-away —
-    this form evaluates identically in both engines at a decimal tie, so
-    every float the NDV estimators emit is oracle-safe."""
-    return math.floor(x * 1e6 + 0.5) / 1e6
 
 
 class CommitConflict(RuntimeError):
@@ -118,17 +109,29 @@ def _read_commit(table: str, version: int) -> dict:
         return json.load(f)
 
 
+def _write_tmp(table: str, doc: dict) -> str:
+    """Write `doc` as JSON to a fresh, fsynced temp file in the log
+    directory and return its path; a failed write leaves no file."""
+    os.makedirs(_log_dir(table), exist_ok=True)
+    tmp = os.path.join(_log_dir(table), f".tmp-{uuid.uuid4().hex}.json")
+    try:
+        with open(tmp, "w") as f:
+            json.dump(doc, f)
+            f.flush()
+            os.fsync(f.fileno())
+    except BaseException:
+        if os.path.exists(tmp):
+            os.unlink(tmp)
+        raise
+    return tmp
+
+
 def _try_commit(table: str, commit: dict) -> bool:
     """Atomic commit-if-absent: write a temp file, then hard-link it to the
     versioned name. link(2) fails with EEXIST if a concurrent writer
     claimed the version — the loser re-reads the log and retries/aborts.
     This is the same primitive as Iceberg's atomic metadata swap."""
-    os.makedirs(_log_dir(table), exist_ok=True)
-    tmp = os.path.join(_log_dir(table), f".tmp-{uuid.uuid4().hex}.json")
-    with open(tmp, "w") as f:
-        json.dump(commit, f)
-        f.flush()
-        os.fsync(f.fileno())
+    tmp = _write_tmp(table, commit)
     try:
         os.link(tmp, _commit_path(table, commit["version"]))
         return True
@@ -178,8 +181,8 @@ def _partition_of(dirpath: str, path: str) -> dict[str, str | None]:
 # count. A hive-path file (hidden partition spec, add_files) holds one
 # tuple; a sink-sorted file written by append(partition_by=...) holds one
 # per sink it covers. Values are strings (None for null). The set is
-# bounded: a file (or chunk summary) covering more than PART_TUPLES_MAX
-# tuples records "tuples": None, which never prunes.
+# bounded: a file covering more than PART_TUPLES_MAX tuples records
+# "tuples": None, which never prunes.
 
 PART_TUPLES_MAX = 64
 
@@ -359,8 +362,7 @@ def _bloom_bits_for(rows: int) -> int:
     """Bloom size for a file of `rows` rows: the power of two at or above
     the row count (an upper bound on its distinct values), clamped to
     [BLOOM_M, BLOOM_M_MAX] — a few sink-sorted files per commit hold many
-    keys each, and a fixed 2048-bit filter saturates past a few hundred.
-    Power-of-two sizes fold exactly onto smaller ones (_bloom_or)."""
+    keys each, and a fixed 2048-bit filter saturates past a few hundred."""
     m = BLOOM_M
     while m < min(rows, BLOOM_M_MAX):
         m *= 2
@@ -375,8 +377,6 @@ def _bloom_positions(value, m: int = BLOOM_M) -> list[int]:
     dependent (1 vs 1.0), and a false absence verdict would WRONGLY prune
     a file — _bloom_build skips other types so no filter exists to
     mis-answer, and _bloom_match returns keep for them."""
-    import hashlib
-
     s = str(value)
     return [
         int(hashlib.md5(f"{i}:{s}".encode()).hexdigest()[:8], 16) % m
@@ -416,166 +416,30 @@ def _bloom_match(hexbits: str | None, pred: tuple) -> bool:
     )
 
 
-NDV_K = 64  # KMV sketch size: k smallest 64-bit hashes per file/column
-
-
-def _kmv_hash(v) -> int:
-    """THE sketch-key hash: 64-bit md5 prefix of str(v). One definition —
-    the write path (_col_sketches), the whole-column path (_kmv_mins),
-    and every oracle replay must agree bit-for-bit or layout-independent
-    NDV merging silently breaks."""
-    return int(hashlib.md5(str(v).encode()).hexdigest()[:16], 16)
-
-
-def _kmv_mins(values) -> list[int]:
-    """The NDV_K smallest distinct 64-bit md5 hashes of a column's values
-    — a KMV (k-minimum-values) sketch (Bar-Yossef et al. 2002; Iceberg
-    stores the same idea as puffin theta sketches). Merging per-file
-    sketches by re-taking the k smallest of the union is EXACT: any hash
-    among the global k smallest is necessarily among its own file's k
-    smallest. Same int/str-only key discipline as the blooms (a float's
-    string form is representation-dependent); NULLs are skipped."""
-    hs = set()
-    for v in values:
-        if v is None:
-            continue
-        if isinstance(v, bool) or not isinstance(v, (int, str)):
-            return []  # unsketchable type: record nothing
-        hs.add(_kmv_hash(v))
-    return sorted(hs)[:NDV_K]
-
-
-def _col_sketches(
-    pf, col: str, want_bloom: bool, want_ndv: bool
-) -> tuple[str, list[int]]:
-    """Writer-side bloom + KMV for one column in ONE streaming pass over
-    the file's record batches (pyarrow iter_batches) — the same work an
-    Iceberg writer does to emit puffin/parquet stats, but with driver
-    memory bounded at O(batch + bloom + k), never O(rows in file):
-    the bloom folds bits in place and the KMV running set is pruned back
-    to its k smallest after every batch, which is exact because any hash
-    among the file's k smallest is among every running prefix's k
-    smallest. Same int/str-only key discipline as _bloom_build/_kmv_mins:
-    an unbloomable/unsketchable value type records no filter at all for
-    the whole file ('' / []). Each batch is deduplicated first (pyarrow
-    unique), so a value repeated across a conversation's turns is hashed
-    once per batch; bloom bits and KMV hashes are idempotent, so the
-    result is identical to hashing every value. The bloom is sized from
-    the footer's row count (_bloom_bits_for)."""
+def _col_sketches(pf, col: str) -> str:
+    """Writer-side bloom for one column in ONE streaming pass over the
+    file's record batches (pyarrow iter_batches), with driver memory
+    bounded at O(batch + bloom), never O(rows in file): the bloom folds
+    bits in place. Same int/str-only key discipline as _bloom_build: an
+    unbloomable value type records no filter at all for the whole file
+    (''). Each batch is deduplicated first (pyarrow unique), so a value
+    repeated across a conversation's turns is hashed once per batch; bloom
+    bits are idempotent, so the result is identical to hashing every
+    value. The bloom is sized from the footer's row count
+    (_bloom_bits_for)."""
     import pyarrow.compute as pc
 
     m = _bloom_bits_for(pf.metadata.num_rows)
-    bits = bytearray(m // 8) if want_bloom else None
-    hs: set[int] | None = set() if want_ndv else None
+    bits = bytearray(m // 8)
     for batch in pf.iter_batches(columns=[col]):
         for v in pc.unique(batch.column(0)).to_pylist():
             if v is None:
-                continue  # NULL never matches '=' and never counts distinct
+                continue  # NULL never matches '='
             if isinstance(v, bool) or not isinstance(v, (int, str)):
-                return "", []
-            if bits is not None:
-                for pos in _bloom_positions(v, m):
-                    bits[pos // 8] |= 1 << (pos % 8)
-            if hs is not None:
-                hs.add(_kmv_hash(v))
-        if hs is not None and len(hs) > NDV_K:
-            hs = set(sorted(hs)[:NDV_K])
-    return (
-        bits.hex() if bits is not None else "",
-        sorted(hs)[:NDV_K] if hs is not None else [],
-    )
-
-
-def column_ndv(table: str, col: str) -> dict:
-    """Merged distinct-count estimate for `col` from MANIFESTS alone: the
-    per-file KMV sketches union to the exact global k-minimum set, and
-    NDV ≈ (k-1) / (kth_smallest / 2^64) — the standard KMV estimator,
-    exact (n_mins itself) whenever the true NDV < k. The optimizer-facing
-    number a join planner wants (which side is smaller, is a broadcast
-    safe) without opening a single data file. Returns {n_files,
-    n_files_sketched, n_mins, ndv_est} with ndv_est rounded to 6
-    decimals (a pure function of exact integer hashes — engine-neutral,
-    replayed verbatim by the DuckDB oracle)."""
-    _, state = _state_at(table)
-    entries = list(state["data"].values())
-    sketched = [e for e in entries if col in e.get("ndv", {})]
-    mins = sorted({m for e in sketched for m in e["ndv"][col]})[:NDV_K]
-    if not mins:
-        return {
-            "n_files": len(entries),
-            "n_files_sketched": 0,
-            "n_mins": 0,
-            "ndv_est": 0.0,
-        }
-    if len(mins) < NDV_K:
-        est = float(len(mins))  # saw fewer than k distinct hashes: exact
-    else:
-        est = _q6((NDV_K - 1) / (mins[-1] / 2.0**64))
-    return {
-        "n_files": len(entries),
-        "n_files_sketched": len(sketched),
-        "n_mins": len(mins),
-        "ndv_est": est,
-    }
-
-
-def _merged_mins(table: str, col: str) -> list[int]:
-    """Exact global k-minimum hash set for `col` from the table's per-file
-    KMV sketches (the column_ndv merge)."""
-    _, state = _state_at(table)
-    return sorted(
-        {
-            m
-            for e in state["data"].values()
-            for m in e.get("ndv", {}).get(col, [])
-        }
-    )[:NDV_K]
-
-
-def _kmv_estimate(mins: list[int]) -> float:
-    """(k-1)/(kth/2^64) KMV estimator; exact count when fewer than k."""
-    if not mins:
-        return 0.0
-    if len(mins) < NDV_K:
-        return float(len(mins))
-    return _q6((NDV_K - 1) / (mins[-1] / 2.0**64))
-
-
-def column_ndv_overlap(
-    table_a: str, table_b: str, col_a: str, col_b: str | None = None
-) -> dict:
-    """Join-cardinality planning from MANIFESTS of two tables (Beyer et
-    al., SIGMOD 2007 §4: KMV set operations): take the k smallest hashes
-    of the UNION (exact — each side's global k-min set is known, and the
-    union's k-min is contained in their union), estimate
-    Jaccard = |union k-mins present in BOTH sides| / |union k-mins|
-    (sound: any union-k-min hash that belongs to side A is necessarily
-    within A's own k-min, because A's kth smallest ≥ the union's), then
-    ndv(A ∩ B) ≈ J · ndv(A ∪ B). This is the equi-join selectivity
-    number — broadcast the side whose intersection share is tiny — read
-    without opening one data file on either table. Exact whenever the
-    union has fewer than k distinct hashes. Returns {jaccard, union_est,
-    inter_est, n_union_mins}."""
-    a = _merged_mins(table_a, col_a)
-    b = _merged_mins(table_b, col_b or col_a)
-    sa, sb = set(a), set(b)
-    union = sorted(sa | sb)[:NDV_K]
-    if not union:
-        return {
-            "jaccard": 0.0,
-            "union_est": 0.0,
-            "inter_est": 0.0,
-            "n_union_mins": 0,
-        }
-    shared = sum(1 for h in union if h in sa and h in sb)
-    jacc = _q6(shared / len(union))
-    union_est = _kmv_estimate(union)
-    return {
-        "jaccard": jacc,
-        "union_est": union_est,
-        "inter_est": _q6(jacc * union_est),
-        "n_union_mins": len(union),
-    }
+                return ""
+            for pos in _bloom_positions(v, m):
+                bits[pos // 8] |= 1 << (pos % 8)
+    return bits.hex()
 
 
 def _stats_match(st: list | None, pred: tuple) -> bool:
@@ -591,205 +455,54 @@ def _stats_match(st: list | None, pred: tuple) -> bool:
 
 
 # ---------------------------------------------------------------------------
-# two-level manifests (Iceberg's manifest-list layer)
+# scan planning (manifests only)
 # ---------------------------------------------------------------------------
 #
-# A commit that adds many files groups its file entries into MANIFEST CHUNK
-# files (log/mchunk-*.json) and records only per-chunk summaries inline:
-# file/row/byte tallies, the distinct partition values per spec field, merged
-# min/max stats, and the OR of the per-file blooms (a valid membership filter
-# for the whole chunk — if a probe bit is unset in the union, no file in the
-# chunk contains the value). Planning (plan_scan / prune_files_where /
-# scan_where) then checks the SUMMARY first and skips whole chunks without
-# opening them — at 10^7 live files the driver touches O(chunks) summaries
-# instead of O(files) entries for a selective predicate. Full-table
-# operations (read_snapshot, compaction, metadata tables) expand chunks via
-# _state_at's default expand=True and behave exactly as before.
-
-MANIFEST_CHUNK_FILES = 512  # commits adding more files than this chunk them
-
-
-def _bloom_or(hexes: list[str]) -> str:
-    """Union of blooms at the smallest size among them. A probe position
-    is a hash mod a power of two, so bit p of a larger filter lands on bit
-    p mod m of an m-bit one: folding byte i onto byte i mod (m/8) is
-    exact."""
-    bits = bytearray(min(len(h) for h in hexes) // 2)
-    for h in hexes:
-        for i, b in enumerate(bytes.fromhex(h)):
-            bits[i % len(bits)] |= b
-    return bits.hex()
-
-
-def _chunk_summary(entries: list[dict]) -> dict:
-    """Inline summary for one chunk of file entries: tallies + the merged
-    pruning metadata (the union of the partition tuples, min/max stats,
-    OR'd blooms). A field/column is summarized only when EVERY entry
-    carries it — a partial summary could prune a file the summary never
-    saw — and partition tuples only when every entry shares one spec and
-    key list, so the summary's tuples mean the same thing as each file's."""
-    ref: dict = {
-        "n_files": len(entries),
-        "rows": sum(e["rows"] for e in entries),
-        "bytes": sum(e.get("bytes", 0) for e in entries),
-    }
-    spec = entries[0].get("spec")
-    same_spec = all(e.get("spec") == spec for e in entries)
-    if spec and same_spec:
-        ref["spec"] = spec
-    keys = (entries[0].get("partitions") or {}).get("keys")
-    if same_spec and keys and all(
-        (e.get("partitions") or {}).get("keys") == keys
-        and e["partitions"]["tuples"] is not None
-        for e in entries
-    ):
-        counts: dict[tuple, int] = {}
-        for e in entries:
-            for vals, n in e["partitions"]["tuples"]:
-                counts[tuple(vals)] = counts.get(tuple(vals), 0) + n
-        ref["partitions"] = _bounded_partitions(keys, counts)
-    stats: dict[str, list] = {}
-    for col in {c for e in entries for c in e.get("stats", {})}:
-        sts = [e.get("stats", {}).get(col) for e in entries]
-        if all(sts):
-            try:
-                stats[col] = [
-                    min(s[0] for s in sts),
-                    max(s[1] for s in sts),
-                ]
-            except TypeError:
-                pass  # cross-type stats: no chunk-level range
-    if stats:
-        ref["stats"] = stats
-    blooms: dict[str, str] = {}
-    for col in {c for e in entries for c in e.get("bloom", {})}:
-        hx = [e.get("bloom", {}).get(col) for e in entries]
-        if all(hx):
-            blooms[col] = _bloom_or(hx)
-    if blooms:
-        ref["bloom"] = blooms
-    return ref
-
-
-def _write_manifest_chunks(
-    table: str, entries: list[dict], chunk_files: int
-) -> list[dict]:
-    """Group `entries` (sorted by partition tuples then path, so each chunk
-    covers a coherent partition range) into chunk manifest files under
-    log/, returning the summary refs to inline into the commit. Chunk
-    paths are relative to the table root so the table stays relocatable."""
-    entries = sorted(
-        entries,
-        key=lambda e: (json.dumps(e.get("partitions", {}), sort_keys=True), e["path"]),
-    )
-    log = _log_dir(table)
-    os.makedirs(log, exist_ok=True)
-    refs = []
-    for i in range(0, len(entries), chunk_files):
-        grp = entries[i : i + chunk_files]
-        name = f"mchunk-{uuid.uuid4().hex}.json"
-        tmp = os.path.join(log, f".tmp-{uuid.uuid4().hex}.json")
-        with open(tmp, "w") as f:
-            json.dump({"entries": grp}, f)
-            f.flush()
-            os.fsync(f.fileno())
-        os.rename(tmp, os.path.join(log, name))
-        ref = _chunk_summary(grp)
-        ref["manifest"] = os.path.join("log", name)
-        refs.append(ref)
-    return refs
-
-
-def _maybe_chunk(
-    table: str, entries: list[dict], chunk_files: int | None
-) -> list[dict]:
-    limit = MANIFEST_CHUNK_FILES if chunk_files is None else chunk_files
-    if limit and len(entries) > limit:
-        return _write_manifest_chunks(table, entries, limit)
-    return entries
-
-
-def _load_chunk_entries(table: str, ref: dict) -> list[dict]:
-    """File entries of one chunk, stamped with the ref's commit-level
-    seq/cols (chunk files are written once, before the optimistic-commit
-    retry loop settles the version)."""
-    with open(os.path.join(table, ref["manifest"])) as f:
-        raw = json.load(f)["entries"]
-    out = []
-    for e in raw:
-        e = dict(e)
-        if "seq" in ref:
-            e["seq"] = ref["seq"]
-        if "cols" in ref:
-            e["cols"] = ref["cols"]
-        if "spec" in ref and "spec" not in e:
-            e["spec"] = ref["spec"]
-        out.append(e)
-    return out
+# A manifest entry is one flat record per data file, keyed by column name:
+#   {"path", "rows", "bytes", "seq", "stats": {col: [min, max]}}
+# plus, when recorded, "bloom" ({col: hex bits}), "partitions" (the tuple
+# set above), "spec" (the hidden-partition spec it was written under) and
+# "markers" (the resume ledger). Planning checks every live entry.
 
 
 def _added_entries(table: str, commit: dict) -> list[dict]:
-    """A commit's added data files with chunk refs expanded."""
-    out = []
-    for e in commit.get("added_data", []):
-        if "manifest" in e:
-            out.extend(_load_chunk_entries(table, e))
-        else:
-            out.append(e)
-    return out
+    """A commit's added data file entries."""
+    return commit.get("added_data", [])
 
 
-def _added_file_count(commit: dict) -> int:
-    return sum(
-        e["n_files"] if "manifest" in e else 1
-        for e in commit.get("added_data", [])
-    )
-
-
-def _entry_matches(
-    e: dict,
-    state: dict,
-    predicates: dict[str, tuple],
-    byname: dict[str, int],
-    evolved: bool,
-) -> bool:
-    """True iff the entry (file, or chunk summary) may contain matching
-    rows: some recorded partition tuple passes every predicate projected
-    through the entry's spec (identity on the partition keys when the
-    entry has no spec), and the min/max stats and blooms do not rule the
-    predicates out. An entry without a recorded tuple set is kept."""
+def _prune_reason(e: dict, predicates: dict[str, tuple]) -> str | None:
+    """Why the file entry `e` holds no row matching `predicates`, or None
+    when it may hold one. "partition": no recorded partition tuple passes
+    every predicate projected through the entry's spec (identity on the
+    partition keys when the entry has no spec); an entry without a
+    recorded tuple set is kept. Then "stats": min/max rule a predicate
+    out. Then "bloom": a bloom proves an '=' value absent."""
     parts = e.get("partitions") or {}
     tuples = parts.get("tuples")
-    fields = e.get("spec") or [
-        {"name": k, "source": k, "transform": "identity", "param": None}
-        for k in parts.get("keys", [])
-    ]
-    pos = {k: i for i, k in enumerate(parts.get("keys", []))}
-    # specs and stats are keyed by the file's WRITE-TIME names; after a
-    # rename the predicate's current name resolves through the field id
-    wname = {}
-    if evolved:
-        inv = {fid: n for n, fid in _entry_cols(e, state).items()}
-        wname = {c: inv.get(byname.get(c)) for c in predicates}
-    checks: list[tuple[int, dict, tuple]] = []
-    for col, pred in predicates.items():
-        w = wname.get(col, col) if evolved else col
-        if w is None:
-            continue  # column younger than this file: keep, never prune blind
-        if tuples is not None:
-            checks += [
-                (pos[f["name"]], f, pred)
-                for f in fields
-                if f["source"] == w and f["name"] in pos
-            ]
-        if not _stats_match(e.get("stats", {}).get(w), pred):
-            return False
-        if not _bloom_match(e.get("bloom", {}).get(w), pred):
-            return False
-    return not checks or any(
-        all(_part_match(f, vals[i], pred) for i, f, pred in checks)
-        for vals, _n in tuples
-    )
+    if tuples is not None:
+        pos = {k: i for i, k in enumerate(parts["keys"])}
+        fields = e.get("spec") or [
+            {"name": k, "source": k, "transform": "identity", "param": None}
+            for k in parts["keys"]
+        ]
+        checks = [
+            (pos[f["name"]], f, pred)
+            for col, pred in predicates.items()
+            for f in fields
+            if f["source"] == col and f["name"] in pos
+        ]
+        if checks and not any(
+            all(_part_match(f, vals[i], pred) for i, f, pred in checks)
+            for vals, _n in tuples
+        ):
+            return "partition"
+    stats = e.get("stats", {})
+    if not all(_stats_match(stats.get(c), p) for c, p in predicates.items()):
+        return "stats"
+    bloom = e.get("bloom", {})
+    if not all(_bloom_match(bloom.get(c), p) for c, p in predicates.items()):
+        return "bloom"
+    return None
 
 
 def plan_scan(
@@ -798,56 +511,31 @@ def plan_scan(
     version: int | None = None,
     _state: dict | None = None,
 ) -> dict:
-    """Two-level manifest planning: check each chunk SUMMARY first and skip
-    whole chunks (their file entries are never read) before checking the
-    surviving chunks' per-file entries. Returns {"paths", "entries",
-    "n_files_skipped", "n_chunks_total", "n_chunks_opened",
-    "n_chunks_skipped"}. When a later commit removed files out of a chunk
-    (compaction/expiry), every chunk is opened — a summary cannot say
-    which of its files are still live, and skipped-file counts must stay
-    exact. `_state` takes a caller's already-replayed expand=False state
-    so one planning call never replays the commit log twice."""
-    state = (
-        _state
-        if _state is not None
-        else _state_at(table, version, expand=False)[1]
-    )
-    byname = {n: i for i, n, _t in _fields_of(state)}
-    evolved = bool(state.get("evolved"))
-    removed: set[str] = state.get("removed", set())
+    """Plan a predicate scan from the manifests: check every live file
+    entry (_prune_reason) and return the files to read with a scan report
+    (Iceberg's ScanReport): {"paths", "entries", "n_files_considered",
+    "n_files_skipped", "pruned_by_partition", "pruned_by_stats",
+    "pruned_by_bloom", "plan_ms"}. plan_ms is this call's wall time, log
+    replay included; `_state` takes a caller's already-replayed state so
+    one planning call never replays the log twice."""
+    t0 = time.perf_counter()
+    state = _state if _state is not None else _state_at(table, version)[1]
     kept: dict[str, dict] = {}
-    skipped = 0
+    pruned = {"partition": 0, "stats": 0, "bloom": 0}
     for path in sorted(state["data"]):
         e = state["data"][path]
-        if _entry_matches(e, state, predicates, byname, evolved):
+        why = _prune_reason(e, predicates)
+        if why is None:
             kept[path] = e
         else:
-            skipped += 1
-    chunks = state.get("chunks", {})
-    opened = chunks_skipped = 0
-    for mpath in sorted(chunks):
-        ref = chunks[mpath]
-        if not removed and not _entry_matches(
-            ref, state, predicates, byname, evolved
-        ):
-            chunks_skipped += 1
-            skipped += ref["n_files"]
-            continue
-        opened += 1
-        for e in _load_chunk_entries(table, ref):
-            if e["path"] in removed:
-                continue
-            if _entry_matches(e, state, predicates, byname, evolved):
-                kept[e["path"]] = e
-            else:
-                skipped += 1
+            pruned[why] += 1
     return {
-        "paths": sorted(kept),
+        "paths": list(kept),
         "entries": kept,
-        "n_files_skipped": skipped,
-        "n_chunks_total": len(chunks),
-        "n_chunks_opened": opened,
-        "n_chunks_skipped": chunks_skipped,
+        "n_files_considered": len(state["data"]),
+        "n_files_skipped": sum(pruned.values()),
+        **{f"pruned_by_{k}": n for k, n in pruned.items()},
+        "plan_ms": (time.perf_counter() - t0) * 1e3,
     }
 
 
@@ -860,9 +548,8 @@ def prune_files_where(
     partition spec it was written under, projected through its transforms
     — so partition EVOLUTION is handled per-file: a file written before a
     bucket field existed simply has no value for it and is kept — and (b)
-    its min/max footer stats (plus blooms for '='). Chunked commits are
-    planned summary-first (plan_scan): whole manifest chunks are skipped
-    without being read. Returns (paths_to_read, n_files_skipped)."""
+    its min/max footer stats (plus blooms for '='). Returns
+    (paths_to_read, n_files_skipped)."""
     plan = plan_scan(table, predicates, version)
     return plan["paths"], plan["n_files_skipped"]
 
@@ -873,21 +560,16 @@ def scan_where(
     predicates: dict[str, tuple],
     version: int | None = None,
 ) -> DataFrame:
-    """Hidden-partition-pruned scan: plan with prune_files_where (transform
-    projection + footer stats, manifests only — no file is opened to
-    decide), then read the surviving files and apply the EXACT predicates.
-    At 100 TB
-    this is the difference between a point lookup opening 1/n_buckets of
-    one day's files and a full-table scan — and because the spec is
-    per-file, the same call stays correct across partition-spec changes.
-    Planning is two-level (plan_scan): chunked commits' manifest chunks
-    are summary-skipped before any file entry is read."""
-    _, state = _state_at(table, version, expand=False)
+    """Hidden-partition-pruned scan: plan with plan_scan (transform
+    projection + footer stats + blooms, manifests only — no file is opened
+    to decide), then read the surviving files and apply the EXACT
+    predicates. At 100 TB this is the difference between a point lookup
+    opening 1/n_buckets of one day's files and a full-table scan — and
+    because the spec is per-file, the same call stays correct across
+    partition-spec changes."""
+    _, state = _state_at(table, version)
     plan = plan_scan(table, predicates, version, _state=state)
-    paths = plan["paths"]
-    if not paths:
-        return _empty_df(spark, _field_pairs(_fields_of(state)))
-    df = _read_projected(spark, [plan["entries"][p] for p in paths], state)
+    df = _read_files(spark, plan["paths"], state["schema"])
     for col, pred in predicates.items():
         if pred[0] == "=":
             df = df.filter(F.col(col) == F.lit(pred[1]))
@@ -901,13 +583,12 @@ def _file_entries(
     stats_cols: tuple[str, ...],
     seq: int,
     bloom_cols: tuple[str, ...] = (),
-    ndv_cols: tuple[str, ...] = (),
     partition_by: tuple[str, ...] = (),
 ) -> list[dict]:
     """Manifest entries for every parquet file under dirpath: row count,
     byte size, partition tuples, and min/max per requested stats column —
     read from parquet FOOTERS and path segments (the same numbers Iceberg
-    persists in its manifests). Blooms/KMV sketches scan their column,
+    persists in its manifests). Blooms scan their column,
     and `partition_by` groups the key columns of each file into its
     tuple set (_data_partitions); without it, hive `_p_` path segments
     give the file its one tuple."""
@@ -937,17 +618,11 @@ def _file_entries(
                 if lo is not None:
                     stats[col] = [_json_safe(lo), _json_safe(hi)]
             bloom: dict[str, str] = {}
-            ndv: dict[str, list[int]] = {}
-            for col in {*bloom_cols, *ndv_cols}:
-                if col not in idx:
-                    continue
-                hexbits, mins = _col_sketches(
-                    pf, col, col in bloom_cols, col in ndv_cols
-                )
-                if hexbits:
-                    bloom[col] = hexbits
-                if mins:
-                    ndv[col] = mins
+            for col in bloom_cols:
+                if col in idx:
+                    hexbits = _col_sketches(pf, col)
+                    if hexbits:
+                        bloom[col] = hexbits
             entry = {
                 "path": path,
                 "rows": md.num_rows,
@@ -957,8 +632,6 @@ def _file_entries(
             }
             if bloom:
                 entry["bloom"] = bloom
-            if ndv:
-                entry["ndv"] = ndv
             if partition_by:
                 entry["partitions"] = _data_partitions(pf, partition_by)
             else:
@@ -976,216 +649,11 @@ def _schema_of(df: DataFrame) -> list[list[str]]:
 
 
 # ---------------------------------------------------------------------------
-# schema evolution (Iceberg field IDs)
-# ---------------------------------------------------------------------------
-#
-# Every column owns a permanent FIELD ID (Iceberg spec's schema evolution):
-# commits carry `fields` = [[id, name, type], ...] plus `last_field_id`, and
-# every data file entry is stamped with `cols` = {write-time name: id}.
-# Reads RESOLVE BY ID, never by name — so rename is metadata-only (old files
-# keep their old column name; the projection follows the id), drop never
-# resurrects (a re-added name gets a FRESH id, so old files' data for the
-# dropped column stays invisible), add null-fills older files, and widen
-# (int→bigint, float→double) casts at read time. Tables that never evolved
-# keep the identity mapping and take the exact pre-evolution read path.
-
-_WIDENINGS = {("int", "bigint"), ("float", "double")}
-
-
-def _fields_of(state: dict) -> list[list]:
-    """The state's fields [[id, name, dtype]]; legacy states (written before
-    field ids existed) get positional ids — stable because pre-evolution
-    schema changes were append-only."""
-    if state.get("fields"):
-        return state["fields"]
-    return [[i + 1, n, t] for i, (n, t) in enumerate(state.get("schema") or [])]
-
-
-def _field_pairs(fields: list[list]) -> list[list[str]]:
-    return [[n, t] for _i, n, t in fields]
-
-
-def _entry_cols(entry: dict, state: dict) -> dict[str, int]:
-    """write-time column name → field id for one file entry. Entries stamped
-    at write time carry it; legacy entries use the name→id snapshot the first
-    evolve_schema commit recorded (their names are pre-evolution names by
-    construction), else the identity mapping of the current fields."""
-    if entry.get("cols"):
-        return {n: int(i) for n, i in entry["cols"].items()}
-    legacy = state.get("legacy_cols")
-    if legacy:
-        return {n: int(i) for n, i in legacy.items()}
-    return {n: i for i, n, _t in _fields_of(state)}
-
-
-def _fields_after_write(
-    state: dict | None, merged_schema: list[list[str]]
-) -> tuple[list[list], int]:
-    """Fields for a commit whose post-commit schema is `merged_schema`:
-    names already known keep their ids, new names take fresh ids past
-    last_field_id (Iceberg's last-column-id rule, so a dropped-then-re-added
-    name never reuses its old id)."""
-    old = _fields_of(state) if state and state.get("schema") else []
-    by_name = {n: (i, t) for i, n, t in old}
-    last = max(
-        int(state.get("last_field_id", 0)) if state else 0,
-        max((i for i, _n, _t in old), default=0),
-    )
-    fields = []
-    for n, t in merged_schema:
-        if n in by_name:
-            fields.append([by_name[n][0], n, t])
-        else:
-            last += 1
-            fields.append([last, n, t])
-    return fields, last
-
-
-def _stamp_cols(entries: list[dict], fields: list[list]) -> list[dict]:
-    """Record each new file's write-time name→field-id mapping."""
-    cols = {n: i for i, n, _t in fields}
-    for e in entries:
-        e["cols"] = cols
-    return entries
-
-
-def table_fields(table: str, version: int | None = None) -> list[list]:
-    """Public accessor: [[field_id, name, type]] at a snapshot."""
-    return _fields_of(_state_at(table, version)[1])
-
-
-def evolve_schema(
-    table: str,
-    add: tuple = (),
-    drop: tuple = (),
-    rename: dict[str, str] | None = None,
-    widen: dict[str, str] | None = None,
-    max_retries: int = 5,
-) -> int:
-    """Schema evolution as ONE metadata-only commit (no data file is read or
-    rewritten — Iceberg ALTER TABLE semantics). `widen`/`rename`/`drop` take
-    PRE-evolve names; `add` appends (name, type) columns that null-fill every
-    existing file. Widening is the lossless promotion set int→bigint,
-    float→double; anything else raises. Readers of snapshots at or after
-    this commit see the new schema over ALL files, old and new, resolved by
-    field id. No reference analog (the Go CLI has no storage layer)."""
-    rename = dict(rename or {})
-    widen = dict(widen or {})
-    add = [list(a) for a in add]
-    drop = list(drop)
-    if set(rename) & set(drop):
-        raise ValueError(f"column(s) both renamed and dropped: {set(rename) & set(drop)}")
-    for _ in range(max_retries):
-        cur = current_version(table)
-        if cur is None:
-            raise LookupError(f"cannot evolve schema of empty table {table}")
-        _, state = _state_at(table, cur)
-        fields = [list(f) for f in _fields_of(state)]
-        names = {n for _i, n, _t in fields}
-        for group in (set(widen), set(rename), set(drop)):
-            unknown = group - names
-            if unknown:
-                raise ValueError(f"unknown column(s): {sorted(unknown)}")
-        for n, new_t in widen.items():
-            old_t = next(t for _i, fn, t in fields if fn == n)
-            if (old_t, new_t) not in _WIDENINGS and old_t != new_t:
-                raise ValueError(
-                    f"cannot widen {n}: {old_t} -> {new_t} is not a lossless "
-                    f"promotion ({sorted(_WIDENINGS)})"
-                )
-        new_fields = []
-        for i, n, t in fields:
-            if n in drop:
-                continue
-            t = widen.get(n, t)
-            n = rename.get(n, n)
-            new_fields.append([i, n, t])
-        seen = {n for _i, n, _t in new_fields}
-        if len(seen) != len(new_fields):
-            raise ValueError("rename collides with a surviving column name")
-        last = max(
-            int(state.get("last_field_id", 0)),
-            max((i for i, _n, _t in fields), default=0),
-        )
-        for n, t in add:
-            if n in seen:
-                raise ValueError(f"added column {n} already exists")
-            seen.add(n)
-            last += 1
-            new_fields.append([last, n, t])
-        if not new_fields:
-            raise ValueError("evolution would drop every column")
-        commit = {
-            "version": (current_version(table) or 0) + 1,
-            "parent": cur,
-            "operation": "evolve_schema",
-            "ts": time.time(),
-            "schema": _field_pairs(new_fields),
-            "fields": new_fields,
-            "last_field_id": last,
-        }
-        if not state.get("legacy_cols") and not state.get("fields"):
-            # first evolution of a pre-field-id table: snapshot the
-            # name→id mapping its unstamped file entries were written under
-            commit["legacy_cols"] = {n: i for i, n, _t in fields}
-        if _try_commit(table, commit):
-            return commit["version"]
-    raise CommitConflict(
-        f"evolve_schema lost the commit race {max_retries} times: {table}"
-    )
-
-
-def _read_projected(
-    spark: SparkSession,
-    entries: list[dict],
-    state: dict,
-    fields: list[list] | None = None,
-) -> DataFrame:
-    """Read file entries resolved BY FIELD ID against `fields` (default: the
-    state's current fields). Files are grouped by their write-time column
-    mapping; each group is one scan projected to (current name, current
-    type): renamed columns read their old name, dropped ids are simply not
-    selected, missing ids null-fill, widened types cast. Non-evolved states
-    skip all of this and take one scan under the state's schema (a file
-    that lacks a column reads it as NULL)."""
-    if not state.get("evolved") and fields is None:
-        if not entries:
-            return _empty_df(spark, _field_pairs(_fields_of(state)))
-        return _read_files(spark, sorted(e["path"] for e in entries), state.get("schema"))
-    fields = fields or _fields_of(state)
-    if not entries:
-        return _empty_df(spark, _field_pairs(fields))
-    groups: dict[tuple, list[str]] = {}
-    for e in entries:
-        sig = tuple(sorted(_entry_cols(e, state).items()))
-        groups.setdefault(sig, []).append(e["path"])
-    parts = []
-    for sig, paths in sorted(groups.items()):
-        inv = {fid: name for name, fid in sig}
-        df = _read_files(spark, sorted(paths))
-        have = set(df.columns)
-        sel = []
-        for fid, name, dtype in fields:
-            w = inv.get(fid)
-            if w is not None and w in have:
-                sel.append(F.col(w).cast(dtype).alias(name))
-            else:
-                sel.append(F.lit(None).cast(dtype).alias(name))
-        parts.append(df.select(*sel))
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out
-
-
-# ---------------------------------------------------------------------------
 # snapshot state replay
 # ---------------------------------------------------------------------------
 
 
-def _state_at(
-    table: str, version: int | None = None, expand: bool = True
-) -> tuple[int, dict]:
+def _state_at(table: str, version: int | None = None) -> tuple[int, dict]:
     """Replay the commits up to `version` (default: the newest). Returns
     (version, state) where state = {"data": {path: entry}, "schema": [...]}.
 
@@ -1193,14 +661,7 @@ def _state_at(
     log each commit's parent is the version before it) and stops early at
     any version carrying a rebase base file (the persisted state at that
     version, written by expiry wherever the chain is truncated), keeping
-    replay O(retained commits).
-
-    expand=False keeps chunked commits' manifest refs UNRESOLVED in
-    state["chunks"] ({manifest relpath: summary ref}) with any
-    chunk-member removals in state["removed"] — the two-level planning
-    input (plan_scan). The default expands every chunk into
-    state["data"], so all full-table consumers see exactly the one-level
-    state they always did."""
+    replay O(retained commits)."""
     versions = list_versions(table)
     if not versions:
         raise LookupError(f"no commits in table log: {table}")
@@ -1227,9 +688,6 @@ def _state_at(
                 "data": {e["path"]: e for e in snap["data"]},
                 "schema": snap["schema"],
             }
-            for k in ("fields", "last_field_id", "legacy_cols", "evolved"):
-                if snap.get(k):
-                    state[k] = snap[k]
             break
         if v not in retained:
             raise SnapshotExpired(
@@ -1241,38 +699,11 @@ def _state_at(
 
     for c in reversed(chain):
         for e in c.get("added_data", []):
-            if "manifest" in e:
-                state.setdefault("chunks", {})[e["manifest"]] = e
-            else:
-                state["data"][e["path"]] = e
+            state["data"][e["path"]] = e
         for p in c.get("removed_data", []):
-            if state["data"].pop(p, None) is None and state.get("chunks"):
-                # the removed file may live inside an unresolved chunk:
-                # record it so expansion (or plan_scan) filters it out
-                state.setdefault("removed", set()).add(p)
-        for m in c.get("removed_manifests", []):
-            # a full rewrite retires whole chunk refs so later planning
-            # never reopens chunks whose files are all gone
-            if state.get("chunks"):
-                state["chunks"].pop(m, None)
+            state["data"].pop(p, None)
         if c.get("schema"):
             state["schema"] = c["schema"]
-        if c.get("fields"):
-            state["fields"] = c["fields"]
-        if c.get("last_field_id"):
-            state["last_field_id"] = c["last_field_id"]
-        if c.get("legacy_cols") and not state.get("legacy_cols"):
-            state["legacy_cols"] = c["legacy_cols"]
-        if c.get("operation") == "evolve_schema" or c.get("evolved"):
-            state["evolved"] = True
-    if expand and state.get("chunks"):
-        removed = state.get("removed", set())
-        for ref in state["chunks"].values():
-            for e in _load_chunk_entries(table, ref):
-                if e["path"] not in removed:
-                    state["data"][e["path"]] = e
-        state.pop("chunks", None)
-        state.pop("removed", None)
     return target, state
 
 
@@ -1319,7 +750,7 @@ def snapshot_lineage(table: str) -> list[dict]:
                 "operation": c["operation"],
                 "ts": c.get("ts"),
                 "rows_added": sum(e["rows"] for e in c.get("added_data", [])),
-                "files_added": _added_file_count(c),
+                "files_added": len(c.get("added_data", [])),
                 "files_removed": len(c.get("removed_data", [])),
             }
         )
@@ -1353,7 +784,7 @@ def table_history(spark: SparkSession, table: str) -> DataFrame:
                 c["operation"],
                 float(c.get("ts") or 0.0),
                 sum(int(e.get("rows", 0)) for e in c.get("added_data", [])),
-                _added_file_count(c),
+                len(c.get("added_data", [])),
                 len(c.get("removed_data", [])),
             )
         )
@@ -1471,7 +902,6 @@ def _write_data_files(
     partition_by: tuple[str, ...] = (),
     spec_fields: list[dict] | None = None,
     bloom_cols: tuple[str, ...] = (),
-    ndv_cols: tuple[str, ...] = (),
     timings: dict | None = None,
 ) -> list[dict]:
     """Write df as parquet under a fresh commit directory and build its
@@ -1515,7 +945,6 @@ def _write_data_files(
         stats_cols,
         seq=version,
         bloom_cols=bloom_cols,
-        ndv_cols=ndv_cols,
         partition_by=partition_by,
     )
     if spec_fields:
@@ -1540,8 +969,6 @@ def append(
     marker: str | None = None,
     partition_spec: tuple[str, ...] = (),
     bloom_cols: tuple[str, ...] = (),
-    ndv_cols: tuple[str, ...] = (),
-    manifest_chunk_files: int | None = None,
     replace: tuple[Column, Callable[[str], bool | None]] | None = None,
 ) -> int:
     """Append df as a new snapshot; returns the committed version. Appends
@@ -1562,10 +989,8 @@ def append(
     absence even when every file's min/max RANGE overlaps — the skipping
     lever for high-cardinality scattered keys, where clustering is not
     worth a rewrite or another column already owns the sort order.
-    Commits adding more than `manifest_chunk_files` files (default
-    MANIFEST_CHUNK_FILES) record two-level manifests: file entries go to
-    chunk files and the commit inlines only per-chunk summaries, so
-    planning (plan_scan/scan_where) skips whole chunks by summary.
+    `allow_evolution` lets df add columns by name; files written before
+    read them as NULL.
     `replace=(condition, inside)` makes the commit a copy-on-write replace
     of the live rows matching `condition` (_replace_files): the new files
     and the removal of the replaced ones land in this one commit, which
@@ -1584,7 +1009,6 @@ def append(
         partition_by,
         parse_partition_spec(partition_spec) if partition_spec else None,
         bloom_cols,
-        ndv_cols,
         timings=timings,
     )
     if marker is not None:
@@ -1602,9 +1026,6 @@ def append(
         if removed:
             timings["rewrite_s"] = time.perf_counter() - t0
     summary = _change_summary(entries + added, removed or None, rewritten)
-    t0 = time.perf_counter()
-    entries = _maybe_chunk(table, entries, manifest_chunk_files)
-    timings["manifest_s"] += time.perf_counter() - t0
     schema_new = _schema_of(df)
     t0 = time.perf_counter()
     for attempt in range(1 if removed else max_retries):
@@ -1613,7 +1034,6 @@ def append(
         pstate = _state_at(table, parent)[1] if parent is not None else None
         existing = pstate["schema"] if pstate is not None else None
         merged = _check_schema(existing, schema_new, allow_evolution)
-        fields, last_id = _fields_after_write(pstate, merged)
         for e in entries + added:
             e["seq"] = version_try
         commit = {
@@ -1622,9 +1042,7 @@ def append(
             "operation": "replace" if removed else "append",
             "ts": time.time(),
             "schema": merged,
-            "fields": fields,
-            "last_field_id": last_id,
-            "added_data": _stamp_cols(entries + added, fields),
+            "added_data": entries + added,
             "summary": dict(
                 summary,
                 **{k: round(v, 4) for k, v in timings.items()},
@@ -1686,14 +1104,12 @@ def add_files(
             "reference"
         )
     entries = _file_entries(os.path.abspath(source_dir), stats_cols, 0)
-    entries = _maybe_chunk(table, entries, None)
     for _ in range(max_retries):
         parent = current_version(table)
         version = (parent or 0) + 1
         pstate = _state_at(table, parent)[1] if parent is not None else None
         existing = pstate["schema"] if pstate is not None else None
         merged = _check_schema(existing, schema_new, allow_evolution)
-        fields, last_id = _fields_after_write(pstate, merged)
         for e in entries:
             e["seq"] = version
         commit = {
@@ -1702,9 +1118,8 @@ def add_files(
             "operation": "append",
             "ts": time.time(),
             "schema": merged,
-            "fields": fields,
-            "last_field_id": last_id,
-            "added_data": _stamp_cols(entries, fields),
+            "added_data": entries,
+            "summary": _change_summary(entries),
         }
         if _try_commit(table, commit):
             return version
@@ -1736,16 +1151,16 @@ def committed_markers(table: str) -> set[str]:
 
 def commit_summary(table: str, version: int) -> dict | None:
     """What a commit added and removed and where its time went (Iceberg's
-    snapshot summary): added_data_files, added_records and
-    added_files_size from the manifest entries; for a commit that removes
-    files (a delete, update, merge or replace), removed_data_files,
-    removed_records and rewritten_files (the removed files whose other
-    rows it rewrote) with rewrite_s (finding and rewriting them). Appends
-    and replaces also record write_s (the Spark write), manifest_s (footer
-    reads, sketches and partition tuples), commit_s (log replay, schema
-    check and any lost races, up to the winning commit-if-absent write)
-    and commit_retries. None for commits that record no summary
-    (compaction, overwrite, rollback, schema evolution)."""
+    snapshot summary); every commit this module writes records one:
+    added_data_files, added_records and added_files_size from the manifest
+    entries; for a commit that removes files (a delete, update, merge,
+    replace, compaction, overwrite or rollback), removed_data_files,
+    removed_records and rewritten_files (the removed files whose rows it
+    rewrote: 0 for an overwrite or rollback), with rewrite_s (finding and
+    rewriting them) where it rewrote. Appends and replaces also record
+    write_s (the Spark write), manifest_s (footer reads, blooms and
+    partition tuples), commit_s (log replay, schema check and any lost
+    races, up to the winning commit-if-absent write) and commit_retries."""
     return _read_commit(table, version).get("summary")
 
 
@@ -1810,7 +1225,7 @@ def _commit(table: str, parent: int | None, operation: str, **body) -> int:
 
 def _live_rows(spark: SparkSession, state: dict) -> DataFrame:
     """The live rows of a state with their file identity as `_file`."""
-    return _with_file(_read_projected(spark, list(state["data"].values()), state))
+    return _with_file(_read_files(spark, sorted(state["data"]), state["schema"]))
 
 
 def _files_holding(state: dict, rows: DataFrame) -> list[dict]:
@@ -1820,33 +1235,21 @@ def _files_holding(state: dict, rows: DataFrame) -> list[dict]:
     return [e for p, e in state["data"].items() if os.path.abspath(p) in hit]
 
 
-def _layout_of(state: dict, entries) -> dict:
+def _layout_of(entries) -> dict:
     """_write_data_files options that keep `entries`' layout in their
-    rewrite: the columns they carry min/max stats, blooms and NDV sketches
-    on, and their sink keys (partition_by files), all by current name."""
-    byid = {i: n for i, n, _t in _fields_of(state)}
-    names = set(byid.values())
-    cols: dict[str, set] = {"stats": set(), "bloom": set(), "ndv": set()}
-    keys = set()
+    rewrite: the columns they carry min/max stats and blooms on, and their
+    sink keys (partition_by files)."""
+    stats, bloom, keys = set(), set(), set()
     for e in entries:
-        ids = e.get("cols") or {}
-        now = {c: byid.get(ids[c]) if c in ids else c for c in {
-            *e.get("stats", {}), *e.get("bloom", {}), *e.get("ndv", {}),
-            *(e.get("partitions") or {}).get("keys", ()),
-        }}
-        for kind, dest in cols.items():
-            dest |= {now[c] for c in e.get(kind, {})} & names
+        stats |= set(e.get("stats", {}))
+        bloom |= set(e.get("bloom", {}))
         parts = e.get("partitions")
-        keys.add(
-            None if not parts or e.get("spec")
-            else tuple(now[k] for k in parts["keys"])
-        )
+        keys.add(None if not parts or e.get("spec") else tuple(parts["keys"]))
     (only,) = keys if len(keys) == 1 else (None,)
     return {
-        "stats_cols": tuple(sorted(cols["stats"])),
-        "bloom_cols": tuple(sorted(cols["bloom"])),
-        "ndv_cols": tuple(sorted(cols["ndv"])),
-        "partition_by": only if only and set(only) <= names else (),
+        "stats_cols": tuple(sorted(stats)),
+        "bloom_cols": tuple(sorted(bloom)),
+        "partition_by": only or (),
     }
 
 
@@ -1871,11 +1274,10 @@ def _rewrite_files(
     remainder is empty writes no file."""
     if not entries:
         return []
-    opts = dict(_layout_of(state, entries), **write)
+    opts = dict(_layout_of(entries), **write)
     opts["stats_cols"] = tuple(sorted({*opts["stats_cols"], *stats_cols}))
-    out = _write_data_files(
-        rows(_read_projected(spark, entries, state)), table, version, kind="data", **opts
-    )
+    df = _read_files(spark, sorted(e["path"] for e in entries), state["schema"])
+    out = _write_data_files(rows(df), table, version, kind="data", **opts)
     for e in out:
         if not e["rows"]:
             os.unlink(e["path"])
@@ -1887,7 +1289,7 @@ def _rewrite_files(
     if markers and all(e.get("markers") for e in entries):
         for e in out:
             e["markers"] = markers
-    return _stamp_cols(out, _fields_of(state))
+    return out
 
 
 def _rewrite_commit(
@@ -1899,15 +1301,16 @@ def _rewrite_commit(
     hit: list[dict],
     rows,
     added: list[dict] = (),
-    stats_cols: tuple[str, ...] = (),
-    **body,
+    schema: list[list[str]] | None = None,
+    **write,
 ) -> int:
     """Commit `operation` as the rewrite of the live files `hit` (each
-    replaced by rows(its rows); see _rewrite_files) plus the new files
-    `added`, in one commit that records its summary."""
+    replaced by rows(its rows); _rewrite_files takes `write`) plus the new
+    files `added`, in one commit that records its summary and, when
+    given, the table's new `schema`."""
     t0 = time.perf_counter()
     new = list(added) + _rewrite_files(
-        spark, table, (cur or 0) + 1, state, hit, rows, stats_cols=stats_cols
+        spark, table, (cur or 0) + 1, state, hit, rows, **write
     )
     summary = _change_summary(new, hit, len(hit))
     summary["rewrite_s"] = round(time.perf_counter() - t0, 4)
@@ -1916,7 +1319,7 @@ def _rewrite_commit(
         added_data=new,
         removed_data=sorted(e["path"] for e in hit),
         summary=summary,
-        **body,
+        **({"schema": schema} if schema else {}),
     )
 
 
@@ -1989,16 +1392,14 @@ def overwrite(
     data file, adds the new files) — readers of older snapshots are
     untouched until expiry."""
     cur = current_version(table)
-    state = _state_at(table, cur)[1] if cur else None
+    live = _state_at(table, cur)[1]["data"] if cur else {}
     entries = _write_data_files(df, table, (cur or 0) + 1, stats_cols, "data")
-    fields, last_id = _fields_after_write(state, _schema_of(df))
     return _commit(
         table, cur, "overwrite",
         schema=_schema_of(df),
-        fields=fields,
-        last_field_id=last_id,
-        added_data=_stamp_cols(entries, fields),
-        removed_data=sorted(state["data"]) if state else [],
+        added_data=entries,
+        removed_data=sorted(live),
+        summary=_change_summary(entries, list(live.values())),
     )
 
 
@@ -2024,7 +1425,7 @@ def update_where(
     if cur is None:
         raise LookupError(f"cannot update empty table {table}")
     _, state = _state_at(table, cur)
-    types = {n: t for _i, n, t in _fields_of(state)}
+    types = dict(map(tuple, state["schema"]))
     bad = set(assignments) - set(types)
     if bad:
         raise ValueError(f"assignment to unknown column(s): {sorted(bad)}")
@@ -2058,7 +1459,6 @@ def merge_upsert(
     cur = current_version(table)
     state = _state_at(table, cur)[1] if cur is not None else None
     merged = _check_schema(state["schema"] if state else None, _schema_of(df), False)
-    fields, last_id = _fields_after_write(state, merged)
     source = _write_data_files(
         df,
         table,
@@ -2077,10 +1477,8 @@ def merge_upsert(
     return _rewrite_commit(
         spark, table, cur, state, "merge", hit,
         lambda d: d.join(keys, key_cols, "left_anti").select(*d.columns),
-        added=_stamp_cols(source, fields),
+        added=source,
         schema=merged,
-        fields=fields,
-        last_field_id=last_id,
     )
 
 
@@ -2096,15 +1494,15 @@ def rollback_to(table: str, version: int) -> int:
         raise LookupError(f"cannot roll back empty table {table}")
     _, target = _state_at(table, version)
     _, now = _state_at(table, cur)
+    added = [e for p, e in target["data"].items() if p not in now["data"]]
+    removed = [e for p, e in now["data"].items() if p not in target["data"]]
     return _commit(
         table, cur, "rollback",
         restores=version,
         schema=target["schema"],
-        fields=_fields_of(target),
-        last_field_id=target.get("last_field_id", 0),
-        evolved=bool(target.get("evolved")),
-        added_data=[e for p, e in target["data"].items() if p not in now["data"]],
-        removed_data=sorted(p for p in now["data"] if p not in target["data"]),
+        added_data=added,
+        removed_data=sorted(e["path"] for e in removed),
+        summary=_change_summary(added, removed),
     )
 
 
@@ -2117,33 +1515,19 @@ def _compact_commit(
     rows,
     stats_cols: tuple[str, ...],
     bloom_cols: tuple[str, ...] | None,
-    ndv_cols: tuple[str, ...] | None,
 ) -> int:
     """Rewrite the live files `entries` as rows(their rows) and commit it
-    as a "compact": the logical row set is unchanged, so changelog and
-    incremental scans skip it. Outputs carry the inputs' markers and
-    min/max stats, plus stats on `stats_cols`; bloom_cols/ndv_cols default
-    to the columns sketched in the rewritten entries, so a maintenance
-    rewrite preserves the table's filters unless the caller overrides
-    (pass () to drop them)."""
-    sketches = {
-        k: v for k, v in (("bloom_cols", bloom_cols), ("ndv_cols", ndv_cols))
-        if v is not None
-    }
-    added = _rewrite_files(
-        spark, table, cur + 1, state, entries, rows,
-        stats_cols=stats_cols, partition_by=(), **sketches,
+    as a "compact" (_rewrite_commit, so it records its summary): the
+    logical row set is unchanged, so changelog and incremental scans skip
+    it. Outputs carry the inputs' markers and min/max stats, plus stats on
+    `stats_cols`; bloom_cols defaults to the columns bloomed in the
+    rewritten entries, so a maintenance rewrite preserves the table's
+    filters unless the caller overrides (pass () to drop them)."""
+    write = {} if bloom_cols is None else {"bloom_cols": bloom_cols}
+    return _rewrite_commit(
+        spark, table, cur, state, "compact", entries, rows,
+        stats_cols=stats_cols, partition_by=(), **write,
     )
-    body = {
-        "schema": state["schema"],
-        "added_data": added,
-        "removed_data": sorted(e["path"] for e in entries),
-    }
-    if len(entries) == len(state["data"]):
-        chunks = _state_at(table, cur, expand=False)[1].get("chunks", {})
-        if chunks:
-            body["removed_manifests"] = sorted(chunks)
-    return _commit(table, cur, "compact", **body)
 
 
 def compact(
@@ -2152,7 +1536,6 @@ def compact(
     n_files: int = 1,
     stats_cols: tuple[str, ...] = (),
     bloom_cols: tuple[str, ...] | None = None,
-    ndv_cols: tuple[str, ...] | None = None,
 ) -> int:
     """Rewrite the live row set into n_files fresh files and retire the
     old data files in one atomic commit (_compact_commit). Logical rows
@@ -2163,7 +1546,7 @@ def compact(
     _, state = _state_at(table, cur)
     return _compact_commit(
         spark, table, cur, state, list(state["data"].values()),
-        lambda df: df.coalesce(n_files), stats_cols, bloom_cols, ndv_cols,
+        lambda df: df.coalesce(n_files), stats_cols, bloom_cols,
     )
 
 
@@ -2173,7 +1556,6 @@ def compact_binpack(
     target_bytes: int = 128 * 1024 * 1024,
     stats_cols: tuple[str, ...] = (),
     bloom_cols: tuple[str, ...] | None = None,
-    ndv_cols: tuple[str, ...] | None = None,
 ) -> int | None:
     """Iceberg's binpack rewrite strategy: ONLY data files below
     target_bytes are rewritten into ~target-sized packed files; files
@@ -2182,9 +1564,8 @@ def compact_binpack(
     loop a streaming sink needs: each micro-batch commit lands a few small
     files, and the backlog is folded periodically without rewriting the
     accumulated history. Returns the committed version, or None when
-    fewer than two small files exist (nothing to pack). bloom_cols/
-    ndv_cols default to the columns sketched in the small files
-    (_compact_commit)."""
+    fewer than two small files exist (nothing to pack). bloom_cols
+    defaults to the columns bloomed in the small files (_compact_commit)."""
     cur = current_version(table)
     if cur is None:
         raise LookupError(f"cannot compact empty table {table}")
@@ -2195,7 +1576,7 @@ def compact_binpack(
     n_files = max(1, -(-sum(e["bytes"] for e in small) // target_bytes))
     return _compact_commit(
         spark, table, cur, state, small,
-        lambda df: df.coalesce(n_files), stats_cols, bloom_cols, ndv_cols,
+        lambda df: df.coalesce(n_files), stats_cols, bloom_cols,
     )
 
 
@@ -2207,7 +1588,6 @@ def compact_sort(
     stats_cols: tuple[str, ...] | None = None,
     zorder: bool = False,
     bloom_cols: tuple[str, ...] | None = None,
-    ndv_cols: tuple[str, ...] | None = None,
 ) -> int:
     """Iceberg's sort / z-order rewrite strategy (`rewrite_data_files
     strategy => 'sort'` resp. `sort_order => zorder(a, b)`): rewrite ALL
@@ -2262,7 +1642,7 @@ def compact_sort(
 
     return _compact_commit(
         spark, table, cur, state, list(state["data"].values()), rows,
-        tuple(stats_cols or sort_cols), bloom_cols, ndv_cols,
+        tuple(stats_cols or sort_cols), bloom_cols,
     )
 
 
@@ -2390,21 +1770,10 @@ def remove_orphans(table: str, min_age_sec: float = 0.0) -> int:
     writers that wrote their files but lost the optimistic commit race or
     died before the log write. `min_age_sec` is the same age guard as
     Iceberg's default 3-day cutoff: files younger than it are skipped, so
-    an IN-FLIGHT writer's not-yet-committed files are never swept.
-    Unreferenced chunk manifests (mchunk-*.json in log/, pre-written by
-    writers that lost the commit race) are swept under the same guard."""
-    versions = list_versions(table)
+    an IN-FLIGHT writer's not-yet-committed files are never swept."""
     referenced: set[str] = set()
-    ref_chunks: set[str] = set()
-    for v in versions:
-        c = _read_commit(table, v)
-        for e in c.get("added_data", []):
-            if "manifest" in e:
-                ref_chunks.add(os.path.join(table, e["manifest"]))
-                for ent in _load_chunk_entries(table, e):
-                    referenced.add(ent["path"])
-            else:
-                referenced.add(e["path"])
+    for v in list_versions(table):
+        referenced |= {e["path"] for e in _read_commit(table, v).get("added_data", [])}
     # every rebase base still pins its files
     try:
         base_names = [
@@ -2428,20 +1797,6 @@ def remove_orphans(table: str, min_age_sec: float = 0.0) -> int:
                 continue
             os.unlink(p)
             removed += 1
-    # chunk manifests are written BEFORE the optimistic commit, so a
-    # writer that lost every retry (or died) leaves its mchunk files in
-    # log/ unreferenced — the same orphan class as its data files, swept
-    # under the same age guard (ref_chunks collected in the first pass)
-    log = _log_dir(table)
-    if os.path.isdir(log):
-        for name in os.listdir(log):
-            if not (name.startswith("mchunk-") and name.endswith(".json")):
-                continue
-            p = os.path.join(log, name)
-            if p in ref_chunks or now - os.path.getmtime(p) < min_age_sec:
-                continue
-            os.unlink(p)
-            removed += 1
     return removed
 
 
@@ -2451,14 +1806,16 @@ def remove_orphans(table: str, min_age_sec: float = 0.0) -> int:
 
 
 def _read_files(
-    spark: SparkSession, paths: list[str], schema: list[list[str]] | None = None
+    spark: SparkSession, paths: list[str], schema: list[list[str]] | None
 ) -> DataFrame:
-    """Scan parquet files. With `schema` ([[name, type]], a state's
-    schema) the read needs no footer: a mergeSchema read runs one Spark
-    job to infer the schema before any action."""
-    if schema:
-        return spark.read.schema(_ddl(schema)).parquet(*paths)
-    return spark.read.option("mergeSchema", "true").parquet(*paths)
+    """Scan parquet files under `schema` ([[name, type]], a state's
+    schema), by column name: the read needs no footer, so building the
+    frame runs no Spark job, and a file that lacks a column (written
+    before an append added it) reads it as NULL. No paths: an empty frame
+    of the schema."""
+    if not paths:
+        return _empty_df(spark, schema)
+    return spark.read.schema(_ddl(schema)).parquet(*paths)
 
 
 def _with_file(df: DataFrame) -> DataFrame:
@@ -2487,9 +1844,7 @@ def read_snapshot(
     """Read the table as of `version` (default: the newest). Planning is a
     log replay — no directory listing of the data prefix."""
     _, state = _state_at(table, version)
-    if not state["data"]:
-        return _empty_df(spark, _field_pairs(_fields_of(state)))
-    return _read_projected(spark, list(state["data"].values()), state)
+    return _read_files(spark, sorted(state["data"]), state["schema"])
 
 
 def read_partition(
@@ -2503,8 +1858,7 @@ def read_partition(
     recorded tuple set are kept — never prune blind), then apply the exact
     filter. This is the per-sink read path of a
     routed table: it is scan_where with an equality predicate per filter,
-    so planning is the two-level manifest walk and files that hold none
-    of the sink's rows are never opened."""
+    so files that hold none of the sink's rows are never opened."""
     return scan_where(
         spark, table, {k: ("=", v) for k, v in filters.items()}, version
     )
@@ -2524,23 +1878,20 @@ def incremental_append_scan(
     (operators/diff.diff_datasets), the same contract as Iceberg's
     incremental append scan."""
     to_version, chain = _chain_between(table, from_version, to_version)
-    entries: list[dict] = []
+    paths: list[str] = []
     for c in chain:
         op = c["operation"]
-        if op in ("compact", "evolve_schema"):
+        if op == "compact":
             continue
         if op != "append":
             raise ValueError(
                 f"commit v{c['version']} is {op!r}; incremental append scan "
                 "only spans append/compact commits"
             )
-        entries += _added_entries(table, c)
-    state = _state_at(table, to_version)[1]
-    if not entries:
-        return _empty_df(spark, _field_pairs(_fields_of(state)))
-    # rows appended before an in-range evolve_schema commit surface in the
+        paths += [e["path"] for e in _added_entries(table, c)]
+    # rows appended before an in-range schema change surface in the
     # TO-version's schema, same as Iceberg's incremental scan
-    return _read_projected(spark, entries, state)
+    return _read_files(spark, sorted(paths), _state_at(table, to_version)[1]["schema"])
 
 
 def changelog_scan(
@@ -2556,25 +1907,23 @@ def changelog_scan(
     (delete, update, merge, replace, overwrite, rollback) emits its net
     row diff: its added files' rows exceptAll its removed files' rows are
     inserts, the reverse are deletes, so rows a rewrite carried over
-    unchanged cancel. Compactions and schema evolution are logical no-ops.
-    Every row is read in the TO-version's field view, so the pieces align
-    by field id across an in-range evolve_schema commit. The output feeds
+    unchanged cancel. Compactions are logical no-ops. Every row is read
+    in the TO-version's schema, so the pieces align across an in-range
+    append that added a column. The output feeds
     aggregate.apply_retractable_delta so a downstream view refreshes from
     the delta without ever rescanning the base table."""
     to_version, chain = _chain_between(table, from_version, to_version)
-    to_state = _state_at(table, to_version)[1]
-    tf = _fields_of(to_state) if to_state.get("evolved") else None
+    schema = _state_at(table, to_version)[1]["schema"]
     pieces: list[DataFrame] = []
     for c in chain:
-        if c["operation"] in ("compact", "evolve_schema"):
+        if c["operation"] == "compact":
             continue
-        added = _read_projected(spark, _added_entries(table, c), to_state, fields=tf)
+        added = _read_files(
+            spark, sorted(e["path"] for e in _added_entries(table, c)), schema
+        )
         changes = [(added, "insert")]
         if c.get("removed_data"):
-            parent = _state_at(table, c["parent"])[1]["data"]
-            removed = _read_projected(
-                spark, [parent[p] for p in c["removed_data"]], to_state, fields=tf
-            )
+            removed = _read_files(spark, sorted(c["removed_data"]), schema)
             changes = [
                 (removed.exceptAll(added), "delete"),
                 (added.exceptAll(removed), "insert"),
@@ -2587,7 +1936,7 @@ def changelog_scan(
         ]
     if not pieces:
         return (
-            _empty_df(spark, to_state["schema"])
+            _empty_df(spark, schema)
             .withColumn("_change_type", F.lit(""))
             .withColumn("_commit_version", F.lit(0))
         )
@@ -2663,10 +2012,8 @@ def prune_files(
 ) -> tuple[list[str], int]:
     """Manifest-stats pruning: live data files whose [min,max] for `col`
     overlaps [lo,hi]; files without stats are kept (never prune blind).
-    Delegates to the two-level planner, so chunked commits skip whole
-    chunk manifests by their merged stats summaries (partition-spec
-    projection composes when present). Returns (paths_to_read,
-    n_files_skipped)."""
+    Delegates to plan_scan, so partition-spec projection composes when
+    present. Returns (paths_to_read, n_files_skipped)."""
     plan = plan_scan(table, {col: ("between", lo, hi)}, version)
     return plan["paths"], plan["n_files_skipped"]
 
@@ -2674,9 +2021,8 @@ def prune_files(
 def scan_between(
     spark: SparkSession, table: str, col: str, lo, hi, version: int | None = None
 ) -> DataFrame:
-    """Predicate scan that opens only stats-overlapping files (chunk
-    summaries first — see plan_scan), then applies the exact filter and
-    returns the live rows."""
+    """Predicate scan that opens only stats-overlapping files (plan_scan),
+    then applies the exact filter and returns the live rows."""
     return scan_where(spark, table, {col: ("between", lo, hi)}, version)
 
 
@@ -2692,12 +2038,13 @@ def expire_snapshots(
     Iceberg `expire_snapshots(older_than)` knob: commits younger than the
     cutoff are ALSO retained regardless of keep_last, so the two compose
     exactly like Iceberg's retain-last + older-than (keep_last is the
-    floor, age the ceiling). Physically deletes files referenced ONLY by
-    expired versions and the expired commits' chunk manifests, drops their
-    log entries, and persists a rebase state at every retained version
-    whose parent was expired, so replay stays O(retained commits). Time
-    travel to an expired version raises SnapshotExpired.
-    Returns {files_removed, versions_removed}."""
+    floor, age the ceiling). Persists a rebase state at every retained
+    version whose parent was expired, so replay stays O(retained
+    commits), then drops the expired log entries and physically deletes
+    files referenced ONLY by expired versions. Each step leaves the table
+    readable: a base is written to a temp file and renamed into place, so
+    a failed write leaves none. Time travel to an expired version raises
+    SnapshotExpired. Returns {files_removed, versions_removed}."""
     versions = list_versions(table)
     retained_set = set(versions[-keep_last:])
     if max_age_sec is not None:
@@ -2711,26 +2058,11 @@ def expire_snapshots(
     if not expired:
         return {"files_removed": 0, "versions_removed": 0}
     retained = sorted(retained_set)
-    # states computed while the log is still intact
+    # states and doomed files computed while the log is still intact
     states = {v: _state_at(table, v)[1] for v in retained}
-    keep_files: set[str] = set()
-    for st in states.values():
-        keep_files |= set(st["data"])
-
-    removed = 0
-    for v in expired:
-        c = _read_commit(table, v)
-        for e in _added_entries(table, c):
-            if e["path"] not in keep_files and os.path.exists(e["path"]):
-                os.unlink(e["path"])
-                removed += 1
-        for r in c.get("added_data", []):
-            # only the commit that wrote a chunk references it; the chunk's
-            # still-live files are flattened into the rebase base
-            if "manifest" in r:
-                mp = os.path.join(table, r["manifest"])
-                if os.path.exists(mp):
-                    os.unlink(mp)
+    doomed = {
+        e["path"] for v in expired for e in _added_entries(table, _read_commit(table, v))
+    }.difference(*(st["data"] for st in states.values()))
 
     # every retained version whose parent was expired persists its state;
     # by induction every retained version then replays within
@@ -2742,23 +2074,22 @@ def expire_snapshots(
             and parent not in retained_set
             and not os.path.exists(_base_path(table, v))
         ):
-            with open(_base_path(table, v), "w") as f:
-                snap = {
-                    "version": v,
-                    "data": list(states[v]["data"].values()),
-                    "schema": states[v]["schema"],
-                }
-                for k in ("fields", "last_field_id", "legacy_cols", "evolved"):
-                    if states[v].get(k):
-                        snap[k] = states[v][k]
-                json.dump(snap, f)
+            snap = {
+                "version": v,
+                "data": list(states[v]["data"].values()),
+                "schema": states[v]["schema"],
+            }
+            os.replace(_write_tmp(table, snap), _base_path(table, v))
     for n in os.listdir(_log_dir(table)):
         if n.startswith("_base_v") and int(n[7:19]) not in retained_set:
             os.unlink(os.path.join(_log_dir(table), n))
-    n_versions = 0
     for v in expired:
         os.unlink(_commit_path(table, v))
-        n_versions += 1
+    removed = 0
+    for p in sorted(doomed):
+        if os.path.exists(p):
+            os.unlink(p)
+            removed += 1
     # drop now-empty commit data dirs (best-effort tidy, not correctness)
     root = os.path.join(table, "data")
     if os.path.isdir(root):
@@ -2768,4 +2099,4 @@ def expire_snapshots(
                 f.endswith(".parquet") for f in os.listdir(full)
             ):
                 shutil.rmtree(full)
-    return {"files_removed": removed, "versions_removed": n_versions}
+    return {"files_removed": removed, "versions_removed": len(expired)}

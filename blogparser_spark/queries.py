@@ -8347,73 +8347,6 @@ def tablelog_hidden_partition_scan(
 
 
 @_q(
-    "tablelog_schema_evolution_counts",
-    """
-    WITH final_rows AS (
-      SELECT event_id AS event_key, user_id, event_type AS etype,
-        CASE WHEN event_id % 2 = 1 THEN 's1' END AS src
-      FROM events
-      WHERE NOT (event_id % 2 = 0 AND user_id % 7 = 0)
-        AND user_id % 5 <> 0
-    )
-    SELECT etype, count(*)::BIGINT AS cnt,
-      min(event_key) AS min_key, max(event_key) AS max_key,
-      count(src)::BIGINT AS n_src
-    FROM final_rows GROUP BY etype
-    """,
-)
-def tablelog_schema_evolution_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Field-id schema evolution on the snapshot-log format
-    (tablelog.evolve_schema — the Iceberg-spec ALTER TABLE contract): the
-    even event_id slice is appended as (eid int, user_id, event_type) and
-    a delete of user_id % 7 == 0 keyed on `eid` rewrites its files; ONE
-    metadata-only commit then renames eid->event_key and event_type->etype,
-    widens eid int->bigint, and adds a `src` string column — no data file
-    is rewritten. The odd slice is appended under the NEW schema
-    (src='s1'), and a post-evolve delete of user_id % 5 == 0 keyed on
-    `event_key` applies across BOTH generations of files. The final read
-    proves every evolution rule at once: old files' `eid` column resolves
-    by field id to `event_key` (rename is metadata-only), its int values
-    widen to bigint at read, `src` null-fills the pre-evolve files (n_src
-    counts only the new slice), and files rewritten before the evolution
-    resolve through the id translation like any other. The oracle
-    replays the slice/delete arithmetic on the base table. No reference
-    analog (the Go CLI has no storage layer, sample/main.go:32-47); built
-    from the public Iceberg spec's field-id evolution rules."""
-    from blogparser_spark.operators import tablelog as tl
-
-    t = _tablelog_tmp("tablelog_evo_") + "/t"
-    ev = _events(spark, sf_dir)
-    old = ev.filter(F.col("event_id") % 2 == 0).select(
-        F.col("event_id").cast("int").alias("eid"), "user_id", "event_type"
-    )
-    tl.append(spark, t, old)  # v1: pre-evolve generation
-    tl.delete_where(spark, t, F.col("user_id") % 7 == 0, key_cols=["eid"])  # v2
-    tl.evolve_schema(  # v3: metadata-only
-        t,
-        rename={"eid": "event_key", "event_type": "etype"},
-        widen={"eid": "bigint"},
-        add=[("src", "string")],
-    )
-    new = ev.filter(F.col("event_id") % 2 == 1).select(
-        F.col("event_id").alias("event_key"),
-        "user_id",
-        F.col("event_type").alias("etype"),
-        F.lit("s1").alias("src"),
-    )
-    tl.append(spark, t, new)  # v4: post-evolve generation
-    tl.delete_where(  # v5: spans both generations
-        spark, t, F.col("user_id") % 5 == 0, key_cols=["event_key"]
-    )
-    return tl.read_snapshot(spark, t).groupBy("etype").agg(
-        F.count("*").cast("bigint").alias("cnt"),
-        F.min("event_key").alias("min_key"),
-        F.max("event_key").alias("max_key"),
-        F.count("src").cast("bigint").alias("n_src"),
-    )
-
-
-@_q(
     "tablelog_update_where_counts",
     """
     SELECT event_type, count(*)::BIGINT AS cnt,
@@ -9305,196 +9238,3 @@ def tablelog_routed_conv_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("parse_status") == "ok", F.octet_length("body")
         ).alias("body_bytes"),
     ).orderBy("turn_idx")
-
-
-def _ndv_oracle_branch(col: str) -> str:
-    """KMV replay for one column: distinct 64-bit md5 hashes, k smallest,
-    (k-1)/(kth/2^64) estimate — exact when fewer than k distinct."""
-    return f"""
-      SELECT '{col}' AS col, count(*)::BIGINT AS n_mins,
-        CASE WHEN count(*) < 64 THEN count(*)::DOUBLE
-             ELSE floor(63 / (max(h) / CAST(18446744073709551616 AS DOUBLE))
-                        * 1e6 + 0.5) / 1e6
-        END AS ndv_est,
-        (SELECT count(DISTINCT {col}) FROM events)::BIGINT AS exact_ndv
-      FROM (
-        SELECT h FROM (
-          SELECT DISTINCT ('0x' || substr(md5({col}::VARCHAR), 1, 16))::UBIGINT AS h
-          FROM events WHERE {col} IS NOT NULL
-        ) ORDER BY h LIMIT 64
-      )"""
-
-
-@_q(
-    "tablelog_column_ndv",
-    f"""
-    SELECT * FROM ({_ndv_oracle_branch("event_type")}
-    UNION ALL {_ndv_oracle_branch("user_id")})
-    ORDER BY col
-    """,
-)
-def tablelog_column_ndv(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Manifest NDV column statistics (tablelog.column_ndv — Iceberg's
-    puffin theta-sketch distinct counts as KMV min-hash sketches): append
-    records the k=64 smallest 64-bit md5 hashes per file per column, and
-    the merged table-level estimate — exact when true NDV < k
-    (event_type), the (k-1)/kth estimator otherwise (user_id) — comes
-    from manifests alone, no data file opened. This is the number a join
-    planner reads to pick broadcast vs shuffle sides. The oracle replays
-    the identical hash/k-min/estimator arithmetic in DuckDB; exact_ndv
-    rides along to show the estimate's quality."""
-    from blogparser_spark.operators import tablelog as tl
-
-    t = _tablelog_tmp("tablelog_ndv_") + "/t"
-    ev = _events(spark, sf_dir).select("event_id", "user_id", "event_type")
-    tl.append(
-        spark, t, ev.repartition(4), ndv_cols=("user_id", "event_type")
-    )
-    exact = ev.agg(
-        F.countDistinct("event_type").cast("bigint").alias("et"),
-        F.countDistinct("user_id").cast("bigint").alias("uid"),
-    ).collect()[0]
-    rows = []
-    for col, ex in (("event_type", exact["et"]), ("user_id", exact["uid"])):
-        nd = tl.column_ndv(t, col)
-        rows.append((col, nd["n_mins"], nd["ndv_est"], ex))
-    return spark.createDataFrame(
-        rows, "col string, n_mins bigint, ndv_est double, exact_ndv bigint"
-    ).orderBy("col")
-
-
-@_q(
-    "tablelog_ndv_join_estimate",
-    """
-    WITH ha AS (
-      SELECT DISTINCT ('0x' || substr(md5(user_id::VARCHAR), 1, 16))::UBIGINT AS h
-      FROM events WHERE event_id % 2 = 0
-    ), hb AS (
-      SELECT DISTINCT ('0x' || substr(md5(user_id::VARCHAR), 1, 16))::UBIGINT AS h
-      FROM events WHERE event_id % 3 = 0
-    ), ma AS MATERIALIZED (SELECT h FROM ha ORDER BY h LIMIT 64),
-    mb AS MATERIALIZED (SELECT h FROM hb ORDER BY h LIMIT 64),
-    u AS MATERIALIZED (
-      SELECT h FROM (SELECT h FROM ma UNION SELECT h FROM mb)
-      ORDER BY h LIMIT 64
-    ), s AS (
-      SELECT count(*)::BIGINT AS n_union,
-        sum(CASE WHEN h IN (SELECT h FROM ma)
-                  AND h IN (SELECT h FROM mb) THEN 1 ELSE 0 END)::BIGINT
-          AS shared,
-        max(h) AS kth
-      FROM u
-    ), est AS (
-      SELECT n_union,
-        floor(shared::DOUBLE / n_union::DOUBLE * 1e6 + 0.5) / 1e6 AS jaccard,
-        CASE WHEN n_union < 64 THEN n_union::DOUBLE
-             ELSE floor(63 / (kth / CAST(18446744073709551616 AS DOUBLE))
-                        * 1e6 + 0.5) / 1e6
-        END AS union_est
-      FROM s
-    )
-    SELECT jaccard, union_est,
-      floor(jaccard * union_est * 1e6 + 0.5) / 1e6 AS inter_est,
-      n_union AS n_union_mins,
-      (SELECT count(DISTINCT a.user_id) FROM events a
-       WHERE a.event_id % 2 = 0
-         AND a.user_id IN (SELECT user_id FROM events WHERE event_id % 3 = 0)
-      )::BIGINT AS exact_inter
-    FROM est
-    """,
-)
-def tablelog_ndv_join_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Equi-join cardinality estimate between two snapshot-log tables
-    from MANIFESTS alone (tablelog.column_ndv_overlap; Beyer et al.
-    SIGMOD 2007 KMV set operations): two event slices land in separate
-    tables with ndv_cols sketches on user_id, and the planner-facing
-    numbers — Jaccard over the union's k-minimum hashes, union NDV,
-    intersection estimate — come from the committed sketches without
-    opening a data file on either side. exact_inter rides along to show
-    the estimate's quality; the oracle replays the identical hash/k-min/
-    estimator arithmetic."""
-    from blogparser_spark.operators import tablelog as tl
-
-    ev = _events(spark, sf_dir).select("event_id", "user_id")
-    ta = _tablelog_tmp("tablelog_ova_") + "/t"
-    tb = _tablelog_tmp("tablelog_ovb_") + "/t"
-    tl.append(spark, ta, ev.filter(F.col("event_id") % 2 == 0), ndv_cols=("user_id",))
-    tl.append(spark, tb, ev.filter(F.col("event_id") % 3 == 0), ndv_cols=("user_id",))
-    ov = tl.column_ndv_overlap(ta, tb, "user_id")
-    exact = (
-        ev.filter(F.col("event_id") % 2 == 0)
-        .select("user_id")
-        .intersect(ev.filter(F.col("event_id") % 3 == 0).select("user_id"))
-        .count()
-    )
-    return spark.createDataFrame(
-        [
-            (
-                ov["jaccard"],
-                ov["union_est"],
-                ov["inter_est"],
-                ov["n_union_mins"],
-                exact,
-            )
-        ],
-        "jaccard double, union_est double, inter_est double,"
-        " n_union_mins bigint, exact_inter bigint",
-    )
-
-
-@_q(
-    "tablelog_manifest_chunk_scan",
-    """
-    WITH types AS MATERIALIZED (
-      SELECT DISTINCT event_type FROM events
-    ), n AS (
-      SELECT count(*)::BIGINT AS n_types FROM types
-    )
-    SELECT
-      CAST(ceil(n_types / 2.0) AS BIGINT) AS n_chunks_total,
-      1::BIGINT AS n_chunks_opened,
-      CAST(ceil(n_types / 2.0) AS BIGINT) - 1 AS n_chunks_skipped,
-      (SELECT count(*) FROM events
-        WHERE event_type = (SELECT min(event_type) FROM types)
-      )::BIGINT AS matching_rows
-    FROM n
-    """,
-)
-def tablelog_manifest_chunk_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Two-level manifest planning (tablelog.plan_scan — Iceberg's
-    manifest-list layer): a chunked append (one file per event_type,
-    chunk size 2, chunks sorted by partition value) yields a DETERMINISTIC
-    chunk layout, so the oracle predicts the planner's behavior from SQL
-    alone: ceil(n_types/2) chunks total, a point predicate on the first
-    type opens exactly ONE chunk and skips the rest whole — their file
-    entries are never read — and the pruned scan returns exactly that
-    type's rows. This is the 10^7-file planning contract: driver cost for
-    a selective predicate is O(chunks touched), not O(live files)."""
-    from blogparser_spark.operators import tablelog as tl
-
-    t = _tablelog_tmp("tablelog_chunk_") + "/t"
-    ev = _events(spark, sf_dir).select("event_id", "user_id", "event_type")
-    tl.append(
-        spark,
-        t,
-        ev.repartition("event_type"),
-        partition_spec=("event_type",),
-        manifest_chunk_files=2,
-    )
-    target = ev.agg(F.min("event_type")).collect()[0][0]
-    plan = tl.plan_scan(t, {"event_type": ("=", target)})
-    matching = tl.scan_where(
-        spark, t, {"event_type": ("=", target)}
-    ).count()
-    return spark.createDataFrame(
-        [
-            (
-                plan["n_chunks_total"],
-                plan["n_chunks_opened"],
-                plan["n_chunks_skipped"],
-                matching,
-            )
-        ],
-        "n_chunks_total bigint, n_chunks_opened bigint,"
-        " n_chunks_skipped bigint, matching_rows bigint",
-    )

@@ -238,6 +238,9 @@ def test_commit_file_is_valid_json_with_manifest_stats(spark, tmp_path):
     assert entry["rows"] == 10
     assert entry["stats"]["event_id"] == [0, 9]
     assert entry["seq"] == 1
+    # one flat entry keyed by column name
+    assert set(entry) == {"path", "rows", "bytes", "seq", "stats"}
+    assert not {"fields", "last_field_id"} & set(c)
 
 
 @contextlib.contextmanager
@@ -518,6 +521,83 @@ def test_append_commit_summary_exact(spark, tmp_path, monkeypatch):
     assert s3["added_data_files"] == len(c3["added_data"]) and s3["rewrite_s"] >= 0
 
 
+def test_compact_overwrite_and_rollback_record_summaries(spark, tmp_path):
+    """Compaction, overwrite and rollback commits record what they added
+    and removed, like every other commit: compaction rewrites every file
+    it removes, overwrite and rollback rewrite none."""
+    t = str(tmp_path / "t")
+
+    def added_size(v):
+        return sum(os.path.getsize(e["path"]) for e in tl._read_commit(t, v)["added_data"])
+
+    def counts(v):
+        s = tl.commit_summary(t, v)
+        assert s["added_files_size"] == added_size(v)
+        return tuple(s[k] for k in (
+            "added_data_files", "added_records",
+            "removed_data_files", "removed_records", "rewritten_files",
+        ))
+
+    tl.append(spark, t, spark.range(0, 30).repartition(3))  # v1: 3 files
+    v2 = tl.append(spark, t, spark.range(30, 40).coalesce(1))
+    v3 = tl.compact(spark, t, n_files=1)
+    assert counts(v3) == (1, 40, 4, 40, 4)
+    assert tl.commit_summary(t, v3)["rewrite_s"] >= 0
+    v4 = tl.overwrite(spark, t, spark.range(0, 7).coalesce(1))
+    assert counts(v4) == (1, 7, 1, 40, 0)
+    v5 = tl.rollback_to(t, v2)
+    assert counts(v5) == (4, 40, 1, 7, 0)
+    assert tl.read_snapshot(spark, t).count() == 40
+
+
+def test_plan_scan_reports_why_files_were_pruned(spark, tmp_path):
+    """plan_scan returns a scan report: the files it considered, and each
+    pruned file counted under the first check that ruled it out —
+    partition tuples, then min/max stats, then blooms."""
+    t = str(tmp_path / "t")
+    for i in range(3):  # one file per sink; k is even, s{i} holds [20i, 20i+18]
+        df = spark.range(0, 10).selectExpr(f"id * 2 + {20 * i} AS k", f"'s{i}' AS sink")
+        tl.append(spark, t, df, partition_by=("sink",), stats_cols=("k",), bloom_cols=("k",))
+    assert len(tl._state_at(t)[1]["data"]) == 3
+
+    def report(preds):
+        p = tl.plan_scan(t, preds)
+        pruned = (p["pruned_by_partition"], p["pruned_by_stats"], p["pruned_by_bloom"])
+        assert p["n_files_considered"] == 3 and p["plan_ms"] >= 0
+        assert p["n_files_skipped"] == sum(pruned) == 3 - len(p["paths"])
+        return (*pruned, len(p["paths"]))
+
+    assert report({"k": ("=", 21)}) == (0, 2, 1, 0)  # in s1's range, not in its bloom
+    assert report({"k": ("between", 21, 25)}) == (0, 2, 0, 1)
+    assert report({"sink": ("=", "s1")}) == (2, 0, 0, 1)
+    assert report({"sink": ("=", "s0"), "k": ("=", 21)}) == (2, 1, 0, 0)
+    assert report({}) == (0, 0, 0, 3)
+
+
+def test_failed_expiry_base_write_leaves_table_readable(spark, tmp_path, monkeypatch):
+    """Expiry writes each rebase base to a temp file and renames it into
+    place: a write that fails part-way leaves no base and no temp file,
+    the table still reads its pre-expiry rows, and a later expiry
+    completes."""
+    t = str(tmp_path / "t")
+    for lo in (0, 10, 20):
+        tl.append(spark, t, _batch(spark, lo, lo + 10))
+
+    def torn_dump(obj, f, **kw):
+        f.write(json.dumps(obj)[:40])
+        raise OSError("disk full")
+
+    monkeypatch.setattr(tl.json, "dump", torn_dump)
+    with pytest.raises(OSError, match="disk full"):
+        tl.expire_snapshots(t, keep_last=2)
+    monkeypatch.undo()
+    assert _ids(tl.read_snapshot(spark, t)) == list(range(30))
+    assert not os.path.exists(tl._base_path(t, 2))
+    assert not [n for n in os.listdir(tl._log_dir(t)) if n.startswith(".tmp-")]
+    assert tl.expire_snapshots(t, keep_last=2)["versions_removed"] == 1
+    assert _ids(tl.read_snapshot(spark, t)) == list(range(30))
+    assert _ids(tl.read_snapshot(spark, t, version=2)) == list(range(20))
+
 @settings(max_examples=40, deadline=None)
 @given(
     values=st.one_of(
@@ -529,33 +609,31 @@ def test_append_commit_summary_exact(spark, tmp_path, monkeypatch):
     )
 )
 def test_col_sketches_match_whole_column_builders(values, tmp_path_factory):
-    """Deduplicating each batch before hashing leaves the bloom and the
-    KMV sketch bit-identical to hashing every value."""
+    """Deduplicating each batch before hashing leaves the bloom
+    bit-identical to hashing every value."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
     typ = pa.int64() if any(isinstance(v, int) for v in values) else pa.string()
     path = str(tmp_path_factory.mktemp("sk") / "f.parquet")
     pq.write_table(pa.table({"c": pa.array(values, type=typ)}), path, row_group_size=7)
-    bits, mins = tl._col_sketches(pq.ParquetFile(path), "c", True, True)
+    bits = tl._col_sketches(pq.ParquetFile(path), "c")
     assert bits == tl._bloom_build(values, tl._bloom_bits_for(len(values)))
-    assert mins == tl._kmv_mins(values)
 
 
-def test_bloom_sized_by_rows_and_folds_exactly(tmp_path):
+def test_bloom_sized_by_rows(tmp_path):
     """A file's bloom grows with its row count (a few sink-sorted files
-    per commit hold many conversations each), and a larger filter folds
-    exactly onto a smaller one, so chunk summaries can OR mixed sizes."""
+    per commit hold many conversations each), which keeps its false
+    positive rate far below a fixed-size filter's."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
     values = [f"conv{i % 700}" for i in range(5000)]
     path = str(tmp_path / "f.parquet")
     pq.write_table(pa.table({"c": values}), path)
-    bits, _ = tl._col_sketches(pq.ParquetFile(path), "c", True, False)
+    bits = tl._col_sketches(pq.ParquetFile(path), "c")
     assert len(bits) * 4 == tl._bloom_bits_for(5000) == 8192
     assert bits == tl._bloom_build(values, 8192)
-    assert tl._bloom_or([bits, tl._bloom_build([])]) == tl._bloom_build(values)
     absent = [("=", f"other{i}") for i in range(1000)]
     fp_sized = sum(tl._bloom_match(bits, p) for p in absent)
     fp_fixed = sum(tl._bloom_match(tl._bloom_build(values), p) for p in absent)
@@ -892,165 +970,6 @@ def test_expiry_writes_base_at_every_chain_break(spark, tmp_path):
 
 
 # ---------------------------------------------------------------------------
-# schema evolution (field IDs)
-# ---------------------------------------------------------------------------
-
-
-def _evo_base(spark, tmp_path):
-    t = str(tmp_path / "t")
-    tl.append(
-        spark,
-        t,
-        spark.range(0, 5).selectExpr(
-            "cast(id as int) AS k", "concat('a', id) AS v",
-            "cast(id * 10 as int) AS n",
-        ),
-    )
-    return t
-
-
-def test_evolve_rename_widen_add_projects_by_field_id(spark, tmp_path):
-    """Rename is metadata-only (old files keep the old column name; the
-    read resolves by field id), widen casts at read time, add null-fills
-    older files — no data file is rewritten (Iceberg spec schema
-    evolution)."""
-    t = _evo_base(spark, tmp_path)
-    files_before = sorted(tl._state_at(t)[1]["data"])
-    tl.evolve_schema(
-        t, rename={"v": "label"}, widen={"n": "bigint"}, add=[("ch", "string")]
-    )
-    assert sorted(tl._state_at(t)[1]["data"]) == files_before  # metadata only
-    df = tl.read_snapshot(spark, t)
-    assert df.columns == ["k", "label", "n", "ch"]
-    assert dict(df.dtypes)["n"] == "bigint"
-    assert df.filter(F.col("ch").isNull()).count() == 5
-    assert [r.label for r in df.orderBy("k").collect()] == [
-        f"a{i}" for i in range(5)
-    ]
-    # time travel still reads the PRE-evolve schema
-    old = tl.read_snapshot(spark, t, version=1)
-    assert old.columns == ["k", "v", "n"] and dict(old.dtypes)["n"] == "int"
-    # fields accessor: ids stable across the rename/widen, fresh id for add
-    assert tl.table_fields(t) == [
-        [1, "k", "int"], [2, "label", "string"],
-        [3, "n", "bigint"], [4, "ch", "string"],
-    ]
-
-
-def test_evolve_drop_then_readd_never_resurrects(spark, tmp_path):
-    """A re-added name takes a FRESH field id, so old files' data for the
-    dropped column stays invisible forever (Iceberg's id-based rule)."""
-    t = _evo_base(spark, tmp_path)
-    tl.evolve_schema(t, drop=("v",))
-    assert tl.read_snapshot(spark, t).columns == ["k", "n"]
-    tl.evolve_schema(t, add=[("v", "string")])
-    df = tl.read_snapshot(spark, t)
-    assert df.filter(F.col("v").isNotNull()).count() == 0
-    ids = [i for i, n, _t in tl.table_fields(t) if n == "v"]
-    assert ids == [4]  # last_field_id was 3; drop never lowers it
-
-
-def test_evolve_deletes_translate_key_columns(spark, tmp_path):
-    """Files a delete rewrote before a rename read through the field id
-    like any other, and a delete after it keys on the current name."""
-    t = _evo_base(spark, tmp_path)
-    tl.delete_where(spark, t, F.col("k") == 2, ["k"])
-    tl.evolve_schema(t, rename={"k": "key"}, widen={"k": "bigint"})
-    df = tl.read_snapshot(spark, t)
-    assert df.columns == ["key", "v", "n"]
-    assert sorted(r.key for r in df.collect()) == [0, 1, 3, 4]
-    # post-evolve delete on the new name composes with pre-evolve files
-    tl.delete_where(spark, t, F.col("key") == 0, ["key"])
-    assert sorted(r.key for r in tl.read_snapshot(spark, t).collect()) == [1, 3, 4]
-    # no delete file references the key column, so dropping it is safe
-    tl.evolve_schema(t, drop=("key",))
-    df = tl.read_snapshot(spark, t)
-    assert df.columns == ["v", "n"] and sorted(r.n for r in df.collect()) == [10, 30, 40]
-
-
-def test_evolve_prune_and_scan_translate_stats(spark, tmp_path):
-    """Footer stats and hidden-partition specs are keyed by write-time
-    names; pruning translates the predicate's current name per file, and
-    files older than a column are never pruned blind."""
-    t = str(tmp_path / "t")
-    tl.append(
-        spark, t,
-        spark.range(0, 100).selectExpr("cast(id as int) AS a", "id % 7 AS g"),
-        stats_cols=("a",),
-    )
-    tl.evolve_schema(t, rename={"a": "alpha"})
-    tl.append(
-        spark, t,
-        spark.range(100, 200).selectExpr("cast(id as int) AS alpha", "id % 7 AS g"),
-        stats_cols=("alpha",),
-    )
-    keep, skipped = tl.prune_files_where(t, {"alpha": ("between", 150, 160)})
-    assert skipped >= 1  # the pre-rename file pruned via id translation
-    got = tl.scan_where(spark, t, {"alpha": ("between", 150, 160)})
-    assert got.count() == 11 and "alpha" in got.columns
-    # a column added AFTER the first file exists: old file kept (no stats)
-    tl.evolve_schema(t, add=[("z", "int")])
-    keep2, _ = tl.prune_files_where(t, {"z": ("=", 1)})
-    assert set(keep) <= set(keep2)
-
-
-def test_evolve_incremental_and_changelog_project_to_target(spark, tmp_path):
-    """Incremental and CDC scans spanning an evolve commit surface every
-    row in the TO-version's field view; the evolve itself is a row-level
-    no-op."""
-    t = _evo_base(spark, tmp_path)
-    tl.evolve_schema(t, rename={"v": "label"}, widen={"n": "bigint"})
-    tl.append(
-        spark, t,
-        spark.createDataFrame([(9, "b9", 90)], "k int, label string, n bigint"),
-    )
-    inc = tl.incremental_append_scan(spark, t, from_version=1)
-    assert inc.columns == ["k", "label", "n"] and inc.count() == 1
-    cl = tl.changelog_scan(spark, t, from_version=0)
-    assert cl.filter("_change_type = 'insert'").count() == 6
-    assert "label" in cl.columns
-    # pre-image deletes across the evolve read in the target field view
-    tl.delete_where(spark, t, F.col("k") == 1, ["k"])
-    cl2 = tl.changelog_scan(spark, t, from_version=0)
-    gone = cl2.filter("_change_type = 'delete'").collect()
-    assert [r.k for r in gone] == [1] and gone[0].label == "a1"
-
-
-def test_evolve_compact_and_expiry_preserve_fields(spark, tmp_path):
-    """compact rewrites into the CURRENT schema; expiry's rebase base
-    persists fields/evolved so replay after truncation stays correct."""
-    t = _evo_base(spark, tmp_path)
-    tl.evolve_schema(t, rename={"v": "label"}, add=[("ch", "string")])
-    tl.append(
-        spark, t,
-        spark.createDataFrame(
-            [(9, "b9", 90, "x")], "k int, label string, n int, ch string"
-        ),
-    )
-    tl.compact(spark, t)
-    tl.expire_snapshots(t, keep_last=1)
-    df = tl.read_snapshot(spark, t)
-    assert df.columns == ["k", "label", "n", "ch"] and df.count() == 6
-    assert tl.table_fields(t)[1] == [2, "label", "string"]
-
-
-def test_evolve_validation(spark, tmp_path):
-    t = _evo_base(spark, tmp_path)
-    with pytest.raises(ValueError, match="lossless"):
-        tl.evolve_schema(t, widen={"v": "int"})
-    with pytest.raises(ValueError, match="unknown column"):
-        tl.evolve_schema(t, rename={"nope": "x"})
-    with pytest.raises(ValueError, match="already exists"):
-        tl.evolve_schema(t, add=[("v", "string")])
-    with pytest.raises(ValueError, match="collides"):
-        tl.evolve_schema(t, rename={"v": "n"})
-    with pytest.raises(ValueError, match="renamed and dropped"):
-        tl.evolve_schema(t, rename={"v": "x"}, drop=("v",))
-    with pytest.raises(ValueError, match="every column"):
-        tl.evolve_schema(t, drop=("k", "v", "n"))
-
-
-# ---------------------------------------------------------------------------
 # copy-on-write UPDATE
 # ---------------------------------------------------------------------------
 
@@ -1108,16 +1027,6 @@ def test_update_noop_and_validation(spark, tmp_path):
         tl.update_where(spark, t, F.col("k") == 0, {"nope": F.lit(1)})
 
 
-def test_update_across_schema_evolution(spark, tmp_path):
-    """Updates after a rename/add target current names; the rewrite lands
-    in the CURRENT field schema so old files' id-resolution still holds."""
-    t = str(tmp_path / "t")
-    tl.append(spark, t, spark.range(0, 10).selectExpr("cast(id as int) AS k", "id * 2 AS v"))
-    tl.evolve_schema(t, rename={"v": "val"}, add=[("tag", "string")])
-    tl.update_where(spark, t, F.col("k") == 0, {"tag": F.lit("zero"), "val": F.lit(1)})
-    rows = {r.k: (r.val, r.tag) for r in tl.read_snapshot(spark, t).collect()}
-    assert rows[0] == (1, "zero") and rows[5] == (10, None)
-    assert tl.table_fields(t)[0] == [1, "k", "int"]
 
 
 # ---------------------------------------------------------------------------
@@ -1475,75 +1384,21 @@ def test_bloom_tolerates_nulls_and_still_skips(spark, tmp_path):
     assert got == [7]
 
 
-def test_column_ndv_merge_is_exact_and_layout_independent(spark, tmp_path):
-    """Per-file KMV sketches merge to the exact global k-minimum set, so
-    the table-level estimate is identical across file layouts; NDV below
-    k is exact, the estimator is within its expected error above k, and
-    unsketchable (float) columns record nothing."""
-    import hashlib
-
-    df = spark.range(0, 2000).selectExpr(
-        "id % 37 AS few", "id AS many", "cast(id AS double) AS fl"
-    )
-    t4 = str(tmp_path / "n4")
-    t1 = str(tmp_path / "n1")
-    tl.append(spark, t4, df.repartition(4), ndv_cols=("few", "many", "fl"))
-    tl.append(spark, t1, df.coalesce(1), ndv_cols=("few", "many", "fl"))
-    for t in (t4, t1):
-        assert tl.column_ndv(t, "few")["ndv_est"] == 37.0   # exact below k
-        assert tl.column_ndv(t, "fl")["n_files_sketched"] == 0
-    m4, m1 = tl.column_ndv(t4, "many"), tl.column_ndv(t1, "many")
-    assert m4["ndv_est"] == m1["ndv_est"]  # layout-independent merge
-    hs = sorted(
-        {int(hashlib.md5(str(v).encode()).hexdigest()[:16], 16) for v in range(2000)}
-    )[:64]
-    assert m4["ndv_est"] == tl._q6(63 / (hs[-1] / 2.0**64))  # exact twin
-    assert 1000 < m4["ndv_est"] < 4000  # sane for true NDV 2000 at k=64
 
 
-def test_column_ndv_overlap_estimates_join_cardinality(spark, tmp_path):
-    """KMV set operations across two tables: Jaccard/union/intersection
-    estimates from manifests match the pure-Python twin exactly and land
-    near the true overlap; disjoint tables estimate ~zero intersection."""
-    import hashlib
-
-    ta, tb, tc = (str(tmp_path / x) for x in ("a", "b", "c"))
-    tl.append(spark, ta, spark.range(0, 1200).selectExpr("id AS k"), ndv_cols=("k",))
-    tl.append(spark, tb, spark.range(600, 1800).selectExpr("id AS k"), ndv_cols=("k",))
-    tl.append(spark, tc, spark.range(5000, 6200).selectExpr("id AS k"), ndv_cols=("k",))
-    ov = tl.column_ndv_overlap(ta, tb, "k")
-
-    def mins(rng):
-        return sorted(
-            {int(hashlib.md5(str(v).encode()).hexdigest()[:16], 16) for v in rng}
-        )[:64]
-
-    sa, sb = set(mins(range(0, 1200))), set(mins(range(600, 1800)))
-    u = sorted(sa | sb)[:64]
-    j = tl._q6(sum(1 for h in u if h in sa and h in sb) / len(u))
-    ue = tl._q6(63 / (u[-1] / 2.0**64))
-    assert ov["jaccard"] == j and ov["union_est"] == ue
-    assert ov["inter_est"] == tl._q6(j * ue)
-    assert 250 < ov["inter_est"] < 1100  # true intersection is 600
-    dis = tl.column_ndv_overlap(ta, tc, "k")
-    assert dis["jaccard"] == 0.0 and dis["inter_est"] == 0.0
 
 
 def test_compaction_preserves_manifest_sketches_by_default(spark, tmp_path):
-    """A maintenance rewrite must not silently drop the table's blooms and
-    KMV sketches: compact / compact_binpack / compact_sort default
-    bloom_cols/ndv_cols from the pre-rewrite manifest entries, and an
-    explicit () opt-out drops them."""
+    """A maintenance rewrite must not silently drop the table's blooms:
+    compact / compact_binpack / compact_sort default bloom_cols from the
+    pre-rewrite manifest entries, and an explicit () opt-out drops them."""
     df = spark.range(0, 400).selectExpr("id AS k", "id % 7 AS v")
 
     t = str(tmp_path / "keep")
-    tl.append(spark, t, df.repartition(4), stats_cols=("k",),
-              bloom_cols=("k",), ndv_cols=("v",))
-    before = tl.column_ndv(t, "v")["ndv_est"]
+    tl.append(spark, t, df.repartition(4), stats_cols=("k",), bloom_cols=("k",))
     tl.compact(spark, t, n_files=2)
     _, state = tl._state_at(t)
     assert all("k" in e.get("bloom", {}) for e in state["data"].values())
-    assert tl.column_ndv(t, "v")["ndv_est"] == before  # exact KMV merge
     # bloom still prunes after the rewrite
     kept, skipped = tl.prune_files_where(t, {"k": ("=", 123456)})
     assert kept == [] and skipped == 2
@@ -1551,239 +1406,18 @@ def test_compaction_preserves_manifest_sketches_by_default(spark, tmp_path):
     tl.compact_sort(spark, t, sort_cols=("k",), n_files=2)
     _, state = tl._state_at(t)
     assert all("k" in e.get("bloom", {}) for e in state["data"].values())
-    assert tl.column_ndv(t, "v")["ndv_est"] == before
 
     tb = str(tmp_path / "binpack")
     for lo in (0, 200):
         tl.append(spark, tb,
                   spark.range(lo, lo + 200).selectExpr("id AS k", "id % 7 AS v"),
-                  bloom_cols=("k",), ndv_cols=("v",))
+                  bloom_cols=("k",))
     assert tl.compact_binpack(spark, tb, target_bytes=64 * 1024 * 1024)
     _, state = tl._state_at(tb)
     assert all("k" in e.get("bloom", {}) for e in state["data"].values())
-    assert tl.column_ndv(tb, "v")["n_files_sketched"] == len(state["data"])
 
     td = str(tmp_path / "drop")
-    tl.append(spark, td, df.repartition(2), bloom_cols=("k",), ndv_cols=("v",))
-    tl.compact(spark, td, n_files=1, bloom_cols=(), ndv_cols=())
+    tl.append(spark, td, df.repartition(2), bloom_cols=("k",))
+    tl.compact(spark, td, n_files=1, bloom_cols=())
     _, state = tl._state_at(td)
-    assert all("bloom" not in e and "ndv" not in e for e in state["data"].values())
-
-
-def test_two_level_manifests_plan_skips_chunks(spark, tmp_path):
-    """A commit adding many files writes chunked manifests (Iceberg's
-    manifest-list layer): the commit inlines per-chunk summaries only, and
-    planning skips whole chunks — partition-value sets, merged stats, OR'd
-    blooms — without reading their file entries. Full-table reads expand
-    to the identical one-level state."""
-    t = str(tmp_path / "chunked")
-    df = spark.range(0, 400).selectExpr(
-        "id AS k", "cast(id % 8 AS string) AS day", "id % 5 AS v"
-    )
-    tl.append(
-        spark, t, df.repartition("day"),
-        partition_spec=("day",), stats_cols=("k",), bloom_cols=("k",),
-        manifest_chunk_files=2,
-    )
-    _, lazy = tl._state_at(t, expand=False)
-    assert lazy.get("chunks") and not lazy["data"]  # fully chunked commit
-    n_chunks = len(lazy["chunks"])
-    assert n_chunks >= 3
-    n_files = sum(r["n_files"] for r in lazy["chunks"].values())
-
-    # expansion parity: the full read sees every row and file
-    assert tl.read_snapshot(spark, t).count() == 400
-    assert tl.table_files(spark, t).count() == n_files
-    hist = tl.table_history(spark, t).collect()[-1]
-    assert hist["files_added"] == n_files and hist["rows_added"] == 400
-
-    # hidden-partition point predicate: only the chunk(s) whose summary
-    # value set contains day=3 are OPENED; the rest are skipped whole
-    plan = tl.plan_scan(t, {"day": ("=", "3")})
-    assert plan["n_chunks_total"] == n_chunks
-    assert plan["n_chunks_opened"] + plan["n_chunks_skipped"] == n_chunks
-    assert plan["n_chunks_opened"] <= max(1, n_chunks // 2)
-    got = tl.scan_where(spark, t, {"day": ("=", "3")})
-    want = df.filter(F.col("day") == "3")
-    assert got.count() == want.count() > 0
-    assert got.select("k").exceptAll(want.select("k")).count() == 0
-
-    # chunk-level bloom: an absent key skips EVERY chunk unopened, and the
-    # skipped-file tally stays exact
-    plan2 = tl.plan_scan(t, {"k": ("=", 999_999)})
-    assert plan2["n_chunks_opened"] == 0
-    assert plan2["n_files_skipped"] == n_files and plan2["paths"] == []
-
-    # incremental scan expands chunk refs transparently
-    inc = tl.incremental_append_scan(spark, t, 0)
-    assert inc.count() == 400
-
-
-def test_compaction_retires_chunked_manifests(spark, tmp_path):
-    """A full rewrite removes the chunk refs with the files (the commit's
-    removed_manifests), so post-compaction planning replays zero chunks
-    while row counts and pruning stay exact."""
-    t = str(tmp_path / "chunked_compact")
-    df = spark.range(0, 300).selectExpr("id AS k", "id % 3 AS v")
-    tl.append(
-        spark, t, df.repartition(6), stats_cols=("k",),
-        manifest_chunk_files=2,
-    )
-    assert tl._state_at(t, expand=False)[1].get("chunks")
-    tl.compact(spark, t, n_files=2)
-    _, lazy = tl._state_at(t, expand=False)
-    assert not lazy.get("chunks")  # refs retired by removed_manifests
-    assert tl.read_snapshot(spark, t).count() == 300
-    plan = tl.plan_scan(t, {"k": ("=", 7)})
-    assert plan["n_chunks_total"] == 0 and len(plan["paths"]) >= 1
-
-
-def test_orphan_sweep_removes_lost_writers_chunk_manifests(spark, tmp_path):
-    """A chunked append writes its mchunk files BEFORE the commit; a
-    writer that lost the race leaves them unreferenced in log/. The
-    orphan sweep removes exactly those (age-guarded), never a committed
-    chunk."""
-    t = str(tmp_path / "chunk_orphans")
-    df = spark.range(0, 100).selectExpr("id AS k")
-    tl.append(spark, t, df.repartition(4), manifest_chunk_files=2)
-    live = {
-        r["manifest"]
-        for r in tl._state_at(t, expand=False)[1]["chunks"].values()
-    }
-    assert live
-    # simulate a lost writer's pre-written chunk
-    dead = os.path.join(t, "log", "mchunk-deadbeefdeadbeef.json")
-    with open(dead, "w") as f:
-        json.dump({"entries": []}, f)
-    removed = tl.remove_orphans(t, min_age_sec=0.0)
-    assert removed == 1 and not os.path.exists(dead)
-    for m in live:
-        assert os.path.exists(os.path.join(t, m))
-    assert tl.read_snapshot(spark, t).count() == 100
-
-
-def test_plan_scan_scales_by_chunks_not_files(tmp_path):
-    """The 10^7-file planning contract, proven at 10^5: a synthetic
-    chunked commit with 100,000 file entries across 200 chunks (manifest
-    JSON only — plan_scan never opens data files). A point predicate on
-    the chunk-coherent partition value opens exactly ONE chunk: driver
-    work is O(summaries + one chunk), and measured planning time is an
-    order of magnitude under the full expansion the one-level layout
-    would force."""
-    import time as _time
-
-    t = str(tmp_path / "bigplan")
-    log = os.path.join(t, "log")
-    os.makedirs(log)
-    n_chunks, per_chunk = 200, 500
-    spec = [{"name": "day", "source": "day", "transform": "identity", "param": None}]
-    refs = []
-    for c in range(n_chunks):
-        entries = [
-            {
-                "path": f"{t}/data/c000001/day={c:03d}/part-{i:05d}.parquet",
-                "rows": 10,
-                "bytes": 1000,
-                "stats": {"k": [c * per_chunk + i, c * per_chunk + i]},
-                "partitions": {"keys": ["day"], "tuples": [[[f"{c:03d}"], 10]]},
-                "spec": spec,
-            }
-            for i in range(per_chunk)
-        ]
-        name = f"mchunk-{c:032x}.json"
-        with open(os.path.join(log, name), "w") as f:
-            json.dump({"entries": entries}, f)
-        refs.append(
-            {
-                "manifest": os.path.join("log", name),
-                "n_files": per_chunk,
-                "rows": per_chunk * 10,
-                "bytes": per_chunk * 1000,
-                "partitions": {
-                    "keys": ["day"],
-                    "tuples": [[[f"{c:03d}"], per_chunk * 10]],
-                },
-                "stats": {"k": [c * per_chunk, (c + 1) * per_chunk - 1]},
-                "spec": spec,
-                "seq": 1,
-            }
-        )
-    commit = {
-        "version": 1,
-        "parent": None,
-        "operation": "append",
-        "ts": 0.0,
-        "schema": [["k", "bigint"], ["day", "string"]],
-        "added_data": refs,
-    }
-    with open(os.path.join(log, "v000000000001.json"), "w") as f:
-        json.dump(commit, f)
-
-    t0 = _time.perf_counter()
-    plan = tl.plan_scan(t, {"day": ("=", "123")})
-    chunked_sec = _time.perf_counter() - t0
-    assert plan["n_chunks_total"] == n_chunks
-    assert plan["n_chunks_opened"] == 1
-    assert plan["n_chunks_skipped"] == n_chunks - 1
-    assert len(plan["paths"]) == per_chunk
-    assert plan["n_files_skipped"] == (n_chunks - 1) * per_chunk
-
-    # the one-level cost this layout avoids: expand every chunk, check
-    # every file entry (what prune_files_where did before round 5)
-    t0 = _time.perf_counter()
-    _, state = tl._state_at(t)  # expand=True: all 100k entries
-    n_live = len(state["data"])
-    expanded_sec = _time.perf_counter() - t0
-    assert n_live == n_chunks * per_chunk
-    assert chunked_sec < expanded_sec / 10, (chunked_sec, expanded_sec)
-
-
-def test_chunk_summaries_translate_renamed_predicates(spark, tmp_path):
-    """Field-id evolution over a CHUNKED commit: after a rename, a
-    predicate on the CURRENT name must translate through the chunk ref's
-    write-time cols map at the SUMMARY level — skipping chunks without
-    opening them — and through each file entry after a chunk opens."""
-    t = str(tmp_path / "chunk_evolve")
-    df = spark.range(0, 400).selectExpr("id AS k", "cast(id % 8 AS string) AS day")
-    tl.append(
-        spark, t, df.repartition("day"),
-        partition_spec=("day",), stats_cols=("k",),
-        manifest_chunk_files=2,
-    )
-    tl.evolve_schema(t, rename={"k": "key", "day": "d"})
-    n_chunks = tl.plan_scan(t, {})["n_chunks_total"]
-    # stats predicate on the renamed measure column
-    plan = tl.plan_scan(t, {"key": ("between", 0, 10)})
-    assert plan["n_chunks_opened"] + plan["n_chunks_skipped"] == n_chunks
-    got = tl.scan_where(spark, t, {"key": ("between", 0, 10)})
-    assert got.count() == 11 and "key" in got.columns
-    # hidden-partition predicate on the renamed source column still skips
-    # whole chunks by the summary's partition-value sets
-    plan2 = tl.plan_scan(t, {"d": ("=", "3")})
-    assert plan2["n_chunks_opened"] < n_chunks
-    assert tl.scan_where(spark, t, {"d": ("=", "3")}).count() == 50
-
-
-def test_expiry_flattens_expired_chunked_commits(spark, tmp_path):
-    """Expiring a chunked commit deletes its chunk manifests and flattens
-    its still-live files into the rebase base: reads stay exact, planning
-    simply has no chunks left to consult."""
-    import glob
-
-    t = str(tmp_path / "chunk_expire")
-    tl.append(
-        spark, t,
-        spark.range(0, 200).selectExpr("id AS k").repartition(4),
-        stats_cols=("k",), manifest_chunk_files=2,
-    )
-    tl.append(spark, t, spark.range(200, 250).selectExpr("id AS k"))
-    assert glob.glob(os.path.join(t, "log", "mchunk-*.json"))
-    out = tl.expire_snapshots(t, keep_last=1)
-    assert out["versions_removed"] == 1
-    # the expired commit's chunk manifests are gone; its files live on
-    # through the rebase base
-    assert not glob.glob(os.path.join(t, "log", "mchunk-*.json"))
-    assert tl.read_snapshot(spark, t).count() == 250
-    plan = tl.plan_scan(t, {"k": ("between", 0, 10)})
-    assert plan["n_chunks_total"] == 0 and len(plan["paths"]) >= 1
-    assert tl.scan_between(spark, t, "k", 0, 10).count() == 11
+    assert all("bloom" not in e for e in state["data"].values())
