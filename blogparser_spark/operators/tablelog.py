@@ -25,15 +25,12 @@ needs falls out of that one structure:
   `write.delete.mode=copy-on-write`, Delta Lake's `remove` actions). A
   commit only ever adds and removes data files, so a read is one scan of
   the live files with nothing to anti-join.
-- **Compaction** folds small files into fresh data files as one atomic
-  commit; logical rows are unchanged.
 - **Snapshot expiry** bounds storage: physical files referenced only by
   expired versions are removed, with a rebase ("checkpoint") state so the
   log itself stays O(retained commits).
-- **Stats pruning**: per-file min/max footer stats let `scan_between` read
-  only the files whose range overlaps a predicate — partition-pruning
-  semantics without a partition column (pairs with the z-order layout in
-  operators/storage.write_zordered).
+- **Pruning**: `plan_scan` checks each live file's manifest entry (its
+  partition tuples, min/max footer stats and blooms) against the
+  predicates, and `scan_where` reads only the files that may match.
 
 Concurrency is optimistic, exactly like Iceberg's commit-if-absent on the
 metadata pointer: a commit is `os.link(tmp, log/v{N}.json)`, which fails if
@@ -54,7 +51,6 @@ from __future__ import annotations
 import hashlib
 import json
 import os
-import re
 import shutil
 import time
 import uuid
@@ -150,27 +146,6 @@ def _json_safe(v):
     return v if isinstance(v, (int, float, str, bool)) or v is None else str(v)
 
 
-_HIVE_NULL = "__HIVE_DEFAULT_PARTITION__"
-
-
-def _partition_of(dirpath: str, path: str) -> dict[str, str | None]:
-    """Partition values parsed from hive-style `_p_<k>=<v>` path segments
-    (hidden-partition writes partition on `_p_`-prefixed DUPLICATE columns
-    so the data files keep the real columns — Iceberg keeps partition
-    values in metadata for the same reason). Hive's null marker reads back
-    as None."""
-    from urllib.parse import unquote
-
-    rel = os.path.relpath(os.path.dirname(path), dirpath)
-    out: dict[str, str | None] = {}
-    for seg in rel.split(os.sep):
-        if "=" in seg and seg.startswith("_p_"):
-            k, v = seg.split("=", 1)
-            v = unquote(v)
-            out[k[3:]] = None if v == _HIVE_NULL else v
-    return out
-
-
 # ---------------------------------------------------------------------------
 # partition tuples (the one manifest form for partition values)
 # ---------------------------------------------------------------------------
@@ -178,8 +153,7 @@ def _partition_of(dirpath: str, path: str) -> dict[str, str | None]:
 # Every file entry that carries partition values records them as
 #   "partitions": {"keys": [k1, k2, ...], "tuples": [[[v1, v2, ...], rows], ...]}
 # — the set of distinct key tuples the file holds, each with its exact row
-# count. A hive-path file (hidden partition spec, add_files) holds one
-# tuple; a sink-sorted file written by append(partition_by=...) holds one
+# count: a sink-sorted file written by append(partition_by=...) holds one
 # per sink it covers. Values are strings (None for null). The set is
 # bounded: a file covering more than PART_TUPLES_MAX tuples records
 # "tuples": None, which never prunes.
@@ -187,11 +161,21 @@ def _partition_of(dirpath: str, path: str) -> dict[str, str | None]:
 PART_TUPLES_MAX = 64
 
 
-def _bounded_partitions(keys, counts: dict[tuple, int]) -> dict:
-    """The manifest form for `counts` ({value tuple: rows}); past
-    PART_TUPLES_MAX tuples the set is dropped (None = unknown)."""
-    if len(counts) > PART_TUPLES_MAX:
-        return {"keys": list(keys), "tuples": None}
+def _data_partitions(pf, keys: tuple[str, ...]) -> dict:
+    """Distinct `keys` tuples of one parquet file with their row counts,
+    grouped with Arrow one record batch at a time over the key columns
+    only. Stops reading once the bound is passed: the set is then dropped
+    (None = unknown)."""
+    import pyarrow as pa
+
+    counts: dict[tuple, int] = {}
+    for batch in pf.iter_batches(columns=list(keys)):
+        grouped = pa.Table.from_batches([batch]).group_by(list(keys))
+        for row in grouped.aggregate([([], "count_all")]).to_pylist():
+            t = tuple(None if row[k] is None else str(row[k]) for k in keys)
+            counts[t] = counts.get(t, 0) + row["count_all"]
+        if len(counts) > PART_TUPLES_MAX:
+            return {"keys": list(keys), "tuples": None}
 
     def order(item):
         return [(v is not None, v or "") for v in item[0]]
@@ -202,128 +186,6 @@ def _bounded_partitions(keys, counts: dict[tuple, int]) -> dict:
     }
 
 
-def _data_partitions(pf, keys: tuple[str, ...]) -> dict:
-    """Distinct `keys` tuples of one parquet file with their row counts,
-    grouped with Arrow one record batch at a time over the key columns
-    only. Stops reading once the bound is passed: the result is then the
-    unknown set."""
-    import pyarrow as pa
-
-    counts: dict[tuple, int] = {}
-    for batch in pf.iter_batches(columns=list(keys)):
-        grouped = pa.Table.from_batches([batch]).group_by(list(keys))
-        for row in grouped.aggregate([([], "count_all")]).to_pylist():
-            t = tuple(None if row[k] is None else str(row[k]) for k in keys)
-            counts[t] = counts.get(t, 0) + row["count_all"]
-        if len(counts) > PART_TUPLES_MAX:
-            break
-    return _bounded_partitions(keys, counts)
-
-
-def _tuple_rows(e: dict) -> list[tuple[dict, int]]:
-    """An entry's partition tuples as ({key: value}, rows) pairs; [] when
-    the entry has no partition values or its set was not recorded."""
-    parts = e.get("partitions")
-    if not parts or parts.get("tuples") is None:
-        return []
-    return [(dict(zip(parts["keys"], vals)), n) for vals, n in parts["tuples"]]
-
-
-# ---------------------------------------------------------------------------
-# hidden partitioning (Iceberg partition-spec transforms)
-# ---------------------------------------------------------------------------
-
-_SPEC_RE = re.compile(
-    r"^\s*(?:(identity|days|hours|months|years)\s*\(\s*(\w+)\s*\)"
-    r"|(bucket|truncate)\s*\(\s*(\d+)\s*,\s*(\w+)\s*\)"
-    r"|(\w+))\s*$"
-)
-
-# lexical prefix length of the ISO-rendered timestamp per temporal transform
-_TEMPORAL_PREFIX = {"years": 4, "months": 7, "days": 10, "hours": 13}
-
-
-def parse_partition_spec(spec: tuple[str, ...] | list[str]) -> list[dict]:
-    """Parse an Iceberg-style partition spec — `("days(ts)",
-    "bucket(8, conv_id)", "truncate(4, role)", "region")` — into field
-    dicts {name, source, transform, param}. This is Iceberg's HIDDEN
-    partitioning (spec §Partition Transforms): the table partitions on a
-    TRANSFORM of a source column, writers never materialize the partition
-    column in their rows, and readers prune with plain predicates on the
-    source column (scan_where projects them through the transform)."""
-    fields = []
-    for s in spec:
-        m = _SPEC_RE.match(s)
-        if not m:
-            raise ValueError(f"unparseable partition-spec field: {s!r}")
-        if m.group(6):  # bare column = identity
-            transform, param, source = "identity", None, m.group(6)
-        elif m.group(1):
-            transform, param, source = m.group(1), None, m.group(2)
-        else:
-            transform, param, source = m.group(3), int(m.group(4)), m.group(5)
-        if transform == "identity":
-            name = source
-        elif transform in _TEMPORAL_PREFIX:
-            name = f"{source}_{transform[:-1]}"  # ts_day, ts_hour, ...
-        else:
-            name = f"{source}_{transform}_{param}"
-        fields.append(
-            {"name": name, "source": source, "transform": transform, "param": param}
-        )
-    return fields
-
-
-def _transform_expr(field: dict, dtype: str) -> Column:
-    """The Spark-side partition-value expression for one spec field. Every
-    transform has an EXACT Python twin (_twin_transform) so manifest-side
-    pruning can project predicate literals through the same function:
-
-    - bucket(n): md5-hex-prefix mod n (the repo's engine-portable stand-in
-      for Iceberg's murmur3 bucket — same convention as the curation
-      sampling keys).
-    - truncate(w): substring for strings, w*floor(v/w) for integers
-      (pmod keeps negatives on the Iceberg floor semantics).
-    - days/hours/months/years: LEXICAL truncation of the ISO-rendered
-      value (substring of cast-to-string) — timezone-free for NTZ
-      timestamps and identical in Spark, Python, and DuckDB, unlike
-      epoch-day arithmetic.
-    """
-    col = F.col(field["source"])
-    t = field["transform"]
-    if t == "identity":
-        return col
-    if t == "bucket":
-        return F.pmod(
-            F.conv(F.substring(F.md5(col.cast("string")), 1, 8), 16, 10).cast(
-                "long"
-            ),
-            F.lit(field["param"]),
-        )
-    if t == "truncate":
-        if dtype == "string":
-            return F.substring(col, 1, field["param"])
-        return (col - F.pmod(col, F.lit(field["param"]))).cast("long")
-    return F.substring(col.cast("string"), 1, _TEMPORAL_PREFIX[t])
-
-
-def _twin_transform(field: dict, value) -> str:
-    """Python twin of _transform_expr applied to a PREDICATE LITERAL,
-    returning the hive-path string form the manifest stores. Bit-for-bit
-    agreement with the Spark expression is pinned by a property test."""
-    t = field["transform"]
-    if t == "identity":
-        return str(value)
-    if t == "bucket":
-        h = hashlib.md5(str(value).encode()).hexdigest()[:8]
-        return str(int(h, 16) % field["param"])
-    if t == "truncate":
-        if isinstance(value, str):
-            return value[: field["param"]]
-        return str(int(value - (value % field["param"])))
-    return str(value)[: _TEMPORAL_PREFIX[t]]
-
-
 def _numeric(v):
     try:
         return float(v)
@@ -331,22 +193,16 @@ def _numeric(v):
         return None
 
 
-def _part_match(field: dict, part_value: str | None, pred: tuple) -> bool:
-    """Can a file whose partition value for `field` is `part_value`
-    contain rows matching `pred` on the SOURCE column? False only when
-    the transform projection PROVES it cannot (Iceberg's inclusive
-    projection): equality projects through every transform; ranges
-    project through order-preserving transforms (identity, truncate,
-    temporal) but never through bucket. A null value is indeterminate
-    (a null transform output says nothing about the source): keep."""
+def _part_match(part_value: str | None, pred: tuple) -> bool:
+    """Can a file whose partition value for a key is `part_value` hold a
+    row matching `pred` on that key? '=' compares as strings (the manifest
+    stores str(value)); 'between' compares numerically when the value and
+    both bounds are numbers, else lexically. A null value is kept."""
     if part_value is None:
         return True
-    op = pred[0]
-    if op == "=":
-        return part_value == _twin_transform(field, pred[1])
-    lo, hi = _twin_transform(field, pred[1]), _twin_transform(field, pred[2])
-    if field["transform"] == "bucket":
-        return True  # hash transform is not order-preserving
+    if pred[0] == "=":
+        return part_value == str(pred[1])
+    lo, hi = str(pred[1]), str(pred[2])
     n, a, b = _numeric(part_value), _numeric(lo), _numeric(hi)
     if n is not None and a is not None and b is not None:
         return a <= n <= b
@@ -461,8 +317,8 @@ def _stats_match(st: list | None, pred: tuple) -> bool:
 # A manifest entry is one flat record per data file, keyed by column name:
 #   {"path", "rows", "bytes", "seq", "stats": {col: [min, max]}}
 # plus, when recorded, "bloom" ({col: hex bits}), "partitions" (the tuple
-# set above), "spec" (the hidden-partition spec it was written under) and
-# "markers" (the resume ledger). Planning checks every live entry.
+# set above) and "markers" (the resume ledger). Planning checks every live
+# entry.
 
 
 def _added_entries(table: str, commit: dict) -> list[dict]:
@@ -473,26 +329,17 @@ def _added_entries(table: str, commit: dict) -> list[dict]:
 def _prune_reason(e: dict, predicates: dict[str, tuple]) -> str | None:
     """Why the file entry `e` holds no row matching `predicates`, or None
     when it may hold one. "partition": no recorded partition tuple passes
-    every predicate projected through the entry's spec (identity on the
-    partition keys when the entry has no spec); an entry without a
+    every predicate on a partition key (_part_match); an entry without a
     recorded tuple set is kept. Then "stats": min/max rule a predicate
     out. Then "bloom": a bloom proves an '=' value absent."""
     parts = e.get("partitions") or {}
     tuples = parts.get("tuples")
     if tuples is not None:
-        pos = {k: i for i, k in enumerate(parts["keys"])}
-        fields = e.get("spec") or [
-            {"name": k, "source": k, "transform": "identity", "param": None}
-            for k in parts["keys"]
-        ]
         checks = [
-            (pos[f["name"]], f, pred)
-            for col, pred in predicates.items()
-            for f in fields
-            if f["source"] == col and f["name"] in pos
+            (i, predicates[k]) for i, k in enumerate(parts["keys"]) if k in predicates
         ]
         if checks and not any(
-            all(_part_match(f, vals[i], pred) for i, f, pred in checks)
+            all(_part_match(vals[i], pred) for i, pred in checks)
             for vals, _n in tuples
         ):
             return "partition"
@@ -539,34 +386,16 @@ def plan_scan(
     }
 
 
-def prune_files_where(
-    table: str, predicates: dict[str, tuple], version: int | None = None
-) -> tuple[list[str], int]:
-    """Plan a predicate scan against the manifests only: live data files
-    that can contain matching rows. `predicates` maps SOURCE column →
-    ("=", v) or ("between", lo, hi). Each file is checked against (a) the
-    partition spec it was written under, projected through its transforms
-    — so partition EVOLUTION is handled per-file: a file written before a
-    bucket field existed simply has no value for it and is kept — and (b)
-    its min/max footer stats (plus blooms for '='). Returns
-    (paths_to_read, n_files_skipped)."""
-    plan = plan_scan(table, predicates, version)
-    return plan["paths"], plan["n_files_skipped"]
-
-
 def scan_where(
     spark: SparkSession,
     table: str,
     predicates: dict[str, tuple],
     version: int | None = None,
 ) -> DataFrame:
-    """Hidden-partition-pruned scan: plan with plan_scan (transform
-    projection + footer stats + blooms, manifests only — no file is opened
-    to decide), then read the surviving files and apply the EXACT
-    predicates. At 100 TB this is the difference between a point lookup
-    opening 1/n_buckets of one day's files and a full-table scan — and
-    because the spec is per-file, the same call stays correct across
-    partition-spec changes."""
+    """Pruned scan: plan with plan_scan (partition tuples + footer stats +
+    blooms, manifests only — no file is opened to decide), then read the
+    surviving files and apply the EXACT predicates. `predicates` maps a
+    column to ("=", v) or ("between", lo, hi)."""
     _, state = _state_at(table, version)
     plan = plan_scan(table, predicates, version, _state=state)
     df = _read_files(spark, plan["paths"], state["schema"])
@@ -585,62 +414,53 @@ def _file_entries(
     bloom_cols: tuple[str, ...] = (),
     partition_by: tuple[str, ...] = (),
 ) -> list[dict]:
-    """Manifest entries for every parquet file under dirpath: row count,
-    byte size, partition tuples, and min/max per requested stats column —
-    read from parquet FOOTERS and path segments (the same numbers Iceberg
-    persists in its manifests). Blooms scan their column,
-    and `partition_by` groups the key columns of each file into its
-    tuple set (_data_partitions); without it, hive `_p_` path segments
-    give the file its one tuple."""
+    """Manifest entries for every parquet file in dirpath: row count, byte
+    size and min/max per requested stats column, read from parquet FOOTERS
+    (the same numbers Iceberg persists in its manifests). Blooms scan
+    their column, and `partition_by` groups the key columns of each file
+    into its tuple set (_data_partitions)."""
     import pyarrow.parquet as pq
 
     entries = []
-    for root, _dirs, files in os.walk(dirpath):
-        for name in sorted(files):
-            if not name.endswith(".parquet"):
+    for name in sorted(os.listdir(dirpath)):
+        if not name.endswith(".parquet"):
+            continue
+        path = os.path.join(dirpath, name)
+        pf = pq.ParquetFile(path)
+        md = pf.metadata
+        stats: dict[str, list] = {}
+        idx = {md.schema.column(i).name: i for i in range(md.num_columns)}
+        for col in stats_cols:
+            if col not in idx:
                 continue
-            path = os.path.join(root, name)
-            pf = pq.ParquetFile(path)
-            md = pf.metadata
-            stats: dict[str, list] = {}
-            idx = {md.schema.column(i).name: i for i in range(md.num_columns)}
-            for col in stats_cols:
-                if col not in idx:
-                    continue
-                lo = hi = None
-                for rg in range(md.num_row_groups):
-                    st = md.row_group(rg).column(idx[col]).statistics
-                    if st is None or not st.has_min_max:
-                        lo = hi = None
-                        break
-                    lo = st.min if lo is None else min(lo, st.min)
-                    hi = st.max if hi is None else max(hi, st.max)
-                if lo is not None:
-                    stats[col] = [_json_safe(lo), _json_safe(hi)]
-            bloom: dict[str, str] = {}
-            for col in bloom_cols:
-                if col in idx:
-                    hexbits = _col_sketches(pf, col)
-                    if hexbits:
-                        bloom[col] = hexbits
-            entry = {
-                "path": path,
-                "rows": md.num_rows,
-                "bytes": os.path.getsize(path),
-                "seq": seq,
-                "stats": stats,
-            }
-            if bloom:
-                entry["bloom"] = bloom
-            if partition_by:
-                entry["partitions"] = _data_partitions(pf, partition_by)
-            else:
-                part = _partition_of(dirpath, path)
-                if part:
-                    entry["partitions"] = _bounded_partitions(
-                        part, {tuple(part.values()): md.num_rows}
-                    )
-            entries.append(entry)
+            lo = hi = None
+            for rg in range(md.num_row_groups):
+                st = md.row_group(rg).column(idx[col]).statistics
+                if st is None or not st.has_min_max:
+                    lo = hi = None
+                    break
+                lo = st.min if lo is None else min(lo, st.min)
+                hi = st.max if hi is None else max(hi, st.max)
+            if lo is not None:
+                stats[col] = [_json_safe(lo), _json_safe(hi)]
+        bloom: dict[str, str] = {}
+        for col in bloom_cols:
+            if col in idx:
+                hexbits = _col_sketches(pf, col)
+                if hexbits:
+                    bloom[col] = hexbits
+        entry = {
+            "path": path,
+            "rows": md.num_rows,
+            "bytes": os.path.getsize(path),
+            "seq": seq,
+            "stats": stats,
+        }
+        if bloom:
+            entry["bloom"] = bloom
+        if partition_by:
+            entry["partitions"] = _data_partitions(pf, partition_by)
+        entries.append(entry)
     return entries
 
 
@@ -698,13 +518,18 @@ def _state_at(table: str, version: int | None = None) -> tuple[int, dict]:
         v = c.get("parent")
 
     for c in reversed(chain):
-        for e in c.get("added_data", []):
-            state["data"][e["path"]] = e
-        for p in c.get("removed_data", []):
-            state["data"].pop(p, None)
-        if c.get("schema"):
-            state["schema"] = c["schema"]
+        _apply(state, c)
     return target, state
+
+
+def _apply(state: dict, c: dict) -> None:
+    """Roll `state` forward by the commit `c`."""
+    for e in c.get("added_data", []):
+        state["data"][e["path"]] = e
+    for p in c.get("removed_data", []):
+        state["data"].pop(p, None)
+    if c.get("schema"):
+        state["schema"] = c["schema"]
 
 
 def _chain_between(
@@ -736,134 +561,6 @@ def _chain_between(
             f"v{to_version}: {table}"
         )
     return to_version, list(reversed(out))
-
-
-def snapshot_lineage(table: str) -> list[dict]:
-    """Per-commit lineage summaries (version, operation, rows/files added
-    and removed) — the table-level analog of checkpoint.SliceManifest."""
-    out = []
-    for v in list_versions(table):
-        c = _read_commit(table, v)
-        out.append(
-            {
-                "version": v,
-                "operation": c["operation"],
-                "ts": c.get("ts"),
-                "rows_added": sum(e["rows"] for e in c.get("added_data", [])),
-                "files_added": len(c.get("added_data", [])),
-                "files_removed": len(c.get("removed_data", [])),
-            }
-        )
-    return out
-
-
-# ---------------------------------------------------------------------------
-# metadata inspection tables (Iceberg's history / files / partitions tables)
-# ---------------------------------------------------------------------------
-#
-# Iceberg exposes table internals as queryable metadata tables
-# (`db.tbl.history`, `.files`, `.snapshots`, `.partitions`); these are the
-# snapshot-log analogs. All three are driver-side LOG scans — cost is
-# O(commits) / O(live files) manifest work, never a data-file read — turned
-# into DataFrames so operators can join, filter, and aggregate table health
-# (small-file counts, commit cadence) with the same
-# relational vocabulary as the data itself.
-
-
-def table_history(spark: SparkSession, table: str) -> DataFrame:
-    """One row per commit: lineage pointer, operation, and
-    added/removed file and row tallies. The DataFrame sibling of
-    snapshot_lineage (which returns driver dicts)."""
-    rows = []
-    for v in list_versions(table):
-        c = _read_commit(table, v)
-        rows.append(
-            (
-                v,
-                c.get("parent"),
-                c["operation"],
-                float(c.get("ts") or 0.0),
-                sum(int(e.get("rows", 0)) for e in c.get("added_data", [])),
-                len(c.get("added_data", [])),
-                len(c.get("removed_data", [])),
-            )
-        )
-    return spark.createDataFrame(
-        rows,
-        "version int, parent int, operation string, "
-        "ts double, rows_added bigint, files_added int, files_removed int",
-    )
-
-
-def table_files(
-    spark: SparkSession, table: str, version: int | None = None
-) -> DataFrame:
-    """One row per LIVE data file at a snapshot: sequence number, manifest
-    row/byte tallies, partition tuples (the manifest's {"keys", "tuples"}
-    form as JSON) and footer stats. This is the small-file health view —
-    `table_files(...).groupBy(...).agg(...)` plans maintenance
-    (compact_binpack targets) without opening a single data file."""
-    _, state = _state_at(table, version)
-    rows = [
-        (
-            p,
-            int(e["seq"]),
-            int(e.get("rows", 0)),
-            int(e.get("bytes", 0)),
-            json.dumps(e.get("partitions") or {}, sort_keys=True),
-            json.dumps(e.get("stats") or {}, sort_keys=True, default=str),
-        )
-        for p, e in sorted(state["data"].items())
-    ]
-    return spark.createDataFrame(
-        rows,
-        "path string, seq int, rows bigint, bytes bigint, "
-        "partition string, stats string",
-    )
-
-
-def table_partitions(
-    spark: SparkSession, table: str, version: int | None = None
-) -> DataFrame:
-    """One row per partition tuple of the LIVE data files at a snapshot
-    (Iceberg's `partitions` metadata table): file count, exact row total
-    (each file records its rows per tuple), byte total, and the
-    sequence-number range — per-sink/per-day size skew and compaction debt
-    read straight off the manifests, no data file opened. A file holding
-    several tuples counts once under each, and its bytes are split across
-    them in proportion to rows. Unpartitioned files aggregate under the
-    empty partition `{}`; files whose tuple set passed the bound
-    (PART_TUPLES_MAX) aggregate under a NULL partition. Partition keys are
-    the file's WRITE-TIME spec names (per-file specs = partition
-    evolution, so two generations show as distinct tuples)."""
-    _, state = _state_at(table, version)
-    agg: dict[str | None, list] = {}
-    for _p, e in sorted(state["data"].items()):
-        rows_total = int(e.get("rows", 0))
-        if not e.get("partitions"):
-            tuples = [("{}", rows_total)]
-        elif e["partitions"]["tuples"] is None:
-            tuples = [(None, rows_total)]
-        else:
-            tuples = [
-                (json.dumps(part, sort_keys=True), n) for part, n in _tuple_rows(e)
-            ]
-        seq = int(e["seq"])
-        for key, n in tuples:
-            s = agg.setdefault(key, [0, 0, 0, seq, seq])
-            s[0] += 1
-            s[1] += n
-            s[2] += int(e.get("bytes", 0)) * n // max(rows_total, 1)
-            s[3] = min(s[3], seq)
-            s[4] = max(s[4], seq)
-    rows = [
-        (k, *v) for k, v in sorted(agg.items(), key=lambda kv: (kv[0] is None, kv[0] or ""))
-    ]
-    return spark.createDataFrame(
-        rows,
-        "partition string, n_files int, rows bigint, bytes bigint, "
-        "min_seq int, max_seq int",
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -900,7 +597,6 @@ def _write_data_files(
     stats_cols: tuple[str, ...],
     kind: str,
     partition_by: tuple[str, ...] = (),
-    spec_fields: list[dict] | None = None,
     bloom_cols: tuple[str, ...] = (),
     timings: dict | None = None,
 ) -> list[dict]:
@@ -917,23 +613,8 @@ def _write_data_files(
     cost a range-sampling pass, which re-runs the whole upstream plan (for
     the job, the parse UDF)."""
     outdir = os.path.join(table, kind, f"c{version:06d}-{uuid.uuid4().hex[:8]}")
-    if partition_by and spec_fields:
-        raise ValueError("pass partition_by OR partition_spec, not both")
     t0 = time.perf_counter()
-    if spec_fields:
-        # hidden partitioning: the partition columns are TRANSFORMS of
-        # source columns, written as duplicate `_p_` columns so data files
-        # keep only real columns; values live in the manifest + path.
-        dtypes = dict(df.dtypes)
-        out = df
-        for f in spec_fields:
-            out = out.withColumn(
-                f"_p_{f['name']}", _transform_expr(f, dtypes[f["source"]])
-            )
-        out.write.mode("error").partitionBy(
-            *[f"_p_{f['name']}" for f in spec_fields]
-        ).parquet(outdir)
-    elif partition_by:
+    if partition_by:
         df.hint("rebalance", *partition_by).sortWithinPartitions(
             *partition_by, *[c for c in stats_cols if c not in partition_by]
         ).write.mode("error").parquet(outdir)
@@ -947,11 +628,6 @@ def _write_data_files(
         bloom_cols=bloom_cols,
         partition_by=partition_by,
     )
-    if spec_fields:
-        # every file records the spec it was written under — partition
-        # evolution is per-file, exactly Iceberg's manifest spec_id.
-        for e in entries:
-            e["spec"] = spec_fields
     if timings is not None:
         timings["write_s"] = t1 - t0
         timings["manifest_s"] = time.perf_counter() - t1
@@ -967,7 +643,6 @@ def append(
     max_retries: int = 5,
     partition_by: tuple[str, ...] = (),
     marker: str | None = None,
-    partition_spec: tuple[str, ...] = (),
     bloom_cols: tuple[str, ...] = (),
     replace: tuple[Column, Callable[[str], bool | None]] | None = None,
 ) -> int:
@@ -977,18 +652,16 @@ def append(
     `partition_by` writes a few files sorted by those keys, each
     recording its key tuples with row counts in the manifest (read back,
     pruned, via read_partition).
-    `partition_spec` is the hidden-partitioning alternative — transform
-    fields like ("days(ts)", "bucket(8, conv_id)") pruned via scan_where.
     `marker` stamps the new files for idempotent resume: the ledger
     (committed_markers, append_idempotent) holds a marker while a live
     file carries it.
     `bloom_cols` records a per-file membership filter per named column in
     the manifest, sized from the file's row count (_bloom_bits_for;
-    Iceberg's parquet/puffin bloom analog): point
-    ('=') predicates in prune_files_where then skip files with certainty of
-    absence even when every file's min/max RANGE overlaps — the skipping
-    lever for high-cardinality scattered keys, where clustering is not
-    worth a rewrite or another column already owns the sort order.
+    Iceberg's parquet/puffin bloom analog): point ('=') predicates in
+    plan_scan then skip files with certainty of absence even when every
+    file's min/max RANGE overlaps — the skipping lever for
+    high-cardinality scattered keys, where another column already owns
+    the sort order.
     `allow_evolution` lets df add columns by name; files written before
     read them as NULL.
     `replace=(condition, inside)` makes the commit a copy-on-write replace
@@ -1007,7 +680,6 @@ def append(
         stats_cols,
         "data",
         partition_by,
-        parse_partition_spec(partition_spec) if partition_spec else None,
         bloom_cols,
         timings=timings,
     )
@@ -1015,13 +687,15 @@ def append(
         for e in entries:
             e["markers"] = [marker]
     cur = current_version(table)
+    state = None  # the state at `cur`, replayed once and reused
     added: list[dict] = []
     removed: list[dict] = []
     rewritten = 0
     if replace is not None and cur is not None:
         t0 = time.perf_counter()
+        state = _state_at(table, cur)[1]
         added, removed, rewritten = _replace_files(
-            spark, table, version, _state_at(table, cur)[1], *replace
+            spark, table, version, state, *replace
         )
         if removed:
             timings["rewrite_s"] = time.perf_counter() - t0
@@ -1030,9 +704,11 @@ def append(
     t0 = time.perf_counter()
     for attempt in range(1 if removed else max_retries):
         parent = cur if removed else current_version(table)
+        if state is None or parent != cur:  # first replay, or a lost race
+            cur = parent
+            state = _state_at(table, cur)[1] if cur is not None else None
         version_try = (parent or 0) + 1
-        pstate = _state_at(table, parent)[1] if parent is not None else None
-        existing = pstate["schema"] if pstate is not None else None
+        existing = state["schema"] if state is not None else None
         merged = _check_schema(existing, schema_new, allow_evolution)
         for e in entries + added:
             e["seq"] = version_try
@@ -1056,75 +732,6 @@ def append(
             return version_try
     raise CommitConflict(
         f"{commit['operation']} lost the commit race {attempt + 1} times: {table}"
-    )
-
-
-def add_files(
-    spark: SparkSession,
-    table: str,
-    source_dir: str,
-    stats_cols: tuple[str, ...] = (),
-    allow_evolution: bool = False,
-    max_retries: int = 5,
-) -> int:
-    """Import every parquet file under `source_dir` into the table BY
-    REFERENCE — Iceberg's `add_files` migration procedure: manifest entries
-    (row counts, byte sizes, min/max footer stats, hive partition values
-    parsed from the path) are built from parquet FOOTERS only, no data is
-    read or rewritten, and ONE append commit makes the whole import atomic.
-    The files' schema is checked against the table schema first (same
-    enforcement/evolution rule as append). A hive-layout source whose
-    partition values exist ONLY in directory names is refused — the
-    snapshot-log reads files individually, so path-only columns would
-    silently read back as null. `_p_<k>=<v>` directories whose files also
-    hold column `<k>` (the table format's own hidden-partition layout) are
-    accepted: each file's path values become its one-tuple partition set
-    in the manifest, so read_partition/scan_where prune the import like
-    native files. Imported files become TABLE-OWNED:
-    snapshot expiry deletes them once no retained snapshot references
-    them, exactly as Iceberg warns for add_files. No reference analog
-    (the Go CLI rereads raw files per run, sample/main.go:32-47)."""
-    probe = _file_entries(os.path.abspath(source_dir), (), 0)
-    if not probe:
-        raise LookupError(f"no parquet files under {source_dir}")
-    schema_new = _schema_of(spark.read.parquet(probe[0]["path"]))
-    inferred = _schema_of(spark.read.parquet(source_dir))
-    file_cols = {c for c, _ in schema_new}
-    path_only = [
-        n
-        for n, _t in inferred
-        if n not in file_cols and not (n.startswith("_p_") and n[3:] in file_cols)
-    ]
-    if path_only:
-        raise ValueError(
-            f"source {source_dir} is hive-partitioned on path-only "
-            f"column(s) {path_only}; their values are not in the data "
-            "files and would read back null — rewrite the source (or "
-            "append it through a DataFrame) instead of importing by "
-            "reference"
-        )
-    entries = _file_entries(os.path.abspath(source_dir), stats_cols, 0)
-    for _ in range(max_retries):
-        parent = current_version(table)
-        version = (parent or 0) + 1
-        pstate = _state_at(table, parent)[1] if parent is not None else None
-        existing = pstate["schema"] if pstate is not None else None
-        merged = _check_schema(existing, schema_new, allow_evolution)
-        for e in entries:
-            e["seq"] = version
-        commit = {
-            "version": version,
-            "parent": parent,
-            "operation": "append",
-            "ts": time.time(),
-            "schema": merged,
-            "added_data": entries,
-            "summary": _change_summary(entries),
-        }
-        if _try_commit(table, commit):
-            return version
-    raise CommitConflict(
-        f"add_files lost the commit race {max_retries} times: {table}"
     )
 
 
@@ -1154,13 +761,14 @@ def commit_summary(table: str, version: int) -> dict | None:
     snapshot summary); every commit this module writes records one:
     added_data_files, added_records and added_files_size from the manifest
     entries; for a commit that removes files (a delete, update, merge,
-    replace, compaction, overwrite or rollback), removed_data_files,
-    removed_records and rewritten_files (the removed files whose rows it
-    rewrote: 0 for an overwrite or rollback), with rewrite_s (finding and
+    replace, overwrite or rollback), removed_data_files, removed_records
+    and rewritten_files (the removed files whose rows it rewrote: 0 for an
+    overwrite or rollback), with rewrite_s (replaying the log, finding and
     rewriting them) where it rewrote. Appends and replaces also record
     write_s (the Spark write), manifest_s (footer reads, blooms and
-    partition tuples), commit_s (log replay, schema check and any lost
-    races, up to the winning commit-if-absent write) and commit_retries."""
+    partition tuples), commit_s (an append's log replay, the schema check
+    and any lost races, up to the winning commit-if-absent write) and
+    commit_retries."""
     return _read_commit(table, version).get("summary")
 
 
@@ -1244,7 +852,7 @@ def _layout_of(entries) -> dict:
         stats |= set(e.get("stats", {}))
         bloom |= set(e.get("bloom", {}))
         parts = e.get("partitions")
-        keys.add(None if not parts or e.get("spec") else tuple(parts["keys"]))
+        keys.add(tuple(parts["keys"]) if parts else None)
     (only,) = keys if len(keys) == 1 else (None,)
     return {
         "stats_cols": tuple(sorted(stats)),
@@ -1448,7 +1056,6 @@ def merge_upsert(
     key_cols: list[str],
     stats_cols: tuple[str, ...] = (),
     partition_by: tuple[str, ...] = (),
-    partition_spec: tuple[str, ...] = (),
 ) -> int:
     """Atomic MERGE (upsert), copy-on-write: ONE commit adds the source's
     files and rewrites the live files holding one of the source's
@@ -1460,13 +1067,7 @@ def merge_upsert(
     state = _state_at(table, cur)[1] if cur is not None else None
     merged = _check_schema(state["schema"] if state else None, _schema_of(df), False)
     source = _write_data_files(
-        df,
-        table,
-        (cur or 0) + 1,
-        stats_cols,
-        "data",
-        partition_by,
-        parse_partition_spec(partition_spec) if partition_spec else None,
+        df, table, (cur or 0) + 1, stats_cols, "data", partition_by
     )
     keys = df.select(*key_cols).distinct()
     hit = (
@@ -1504,263 +1105,6 @@ def rollback_to(table: str, version: int) -> int:
         removed_data=sorted(e["path"] for e in removed),
         summary=_change_summary(added, removed),
     )
-
-
-def _compact_commit(
-    spark: SparkSession,
-    table: str,
-    cur: int,
-    state: dict,
-    entries: list[dict],
-    rows,
-    stats_cols: tuple[str, ...],
-    bloom_cols: tuple[str, ...] | None,
-) -> int:
-    """Rewrite the live files `entries` as rows(their rows) and commit it
-    as a "compact" (_rewrite_commit, so it records its summary): the
-    logical row set is unchanged, so changelog and incremental scans skip
-    it. Outputs carry the inputs' markers and min/max stats, plus stats on
-    `stats_cols`; bloom_cols defaults to the columns bloomed in the
-    rewritten entries, so a maintenance rewrite preserves the table's
-    filters unless the caller overrides (pass () to drop them)."""
-    write = {} if bloom_cols is None else {"bloom_cols": bloom_cols}
-    return _rewrite_commit(
-        spark, table, cur, state, "compact", entries, rows,
-        stats_cols=stats_cols, partition_by=(), **write,
-    )
-
-
-def compact(
-    spark: SparkSession,
-    table: str,
-    n_files: int = 1,
-    stats_cols: tuple[str, ...] = (),
-    bloom_cols: tuple[str, ...] | None = None,
-) -> int:
-    """Rewrite the live row set into n_files fresh files and retire the
-    old data files in one atomic commit (_compact_commit). Logical rows
-    are unchanged — incremental_append_scan skips compact commits."""
-    cur = current_version(table)
-    if cur is None:
-        raise LookupError(f"cannot compact empty table {table}")
-    _, state = _state_at(table, cur)
-    return _compact_commit(
-        spark, table, cur, state, list(state["data"].values()),
-        lambda df: df.coalesce(n_files), stats_cols, bloom_cols,
-    )
-
-
-def compact_binpack(
-    spark: SparkSession,
-    table: str,
-    target_bytes: int = 128 * 1024 * 1024,
-    stats_cols: tuple[str, ...] = (),
-    bloom_cols: tuple[str, ...] | None = None,
-) -> int | None:
-    """Iceberg's binpack rewrite strategy: ONLY data files below
-    target_bytes are rewritten into ~target-sized packed files; files
-    already at size are untouched — the rewrite cost is bounded by the
-    small-file backlog, never the table size. This is the maintenance
-    loop a streaming sink needs: each micro-batch commit lands a few small
-    files, and the backlog is folded periodically without rewriting the
-    accumulated history. Returns the committed version, or None when
-    fewer than two small files exist (nothing to pack). bloom_cols
-    defaults to the columns bloomed in the small files (_compact_commit)."""
-    cur = current_version(table)
-    if cur is None:
-        raise LookupError(f"cannot compact empty table {table}")
-    _, state = _state_at(table, cur)
-    small = [e for e in state["data"].values() if e["bytes"] < target_bytes]
-    if len(small) < 2:
-        return None
-    n_files = max(1, -(-sum(e["bytes"] for e in small) // target_bytes))
-    return _compact_commit(
-        spark, table, cur, state, small,
-        lambda df: df.coalesce(n_files), stats_cols, bloom_cols,
-    )
-
-
-def compact_sort(
-    spark: SparkSession,
-    table: str,
-    sort_cols: tuple[str, ...],
-    n_files: int = 4,
-    stats_cols: tuple[str, ...] | None = None,
-    zorder: bool = False,
-    bloom_cols: tuple[str, ...] | None = None,
-) -> int:
-    """Iceberg's sort / z-order rewrite strategy (`rewrite_data_files
-    strategy => 'sort'` resp. `sort_order => zorder(a, b)`): rewrite ALL
-    live rows clustered on `sort_cols`, so every new data file covers a
-    compact key range and its manifest min/max stats become
-    (near-)disjoint: prune_files_where afterwards answers a point or range
-    predicate on the cluster key by opening ~1 file instead of every
-    file. Unlike binpack (small-file fold, cost bounded by the backlog)
-    this is a FULL rewrite, cost O(table): run it when cluster-key read
-    patterns justify it, not on a schedule.
-
-    sort (default): repartitionByRange(n_files, sort_cols) +
-    sortWithinPartitions — range boundaries come from Spark's sampler, so
-    file CUTS may vary between runs; the committed contents and every
-    subsequent scan are exact regardless (only pruning granularity
-    wiggles). zorder=True takes exactly two non-negative int columns,
-    Morton-interleaves them (operators/storage.zorder_key) and range-
-    clusters the interleaved key: each file is then a compact box in BOTH
-    dimensions, so min/max stats on the two RAW columns are tight
-    simultaneously — a 2-D box predicate prunes most files, where a
-    single-column sort only prunes on its leading column. Inputs must fit
-    in 16 bits each (pre-bucketize skewed/wide keys).
-
-    The commit reuses operation "compact" (_compact_commit): changelog and
-    incremental scans skip it as a row-level no-op."""
-    cur = current_version(table)
-    if cur is None:
-        raise LookupError(f"cannot rewrite empty table {table}")
-    _, state = _state_at(table, cur)
-    if not state["data"]:
-        raise LookupError(f"no live data files to rewrite: {table}")
-    if zorder and len(sort_cols) != 2:
-        raise ValueError("zorder takes exactly two sort columns")
-
-    def rows(df: DataFrame) -> DataFrame:
-        if not zorder:
-            return df.repartitionByRange(
-                n_files, *[F.col(c) for c in sort_cols]
-            ).sortWithinPartitions(*sort_cols)
-        from blogparser_spark.operators.storage import zorder_key
-
-        a, b = sort_cols
-        # range-partition directly on the interleaved key: contiguous z
-        # ranges per file with no bucket hashing (a hash repartition can
-        # collide two z buckets into one task and widen that file's box)
-        return (
-            df.withColumn("_z", zorder_key(F.col(a), F.col(b)))
-            .repartitionByRange(n_files, F.col("_z"))
-            .sortWithinPartitions("_z")
-            .drop("_z")
-        )
-
-    return _compact_commit(
-        spark, table, cur, state, list(state["data"].values()), rows,
-        tuple(stats_cols or sort_cols), bloom_cols,
-    )
-
-
-def clustering_depth(table: str, col: str) -> dict:
-    """Manifests-only clustering health on `col` (the metric behind
-    Delta's OPTIMIZE clustering decision): for each live data file, how
-    many live files' [min,max] ranges overlap its own — 1.0 means
-    disjoint ranges (a point predicate opens one file), n_files means
-    fully scattered (stats prune nothing). Computed with two sorted
-    arrays and binary searches per file (depth_i = n − #files entirely
-    below − #files entirely above), O(n log n) in the live file count —
-    driver-side metadata, no data read. Files without recorded stats on
-    `col` are excluded (and reported)."""
-    import bisect
-
-    _, state = _state_at(table)
-    ranges = [
-        tuple(e["stats"][col])
-        for e in state["data"].values()
-        if col in e.get("stats", {})
-    ]
-    n = len(ranges)
-    n_unstated = len(state["data"]) - n
-    if n == 0:
-        return {
-            "n_files": 0,
-            "n_unstated": n_unstated,
-            "avg_depth": 0.0,
-            "max_depth": 0,
-        }
-    try:
-        los = sorted(lo for lo, _hi in ranges)
-        his = sorted(hi for _lo, hi in ranges)
-    except TypeError:
-        # cross-type stats (schema type changed mid-history): report the
-        # conservative worst case rather than crash the health check
-        return {
-            "n_files": n,
-            "n_unstated": n_unstated,
-            "avg_depth": float(n),
-            "max_depth": n,
-        }
-    depths = []
-    for lo, hi in ranges:
-        below = bisect.bisect_left(his, lo)   # hi2 < lo: entirely below
-        above = n - bisect.bisect_right(los, hi)  # lo2 > hi: entirely above
-        depths.append(n - below - above)
-    return {
-        "n_files": n,
-        "n_unstated": n_unstated,
-        "avg_depth": round(sum(depths) / n, 3),
-        "max_depth": max(depths),
-    }
-
-
-def maintenance_plan(
-    spark: SparkSession,
-    table: str,
-    small_file_bytes: int = 32 << 20,
-    small_file_backlog: int = 4,
-    keep_versions: int = 16,
-    cluster_col: str | None = None,
-    max_avg_depth: float = 2.0,
-) -> DataFrame:
-    """Recommend maintenance from MANIFESTS alone (the planner half of
-    Iceberg's maintenance procedures): one row per recommended action with
-    its reason and the manifest numbers behind it. Emits
-    `compact_binpack` when the small-file backlog passes the threshold,
-    `expire_snapshots` when the retained version chain grows past
-    `keep_versions`, and — when `cluster_col` names the table's
-    read-pattern key — `compact_sort` when clustering_depth's average
-    overlap on that column exceeds `max_avg_depth` (appends have degraded
-    the layout until stats no longer prune). Planning cost is O(live files +
-    commits) driver-side metadata — at corpus scale this is the health
-    check a table-service cron runs per table, never a data read. An
-    empty result means the table is healthy."""
-    cur = current_version(table)
-    if cur is None:
-        return spark.createDataFrame(
-            [], "action string, reason string, n int"
-        )
-    _, state = _state_at(table, cur)
-    rows = []
-    small = [
-        e
-        for e in state["data"].values()
-        if int(e.get("bytes", 0)) < small_file_bytes
-    ]
-    if len(small) >= small_file_backlog:
-        rows.append(
-            (
-                "compact_binpack",
-                f"{len(small)} data files under {small_file_bytes} bytes",
-                len(small),
-            )
-        )
-    if cluster_col is not None:
-        cd = clustering_depth(table, cluster_col)
-        if cd["n_files"] >= 2 and cd["avg_depth"] > max_avg_depth:
-            rows.append(
-                (
-                    "compact_sort",
-                    f"avg {cd['avg_depth']} of {cd['n_files']} files overlap "
-                    f"on {cluster_col} (max_avg_depth={max_avg_depth})",
-                    cd["n_files"],
-                )
-            )
-    n_versions = len(list_versions(table))
-    if n_versions > keep_versions:
-        rows.append(
-            (
-                "expire_snapshots",
-                f"{n_versions} versions in the log (keep_versions="
-                f"{keep_versions})",
-                n_versions,
-            )
-        )
-    return spark.createDataFrame(rows, "action string, reason string, n int")
 
 
 def remove_orphans(table: str, min_age_sec: float = 0.0) -> int:
@@ -1871,22 +1215,18 @@ def incremental_append_scan(
     to_version: int | None = None,
 ) -> DataFrame:
     """Exactly the rows appended in (from_version, to_version]: the union
-    of the append commits' added files. Compact commits are logical no-ops
-    and are skipped; a commit that removes rows (overwrite, delete,
-    update, merge, replace, rollback) cannot be expressed as an append
-    stream, so it raises — the caller falls back to a full diff
-    (operators/diff.diff_datasets), the same contract as Iceberg's
-    incremental append scan."""
+    of the append commits' added files. A commit that removes rows
+    (overwrite, delete, update, merge, replace, rollback) cannot be
+    expressed as an append stream, so it raises — the caller falls back
+    to a full diff (operators/diff.diff_datasets), the same contract as
+    Iceberg's incremental append scan."""
     to_version, chain = _chain_between(table, from_version, to_version)
     paths: list[str] = []
     for c in chain:
-        op = c["operation"]
-        if op == "compact":
-            continue
-        if op != "append":
+        if c["operation"] != "append":
             raise ValueError(
-                f"commit v{c['version']} is {op!r}; incremental append scan "
-                "only spans append/compact commits"
+                f"commit v{c['version']} is {c['operation']!r}; incremental "
+                "append scan only spans append commits"
             )
         paths += [e["path"] for e in _added_entries(table, c)]
     # rows appended before an in-range schema change surface in the
@@ -1907,17 +1247,15 @@ def changelog_scan(
     (delete, update, merge, replace, overwrite, rollback) emits its net
     row diff: its added files' rows exceptAll its removed files' rows are
     inserts, the reverse are deletes, so rows a rewrite carried over
-    unchanged cancel. Compactions are logical no-ops. Every row is read
-    in the TO-version's schema, so the pieces align across an in-range
-    append that added a column. The output feeds
+    unchanged cancel. Every row is read in the TO-version's schema, so
+    the pieces align across an in-range append that added a column. The
+    output feeds
     aggregate.apply_retractable_delta so a downstream view refreshes from
     the delta without ever rescanning the base table."""
     to_version, chain = _chain_between(table, from_version, to_version)
     schema = _state_at(table, to_version)[1]["schema"]
     pieces: list[DataFrame] = []
     for c in chain:
-        if c["operation"] == "compact":
-            continue
         added = _read_files(
             spark, sorted(e["path"] for e in _added_entries(table, c)), schema
         )
@@ -2007,25 +1345,6 @@ def consume_incremental(
     return df, from_v, to_v, ack
 
 
-def prune_files(
-    table: str, col: str, lo, hi, version: int | None = None
-) -> tuple[list[str], int]:
-    """Manifest-stats pruning: live data files whose [min,max] for `col`
-    overlaps [lo,hi]; files without stats are kept (never prune blind).
-    Delegates to plan_scan, so partition-spec projection composes when
-    present. Returns (paths_to_read, n_files_skipped)."""
-    plan = plan_scan(table, {col: ("between", lo, hi)}, version)
-    return plan["paths"], plan["n_files_skipped"]
-
-
-def scan_between(
-    spark: SparkSession, table: str, col: str, lo, hi, version: int | None = None
-) -> DataFrame:
-    """Predicate scan that opens only stats-overlapping files (plan_scan),
-    then applies the exact filter and returns the live rows."""
-    return scan_where(spark, table, {col: ("between", lo, hi)}, version)
-
-
 # ---------------------------------------------------------------------------
 # expiry
 # ---------------------------------------------------------------------------
@@ -2044,31 +1363,39 @@ def expire_snapshots(
     files referenced ONLY by expired versions. Each step leaves the table
     readable: a base is written to a temp file and renamed into place, so
     a failed write leaves none. Time travel to an expired version raises
-    SnapshotExpired. Returns {files_removed, versions_removed}."""
+    SnapshotExpired. The log is read once, plus one replay to the oldest
+    retained version. Returns {files_removed, versions_removed}."""
     versions = list_versions(table)
+    commits = {v: _read_commit(table, v) for v in versions}
     retained_set = set(versions[-keep_last:])
     if max_age_sec is not None:
         cutoff = time.time() - max_age_sec
         retained_set |= {
-            v
-            for v in versions
-            if float(_read_commit(table, v).get("ts") or 0.0) >= cutoff
+            v for v, c in commits.items() if float(c.get("ts") or 0.0) >= cutoff
         }
     expired = [v for v in versions if v not in retained_set]
     if not expired:
         return {"files_removed": 0, "versions_removed": 0}
-    retained = sorted(retained_set)
-    # states and doomed files computed while the log is still intact
-    states = {v: _state_at(table, v)[1] for v in retained}
-    doomed = {
-        e["path"] for v in expired for e in _added_entries(table, _read_commit(table, v))
-    }.difference(*(st["data"] for st in states.values()))
-
-    # every retained version whose parent was expired persists its state;
-    # by induction every retained version then replays within
-    # retained commits + one base.
-    for v in retained:
-        parent = _read_commit(table, v).get("parent")
+    # Roll forward from the oldest retained version while the log is still
+    # intact: each commit's parent is the version before it, except past a
+    # gap an earlier expiry left, where the state is replayed (from its
+    # base). Every retained version whose parent was expired persists its
+    # state, so by induction every retained version then replays within
+    # retained commits + one base; `live` is every path a retained state
+    # holds.
+    live: set[str] = set()
+    state, prev = None, None
+    for v in versions[versions.index(min(retained_set)):]:
+        c = commits[v]
+        if prev is None or c.get("parent") != prev:
+            state = _state_at(table, v)[1]
+        else:
+            _apply(state, c)
+        prev = v
+        if v not in retained_set:
+            continue
+        live |= state["data"].keys()
+        parent = c.get("parent")
         if (
             parent is not None
             and parent not in retained_set
@@ -2076,10 +1403,13 @@ def expire_snapshots(
         ):
             snap = {
                 "version": v,
-                "data": list(states[v]["data"].values()),
-                "schema": states[v]["schema"],
+                "data": list(state["data"].values()),
+                "schema": state["schema"],
             }
             os.replace(_write_tmp(table, snap), _base_path(table, v))
+    doomed = {
+        e["path"] for v in expired for e in commits[v].get("added_data", [])
+    } - live
     for n in os.listdir(_log_dir(table)):
         if n.startswith("_base_v") and int(n[7:19]) not in retained_set:
             os.unlink(os.path.join(_log_dir(table), n))

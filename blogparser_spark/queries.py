@@ -8064,9 +8064,8 @@ def tablelog_time_travel_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def tablelog_incremental_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Incremental append scan between snapshots — the IVM input contract:
-    appends v1..v2, a compaction commit (logical no-op the scan must skip),
-    then append v4; `incremental_append_scan(from=1)` yields exactly the
-    rows of the v2 and v4 appends (event_id mod-3 slices 1 and 2). The
+    appends v1..v3; `incremental_append_scan(from=1)` yields exactly the
+    rows of the v2 and v3 appends (event_id mod-3 slices 1 and 2). The
     oracle computes the same slice union from the base table."""
     from blogparser_spark.operators import tablelog as tl
 
@@ -8074,8 +8073,7 @@ def tablelog_incremental_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = _events(spark, sf_dir).select("event_id", "user_id", "event_type")
     tl.append(spark, t, ev.filter(F.col("event_id") % 3 == 0))  # v1
     tl.append(spark, t, ev.filter(F.col("event_id") % 3 == 1))  # v2
-    tl.compact(spark, t)  # v3 — skipped by the scan
-    tl.append(spark, t, ev.filter(F.col("event_id") % 3 == 2))  # v4
+    tl.append(spark, t, ev.filter(F.col("event_id") % 3 == 2))  # v3
     inc = tl.incremental_append_scan(spark, t, from_version=1)
     return inc.groupBy("event_type").agg(
         F.count("*").cast("bigint").alias("cnt"),
@@ -8098,9 +8096,10 @@ def tablelog_pruned_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Manifest-stats file pruning composed with copy-on-write deletes:
     one append written repartitionByRange(5, event_id) so each file
     carries a tight [min,max] footer stat, a delete of user_id % 5 == 0
-    (its rewrites keep the stats), then `scan_between(100, 200)` — which
-    opens only the stats-overlapping file (the skip count is pinned in
-    tests/test_tablelog.py). Oracle: the plain filtered aggregate."""
+    (its rewrites keep the stats), then `scan_where` on event_id between
+    100 and 200 — which opens only the stats-overlapping file (the skip
+    count is pinned in tests/test_tablelog.py). Oracle: the plain filtered
+    aggregate."""
     from blogparser_spark.operators import tablelog as tl
 
     t = _tablelog_tmp("tablelog_prune_")
@@ -8112,7 +8111,7 @@ def tablelog_pruned_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
         stats_cols=("event_id",),
     )
     tl.delete_where(spark, t, F.col("user_id") % 5 == 0, key_cols=["event_id"])
-    got = tl.scan_between(spark, t, "event_id", 100, 200)
+    got = tl.scan_where(spark, t, {"event_id": ("between", 100, 200)})
     return got.groupBy("event_type").agg(
         F.count("*").cast("bigint").alias("cnt"),
         F.min("event_id").alias("min_id"),
@@ -8284,69 +8283,6 @@ def tablelog_cdc_view_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @_q(
-    "tablelog_hidden_partition_scan",
-    """
-    SELECT event_type, count(*)::BIGINT AS cnt,
-      min(event_id) AS min_id, max(event_id) AS max_id,
-      sum(user_id)::BIGINT AS sum_users
-    FROM events
-    WHERE ts BETWEEN TIMESTAMP '2024-01-05 00:00:00'
-                 AND TIMESTAMP '2024-01-12 23:59:59'
-      AND event_type = 'click' AND user_id % 5 <> 0
-    GROUP BY event_type
-    """,
-)
-def tablelog_hidden_partition_scan(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """Hidden partitioning end-to-end (Iceberg partition-spec transforms,
-    tablelog.scan_where): the even half of events is appended under
-    ("days(ts)",), the odd half under the EVOLVED spec ("days(ts)",
-    "bucket(4, event_type)") — per-file specs, exactly Iceberg's manifest
-    spec_id — then a copy-on-write delete of user_id % 5 == 0, then a scan
-    with plain predicates on the SOURCE columns (a ts day-range + an
-    event_type equality). scan_where plans against manifests only,
-    projecting the predicates through each file's own transforms (day
-    range prunes both specs; the bucket equality additionally prunes the
-    evolved files; old-spec files are never pruned blind on bucket), reads
-    the surviving files. The oracle is the plain filtered aggregate over
-    the base table: agreement proves pruning keeps every matching file
-    across spec evolution, rewritten files included. At 100 TB this is a point lookup opening ~2/30 days x
-    1/4 buckets of the files instead of a full-table scan, with zero
-    user-visible partition columns — the north rule's hidden-partitioning
-    contract. Pruning counts are pinned in tests/test_tablelog.py."""
-    from blogparser_spark.operators import tablelog as tl
-
-    t = _tablelog_tmp("tablelog_hidden_") + "/t"
-    ev = _events(spark, sf_dir).select(
-        "event_id", "ts", "user_id", "event_type"
-    )
-    half = F.pmod(F.col("event_id"), F.lit(2))
-    tl.append(spark, t, ev.filter(half == 0), partition_spec=("days(ts)",))
-    tl.append(
-        spark,
-        t,
-        ev.filter(half == 1),
-        partition_spec=("days(ts)", "bucket(4, event_type)"),
-    )
-    tl.delete_where(spark, t, F.col("user_id") % 5 == 0, key_cols=["event_id"])
-    got = tl.scan_where(
-        spark,
-        t,
-        {
-            "ts": ("between", "2024-01-05 00:00:00", "2024-01-12 23:59:59"),
-            "event_type": ("=", "click"),
-        },
-    )
-    return got.groupBy("event_type").agg(
-        F.count("*").cast("bigint").alias("cnt"),
-        F.min("event_id").alias("min_id"),
-        F.max("event_id").alias("max_id"),
-        F.sum("user_id").cast("bigint").alias("sum_users"),
-    )
-
-
-@_q(
     "tablelog_update_where_counts",
     """
     SELECT event_type, count(*)::BIGINT AS cnt,
@@ -8394,88 +8330,6 @@ def tablelog_update_where_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @_q(
-    "tablelog_history_audit",
-    """
-    SELECT 1 AS version, 'append' AS operation,
-      (SELECT count(*) FROM events WHERE event_id % 3 = 0)::BIGINT AS rows_added
-    UNION ALL SELECT 2, 'append',
-      (SELECT count(*) FROM events WHERE event_id % 3 = 1)::BIGINT
-    UNION ALL SELECT 3, 'append',
-      (SELECT count(*) FROM events WHERE event_id % 3 = 2)::BIGINT
-    UNION ALL SELECT 4, 'delete', (
-      SELECT coalesce(sum(kept), 0) FROM (
-        SELECT count(*) FILTER (WHERE user_id % 7 <> 0) AS kept,
-          count(*) FILTER (WHERE user_id % 7 = 0) AS hit
-        FROM events GROUP BY event_id % 3
-      ) WHERE hit > 0)::BIGINT
-    UNION ALL SELECT 5, 'compact',
-      (SELECT count(*) FROM events WHERE user_id % 7 <> 0)::BIGINT
-    """,
-)
-def tablelog_history_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Metadata inspection tables on the snapshot-log format
-    (tablelog.table_history — Iceberg's `history`/`snapshots` metadata
-    tables): three appends of event_id mod-3 slices (one file each), a
-    copy-on-write delete, and a compaction, then the commit history READ
-    AS A DATAFRAME — one row per commit with its operation and manifest
-    rows_added tally. The oracle replays each commit's expected tally from
-    the base table (the delete's rows_added is the surviving rows of the
-    slices it rewrote, the compact's the live row count), proving the
-    history view is assembled from manifests alone — planning cost is
-    O(commits), no data file is opened. No reference analog (the Go CLI
-    has no storage layer)."""
-    from blogparser_spark.operators import tablelog as tl
-
-    t = _tablelog_tmp("tablelog_hist_") + "/t"
-    ev = _events(spark, sf_dir).select("event_id", "user_id", "event_type")
-    for m in (0, 1, 2):
-        tl.append(spark, t, ev.filter(F.col("event_id") % 3 == m).coalesce(1))
-    tl.delete_where(spark, t, F.col("user_id") % 7 == 0, key_cols=["event_id"])
-    tl.compact(spark, t)
-    return tl.table_history(spark, t).select(
-        "version", "operation", "rows_added"
-    )
-
-
-@_q(
-    "tablelog_add_files_counts",
-    """
-    SELECT event_type, count(*)::BIGINT AS cnt,
-      min(event_id) AS min_id, max(event_id) AS max_id
-    FROM events WHERE user_id % 5 <> 0 GROUP BY event_type
-    """,
-)
-def tablelog_add_files_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """By-reference import on the snapshot-log format (tablelog.add_files —
-    Iceberg's add_files migration procedure): the even event_id slice is
-    written as plain external parquet and imported in ONE atomic commit
-    whose manifests (rows, bytes, min/max footer stats) come from parquet
-    footers only — no data read, no byte copied; the odd slice arrives
-    through the normal append path, and a delete of
-    user_id % 5 == 0 rewrites imported and native files alike. The oracle
-    replays the union + delete on the base table — agreement proves
-    imported files are first-class citizens of the read path (projection,
-    deletes, stats) with no byte copied on import. No reference analog (the Go CLI
-    has no storage layer, sample/main.go:32-47)."""
-    from blogparser_spark.operators import tablelog as tl
-
-    base = _tablelog_tmp("tablelog_af_")
-    src, t = base + "/ext", base + "/t"
-    ev = _events(spark, sf_dir).select("event_id", "user_id", "event_type")
-    ev.filter(F.col("event_id") % 2 == 0).repartitionByRange(
-        4, "event_id"
-    ).write.parquet(src)
-    tl.append(spark, t, ev.filter(F.col("event_id") % 2 == 1))  # v1 native
-    tl.add_files(spark, t, src, stats_cols=("event_id",))  # v2 by reference
-    tl.delete_where(spark, t, F.col("user_id") % 5 == 0, key_cols=["event_id"])
-    return tl.read_snapshot(spark, t).groupBy("event_type").agg(
-        F.count("*").cast("bigint").alias("cnt"),
-        F.min("event_id").alias("min_id"),
-        F.max("event_id").alias("max_id"),
-    )
-
-
-@_q(
     "tablelog_consume_exactly_once",
     """
     SELECT event_type, count(*)::BIGINT AS cnt
@@ -8517,43 +8371,6 @@ def tablelog_consume_exactly_once(spark: SparkSession, sf_dir: str) -> DataFrame
     ack2()
     return tl.read_snapshot(spark, sink).groupBy("event_type").agg(
         F.count("*").cast("bigint").alias("cnt")
-    )
-
-
-@_q(
-    "tablelog_partitions_stats",
-    """
-    SELECT '{"event_type": "' || event_type || '"}' AS partition,
-      count(*)::BIGINT AS n_rows, 1 AS min_seq, 2 AS max_seq
-    FROM events GROUP BY event_type
-    """,
-)
-def tablelog_partitions_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Partitions metadata table on the snapshot-log format
-    (tablelog.table_partitions — Iceberg's `partitions` table): events land
-    hive-partitioned on event_type across two append commits (even then odd
-    event_id slices), and the per-partition manifest aggregates — row
-    totals and the sequence-number range — are read WITHOUT opening any
-    data file. The oracle recomputes each partition's row count and pins
-    min_seq=1/max_seq=2 (every event_type occurs in both parity slices),
-    proving the view is assembled from manifests alone. This is the
-    per-sink size/skew health check of the routed-table design. No
-    reference analog (the Go CLI has no storage layer)."""
-    from blogparser_spark.operators import tablelog as tl
-
-    t = _tablelog_tmp("tablelog_parts_") + "/t"
-    ev = _events(spark, sf_dir).select("event_id", "event_type")
-    tl.append(
-        spark, t, ev.filter(F.col("event_id") % 2 == 0), partition_by=("event_type",)
-    )
-    tl.append(
-        spark, t, ev.filter(F.col("event_id") % 2 == 1), partition_by=("event_type",)
-    )
-    return tl.table_partitions(spark, t).select(
-        "partition",
-        F.col("rows").alias("n_rows"),
-        "min_seq",
-        "max_seq",
     )
 
 
@@ -8934,77 +8751,6 @@ def pq_rerank_topk_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     cb = similarity.pq_train(emb, m=4, ksub=16, iters=1)
     return similarity.pq_rerank_topk(
         emb, cb, n_queries=5, k=5, shortlist_mult=4
-    )
-
-
-@_q(
-    "tablelog_sort_rewrite_scan",
-    """
-    SELECT event_type, count(*)::BIGINT AS cnt,
-      min(event_id) AS min_id, max(event_id) AS max_id
-    FROM events
-    WHERE event_id BETWEEN 150 AND 250 AND user_id % 7 <> 0
-    GROUP BY event_type
-    """,
-)
-def tablelog_sort_rewrite_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Sort rewrite (tablelog.compact_sort — Iceberg's rewrite_data_files
-    strategy=>'sort'): events land hash-scattered (every file's event_id
-    range overlaps, nothing prunes), a copy-on-write delete rewrites them,
-    then ONE clustering rewrite range-partitions on event_id — after which the ranged scan opens only stats-overlapping
-    files (pruning pinned in tests/test_tablelog.py; cuts vary with the
-    range sampler so the pin lives there, not here). Oracle: the plain
-    filtered aggregate."""
-    from blogparser_spark.operators import tablelog as tl
-
-    t = _tablelog_tmp("tablelog_sortrw_") + "/t"
-    ev = _events(spark, sf_dir).select("event_id", "user_id", "event_type")
-    tl.append(spark, t, ev.repartition(5))
-    tl.delete_where(spark, t, F.col("user_id") % 7 == 0, key_cols=["event_id"])
-    tl.compact_sort(spark, t, ("event_id",), n_files=5)
-    got = tl.scan_where(spark, t, {"event_id": ("between", 150, 250)})
-    return got.groupBy("event_type").agg(
-        F.count("*").cast("bigint").alias("cnt"),
-        F.min("event_id").alias("min_id"),
-        F.max("event_id").alias("max_id"),
-    )
-
-
-@_q(
-    "tablelog_zorder_box_scan",
-    """
-    SELECT count(*)::BIGINT AS cnt,
-      min(event_id) AS min_id, max(event_id) AS max_id,
-      sum(event_id)::BIGINT AS sum_id
-    FROM events
-    WHERE user_id % 16 BETWEEN 2 AND 5 AND event_id % 16 BETWEEN 8 AND 11
-    """,
-)
-def tablelog_zorder_box_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Z-order rewrite (tablelog.compact_sort zorder=True — Iceberg's
-    sort_order=>zorder(a,b)): two bucketized dimensions Morton-interleave
-    into one cluster key, so each rewritten file is a compact box in BOTH
-    dims and a 2-D box predicate prunes most files from manifests alone
-    (effect pinned in tests/test_tablelog.py). The scan still returns the
-    exact box contents — the oracle recomputes them directly."""
-    from blogparser_spark.operators import tablelog as tl
-
-    t = _tablelog_tmp("tablelog_zbox_") + "/t"
-    ev = _events(spark, sf_dir).select(
-        "event_id",
-        (F.col("user_id") % 16).alias("a"),
-        (F.col("event_id") % 16).alias("b"),
-    )
-    tl.append(spark, t, ev.repartition(4))
-    tl.compact_sort(spark, t, ("a", "b"), n_files=8, zorder=True)
-    got = tl.scan_where(
-        spark, t, {"a": ("between", 2, 5), "b": ("between", 8, 11)}
-    )
-    return got.agg(
-        F.count("*").cast("bigint").alias("cnt"),
-        F.min("event_id").alias("min_id"),
-        F.max("event_id").alias("max_id"),
-        F.sum("event_id").cast("bigint").alias("sum_id"),
     )
 
 

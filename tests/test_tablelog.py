@@ -1,6 +1,6 @@
 """Snapshot-log table format (operators/tablelog.py): commit atomicity,
-time travel, copy-on-write deletes, compaction, incremental append scans,
-snapshot expiry, and stats pruning."""
+time travel, copy-on-write deletes, incremental append scans, snapshot
+expiry, and partition, stats and bloom pruning."""
 
 from __future__ import annotations
 
@@ -36,9 +36,8 @@ def test_append_read_roundtrip(spark, tmp_path):
     v2 = tl.append(spark, t, _batch(spark, 10, 25))
     assert (v1, v2) == (1, 2)
     assert _ids(tl.read_snapshot(spark, t)) == list(range(25))
-    lineage = tl.snapshot_lineage(t)
-    assert [c["operation"] for c in lineage] == ["append", "append"]
-    assert [c["rows_added"] for c in lineage] == [10, 15]
+    assert [tl._read_commit(t, v)["operation"] for v in (1, 2)] == ["append", "append"]
+    assert [tl.commit_summary(t, v)["added_records"] for v in (1, 2)] == [10, 15]
 
 
 def test_time_travel(spark, tmp_path):
@@ -82,30 +81,17 @@ def test_delete_sequence_scoping(spark, tmp_path):
     assert _ids(tl.read_snapshot(spark, t)) == [0, 1, 2] + list(range(5, 10))
 
 
-def test_compact_folds_deletes(spark, tmp_path):
-    t = str(tmp_path / "t")
-    tl.append(spark, t, _batch(spark, 0, 10).repartition(4))
-    tl.append(spark, t, _batch(spark, 10, 20).repartition(4))
-    tl.delete_where(spark, t, F.col("event_id") % 2 == 0, key_cols=["event_id"])
-    before = _ids(tl.read_snapshot(spark, t))
-    v = tl.compact(spark, t, n_files=1)
-    _, state = tl._state_at(t, v)
-    assert len(state["data"]) == 1
-    assert _ids(tl.read_snapshot(spark, t)) == before == list(range(1, 20, 2))
-
-
 def test_incremental_append_scan(spark, tmp_path):
     t = str(tmp_path / "t")
     tl.append(spark, t, _batch(spark, 0, 10))  # v1
     tl.append(spark, t, _batch(spark, 10, 20))  # v2
-    tl.compact(spark, t)  # v3 — logical no-op, skipped
-    tl.append(spark, t, _batch(spark, 20, 30))  # v4
+    tl.append(spark, t, _batch(spark, 20, 30))  # v3
     inc = tl.incremental_append_scan(spark, t, from_version=1)
     assert _ids(inc) == list(range(10, 30))
     # a delete commit in range cannot be expressed as appends
     tl.delete_where(spark, t, F.col("event_id") < 5, key_cols=["event_id"])
     with pytest.raises(ValueError, match="delete"):
-        tl.incremental_append_scan(spark, t, from_version=4)
+        tl.incremental_append_scan(spark, t, from_version=3)
 
 
 def test_expire_snapshots(spark, tmp_path):
@@ -193,6 +179,29 @@ def test_append_retries_on_commit_race(spark, tmp_path):
     assert _ids(tl.read_snapshot(spark, t)) == list(range(10))
 
 
+def test_replace_append_replays_the_log_once(spark, tmp_path, monkeypatch):
+    """A replace commit plans its removals and checks its schema against
+    one replay of the log, not one each."""
+    t = str(tmp_path / "t")
+    tl.append(spark, t, _batch(spark, 0, 10), marker="old")
+    calls = []
+    real = tl._state_at
+
+    def counted(table, version=None):
+        calls.append(version)
+        return real(table, version)
+
+    monkeypatch.setattr(tl, "_state_at", counted)
+    v = tl.append(
+        spark, t, _batch(spark, 20, 25), marker="new",
+        replace=(F.col("event_id") < 10, lambda m: m == "old"),
+    )
+    monkeypatch.undo()
+    assert calls == [1]
+    assert tl._read_commit(t, v)["operation"] == "replace"
+    assert _ids(tl.read_snapshot(spark, t)) == list(range(20, 25))
+
+
 def test_non_append_commit_conflict_raises(spark, tmp_path, monkeypatch):
     """A delete that read snapshot v1 must NOT silently commit over a
     concurrent writer's v2: simulate the race by pinning the version read
@@ -216,15 +225,19 @@ def test_stats_pruning_scan(spark, tmp_path):
             _batch(spark, lo, lo + 20).coalesce(1),
             stats_cols=("event_id",),
         )
-    paths, skipped = tl.prune_files(t, "event_id", 45, 55)
-    assert skipped == 4 and len(paths) == 1
-    paths2, skipped2 = tl.prune_files(t, "event_id", 15, 25)  # straddles two
-    assert skipped2 == 3 and len(paths2) == 2
-    got = tl.scan_between(spark, t, "event_id", 45, 55)
+    mid = {"event_id": ("between", 45, 55)}
+    plan = tl.plan_scan(t, mid)
+    assert plan["pruned_by_stats"] == plan["n_files_skipped"] == 4
+    assert len(plan["paths"]) == 1
+    plan2 = tl.plan_scan(t, {"event_id": ("between", 15, 25)})  # straddles two
+    assert plan2["n_files_skipped"] == 3 and len(plan2["paths"]) == 2
+    got = tl.scan_where(spark, t, mid)
     assert _ids(got) == list(range(45, 56))
+    assert _opened(got) == {os.path.abspath(p) for p in plan["paths"]}
     # pruning must compose with deletes: the rewrite keeps the file's stats
     tl.delete_where(spark, t, F.col("event_id") == 50, key_cols=["event_id"])
-    assert _ids(tl.scan_between(spark, t, "event_id", 45, 55)) == [
+    assert tl.plan_scan(t, mid)["n_files_skipped"] == 4
+    assert _ids(tl.scan_where(spark, t, mid)) == [
         i for i in range(45, 56) if i != 50
     ]
 
@@ -263,12 +276,21 @@ def _opened(df) -> set[str]:
     return {unquote(urlparse(u).path) for u in df.inputFiles()}
 
 
+def _tuple_rows(e: dict) -> list[tuple[dict, int]]:
+    """An entry's partition tuples as ({key: value}, rows) pairs; [] when
+    the entry has no partition values or its set was not recorded."""
+    parts = e.get("partitions")
+    if not parts or parts.get("tuples") is None:
+        return []
+    return [(dict(zip(parts["keys"], vals)), n) for vals, n in parts["tuples"]]
+
+
 def _holding(state: dict, part: dict) -> set[str]:
     """Live files whose recorded tuples hold `part`."""
     return {
         os.path.abspath(p)
         for p, e in state["data"].items()
-        if any(t == part for t, _n in tl._tuple_rows(e))
+        if any(t == part for t, _n in _tuple_rows(e))
     }
 
 
@@ -285,7 +307,7 @@ def test_partitioned_append_manifest_and_pruned_read(spark, tmp_path):
     _, state = tl._state_at(t)
     counts: dict[str, int] = {}
     for e in state["data"].values():
-        for part, n in tl._tuple_rows(e):
+        for part, n in _tuple_rows(e):
             counts[part["event_type"]] = counts.get(part["event_type"], 0) + n
     assert counts == {f"type_{i}": 50 for i in range(12)}
     # data files keep the real column (no hive-stripping)
@@ -378,7 +400,7 @@ def test_route_commit_writes_fewer_files_than_sinks(spark, tmp_path):
     got: dict[tuple, int] = {}
     for e in state["data"].values():
         assert e["partitions"]["keys"] == SINK_KEYS
-        for part, n in tl._tuple_rows(e):
+        for part, n in _tuple_rows(e):
             key = tuple(part[k] for k in SINK_KEYS)
             got[key] = got.get(key, 0) + n
     assert got == want
@@ -418,53 +440,28 @@ def test_routed_sink_read_opens_only_files_holding_the_sink(spark, tmp_path):
 
 
 def test_partitions_table_exact_across_multi_sink_files(spark, tmp_path):
-    """table_partitions gives each tuple's exact row total when files
-    hold many tuples, and counts a tuple's files rather than directories."""
+    """The manifest entries' partition tuples give each tuple's exact row
+    total when files hold many tuples, and each file's tuple rows add up
+    to its row count."""
     df = _sinks_df(spark)
     want = _sink_counts(df)
+    keys = ("channel", "tool_category", "parse_status")
     t = str(tmp_path / "t")
-    tl.append(
-        spark, t, df, partition_by=("channel", "tool_category", "parse_status")
-    )
-    n_files = len(tl._state_at(t)[1]["data"])
-    assert n_files < len(want)
-    rows = tl.table_partitions(spark, t).collect()
-    got = {}
-    for r in rows:
-        part = json.loads(r.partition)
-        got[(part["channel"], part["tool_category"], part["parse_status"])] = r.rows
-        assert 1 <= r.n_files <= n_files and (r.min_seq, r.max_seq) == (1, 1)
+    tl.append(spark, t, df, partition_by=keys)
+    entries = list(tl._state_at(t)[1]["data"].values())
+    assert len(entries) < len(want)
+    got: dict[tuple, int] = {}
+    for e in entries:
+        assert e["seq"] == 1 and sum(n for _p, n in _tuple_rows(e)) == e["rows"]
+        for part, n in _tuple_rows(e):
+            key = tuple(part[k] for k in keys)
+            got[key] = got.get(key, 0) + n
     assert got == want
-    total_bytes = tl.table_files(spark, t).agg(F.sum("bytes")).first()[0]
-    assert 0 < sum(r.bytes for r in rows) <= total_bytes
-
-
-def test_add_files_hive_source_still_prunes(spark, tmp_path):
-    """add_files normalises path-parsed `_p_<k>=<v>` values (files that
-    also hold `<k>`) into one-tuple partition sets, so per-value reads
-    open only that value's files."""
-    src = str(tmp_path / "hive")
-    d = spark.range(0, 60).selectExpr("id AS k", "concat('s', id % 3) AS sink")
-    d.withColumn("_p_sink", F.col("sink")).write.partitionBy("_p_sink").parquet(src)
-    t = str(tmp_path / "t")
-    tl.add_files(spark, t, src, stats_cols=("k",))
-    _, state = tl._state_at(t)
-    for e in state["data"].values():
-        ((part, n),) = tl._tuple_rows(e)
-        assert n == e["rows"] and e["path"].endswith(".parquet")
-        assert f"_p_sink={part['sink']}" in e["path"]
-    got = tl.read_partition(spark, t, {"sink": "s1"})
-    assert _opened(got) == _holding(state, {"sink": "s1"})
-    assert len(_opened(got)) < len(state["data"])
-    assert sorted(r.k for r in got.collect()) == list(range(1, 60, 3))
-    parts = {r.partition: r.rows for r in tl.table_partitions(spark, t).collect()}
-    assert parts == {json.dumps({"sink": f"s{i}"}): 20 for i in range(3)}
 
 
 def test_file_past_tuple_bound_is_kept(spark, tmp_path):
     """A file holding more than PART_TUPLES_MAX tuples records no tuple
-    set; it is never pruned, reads stay exact, and the partitions table
-    files it under a NULL partition."""
+    set; it is never pruned and reads stay exact."""
     n_keys = tl.PART_TUPLES_MAX + 6
     t = str(tmp_path / "t")
     df = spark.range(0, n_keys * 3).selectExpr(
@@ -477,8 +474,6 @@ def test_file_past_tuple_bound_is_kept(spark, tmp_path):
     got = tl.read_partition(spark, t, {"key": "k7"})
     assert _opened(got) == {os.path.abspath(e["path"])}
     assert sorted(r.v for r in got.collect()) == [7, 7 + n_keys, 7 + 2 * n_keys]
-    rows = [(r.partition, r.rows) for r in tl.table_partitions(spark, t).collect()]
-    assert rows == [(None, n_keys * 3)]
 
 
 def test_append_commit_summary_exact(spark, tmp_path, monkeypatch):
@@ -521,10 +516,9 @@ def test_append_commit_summary_exact(spark, tmp_path, monkeypatch):
     assert s3["added_data_files"] == len(c3["added_data"]) and s3["rewrite_s"] >= 0
 
 
-def test_compact_overwrite_and_rollback_record_summaries(spark, tmp_path):
-    """Compaction, overwrite and rollback commits record what they added
-    and removed, like every other commit: compaction rewrites every file
-    it removes, overwrite and rollback rewrite none."""
+def test_overwrite_and_rollback_record_summaries(spark, tmp_path):
+    """Overwrite and rollback commits record what they added and removed,
+    like every other commit, and rewrite none of the files they remove."""
     t = str(tmp_path / "t")
 
     def added_size(v):
@@ -540,13 +534,10 @@ def test_compact_overwrite_and_rollback_record_summaries(spark, tmp_path):
 
     tl.append(spark, t, spark.range(0, 30).repartition(3))  # v1: 3 files
     v2 = tl.append(spark, t, spark.range(30, 40).coalesce(1))
-    v3 = tl.compact(spark, t, n_files=1)
-    assert counts(v3) == (1, 40, 4, 40, 4)
-    assert tl.commit_summary(t, v3)["rewrite_s"] >= 0
-    v4 = tl.overwrite(spark, t, spark.range(0, 7).coalesce(1))
-    assert counts(v4) == (1, 7, 1, 40, 0)
-    v5 = tl.rollback_to(t, v2)
-    assert counts(v5) == (4, 40, 1, 7, 0)
+    v3 = tl.overwrite(spark, t, spark.range(0, 7).coalesce(1))
+    assert counts(v3) == (1, 7, 4, 40, 0)
+    v4 = tl.rollback_to(t, v2)
+    assert counts(v4) == (4, 40, 1, 7, 0)
     assert tl.read_snapshot(spark, t).count() == 40
 
 
@@ -574,6 +565,33 @@ def test_plan_scan_reports_why_files_were_pruned(spark, tmp_path):
     assert report({}) == (0, 0, 0, 3)
 
 
+def test_identity_partition_pruning_semantics(spark, tmp_path):
+    """Partition tuples hold str(value): '=' matches as a string, and
+    'between' compares numerically when the value and both bounds are
+    numbers (9 < 10, although "9" > "10"), else lexically. A file whose
+    tuple holds a NULL key is never pruned on it."""
+    t = str(tmp_path / "t")
+    for p in (9, 10, 11, None):  # one file per key value
+        df = spark.range(0, 3).selectExpr(
+            "id AS v", f"CAST({'NULL' if p is None else p} AS INT) AS p"
+        )
+        tl.append(spark, t, df.coalesce(1), partition_by=("p",))
+    state = tl._state_at(t)[1]
+    by_key = {_tuple_rows(e)[0][0]["p"]: path for path, e in state["data"].items()}
+    assert set(by_key) == {"9", "10", "11", None}
+
+    def kept(preds):
+        plan = tl.plan_scan(t, preds)
+        assert plan["n_files_skipped"] == plan["pruned_by_partition"]
+        return {k for k, path in by_key.items() if path in plan["paths"]}
+
+    assert kept({"p": ("between", 9, 10)}) == {"9", "10", None}
+    assert kept({"p": ("between", 10, 99)}) == {"10", "11", None}
+    assert kept({"p": ("=", 10)}) == kept({"p": ("=", "10")}) == {"10", None}
+    assert kept({"p": ("between", "10", "10z")}) == {"10", None}  # lexical
+    assert sorted(r.p for r in tl.scan_where(spark, t, {"p": ("=", 10)}).collect()) == [10] * 3
+
+
 def test_failed_expiry_base_write_leaves_table_readable(spark, tmp_path, monkeypatch):
     """Expiry writes each rebase base to a temp file and renames it into
     place: a write that fails part-way leaves no base and no temp file,
@@ -597,6 +615,46 @@ def test_failed_expiry_base_write_leaves_table_readable(spark, tmp_path, monkeyp
     assert tl.expire_snapshots(t, keep_last=2)["versions_removed"] == 1
     assert _ids(tl.read_snapshot(spark, t)) == list(range(30))
     assert _ids(tl.read_snapshot(spark, t, version=2)) == list(range(20))
+
+def test_expiry_replays_the_log_once(tmp_path, monkeypatch):
+    """Expiry reads each commit a bounded number of times: one pass over
+    the log plus one replay to the oldest retained version, not one
+    replay per retained version. A synthetic 40-commit log (entries point
+    at files that do not exist; every fifth commit replaces the file
+    before it) keeps its newest state and time travel across the cut."""
+    t = str(tmp_path / "t")
+    for v in range(1, 41):
+        c = {
+            "version": v,
+            "parent": v - 1 or None,
+            "operation": "append",
+            "ts": float(v),
+            "schema": [["k", "bigint"]] if v == 1 else None,
+            "added_data": [
+                {"path": f"/nonexistent/{v}.parquet", "rows": 1, "bytes": 1,
+                 "seq": v, "stats": {}}
+            ],
+        }
+        if v % 5 == 0:
+            c["operation"], c["removed_data"] = "replace", [f"/nonexistent/{v - 1}.parquet"]
+        assert tl._try_commit(t, c)
+    before = {v: tl._state_at(t, v)[1] for v in (21, 30, 40)}
+    reads = []
+    real = tl._read_commit
+
+    def counted(table, version):
+        reads.append(version)
+        return real(table, version)
+
+    monkeypatch.setattr(tl, "_read_commit", counted)
+    res = tl.expire_snapshots(t, keep_last=20)
+    monkeypatch.undo()
+    assert res == {"files_removed": 0, "versions_removed": 20}
+    assert len(reads) <= 3 * 40
+    assert tl.list_versions(t) == list(range(21, 41))
+    assert os.path.exists(tl._base_path(t, 21))
+    assert {v: tl._state_at(t, v)[1] for v in (21, 30, 40)} == before
+
 
 @settings(max_examples=40, deadline=None)
 @given(
@@ -686,7 +744,7 @@ def test_rollback_preserves_history_and_seq_scoping(spark, tmp_path):
     assert _ids(tl.read_snapshot(spark, t, version=3)) == [0, 1] + list(
         range(4, 10)
     )
-    assert [c["operation"] for c in tl.snapshot_lineage(t)] == [
+    assert [tl._read_commit(t, v)["operation"] for v in tl.list_versions(t)] == [
         "append", "delete", "append", "rollback",
     ]
 
@@ -748,36 +806,6 @@ def test_changelog_refreshes_view_without_base_rescan(spark, tmp_path):
     assert a == b
 
 
-def test_compact_binpack_rewrites_only_small_files(spark, tmp_path):
-    """Binpack folds the small-file backlog, leaves big files alone, and
-    never changes the logical row set."""
-    t = str(tmp_path / "t")
-    big = _batch(spark, 100, 20100).coalesce(1)
-    tl.append(spark, t, big)                              # one "big" file
-    for lo in (50, 55, 60):                               # small-file backlog
-        tl.append(spark, t, _batch(spark, lo, lo + 5).coalesce(1))
-    tl.delete_where(spark, t, F.col("event_id").isin(52, 61), ["event_id"])
-    _, pre = tl._state_at(t)
-    big_paths = {
-        p for p, e in pre["data"].items() if e["rows"] == 20000
-    }
-    big_bytes = max(e["bytes"] for e in pre["data"].values())
-    v = tl.compact_binpack(spark, t, target_bytes=big_bytes)
-    assert v is not None
-    _, post = tl._state_at(t)
-    assert big_paths <= set(post["data"])          # big file untouched
-    assert len(post["data"]) == len(big_paths) + 1  # backlog → one packed file
-    expected = [
-        e
-        for e in list(range(50, 65)) + list(range(100, 20100))
-        if e not in (52, 61)
-    ]
-    assert _ids(tl.read_snapshot(spark, t)) == expected
-    # binpack is a logical no-op for the changelog
-    ch = tl.changelog_scan(spark, t, from_version=v - 1, to_version=v)
-    assert ch.count() == 0
-
-
 def test_remove_orphans_sweeps_uncommitted_files_only(spark, tmp_path):
     t = str(tmp_path / "t")
     tl.append(spark, t, _batch(spark, 0, 10))
@@ -788,167 +816,6 @@ def test_remove_orphans_sweeps_uncommitted_files_only(spark, tmp_path):
     assert removed > 0
     assert _ids(tl.read_snapshot(spark, t)) == list(range(10))
     assert tl.remove_orphans(t) == 0  # idempotent
-
-
-# ---------------------------------------------------------------------------
-# hidden partitioning (Iceberg partition-spec transforms)
-# ---------------------------------------------------------------------------
-
-
-def _hidden_batch(spark, lo: int, hi: int):
-    return spark.range(lo, hi).select(
-        F.col("id").alias("event_id"),
-        F.concat(F.lit("conv-"), (F.col("id") % 37).cast("string")).alias(
-            "conv_id"
-        ),
-        F.to_timestamp(
-            F.concat(
-                F.lit("2026-08-"),
-                F.lpad(((F.col("id") % 9) + 1).cast("string"), 2, "0"),
-                F.lit(" 10:00:00"),
-            )
-        ).alias("ts"),
-        (F.col("id") % 100).alias("val"),
-    )
-
-
-def test_partition_spec_parse_and_twin_matches_spark(spark):
-    """Every transform's Python twin must agree bit-for-bit with the Spark
-    expression — pruning projects predicate literals through the twin."""
-    fields = tl.parse_partition_spec(
-        ("days(ts)", "bucket(4, conv_id)", "truncate(6, conv_id)", "event_id")
-    )
-    assert [f["name"] for f in fields] == [
-        "ts_day",
-        "conv_id_bucket_4",
-        "conv_id_truncate_6",
-        "event_id",
-    ]
-    df = _hidden_batch(spark, 0, 200)
-    dtypes = dict(df.dtypes)
-    rows = df.select(
-        "conv_id",
-        "ts",
-        "event_id",
-        *[
-            tl._transform_expr(f, dtypes[f["source"]]).alias(f"t{i}")
-            for i, f in enumerate(fields)
-        ],
-    ).collect()
-    for r in rows:
-        assert str(r.t0) == tl._twin_transform(fields[0], str(r.ts))
-        assert str(r.t1) == tl._twin_transform(fields[1], r.conv_id)
-        assert str(r.t2) == tl._twin_transform(fields[2], r.conv_id)
-        assert str(r.t3) == tl._twin_transform(fields[3], r.event_id)
-    with pytest.raises(ValueError):
-        tl.parse_partition_spec(("bucket(conv_id)",))
-
-
-def test_hidden_partition_scan_prunes_and_is_exact(spark, tmp_path):
-    """A day-range + bucket-equality scan opens only the files whose
-    transformed partition values can match — and the result is exactly the
-    full-scan filter."""
-    t = str(tmp_path / "t")
-    df = _hidden_batch(spark, 0, 1000)
-    tl.append(
-        spark,
-        t,
-        df,
-        stats_cols=("event_id",),
-        partition_spec=("days(ts)", "bucket(4, conv_id)"),
-    )
-    preds = {
-        "ts": ("between", "2026-08-02 00:00:00", "2026-08-03 23:59:59"),
-        "conv_id": ("=", "conv-5"),
-    }
-    paths, skipped = tl.prune_files_where(t, preds)
-    total = len(tl._state_at(t)[1]["data"])
-    # 2 of 9 days x 1 of 4 buckets: at most 2/36 of the files survive
-    assert skipped > 0 and len(paths) <= max(1, total * 2 // 18)
-    got = _ids(tl.scan_where(spark, t, preds))
-    exp = _ids(
-        df.filter(
-            F.col("ts").between(*preds["ts"][1:])
-            & (F.col("conv_id") == "conv-5")
-        )
-    )
-    assert got == exp and len(got) > 0
-
-
-def test_hidden_partition_truncate_int_and_string(spark, tmp_path):
-    t = str(tmp_path / "t")
-    df = _hidden_batch(spark, 0, 300)
-    tl.append(spark, t, df, partition_spec=("truncate(100, event_id)",))
-    preds = {"event_id": ("between", 120, 180)}
-    paths, skipped = tl.prune_files_where(t, preds)
-    assert skipped > 0  # the 0- and 200- truncation groups are pruned
-    assert _ids(tl.scan_where(spark, t, preds)) == list(range(120, 181))
-
-
-def test_partition_evolution_per_file_spec(spark, tmp_path):
-    """Files written under an OLD spec have no value for a new spec's
-    fields and must be kept (never prune blind); files under the new spec
-    prune. Results stay exact across the evolution."""
-    t = str(tmp_path / "t")
-    a = _hidden_batch(spark, 0, 400)
-    b = _hidden_batch(spark, 1000, 1400)
-    tl.append(spark, t, a, partition_spec=("days(ts)",))
-    tl.append(spark, t, b, partition_spec=("bucket(4, conv_id)",))
-    state = tl._state_at(t)[1]["data"]
-    preds = {"conv_id": ("=", "conv-5")}
-    paths, skipped = tl.prune_files_where(t, preds)
-    # every old-spec file kept, only new-spec files pruned
-    old_files = {
-        p for p, e in state.items() if e["spec"][0]["name"] == "ts_day"
-    }
-    assert old_files <= set(paths) and skipped > 0
-    got = _ids(tl.scan_where(spark, t, preds))
-    exp = _ids(a.unionByName(b).filter(F.col("conv_id") == "conv-5"))
-    assert got == exp
-
-
-def test_hidden_partition_scan_composes_with_deletes(spark, tmp_path):
-    """Multi-level hive partitioning writes the SAME filename into many
-    partition dirs — the delete's file identity must be the full path, or
-    it rewrites the wrong files."""
-    t = str(tmp_path / "t")
-    df = _hidden_batch(spark, 0, 1000)
-    tl.append(spark, t, df, partition_spec=("days(ts)", "bucket(4, conv_id)"))
-    tl.delete_where(spark, t, F.col("val") % 2 == 0, key_cols=["event_id"])
-    preds = {"conv_id": ("=", "conv-5")}
-    got = _ids(tl.scan_where(spark, t, preds))
-    exp = _ids(
-        df.filter((F.col("conv_id") == "conv-5") & (F.col("val") % 2 != 0))
-    )
-    assert got == exp and len(got) > 0
-
-
-def test_hidden_partition_wap_and_merge(spark, tmp_path):
-    """partition_spec flows through append and merge_upsert; the merged
-    files prune like appended ones."""
-    t = str(tmp_path / "t")
-    tl.append(
-        spark,
-        t,
-        _hidden_batch(spark, 0, 200),
-        partition_spec=("bucket(4, conv_id)",),
-    )
-    upd = _hidden_batch(spark, 100, 300)
-    tl.merge_upsert(
-        spark,
-        t,
-        upd,
-        key_cols=["event_id"],
-        partition_spec=("bucket(4, conv_id)",),
-    )
-    preds = {"conv_id": ("=", "conv-11")}
-    _paths, skipped = tl.prune_files_where(t, preds)
-    assert skipped > 0
-    got = _ids(tl.scan_where(spark, t, preds))
-    exp = _ids(
-        _hidden_batch(spark, 0, 300).filter(F.col("conv_id") == "conv-11")
-    )
-    assert got == exp
 
 
 def test_expiry_writes_base_at_every_chain_break(spark, tmp_path):
@@ -1027,77 +894,9 @@ def test_update_noop_and_validation(spark, tmp_path):
         tl.update_where(spark, t, F.col("k") == 0, {"nope": F.lit(1)})
 
 
-
-
 # ---------------------------------------------------------------------------
-# metadata inspection tables
+# checkpointed incremental consumer
 # ---------------------------------------------------------------------------
-
-
-def test_metadata_tables(spark, tmp_path):
-    """history / files metadata tables (Iceberg's queryable table
-    internals): one row per commit with lineage + tallies, one row per
-    live file with seq/rows."""
-    t = str(tmp_path / "t")
-    tl.append(spark, t, _batch(spark, 0, 10).coalesce(1))
-    tl.delete_where(spark, t, F.col("event_id") < 3, key_cols=["event_id"])
-    h = tl.table_history(spark, t)
-    assert [
-        (r.version, r.parent, r.operation, r.rows_added, r.files_removed)
-        for r in h.orderBy("version").collect()
-    ] == [
-        (1, None, "append", 10, 0),
-        (2, 1, "delete", 7, 1),
-    ]
-    f = tl.table_files(spark, t).collect()
-    assert [(r.seq, r.rows) for r in f] == [(2, 7)]
-    # files at a version: the pre-delete snapshot
-    assert [r.rows for r in tl.table_files(spark, t, version=1).collect()] == [10]
-
-
-# ---------------------------------------------------------------------------
-# add_files import + checkpointed incremental consumer
-# ---------------------------------------------------------------------------
-
-
-def test_add_files_by_reference(spark, tmp_path):
-    """add_files imports external parquet BY REFERENCE in one atomic
-    commit: manifests come from footers only, stats prune, deletes
-    rewrite imported files like native ones, and no byte is copied (the manifest points at the source)."""
-    src = str(tmp_path / "ext")
-    spark.range(0, 20).selectExpr("id AS k", "id * 3 AS v").repartitionByRange(
-        2, "k"
-    ).write.parquet(src)
-    t = str(tmp_path / "t")
-    tl.append(spark, t, spark.range(100, 105).selectExpr("id AS k", "id * 3 AS v"))
-    v = tl.add_files(spark, t, src, stats_cols=("k",))
-    assert v == 2 and tl.read_snapshot(spark, t).count() == 25
-    st = tl._state_at(t)[1]
-    assert len([p for p in st["data"] if p.startswith(src)]) == 2
-    _keep, skipped = tl.prune_files(t, "k", 0, 5)
-    assert skipped >= 1
-    tl.delete_where(spark, t, F.col("k") % 2 == 0, key_cols=["k"])
-    assert tl.read_snapshot(spark, t).count() == 12
-
-
-def test_add_files_refuses_path_only_partitions_and_schema_mismatch(
-    spark, tmp_path
-):
-    """A hive source whose partition values exist only in dir names would
-    read back null through per-file scans — refused, not silently
-    null-filled. Schema enforcement matches append."""
-    t = str(tmp_path / "t")
-    tl.append(spark, t, spark.range(0, 3).selectExpr("id AS k", "id AS v"))
-    hsrc = str(tmp_path / "hive")
-    spark.range(0, 10).selectExpr("id AS k", "id % 2 AS part").write.partitionBy(
-        "part"
-    ).parquet(hsrc)
-    with pytest.raises(ValueError, match="path-only"):
-        tl.add_files(spark, t, hsrc)
-    bad = str(tmp_path / "bad")
-    spark.range(0, 3).selectExpr("cast(id as string) AS k", "id AS v").write.parquet(bad)
-    with pytest.raises(ValueError, match="schema mismatch"):
-        tl.add_files(spark, t, bad)
 
 
 def test_consumer_redelivery_until_ack(spark, tmp_path):
@@ -1157,109 +956,6 @@ def test_expiry_age_retention_composes_with_keep_last(spark, tmp_path):
     assert tl.read_snapshot(spark, t).count() == 40
 
 
-def test_partitions_metadata_table(spark, tmp_path):
-    """table_partitions aggregates live-file manifests per partition tuple
-    (Iceberg's partitions metadata table): counts/rows/bytes/seq-range per
-    sink with no data file opened; unpartitioned files land under {}."""
-    t = str(tmp_path / "t")
-    d = spark.range(0, 30).selectExpr("id AS k", "concat('s', id % 3) AS sink")
-    tl.append(spark, t, d, partition_by=("sink",))
-    tl.append(spark, t, d.filter("id % 3 = 0"), partition_by=("sink",))
-    tl.append(spark, t, spark.createDataFrame([(99, "sX")], "k long, sink string"))
-    rows = {
-        r.partition: (r.rows, r.min_seq, r.max_seq)
-        for r in tl.table_partitions(spark, t).collect()
-    }
-    assert rows[json.dumps({"sink": "s0"})] == (20, 1, 2)
-    assert rows[json.dumps({"sink": "s1"})] == (10, 1, 1)
-    assert rows[json.dumps({})] == (1, 3, 3)  # unpartitioned commit
-
-
-def test_maintenance_plan_recommends_then_clears(spark, tmp_path):
-    """maintenance_plan reads manifests only: a table with a small-file
-    backlog gets the binpack recommendation; RUNNING a compaction clears
-    it. Deletes rewrite files in place, so they leave no backlog."""
-    t = str(tmp_path / "t")
-    for lo in range(0, 40, 10):  # 4 commits of small files
-        tl.append(spark, t, _batch(spark, lo, lo + 10).coalesce(1))
-    for k in (3, 14, 25, 36):
-        tl.delete_where(spark, t, F.col("event_id") == k, key_cols=["event_id"])
-    plan = {r.action: r.n for r in tl.maintenance_plan(spark, t).collect()}
-    assert plan == {"compact_binpack": 4}
-    tl.compact(spark, t)  # folds the small files
-    plan2 = [r.action for r in tl.maintenance_plan(spark, t).collect()]
-    assert "compact_binpack" not in plan2
-    # a healthy table gives an empty plan (backlog thresholds not reached;
-    # at pytest scale every file is "small", so raise that threshold)
-    t2 = str(tmp_path / "t2")
-    tl.append(spark, t2, _batch(spark, 0, 10))
-    assert tl.maintenance_plan(spark, t2, small_file_backlog=99).count() == 0
-    # version-chain growth triggers expiry advice
-    plan3 = {r.action for r in tl.maintenance_plan(spark, t, keep_versions=5).collect()}
-    assert "expire_snapshots" in plan3
-
-
-def test_compact_sort_clusters_and_prunes(spark, tmp_path):
-    """Sort rewrite: hash-scattered files become range-clustered ones with
-    disjoint min/max stats — a point predicate then keeps exactly one
-    file, and rows an earlier delete removed stay gone."""
-    t = str(tmp_path / "cs")
-    tl.append(
-        spark,
-        t,
-        spark.range(0, 100).selectExpr("id AS k", "id % 7 AS v").repartition(4),
-    )
-    tl.delete_where(spark, t, F.col("k") == 50, key_cols=["k"])
-    keep0, skip0 = tl.prune_files_where(t, {"k": ("=", 10)})
-    assert len(keep0) == 4 and skip0 == 0  # hash layout: every file overlaps
-    tl.compact_sort(spark, t, ("k",), n_files=4)
-    keep1, skip1 = tl.prune_files_where(t, {"k": ("=", 10)})
-    assert len(keep1) == 1 and skip1 == 3
-    assert tl.read_snapshot(spark, t).count() == 99
-    got = sorted(r.k for r in tl.scan_where(spark, t, {"k": ("between", 45, 55)}).collect())
-    assert got == [45, 46, 47, 48, 49, 51, 52, 53, 54, 55]
-
-
-def test_compact_sort_zorder_prunes_2d_box(spark, tmp_path):
-    """Z-order rewrite: a 2-D box predicate prunes most files, where a
-    single-column sort (stats recorded on both dims) prunes nothing on
-    the trailing dimension — the multi-dimensional clustering contract."""
-    df = spark.range(0, 256).selectExpr(
-        "id % 16 AS a", "cast(id / 16 AS long) AS b", "id AS payload"
-    )
-    tz = str(tmp_path / "cz")
-    tl.append(spark, tz, df.repartition(4))
-    tl.compact_sort(spark, tz, ("a", "b"), n_files=4, zorder=True)
-    keepz, skipz = tl.prune_files_where(
-        tz, {"a": ("between", 0, 3), "b": ("between", 0, 3)}
-    )
-    assert len(keepz) + skipz == 4 and skipz >= 2
-    assert tl.read_snapshot(spark, tz).count() == 256
-    ts = str(tmp_path / "cs1")
-    tl.append(spark, ts, df.repartition(4))
-    tl.compact_sort(spark, ts, ("a",), n_files=4, stats_cols=("a", "b"))
-    _, skips = tl.prune_files_where(ts, {"b": ("between", 0, 3)})
-    assert skips == 0  # leading-column sort cannot prune the other dim
-    # exact rows either way
-    gz = sorted(
-        r.payload
-        for r in tl.scan_where(
-            spark, tz, {"a": ("between", 0, 3), "b": ("between", 0, 3)}
-        ).collect()
-    )
-    exp = sorted(i for i in range(256) if i % 16 <= 3 and i // 16 <= 3)
-    assert gz == exp
-
-
-def test_compact_sort_is_changelog_noop(spark, tmp_path):
-    """The rewrite commits as operation 'compact': incremental consumers
-    and the changelog skip it — no row ever appears as inserted/deleted."""
-    t = str(tmp_path / "cn")
-    tl.append(spark, t, spark.range(0, 20).selectExpr("id AS k"))
-    v = tl.compact_sort(spark, t, ("k",), n_files=2)
-    assert tl.changelog_scan(spark, t, from_version=v - 1).count() == 0
-
-
 def test_bloom_point_lookup_prunes_scattered_keys(spark, tmp_path):
     """Per-file manifest blooms: on a high-cardinality scattered key every
     file's [min,max] overlaps (stats prune nothing), but '=' predicates
@@ -1270,11 +966,12 @@ def test_bloom_point_lookup_prunes_scattered_keys(spark, tmp_path):
     )
     tl.append(spark, t, df.repartition(8), stats_cols=("k",), bloom_cols=("k",))
     some_k = int(df.filter("v = 123").collect()[0].k)
-    keep, skip = tl.prune_files_where(t, {"k": ("=", some_k)})
-    assert len(keep) + skip == 8 and skip >= 5
+    plan = tl.plan_scan(t, {"k": ("=", some_k)})
+    assert len(plan["paths"]) + plan["n_files_skipped"] == 8
+    assert plan["pruned_by_bloom"] >= 5
     assert [r.v for r in tl.scan_where(spark, t, {"k": ("=", some_k)}).collect()] == [123]
-    keep2, skip2 = tl.prune_files_where(t, {"k": ("=", 999999999)})
-    assert skip2 == 8 and not keep2
+    plan2 = tl.plan_scan(t, {"k": ("=", 999999999)})
+    assert plan2["n_files_skipped"] == 8 and not plan2["paths"]
     assert tl.scan_where(spark, t, {"k": ("=", 999999999)}).count() == 0
 
 
@@ -1294,28 +991,6 @@ def test_bloom_never_blocks_range_predicates_or_unbloomd_cols(spark, tmp_path):
     )
     assert got == list(range(10, 21))
     assert tl.scan_where(spark, t, {"v": ("=", 1)}).count() == 17
-
-
-def test_clustering_depth_and_planner_recommend_sort(spark, tmp_path):
-    """clustering_depth reads manifests only: scattered appends score
-    avg_depth ≈ n_files, the planner recommends compact_sort, and the
-    rewrite drops the depth to ~1 and clears the recommendation."""
-    t = str(tmp_path / "cd")
-    df = spark.range(0, 100).selectExpr("id AS k")
-    tl.append(spark, t, df.repartition(4), stats_cols=("k",))
-    cd = tl.clustering_depth(t, "k")
-    assert cd["n_files"] == 4 and cd["avg_depth"] == 4.0  # fully scattered
-    plan = {r.action for r in tl.maintenance_plan(spark, t, cluster_col="k").collect()}
-    assert "compact_sort" in plan
-    tl.compact_sort(spark, t, ("k",), n_files=4)
-    cd2 = tl.clustering_depth(t, "k")
-    assert cd2["avg_depth"] <= 1.5 and cd2["max_depth"] <= 2  # boundary touch at most
-    plan2 = {r.action for r in tl.maintenance_plan(spark, t, cluster_col="k").collect()}
-    assert "compact_sort" not in plan2
-    # files without stats on the column are excluded and reported
-    tl.append(spark, t, spark.range(100, 110).selectExpr("id AS k").coalesce(1))
-    cd3 = tl.clustering_depth(t, "k")
-    assert cd3["n_unstated"] == 1 and cd3["n_files"] == 4
 
 
 def test_route_commit_records_blooms_for_conv_lookup(spark, parsed, tmp_path):
@@ -1357,11 +1032,9 @@ def test_bloom_skips_unbloomable_types_never_misprunes(spark, tmp_path):
         assert "x" not in e.get("bloom", {})  # unbloomable: no filter recorded
         assert "k" in e.get("bloom", {})
     # float probe against the int column's bloom: membership unknown → keep
-    keep, skip = tl.prune_files_where(t, {"k": ("=", 3.0)})
-    assert skip == 0
+    assert tl.plan_scan(t, {"k": ("=", 3.0)})["n_files_skipped"] == 0
     # int probe: the bloom answers, and the answer is safe
-    keep_i, skip_i = tl.prune_files_where(t, {"k": ("=", 3)})
-    assert skip_i >= 1
+    assert tl.plan_scan(t, {"k": ("=", 3)})["pruned_by_bloom"] >= 1
     assert [r.k for r in tl.scan_where(spark, t, {"k": ("=", 3)}).collect()] == [3]
 
 
@@ -1378,46 +1051,27 @@ def test_bloom_tolerates_nulls_and_still_skips(spark, tmp_path):
     _, state = tl._state_at(t)
     assert all("k" in e.get("bloom", {}) for e in state["data"].values())
     some_k = int(df.filter("v = 7").collect()[0].k)
-    keep, skip = tl.prune_files_where(t, {"k": ("=", some_k)})
-    assert skip >= 1  # the filter still excludes files
+    # the filter still excludes files
+    assert tl.plan_scan(t, {"k": ("=", some_k)})["pruned_by_bloom"] >= 1
     got = [r.v for r in tl.scan_where(spark, t, {"k": ("=", some_k)}).collect()]
     assert got == [7]
 
 
-
-
-
-
-def test_compaction_preserves_manifest_sketches_by_default(spark, tmp_path):
-    """A maintenance rewrite must not silently drop the table's blooms:
-    compact / compact_binpack / compact_sort default bloom_cols from the
-    pre-rewrite manifest entries, and an explicit () opt-out drops them."""
-    df = spark.range(0, 400).selectExpr("id AS k", "id % 7 AS v")
+def test_rewrite_preserves_manifest_sketches(spark, tmp_path):
+    """A copy-on-write rewrite must not silently drop the table's blooms
+    or stats: the files a delete writes carry its inputs' bloom and
+    min/max stats columns, built from their own rows, so the blooms prune
+    a deleted key."""
+    import pyarrow.parquet as pq
 
     t = str(tmp_path / "keep")
+    df = spark.range(0, 400).selectExpr("id AS k", "id % 7 AS v")
     tl.append(spark, t, df.repartition(4), stats_cols=("k",), bloom_cols=("k",))
-    tl.compact(spark, t, n_files=2)
-    _, state = tl._state_at(t)
-    assert all("k" in e.get("bloom", {}) for e in state["data"].values())
-    # bloom still prunes after the rewrite
-    kept, skipped = tl.prune_files_where(t, {"k": ("=", 123456)})
-    assert kept == [] and skipped == 2
-
-    tl.compact_sort(spark, t, sort_cols=("k",), n_files=2)
-    _, state = tl._state_at(t)
-    assert all("k" in e.get("bloom", {}) for e in state["data"].values())
-
-    tb = str(tmp_path / "binpack")
-    for lo in (0, 200):
-        tl.append(spark, tb,
-                  spark.range(lo, lo + 200).selectExpr("id AS k", "id % 7 AS v"),
-                  bloom_cols=("k",))
-    assert tl.compact_binpack(spark, tb, target_bytes=64 * 1024 * 1024)
-    _, state = tl._state_at(tb)
-    assert all("k" in e.get("bloom", {}) for e in state["data"].values())
-
-    td = str(tmp_path / "drop")
-    tl.append(spark, td, df.repartition(2), bloom_cols=("k",))
-    tl.compact(spark, td, n_files=1, bloom_cols=())
-    _, state = tl._state_at(td)
-    assert all("bloom" not in e for e in state["data"].values())
+    v = tl.delete_where(spark, t, F.col("v") == 0, key_cols=["k"])
+    c = tl._read_commit(t, v)
+    assert len(c["removed_data"]) == 4 and c["added_data"]  # every file rewritten
+    for e in tl._state_at(t)[1]["data"].values():
+        ks = pq.read_table(e["path"], columns=["k"]).column("k").to_pylist()
+        assert e["stats"]["k"] == [min(ks), max(ks)]
+        assert e["bloom"]["k"] == tl._bloom_build(ks, tl._bloom_bits_for(len(ks)))
+    assert tl.plan_scan(t, {"k": ("=", 196)})["pruned_by_bloom"] >= 1  # 196 % 7 == 0
