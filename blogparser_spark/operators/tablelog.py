@@ -15,19 +15,17 @@ needs falls out of that one structure:
 - **Time travel / reproducible reads**: any retained version is readable —
   a training run pins the snapshot id into its lineage manifest
   (checkpoint.SliceManifest.input_snapshot) and is re-runnable bit-for-bit.
-- **Incremental computation**: `incremental_append_scan(from, to)` yields
-  exactly the rows appended between two snapshots — the input contract for
-  the IVM layer (operators/aggregate.apply_retractable_delta) and the
-  incremental dedup probe (dedup.incremental_dedup_probe).
-- **Copy-on-write row changes**: a delete, update, merge or slice
-  replace rewrites only the live files holding matched rows and removes
-  the originals in the same commit (Iceberg's
-  `write.delete.mode=copy-on-write`, Delta Lake's `remove` actions). A
-  commit only ever adds and removes data files, so a read is one scan of
-  the live files with nothing to anti-join.
-- **Snapshot expiry** bounds storage: physical files referenced only by
-  expired versions are removed, with a rebase ("checkpoint") state so the
-  log itself stays O(retained commits).
+- **Copy-on-write row changes**: a delete or a slice replace rewrites
+  only the live files holding matched rows and removes the originals in
+  the same commit (Iceberg's `write.delete.mode=copy-on-write`, Delta
+  Lake's `remove` actions). A commit only ever adds and removes data
+  files, so a read is one scan of the live files with nothing to
+  anti-join.
+- **Snapshot expiry and orphan removal** bound storage: expiry keeps the
+  newest `keep_last` snapshots, removes the physical files referenced only
+  by expired ones and writes a rebase ("checkpoint") state so the log
+  itself stays O(retained commits); `remove_orphans` sweeps files no
+  retained commit references.
 - **Pruning**: `plan_scan` checks each live file's manifest entry (its
   partition tuples, min/max footer stats and blooms) against the
   predicates, and `scan_where` reads only the files that may match.
@@ -321,11 +319,6 @@ def _stats_match(st: list | None, pred: tuple) -> bool:
 # entry.
 
 
-def _added_entries(table: str, commit: dict) -> list[dict]:
-    """A commit's added data file entries."""
-    return commit.get("added_data", [])
-
-
 def _prune_reason(e: dict, predicates: dict[str, tuple]) -> str | None:
     """Why the file entry `e` holds no row matching `predicates`, or None
     when it may hold one. "partition": no recorded partition tuple passes
@@ -464,10 +457,6 @@ def _file_entries(
     return entries
 
 
-def _schema_of(df: DataFrame) -> list[list[str]]:
-    return [[f.name, f.dataType.simpleString()] for f in df.schema.fields]
-
-
 # ---------------------------------------------------------------------------
 # snapshot state replay
 # ---------------------------------------------------------------------------
@@ -532,37 +521,6 @@ def _apply(state: dict, c: dict) -> None:
         state["schema"] = c["schema"]
 
 
-def _chain_between(
-    table: str, from_version: int, to_version: int | None
-) -> tuple[int, list[dict]]:
-    """The commits in (from_version, to_version], oldest first (to_version
-    defaults to the newest), walked back along parent pointers. Raises
-    SnapshotExpired if an in-range commit was expired, LookupError if
-    from_version is not on the chain of to_version."""
-    versions = set(list_versions(table))
-    if not versions:
-        raise LookupError(f"no commits in table log: {table}")
-    if to_version is None:
-        to_version = max(versions)
-    out: list[dict] = []
-    v: int | None = to_version
-    while v is not None and v > from_version:
-        if v not in versions:
-            raise SnapshotExpired(
-                f"chain commit v{v} in ({from_version}, {to_version}] "
-                f"expired: {table}"
-            )
-        c = _read_commit(table, v)
-        out.append(c)
-        v = c.get("parent")
-    if v != from_version and not (v is None and from_version <= 0):
-        raise LookupError(
-            f"from_version {from_version} is not an ancestor of "
-            f"v{to_version}: {table}"
-        )
-    return to_version, list(reversed(out))
-
-
 # ---------------------------------------------------------------------------
 # write path
 # ---------------------------------------------------------------------------
@@ -595,7 +553,6 @@ def _write_data_files(
     table: str,
     version: int,
     stats_cols: tuple[str, ...],
-    kind: str,
     partition_by: tuple[str, ...] = (),
     bloom_cols: tuple[str, ...] = (),
     timings: dict | None = None,
@@ -612,7 +569,7 @@ def _write_data_files(
     records each file's tuple set with row counts. A global orderBy would
     cost a range-sampling pass, which re-runs the whole upstream plan (for
     the job, the parse UDF)."""
-    outdir = os.path.join(table, kind, f"c{version:06d}-{uuid.uuid4().hex[:8]}")
+    outdir = os.path.join(table, "data", f"c{version:06d}-{uuid.uuid4().hex[:8]}")
     t0 = time.perf_counter()
     if partition_by:
         df.hint("rebalance", *partition_by).sortWithinPartitions(
@@ -634,13 +591,15 @@ def _write_data_files(
     return entries
 
 
+APPEND_ATTEMPTS = 5  # commit attempts of a plain append before CommitConflict
+
+
 def append(
     spark: SparkSession,
     table: str,
     df: DataFrame,
     stats_cols: tuple[str, ...] = (),
     allow_evolution: bool = False,
-    max_retries: int = 5,
     partition_by: tuple[str, ...] = (),
     marker: str | None = None,
     bloom_cols: tuple[str, ...] = (),
@@ -669,8 +628,9 @@ def append(
     and the removal of the replaced ones land in this one commit, which
     then does not retry a lost race (its removals were planned against
     the parent it read).
-    The commit records a `summary` (commit_summary) of what it added,
-    removed and where its time went."""
+    A plain append tries APPEND_ATTEMPTS times. The commit records a
+    `summary` (commit_summary) of what it added, removed and where its
+    time went."""
     version = (current_version(table) or 0) + 1
     timings: dict = {}
     entries = _write_data_files(
@@ -678,7 +638,6 @@ def append(
         table,
         version,
         stats_cols,
-        "data",
         partition_by,
         bloom_cols,
         timings=timings,
@@ -700,9 +659,9 @@ def append(
         if removed:
             timings["rewrite_s"] = time.perf_counter() - t0
     summary = _change_summary(entries + added, removed or None, rewritten)
-    schema_new = _schema_of(df)
+    schema_new = [[f.name, f.dataType.simpleString()] for f in df.schema]
     t0 = time.perf_counter()
-    for attempt in range(1 if removed else max_retries):
+    for attempt in range(1 if removed else APPEND_ATTEMPTS):
         parent = cur if removed else current_version(table)
         if state is None or parent != cur:  # first replay, or a lost race
             cur = parent
@@ -760,12 +719,12 @@ def commit_summary(table: str, version: int) -> dict | None:
     """What a commit added and removed and where its time went (Iceberg's
     snapshot summary); every commit this module writes records one:
     added_data_files, added_records and added_files_size from the manifest
-    entries; for a commit that removes files (a delete, update, merge,
-    replace, overwrite or rollback), removed_data_files, removed_records
-    and rewritten_files (the removed files whose rows it rewrote: 0 for an
-    overwrite or rollback), with rewrite_s (replaying the log, finding and
-    rewriting them) where it rewrote. Appends and replaces also record
-    write_s (the Spark write), manifest_s (footer reads, blooms and
+    entries; for a commit that removes files (a delete or a replace),
+    removed_data_files, removed_records and rewritten_files (the removed
+    files whose rows it rewrote: a replace removes the files its slice alone
+    holds without reading them), with rewrite_s (rewriting them; for a
+    replace, also replaying the log and planning). Appends and replaces also
+    record write_s (the Spark write), manifest_s (footer reads, blooms and
     partition tuples), commit_s (an append's log replay, the schema check
     and any lost races, up to the winning commit-if-absent write) and
     commit_retries."""
@@ -773,7 +732,7 @@ def commit_summary(table: str, version: int) -> dict | None:
 
 
 def _change_summary(
-    added: list[dict], removed: list[dict] | None = None, rewritten: int = 0
+    added: list[dict], removed: list[dict] | None, rewritten: int
 ) -> dict:
     """Summary fields of a commit adding `added` file entries; with
     `removed`, also what it removed, `rewritten` of those files having
@@ -815,34 +774,6 @@ def append_idempotent(
     return append(spark, table, df, marker=marker, **kwargs), True
 
 
-def _commit(table: str, parent: int | None, operation: str, **body) -> int:
-    """Commit one non-append operation on top of `parent`. A lost race
-    raises CommitConflict: the operation was planned against `parent`."""
-    version = (parent or 0) + 1
-    commit = {
-        "version": version,
-        "parent": parent,
-        "operation": operation,
-        "ts": time.time(),
-        **body,
-    }
-    if not _try_commit(table, commit):
-        raise CommitConflict(f"{operation} conflicted at version {version}: {table}")
-    return version
-
-
-def _live_rows(spark: SparkSession, state: dict) -> DataFrame:
-    """The live rows of a state with their file identity as `_file`."""
-    return _with_file(_read_files(spark, sorted(state["data"]), state["schema"]))
-
-
-def _files_holding(state: dict, rows: DataFrame) -> list[dict]:
-    """The live file entries holding one of `rows` (a frame over
-    _live_rows) — one Spark job."""
-    hit = {r._file for r in rows.select("_file").distinct().collect()}
-    return [e for p, e in state["data"].items() if os.path.abspath(p) in hit]
-
-
 def _layout_of(entries) -> dict:
     """_write_data_files options that keep `entries`' layout in their
     rewrite: the columns they carry min/max stats and blooms on, and their
@@ -869,23 +800,18 @@ def _rewrite_files(
     entries: list[dict],
     rows,
     keep_marker=None,
-    stats_cols: tuple[str, ...] = (),
-    **write,
 ) -> list[dict]:
-    """The copy-on-write step: write rows(the live rows of `entries`) as
-    new files of commit `version` and return their entries; the caller's
-    commit removes the originals. The outputs keep the inputs' layout
-    (_layout_of; `write` overrides it), add min/max stats on `stats_cols`
-    and carry the inputs' markers that `keep_marker` accepts (default:
-    all) — none at all when some input carries none, as its rows are then
+    """The copy-on-write step: write rows(the live rows of `entries`) as new
+    files of commit `version` and return their entries; the caller's commit
+    removes the originals. The outputs keep the inputs' layout (_layout_of)
+    and carry the inputs' markers that `keep_marker` accepts (default: all)
+    — none at all when some input carries none, as its rows are then
     unaccounted for. Outputs without a row are deleted, so a rewrite whose
     remainder is empty writes no file."""
     if not entries:
         return []
-    opts = dict(_layout_of(entries), **write)
-    opts["stats_cols"] = tuple(sorted({*opts["stats_cols"], *stats_cols}))
     df = _read_files(spark, sorted(e["path"] for e in entries), state["schema"])
-    out = _write_data_files(rows(df), table, version, kind="data", **opts)
+    out = _write_data_files(rows(df), table, version, **_layout_of(entries))
     for e in out:
         if not e["rows"]:
             os.unlink(e["path"])
@@ -898,37 +824,6 @@ def _rewrite_files(
         for e in out:
             e["markers"] = markers
     return out
-
-
-def _rewrite_commit(
-    spark: SparkSession,
-    table: str,
-    cur: int | None,
-    state: dict | None,
-    operation: str,
-    hit: list[dict],
-    rows,
-    added: list[dict] = (),
-    schema: list[list[str]] | None = None,
-    **write,
-) -> int:
-    """Commit `operation` as the rewrite of the live files `hit` (each
-    replaced by rows(its rows); _rewrite_files takes `write`) plus the new
-    files `added`, in one commit that records its summary and, when
-    given, the table's new `schema`."""
-    t0 = time.perf_counter()
-    new = list(added) + _rewrite_files(
-        spark, table, (cur or 0) + 1, state, hit, rows, **write
-    )
-    summary = _change_summary(new, hit, len(hit))
-    summary["rewrite_s"] = round(time.perf_counter() - t0, 4)
-    return _commit(
-        table, cur, operation,
-        added_data=new,
-        removed_data=sorted(e["path"] for e in hit),
-        summary=summary,
-        **({"schema": schema} if schema else {}),
-    )
 
 
 def _replace_files(
@@ -974,137 +869,44 @@ def delete_where(
     other file stays as it is. Finding them reads the table once; the
     rewrite reads only the files it rewrites (each matching row lies in
     one, so their keys are the table's). The rewrites keep their inputs'
-    markers: a deliberate delete is not a lost slice."""
+    markers: a deliberate delete is not a lost slice. The commit records
+    its summary; it was planned against the version it read, so a lost
+    race raises CommitConflict."""
     cur = current_version(table)
     if cur is None:
         raise LookupError(f"cannot delete from empty table {table}")
     _, state = _state_at(table, cur)
-    live = _live_rows(spark, state)
+    # input_file_name() is a URL-encoded file: URI; normalize it to the
+    # manifest's os-path form
+    live = _read_files(spark, sorted(state["data"]), state["schema"]).withColumn(
+        "_file", F.url_decode(F.regexp_replace(F.input_file_name(), "^file:/+", "/"))
+    )
     keys = live.filter(condition).select(*key_cols).distinct()
-    hit = _files_holding(state, live.join(keys, key_cols, "left_semi"))
+    held = live.join(keys, key_cols, "left_semi").select("_file").distinct()
+    hit_paths = {r._file for r in held.collect()}
+    hit = [e for p, e in state["data"].items() if os.path.abspath(p) in hit_paths]
 
     def rows(df: DataFrame) -> DataFrame:
         gone = df.filter(condition).select(*key_cols).distinct()
         return df.join(gone, key_cols, "left_anti").select(*df.columns)
 
-    return _rewrite_commit(spark, table, cur, state, "delete", hit, rows)
-
-
-def overwrite(
-    spark: SparkSession,
-    table: str,
-    df: DataFrame,
-    stats_cols: tuple[str, ...] = (),
-) -> int:
-    """Replace the table's full contents atomically (removes every live
-    data file, adds the new files) — readers of older snapshots are
-    untouched until expiry."""
-    cur = current_version(table)
-    live = _state_at(table, cur)[1]["data"] if cur else {}
-    entries = _write_data_files(df, table, (cur or 0) + 1, stats_cols, "data")
-    return _commit(
-        table, cur, "overwrite",
-        schema=_schema_of(df),
-        added_data=entries,
-        removed_data=sorted(live),
-        summary=_change_summary(entries, list(live.values())),
-    )
-
-
-def update_where(
-    spark: SparkSession,
-    table: str,
-    condition,
-    assignments: dict[str, Column],
-    stats_cols: tuple[str, ...] = (),
-) -> int:
-    """Copy-on-write row-level UPDATE (Iceberg's eager update mode): only
-    the files that CONTAIN a matching live row are rewritten — matching
-    rows get `assignments` applied, their non-matching neighbors are
-    carried over verbatim — and every untouched file stays byte-identical
-    in the new snapshot. ONE atomic commit swaps the rewritten files in,
-    so readers see all-or-nothing and older snapshots time-travel
-    unchanged. Cost scales with the matched FILES, not the table — pair
-    the predicate with stats_cols/partitioning at write time so the match
-    set is narrow. Rewritten files keep their inputs' stats, blooms and
-    sink keys, plus min/max stats on `stats_cols`. No reference analog
-    (the Go CLI has no storage layer, sample/main.go:32-47)."""
-    cur = current_version(table)
-    if cur is None:
-        raise LookupError(f"cannot update empty table {table}")
-    _, state = _state_at(table, cur)
-    types = dict(map(tuple, state["schema"]))
-    bad = set(assignments) - set(types)
-    if bad:
-        raise ValueError(f"assignment to unknown column(s): {sorted(bad)}")
-    hit = _files_holding(state, _live_rows(spark, state).filter(condition))
-
-    def rows(df: DataFrame) -> DataFrame:
-        for col, expr in assignments.items():
-            df = df.withColumn(col, F.when(condition, expr).otherwise(F.col(col)))
-        return df.select(*[F.col(n).cast(t).alias(n) for n, t in types.items()])
-
-    return _rewrite_commit(
-        spark, table, cur, state, "update", hit, rows, stats_cols=stats_cols
-    )
-
-
-def merge_upsert(
-    spark: SparkSession,
-    table: str,
-    df: DataFrame,
-    key_cols: list[str],
-    stats_cols: tuple[str, ...] = (),
-    partition_by: tuple[str, ...] = (),
-) -> int:
-    """Atomic MERGE (upsert), copy-on-write: ONE commit adds the source's
-    files and rewrites the live files holding one of the source's
-    `key_cols` tuples without those rows — matched keys are replaced,
-    unmatched keys insert, and a reader sees the whole upsert or none of
-    it. This is Iceberg's MERGE INTO under `write.merge.mode =
-    copy-on-write`."""
-    cur = current_version(table)
-    state = _state_at(table, cur)[1] if cur is not None else None
-    merged = _check_schema(state["schema"] if state else None, _schema_of(df), False)
-    source = _write_data_files(
-        df, table, (cur or 0) + 1, stats_cols, "data", partition_by
-    )
-    keys = df.select(*key_cols).distinct()
-    hit = (
-        _files_holding(state, _live_rows(spark, state).join(keys, key_cols, "left_semi"))
-        if state
-        else []
-    )
-    return _rewrite_commit(
-        spark, table, cur, state, "merge", hit,
-        lambda d: d.join(keys, key_cols, "left_anti").select(*d.columns),
-        added=source,
-        schema=merged,
-    )
-
-
-def rollback_to(table: str, version: int) -> int:
-    """Roll the table back to an earlier snapshot as a NEW commit —
-    history is preserved (Iceberg's rollback semantics): the commit
-    re-points the live file set at the target version's, so the bad
-    versions remain time-travelable until expiry and the rollback itself
-    is one atomic log write. Re-added entries keep their sequence numbers
-    and markers, so the ledger is the target version's."""
-    cur = current_version(table)
-    if cur is None:
-        raise LookupError(f"cannot roll back empty table {table}")
-    _, target = _state_at(table, version)
-    _, now = _state_at(table, cur)
-    added = [e for p, e in target["data"].items() if p not in now["data"]]
-    removed = [e for p, e in now["data"].items() if p not in target["data"]]
-    return _commit(
-        table, cur, "rollback",
-        restores=version,
-        schema=target["schema"],
-        added_data=added,
-        removed_data=sorted(e["path"] for e in removed),
-        summary=_change_summary(added, removed),
-    )
+    version = cur + 1
+    t0 = time.perf_counter()
+    new = _rewrite_files(spark, table, version, state, hit, rows)
+    summary = _change_summary(new, hit, len(hit))
+    summary["rewrite_s"] = round(time.perf_counter() - t0, 4)
+    commit = {
+        "version": version,
+        "parent": cur,
+        "operation": "delete",
+        "ts": time.time(),
+        "added_data": new,
+        "removed_data": sorted(e["path"] for e in hit),
+        "summary": summary,
+    }
+    if not _try_commit(table, commit):
+        raise CommitConflict(f"delete conflicted at version {version}: {table}")
+    return version
 
 
 def remove_orphans(table: str, min_age_sec: float = 0.0) -> int:
@@ -1158,26 +960,12 @@ def _read_files(
     before an append added it) reads it as NULL. No paths: an empty frame
     of the schema."""
     if not paths:
-        return _empty_df(spark, schema)
+        return spark.createDataFrame([], _ddl(schema or [["dummy", "int"]]))
     return spark.read.schema(_ddl(schema)).parquet(*paths)
-
-
-def _with_file(df: DataFrame) -> DataFrame:
-    """Attach the normalized absolute-path file identity as `_file`.
-    input_file_name() returns a URL-encoded file: URI — normalize it to
-    the manifest's os-path form."""
-    return df.withColumn(
-        "_file",
-        F.url_decode(F.regexp_replace(F.input_file_name(), "^file:/+", "/")),
-    )
 
 
 def _ddl(schema: list[list[str]]) -> str:
     return ", ".join(f"`{n}` {t}" for n, t in schema)
-
-
-def _empty_df(spark: SparkSession, schema: list[list[str]] | None) -> DataFrame:
-    return spark.createDataFrame([], _ddl(schema or [["dummy", "int"]]))
 
 
 def read_snapshot(
@@ -1208,171 +996,27 @@ def read_partition(
     )
 
 
-def incremental_append_scan(
-    spark: SparkSession,
-    table: str,
-    from_version: int,
-    to_version: int | None = None,
-) -> DataFrame:
-    """Exactly the rows appended in (from_version, to_version]: the union
-    of the append commits' added files. A commit that removes rows
-    (overwrite, delete, update, merge, replace, rollback) cannot be
-    expressed as an append stream, so it raises — the caller falls back
-    to a full diff (operators/diff.diff_datasets), the same contract as
-    Iceberg's incremental append scan."""
-    to_version, chain = _chain_between(table, from_version, to_version)
-    paths: list[str] = []
-    for c in chain:
-        if c["operation"] != "append":
-            raise ValueError(
-                f"commit v{c['version']} is {c['operation']!r}; incremental "
-                "append scan only spans append commits"
-            )
-        paths += [e["path"] for e in _added_entries(table, c)]
-    # rows appended before an in-range schema change surface in the
-    # TO-version's schema, same as Iceberg's incremental scan
-    return _read_files(spark, sorted(paths), _state_at(table, to_version)[1]["schema"])
-
-
-def changelog_scan(
-    spark: SparkSession,
-    table: str,
-    from_version: int,
-    to_version: int | None = None,
-) -> DataFrame:
-    """Row-level CDC between two snapshots (Iceberg's changelog scan):
-    every row the table gained ('insert') or lost ('delete') in
-    (from_version, to_version], stamped `_change_type` / `_commit_version`.
-    An append's added files are inserts. Any commit that removes files
-    (delete, update, merge, replace, overwrite, rollback) emits its net
-    row diff: its added files' rows exceptAll its removed files' rows are
-    inserts, the reverse are deletes, so rows a rewrite carried over
-    unchanged cancel. Every row is read in the TO-version's schema, so
-    the pieces align across an in-range append that added a column. The
-    output feeds
-    aggregate.apply_retractable_delta so a downstream view refreshes from
-    the delta without ever rescanning the base table."""
-    to_version, chain = _chain_between(table, from_version, to_version)
-    schema = _state_at(table, to_version)[1]["schema"]
-    pieces: list[DataFrame] = []
-    for c in chain:
-        added = _read_files(
-            spark, sorted(e["path"] for e in _added_entries(table, c)), schema
-        )
-        changes = [(added, "insert")]
-        if c.get("removed_data"):
-            removed = _read_files(spark, sorted(c["removed_data"]), schema)
-            changes = [
-                (removed.exceptAll(added), "delete"),
-                (added.exceptAll(removed), "insert"),
-            ]
-        pieces += [
-            df.withColumn("_change_type", F.lit(kind)).withColumn(
-                "_commit_version", F.lit(c["version"])
-            )
-            for df, kind in changes
-        ]
-    if not pieces:
-        return (
-            _empty_df(spark, schema)
-            .withColumn("_change_type", F.lit(""))
-            .withColumn("_commit_version", F.lit(0))
-        )
-    out = pieces[0]
-    for p in pieces[1:]:
-        out = out.unionByName(p, allowMissingColumns=True)
-    return out
-
-
-# ---------------------------------------------------------------------------
-# checkpointed incremental consumer (the table as an exactly-once source)
-# ---------------------------------------------------------------------------
-
-
-def consumer_offset(checkpoint_path: str) -> int:
-    """The consumer's last ACKED snapshot version (0 = nothing consumed)."""
-    p = os.path.join(checkpoint_path, "offset.json")
-    if not os.path.exists(p):
-        return 0
-    with open(p) as f:
-        return int(json.load(f)["version"])
-
-
-def consume_incremental(
-    spark: SparkSession,
-    table: str,
-    checkpoint_path: str,
-    mode: str = "appends",
-):
-    """Consume the table incrementally with a durable offset — the
-    source-side twin of the exactly-once streaming sink (Iceberg's
-    streaming read + Structured Streaming's offset log, rebuilt on the
-    snapshot log): each call returns `(df, from_version, to_version, ack)`
-    where df is the delta in (from, to] — `mode='appends'` via the
-    incremental append scan (REFUSES in-range deletes, like Iceberg's
-    default streaming read), `mode='changelog'` via the CDC scan for
-    consumers that fold retractions (feed operators/aggregate's
-    retractable-state algebra). None df means nothing new. The offset
-    advances ONLY when the caller invokes `ack()` after durably processing
-    the batch (atomic tmp-file + rename): a crash before ack re-delivers
-    the same delta next call, so an idempotent downstream (e.g.
-    append_idempotent's marker ledger keyed on to_version) yields
-    exactly-once end to end. Offsets are snapshot VERSIONS, not file
-    offsets — planning is a log replay, no data listing."""
-    if mode not in ("appends", "changelog"):
-        raise ValueError(f"unknown consume mode {mode!r}")
-    os.makedirs(checkpoint_path, exist_ok=True)
-    from_v = consumer_offset(checkpoint_path)
-    to_v = current_version(table)
-    if to_v is None or to_v <= from_v:
-        return None, from_v, from_v, lambda: from_v
-
-    def ack() -> int:
-        tmp = os.path.join(
-            checkpoint_path, f".offset-{uuid.uuid4().hex[:8]}.tmp"
-        )
-        with open(tmp, "w") as f:
-            json.dump({"version": to_v, "ts": time.time()}, f)
-        os.replace(tmp, os.path.join(checkpoint_path, "offset.json"))
-        return to_v
-
-    if mode == "appends":
-        df = incremental_append_scan(
-            spark, table, from_version=from_v, to_version=to_v
-        )
-    else:
-        df = changelog_scan(spark, table, from_version=from_v, to_version=to_v)
-    return df, from_v, to_v, ack
-
-
 # ---------------------------------------------------------------------------
 # expiry
 # ---------------------------------------------------------------------------
 
 
-def expire_snapshots(
-    table: str, keep_last: int = 2, max_age_sec: float | None = None
-) -> dict:
-    """Expire all but the newest `keep_last` snapshots. `max_age_sec` is the
-    Iceberg `expire_snapshots(older_than)` knob: commits younger than the
-    cutoff are ALSO retained regardless of keep_last, so the two compose
-    exactly like Iceberg's retain-last + older-than (keep_last is the
-    floor, age the ceiling). Persists a rebase state at every retained
-    version whose parent was expired, so replay stays O(retained
+def expire_snapshots(table: str, keep_last: int = 2) -> dict:
+    """Expire all but the newest `keep_last` snapshots (Iceberg's
+    `expire_snapshots(retain_last)`); `keep_last` below 1 would expire the
+    current snapshot and raises ValueError. Persists a rebase state at every
+    retained version whose parent was expired, so replay stays O(retained
     commits), then drops the expired log entries and physically deletes
     files referenced ONLY by expired versions. Each step leaves the table
-    readable: a base is written to a temp file and renamed into place, so
-    a failed write leaves none. Time travel to an expired version raises
+    readable: a base is written to a temp file and renamed into place, so a
+    failed write leaves none. Time travel to an expired version raises
     SnapshotExpired. The log is read once, plus one replay to the oldest
     retained version. Returns {files_removed, versions_removed}."""
+    if keep_last < 1:
+        raise ValueError(f"keep_last must be at least 1, got {keep_last}")
     versions = list_versions(table)
     commits = {v: _read_commit(table, v) for v in versions}
     retained_set = set(versions[-keep_last:])
-    if max_age_sec is not None:
-        cutoff = time.time() - max_age_sec
-        retained_set |= {
-            v for v, c in commits.items() if float(c.get("ts") or 0.0) >= cutoff
-        }
     expired = [v for v in versions if v not in retained_set]
     if not expired:
         return {"files_removed": 0, "versions_removed": 0}

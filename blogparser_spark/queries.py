@@ -8000,7 +8000,7 @@ def linkage_entity_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ===========================================================================
 # Snapshot-log table format (operators/tablelog.py) — time travel,
-# incremental append scans, copy-on-write deletes, stats-pruned scans.
+# copy-on-write deletes, pruned scans and the routed sink.
 # Each query builds a throwaway table from deterministic event_id slices,
 # so the oracle replays the slice arithmetic over the same base table.
 # ===========================================================================
@@ -8052,34 +8052,6 @@ def tablelog_time_travel_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn("version", F.lit(4))
     )
     return v2.unionByName(v4).select("version", "event_type", "cnt")
-
-
-@_q(
-    "tablelog_incremental_counts",
-    """
-    SELECT event_type, count(*)::BIGINT AS cnt,
-      min(event_id) AS min_id, max(event_id) AS max_id
-    FROM events WHERE event_id % 3 IN (1, 2) GROUP BY event_type
-    """,
-)
-def tablelog_incremental_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Incremental append scan between snapshots — the IVM input contract:
-    appends v1..v3; `incremental_append_scan(from=1)` yields exactly the
-    rows of the v2 and v3 appends (event_id mod-3 slices 1 and 2). The
-    oracle computes the same slice union from the base table."""
-    from blogparser_spark.operators import tablelog as tl
-
-    t = _tablelog_tmp("tablelog_inc_")
-    ev = _events(spark, sf_dir).select("event_id", "user_id", "event_type")
-    tl.append(spark, t, ev.filter(F.col("event_id") % 3 == 0))  # v1
-    tl.append(spark, t, ev.filter(F.col("event_id") % 3 == 1))  # v2
-    tl.append(spark, t, ev.filter(F.col("event_id") % 3 == 2))  # v3
-    inc = tl.incremental_append_scan(spark, t, from_version=1)
-    return inc.groupBy("event_type").agg(
-        F.count("*").cast("bigint").alias("cnt"),
-        F.min("event_id").alias("min_id"),
-        F.max("event_id").alias("max_id"),
-    )
 
 
 @_q(
@@ -8175,202 +8147,6 @@ def tablelog_routed_sink_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     routed = tl.read_snapshot(spark, t)
     return routed.groupBy("channel", "tool_category", "parse_status").agg(
         F.count("*").cast("bigint").alias("n_rows")
-    )
-
-
-@_q(
-    "tablelog_merge_upsert_counts",
-    """
-    WITH base AS (
-      SELECT event_id, event_type, value FROM events WHERE event_id % 2 = 0
-    ), src AS (
-      SELECT event_id, event_type, value + 500 AS value
-      FROM events WHERE event_id % 3 = 0
-    ), final AS (
-      SELECT * FROM base WHERE event_id % 3 <> 0
-      UNION ALL SELECT * FROM src
-    )
-    SELECT event_type, count(*)::BIGINT AS cnt,
-      sum(CAST(value AS DECIMAL(18,2)))::DOUBLE AS vsum,
-      min(event_id) AS min_id, max(event_id) AS max_id
-    FROM final GROUP BY event_type
-    """,
-)
-def tablelog_merge_upsert_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Atomic MERGE INTO on the snapshot-log format (tablelog.merge_upsert):
-    the even-id slice is the base table; the mod-3 slice (values bumped
-    +500) is the upsert source — ONE commit adds the source files and
-    rewrites the base files holding a source key without those rows. The
-    oracle replays upsert semantics relationally (base minus matched keys,
-    union source): agreement proves matched keys were replaced, unmatched
-    inserted, and nothing was double-counted. Iceberg MERGE INTO
-    (copy-on-write) semantics rebuilt from the public spec."""
-    from blogparser_spark.operators import tablelog as tl
-
-    t = _tablelog_tmp("tablelog_mrg_") + "/t"
-    ev = _events(spark, sf_dir).select("event_id", "event_type", "value")
-    tl.append(spark, t, ev.filter(F.col("event_id") % 2 == 0))
-    src = ev.filter(F.col("event_id") % 3 == 0).withColumn(
-        "value", F.col("value") + F.lit(500.0)
-    )
-    tl.merge_upsert(spark, t, src, ["event_id"])
-    return (
-        tl.read_snapshot(spark, t)
-        .groupBy("event_type")
-        .agg(
-            F.count("*").cast("bigint").alias("cnt"),
-            F.sum(F.col("value").cast("decimal(18,2)"))
-            .cast("double")
-            .alias("vsum"),
-            F.min("event_id").alias("min_id"),
-            F.max("event_id").alias("max_id"),
-        )
-    )
-
-
-@_q(
-    "tablelog_cdc_view_refresh",
-    """
-    WITH final AS (
-      SELECT event_id, event_type, value FROM events
-      WHERE event_id % 3 IN (0, 1) AND event_id % 5 <> 0 AND event_id % 4 <> 0
-      UNION ALL
-      SELECT event_id, event_type, value + 250 AS value
-      FROM events WHERE event_id % 4 = 0
-    )
-    SELECT event_type, count(*)::BIGINT AS cnt,
-      sum(CAST(value AS DECIMAL(18,2)))::DOUBLE AS vsum
-    FROM final GROUP BY event_type
-    """,
-)
-def tablelog_cdc_view_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """CDC-driven view maintenance end-to-end: a view materialized at
-    snapshot v1 is refreshed ONLY from tablelog.changelog_scan(v1→latest)
-    — an append, a copy-on-write delete, and an atomic merge-upsert whose
-    rows outlive the earlier delete — folded through
-    aggregate.apply_retractable_delta. The oracle recomputes the view over
-    the final live row set directly; agreement proves the changelog emits
-    exact pre-image deletes and post-image inserts for every commit kind
-    (a rewriting commit's net diff) and that the retractable algebra refreshes without rescanning the
-    base. At 10^12 rows this is the difference between a per-commit delta
-    agg and a full-table recompute per refresh."""
-    from blogparser_spark.operators import tablelog as tl
-    from blogparser_spark.operators.aggregate import (
-        apply_retractable_delta,
-        retractable_state,
-    )
-
-    t = _tablelog_tmp("tablelog_cdc_") + "/t"
-    ev = _events(spark, sf_dir).select("event_id", "event_type", "value")
-    tl.append(spark, t, ev.filter(F.col("event_id") % 3 == 0))  # v1
-    view0 = retractable_state(
-        tl.read_snapshot(spark, t), ["event_type"], "value"
-    ).localCheckpoint()
-    tl.append(spark, t, ev.filter(F.col("event_id") % 3 == 1))  # v2
-    tl.delete_where(spark, t, F.col("event_id") % 5 == 0, ["event_id"])  # v3
-    src = ev.filter(F.col("event_id") % 4 == 0).withColumn(
-        "value", F.col("value") + F.lit(250.0)
-    )
-    tl.merge_upsert(spark, t, src, ["event_id"])  # v4
-    delta = tl.changelog_scan(spark, t, from_version=1).withColumn(
-        "op",
-        F.when(F.col("_change_type") == "insert", F.lit("I")).otherwise("D"),
-    )
-    out = apply_retractable_delta(view0, delta, ["event_type"], "value")
-    return out.select(
-        "event_type", "cnt", F.col("vsum").cast("double").alias("vsum")
-    )
-
-
-@_q(
-    "tablelog_update_where_counts",
-    """
-    SELECT event_type, count(*)::BIGINT AS cnt,
-      sum(CASE WHEN event_id % 7 = 0 THEN user_id + 1000000
-          ELSE user_id END)::BIGINT AS sum_uid,
-      min(event_id) AS min_id, max(event_id) AS max_id
-    FROM events WHERE event_id % 11 <> 0 GROUP BY event_type
-    """,
-)
-def tablelog_update_where_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Copy-on-write row-level UPDATE on the snapshot-log format
-    (tablelog.update_where — Iceberg's eager update mode): events land
-    range-partitioned into multiple files with footer stats, ONE atomic
-    update commit rewrites only the files containing event_id % 7 == 0
-    rows (adding 1,000,000 to their user_id; non-matching neighbors carry
-    over verbatim), and a subsequent delete of event_id % 11 == 0
-    applies across both rewritten and untouched files. The oracle replays
-    the CASE arithmetic on the base table — agreement proves the partial
-    rewrite touched exactly the matched rows, dropped none of their
-    neighbors, and left every other file byte-identical. No reference
-    analog (the Go CLI has no storage layer, sample/main.go:32-47)."""
-    from blogparser_spark.operators import tablelog as tl
-
-    t = _tablelog_tmp("tablelog_upd_") + "/t"
-    ev = _events(spark, sf_dir).select("event_id", "user_id", "event_type")
-    tl.append(
-        spark,
-        t,
-        ev.repartitionByRange(8, "event_id"),
-        stats_cols=("event_id",),
-    )
-    tl.update_where(  # v2: CoW rewrite of matched files only
-        spark,
-        t,
-        F.col("event_id") % 7 == 0,
-        {"user_id": F.col("user_id") + 1000000},
-    )
-    tl.delete_where(spark, t, F.col("event_id") % 11 == 0, key_cols=["event_id"])
-    return tl.read_snapshot(spark, t).groupBy("event_type").agg(
-        F.count("*").cast("bigint").alias("cnt"),
-        F.sum("user_id").cast("bigint").alias("sum_uid"),
-        F.min("event_id").alias("min_id"),
-        F.max("event_id").alias("max_id"),
-    )
-
-
-@_q(
-    "tablelog_consume_exactly_once",
-    """
-    SELECT event_type, count(*)::BIGINT AS cnt
-    FROM events GROUP BY event_type
-    """,
-)
-def tablelog_consume_exactly_once(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Checkpointed incremental consumption end to end
-    (tablelog.consume_incremental + append_idempotent — the exactly-once
-    source-to-sink relay): a source table takes the even slice (consumed
-    and acked into a sink table, idempotence marker = the consumed
-    to_version), then the odd slice — whose batch is processed ONCE,
-    'crashes' before ack, is RE-DELIVERED on the next consume, and is
-    processed again with the same marker: the sink's marker ledger makes
-    the replay a no-op commit. Final sink counts equal the base table
-    exactly — if redelivery leaked a duplicate batch the odd slice would
-    double and the oracle would mismatch. This is the Structured
-    Streaming offset-log + idempotent-sink contract rebuilt on snapshot
-    versions. No reference analog (the Go CLI has no storage layer)."""
-    from blogparser_spark.operators import tablelog as tl
-
-    base = _tablelog_tmp("tablelog_cx_")
-    src, sink, cp = base + "/src", base + "/sink", base + "/cp"
-    ev = _events(spark, sf_dir).select("event_id", "user_id", "event_type")
-    tl.append(spark, src, ev.filter(F.col("event_id") % 2 == 0))  # v1
-    df, _f, to_v, ack = tl.consume_incremental(spark, src, cp)
-    tl.append_idempotent(spark, sink, df, marker=f"consumed-v{to_v}")
-    ack()
-    tl.append(spark, src, ev.filter(F.col("event_id") % 2 == 1))  # v2
-    df1, _f1, to_v1, _ack_lost = tl.consume_incremental(spark, src, cp)
-    tl.append_idempotent(spark, sink, df1, marker=f"consumed-v{to_v1}")
-    # crash before ack: the next consume RE-DELIVERS the same delta...
-    df2, _f2, to_v2, ack2 = tl.consume_incremental(spark, src, cp)
-    # ...and the sink's marker ledger makes the replay a no-op
-    _v, committed = tl.append_idempotent(
-        spark, sink, df2, marker=f"consumed-v{to_v2}"
-    )
-    assert not committed and to_v2 == to_v1
-    ack2()
-    return tl.read_snapshot(spark, sink).groupBy("event_type").agg(
-        F.count("*").cast("bigint").alias("cnt")
     )
 
 

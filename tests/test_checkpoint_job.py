@@ -320,7 +320,7 @@ def test_slice_manifest_carries_commit_summary(spark, tmp_path):
     out = str(tmp_path / "out_sum")
     ms = run_sliced(spark, inp, out, transform, n_slices=2)
     for m in ms:
-        entries = tl._added_entries(out + "/table", tl._read_commit(out + "/table", m.table_version))
+        entries = tl._read_commit(out + "/table", m.table_version)["added_data"]
         s = m.commit_summary
         assert s["added_records"] == m.rows_in == sum(e["rows"] for e in entries)
         assert s["added_data_files"] == len(entries)
@@ -330,7 +330,7 @@ def test_slice_manifest_carries_commit_summary(spark, tmp_path):
         assert read_manifest(out, m.slice_id)["commit_summary"] == s
         assert "removed_data_files" not in s  # a plain append
     table = out + "/table"
-    prev = {m.slice_id: tl._added_entries(table, tl._read_commit(table, m.table_version)) for m in ms}
+    prev = {m.slice_id: tl._read_commit(table, m.table_version)["added_data"] for m in ms}
     again = run_sliced(spark, inp, out, transform, n_slices=2, resume=False)
     assert [m.table_version for m in again] == [3, 4]  # one commit per slice
     for m in again:

@@ -1,6 +1,6 @@
 """Snapshot-log table format (operators/tablelog.py): commit atomicity,
-time travel, copy-on-write deletes, incremental append scans, snapshot
-expiry, and partition, stats and bloom pruning."""
+time travel, copy-on-write deletes and replaces, snapshot expiry, orphan
+removal, and partition, stats and bloom pruning."""
 
 from __future__ import annotations
 
@@ -81,41 +81,24 @@ def test_delete_sequence_scoping(spark, tmp_path):
     assert _ids(tl.read_snapshot(spark, t)) == [0, 1, 2] + list(range(5, 10))
 
 
-def test_incremental_append_scan(spark, tmp_path):
-    t = str(tmp_path / "t")
-    tl.append(spark, t, _batch(spark, 0, 10))  # v1
-    tl.append(spark, t, _batch(spark, 10, 20))  # v2
-    tl.append(spark, t, _batch(spark, 20, 30))  # v3
-    inc = tl.incremental_append_scan(spark, t, from_version=1)
-    assert _ids(inc) == list(range(10, 30))
-    # a delete commit in range cannot be expressed as appends
-    tl.delete_where(spark, t, F.col("event_id") < 5, key_cols=["event_id"])
-    with pytest.raises(ValueError, match="delete"):
-        tl.incremental_append_scan(spark, t, from_version=3)
-
-
 def test_expire_snapshots(spark, tmp_path):
     t = str(tmp_path / "t")
-    tl.append(spark, t, _batch(spark, 0, 10))  # v1
-    tl.overwrite(spark, t, _batch(spark, 100, 110))  # v2 — v1 files orphaned
+    tl.append(spark, t, _batch(spark, 0, 10).coalesce(1))  # v1
+    # v2 rewrites v1's one file without its first half: v1's file orphaned
+    tl.delete_where(spark, t, F.col("event_id") < 5, key_cols=["event_id"])
     tl.append(spark, t, _batch(spark, 110, 120))  # v3
     _, s1 = tl._state_at(t, 1)
     v1_files = list(s1["data"])
+    assert not set(v1_files) & set(tl._state_at(t, 2)[1]["data"])
     res = tl.expire_snapshots(t, keep_last=2)
     assert res["versions_removed"] == 1
     assert res["files_removed"] == len(v1_files)
     assert all(not os.path.exists(p) for p in v1_files)
     # retained snapshots still read correctly (v2 via rebase base, v3 live)
-    assert _ids(tl.read_snapshot(spark, t, version=2)) == list(range(100, 110))
-    assert _ids(tl.read_snapshot(spark, t)) == list(range(100, 120))
+    assert _ids(tl.read_snapshot(spark, t, version=2)) == list(range(5, 10))
+    assert _ids(tl.read_snapshot(spark, t)) == list(range(5, 10)) + list(range(110, 120))
     with pytest.raises(tl.SnapshotExpired):
         tl.read_snapshot(spark, t, version=1)
-    # incremental scan across the rebase boundary still works from v2
-    assert _ids(tl.incremental_append_scan(spark, t, from_version=2)) == list(
-        range(110, 120)
-    )
-    with pytest.raises(tl.SnapshotExpired):
-        tl.incremental_append_scan(spark, t, from_version=0)
 
 
 def test_schema_enforcement_and_evolution(spark, tmp_path):
@@ -516,31 +499,6 @@ def test_append_commit_summary_exact(spark, tmp_path, monkeypatch):
     assert s3["added_data_files"] == len(c3["added_data"]) and s3["rewrite_s"] >= 0
 
 
-def test_overwrite_and_rollback_record_summaries(spark, tmp_path):
-    """Overwrite and rollback commits record what they added and removed,
-    like every other commit, and rewrite none of the files they remove."""
-    t = str(tmp_path / "t")
-
-    def added_size(v):
-        return sum(os.path.getsize(e["path"]) for e in tl._read_commit(t, v)["added_data"])
-
-    def counts(v):
-        s = tl.commit_summary(t, v)
-        assert s["added_files_size"] == added_size(v)
-        return tuple(s[k] for k in (
-            "added_data_files", "added_records",
-            "removed_data_files", "removed_records", "rewritten_files",
-        ))
-
-    tl.append(spark, t, spark.range(0, 30).repartition(3))  # v1: 3 files
-    v2 = tl.append(spark, t, spark.range(30, 40).coalesce(1))
-    v3 = tl.overwrite(spark, t, spark.range(0, 7).coalesce(1))
-    assert counts(v3) == (1, 7, 4, 40, 0)
-    v4 = tl.rollback_to(t, v2)
-    assert counts(v4) == (4, 40, 1, 7, 0)
-    assert tl.read_snapshot(spark, t).count() == 40
-
-
 def test_plan_scan_reports_why_files_were_pruned(spark, tmp_path):
     """plan_scan returns a scan report: the files it considered, and each
     pruned file counted under the first check that ruled it out —
@@ -656,6 +614,25 @@ def test_expiry_replays_the_log_once(tmp_path, monkeypatch):
     assert {v: tl._state_at(t, v)[1] for v in (21, 30, 40)} == before
 
 
+def test_expiry_refuses_to_expire_the_current_snapshot(tmp_path):
+    """keep_last below 1 would expire every snapshot, the current one
+    included (keep_last=0 used to slice the whole log, versions[-0:], and
+    expire nothing): it raises and leaves the log as it was."""
+    t = str(tmp_path / "t")
+    for v in range(1, 6):
+        assert tl._try_commit(t, {
+            "version": v, "parent": v - 1 or None, "operation": "append",
+            "ts": float(v), "schema": [["k", "bigint"]] if v == 1 else None,
+            "added_data": [],
+        })
+    for keep_last in (0, -1):
+        with pytest.raises(ValueError, match="keep_last"):
+            tl.expire_snapshots(t, keep_last=keep_last)
+        assert tl.list_versions(t) == [1, 2, 3, 4, 5]
+    assert tl.expire_snapshots(t, keep_last=1)["versions_removed"] == 4
+    assert tl.list_versions(t) == [5]
+
+
 @settings(max_examples=40, deadline=None)
 @given(
     values=st.one_of(
@@ -698,119 +675,11 @@ def test_bloom_sized_by_rows(tmp_path):
     assert fp_sized < 50 < fp_fixed
 
 
-def _vbatch(spark, lo: int, hi: int, bump: float = 0.0):
-    return _batch(spark, lo, hi).withColumn(
-        "value", F.col("event_id") * 1.5 + F.lit(bump)
-    )
-
-
-def test_merge_upsert_atomic_commit(spark, tmp_path):
-    """One commit adds the source's files and rewrites the files holding a
-    source key without those rows (matched keys replaced, unmatched
-    inserted); no delete file is written."""
-    t = str(tmp_path / "t")
-    tl.append(spark, t, _vbatch(spark, 0, 12))
-    v = tl.merge_upsert(spark, t, _vbatch(spark, 6, 18, bump=1000.0), ["event_id"])
-    assert v == 2
-    c = tl._read_commit(t, 2)
-    assert c["operation"] == "merge"
-    assert c["added_data"] and c["removed_data"]  # both sides, one commit
-    assert "added_deletes" not in c
-    rows = {r.event_id: r.value for r in tl.read_snapshot(spark, t).collect()}
-    exp = {k: k * 1.5 for k in range(6)}
-    exp.update({k: k * 1.5 + 1000.0 for k in range(6, 18)})
-    assert rows == exp
-
-
-def test_merge_upsert_into_empty_table_is_insert_only(spark, tmp_path):
-    t = str(tmp_path / "t")
-    v = tl.merge_upsert(spark, t, _vbatch(spark, 0, 5), ["event_id"])
-    assert v == 1
-    assert _ids(tl.read_snapshot(spark, t)) == list(range(5))
-    assert "added_deletes" not in tl._read_commit(t, 1)
-
-
-def test_rollback_preserves_history_and_seq_scoping(spark, tmp_path):
-    t = str(tmp_path / "t")
-    tl.append(spark, t, _batch(spark, 0, 10))                       # v1
-    tl.delete_where(spark, t, F.col("event_id") < 4, ["event_id"])  # v2
-    tl.append(spark, t, _batch(spark, 0, 2))                        # v3 re-append
-    assert _ids(tl.read_snapshot(spark, t)) == [0, 1] + list(range(4, 10))
-    v4 = tl.rollback_to(t, 2)
-    assert v4 == 4
-    # state == v2 exactly (re-appended keys gone again; delete still scoped)
-    assert _ids(tl.read_snapshot(spark, t)) == list(range(4, 10))
-    # the rolled-back version is still time-travelable
-    assert _ids(tl.read_snapshot(spark, t, version=3)) == [0, 1] + list(
-        range(4, 10)
-    )
-    assert [tl._read_commit(t, v)["operation"] for v in tl.list_versions(t)] == [
-        "append", "delete", "append", "rollback",
-    ]
-
-
-def test_changelog_scan_nets_to_live_rows(spark, tmp_path):
-    """Folding the CDC stream (+insert/−delete) over every commit kind —
-    append, MoR delete, merge, rollback — reproduces the live row set."""
-    t = str(tmp_path / "t")
-    tl.append(spark, t, _vbatch(spark, 0, 10))
-    tl.delete_where(spark, t, F.col("event_id") % 4 == 0, ["event_id"])
-    tl.merge_upsert(spark, t, _vbatch(spark, 5, 15, bump=100.0), ["event_id"])
-    tl.rollback_to(t, 2)
-    ch = tl.changelog_scan(spark, t, from_version=0).collect()
-    net: dict[tuple, int] = {}
-    for r in ch:
-        d = 1 if r._change_type == "insert" else -1
-        net[(r.event_id, r.value)] = net.get((r.event_id, r.value), 0) + d
-    live = {kv for kv, n in net.items() if n > 0}
-    assert all(n in (0, 1) for n in net.values())
-    actual = {(r.event_id, r.value) for r in tl.read_snapshot(spark, t).collect()}
-    assert live == actual
-
-
-def test_changelog_delete_emits_exact_preimage(spark, tmp_path):
-    t = str(tmp_path / "t")
-    tl.append(spark, t, _vbatch(spark, 0, 10))
-    tl.delete_where(spark, t, F.col("event_id") >= 7, ["event_id"])
-    ch = tl.changelog_scan(spark, t, from_version=1)
-    rows = [(r.event_id, r.value, r._commit_version) for r in ch.collect()]
-    assert sorted(rows) == [(k, k * 1.5, 2) for k in (7, 8, 9)]
-    assert {r._change_type for r in ch.collect()} == {"delete"}
-
-
-def test_changelog_refreshes_view_without_base_rescan(spark, tmp_path):
-    """apply_retractable_delta over the changelog == full recompute over
-    the final snapshot — the CDC feed a 10^12-row view absorbs instead of
-    rescanning history."""
-    from blogparser_spark.operators.aggregate import (
-        apply_retractable_delta,
-        retractable_state,
-    )
-
-    t = str(tmp_path / "t")
-    tl.append(spark, t, _vbatch(spark, 0, 30))  # v1
-    view0 = retractable_state(
-        tl.read_snapshot(spark, t), ["event_type"], "value"
-    ).localCheckpoint()
-    tl.append(spark, t, _vbatch(spark, 30, 45))                       # v2
-    tl.delete_where(spark, t, F.col("event_id") % 5 == 0, ["event_id"])  # v3
-    tl.merge_upsert(spark, t, _vbatch(spark, 40, 55, bump=7.0), ["event_id"])  # v4
-    delta = tl.changelog_scan(spark, t, from_version=1).withColumn(
-        "op",
-        F.when(F.col("_change_type") == "insert", F.lit("I")).otherwise("D"),
-    )
-    refreshed = apply_retractable_delta(view0, delta, ["event_type"], "value")
-    full = retractable_state(tl.read_snapshot(spark, t), ["event_type"], "value")
-    a = sorted((r.event_type, r.cnt, r.vsum) for r in refreshed.collect())
-    b = sorted((r.event_type, r.cnt, r.vsum) for r in full.collect())
-    assert a == b
-
-
 def test_remove_orphans_sweeps_uncommitted_files_only(spark, tmp_path):
     t = str(tmp_path / "t")
     tl.append(spark, t, _batch(spark, 0, 10))
     # a writer that wrote files but died before the log commit
-    tl._write_data_files(_batch(spark, 90, 99), t, 2, (), "data")
+    tl._write_data_files(_batch(spark, 90, 99), t, 2, ())
     assert tl.remove_orphans(t, min_age_sec=3600) == 0  # age guard holds
     removed = tl.remove_orphans(t)
     assert removed > 0
@@ -834,126 +703,6 @@ def test_expiry_writes_base_at_every_chain_break(spark, tmp_path):
     assert _ids(tl.read_snapshot(spark, t, version=2)) == list(range(20))
     with pytest.raises(tl.SnapshotExpired):
         tl.read_snapshot(spark, t, version=1)
-
-
-# ---------------------------------------------------------------------------
-# copy-on-write UPDATE
-# ---------------------------------------------------------------------------
-
-
-def test_update_rewrites_only_matched_files(spark, tmp_path):
-    """update_where rewrites ONLY the files containing a matching live row
-    (5 range-partitioned files, predicate hits one) in one atomic commit;
-    untouched files stay byte-identical and time travel sees old values."""
-    t = str(tmp_path / "t")
-    tl.append(
-        spark,
-        t,
-        spark.range(0, 50)
-        .selectExpr("id AS k", "id * 2 AS v")
-        .repartitionByRange(5, "k"),
-        stats_cols=("k",),
-    )
-    files_v1 = set(tl._state_at(t)[1]["data"])
-    tl.update_where(spark, t, F.col("k").between(10, 14), {"v": F.col("v") + 1000})
-    st = tl._state_at(t)[1]
-    assert len(files_v1 & set(st["data"])) == 4  # 4 of 5 untouched
-    rows = {r.k: r.v for r in tl.read_snapshot(spark, t).collect()}
-    assert len(rows) == 50 and rows[12] == 1024 and rows[9] == 18
-    assert {r.k: r.v for r in tl.read_snapshot(spark, t, version=1).collect()}[
-        12
-    ] == 24
-
-
-def test_update_folds_pending_deletes_and_cdc_net_diff(spark, tmp_path):
-    """An update rewrites files earlier deletes already rewrote, and the
-    CDC changelog of an update commit is the exact net row diff —
-    carried-over unchanged neighbors cancel in exceptAll."""
-    t = str(tmp_path / "t")
-    tl.append(spark, t, spark.range(0, 20).selectExpr("id AS k", "id * 2 AS v"))
-    tl.delete_where(spark, t, F.col("k") == 11, key_cols=["k"])
-    tl.delete_where(spark, t, F.col("k") == 1, key_cols=["k"])
-    tl.update_where(spark, t, F.col("k") == 13, {"v": F.lit(7)})
-    rows = {r.k: r.v for r in tl.read_snapshot(spark, t).collect()}
-    assert 11 not in rows and 1 not in rows and rows[13] == 7 and len(rows) == 18
-    cl = tl.changelog_scan(spark, t, from_version=3)
-    assert sorted(
-        (r.k, r.v) for r in cl.filter("_change_type = 'delete'").collect()
-    ) == [(13, 26)]
-    assert sorted(
-        (r.k, r.v) for r in cl.filter("_change_type = 'insert'").collect()
-    ) == [(13, 7)]
-
-
-def test_update_noop_and_validation(spark, tmp_path):
-    t = str(tmp_path / "t")
-    tl.append(spark, t, spark.range(0, 5).selectExpr("id AS k", "id AS v"))
-    v = tl.update_where(spark, t, F.col("k") == 999, {"v": F.lit(0)})
-    assert v == 2 and tl.read_snapshot(spark, t).count() == 5
-    with pytest.raises(ValueError, match="unknown column"):
-        tl.update_where(spark, t, F.col("k") == 0, {"nope": F.lit(1)})
-
-
-# ---------------------------------------------------------------------------
-# checkpointed incremental consumer
-# ---------------------------------------------------------------------------
-
-
-def test_consumer_redelivery_until_ack(spark, tmp_path):
-    """consume_incremental re-delivers the same delta until ack() persists
-    the offset (crash-before-ack safety); after ack only newer commits
-    surface, and an up-to-date consumer gets df=None."""
-    t = str(tmp_path / "t")
-    cp = str(tmp_path / "cp")
-    tl.append(spark, t, spark.range(0, 5).selectExpr("id AS k"))
-    df, f0, t0, _unacked = tl.consume_incremental(spark, t, cp)
-    assert (f0, t0) == (0, 1) and df.count() == 5
-    df2, f1, t1, ack2 = tl.consume_incremental(spark, t, cp)  # re-delivered
-    assert (f1, t1) == (0, 1) and df2.count() == 5
-    assert ack2() == 1 and tl.consumer_offset(cp) == 1
-    df3, f2, t2, _ = tl.consume_incremental(spark, t, cp)
-    assert df3 is None and (f2, t2) == (1, 1)
-    tl.append(spark, t, spark.range(5, 8).selectExpr("id AS k"))
-    df4, _, _, ack4 = tl.consume_incremental(spark, t, cp)
-    assert sorted(r.k for r in df4.collect()) == [5, 6, 7]
-    ack4()
-
-
-def test_consumer_changelog_mode_folds_retractions(spark, tmp_path):
-    """appends mode refuses in-range deletes (Iceberg's default streaming
-    read); changelog mode surfaces them as retraction rows for
-    retractable-state consumers."""
-    t = str(tmp_path / "t")
-    cp = str(tmp_path / "cp")
-    tl.append(spark, t, spark.range(0, 5).selectExpr("id AS k"))
-    _df, _f, _t, ack = tl.consume_incremental(spark, t, cp)
-    ack()
-    tl.delete_where(spark, t, F.col("k") == 3, key_cols=["k"])
-    with pytest.raises(ValueError, match="delete"):
-        tl.consume_incremental(spark, t, cp)
-    df, _f, _t, ack2 = tl.consume_incremental(spark, t, cp, mode="changelog")
-    assert [(r.k, r._change_type) for r in df.collect()] == [(3, "delete")]
-    ack2()
-    with pytest.raises(ValueError, match="unknown consume mode"):
-        tl.consume_incremental(spark, t, cp, mode="nope")
-
-
-def test_expiry_age_retention_composes_with_keep_last(spark, tmp_path):
-    """max_age_sec retains every commit younger than the cutoff on TOP of
-    keep_last (Iceberg's retain-last + older-than composition): with a
-    huge age window nothing expires; with age 0 the keep_last floor still
-    holds."""
-    t = str(tmp_path / "t")
-    for lo in range(0, 40, 10):
-        tl.append(spark, t, _batch(spark, lo, lo + 10))
-    res = tl.expire_snapshots(t, keep_last=1, max_age_sec=3600.0)
-    assert res["versions_removed"] == 0  # all four commits are young
-    assert tl.read_snapshot(spark, t, version=1).count() == 10
-    res = tl.expire_snapshots(t, keep_last=2, max_age_sec=0.0)
-    assert res["versions_removed"] == 2  # floor still keeps the last two
-    with pytest.raises(tl.SnapshotExpired):
-        tl.read_snapshot(spark, t, version=1)
-    assert tl.read_snapshot(spark, t).count() == 40
 
 
 def test_bloom_point_lookup_prunes_scattered_keys(spark, tmp_path):
