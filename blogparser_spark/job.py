@@ -17,7 +17,8 @@ submitted unchanged; local runs honor SPARK_GRAFT_CPUS.
 
 Output: one JSON line per slice run (slice_id, rows_in, rows_ok,
 wall_seconds, table_version, commit_summary — read from the slice
-manifests), then one JSON report line for the whole run.
+manifests), then one JSON report line for the whole run, which also
+says whether the driver JVM started from a class-data-sharing archive.
 """
 
 from __future__ import annotations
@@ -69,12 +70,12 @@ def main(argv: list[str] | None = None) -> int:
     )
     args = ap.parse_args(argv)
 
+    from blogparser_spark import session
     from blogparser_spark.operators import aggregate as agg
     from blogparser_spark.operators import tablelog as tl
     from blogparser_spark.operators.checkpoint import run_sliced
-    from blogparser_spark.session import get_spark
 
-    spark = get_spark(app_name="blogparser-job")
+    spark = session.get_spark(app_name="blogparser-job")
     manifests = run_sliced(
         spark,
         args.input,
@@ -111,6 +112,7 @@ def main(argv: list[str] | None = None) -> int:
             for r in agg.sink_counts(routed).collect()
         },
         "n_convs": agg.conv_stats(routed).count(),
+        "class_sharing": session.class_sharing(spark),
     }
     print(json.dumps(report))
     return 0

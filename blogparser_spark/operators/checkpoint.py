@@ -277,19 +277,19 @@ def run_sliced(
     done = {s for s, m in enumerate(current) if m in committed} if resume else set()
     sliced = _sliced_layout(input_path, n_slices, key_col)
     manifests: list[SliceManifest] = []
+    todo = [s for s in range(n_slices) if s not in done]
+    # one reader for the run: each parquet() call infers the schema in a
+    # Spark job of its own
+    source = spark.read.parquet(input_path) if todo else None
     with _observed_metrics_survive_empty_slices(spark):
-        for s in range(n_slices):
-            if s in done:
-                continue
+        for s in todo:
             t0 = time.time()
             if sliced:
                 # partition-column filter → directory-level pruning at the scan
-                src = spark.read.parquet(input_path).filter(F.col(SLICE_COL) == s)
+                src = source.filter(F.col(SLICE_COL) == s)
                 predicate = f"{SLICE_COL} = {s} (partition-pruned)"
             else:
-                src = spark.read.parquet(input_path).filter(
-                    slice_predicate(s, n_slices, key_col)
-                )
+                src = source.filter(slice_predicate(s, n_slices, key_col))
                 predicate = f"pmod(hash({key_col}), {n_slices}) = {s}"
             obs_in = Observation(f"in-{s}")
             obs_out = Observation(f"out-{s}")

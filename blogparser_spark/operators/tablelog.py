@@ -958,9 +958,12 @@ def _read_files(
     schema), by column name: the read needs no footer, so building the
     frame runs no Spark job, and a file that lacks a column (written
     before an append added it) reads it as NULL. No paths: an empty frame
-    of the schema."""
+    of the schema, built on the JVM (typed NULLs over an empty range) so
+    that counting it starts no Python task."""
     if not paths:
-        return spark.createDataFrame([], _ddl(schema or [["dummy", "int"]]))
+        return spark.range(0).select(
+            *(F.lit(None).cast(t).alias(n) for n, t in schema or [["dummy", "int"]])
+        )
     return spark.read.schema(_ddl(schema)).parquet(*paths)
 
 

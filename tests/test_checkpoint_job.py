@@ -108,6 +108,40 @@ def test_sliced_input_scan_prunes_to_own_files(spark, tmp_path):
     ) == full.count()
 
 
+def test_sliced_run_reads_its_input_once(spark, tmp_path, monkeypatch):
+    """run_sliced builds one reader for the run and filters it per slice
+    (each DataFrameReader.parquet call infers the schema in a Spark job of
+    its own), and each slice's scan still prunes to its slice_bucket
+    partition."""
+    from pyspark.sql.readwriter import DataFrameReader
+
+    from blogparser_spark.job import transform
+    from blogparser_spark.operators.checkpoint import SLICE_COL, run_sliced, write_sliced_input
+    from blogparser_spark.sources.synthetic import transcripts_df
+
+    p = str(tmp_path / "sliced_in")
+    write_sliced_input(transcripts_df(spark, n_convs=30, turns_per_conv=4), p, n_slices=4)
+    reads, scans = [], []
+    real = DataFrameReader.parquet
+
+    def parquet(self, *paths, **kw):
+        reads.extend(paths)
+        return real(self, *paths, **kw)
+
+    def traced(df):
+        plan = df._jdf.queryExecution().executedPlan().toString()  # noqa: SLF001
+        scans.append(next(ln for ln in plan.splitlines() if "PartitionFilters" in ln))
+        return transform(df)
+
+    monkeypatch.setattr(DataFrameReader, "parquet", parquet)
+    ms = run_sliced(spark, p, str(tmp_path / "out"), traced, n_slices=4)
+    assert [m.slice_id for m in ms] == [0, 1, 2, 3]
+    assert reads.count(p) == 1
+    assert len(scans) == 4
+    for ln in scans:
+        assert SLICE_COL in ln.split("PartitionFilters")[1].split("]")[0]
+
+
 def test_sliced_run_uses_pruned_predicate_and_matches_flat(spark, tmp_path):
     from blogparser_spark.job import transform
     from blogparser_spark.operators import tablelog as tl
@@ -286,7 +320,7 @@ def test_job_prints_one_line_per_slice(spark, tmp_path, capsys):
     """The job prints one JSON line per slice (from its manifest) before
     the run report: rows in and ok, wall time, and the slice's tablelog
     commit with its summary."""
-    from blogparser_spark import job
+    from blogparser_spark import job, session
     from blogparser_spark.operators import tablelog as tl
 
     inp = _write_input(spark, tmp_path)
@@ -304,6 +338,10 @@ def test_job_prints_one_line_per_slice(spark, tmp_path, capsys):
     assert all(x["wall_seconds"] > 0 for x in lines)
     for x in lines:
         assert x["commit_summary"]["added_records"] == x["rows_in"]
+    # the job's get_spark found the tests' JVM running: the report carries
+    # what that JVM's launch did
+    assert report["class_sharing"] == session.class_sharing(spark)
+    assert report["class_sharing"].split()[0] in ("using", "recording", "off:")
 
 
 def test_slice_manifest_carries_commit_summary(spark, tmp_path):

@@ -144,6 +144,24 @@ def test_read_frames_are_built_without_a_spark_job(spark, tmp_path):
     assert _ids(hit) == [3, 4, 5, 6, 7]
 
 
+def test_empty_scan_frame_runs_on_the_jvm(spark, tmp_path):
+    """A scan that prunes every file (a lookup of an absent key) or a
+    snapshot with no live file reads an empty frame of the state's schema
+    built on the JVM: no LogicalRDD of Python rows in its plan, so
+    counting it starts no Python task."""
+    t = str(tmp_path / "t")
+    tl.append(spark, t, _batch(spark, 0, 10), stats_cols=("event_id",))
+    absent = {"event_id": ("=", 99)}
+    assert tl.plan_scan(t, absent)["paths"] == []
+    schema = tl.read_snapshot(spark, t).schema
+    tl.delete_where(spark, t, F.col("event_id") >= 0, ["event_id"])
+    for empty in (tl.scan_where(spark, t, absent, version=1), tl.read_snapshot(spark, t)):
+        plan = empty._jdf.queryExecution().optimizedPlan().toString()  # noqa: SLF001
+        assert "LogicalRDD" not in plan
+        assert empty.schema == schema
+        assert empty.count() == 0
+
+
 def test_append_retries_on_commit_race(spark, tmp_path):
     t = str(tmp_path / "t")
     tl.append(spark, t, _batch(spark, 0, 5))
