@@ -432,7 +432,7 @@ def boilerplate_flags(
     §2.2 ("three-sentence span" dedup across documents).
 
     The normalization is dedup._norm — the SAME key exact-dedup groups on,
-    so curation_funnel-style compositions can't drift between the two.
+    so a composition of both stages can't drift between the two.
     NULL text hashes to NULL; the left join keeps such rows (n_groups 0,
     is_boilerplate false) so the row contract holds for every input row.
     """
@@ -503,9 +503,9 @@ def score_normalize(
     Cost: ONE shuffle + sort per group for the rank; min/max ride the same
     window partition. percent_rank needs the group's total order, so a
     single hot group serializes onto one task — at 100 TB either
-    normalize within finer strata or swap the rank for a DDSketch-based
-    approximate CDF lookup (dataops/sketches.py) which is two broadcast
-    passes and no sort."""
+    normalize within finer strata or swap the rank for a mergeable
+    quantile-sketch CDF lookup, which is two broadcast passes and no
+    sort."""
     wo = Window.partitionBy(*group_cols).orderBy(score_col)
     wg = Window.partitionBy(*group_cols)
     lo, hi = F.min(score_col).over(wg), F.max(score_col).over(wg)

@@ -372,7 +372,7 @@ def rfm_scores(events: DataFrame, n_bands: int = 5) -> DataFrame:
     partition-less window runs over one row per shard, so even the
     boundary computation never funnels the user table through one
     partition (at 10^9+ users with approximate needs, swap in
-    sketches.dd_quantiles) — then broadcast back as an (n_bands-1)-row
+    a mergeable quantile sketch) — then broadcast back as an (n_bands-1)-row
     cross join, so scoring is an embarrassingly parallel comparison
     count. Ties at a boundary band by VALUE (equal values get equal
     scores) — the honest answer for low-cardinality metrics like

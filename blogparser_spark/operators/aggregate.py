@@ -179,39 +179,6 @@ def merge_additive_states(
     )
 
 
-def funnel_step_latencies(
-    df: DataFrame,
-    steps: tuple[str, ...] = ("view", "click", "purchase"),
-    user_col: str = "user_id",
-    ts_col: str = "ts",
-    type_col: str = "event_type",
-) -> DataFrame:
-    """Per-user time-to-convert between consecutive funnel steps:
-    (user, step, latency_us) for every step actually reached after its
-    predecessor — the raw material for conversion-latency SLOs. Built on
-    funnel_steps (strictly-ordered progression), so a step row exists
-    only when the step followed the previous one; latency is exact
-    integer microseconds (the cross-engine timestamp convention). One
-    self-join of the tiny per-user step table on (user, step_idx-1)."""
-    fs = funnel_steps(df, steps, user_col, ts_col, type_col)
-    nxt = fs.select(
-        user_col,
-        (F.col("step_idx") - 1).alias("step_idx"),
-        F.col("step").alias("step"),
-        F.expr("unix_micros(cast(step_ts as timestamp))").alias("_t1"),
-    )
-    prv = fs.select(
-        user_col,
-        "step_idx",
-        F.expr("unix_micros(cast(step_ts as timestamp))").alias("_t0"),
-    )
-    return nxt.join(prv, [user_col, "step_idx"]).select(
-        user_col,
-        "step",
-        (F.col("_t1") - F.col("_t0")).alias("latency_us"),
-    )
-
-
 def retractable_state(
     df: DataFrame, key_cols: Sequence[str], value_col: str
 ) -> DataFrame:

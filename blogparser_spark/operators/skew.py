@@ -88,8 +88,7 @@ def equi_depth_bounds(
     bucket, boundary, n_rows) where `boundary` is the value at rank
     ceil(k * n / n_buckets) for k = 1..n_buckets-1 — the exact order
     statistics a range partitioner / stratifier needs (the sampled
-    approximation is what repartitionByRange does internally; DDSketch in
-    dataops.sketches is the mergeable approximate twin; this is the
+    approximation is what repartitionByRange does internally; this is the
     auditable exact form). Duplicate values make some boundaries equal —
     that is the correct answer for skewed data and exactly what a range
     partitioner must see to merge empty ranges.

@@ -1,5 +1,6 @@
-"""Driver-contract queries: one entry per operator family (SURVEY.md §2 +
-dataops), each paired with an exact DuckDB SQL oracle in ORACLE_SQL.
+"""Driver-contract queries: one entry per operator family (SURVEY.md §2 and
+the dataops modules), each paired with an exact DuckDB SQL oracle in
+ORACLE_SQL.
 
 Every query is a callable (spark, sf_dir) -> DataFrame over the driver's
 parquet tables. Column names/aliases match the oracle SQL exactly; float
@@ -1130,72 +1131,6 @@ def boilerplate_turn_flags(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_q(
-    "media_frame_sample",
-    """
-    WITH media AS (
-      SELECT doc_id AS media_id, strlen(text)::BIGINT AS n_bytes FROM documents
-    ), frames AS (
-      SELECT media_id, unnest(range((n_bytes // 1024) + 1)) AS frame_idx FROM media
-    )
-    SELECT media_id, frame_idx::INT AS frame_idx
-    FROM frames WHERE frame_idx % 3 = 0
-    """,
-)
-def media_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Multimodal frame-sampling plan: (media_id, frame_idx) rows for every
-    3rd frame — the pure-relational half of the video path (the decode
-    itself goes through the strict-gated mapInPandas codec)."""
-    from blogparser_spark.dataops.multimodal import documents_as_media, frame_sample_plan
-
-    media = documents_as_media(_docs(spark, sf_dir))
-    return frame_sample_plan(media, every_n=3).select(
-        "media_id", F.col("frame_idx").cast("int").alias("frame_idx")
-    )
-
-
-@_q(
-    "media_pipeline_features",
-    """
-    WITH m AS (
-      SELECT doc_id AS media_id,
-        (doc_id % 16 + 1)::INT AS width,
-        (doc_id % 12 + 1)::INT AS height,
-        ((doc_id % 7 + 1) * 4)::BIGINT AS n_frames
-      FROM documents
-    )
-    SELECT media_id, width, height, 3::INT AS channels,
-           '89504e47' AS magic,
-           ((n_frames - 1) // 3 + 1)::BIGINT AS n_frames_sampled
-    FROM m
-    """,
-)
-def media_pipeline_features(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The wired multimodal pipeline: synthesize VALID PNG payloads →
-    frame-sampling plan over the declared frame metadata → decode features
-    through decode_features(strict=codec_available()) → join. The oracle
-    knows the answers because payload dimensions are a pure function of the
-    id and the magic is the PNG signature; the decode path is
-    codec-invariant (header-parse fake ≡ PIL on well-formed PNGs), so this
-    query's results do not change the day a real codec appears."""
-    from blogparser_spark.dataops import multimodal as M
-
-    media = M.documents_as_png_media(_docs(spark, sf_dir))
-    feats = M.decode_features(media, strict=M.codec_available())
-    sampled = (
-        media.select(
-            "media_id",
-            F.explode(F.sequence(F.lit(0), F.col("n_frames") - 1)).alias("frame_idx"),
-        )
-        .filter(F.col("frame_idx") % 3 == 0)
-        .groupBy("media_id")
-        .agg(F.count("*").alias("n_frames_sampled"))
-    )
-    return feats.select("media_id", "width", "height", "channels", "magic").join(
-        sampled, "media_id"
-    )
-
-
 # ===========================================================================
 # Similarity family (dataops.similarity)
 # ===========================================================================
@@ -1824,11 +1759,10 @@ def langid_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     return d.groupBy("lang", "lang_pred").agg(F.count("*").alias("n"))
 
 
-
 def _quality_feature_ctes(base: str, t: str = "qt", f: str = "qf") -> str:
     """Shared quality-feature CTE pair over a (doc_id, text) base — the
     SINGLE source of the oracle-side stopword list and feature columns,
-    consumed by both quality_scores and curation_funnel so the two cannot
+    consumed by quality_scores and every quality-gated query so they cannot
     drift."""
     return f"""{t} AS (
       SELECT doc_id, text,
@@ -1870,48 +1804,6 @@ def quality_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     ratio, alpha ratio) — a pushdown-friendly native filter key."""
     d = textstats.with_quality(_docs(spark, sf_dir))
     return d.select("doc_id", "stopword_ratio", "alpha_ratio", "quality")
-
-
-@_q(
-    "pii_mask",
-    """
-    WITH p AS (
-      SELECT doc_id,
-        'contact user' || doc_id || '@example.com or 192.168.' || (doc_id % 256) ||
-        '.1 tel +1 555-010-' || (1000 + doc_id % 9000) || ' ' || substring(text, 1, 40) AS payload
-      FROM documents
-    )
-    SELECT doc_id,
-      len(regexp_extract_all(payload, '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\\.[A-Za-z]{2,}'))::BIGINT AS n_emails,
-      regexp_replace(
-        regexp_replace(
-          regexp_replace(payload, '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\\.[A-Za-z]{2,}', '<EMAIL>', 'g'),
-          '\\b(?:\\d{1,3}\\.){3}\\d{1,3}\\b', '<IP>', 'g'),
-        '\\+?\\d[\\d\\- ]{7,14}\\d', '<PHONE>', 'g') AS masked
-    FROM p
-    """,
-)
-def pii_mask(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Training-corpus PII scrub: emails / IPv4 / phone-like spans replaced
-    by typed placeholders, with an audit count, in one codegen pass."""
-    from blogparser_spark.dataops.scrub import EMAIL_RE, mask_pii
-
-    d = _docs(spark, sf_dir)
-    payload = F.concat(
-        F.lit("contact user"),
-        F.col("doc_id"),
-        F.lit("@example.com or 192.168."),
-        (F.col("doc_id") % 256),
-        F.lit(".1 tel +1 555-010-"),
-        (F.lit(1000) + F.col("doc_id") % 9000),
-        F.lit(" "),
-        F.substring("text", 1, 40),
-    )
-    return d.select("doc_id", payload.alias("payload")).select(
-        "doc_id",
-        F.regexp_count("payload", F.lit(EMAIL_RE)).cast("long").alias("n_emails"),
-        mask_pii(F.col("payload")).alias("masked"),
-    )
 
 
 @_q(
@@ -2055,7 +1947,7 @@ def bm25_pos_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ===========================================================================
-# Curation funnel — the dataops composed end-to-end
+# Shared near-duplicate oracle chain (near_dup_clusters and its kin)
 # ===========================================================================
 
 
@@ -2117,80 +2009,6 @@ def _near_dup_ctes(base: str) -> str:
       UNION
       SELECT e.u AS node, r.m FROM nd_edges e JOIN nd_reach r ON e.v = r.node
     )"""
-
-
-def _funnel_sql() -> str:
-    from blogparser_spark.dataops.scrub import EMAIL_RE, IPV4_RE, PHONE_RE
-
-    return f"""
-    WITH RECURSIVE {_quality_feature_ctes("documents")}, quality AS (
-      SELECT doc_id, text FROM qf
-      WHERE {_QUALITY_SCORE_SQL} >= 0.8
-    ), surv AS (
-      SELECT doc_id, text FROM (
-        SELECT doc_id, text, row_number() OVER (
-          PARTITION BY md5(trim(regexp_replace(lower(text), '\\s+', ' ', 'g')))
-          ORDER BY doc_id) AS rn
-        FROM quality
-      ) WHERE rn = 1
-    ), {_near_dup_ctes("surv")},
-    nd_drop AS (
-      SELECT node AS doc_id FROM nd_reach GROUP BY node HAVING node != min(m)
-    ), final AS (
-      SELECT s.doc_id, s.text FROM surv s
-      WHERE s.doc_id NOT IN (SELECT doc_id FROM nd_drop)
-    )
-    SELECT
-      (SELECT count(*) FROM documents)::BIGINT AS n_input,
-      (SELECT count(*) FROM quality)::BIGINT AS n_quality,
-      (SELECT count(*) FROM surv)::BIGINT AS n_exact,
-      (SELECT count(*) FROM final)::BIGINT AS n_final,
-      (SELECT count(*) FROM final WHERE
-         len(regexp_extract_all(text, '{EMAIL_RE}')) +
-         len(regexp_extract_all(text, '{IPV4_RE}')) +
-         len(regexp_extract_all(text, '{PHONE_RE}')) > 0)::BIGINT AS n_pii_rows
-    """
-
-
-@_q("curation_funnel", _funnel_sql())
-def curation_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The end-to-end training-data curation funnel, composing the dataops
-    the way a corpus pipeline runs them: quality gate (score ≥ 0.8) →
-    exact-dedup survivors (min-id per normalized text) → near-dup drop
-    (MinHash-LSH → verify → clusters, non-survivors removed) → PII audit.
-    One row of per-stage counts — the numbers a curation run reports.
-    Every stage is an already-oracle-verified operator; the funnel pins
-    their COMPOSITION (each stage consumes the previous stage's actual
-    output, not the raw table)."""
-    from functools import reduce
-
-    from blogparser_spark.dataops.scrub import EMAIL_RE, IPV4_RE, PHONE_RE
-
-    d = _docs(spark, sf_dir)
-    q = textstats.with_quality(d).filter(F.col("quality") >= 0.8).select(*d.columns)
-    # the dedup-survivor frame feeds clustering AND three counts — truncate
-    # its lineage once so the quality+window chain isn't re-derived per
-    # consumer (same checkpointing discipline as connected_components)
-    exact = dedup.apply_exact_dedup(q).localCheckpoint(eager=False)
-    clusters = dedup.near_dup_clusters(exact)
-    final = exact.join(
-        clusters.filter(~F.col("keep")).select("doc_id"), "doc_id", "left_anti"
-    )
-    pii_hits = (
-        F.regexp_count("text", F.lit(EMAIL_RE))
-        + F.regexp_count("text", F.lit(IPV4_RE))
-        + F.regexp_count("text", F.lit(PHONE_RE))
-    )
-    counts = [
-        d.agg(F.count("*").cast("long").alias("n_input")),
-        q.agg(F.count("*").cast("long").alias("n_quality")),
-        exact.agg(F.count("*").cast("long").alias("n_exact")),
-        final.agg(F.count("*").cast("long").alias("n_final")),
-        final.filter(pii_hits > 0).agg(
-            F.count("*").cast("long").alias("n_pii_rows")
-        ),
-    ]
-    return reduce(lambda a, b: a.crossJoin(b), counts)
 
 
 # ===========================================================================
@@ -2801,76 +2619,6 @@ def training_export_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# --------------------------------------------------------------- HLL sketch ---
-
-_HLL_SQL = r"""
-    WITH vals AS (
-      SELECT lang, md5(trim(regexp_replace(lower(text), '\s+', ' ', 'g'))) AS h
-      FROM documents
-    ), parts AS (
-      SELECT lang, ('0x' || substr(h, 1, 2))::INT AS register, substr(h, 3, 13) AS suf
-      FROM vals
-    ), ranked AS (
-      SELECT lang, register,
-        CASE WHEN length(regexp_extract(suf, '^0*', 0)) = 13 THEN 53
-             ELSE length(regexp_extract(suf, '^0*', 0)) * 4
-                  + CASE substr(suf, length(regexp_extract(suf, '^0*', 0)) + 1, 1)
-                      WHEN '1' THEN 3 WHEN '2' THEN 2 WHEN '3' THEN 2
-                      WHEN '4' THEN 1 WHEN '5' THEN 1 WHEN '6' THEN 1
-                      WHEN '7' THEN 1 ELSE 0 END + 1
-        END AS rank
-      FROM parts
-    ), regs AS (
-      SELECT lang, register, max(rank) AS max_rank FROM ranked GROUP BY 1, 2
-    ), agg AS (
-      SELECT lang, count(*)::BIGINT AS n_present,
-             (sum(1::BIGINT << (53 - max_rank))
-              + (256 - count(*)) * (1::BIGINT << 53))::BIGINT AS s_scaled
-      FROM regs GROUP BY 1
-    ), est AS (
-      SELECT lang, n_present, s_scaled,
-             (0.7213 / (1 + 1.079 / 256)) * 256.0 * 256.0
-               * (1::BIGINT << 53) / s_scaled AS raw
-      FROM agg
-    ), ex AS (
-      SELECT lang,
-             count(DISTINCT trim(regexp_replace(lower(text), '\s+', ' ', 'g')))::BIGINT
-               AS exact_distinct
-      FROM documents GROUP BY 1
-    )
-    SELECT est.lang, n_present, s_scaled,
-           round(CASE WHEN raw <= 640.0 AND n_present < 256
-                      THEN 256.0 * ln(256.0 / (256 - n_present))
-                      ELSE raw END, 6) AS hll_distinct,
-           exact_distinct
-    FROM est JOIN ex ON est.lang = ex.lang
-    ORDER BY est.lang
-"""
-
-
-@_q("hll_distinct_by_lang", _HLL_SQL)
-def hll_distinct_by_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-lang approximate distinct normalized texts via a deterministic
-    HyperLogLog sketch (p=8, md5-derived registers — dataops/sketches.py),
-    joined against the exact COUNT(DISTINCT) for calibration. The sketch
-    groupBy is a partial-aggregatable max over at most 256 registers per
-    lang, so at 10^12 turns the shuffle carries 256 rows per group instead
-    of every distinct key; the register state merges across checkpoint
-    slices and stream micro-batches (hll_merge). The oracle replays the
-    register construction, the exact-int64 scaled register sum, and the
-    small-range correction in DuckDB SQL."""
-    from blogparser_spark.dataops import sketches
-    from blogparser_spark.dataops.dedup import _norm
-
-    docs = _docs(spark, sf_dir)
-    regs = sketches.hll_registers(docs, _norm(F.col("text")), ("lang",), p=8)
-    est = sketches.hll_estimate(regs, ("lang",), p=8)
-    exact = docs.groupBy("lang").agg(
-        F.countDistinct(_norm(F.col("text"))).alias("exact_distinct")
-    )
-    return est.join(exact, "lang").orderBy("lang")
-
-
 # ------------------------------------------------------- segment-level dedup ---
 
 _SEGDUP_SQL = r"""
@@ -2986,143 +2734,6 @@ def order_revenue_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# ------------------------------------------------------------ count-min sketch ---
-
-_CMS_SQL = """
-    WITH coords AS (
-      SELECT user_id, j.r AS row,
-             ('0x' || substr(md5(j.r::VARCHAR || ':' || user_id::VARCHAR), 1, 8))::BIGINT % 64 AS col
-      FROM events, (SELECT unnest(range(2)) AS r) j
-    ), counters AS (
-      SELECT row, col, count(*)::BIGINT AS cnt FROM coords GROUP BY 1, 2
-    ), exact AS (
-      SELECT user_id, count(*)::BIGINT AS exact_n FROM events GROUP BY 1
-    ), est AS (
-      SELECT e.user_id, e.exact_n, min(coalesce(c.cnt, 0))::BIGINT AS cms_est
-      FROM exact e
-      CROSS JOIN (SELECT unnest(range(2)) AS r) j
-      LEFT JOIN counters c
-        ON c.row = j.r
-       AND c.col = ('0x' || substr(md5(j.r::VARCHAR || ':' || e.user_id::VARCHAR), 1, 8))::BIGINT % 64
-      GROUP BY 1, 2
-    ), tot AS (SELECT count(*)::BIGINT AS n_tot FROM events)
-    SELECT user_id, exact_n, cms_est, (cms_est - exact_n)::BIGINT AS overcount
-    FROM est, tot
-    WHERE cms_est * 175 >= n_tot
-    ORDER BY user_id
-"""
-
-
-@_q("cms_user_event_counts", _CMS_SQL)
-def cms_user_event_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Approximate per-user event frequencies via a deterministic count-min
-    sketch (d=2, w=64 — deliberately undersized so hash collisions are real
-    and the no-undercount invariant is visible in `overcount`), audited
-    against the exact groupBy count. The counter build is a map-side-
-    combinable COUNT over ≤ d·w coordinates (dataops/sketches.py), the
-    state merges by addition across slices/micro-batches, and the point
-    query is a broadcast join of the tiny counter grid — at 10^12 turns
-    this replaces a full per-key frequency shuffle with 128 counters.
-    Reported: users whose estimated share is ≥ 1/175 of the stream (the
-    sketch-side decision), with exact count and overcount for calibration.
-    The oracle replays the md5-derived coordinates bit-exactly in DuckDB."""
-    from blogparser_spark.dataops import sketches
-
-    ev = _events(spark, sf_dir)
-    key = F.col("user_id").cast("string")
-    counters = sketches.cms_counters(ev, key, (), d=2, w=64)
-    exact = ev.groupBy("user_id").agg(F.count("*").cast("bigint").alias("exact_n"))
-    est = sketches.cms_estimate(counters, exact, key, d=2, w=64)
-    tot = ev.agg(F.count("*").cast("bigint").alias("n_tot"))
-    return (
-        est.join(F.broadcast(tot))
-        .filter(F.col("cms_est") * 175 >= F.col("n_tot"))
-        .select(
-            "user_id",
-            "exact_n",
-            "cms_est",
-            (F.col("cms_est") - F.col("exact_n")).cast("bigint").alias("overcount"),
-        )
-        .orderBy("user_id")
-    )
-
-
-# --------------------------------------------------------------- bloom filter ---
-
-_BLOOM_SQL = """
-    WITH dim AS (
-      SELECT c_custkey FROM customer WHERE c_mktsegment = 'BUILDING'
-    ), bits AS (
-      SELECT DISTINCT
-        ('0x' || substr(md5('b' || j.h::VARCHAR || ':' || c_custkey::VARCHAR), 1, 8))::BIGINT % 1024 AS pos
-      FROM dim, (SELECT unnest(range(3)) AS h) j
-    ), blist AS (SELECT list(pos ORDER BY pos) AS bits FROM bits),
-    f AS (
-      SELECT o_orderstatus,
-        (list_contains(bits, ('0x' || substr(md5('b0:' || o_custkey::VARCHAR), 1, 8))::BIGINT % 1024)
-         AND list_contains(bits, ('0x' || substr(md5('b1:' || o_custkey::VARCHAR), 1, 8))::BIGINT % 1024)
-         AND list_contains(bits, ('0x' || substr(md5('b2:' || o_custkey::VARCHAR), 1, 8))::BIGINT % 1024)) AS pass,
-        o_custkey IN (SELECT c_custkey FROM dim) AS truem
-      FROM orders, blist
-    )
-    SELECT o_orderstatus,
-      count(*)::BIGINT AS n_orders,
-      sum(CASE WHEN pass THEN 1 ELSE 0 END)::BIGINT AS n_pass,
-      sum(CASE WHEN truem THEN 1 ELSE 0 END)::BIGINT AS n_true,
-      sum(CASE WHEN pass AND NOT truem THEN 1 ELSE 0 END)::BIGINT AS n_false_pos
-    FROM f GROUP BY 1 ORDER BY 1
-"""
-
-
-@_q("bloom_semijoin_audit", _BLOOM_SQL)
-def bloom_semijoin_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Bloom-filter pre-join pruning audited per order status: the
-    'BUILDING'-segment customer keys build a 1024-bit / 3-hash bloom
-    (dataops/sketches.py) whose bitset rides to the fact scan as a ONE-ROW
-    broadcast array; membership is three unrolled array_contains conjuncts
-    in whole-stage codegen — no explode, no shuffle on the fact side. The
-    audit joins the exact semijoin truth per row: n_pass ≥ n_true always
-    (no false negatives — the bloom guarantee), n_false_pos is what the
-    downstream join would have shuffled for nothing without the filter. At
-    100 TB this is the explicit, reusable form of Catalyst's runtime bloom
-    pushdown: the fact rows that can't match die at the scan instead of
-    crossing the join shuffle."""
-    from blogparser_spark.dataops import sketches
-
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
-    cust = spark.read.parquet(f"{sf_dir}/customer.parquet")
-    dim = cust.filter(F.col("c_mktsegment") == "BUILDING")
-    bits = sketches.bloom_bits(dim, F.col("c_custkey").cast("string"), 3, 1024)
-    barr = bits.agg(F.sort_array(F.collect_set("pos")).alias("_bloom_bits"))
-    flagged = (
-        orders.join(F.broadcast(barr))
-        .withColumn(
-            "pass",
-            sketches.bloom_test(
-                F.col("o_custkey").cast("string"), F.col("_bloom_bits"), 3, 1024
-            ),
-        )
-        .join(
-            F.broadcast(dim.select(F.col("c_custkey").alias("_dim_key"))),
-            F.col("o_custkey") == F.col("_dim_key"),
-            "left",
-        )
-        .withColumn("truem", F.col("_dim_key").isNotNull())
-    )
-    return (
-        flagged.groupBy("o_orderstatus")
-        .agg(
-            F.count("*").cast("bigint").alias("n_orders"),
-            F.sum(F.when(F.col("pass"), 1).otherwise(0)).cast("bigint").alias("n_pass"),
-            F.sum(F.when(F.col("truem"), 1).otherwise(0)).cast("bigint").alias("n_true"),
-            F.sum(F.when(F.col("pass") & ~F.col("truem"), 1).otherwise(0))
-            .cast("bigint")
-            .alias("n_false_pos"),
-        )
-        .orderBy("o_orderstatus")
-    )
-
-
 # ----------------------------------------------------- weighted sampling (ES) ---
 
 _WSAMPLE_SQL = r"""
@@ -3208,7 +2819,6 @@ _LMPPL_SQL = rf"""
            round(exp(-avg(lp)), 6) AS ppl
     FROM lp GROUP BY 1 ORDER BY 1
 """
-
 
 
 @_q("lm_perplexity_scores", _LMPPL_SQL)
@@ -3333,52 +2943,6 @@ def tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     from blogparser_spark.dataops import textstats
 
     return textstats.tfidf_top_terms(_docs(spark, sf_dir), k=3)
-
-
-# gamma literals for the DDSketch oracle — formatted from the SAME Python
-# double the Column expressions use, so both engines parse identical values
-_DD_G = __import__("math").exp(0.0) * (1.01 / 0.99)
-_DD_LG = __import__("math").log(_DD_G)
-
-
-@_q(
-    "dd_quantile_sketch",
-    f"""
-    WITH h AS (
-      SELECT lang,
-        CAST(ceil(round(ln(CAST(n_chars AS DOUBLE)) / {_DD_LG!r}, 6)) AS BIGINT)
-          AS bucket,
-        count(*)::BIGINT AS cnt
-      FROM documents WHERE n_chars > 0 GROUP BY 1, 2
-    ), c AS (
-      SELECT lang, bucket,
-        sum(cnt) OVER (PARTITION BY lang ORDER BY bucket)::BIGINT AS cum,
-        sum(cnt) OVER (PARTITION BY lang)::BIGINT AS n
-      FROM h
-    ), qq AS (
-      SELECT unnest([CAST(0.5 AS DOUBLE), CAST(0.9 AS DOUBLE),
-                     CAST(0.99 AS DOUBLE)]) AS q
-    )
-    SELECT lang, q, min(bucket) AS bucket,
-      round(2.0 * pow({_DD_G!r}, min(bucket)) / {_DD_G + 1.0!r}, 6) AS est
-    FROM c CROSS JOIN qq
-    WHERE cum >= floor(q * (n - 1)) + 1
-    GROUP BY lang, q
-    """,
-)
-def dd_quantile_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """DDSketch relative-error quantiles (Masson et al., VLDB 2019) of
-    per-document length by language: the MERGEABLE scale path next to the
-    exact percentile_disc query (corpus_token_quantiles) — per-group state
-    is O(log(max/min)/alpha) buckets whose counts sum map-side, so the
-    same sketch merges across checkpoint slices and stream micro-batches
-    while an exact percentile needs the full value multiset. Bucket
-    midpoints are within 1% (alpha) of the exact order statistic."""
-    from blogparser_spark.dataops import sketches
-
-    d = _docs(spark, sf_dir)
-    hist = sketches.dd_histogram(d, F.col("n_chars"), ("lang",))
-    return sketches.dd_quantiles(hist, (0.5, 0.9, 0.99), ("lang",))
 
 
 @_q(
@@ -4037,77 +3601,6 @@ def gap_fill_daily_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ===========================================================================
-# Graph analytics family (dataops/graph.py)
-# ===========================================================================
-
-_PAGERANK_SQL = """
-    WITH pairs AS (
-      SELECT DISTINCT 'c' || o_custkey AS cust, 's' || l_suppkey AS supp
-      FROM orders JOIN lineitem ON o_orderkey = l_orderkey
-    ), edges AS (
-      SELECT cust AS src, supp AS dst FROM pairs
-      UNION ALL SELECT supp AS src, cust AS dst FROM pairs
-    ), deg AS (
-      SELECT src, count(*)::BIGINT AS deg FROM edges GROUP BY 1
-    ), nodes AS (
-      SELECT DISTINCT src AS node FROM edges
-    ), nn AS (
-      SELECT count(*)::DOUBLE AS n FROM nodes
-    ), it0 AS (
-      SELECT node, (SELECT CAST(1.0 AS DOUBLE) / n FROM nn) AS rank FROM nodes
-    ), it1 AS (
-      SELECT e.dst AS node,
-        (SELECT CAST(0.15 AS DOUBLE) / n FROM nn)
-          + CAST(0.85 AS DOUBLE) * sum(r.rank / d.deg) AS rank
-      FROM edges e JOIN it0 r ON e.src = r.node JOIN deg d ON e.src = d.src
-      GROUP BY e.dst
-    ), it2 AS (
-      SELECT e.dst AS node,
-        (SELECT CAST(0.15 AS DOUBLE) / n FROM nn)
-          + CAST(0.85 AS DOUBLE) * sum(r.rank / d.deg) AS rank
-      FROM edges e JOIN it1 r ON e.src = r.node JOIN deg d ON e.src = d.src
-      GROUP BY e.dst
-    ), it3 AS (
-      SELECT e.dst AS node,
-        (SELECT CAST(0.15 AS DOUBLE) / n FROM nn)
-          + CAST(0.85 AS DOUBLE) * sum(r.rank / d.deg) AS rank
-      FROM edges e JOIN it2 r ON e.src = r.node JOIN deg d ON e.src = d.src
-      GROUP BY e.dst
-    ), it4 AS (
-      SELECT e.dst AS node,
-        (SELECT CAST(0.15 AS DOUBLE) / n FROM nn)
-          + CAST(0.85 AS DOUBLE) * sum(r.rank / d.deg) AS rank
-      FROM edges e JOIN it3 r ON e.src = r.node JOIN deg d ON e.src = d.src
-      GROUP BY e.dst
-    ), it5 AS (
-      SELECT e.dst AS node,
-        (SELECT CAST(0.15 AS DOUBLE) / n FROM nn)
-          + CAST(0.85 AS DOUBLE) * sum(r.rank / d.deg) AS rank
-      FROM edges e JOIN it4 r ON e.src = r.node JOIN deg d ON e.src = d.src
-      GROUP BY e.dst
-    )
-    SELECT node, round(rank, 6) AS rank FROM it5
-"""
-
-
-@_q("pagerank_suppliers", _PAGERANK_SQL)
-def pagerank_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Fixed-5-iteration power-iteration PageRank over the symmetric
-    customer<->supplier bipartite graph from the order book. Each Spark
-    iteration is one edges-join-ranks shuffle + a partial sum agg with the
-    degree carried on the edge row; localCheckpoint truncates lineage so
-    the plan stays O(E) per round. The oracle unrolls the same 5
-    iterations as chained CTEs."""
-    from blogparser_spark.dataops import graph
-
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
-    lineitem = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-    edges = graph.bipartite_edges(orders, lineitem)
-    ranks = graph.pagerank(edges, n_iter=5)
-    return ranks.select("node", F.round("rank", 6).alias("rank"))
-
-
-# ===========================================================================
 # Collocations + fuzzy dedup + cube additions
 # ===========================================================================
 
@@ -4517,34 +4010,6 @@ def user_event_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @_q(
-    "audience_overlap_jaccard",
-    """
-    WITH m AS (SELECT DISTINCT event_type AS s, user_id AS member FROM events),
-    sizes AS (SELECT s, count(*)::BIGINT AS n FROM m GROUP BY s),
-    inter AS (
-      SELECT a.s AS set_a, b.s AS set_b, count(*)::BIGINT AS n_intersect
-      FROM m a JOIN m b ON a.member = b.member AND a.s < b.s
-      GROUP BY 1, 2
-    )
-    SELECT set_a, set_b, sa.n AS n_a, sb.n AS n_b, n_intersect,
-      round(CAST(n_intersect AS DOUBLE) / (sa.n + sb.n - n_intersect), 6)
-        AS jaccard
-    FROM inter
-    JOIN sizes sa ON sa.s = set_a
-    JOIN sizes sb ON sb.s = set_b
-    """,
-)
-def audience_overlap_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Pairwise user-base Jaccard between event types: dedup to
-    (type, user), member-keyed self-join for intersections, broadcast
-    size table for the union — member lists never materialize
-    (graph.set_overlap_jaccard)."""
-    from blogparser_spark.dataops.graph import set_overlap_jaccard
-
-    return set_overlap_jaccard(_events(spark, sf_dir), "event_type", "user_id")
-
-
-@_q(
     "source_score_normalize",
     """
     SELECT source, doc_id, strlen(text)::BIGINT AS n_bytes,
@@ -4597,51 +4062,6 @@ def decayed_engagement_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     from blogparser_spark.dataops import timeseries
 
     return timeseries.decayed_engagement(_events(spark, sf_dir))
-
-
-@_q(
-    "supplier_triangle_stats",
-    """
-    WITH so AS (SELECT DISTINCT l_orderkey AS ok, l_suppkey AS s FROM lineitem),
-    e AS (SELECT DISTINCT a.s AS u, b.s AS v
-          FROM so a JOIN so b ON a.ok = b.ok AND a.s < b.s),
-    deg AS (SELECT node, count(*)::BIGINT AS deg FROM (
-              SELECT u AS node FROM e UNION ALL SELECT v AS node FROM e)
-            GROUP BY 1),
-    ed AS (SELECT e.u, e.v, du.deg AS du, dv.deg AS dv
-           FROM e JOIN deg du ON du.node = e.u JOIN deg dv ON dv.node = e.v),
-    oe AS (SELECT
-             CASE WHEN du < dv OR (du = dv AND u < v) THEN u ELSE v END AS src,
-             CASE WHEN du < dv OR (du = dv AND u < v) THEN v ELSE u END AS dst,
-             CASE WHEN du < dv OR (du = dv AND u < v) THEN dv ELSE du END AS ddst
-           FROM ed),
-    w AS (SELECT a.src, a.dst AS b, a.ddst AS db, c.dst AS c
-          FROM oe a JOIN oe c ON a.src = c.src
-          AND (a.ddst < c.ddst OR (a.ddst = c.ddst AND a.dst < c.dst))),
-    tri AS (SELECT w.src, w.b, w.c
-            FROM w JOIN oe ON oe.src = w.b AND oe.dst = w.c),
-    corner AS (SELECT node, count(*)::BIGINT AS triangles FROM (
-                 SELECT src AS node FROM tri
-                 UNION ALL SELECT b FROM tri
-                 UNION ALL SELECT c FROM tri) GROUP BY 1)
-    SELECT deg.node AS node, deg.deg AS deg,
-      coalesce(corner.triangles, 0)::BIGINT AS triangles,
-      round(CASE WHEN deg.deg >= 2
-            THEN 2.0 * coalesce(corner.triangles, 0)
-                 / (deg.deg * (deg.deg - 1)) END, 6) AS clustering_coeff
-    FROM deg LEFT JOIN corner ON corner.node = deg.node
-    """,
-)
-def supplier_triangle_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Triangle counts + local clustering coefficient on the supplier
-    co-occurrence graph (suppliers adjacent iff they ship the same order),
-    via degree-ordered edge orientation — out-degree capped at O(sqrt|E|)
-    so the wedge join survives celebrity nodes
-    (graph.supplier_cooccurrence_edges / triangle_stats)."""
-    from blogparser_spark.dataops import graph
-
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-    return graph.triangle_stats(graph.supplier_cooccurrence_edges(li))
 
 
 @_q(
@@ -4784,382 +4204,6 @@ def prefix_filter_pairs_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     candidate join entirely; guaranteed-complete, the deterministic
     complement to MinHash-LSH (dedup.prefix_filter_pairs)."""
     return dedup.prefix_filter_pairs(_docs(spark, sf_dir), threshold=0.6)
-
-
-@_q(
-    "star_near_dup_clusters",
-    f"""
-    WITH RECURSIVE {_near_dup_ctes("documents")}
-    SELECT node AS doc_id, min(m)::BIGINT AS component, (node = min(m)) AS keep
-    FROM nd_reach GROUP BY node ORDER BY doc_id
-    """,
-)
-def star_near_dup_clusters_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The near-dup clustering stage re-run through the alternating
-    large-star/small-star contraction (graph.connected_components_star,
-    Kiveris et al. SoCC'14) instead of label propagation — same LSH →
-    exact-Jaccard-verify upstream, same (doc_id, component, keep) contract,
-    SAME oracle as `near_dup_clusters`: the two iterative algorithms must
-    agree with each other and with the recursive-CTE closure."""
-    from blogparser_spark.dataops.graph import connected_components_star
-
-    d = _docs(spark, sf_dir)
-    pairs = dedup.lsh_candidate_pairs(d)
-    verified = dedup.verify_pairs_jaccard(d, pairs, 0.5)
-    return (
-        connected_components_star(verified)
-        .select(
-            F.col("node").alias("doc_id"),
-            "component",
-            (F.col("node") == F.col("component")).alias("keep"),
-        )
-        .orderBy("doc_id")
-    )
-
-
-_HLL_SLIDING_SQL = r"""
-    WITH ev AS (
-      SELECT (epoch_us(ts) // 3600000000) AS bkt, user_id::VARCHAR AS uid
-      FROM events
-    ), obs AS (
-      SELECT DISTINCT bkt FROM ev
-    ), parts AS (
-      SELECT bkt, ('0x' || substr(md5(uid), 1, 2))::INT AS register,
-             substr(md5(uid), 3, 13) AS suf
-      FROM ev
-    ), ranked AS (
-      SELECT bkt, register,
-        CASE WHEN length(regexp_extract(suf, '^0*', 0)) = 13 THEN 53
-             ELSE length(regexp_extract(suf, '^0*', 0)) * 4
-                  + CASE substr(suf, length(regexp_extract(suf, '^0*', 0)) + 1, 1)
-                      WHEN '1' THEN 3 WHEN '2' THEN 2 WHEN '3' THEN 2
-                      WHEN '4' THEN 1 WHEN '5' THEN 1 WHEN '6' THEN 1
-                      WHEN '7' THEN 1 ELSE 0 END + 1
-        END AS rank
-      FROM parts
-    ), regs AS MATERIALIZED (
-      SELECT bkt, register, max(rank) AS max_rank FROM ranked GROUP BY 1, 2
-    ), fan AS (
-      SELECT unnest(range(bkt, bkt + 24))::BIGINT AS bucket, register, max_rank
-      FROM regs
-    ), merged AS (
-      SELECT bucket, register, max(max_rank) AS max_rank
-      FROM fan JOIN obs ON fan.bucket = obs.bkt
-      GROUP BY 1, 2
-    ), agg AS (
-      SELECT bucket, count(*)::BIGINT AS n_present,
-             (sum(1::BIGINT << (53 - max_rank))
-              + (256 - count(*)) * (1::BIGINT << 53))::BIGINT AS s_scaled
-      FROM merged GROUP BY 1
-    ), est AS (
-      SELECT bucket, n_present, s_scaled,
-             (0.7213 / (1 + 1.079 / 256)) * 256.0 * 256.0
-               * (1::BIGINT << 53) / s_scaled AS raw
-      FROM agg
-    ), exd AS (
-      SELECT bucket, count(DISTINCT uid)::BIGINT AS exact_distinct
-      FROM (
-        SELECT unnest(range(bkt, bkt + 24))::BIGINT AS bucket, uid
-        FROM (SELECT DISTINCT bkt, uid FROM ev)
-      ) f JOIN obs ON f.bucket = obs.bkt
-      GROUP BY 1
-    )
-    SELECT est.bucket AS hour_bucket, n_present, s_scaled,
-           round(CASE WHEN raw <= 640.0 AND n_present < 256
-                      THEN 256.0 * ln(256.0 / (256 - n_present))
-                      ELSE raw END, 6) AS hll_distinct,
-           exact_distinct
-    FROM est JOIN exd ON est.bucket = exd.bucket
-    ORDER BY hour_bucket
-"""
-
-
-@_q("hll_sliding_distinct_users", _HLL_SLIDING_SQL)
-def hll_sliding_distinct_users(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Trailing-24h distinct users per hour via sliding mergeable HLL
-    sketches (sketches.hll_sliding_registers), joined against the exact
-    sliding COUNT(DISTINCT) for calibration. Per-hour register states
-    (≤ 256 rows each, map-side-combined) fan out to their 24 trailing
-    target hours and max-merge — per-target state is 256 rows regardless
-    of event volume, where the exact form must carry every distinct
-    (hour, user) pair through the same fan-out. The oracle replays the
-    md5 registers, the fan-out, the exact-int64 scaled sum, and the
-    small-range correction in DuckDB."""
-    from blogparser_spark.dataops import sketches
-
-    ev = _events(spark, sf_dir)
-    regs = sketches.hll_sliding_registers(
-        ev, F.col("user_id").cast("string"), "ts", window_buckets=24, p=8
-    )
-    est = sketches.hll_estimate(regs, ("bucket",), p=8)
-    pairs = ev.select(
-        F.expr("unix_micros(cast(ts as timestamp)) div 3600000000").alias("bkt"),
-        F.col("user_id").alias("uid"),
-    ).distinct()
-    fan = pairs.select(
-        F.explode(F.sequence(F.col("bkt"), F.col("bkt") + F.lit(23))).alias(
-            "bucket"
-        ),
-        "uid",
-    )
-    observed = pairs.select(F.col("bkt").alias("bucket")).distinct()
-    exact = (
-        fan.join(observed, "bucket")
-        .groupBy("bucket")
-        .agg(F.countDistinct("uid").alias("exact_distinct"))
-    )
-    return (
-        est.join(exact, "bucket")
-        .select(
-            F.col("bucket").alias("hour_bucket"),
-            "n_present",
-            "s_scaled",
-            "hll_distinct",
-            "exact_distinct",
-        )
-        .orderBy("hour_bucket")
-    )
-
-
-_HLL_ROLLUP_SQL = r"""
-    WITH ev AS (
-      SELECT event_type, (epoch_us(ts) // 86400000000) AS day_bucket,
-             user_id::VARCHAR AS uid
-      FROM events
-    ), parts AS (
-      SELECT event_type, day_bucket,
-             ('0x' || substr(md5(uid), 1, 2))::INT AS register,
-             substr(md5(uid), 3, 13) AS suf
-      FROM ev
-    ), ranked AS (
-      SELECT event_type, day_bucket, register,
-        CASE WHEN length(regexp_extract(suf, '^0*', 0)) = 13 THEN 53
-             ELSE length(regexp_extract(suf, '^0*', 0)) * 4
-                  + CASE substr(suf, length(regexp_extract(suf, '^0*', 0)) + 1, 1)
-                      WHEN '1' THEN 3 WHEN '2' THEN 2 WHEN '3' THEN 2
-                      WHEN '4' THEN 1 WHEN '5' THEN 1 WHEN '6' THEN 1
-                      WHEN '7' THEN 1 ELSE 0 END + 1
-        END AS rank
-      FROM parts
-    ), regs AS MATERIALIZED (
-      SELECT event_type, day_bucket, register, max(rank) AS max_rank
-      FROM ranked GROUP BY 1, 2, 3
-    ), rolled AS (
-      SELECT 'cell' AS level, event_type, day_bucket, register,
-             max(max_rank) AS max_rank
-      FROM regs GROUP BY 2, 3, 4
-      UNION ALL
-      SELECT 'type', event_type, NULL, register, max(max_rank)
-      FROM regs GROUP BY 2, 4
-      UNION ALL
-      SELECT 'day', NULL, day_bucket, register, max(max_rank)
-      FROM regs GROUP BY 3, 4
-      UNION ALL
-      SELECT 'all', NULL, NULL, register, max(max_rank)
-      FROM regs GROUP BY 4
-    ), agg AS (
-      SELECT level, event_type, day_bucket, count(*)::BIGINT AS n_present,
-             (sum(1::BIGINT << (53 - max_rank))
-              + (256 - count(*)) * (1::BIGINT << 53))::BIGINT AS s_scaled
-      FROM rolled GROUP BY 1, 2, 3
-    ), est AS (
-      SELECT level, event_type, day_bucket, n_present, s_scaled,
-             (0.7213 / (1 + 1.079 / 256)) * 256.0 * 256.0
-               * (1::BIGINT << 53) / s_scaled AS raw
-      FROM agg
-    ), exd AS (
-      SELECT CASE WHEN grouping(event_type) = 0 AND grouping(day_bucket) = 0 THEN 'cell'
-                  WHEN grouping(event_type) = 0 THEN 'type'
-                  WHEN grouping(day_bucket) = 0 THEN 'day'
-                  ELSE 'all' END AS level,
-             event_type, day_bucket,
-             count(DISTINCT uid)::BIGINT AS exact_distinct
-      FROM ev
-      GROUP BY GROUPING SETS ((event_type, day_bucket), (event_type),
-                              (day_bucket), ())
-    )
-    SELECT est.level, est.event_type, est.day_bucket, n_present, s_scaled,
-           round(CASE WHEN raw <= 640.0 AND n_present < 256
-                      THEN 256.0 * ln(256.0 / (256 - n_present))
-                      ELSE raw END, 6) AS hll_distinct,
-           exact_distinct
-    FROM est
-    JOIN exd ON est.level = exd.level
-            AND est.event_type IS NOT DISTINCT FROM exd.event_type
-            AND est.day_bucket IS NOT DISTINCT FROM exd.day_bucket
-    ORDER BY est.level, est.event_type, est.day_bucket
-"""
-
-
-@_q("hll_rollup_distinct_users", _HLL_ROLLUP_SQL)
-def hll_rollup_distinct_users(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Distinct-user HLL CUBE: register states are built ONCE at the finest
-    (event_type, day) grain, and every coarser grouping set — per type, per
-    day, grand total — is a register max-merge of those cells, never a
-    rescan of the events. This is the pre-aggregation contract (Druid /
-    Iceberg aggregate-pushdown style) that makes distinct counting
-    re-sliceable at 100 TB: the finest-grain state is types × days × 2^p
-    rows, and any rollup is a partial-aggregatable merge over it. Exact
-    COUNT(DISTINCT) per grouping set rides along as calibration."""
-    from blogparser_spark.dataops import sketches
-
-    ev = _events(spark, sf_dir).withColumn(
-        "day_bucket",
-        F.expr("unix_micros(cast(ts as timestamp)) div 86400000000"),
-    )
-    regs = sketches.hll_registers(
-        ev, F.col("user_id").cast("string"), ("event_type", "day_bucket"), p=8
-    )
-
-    def rollup(keys: tuple[str, ...], level: str) -> DataFrame:
-        merged = regs.groupBy(*keys, "register").agg(
-            F.max("max_rank").alias("max_rank")
-        )
-        est = sketches.hll_estimate(merged, keys, p=8)
-        exact = ev.groupBy(*keys).agg(
-            F.countDistinct("user_id").alias("exact_distinct")
-        )
-        out = est.join(exact, list(keys)) if keys else est.crossJoin(exact)
-        if "event_type" not in keys:
-            out = out.withColumn("event_type", F.lit(None).cast("string"))
-        if "day_bucket" not in keys:
-            out = out.withColumn("day_bucket", F.lit(None).cast("long"))
-        return out.select(
-            F.lit(level).alias("level"),
-            "event_type",
-            "day_bucket",
-            "n_present",
-            "s_scaled",
-            "hll_distinct",
-            "exact_distinct",
-        )
-
-    return (
-        rollup(("event_type", "day_bucket"), "cell")
-        .unionByName(rollup(("event_type",), "type"))
-        .unionByName(rollup(("day_bucket",), "day"))
-        .unionByName(rollup((), "all"))
-        .orderBy("level", "event_type", "day_bucket")
-    )
-
-
-_KMV_OVERLAP_SQL = r"""
-    WITH ev AS (
-      SELECT DISTINCT event_type, user_id FROM events
-    ), hset AS (
-      SELECT DISTINCT event_type,
-             ('0x' || substr(md5(user_id::VARCHAR), 1, 13))::BIGINT AS h
-      FROM ev
-    ), samp AS (
-      SELECT event_type, h FROM hset
-      QUALIFY row_number() OVER (PARTITION BY event_type ORDER BY h) <= 64
-    ), est AS (
-      SELECT event_type, count(*)::BIGINT AS n_sample, max(h) AS kth
-      FROM samp GROUP BY 1
-    ), est2 AS (
-      SELECT event_type,
-        CASE WHEN n_sample >= 64 THEN kth
-             ELSE 4503599627370496 END AS theta_h,
-        CASE WHEN n_sample >= 64
-             THEN round(63::DOUBLE * 4503599627370496::DOUBLE / kth, 6)
-             ELSE n_sample::DOUBLE END AS est
-      FROM est
-    ), prs AS (
-      SELECT a.event_type AS g_a, b.event_type AS g_b,
-             least(a.theta_h, b.theta_h) AS theta_h, a.est AS ea, b.est AS eb
-      FROM est2 a JOIN est2 b ON a.event_type < b.event_type
-    ), common AS (
-      SELECT p.g_a, p.g_b, count(*)::BIGINT AS n_common
-      FROM prs p
-      JOIN samp sa ON sa.event_type = p.g_a
-      JOIN samp sb ON sb.event_type = p.g_b AND sb.h = sa.h
-      WHERE sa.h < p.theta_h
-      GROUP BY 1, 2
-    ), nd AS (
-      SELECT event_type, count(*)::BIGINT AS n_d FROM ev GROUP BY 1
-    ), exi AS (
-      SELECT a.event_type AS g_a, b.event_type AS g_b,
-             count(*)::BIGINT AS exact_inter
-      FROM ev a JOIN ev b ON a.user_id = b.user_id
-                         AND a.event_type < b.event_type
-      GROUP BY 1, 2
-    ), calc AS (
-      SELECT p.g_a, p.g_b, p.theta_h,
-             coalesce(c.n_common, 0)::BIGINT AS n_common,
-             round(coalesce(c.n_common, 0)::DOUBLE * 4503599627370496::DOUBLE / p.theta_h,
-                   6) AS inter_est,
-             ea, eb
-      FROM prs p LEFT JOIN common c ON c.g_a = p.g_a AND c.g_b = p.g_b
-    )
-    SELECT calc.g_a AS g_a, calc.g_b AS g_b, theta_h, n_common, inter_est,
-           round(ea + eb - inter_est, 6) AS union_est,
-           round(inter_est / round(ea + eb - inter_est, 6), 6) AS jaccard_est,
-           coalesce(exact_inter, 0)::BIGINT AS exact_inter,
-           (na.n_d + nb.n_d - coalesce(exact_inter, 0))::BIGINT AS exact_union
-    FROM calc
-    LEFT JOIN exi ON exi.g_a = calc.g_a AND exi.g_b = calc.g_b
-    JOIN nd na ON na.event_type = calc.g_a
-    JOIN nd nb ON nb.event_type = calc.g_b
-    ORDER BY calc.g_a, calc.g_b
-"""
-
-
-@_q("kmv_type_overlap", _KMV_OVERLAP_SQL)
-def kmv_type_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Distinct-user set algebra between every pair of event types via KMV
-    / theta sketches (sketches.kmv_sample + kmv_pairwise_overlap): where
-    HLL only counts, the k-minimum-values sample supports INTERSECTION and
-    union estimates from <=k-row summaries — the raw events are scanned
-    once to build per-type samples, and all 10 pairwise estimates run on
-    64-row sets (never a users x users join). Exact intersection / union
-    sizes ride along for calibration; the oracle replays the md5 52-bit
-    hashes, the min-k QUALIFY, and the theta clipping rule bit-for-bit."""
-    from blogparser_spark.dataops import sketches
-
-    ev = _events(spark, sf_dir)
-    samp = sketches.kmv_sample(
-        ev, F.col("user_id").cast("string"), ("event_type",), k=64
-    )
-    ov = sketches.kmv_pairwise_overlap(samp, "event_type", k=64)
-    pairs = ev.select("event_type", "user_id").distinct()
-    exact_i = (
-        pairs.select(F.col("event_type").alias("g_a"), "user_id")
-        .join(
-            pairs.select(F.col("event_type").alias("g_b"), "user_id"),
-            "user_id",
-        )
-        .filter(F.col("g_a") < F.col("g_b"))
-        .groupBy("g_a", "g_b")
-        .agg(F.count("*").alias("exact_inter"))
-    )
-    nd = pairs.groupBy("event_type").agg(F.count("*").alias("n_d"))
-    out = (
-        ov.join(exact_i, ["g_a", "g_b"], "left")
-        .fillna(0, ["exact_inter"])
-        .join(
-            F.broadcast(nd.select(F.col("event_type").alias("g_a"),
-                                  F.col("n_d").alias("nd_a"))),
-            "g_a",
-        )
-        .join(
-            F.broadcast(nd.select(F.col("event_type").alias("g_b"),
-                                  F.col("n_d").alias("nd_b"))),
-            "g_b",
-        )
-    )
-    return out.select(
-        "g_a",
-        "g_b",
-        "theta_h",
-        "n_common",
-        "inter_est",
-        "union_est",
-        "jaccard_est",
-        "exact_inter",
-        (F.col("nd_a") + F.col("nd_b") - F.col("exact_inter")).alias(
-            "exact_union"
-        ),
-    ).orderBy("g_a", "g_b")
 
 
 _PSI_SQL = r"""
@@ -5621,82 +4665,6 @@ def top_session_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
     return top.orderBy(F.desc("n_sessions"), F.asc("path")).limit(20)
 
 
-_CMS_JOIN_SQL = r"""
-    WITH ca AS (
-      SELECT j AS row,
-             ('0x' || substr(md5(j::VARCHAR || ':' || o_orderkey::VARCHAR),
-                             1, 8))::BIGINT % 512 AS col,
-             count(*)::BIGINT AS a_cnt
-      FROM orders, unnest([0, 1, 2, 3]) AS t(j)
-      GROUP BY 1, 2
-    ), cb AS (
-      SELECT j AS row,
-             ('0x' || substr(md5(j::VARCHAR || ':' || l_orderkey::VARCHAR),
-                             1, 8))::BIGINT % 512 AS col,
-             count(*)::BIGINT AS b_cnt
-      FROM lineitem, unnest([0, 1, 2, 3]) AS t(j)
-      GROUP BY 1, 2
-    ), ip AS (
-      SELECT ca.row, sum(a_cnt * b_cnt)::BIGINT AS ip
-      FROM ca JOIN cb ON ca.row = cb.row AND ca.col = cb.col
-      GROUP BY 1
-    ), full_rows AS (
-      SELECT row, max(ip) AS ip FROM (
-        SELECT row, ip FROM ip
-        UNION ALL
-        SELECT unnest([0, 1, 2, 3]) AS row, 0::BIGINT AS ip
-      ) GROUP BY 1
-    ), est AS (
-      SELECT min(ip)::BIGINT AS est_join_size FROM full_rows
-    ), exact AS (
-      SELECT sum(a.c * b.c)::BIGINT AS exact_join_size
-      FROM (SELECT o_orderkey AS k, count(*)::BIGINT AS c
-            FROM orders GROUP BY 1) a
-      JOIN (SELECT l_orderkey AS k, count(*)::BIGINT AS c
-            FROM lineitem GROUP BY 1) b ON a.k = b.k
-    )
-    SELECT est_join_size, exact_join_size FROM est, exact
-"""
-
-
-@_q("cms_join_size_orders", _CMS_JOIN_SQL)
-def cms_join_size_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Join-cardinality estimation from sketches (sketches.cms_join_size):
-    |orders JOIN lineitem on orderkey| estimated as the min-over-rows CMS
-    inner product (Cormode & Muthukrishnan AGMS-style estimator) — what a
-    cost-based planner consults BEFORE committing to a join strategy.
-    Both tables reduce to <= d*w-row counter states; the estimate is a
-    join of two tiny relations and never underestimates. The exact join
-    size (per-key count product sum, computed without materializing the
-    join) rides along for calibration; everything is exact int64
-    arithmetic."""
-    from blogparser_spark.dataops import sketches
-
-    o = spark.read.parquet(f"{sf_dir}/orders.parquet")
-    l = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-    ca = sketches.cms_counters(
-        o, F.col("o_orderkey").cast("string"), (), d=4, w=512
-    )
-    cb = sketches.cms_counters(
-        l, F.col("l_orderkey").cast("string"), (), d=4, w=512
-    )
-    est = sketches.cms_join_size(ca, cb, d=4, w=512)
-    exact = (
-        o.groupBy(F.col("o_orderkey").alias("k"))
-        .agg(F.count("*").alias("ac"))
-        .join(
-            l.groupBy(F.col("l_orderkey").alias("k")).agg(
-                F.count("*").alias("bc")
-            ),
-            "k",
-        )
-        .agg(F.sum(F.col("ac") * F.col("bc")).cast("bigint").alias(
-            "exact_join_size"
-        ))
-    )
-    return est.crossJoin(exact)
-
-
 _CHUNK_SQL = r"""
     WITH toks AS (
       SELECT doc_id,
@@ -5728,53 +4696,6 @@ def chunk_documents_64_16(spark: SparkSession, sf_dir: str) -> DataFrame:
     return chunk_documents(
         _docs(spark, sf_dir), chunk_tokens=64, overlap=16
     ).orderBy("doc_id", "chunk_idx")
-
-
-_DD_CDF_SQL = f"""
-    WITH b AS (
-      SELECT event_type, value,
-        CASE WHEN value > 0 THEN
-          CAST(ceil(round(ln(CAST(value AS DOUBLE)) / {_DD_LG!r}, 6))
-               AS BIGINT)
-        END AS bucket
-      FROM events
-    ), h AS (
-      SELECT event_type, bucket, count(*)::BIGINT AS cnt
-      FROM b WHERE bucket IS NOT NULL GROUP BY 1, 2
-    ), c AS (
-      SELECT event_type, bucket, cnt,
-        coalesce(sum(cnt) OVER (PARTITION BY event_type ORDER BY bucket
-                                ROWS BETWEEN UNBOUNDED PRECEDING
-                                AND 1 PRECEDING), 0)::BIGINT AS below,
-        sum(cnt) OVER (PARTITION BY event_type)::BIGINT AS n
-      FROM h
-    )
-    SELECT b.event_type, b.value, b.bucket,
-      round((below + (cnt + 1) / 2.0) / (n + 1), 6) AS dd_cdf
-    FROM b LEFT JOIN c ON c.event_type = b.event_type
-                      AND c.bucket = b.bucket
-    ORDER BY b.event_type, b.value, b.bucket, dd_cdf
-"""
-
-
-@_q("dd_cdf_normalized_values", _DD_CDF_SQL)
-def dd_cdf_normalized_values(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Sort-free score normalization via DDSketch CDF lookup
-    (sketches.dd_cdf_normalize): each event value's approximate
-    percentile within its event type, read from the broadcast cumulative
-    histogram with the mid-rank tie convention — the scale path
-    score_normalize's percent_rank form cannot take (a hot group
-    serializes a total sort onto one task; here the raw data is never
-    sorted). Ranks are exact per log-bucket; values within relative
-    alpha."""
-    from blogparser_spark.dataops import sketches
-
-    return (
-        sketches.dd_cdf_normalize(
-            _events(spark, sf_dir), F.col("value"), ("event_type",)
-        )
-        .orderBy("event_type", "value", "bucket", "dd_cdf")
-    )
 
 
 @_q(
@@ -6110,72 +5031,6 @@ def backfill_missing_ranges(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return timeseries.missing_daily_ranges(ev, "ts", ["event_type"]).orderBy(
         "event_type", "gap_start_day"
-    )
-
-
-_FUNNEL_LAT_SQL = f"""
-    WITH s0 AS (
-      SELECT user_id, min(ts) AS t FROM events
-      WHERE event_type = 'view' GROUP BY 1
-    ), s1 AS (
-      SELECT e.user_id, min(e.ts) AS t
-      FROM events e JOIN s0 ON e.user_id = s0.user_id
-      WHERE e.event_type = 'click' AND e.ts > s0.t GROUP BY 1
-    ), s2 AS (
-      SELECT e.user_id, min(e.ts) AS t
-      FROM events e JOIN s1 ON e.user_id = s1.user_id
-      WHERE e.event_type = 'purchase' AND e.ts > s1.t GROUP BY 1
-    ), lat AS (
-      SELECT 'click' AS step,
-             epoch_us(s1.t) - epoch_us(s0.t) AS latency_us
-      FROM s1 JOIN s0 ON s1.user_id = s0.user_id
-      UNION ALL
-      SELECT 'purchase',
-             epoch_us(s2.t) - epoch_us(s1.t)
-      FROM s2 JOIN s1 ON s2.user_id = s1.user_id
-    ), h AS (
-      SELECT step,
-        CAST(ceil(round(ln(CAST(latency_us AS DOUBLE)) / {_DD_LG!r}, 6))
-             AS BIGINT) AS bucket,
-        count(*)::BIGINT AS cnt
-      FROM lat WHERE latency_us > 0 GROUP BY 1, 2
-    ), c AS (
-      SELECT step, bucket,
-        sum(cnt) OVER (PARTITION BY step ORDER BY bucket)::BIGINT AS cum,
-        sum(cnt) OVER (PARTITION BY step)::BIGINT AS n
-      FROM h
-    ), qq AS (
-      SELECT unnest([CAST(0.5 AS DOUBLE), CAST(0.9 AS DOUBLE),
-                     CAST(0.99 AS DOUBLE)]) AS q
-    )
-    SELECT step, q, min(bucket) AS bucket,
-      round(2.0 * pow({_DD_G!r}, min(bucket)) / {_DD_G + 1.0!r}, 6) AS est
-    FROM c CROSS JOIN qq
-    WHERE cum >= floor(q * (n - 1)) + 1
-    GROUP BY step, q
-    ORDER BY step, q
-"""
-
-
-@_q("funnel_latency_quantiles", _FUNNEL_LAT_SQL)
-def funnel_latency_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Conversion-latency SLO readout: time-to-convert between consecutive
-    funnel steps (aggregate.funnel_step_latencies — strictly-ordered
-    progression, integer microseconds) summarized by DDSketch relative-
-    error quantiles per step (sketches.dd_histogram + dd_quantiles) —
-    two families composed: the funnel's linear per-step min-agg passes
-    feed the mergeable quantile sketch, so the whole SLO pipeline stays
-    partial-aggregatable end to end."""
-    from blogparser_spark.dataops import sketches
-    from blogparser_spark.operators.aggregate import funnel_step_latencies
-
-    lat = funnel_step_latencies(_events(spark, sf_dir))
-    hist = sketches.dd_histogram(
-        lat, F.col("latency_us"), ("step",)
-    )
-    return (
-        sketches.dd_quantiles(hist, (0.5, 0.9, 0.99), ("step",))
-        .orderBy("step", "q")
     )
 
 
@@ -7564,77 +6419,6 @@ def conv_packing_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @_q(
-    "record_linkage_topk",
-    """
-    WITH pairs AS (
-      SELECT c.c_custkey, s.s_suppkey,
-        levenshtein(substr(c.c_name, 10, 20), substr(s.s_name, 10, 20)) AS lev_entno,
-        CASE WHEN abs(c.c_acctbal - s.s_acctbal) < 100 THEN 0 ELSE 9 END
-          AS lev_bal
-      FROM customer c
-      JOIN supplier s ON c.c_nationkey = s.s_nationkey
-    )
-    SELECT c_custkey, s_suppkey, lev_entno, lev_bal,
-      ((CASE WHEN lev_entno = 0 THEN 4000000
-             WHEN lev_entno <= 2 THEN 1500000 ELSE -2000000 END)
-       + (CASE WHEN lev_bal = 0 THEN 800000 ELSE -400000 END))::BIGINT
-        AS score_u
-    FROM pairs
-    ORDER BY score_u DESC, c_custkey, s_suppkey
-    LIMIT 25
-    """,
-)
-def record_linkage_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Fellegi–Sunter record linkage (dataops/linkage.py): customers ↔
-    suppliers blocked on nation, compared on the entity-number token
-    (edit-distance levels) and account-balance proximity, scored by
-    integer-micro log-odds weights — the cross-table entity-resolution
-    primitive dedup doesn't cover. Blocked equi-join, never all-pairs;
-    top-k is TakeOrdered."""
-    from blogparser_spark.dataops.linkage import FieldSpec, fs_linkage
-
-    cust = spark.read.parquet(f"{sf_dir}/customer.parquet").select(
-        "c_custkey",
-        F.col("c_nationkey").alias("nationkey"),
-        F.substring("c_name", 10, 20).alias("c_entno"),
-        "c_acctbal",
-    )
-    supp = spark.read.parquet(f"{sf_dir}/supplier.parquet").select(
-        "s_suppkey",
-        F.col("s_nationkey").alias("nationkey"),
-        F.substring("s_name", 10, 20).alias("s_entno"),
-        "s_acctbal",
-    )
-    fields = [
-        FieldSpec(
-            "entno",
-            F.col("c_entno"),
-            F.col("s_entno"),
-            w_exact_u=4_000_000,
-            w_close_u=1_500_000,
-            w_diff_u=-2_000_000,
-            close_max_lev=2,
-        ),
-        # balance proximity is numeric, not edit-distance: a 0/9
-        # pseudo-distance reuses the same agreement-level machinery
-        FieldSpec(
-            "bal",
-            F.lit(""),
-            F.lit(""),
-            w_exact_u=800_000,
-            w_close_u=0,
-            w_diff_u=-400_000,
-            distance=F.when(
-                F.abs(F.col("c_acctbal") - F.col("s_acctbal")) < 100, 0
-            ).otherwise(9),
-        ),
-    ]
-    return fs_linkage(
-        cust, supp, ["nationkey"], fields, "c_custkey", "s_suppkey", top_k=25
-    )
-
-
-@_q(
     "ivm_refresh_counts",
     """
     SELECT event_type, count(*)::BIGINT AS cnt,
@@ -7674,112 +6458,6 @@ def ivm_refresh_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.select(
         "event_type", "cnt", F.col("vsum").cast("double").alias("vsum")
     )
-
-
-def _linkem_iter_sql(prev: str | None, this: str, it: int) -> str:
-    """One EM iteration over the blocked comparison vectors as DuckDB
-    CTEs: E-step responsibilities quantized with the tie-free
-    floor(x·1e6 + 0.5) (no round() half-mode dependence), M-step ratios
-    of exact integer sums re-quantized to 6dp — fs_em_weights' iteration
-    contract, so the replay is bit-identical. `prev=None` uses the
-    deterministic init (p=.1, m=.9, u=.1); literals are cast to DOUBLE
-    because bare decimal literals parse as DECIMAL in DuckDB."""
-    if prev is None:
-        p, me, ue = "CAST(0.1 AS DOUBLE)", "CAST(0.9 AS DOUBLE)", "CAST(0.1 AS DOUBLE)"
-        mb, ub = "CAST(0.9 AS DOUBLE)", "CAST(0.1 AS DOUBLE)"
-        src = "lpairs"
-    else:
-        p, me, ue = "z.p", "z.m_entno", "z.u_entno"
-        mb, ub = "z.m_bal", "z.u_bal"
-        src = f"lpairs CROSS JOIN {prev} z"
-    q6 = "floor(({x}) * 1000000 + 0.5) / 1000000.0"
-    return f"""
-    r{it} AS (
-      SELECT g_entno, g_bal,
-        floor(num / (num + den) * 1000000 + 0.5)::BIGINT AS r
-      FROM (
-        SELECT g_entno, g_bal,
-          {p} * (CASE WHEN g_entno = 1 THEN {me} ELSE 1 - {me} END)
-              * (CASE WHEN g_bal = 1 THEN {mb} ELSE 1 - {mb} END) AS num,
-          (1 - {p}) * (CASE WHEN g_entno = 1 THEN {ue} ELSE 1 - {ue} END)
-                    * (CASE WHEN g_bal = 1 THEN {ub} ELSE 1 - {ub} END) AS den
-        FROM {src}
-      )
-    ), {this} AS MATERIALIZED (
-      SELECT
-        {q6.format(x="sum(r)::DOUBLE / (1000000 * count(*))")} AS p,
-        {q6.format(x="sum(r * g_entno)::DOUBLE / greatest(sum(r), 1)")} AS m_entno,
-        {q6.format(x="(1000000 * sum(g_entno) - sum(r * g_entno))::DOUBLE"
-                     " / greatest(1000000 * count(*) - sum(r), 1)")} AS u_entno,
-        {q6.format(x="sum(r * g_bal)::DOUBLE / greatest(sum(r), 1)")} AS m_bal,
-        {q6.format(x="(1000000 * sum(g_bal) - sum(r * g_bal))::DOUBLE"
-                     " / greatest(1000000 * count(*) - sum(r), 1)")} AS u_bal
-      FROM r{it}
-    )"""
-
-
-_LINKEM_SQL = f"""
-    WITH lpairs AS MATERIALIZED (
-      SELECT
-        CASE WHEN levenshtein(substr(c.c_name, 10, 20),
-                              substr(s.s_name, 10, 20)) <= 2
-             THEN 1 ELSE 0 END AS g_entno,
-        CASE WHEN abs(c.c_acctbal - s.s_acctbal) < 100 THEN 1 ELSE 0 END
-          AS g_bal
-      FROM customer c JOIN supplier s ON c.c_nationkey = s.s_nationkey
-    ),{_linkem_iter_sql(None, "it1", 1)},{_linkem_iter_sql("it1", "it2", 2)}
-    SELECT 'entno' AS field, m_entno AS m, u_entno AS u, p FROM it2
-    UNION ALL
-    SELECT 'bal' AS field, m_bal AS m, u_bal AS u, p FROM it2
-"""
-
-
-@_q("linkage_em_weights", _LINKEM_SQL)
-def linkage_em_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """EM-learned Fellegi–Sunter parameters (linkage.fs_em_weights;
-    Winkler 1988, the Splink training loop): 2 deterministic EM rounds
-    over the nation-blocked customer↔supplier comparison vectors estimate
-    each field's m/u agreement probabilities and the match proportion p —
-    replacing record_linkage_topk's fixed log-odds with learned ones.
-    Integer-micro responsibility quantization makes every M-step sum
-    exact; the oracle replays both rounds as unrolled CTEs."""
-    from blogparser_spark.dataops.linkage import FieldSpec, fs_em_weights
-
-    cust = spark.read.parquet(f"{sf_dir}/customer.parquet").select(
-        "c_custkey",
-        F.col("c_nationkey").alias("nationkey"),
-        F.substring("c_name", 10, 20).alias("c_entno"),
-        "c_acctbal",
-    )
-    supp = spark.read.parquet(f"{sf_dir}/supplier.parquet").select(
-        "s_suppkey",
-        F.col("s_nationkey").alias("nationkey"),
-        F.substring("s_name", 10, 20).alias("s_entno"),
-        "s_acctbal",
-    )
-    fields = [
-        FieldSpec(
-            "entno",
-            F.col("c_entno"),
-            F.col("s_entno"),
-            w_exact_u=4_000_000,
-            w_close_u=1_500_000,
-            w_diff_u=-2_000_000,
-            close_max_lev=2,
-        ),
-        FieldSpec(
-            "bal",
-            F.lit(""),
-            F.lit(""),
-            w_exact_u=800_000,
-            w_close_u=0,
-            w_diff_u=-400_000,
-            distance=F.when(
-                F.abs(F.col("c_acctbal") - F.col("s_acctbal")) < 100, 0
-            ).otherwise(9),
-        ),
-    ]
-    return fs_em_weights(cust, supp, ["nationkey"], fields, iters=2)
 
 
 @_q(
@@ -7898,103 +6576,6 @@ def ivm_extremum_repair(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_type",
         F.round(F.col("extremum"), 6).alias("max_value"),
         "needs_recompute",
-    )
-
-
-@_q(
-    "linkage_entity_clusters",
-    """
-    WITH RECURSIVE pairs AS (
-      SELECT c.c_custkey * 2 AS u, s.s_suppkey * 2 + 1 AS v,
-        ((CASE WHEN levenshtein(substr(c.c_name, 10, 20),
-                                substr(s.s_name, 10, 20)) = 0 THEN 4000000
-               WHEN levenshtein(substr(c.c_name, 10, 20),
-                                substr(s.s_name, 10, 20)) <= 2 THEN 1500000
-               ELSE -2000000 END)
-         + (CASE WHEN abs(c.c_acctbal - s.s_acctbal) < 100 THEN 800000
-                 ELSE -400000 END)) AS score_u
-      FROM customer c
-      JOIN supplier s ON c.c_nationkey = s.s_nationkey
-    ), match AS (
-      SELECT u, v FROM pairs WHERE score_u >= 2000000
-    ), edges AS (
-      SELECT u, v FROM match UNION SELECT v, u FROM match
-    ), nodes AS (
-      SELECT DISTINCT u AS node FROM edges
-    ), reach AS (
-      SELECT node, node AS m FROM nodes
-      UNION
-      SELECT e.u AS node, r.m FROM edges e JOIN reach r ON e.v = r.node
-    ), labeled AS (
-      SELECT node, min(m) AS component FROM reach GROUP BY node
-    )
-    SELECT component::BIGINT AS component,
-      count(*)::BIGINT AS n_members,
-      sum(CASE WHEN node % 2 = 0 THEN 1 ELSE 0 END)::BIGINT AS n_customers,
-      sum(CASE WHEN node % 2 = 1 THEN 1 ELSE 0 END)::BIGINT AS n_suppliers
-    FROM labeled GROUP BY component
-    """,
-)
-def linkage_entity_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Entity-cluster formation over record-linkage matches: pairs whose
-    Fellegi–Sunter score clears the match threshold become edges (the two
-    id spaces interleaved into one numeric namespace: customer → 2k,
-    supplier → 2k+1) and the same pointer-jumping connected components
-    that clusters near-duplicates groups them into entities — the
-    resolve step of an ER pipeline, with per-cluster side counts. The
-    oracle replays the scoring and a recursive transitive closure."""
-    from blogparser_spark.dataops.dedup import connected_components
-    from blogparser_spark.dataops.linkage import FieldSpec, fs_linkage
-
-    cust = spark.read.parquet(f"{sf_dir}/customer.parquet").select(
-        "c_custkey",
-        F.col("c_nationkey").alias("nationkey"),
-        F.substring("c_name", 10, 20).alias("c_entno"),
-        "c_acctbal",
-    )
-    supp = spark.read.parquet(f"{sf_dir}/supplier.parquet").select(
-        "s_suppkey",
-        F.col("s_nationkey").alias("nationkey"),
-        F.substring("s_name", 10, 20).alias("s_entno"),
-        "s_acctbal",
-    )
-    fields = [
-        FieldSpec(
-            "entno",
-            F.col("c_entno"),
-            F.col("s_entno"),
-            w_exact_u=4_000_000,
-            w_close_u=1_500_000,
-            w_diff_u=-2_000_000,
-            close_max_lev=2,
-        ),
-        FieldSpec(
-            "bal",
-            F.lit(""),
-            F.lit(""),
-            w_exact_u=800_000,
-            w_close_u=0,
-            w_diff_u=-400_000,
-            distance=F.when(
-                F.abs(F.col("c_acctbal") - F.col("s_acctbal")) < 100, 0
-            ).otherwise(9),
-        ),
-    ]
-    scored = fs_linkage(cust, supp, ["nationkey"], fields, "c_custkey", "s_suppkey")
-    match = scored.filter(F.col("score_u") >= 2_000_000).select(
-        (F.col("c_custkey") * 2).alias("id_a"),
-        (F.col("s_suppkey") * 2 + 1).alias("id_b"),
-    )
-    labels = connected_components(match)
-    node = F.col("node")
-    return labels.groupBy("component").agg(
-        F.count("*").cast("bigint").alias("n_members"),
-        F.sum(F.when(node % 2 == 0, 1).otherwise(0))
-        .cast("bigint")
-        .alias("n_customers"),
-        F.sum(F.when(node % 2 == 1, 1).otherwise(0))
-        .cast("bigint")
-        .alias("n_suppliers"),
     )
 
 

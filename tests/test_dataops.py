@@ -1,4 +1,4 @@
-"""Tests for the training-data ops: dedup, similarity, textstats, multimodal."""
+"""Tests for the training-data ops: dedup, similarity, textstats, lm."""
 
 from __future__ import annotations
 
@@ -388,69 +388,6 @@ def test_connected_components_chain_iterations(spark):
     assert comps == {i: 0 for i in range(5)}
     # pointer jumping: strictly fewer rounds than the diameter-bound 5
     assert stats["iterations"] == 3
-
-
-def test_pii_scrub(spark):
-    from blogparser_spark.dataops.scrub import with_pii_masked
-
-    rows = [
-        (0, "mail me at a.b+c@ex-ample.org thanks"),
-        (1, "server 10.0.255.3 port open, call +1 555-123-4567 now"),
-        (2, "no pii here at all"),
-    ]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    out = {r["doc_id"]: r for r in with_pii_masked(df).collect()}
-    assert out[0]["n_emails"] == 1 and "<EMAIL>" in out[0]["text_masked"]
-    assert "a.b+c@ex-ample.org" not in out[0]["text_masked"]
-    assert out[1]["n_ips"] == 1
-    assert "<IP>" in out[1]["text_masked"] and "<PHONE>" in out[1]["text_masked"]
-    assert out[2]["text_masked"] == "no pii here at all"
-
-
-# ------------------------------------------------------------- multimodal ---
-
-
-def test_multimodal_plumbing(docs):
-    from blogparser_spark.dataops.multimodal import (
-        decode_features,
-        documents_as_media,
-        frame_sample_plan,
-    )
-
-    media = documents_as_media(docs)
-    assert media.count() == 6
-    feats = decode_features(media).collect()
-    assert len(feats) == 6
-    f0 = next(f for f in feats if f["media_id"] == 0)
-    assert f0["channels"] == 3 and len(f0["embedding"]) == 8
-    assert f0["magic"] == "the quick brown fox"[:4].encode().hex()[:8]
-    plan = frame_sample_plan(media, every_n=1)
-    assert plan.count() == 6  # 1 fake frame per small payload
-
-
-def test_multimodal_strict_contract(docs):
-    """Strict-mode contract: with a real codec present the strict path
-    decodes; without one the operator fails AT PLAN TIME with the
-    documented error — no Spark job is ever launched to discover it."""
-    from blogparser_spark.dataops import multimodal as M
-
-    media = M.documents_as_media(docs)
-    if M.codec_available():
-        feats = M.decode_features(media, strict=True).collect()
-        assert len(feats) == 6
-    else:
-        with pytest.raises(NotImplementedError, match="codec"):
-            M.decode_features(media, strict=True)  # raises before .collect()
-
-
-def test_multimodal_decode_deterministic(docs):
-    from blogparser_spark.dataops.multimodal import decode_features, documents_as_media
-
-    a = sorted(map(str, decode_features(documents_as_media(docs)).collect()))
-    b = sorted(map(str, decode_features(documents_as_media(docs)).collect()))
-    assert a == b
-
-
 def test_degenerate_corpus_bounded_buckets(spark):
     """All-identical corpus: one LSH bucket holds every doc. The bucket
     report must stay bounded (ids capped, exact n_docs), chained pairs must
@@ -488,64 +425,6 @@ def test_degenerate_corpus_bounded_buckets(spark):
     assert len(clusters) == n
     assert sum(1 for r in clusters if r["keep"]) == 1
     assert all(r["component"] == 0 for r in clusters)
-
-
-def test_synth_png_header_roundtrip():
-    """synth_png writes a well-formed PNG; the codec-free header parse
-    returns the declared dimensions (and PIL would agree, when present)."""
-    from blogparser_spark.dataops.multimodal import (
-        PNG_SIGNATURE,
-        _fake_decode,
-        codec_available,
-        synth_png,
-    )
-
-    for w, h, seed in ((1, 1, 0), (16, 12, 7), (5, 9, 250)):
-        png = synth_png(w, h, seed)
-        assert png.startswith(PNG_SIGNATURE)
-        assert _fake_decode(png) == (w, h, 3)
-        if codec_available():  # real-codec agreement, when the env has one
-            import io
-
-            from PIL import Image
-
-            with Image.open(io.BytesIO(png)) as im:
-                assert (im.width, im.height, len(im.getbands())) == (w, h, 3)
-    # non-PNG blobs still take the byte-derived fake path
-    assert _fake_decode(b"not a png at all") == (16 % 640 + 1, 16 % 480 + 1, 3)
-
-
-def test_png_media_decode_features(spark):
-    from blogparser_spark.dataops.multimodal import (
-        codec_available,
-        decode_features,
-        documents_as_png_media,
-    )
-
-    df = spark.createDataFrame([(i,) for i in range(20)], "doc_id long")
-    media = documents_as_png_media(df)
-    feats = {
-        r["media_id"]: r
-        for r in decode_features(media, strict=codec_available()).collect()
-    }
-    for i in range(20):
-        assert feats[i]["width"] == i % 16 + 1
-        assert feats[i]["height"] == i % 12 + 1
-        assert feats[i]["channels"] == 3
-        assert feats[i]["magic"] == "89504e47"
-        assert len(feats[i]["embedding"]) == 8
-
-
-def test_curation_funnel_monotone(spark):
-    """The curation funnel's stages only ever remove rows — per-stage
-    counts must be monotonically non-increasing, and the PII audit is a
-    subset of the final set."""
-    from blogparser_spark.queries import curation_funnel
-
-    row = curation_funnel(spark, "/root/testdata/sf0.001").collect()[0]
-    assert row["n_input"] >= row["n_quality"] >= row["n_exact"] >= row["n_final"]
-    assert 0 <= row["n_pii_rows"] <= row["n_final"]
-    assert row["n_final"] > 0  # the funnel must not drain the corpus
 
 
 def test_simhash_near_dup_clusters(spark):
@@ -1319,114 +1198,6 @@ def test_conv_fingerprints_null_turn_not_dropped(spark):
     df = spark.createDataFrame(rows, "conv_id string, turn_idx int, text string")
     fps = {r["conv_id"]: r["conv_fp"] for r in conv_fingerprints(df).collect()}
     assert fps["a"] != fps["b"]
-
-
-def test_fs_linkage(spark):
-    from blogparser_spark.dataops.linkage import FieldSpec, fs_linkage
-
-    left = spark.createDataFrame(
-        [(1, "b1", "alpha"), (2, "b1", "beta"), (3, "b2", "gamma")],
-        "lid long, blk string, lname string",
-    )
-    right = spark.createDataFrame(
-        [(10, "b1", "alpha"), (11, "b1", "betta"), (12, "b2", "zzzzzz"),
-         (13, "b3", "alpha")],
-        "rid long, blk string, rname string",
-    )
-    fields = [
-        FieldSpec("name", F.col("lname"), F.col("rname"),
-                  w_exact_u=3_000_000, w_close_u=1_000_000,
-                  w_diff_u=-1_000_000, close_max_lev=1),
-    ]
-    rows = fs_linkage(left, right, ["blk"], fields, "lid", "rid").collect()
-    got = {(r["lid"], r["rid"]): (r["lev_name"], r["score_u"]) for r in rows}
-    # blocking: b3's right row never pairs; b1 pairs 2x2, b2 pairs 1x1
-    assert len(got) == 5 and (1, 13) not in got
-    assert got[(1, 10)] == (0, 3_000_000)      # exact
-    assert got[(2, 11)] == (1, 1_000_000)      # close (1 edit)
-    assert got[(3, 12)][1] == -1_000_000       # disagree
-    # ordering: best score first with deterministic id tie-break
-    assert (rows[0]["lid"], rows[0]["rid"]) == (1, 10)
-    # custom pseudo-distance replaces levenshtein
-    f2 = [FieldSpec("flag", F.lit(""), F.lit(""), 500_000, 0, -100,
-                    distance=F.when(F.col("lid") == 1, 0).otherwise(9))]
-    r2 = {(r["lid"], r["rid"]): r["score_u"]
-          for r in fs_linkage(left, right, ["blk"], f2, "lid", "rid").collect()}
-    assert r2[(1, 10)] == 500_000 and r2[(2, 10)] == -100
-
-
-def test_fs_em_weights_matches_python_twin(spark):
-    """fs_em_weights' 2-round distributed EM must reproduce a pure-Python
-    EM over the same comparison vectors bit-for-bit (same integer-micro
-    responsibility quantization, same 6dp parameter re-quantization), and
-    must separate m > u on a fixture with real matches."""
-    import math
-
-    from blogparser_spark.dataops.linkage import FieldSpec, fs_em_weights
-
-    left_rows = [(i, "b%d" % (i % 3), "name%03d" % i, float(i * 10)) for i in range(30)]
-    # 10 true matches (identical name/bal), 20 noise rows
-    right_rows = [
-        (100 + i, "b%d" % (i % 3), "name%03d" % i, float(i * 10)) for i in range(10)
-    ] + [
-        (200 + i, "b%d" % (i % 3), "zz%05d" % (i * 7), float(i * 13 + 5))
-        for i in range(20)
-    ]
-    left = spark.createDataFrame(left_rows, "lid long, blk string, lname string, lbal double")
-    right = spark.createDataFrame(right_rows, "rid long, blk string, rname string, rbal double")
-    fields = [
-        FieldSpec("name", F.col("lname"), F.col("rname"), 3_000_000, 1_000_000,
-                  -1_000_000, close_max_lev=1),
-        FieldSpec("bal", F.lit(""), F.lit(""), 800_000, 0, -400_000,
-                  distance=F.when(F.abs(F.col("lbal") - F.col("rbal")) < 1, 0).otherwise(9)),
-    ]
-    got = {r["field"]: (r["m"], r["u"], r["p"]) for r in
-           fs_em_weights(left, right, ["blk"], fields, iters=2).collect()}
-
-    # python twin over the same blocked comparison vectors
-    def lev(a, b):
-        prev = list(range(len(b) + 1))
-        for i, ca in enumerate(a, 1):
-            cur = [i]
-            for j, cb in enumerate(b, 1):
-                cur.append(min(prev[j] + 1, cur[j - 1] + 1, prev[j - 1] + (ca != cb)))
-            prev = cur
-        return prev[-1]
-
-    vecs = []
-    for lid, lb, ln, lv in left_rows:
-        for rid, rb, rn, rv in right_rows:
-            if lb == rb:
-                vecs.append((int(lev(ln, rn) <= 1), int(abs(lv - rv) < 1)))
-
-    def r6(x):
-        return math.floor(x * 1e6 + 0.5) / 1e6
-
-    p, m, u = 0.1, [0.9, 0.9], [0.1, 0.1]
-    for _ in range(2):
-        sr, srg, sg = 0, [0, 0], [0, 0]
-        for g in vecs:
-            num, den = p, 1.0 - p
-            for f in range(2):
-                num *= m[f] if g[f] == 1 else 1.0 - m[f]
-                den *= u[f] if g[f] == 1 else 1.0 - u[f]
-            r = math.floor(num / (num + den) * 1e6 + 0.5)
-            sr += r
-            for f in range(2):
-                srg[f] += r * g[f]
-                sg[f] += g[f]
-        n = len(vecs)
-        for f in range(2):
-            m[f] = r6(srg[f] / max(sr, 1))
-            u[f] = r6((1_000_000 * sg[f] - srg[f]) / max(1_000_000 * n - sr, 1))
-        p = r6(sr / (1_000_000 * n))
-
-    assert got["name"] == (m[0], u[0], p)
-    assert got["bal"] == (m[1], u[1], p)
-    # EM separated the classes: agreement is far likelier among matches
-    for f in ("name", "bal"):
-        assert got[f][0] > got[f][1]
-    assert 0 < got["name"][2] < 1
 
 
 def test_semantic_dedup_keep_rule(emb):

@@ -279,16 +279,6 @@ def test_salted_exact_distinct_two_stage(spark):
     assert "Window" not in plan
 
 
-def test_set_overlap_sizes_broadcast(spark):
-    """set_overlap_jaccard's size tables are |sets| rows — they must
-    broadcast onto the intersection grid, never shuffle it."""
-    from blogparser_spark.dataops.graph import set_overlap_jaccard
-
-    ev = spark.read.parquet("/root/testdata/sf0.001/events.parquet")
-    plan = _plan(set_overlap_jaccard(ev, "event_type", "user_id"))
-    assert plan.count("BroadcastHashJoin") >= 2
-
-
 def test_inverted_postings_single_key_shuffle_reuse(spark):
     """inverted_postings' row_number window and final agg share the term
     key: after the per-(term, doc) agg there must be exactly ONE more

@@ -1,5 +1,5 @@
 """Invariant + twin tests for the time-series (cohort/transitions/gap-fill),
-graph (PageRank), PMI-collocation, and fuzzy-pair families. Oracle parity
+profile, PMI-collocation, and fuzzy-pair families. Oracle parity
 runs separately via tools/check_oracle.py; these pin the math.
 """
 
@@ -11,7 +11,7 @@ from datetime import datetime, timedelta
 import pytest
 from pyspark.sql import functions as F
 
-from blogparser_spark.dataops import dedup, graph, textstats, timeseries
+from blogparser_spark.dataops import dedup, textstats, timeseries
 
 
 @pytest.fixture(scope="module")
@@ -102,52 +102,6 @@ def test_gap_fill_dense_and_cumulative(events):
     for r in carried[:10]:
         prev = by_key[(r.event_type, r.day - timedelta(days=1))]
         assert r.locf_value_avg == prev.locf_value_avg
-
-
-def _numpy_pagerank(edge_list, n_iter=5, d=0.85):
-    nodes = sorted({s for s, _ in edge_list} | {t for _, t in edge_list})
-    idx = {n: i for i, n in enumerate(nodes)}
-    deg = {n: 0 for n in nodes}
-    for s, _ in edge_list:
-        deg[s] += 1
-    n = len(nodes)
-    r = {m: 1.0 / n for m in nodes}
-    for _ in range(n_iter):
-        nxt = {m: (1 - d) / n for m in nodes}
-        for s, t in edge_list:
-            nxt[t] += d * r[s] / deg[s]
-        r = nxt
-    return r, idx
-
-
-def test_pagerank_matches_dense_twin_and_conserves_mass(spark):
-    # path graph a-b-c-d, symmetric
-    und = [("a", "b"), ("b", "c"), ("c", "d")]
-    edge_list = und + [(t, s) for s, t in und]
-    edges = spark.createDataFrame(edge_list, "src string, dst string")
-    got = {r.node: r.rank for r in graph.pagerank(edges, n_iter=5).collect()}
-    want, _ = _numpy_pagerank(edge_list)
-    assert set(got) == set(want)
-    for k in want:
-        assert math.isclose(got[k], want[k], rel_tol=1e-12), k
-    assert math.isclose(sum(got.values()), 1.0, rel_tol=1e-9)
-    # symmetry of the path: ends equal, middles equal
-    assert math.isclose(got["a"], got["d"], rel_tol=1e-12)
-    assert math.isclose(got["b"], got["c"], rel_tol=1e-12)
-    assert got["b"] > got["a"]
-
-
-def test_bipartite_edges_symmetric(spark, sf_dir):
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
-    lineitem = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-    e = graph.bipartite_edges(orders, lineitem).cache()
-    n = e.count()
-    fwd = e.where(F.col("src").startswith("c")).count()
-    assert n == 2 * fwd
-    # symmetric: reversing the edge set is a fixpoint
-    rev = e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    assert e.exceptAll(rev).count() == 0
-    e.unpersist()
 
 
 def _py_pmi(texts, min_count, top_k):
@@ -389,32 +343,6 @@ def test_categorical_entropy_math_twin(events):
         assert got[uid].entropy_nats <= round(math.log(len(c)), 6) + 1e-9
 
 
-def test_set_overlap_jaccard_set_twin(events):
-    got = {
-        (r.set_a, r.set_b): (r.n_a, r.n_b, r.n_intersect, r.jaccard)
-        for r in graph.set_overlap_jaccard(
-            events, "event_type", "user_id"
-        ).collect()
-    }
-    members: dict[str, set] = {}
-    for r in events.select("event_type", "user_id").distinct().collect():
-        members.setdefault(r.event_type, set()).add(r.user_id)
-    want = {}
-    for a in members:
-        for b in members:
-            if a < b and members[a] & members[b]:
-                i = len(members[a] & members[b])
-                u = len(members[a] | members[b])
-                want[(a, b)] = (
-                    len(members[a]),
-                    len(members[b]),
-                    i,
-                    round(i / u, 6),
-                )
-    assert got == want
-    assert all(0.0 < j <= 1.0 for *_, j in got.values())
-
-
 def test_score_normalize_rank_and_minmax(spark):
     from blogparser_spark.dataops.curation import score_normalize
 
@@ -466,58 +394,6 @@ def test_decayed_engagement_recency_ordering(spark):
     assert out[10] == pytest.approx(100.0 * 2 ** (-28 / 7.0), abs=1e-4)
 
 
-def test_triangle_stats_brute_force_twin(spark):
-    # K4 on 1-4 (4 triangles) + pendant 5 + disjoint path 6-7-8 (0 triangles)
-    import itertools
-
-    und = [(a, b) for a, b in itertools.combinations([1, 2, 3, 4], 2)]
-    und += [(4, 5), (6, 7), (7, 8)]
-    edges = spark.createDataFrame(und, "u long, v long")
-    out = {r.node: r for r in graph.triangle_stats(edges).collect()}
-
-    # brute-force twin on the collected edge set
-    es = {frozenset(e) for e in und}
-    nodes = sorted({n for e in und for n in e})
-    tri_of = {n: 0 for n in nodes}
-    for a, b, c in itertools.combinations(nodes, 3):
-        if {frozenset((a, b)), frozenset((b, c)), frozenset((a, c))} <= es:
-            for n in (a, b, c):
-                tri_of[n] += 1
-    deg_of = {n: sum(1 for e in es if n in e) for n in nodes}
-    assert set(out) == set(nodes)
-    for n in nodes:
-        assert out[n].deg == deg_of[n]
-        assert out[n].triangles == tri_of[n]
-        if deg_of[n] >= 2:
-            expect = 2.0 * tri_of[n] / (deg_of[n] * (deg_of[n] - 1))
-            assert out[n].clustering_coeff == pytest.approx(expect, abs=1e-6)
-        else:
-            assert out[n].clustering_coeff is None
-    assert out[1].clustering_coeff == pytest.approx(1.0)
-    assert out[5].triangles == 0 and out[7].triangles == 0
-
-
-def test_supplier_cooccurrence_edges_canonical(spark, sf_dir):
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-    e = graph.supplier_cooccurrence_edges(li)
-    rows = e.collect()
-    assert all(r.u < r.v for r in rows)
-    assert len(rows) == len({(r.u, r.v) for r in rows})
-    # symmetric sanity: an edge exists iff some order ships both suppliers
-    so = li.select("l_orderkey", "l_suppkey").distinct().collect()
-    from collections import defaultdict
-
-    per_order = defaultdict(set)
-    for r in so:
-        per_order[r.l_orderkey].add(r.l_suppkey)
-    import itertools as it
-
-    expect = set()
-    for ss in per_order.values():
-        expect |= {tuple(sorted(p)) for p in it.combinations(ss, 2)}
-    assert {(r.u, r.v) for r in rows} == expect
-
-
 def test_slice_column_manifest_twin(events):
     import hashlib
 
@@ -545,65 +421,6 @@ def test_slice_column_manifest_twin(events):
             vals = [getattr(r, c) for r in rows if getattr(r, c) is not None]
             assert g.min_value == str(min(vals)) and g.max_value == str(max(vals))
             assert g.n_null == len(rows) - len(vals)
-
-
-def test_star_cc_matches_label_propagation_and_union_find(spark):
-    import random
-
-    random.seed(11)
-    pairs = [(i, i + 1) for i in range(40)]  # path: worst case for plain propagation
-    while len(pairs) < 260:
-        a, b = random.randrange(300), random.randrange(300)
-        if a != b:
-            pairs.append((a, b))
-    df = spark.createDataFrame(pairs, "id_a long, id_b long")
-    stats = {}
-    star = {
-        (r.node, r.component)
-        for r in graph.connected_components_star(df, stats=stats).collect()
-    }
-    lp = {
-        (r.node, r.component)
-        for r in dedup.connected_components(df).collect()
-    }
-    assert star == lp  # the two iterative algorithms agree exactly
-
-    # union-find ground truth: component = min id of the cluster
-    parent: dict[int, int] = {}
-
-    def find(x):
-        while parent.setdefault(x, x) != x:
-            parent[x] = parent[parent[x]]
-            x = parent[x]
-        return x
-
-    for a, b in pairs:
-        parent[find(a)] = find(b)
-    comp: dict[int, list[int]] = {}
-    for n in {n for p in pairs for n in p}:
-        comp.setdefault(find(n), []).append(n)
-    truth = {(n, min(ms)) for ms in comp.values() for n in ms}
-    assert star == truth
-    # the SoCC'14 bound: O(log^2 n) rounds — and in practice log-ish
-    assert 1 <= stats["iterations"] <= 12
-
-
-def test_star_cc_edge_cases(spark):
-    # empty pair set -> empty labels, zero iterations
-    empty = spark.createDataFrame([], "id_a long, id_b long")
-    st = {}
-    assert graph.connected_components_star(empty, stats=st).count() == 0
-    assert st["iterations"] == 0
-    # reversed duplicates and a pure self-loop collapse to one component;
-    # self-loop-only nodes carry no pair information and are dropped
-    messy = spark.createDataFrame(
-        [(5, 2), (2, 5), (9, 9), (2, 1), (8, 5)], "id_a long, id_b long"
-    )
-    got = {
-        (r.node, r.component)
-        for r in graph.connected_components_star(messy).collect()
-    }
-    assert got == {(1, 1), (2, 1), (5, 1), (8, 1)}
 
 
 def test_psi_drift_python_twin(spark):
@@ -897,34 +714,6 @@ def test_missing_daily_ranges_twin(spark):
     assert got == [
         ("A", d0 + 3, d0 + 5, 3),
         ("A", d0 + 7, d0 + 9, 3),
-    ]
-
-
-def test_funnel_step_latencies_strict_order_twin(spark):
-    from blogparser_spark.operators.aggregate import funnel_step_latencies
-
-    base = datetime(2024, 3, 1)
-    rows = [
-        # user 1: view @0, click @10, purchase @25 -> click 10m, purchase 15m
-        (1, 1, "view", base, 0.0),
-        (2, 1, "click", base + timedelta(minutes=10), 0.0),
-        (3, 1, "purchase", base + timedelta(minutes=25), 0.0),
-        # user 2: click BEFORE view -> click never converts
-        (4, 2, "click", base, 0.0),
-        (5, 2, "view", base + timedelta(minutes=1), 0.0),
-        # user 3: view only
-        (6, 3, "view", base, 0.0),
-    ]
-    df = spark.createDataFrame(
-        rows, "event_id long, user_id long, event_type string, ts timestamp, value double"
-    )
-    got = sorted(
-        (r.user_id, r.step, r.latency_us)
-        for r in funnel_step_latencies(df).collect()
-    )
-    assert got == [
-        (1, "click", 600_000_000),
-        (1, "purchase", 900_000_000),
     ]
 
 

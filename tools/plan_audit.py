@@ -18,7 +18,10 @@ import os
 import re
 import sys
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+# the driver contract of THIS checkout, not of whatever repo path is current
+ENTRY_FILE = os.path.join(ROOT, "__spark_entry__.py")
+sys.path.insert(0, ROOT)
 
 # Global windows allowed on frames that are bounded by construction (size
 # documented at the implementation site).
@@ -55,9 +58,7 @@ def main() -> int:
     from blogparser_spark.session import get_spark
 
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
-    spec = importlib.util.spec_from_file_location(
-        "entry", "/root/repo/__spark_entry__.py"
-    )
+    spec = importlib.util.spec_from_file_location("entry", ENTRY_FILE)
     entry = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(entry)
     qs = entry.queries()
