@@ -4,20 +4,20 @@
         --input /path/transcripts --output /path/out [--resume] \
         [--slices 64] [--key-col conv_id] [--salt-parts 0]
 
-Runs the sliced, resumable parse→enrich pipeline (a lineage manifest per
-slice), then the aggregate reports over the routed output. The sink is
-the snapshot-log table format: one atomic idempotent commit per slice
-into {output}/table, written as a few files sorted by the sink keys then
-conv_id. Each file's manifest entry records the sink tuples it holds with
-row counts (per-sink reads open only those files) plus conv_id stats and
-blooms for conversation lookups — the north rule's per-sink Iceberg
-tables. Resume rides the commit-marker ledger alone; each slice manifest
-records lineage and its commit's summary. On a cluster the same file is
-submitted unchanged; local runs honor SPARK_GRAFT_CPUS.
+Runs the sliced, resumable parse→enrich pipeline, then the aggregate
+reports over the routed output. The sink is the snapshot-log table
+format: one atomic idempotent commit per slice into {output}/table,
+written as a few files sorted by the sink keys then conv_id. Each file's
+manifest entry records the sink tuples it holds with row counts (per-sink
+reads open only those files) plus conv_id stats and blooms for
+conversation lookups — the north rule's per-sink Iceberg tables. Resume
+rides the commit-marker ledger alone; each slice's commit also records
+the slice's lineage. On a cluster the same file is submitted unchanged;
+local runs honor SPARK_GRAFT_CPUS.
 
 Output: one JSON line per slice run (slice_id, rows_in, rows_ok,
-wall_seconds, table_version, commit_summary — read from the slice
-manifests), then one JSON report line for the whole run, which also
+wall_seconds, table_version, commit_summary, from run_sliced's
+SliceRecords), then one JSON report line for the whole run, which also
 says whether the driver JVM started from a class-data-sharing archive.
 """
 
@@ -76,7 +76,7 @@ def main(argv: list[str] | None = None) -> int:
     from blogparser_spark.operators.checkpoint import run_sliced
 
     spark = session.get_spark(app_name="blogparser-job")
-    manifests = run_sliced(
+    records = run_sliced(
         spark,
         args.input,
         args.output,
@@ -85,7 +85,7 @@ def main(argv: list[str] | None = None) -> int:
         key_col=args.key_col,
         resume=args.resume,
     )
-    for m in manifests:  # one line per slice, from its manifest
+    for m in records:
         print(
             json.dumps(
                 {
@@ -103,9 +103,9 @@ def main(argv: list[str] | None = None) -> int:
     # and other generations were replaced during the run
     routed = tl.read_snapshot(spark, table)
     report = {
-        "slices_run": [m.slice_id for m in manifests],
-        "rows_in": sum(m.rows_in for m in manifests),
-        "wall_seconds": round(sum(m.wall_seconds for m in manifests), 3),
+        "slices_run": [m.slice_id for m in records],
+        "rows_in": sum(m.rows_in for m in records),
+        "wall_seconds": round(sum(m.wall_seconds for m in records), 3),
         "table_version": tl.current_version(table),
         "sink_counts": {
             f"{r['channel']}/{r['tool_category']}/{r['parse_status']}": r["n"]

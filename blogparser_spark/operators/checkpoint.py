@@ -11,14 +11,11 @@ The input keyspace is split into RANGES of a stable partition key (hash of
 conv_id mod n_slices — deterministic, data-independent). Each slice runs as
 its own Spark job over a partition-pruned slice of the input and lands as
 ONE atomic idempotent commit to the tablelog table at {output}/table. The
-commit's marker encodes the slice, input snapshot and slicing config, so
-the table's commit-marker ledger is the one resume guard: a resumed run
-skips exactly the slices whose current marker is committed. After each
-commit a JSON manifest is written ATOMICALLY (temp file + rename) recording
-lineage — slice id, predicate, input snapshot identifier, row counts
-in/out, per-sink counts from df.observe() metrics, wall time, the commit's
-summary. Manifests are never read to decide what to skip: a lost manifest
-or a wiped table cannot make a resume disagree with the table.
+commit's marker encodes the slice, the slice's input identity and the
+slicing config, so the table's commit-marker ledger is the one resume
+guard: a resumed run skips exactly the slices whose current marker is
+committed. The same commit carries the slice's lineage under its `record`
+key (see run_sliced), atomically with the rows.
 
 Why slice-level (not task-level): Spark already retries tasks; what Spark
 does NOT give you is job-level resume after a driver loss. Slices bound the
@@ -27,13 +24,14 @@ blast radius of a restart to one slice's work.
 
 from __future__ import annotations
 
+import hashlib
 import json
 import os
 import re
 import time
 import uuid
 from contextlib import contextmanager
-from dataclasses import asdict, dataclass
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
@@ -42,11 +40,12 @@ from blogparser_spark.operators import tablelog as tl
 from blogparser_spark.operators.parse import STATUSES as _OBSERVED_STATUSES
 from blogparser_spark.operators.route import route_commit_tablelog
 
-MANIFEST_DIR = "_manifests"
-
 
 @dataclass
-class SliceManifest:
+class SliceRecord:
+    """What run_sliced did for one slice. Every field from slice_id to
+    started_at is also stored in the slice's commit under `record`."""
+
     slice_id: int
     n_slices: int
     key_col: str
@@ -54,31 +53,15 @@ class SliceManifest:
     input_path: str
     input_snapshot: str
     rows_in: int
-    rows_ok: int
-    sink_counts: dict
+    status_counts: dict  # rows per parse_status (_status_counts)
     started_at: float
-    wall_seconds: float
-    output_path: str
+    rows_ok: int
+    wall_seconds: float  # from started_at to after the commit
     table_version: int | None = None  # this slice's tablelog commit
     # the commit's summary (tablelog.commit_summary) — files/records/bytes
     # added, files/records removed and files rewritten by the replace,
     # write/manifest/rewrite/commit seconds, retries
     commit_summary: dict | None = None
-
-
-def _manifest_path(base: str, slice_id: int) -> str:
-    return os.path.join(base, MANIFEST_DIR, f"slice-{slice_id:05d}.json")
-
-
-def write_manifest(base: str, m: SliceManifest) -> None:
-    """Atomic write: tmp + rename, so a crash mid-write never yields a
-    manifest that marks an incomplete slice as done."""
-    path = _manifest_path(base, m.slice_id)
-    os.makedirs(os.path.dirname(path), exist_ok=True)
-    tmp = f"{path}.tmp.{uuid.uuid4().hex[:8]}"
-    with open(tmp, "w") as f:
-        json.dump(asdict(m), f, indent=1)
-    os.replace(tmp, path)
 
 
 SLICE_COL = "slice_bucket"
@@ -126,30 +109,40 @@ def _sliced_layout(path: str, n_slices: int, key_col: str) -> bool:
     return meta.get("n_slices") == n_slices and meta.get("key_col") == key_col
 
 
-def input_snapshot_id(spark: SparkSession, path: str) -> str:
-    """Lineage identifier for the input. Iceberg would give a snapshot id;
-    for parquet dirs, the max mtime over ALL data files (recursive — the
-    input may be partitioned into subdirectories) is the next best stable
-    marker (changes iff the data changes)."""
-    latest = None
-    try:
-        for root, _dirs, files in os.walk(path):
-            for f in files:
-                if f.endswith(".parquet"):
-                    mt = os.path.getmtime(os.path.join(root, f))
-                    latest = mt if latest is None else max(latest, mt)
-    except OSError:
-        return "unknown"
-    return f"mtime:{int(latest)}" if latest is not None else "unknown"
+def _files_digest(root: str) -> str:
+    """Digest of the sorted (relative path, size, mtime_ns) of every
+    *.parquet file under `root`; a missing `root` holds no files."""
+    files = []
+    for d, _dirs, names in os.walk(root):
+        for n in names:
+            if n.endswith(".parquet"):
+                full = os.path.join(d, n)
+                st = os.stat(full)
+                files.append((os.path.relpath(full, root), st.st_size, st.st_mtime_ns))
+    return "files:" + hashlib.sha256(json.dumps(sorted(files)).encode()).hexdigest()[:16]
 
 
-def read_manifest(base: str, slice_id: int) -> dict | None:
-    """A slice's lineage manifest, or None if absent/unreadable."""
-    try:
-        with open(_manifest_path(base, slice_id)) as f:
-            return json.load(f)
-    except (OSError, ValueError):
-        return None
+def input_snapshot_ids(path: str, n_slices: int, key_col: str) -> list[str]:
+    """Each slice's input identity, the `snap=` of its marker: a digest of
+    the files' relative paths, sizes and mtime_ns. On an input that
+    write_sliced_input wrote with this (n_slices, key_col), slice s digests
+    only the files under slice_bucket=s, so a change confined to one slice
+    re-runs only that slice; any other input gets one digest over all its
+    files. It cannot see a rewrite that keeps the file's size and forces
+    its old mtime back."""
+    if _sliced_layout(path, n_slices, key_col):
+        return [_files_digest(os.path.join(path, f"{SLICE_COL}={s}")) for s in range(n_slices)]
+    return [_files_digest(path)] * n_slices
+
+
+def _status_counts(metrics: dict) -> dict:
+    """Rows per observed parse_status; statuses outside the known list land
+    in `other`, so the counts always sum to the row count."""
+    counts = {st: int(metrics[st]) for st in _OBSERVED_STATUSES if metrics[st]}
+    other = int(metrics["rows"]) - sum(counts.values())
+    if other:
+        counts["other"] = other
+    return counts
 
 
 def slice_marker(
@@ -223,11 +216,11 @@ def run_sliced(
     key_col: str = "conv_id",
     resume: bool = True,
     table_format: str = "tablelog",
-) -> list[SliceManifest]:
+) -> list[SliceRecord]:
     """Run transform(df_slice) -> DataFrame for each incomplete slice,
-    committing each to the table + writing its manifest. `transform` must
-    return a frame with a parse_status column (for the observed sink
-    metrics). `table_format` accepts only "tablelog", the one sink.
+    committing each to the table; returns a SliceRecord per slice run.
+    `transform` must return a frame with a parse_status column (for the
+    status counts). `table_format` accepts only "tablelog", the one sink.
 
     Input layouts: if input_path was written by write_sliced_input with a
     compatible slice count, each slice filters on the PARTITION column and
@@ -241,19 +234,23 @@ def run_sliced(
     tables): a few files per slice sorted by the sink keys then conv_id,
     each recording its sink tuples with row counts (per-sink reads open
     only the files holding the sink) and conv_id footer stats + blooms for
-    point lookups. The slice manifest carries the commit's summary.
+    point lookups.
+
+    Lineage: the slice's commit is its one durable record. Its `record`
+    key holds the SliceRecord fields up to started_at, in the same atomic
+    commit as the rows; the commit's `ts` marks the slice's end. Expiry
+    drops old commits with their records, while the live files' markers
+    still name the slice and input identity that produced them.
 
     Resume is ledger-only: a slice is done iff the table's marker ledger
-    holds its CURRENT marker — slice_marker(s, snapshot, n_slices,
-    key_col), with or without a resume=False run's `|run=<nonce>` suffix.
+    holds its CURRENT marker — slice_marker(s, input_snapshot_ids(...)[s],
+    n_slices, key_col), with or without a resume=False run's `|run=` suffix.
     The ledger is the markers the live files carry, so it survives
-    snapshot expiry and drops a marker once its rows are gone. The marker
-    encodes the input snapshot and (n_slices, key_col), so after the input
-    changes or the slicing changes every slice re-runs rather than mixing
-    lineages; a crashed run's re-submission is a commit no-op
-    (tablelog.append_idempotent). Manifests are lineage only and never
-    read here: a wiped table re-runs every slice, lost manifests re-run
-    none. resume=False skips nothing and commits a fresh generation.
+    snapshot expiry and drops a marker once its rows are gone. After a
+    slice's input or the slicing changes, the affected slices re-run
+    rather than mixing lineages; a crashed run's re-submission is a commit
+    no-op (tablelog.append_idempotent). A wiped table re-runs every slice.
+    resume=False skips nothing and commits a fresh generation.
 
     Each slice lands as ONE copy-on-write commit that replaces its own
     keyspace under the CURRENT hash predicate (tablelog.append's
@@ -269,14 +266,14 @@ def run_sliced(
     live and its new marker absent, so the resumed run re-runs it."""
     if table_format != "tablelog":
         raise ValueError(f"unknown table_format {table_format!r}: the sink is tablelog")
-    snapshot = input_snapshot_id(spark, input_path)
+    snapshots = input_snapshot_ids(input_path, n_slices, key_col)
     table = os.path.join(output_base, "table")
     nonce = "" if resume else uuid.uuid4().hex[:8]
     committed = {_marker_base(m) for m in tl.committed_markers(table)}
-    current = [slice_marker(s, snapshot, n_slices, key_col) for s in range(n_slices)]
+    current = [slice_marker(s, snapshots[s], n_slices, key_col) for s in range(n_slices)]
     done = {s for s, m in enumerate(current) if m in committed} if resume else set()
     sliced = _sliced_layout(input_path, n_slices, key_col)
-    manifests: list[SliceManifest] = []
+    records: list[SliceRecord] = []
     todo = [s for s in range(n_slices) if s not in done]
     # one reader for the run: each parquet() call infers the schema in a
     # Spark job of its own
@@ -295,14 +292,22 @@ def run_sliced(
             obs_out = Observation(f"out-{s}")
             src = src.observe(obs_in, F.count(F.lit(1)).alias("rows_in"))
             out = transform(src)
-            # per-sink counts ride the SAME write job via observe() — no
+            # per-status counts ride the SAME write job via observe() — no
             # re-read of the slice output just to recount
             status_aggs = [
                 F.sum(F.when(F.col("parse_status") == st, 1).otherwise(0)).alias(st)
                 for st in _OBSERVED_STATUSES
             ]
             out = out.observe(obs_out, F.count(F.lit(1)).alias("rows"), *status_aggs)
-            marker = slice_marker(s, snapshot, n_slices, key_col, nonce)
+            marker = slice_marker(s, snapshots[s], n_slices, key_col, nonce)
+            lineage = dict(slice_id=s, n_slices=n_slices, key_col=key_col, predicate=predicate,
+                           input_path=input_path, input_snapshot=snapshots[s], started_at=t0)
+
+            def record():  # append calls it after the write job: metrics are complete
+                lineage.update(rows_in=int(obs_in.get["rows_in"]),
+                               status_counts=_status_counts(obs_out.get))
+                return lineage
+
             table_version, _ = route_commit_tablelog(
                 out.withColumn("_slice", F.lit(s)).withColumn("_gen", F.lit(marker)),
                 table,
@@ -313,32 +318,16 @@ def run_sliced(
                     slice_predicate(s, n_slices, key_col),
                     _inside_slice(s, n_slices, key_col),
                 ),
+                record=record,
             )
-            metrics = obs_out.get
-            sink_counts = {
-                st: int(metrics[st]) for st in _OBSERVED_STATUSES if metrics[st]
-            }
-            # statuses outside the known list must not vanish from the manifest:
-            # record the residue so sink_counts always sums to the row count
-            other = int(metrics["rows"]) - sum(sink_counts.values())
-            if other:
-                sink_counts["other"] = other
-            m = SliceManifest(
-                slice_id=s,
-                n_slices=n_slices,
-                key_col=key_col,
-                predicate=predicate,
-                input_path=input_path,
-                input_snapshot=snapshot,
-                rows_in=int(obs_in.get["rows_in"]),
-                rows_ok=sink_counts.get("ok", 0),
-                sink_counts=sink_counts,
-                started_at=t0,
-                wall_seconds=round(time.time() - t0, 3),
-                output_path=table,
-                table_version=table_version,
-                commit_summary=tl.commit_summary(table, table_version),
+            summary = tl.commit_summary(table, table_version)
+            records.append(
+                SliceRecord(
+                    **lineage,
+                    rows_ok=lineage["status_counts"].get("ok", 0),
+                    wall_seconds=round(time.time() - t0, 3),
+                    table_version=table_version,
+                    commit_summary=summary,
+                )
             )
-            write_manifest(output_base, m)
-            manifests.append(m)
-    return manifests
+    return records

@@ -120,8 +120,8 @@ def content_fingerprint(
     content-equal over `cols` iff all three columns match on every slice
     — the O(slices)-size comparison that answers shadow-diff's "did
     anything change, and roughly where" BEFORE paying the full-outer-join
-    diff, and the snapshot integrity stamp a resumable job records per
-    slice (checkpoint.write_manifest's natural companion).
+    diff, and a content integrity stamp a resumable job could record per
+    slice in the slice commit's `record` (checkpoint.run_sliced).
 
     Construction: one row hash (md5 over the unit-separator-joined
     column casts, chr(31), with NULL spelled as a chr(0) sentinel so

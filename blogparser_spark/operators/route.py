@@ -15,6 +15,8 @@ it touches.
 
 from __future__ import annotations
 
+from collections.abc import Callable
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -35,6 +37,7 @@ def route_commit_tablelog(
     stats_cols: tuple[str, ...] = (),
     bloom_cols: tuple[str, ...] = (),
     replace: tuple | None = None,
+    record: Callable[[], dict] | None = None,
 ) -> tuple[int | None, bool]:
     """Fan routed rows into ONE snapshot-log table keyed by the sink keys,
     as a single atomic idempotent commit — the north rule's "per-sink
@@ -55,7 +58,8 @@ def route_commit_tablelog(
     lets a conversation point lookup skip files that definitely lack the
     conv — the serving path for "fetch this conversation").
     `replace` makes the commit a copy-on-write replace of the rows it
-    names (tablelog.append). Returns (version, committed)."""
+    names, and `record` returns the lineage the commit stores
+    (tablelog.append). Returns (version, committed)."""
     from blogparser_spark.operators import tablelog as tl
 
     return tl.append_idempotent(
@@ -67,6 +71,7 @@ def route_commit_tablelog(
         stats_cols=stats_cols,
         bloom_cols=bloom_cols,
         replace=replace,
+        record=record,
     )
 
 

@@ -12,9 +12,8 @@ needs falls out of that one structure:
 - **O(1) planning, no directory listing.** Readers replay the log (a few KB
   of JSON) instead of LISTing a 100-TB object-store prefix; the live file
   set IS the snapshot. Eventual-consistency of S3 listings never matters.
-- **Time travel / reproducible reads**: any retained version is readable —
-  a training run pins the snapshot id into its lineage manifest
-  (checkpoint.SliceManifest.input_snapshot) and is re-runnable bit-for-bit.
+- **Time travel / reproducible reads**: any retained version is readable,
+  and its commit's `record` says what input produced it (run_sliced).
 - **Copy-on-write row changes**: a delete or a slice replace rewrites
   only the live files holding matched rows and removes the originals in
   the same commit (Iceberg's `write.delete.mode=copy-on-write`, Delta
@@ -604,6 +603,7 @@ def append(
     marker: str | None = None,
     bloom_cols: tuple[str, ...] = (),
     replace: tuple[Column, Callable[[str], bool | None]] | None = None,
+    record: Callable[[], dict] | None = None,
 ) -> int:
     """Append df as a new snapshot; returns the committed version. Appends
     conflict with nothing (they only add files), so a lost commit race is
@@ -628,6 +628,9 @@ def append(
     and the removal of the replaced ones land in this one commit, which
     then does not retry a lost race (its removals were planned against
     the parent it read).
+    `record` is called once, after the write job and before the first
+    commit attempt; the commit stores its dict under `record`, and expiry
+    drops it with the commit (the live files' markers stay).
     A plain append tries APPEND_ATTEMPTS times. The commit records a
     `summary` (commit_summary) of what it added, removed and where its
     time went."""
@@ -659,6 +662,7 @@ def append(
         if removed:
             timings["rewrite_s"] = time.perf_counter() - t0
     summary = _change_summary(entries + added, removed or None, rewritten)
+    extra = {"record": record()} if record is not None else {}
     schema_new = [[f.name, f.dataType.simpleString()] for f in df.schema]
     t0 = time.perf_counter()
     for attempt in range(1 if removed else APPEND_ATTEMPTS):
@@ -684,6 +688,7 @@ def append(
                 commit_s=round(time.perf_counter() - t0, 4),
                 commit_retries=attempt,
             ),
+            **extra,
         }
         if removed:
             commit["removed_data"] = sorted(e["path"] for e in removed)
@@ -761,9 +766,9 @@ def append_idempotent(
     """Exactly-once append under restarts: if a live file already carries
     `marker`, the append is skipped (returns (the oldest such file's
     sequence number, False)); otherwise the data is committed with the
-    marker and (new_version, True) is returned. The marker plays the role
-    of checkpoint.SliceManifest for sink writes — a restarted job
-    re-submits every slice and the ledger makes re-submission a no-op.
+    marker and (new_version, True) is returned. The marker is the resume
+    guard for sink writes — a restarted job re-submits every slice and
+    the ledger makes re-submission a no-op.
     Uniqueness of in-flight markers is the scheduler's contract
     (run_sliced runs each slice once); the ledger protects RESTARTS, not
     two concurrent writers racing the same marker. `kwargs` go to append

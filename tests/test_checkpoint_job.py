@@ -1,5 +1,6 @@
 """Resumable sliced execution: tablelog commits, marker-ledger resume,
-lineage manifests, output parity."""
+per-slice input identity, lineage records in the slice commits, output
+parity."""
 
 from __future__ import annotations
 
@@ -24,7 +25,7 @@ def _write_input(spark, tmp_path):
 def test_sliced_run_and_resume(spark, tmp_path):
     from blogparser_spark.job import transform
     from blogparser_spark.operators import tablelog as tl
-    from blogparser_spark.operators.checkpoint import read_manifest, run_sliced
+    from blogparser_spark.operators.checkpoint import run_sliced
 
     inp = _write_input(spark, tmp_path)
     out = str(tmp_path / "out")
@@ -33,22 +34,17 @@ def test_sliced_run_and_resume(spark, tmp_path):
     n_input = spark.read.parquet(inp).count()  # hot-conv skew ⇒ not 30×4
     ms = run_sliced(spark, inp, out, transform, n_slices=4)
     assert [m.slice_id for m in ms] == [0, 1, 2, 3]
-    assert all(read_manifest(out, s) for s in range(4))
+    for m in ms:  # each slice's commit carries its record
+        rec = tl._read_commit(table, m.table_version)["record"]
+        assert (rec["slice_id"], rec["rows_in"]) == (m.slice_id, m.rows_in)
     assert sum(m.rows_in for m in ms) == n_input
     assert tl.read_snapshot(spark, table).count() == n_input
 
     # resume: nothing left to do
+    v = tl.current_version(table)
     again = run_sliced(spark, inp, out, transform, n_slices=4, resume=True)
     assert again == []
-
-    # drop one manifest → manifests are lineage only: the ledger still
-    # holds the slice's marker, so nothing re-runs and the table stays
-    # complete
-    v = tl.current_version(table)
-    os.remove(out + "/_manifests/slice-00002.json")
-    assert run_sliced(spark, inp, out, transform, n_slices=4, resume=True) == []
     assert tl.current_version(table) == v
-    assert tl.read_snapshot(spark, table).count() == n_input
 
 
 def test_manifest_lineage_fields(spark, tmp_path):
@@ -58,19 +54,20 @@ def test_manifest_lineage_fields(spark, tmp_path):
 
     inp = _write_input(spark, tmp_path)
     out = str(tmp_path / "out2")
-    run_sliced(spark, inp, out, transform, n_slices=2)
-    with open(out + "/_manifests/slice-00000.json") as f:
-        m = json.load(f)
+    table = out + "/table"
+    ms = run_sliced(spark, inp, out, transform, n_slices=2)
+    m = tl._read_commit(table, ms[0].table_version)["record"]
+    assert m["slice_id"] == 0
     assert m["predicate"].startswith("pmod(hash(conv_id), 2)")
-    assert m["input_snapshot"].startswith("mtime:")
-    assert m["rows_in"] > 0 and m["sink_counts"]
+    assert m["input_snapshot"].startswith("files:")
+    assert m["rows_in"] > 0 and m["status_counts"]
     # observed ok-count matches a recount of the slice's committed rows
     ok = (
-        tl.read_snapshot(spark, m["output_path"])
+        tl.read_snapshot(spark, table)
         .filter((F.col("_slice") == 0) & (F.col("parse_status") == "ok"))
         .count()
     )
-    assert m["rows_ok"] == ok
+    assert m["status_counts"]["ok"] == ms[0].rows_ok == ok
 
 
 def test_slices_partition_all_rows_exactly_once(spark, tmp_path):
@@ -162,9 +159,8 @@ def test_sliced_run_uses_pruned_predicate_and_matches_flat(spark, tmp_path):
 def test_resume_reruns_when_input_snapshot_changes(spark, tmp_path):
     """A committed marker from an OLDER input snapshot must not be trusted
     — resuming after the input changed re-runs the slice instead of
-    silently mixing lineages."""
-    import time as _time
-
+    silently mixing lineages, also when the rewrite lands within the same
+    second."""
     from blogparser_spark.job import transform
     from blogparser_spark.operators.checkpoint import run_sliced
 
@@ -174,11 +170,158 @@ def test_resume_reruns_when_input_snapshot_changes(spark, tmp_path):
     assert [m.slice_id for m in first] == [0, 1]
     # unchanged input → resume skips everything
     assert run_sliced(spark, inp, out, transform, n_slices=2) == []
-    # rewrite the input (new mtime ⇒ new snapshot id) → all slices re-run
-    _time.sleep(1.1)  # mtime granularity
+    # rewrite the input (new files ⇒ new input identity) → all slices re-run
     _write_input(spark, tmp_path)
     rerun = run_sliced(spark, inp, out, transform, n_slices=2)
     assert [m.slice_id for m in rerun] == [0, 1]
+
+
+def _parquet_files(root) -> list[str]:
+    return sorted(
+        os.path.join(d, n) for d, _ds, ns in os.walk(root) for n in ns if n.endswith(".parquet")
+    )
+
+
+def test_input_identity_is_per_slice(tmp_path):
+    """Without Spark: on a write_sliced_input layout each slice's input
+    identity covers only its own slice_bucket's files, and sees a deleted
+    file and a rewrite that forces the old mtime back; any other input
+    gives every slice one identity."""
+    from blogparser_spark.operators.checkpoint import (
+        LAYOUT_MARKER,
+        SLICE_COL,
+        input_snapshot_ids,
+    )
+
+    root = tmp_path / "sliced"
+    for s in range(2):
+        d = root / f"{SLICE_COL}={s}"
+        d.mkdir(parents=True)
+        for i in range(2):
+            (d / f"part-{i}.parquet").write_bytes(b"x" * 100)
+    (root / LAYOUT_MARKER).write_text(json.dumps({"n_slices": 2, "key_col": "conv_id"}))
+    ids = input_snapshot_ids(str(root), 2, "conv_id")
+    assert ids == input_snapshot_ids(str(root), 2, "conv_id")
+
+    # a deleted file changes its slice's id, and only that one
+    os.remove(root / f"{SLICE_COL}=0" / "part-0.parquet")
+    after = input_snapshot_ids(str(root), 2, "conv_id")
+    assert after[0] != ids[0] and after[1] == ids[1]
+
+    # a shorter rewrite with the old mtime forced back changes the id
+    f = root / f"{SLICE_COL}=1" / "part-1.parquet"
+    st = os.stat(f)
+    f.write_bytes(b"x" * 60)
+    os.utime(f, ns=(st.st_atime_ns, st.st_mtime_ns))
+    assert os.stat(f).st_mtime_ns == st.st_mtime_ns
+    again = input_snapshot_ids(str(root), 2, "conv_id")
+    assert again[0] == after[0] and again[1] != after[1]
+
+    # another slicing of the same files, or a flat input: one shared id
+    assert len(set(input_snapshot_ids(str(root), 4, "conv_id"))) == 1
+    flat = tmp_path / "flat"
+    flat.mkdir()
+    (flat / "part-0.parquet").write_bytes(b"x" * 100)
+    ids = input_snapshot_ids(str(flat), 3, "conv_id")
+    assert len(ids) == 3 and len(set(ids)) == 1
+    (flat / "part-1.parquet").write_bytes(b"x" * 100)
+    assert input_snapshot_ids(str(flat), 3, "conv_id") != ids
+
+
+def test_changed_input_file_reruns_exactly_its_slice(spark, tmp_path):
+    """A deleted input file, or one rewritten with fewer rows and its old
+    mtime forced back, changes only its own slice's input identity: the
+    resumed run re-runs exactly that slice, and the table again holds
+    exactly the input's (conv_id, turn_idx) set."""
+    import pyarrow.parquet as pq
+
+    from blogparser_spark.job import transform
+    from blogparser_spark.operators import tablelog as tl
+    from blogparser_spark.operators.checkpoint import SLICE_COL, run_sliced, write_sliced_input
+    from blogparser_spark.sources.synthetic import transcripts_df
+
+    inp = str(tmp_path / "sliced_in")
+    df = transcripts_df(spark, n_convs=40, turns_per_conv=4).repartition(3)
+    write_sliced_input(df, inp, n_slices=2)
+    out = str(tmp_path / "out_changed")
+    table = out + "/table"
+    assert [m.slice_id for m in run_sliced(spark, inp, out, transform, n_slices=2)] == [0, 1]
+
+    def keys(frame):
+        return [(r["conv_id"], r["turn_idx"]) for r in frame.select("conv_id", "turn_idx").collect()]
+
+    def files(s):
+        return _parquet_files(os.path.join(inp, f"{SLICE_COL}={s}"))
+
+    def assert_table_is_input():
+        got = keys(tl.read_snapshot(spark, table))
+        assert len(got) == len(set(got))
+        assert set(got) == set(keys(spark.read.parquet(inp)))
+
+    # (a) delete slice 0's oldest file
+    assert len(files(0)) > 1
+    os.remove(min(files(0), key=lambda f: os.stat(f).st_mtime_ns))
+    assert [m.slice_id for m in run_sliced(spark, inp, out, transform, n_slices=2)] == [0]
+    assert_table_is_input()
+
+    # (b) rewrite slice 1's largest file with half its rows, then force
+    # its old mtime back
+    f = max(files(1), key=lambda f: pq.read_metadata(f).num_rows)
+    n = pq.read_metadata(f).num_rows
+    assert n > 1
+    st = os.stat(f)
+    tmp = str(tmp_path / "rewrite")
+    spark.read.parquet(f).limit(n // 2).coalesce(1).write.parquet(tmp)
+    new = _parquet_files(tmp)[0]
+
+    def crc(p):  # the sidecar checksum Hadoop's local file system verifies
+        return os.path.join(os.path.dirname(p), f".{os.path.basename(p)}.crc")
+
+    os.replace(new, f)
+    os.replace(crc(new), crc(f))
+    os.utime(f, ns=(st.st_atime_ns, st.st_mtime_ns))
+    assert pq.read_metadata(f).num_rows == n // 2
+    assert [m.slice_id for m in run_sliced(spark, inp, out, transform, n_slices=2)] == [1]
+    assert_table_is_input()
+
+
+def test_slice_record_survives_a_crash_after_its_commit(spark, tmp_path, monkeypatch):
+    """A slice's lineage lands in the same atomic commit as its rows. A
+    crash right after the last slice's commit (commit_summary is the
+    first call run_sliced makes once the commit returns) leaves every
+    slice commit with its record, with exact rows in and status counts,
+    and a resumed run re-runs nothing."""
+    from blogparser_spark.job import transform
+    from blogparser_spark.operators import checkpoint
+    from blogparser_spark.operators import tablelog as tl
+
+    inp = _write_input(spark, tmp_path)
+    out = str(tmp_path / "out_record_crash")
+    table = out + "/table"
+    real = tl.commit_summary
+    calls = []
+
+    def crash_after_last_commit(t, version):
+        calls.append(version)
+        if len(calls) == 2:
+            raise RuntimeError("crashed after the commit")
+        return real(t, version)
+
+    with monkeypatch.context() as m:
+        m.setattr(tl, "commit_summary", crash_after_last_commit)
+        with pytest.raises(RuntimeError, match="crashed after the commit"):
+            checkpoint.run_sliced(spark, inp, out, transform, n_slices=2)
+    assert tl.list_versions(table) == [1, 2]
+    src = spark.read.parquet(inp)
+    snap = tl.read_snapshot(spark, table)
+    for v in (1, 2):
+        rec = tl._read_commit(table, v)["record"]
+        s = rec["slice_id"]
+        assert rec["rows_in"] == src.filter(checkpoint.slice_predicate(s, 2)).count()
+        committed = snap.filter(F.col("_slice") == s).groupBy("parse_status").count()
+        assert rec["status_counts"] == {r["parse_status"]: r["count"] for r in committed.collect()}
+    assert checkpoint.run_sliced(spark, inp, out, transform, n_slices=2) == []
+    assert tl.current_version(table) == 2
 
 
 def test_layout_mismatch_falls_back_to_hash_predicate(spark, tmp_path):
@@ -203,12 +346,14 @@ def test_layout_mismatch_falls_back_to_hash_predicate(spark, tmp_path):
 
 
 def test_unknown_status_lands_in_other_bucket(spark, tmp_path):
-    """sink_counts is built from observed aggregates over the KNOWN status
-    list; a transform emitting a status outside it must surface as 'other'
-    so the manifest counts always sum to rows."""
+    """status_counts is built from observed aggregates over the KNOWN
+    status list; a transform emitting a status outside it must surface as
+    'other' so the counts always sum to rows, in the returned record and
+    in the one the slice's commit stores."""
     from pyspark.sql import functions as F
 
     from blogparser_spark.job import transform
+    from blogparser_spark.operators import tablelog as tl
     from blogparser_spark.operators.checkpoint import run_sliced
 
     inp = _write_input(spark, tmp_path)
@@ -222,9 +367,11 @@ def test_unknown_status_lands_in_other_bucket(spark, tmp_path):
 
     ms = run_sliced(spark, inp, out, odd_transform, n_slices=2)
     for m in ms:
-        assert sum(m.sink_counts.values()) == m.rows_in
-        assert m.sink_counts.get("other", 0) > 0 or "weird_status" not in str(m)
-    assert any(m.sink_counts.get("other", 0) > 0 for m in ms)
+        assert sum(m.status_counts.values()) == m.rows_in
+        assert m.status_counts.get("other", 0) > 0 or "weird_status" not in str(m)
+        rec = tl._read_commit(out + "/table", m.table_version)["record"]
+        assert rec["status_counts"] == m.status_counts
+    assert any(m.status_counts.get("other", 0) > 0 for m in ms)
 
 
 def test_resume_reruns_when_slice_params_change(spark, tmp_path):
@@ -306,18 +453,9 @@ def test_job_tablelog_sink_matches_parquet_and_resumes(spark, tmp_path, capsys):
     assert tl.current_version(table) == v1
     assert r2["sink_counts"] == rt["sink_counts"]  # served from the table
 
-    # marker ledger is the one resume guard: lose ALL slice manifests and
-    # resume still skips every slice (no duplicate commits)
-    shutil.rmtree(out_t + "/_manifests")
-    assert job.main(
-        ["--input", inp, "--output", out_t, "--slices", "4", "--resume"]
-    ) == 0
-    r3 = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
-    assert r3["slices_run"] == [] and tl.current_version(table) == v1
-
 
 def test_job_prints_one_line_per_slice(spark, tmp_path, capsys):
-    """The job prints one JSON line per slice (from its manifest) before
+    """The job prints one JSON line per slice (from its SliceRecord) before
     the run report: rows in and ok, wall time, and the slice's tablelog
     commit with its summary."""
     from blogparser_spark import job, session
@@ -345,14 +483,15 @@ def test_job_prints_one_line_per_slice(spark, tmp_path, capsys):
 
 
 def test_slice_manifest_carries_commit_summary(spark, tmp_path):
-    """Each tablelog slice manifest carries its commit's summary: the
-    files, records and bytes the commit added match the table's manifest
-    entries for that version, and the phase timings are recorded. A
-    resume=False re-run's replace commit also records the files and
-    records it removed and that it rewrote none."""
+    """Each SliceRecord carries its commit's summary: the files, records
+    and bytes the commit added match the table's manifest entries for
+    that version, and the phase timings are recorded; the commit itself
+    holds the same summary next to the slice's record. A resume=False
+    re-run's replace commit also records the files and records it removed
+    and that it rewrote none."""
     from blogparser_spark.job import transform
     from blogparser_spark.operators import tablelog as tl
-    from blogparser_spark.operators.checkpoint import read_manifest, run_sliced
+    from blogparser_spark.operators.checkpoint import run_sliced
 
     inp = _write_input(spark, tmp_path)
     out = str(tmp_path / "out_sum")
@@ -365,7 +504,8 @@ def test_slice_manifest_carries_commit_summary(spark, tmp_path):
         assert s["added_files_size"] == sum(e["bytes"] for e in entries)
         assert s["commit_retries"] == 0
         assert all(s[k] >= 0 for k in ("write_s", "manifest_s", "commit_s"))
-        assert read_manifest(out, m.slice_id)["commit_summary"] == s
+        c = tl._read_commit(out + "/table", m.table_version)
+        assert c["summary"] == s and c["record"]["rows_in"] == m.rows_in
         assert "removed_data_files" not in s  # a plain append
     table = out + "/table"
     prev = {m.slice_id: tl._read_commit(table, m.table_version)["added_data"] for m in ms}
@@ -378,7 +518,8 @@ def test_slice_manifest_carries_commit_summary(spark, tmp_path):
         assert s["removed_records"] == sum(e["rows"] for e in prev[m.slice_id]) == m.rows_in
         assert s["rewritten_files"] == 0 and s["rewrite_s"] >= 0
         assert s["added_records"] == m.rows_in
-        assert read_manifest(out, m.slice_id)["commit_summary"] == s
+        c = tl._read_commit(table, m.table_version)
+        assert c["summary"] == s and c["record"]["rows_in"] == m.rows_in
 
 
 def test_tablelog_generation_replace_on_input_change_and_reslice(
@@ -391,8 +532,6 @@ def test_tablelog_generation_replace_on_input_change_and_reslice(
     completes, the ledger holds only the current slicing's markers: going
     back to an earlier slicing re-runs every slice instead of trusting
     markers whose rows are gone."""
-    import time as _time
-
     from blogparser_spark.job import transform
     from blogparser_spark.operators import tablelog as tl
     from blogparser_spark.operators.checkpoint import run_sliced
@@ -407,7 +546,6 @@ def test_tablelog_generation_replace_on_input_change_and_reslice(
 
     # rewrite the input (new snapshot) AND change the slice count: the old
     # generation's 4-slice rows must all be replaced by the 2-slice run
-    _time.sleep(1.1)
     _write_input(spark, tmp_path)
     n2 = spark.read.parquet(inp).count()
     rerun = run_sliced(spark, inp, out, transform, n_slices=2)
@@ -438,8 +576,6 @@ def test_tablelog_replace_converges_after_crash_between_write_and_commit(
     are written but before its commit leaves the old generation live,
     readable and complete, and the new marker uncommitted. The resumed
     run re-runs every slice and converges to the full new generation."""
-    import time as _time
-
     from blogparser_spark.job import transform
     from blogparser_spark.operators import checkpoint
     from blogparser_spark.operators import tablelog as tl
@@ -451,7 +587,6 @@ def test_tablelog_replace_converges_after_crash_between_write_and_commit(
     n1 = spark.read.parquet(inp).count()
     old_gens = {r["_gen"] for r in tl.read_snapshot(spark, table).select("_gen").distinct().collect()}
 
-    _time.sleep(1.1)
     _write_input(spark, tmp_path)
     n2 = spark.read.parquet(inp).count()
 
@@ -462,7 +597,6 @@ def test_tablelog_replace_converges_after_crash_between_write_and_commit(
         m.setattr(tl, "_try_commit", crash)
         with pytest.raises(RuntimeError, match="crashed before the commit"):
             checkpoint.run_sliced(spark, inp, out, transform, n_slices=2)
-    shutil.rmtree(out + "/_manifests")  # the crash also lost the manifests
     snap = tl.read_snapshot(spark, table)  # the old generation, whole
     assert snap.count() == n1
     assert {r["_gen"] for r in snap.select("_gen").distinct().collect()} == old_gens
@@ -570,8 +704,7 @@ def test_fresh_reruns_replace_by_metadata_and_keep_one_generation(
 
 
 def test_resume_after_wiped_table_rebuilds_it(spark, tmp_path, capsys):
-    """Slice manifests never mark a slice done: with the table wiped and
-    the manifests kept, a --resume run re-commits every slice and the
+    """With the table wiped, a --resume run re-commits every slice and the
     table again holds exactly the input's rows."""
     from blogparser_spark import job
     from blogparser_spark.operators import tablelog as tl
@@ -581,7 +714,6 @@ def test_resume_after_wiped_table_rebuilds_it(spark, tmp_path, capsys):
     assert job.main(["--input", inp, "--output", out, "--slices", "2"]) == 0
     r1 = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
     shutil.rmtree(out + "/table")
-    assert os.listdir(out + "/_manifests")
     assert job.main(
         ["--input", inp, "--output", out, "--slices", "2", "--resume"]
     ) == 0
@@ -595,12 +727,10 @@ def test_resume_after_wiped_table_rebuilds_it(spark, tmp_path, capsys):
     assert got.exceptAll(want).count() == 0 and want.exceptAll(got).count() == 0
 
 
-def test_resume_after_fresh_run_and_lost_manifests_reruns_nothing(
-    spark, tmp_path, capsys
-):
+def test_resume_after_fresh_run_reruns_nothing(spark, tmp_path, capsys):
     """A resume=False run commits nonce-suffixed markers of the current
-    generation; after its manifests are lost, a --resume run must still
-    find every slice committed: zero re-runs, the version unchanged."""
+    generation; a --resume run must still find every slice committed:
+    zero re-runs, the version unchanged."""
     from blogparser_spark import job
     from blogparser_spark.operators import tablelog as tl
 
@@ -611,7 +741,6 @@ def test_resume_after_fresh_run_and_lost_manifests_reruns_nothing(
     r1 = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
     assert all("|run=" in m for m in tl.committed_markers(table))
     v = tl.current_version(table)
-    shutil.rmtree(out + "/_manifests")
     assert job.main(
         ["--input", inp, "--output", out, "--slices", "2", "--resume"]
     ) == 0

@@ -479,7 +479,8 @@ def test_file_past_tuple_bound_is_kept(spark, tmp_path):
 
 def test_append_commit_summary_exact(spark, tmp_path, monkeypatch):
     """Each append records what it added (files, records, bytes), where
-    its time went, and how many commit races it lost."""
+    its time went, and how many commit races it lost; a `record` callable
+    runs once and its dict rides the winning commit."""
     t = str(tmp_path / "t")
     v = tl.append(spark, t, spark.range(0, 30).repartition(3), stats_cols=("id",))
     s = tl.commit_summary(t, v)
@@ -503,9 +504,20 @@ def test_append_commit_summary_exact(spark, tmp_path, monkeypatch):
         return real(table, commit)
 
     monkeypatch.setattr(tl, "_try_commit", lose_once)
-    v2 = tl.append(spark, t, spark.range(30, 35).coalesce(1))
+    records = []
+
+    def record():
+        records.append({"rows_in": 5})
+        return records[-1]
+
+    v2 = tl.append(spark, t, spark.range(30, 35).coalesce(1), record=record)
     s2 = tl.commit_summary(t, v2)
     assert (s2["added_data_files"], s2["added_records"], s2["commit_retries"]) == (1, 5, 1)
+    # the record is built once, however many races the commit loses, and
+    # the winning commit carries it
+    assert records == [{"rows_in": 5}]
+    assert tl._read_commit(t, v2)["record"] == {"rows_in": 5}
+    assert "record" not in tl._read_commit(t, v)
     # a delete records what it removed and what its rewrite added
     live = tl._state_at(t)[1]["data"]
     v3 = tl.delete_where(spark, t, F.col("id") < 3, ["id"])
